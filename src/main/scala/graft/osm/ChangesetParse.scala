@@ -1,18 +1,15 @@
 package graft.osm
 
 import java.io.InputStream
-import java.time.Instant
 
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import javax.xml.stream.XMLStreamConstants
 
 import scala.collection.mutable
 
 /** StAX pull-parse of OSM changeset XML into a neutral record — shared
   * by the DSv2 source (InternalRow path) and any direct consumer.
-  * Null-handling parity per SURVEY §1.2 (absent attrs → None; bbox
-  * decimals from the attribute string via BigDecimal, never double:
-  * OsmChangesetXml2Orc.java:142-171; root must be <osm>:
-  * ChangesetXmlHandler.java:57).
+  * Null-handling parity per SURVEY §1.2 (absent attrs → None, see
+  * [[XmlAttrs]]; root must be <osm>: ChangesetXmlHandler.java:57).
   */
 object ChangesetParse {
 
@@ -44,106 +41,75 @@ object ChangesetParse {
       user: Option[String],
       discussion: Seq[ParsedComment])
 
-  def iterator(in: InputStream): Iterator[ParsedChangeset] = {
-    val factory = XMLInputFactory.newInstance()
-    factory.setProperty(XMLInputFactory.IS_COALESCING, true)
-    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    new ChangesetIterator(factory.createXMLStreamReader(in), in)
-  }
+  def iterator(in: InputStream, path: String): Iterator[ParsedChangeset] =
+    new ChangesetIterator(in, path)
 
-  private final class ChangesetIterator(r: XMLStreamReader, in: InputStream)
-      extends Iterator[ParsedChangeset] {
-    private var nextRec: ParsedChangeset = _
-    private var done = false
+  private final class ChangesetIterator(in: InputStream, path: String)
+      extends XmlRecords[ParsedChangeset](in, path) {
     private var sawRoot = false
-    private var attrs: Map[String, String] = _
+    private var attrs: XmlAttrs = _
     private val tags = mutable.ArrayBuffer.empty[(String, String)]
     private val discussion = mutable.ArrayBuffer.empty[ParsedComment]
-    private var commentAttrs: Map[String, String] = null
+    private var commentAttrs: XmlAttrs = null
     private var textBuf: java.lang.StringBuilder = null
     private var commentText: String = ""
 
-    private def attr(n: String): Option[String] = attrs.get(n)
-    private def micros(n: String): Option[Long] =
-      attr(n).map(v => Instant.parse(v)).map(i =>
-        i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    private def dec(n: String): Option[java.math.BigDecimal] =
-      attr(n).map(new java.math.BigDecimal(_))
-    private def lng(n: String): Option[Long] = attr(n).flatMap(_.toLongOption)
-
-    private def advance(): Unit = {
-      nextRec = null
-      while (nextRec == null && !done) {
-        if (!r.hasNext) { done = true; r.close(); in.close() }
-        else r.next() match {
-          case XMLStreamConstants.START_ELEMENT =>
-            r.getLocalName match {
-              case "osm" => sawRoot = true
-              case "changeset" =>
-                if (!sawRoot) throw new IllegalStateException(
-                  "This does not appear to be an OSM changeset file.")
-                attrs = (0 until r.getAttributeCount)
-                  .map(i => r.getAttributeLocalName(i) -> r.getAttributeValue(i)).toMap
-                tags.clear()
-                discussion.clear()
-              case "tag" if attrs != null =>
-                tags += (r.getAttributeValue(null, "k") -> r.getAttributeValue(null, "v"))
-              case "comment" if attrs != null =>
-                commentAttrs = (0 until r.getAttributeCount)
-                  .map(i => r.getAttributeLocalName(i) -> r.getAttributeValue(i)).toMap
-                commentText = ""
-              case "text" if commentAttrs != null =>
-                textBuf = new java.lang.StringBuilder
-              case other if !sawRoot => throw new IllegalStateException(
-                s"This does not appear to be an OSM changeset file (root <$other>).")
-              case _ => // discussion wrapper etc.
-            }
-          case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA
-              if textBuf != null =>
-            textBuf.append(r.getText)
-          case XMLStreamConstants.END_ELEMENT if r.getLocalName == "text" &&
-              textBuf != null =>
-            commentText = textBuf.toString
-            textBuf = null
-          case XMLStreamConstants.END_ELEMENT if r.getLocalName == "comment" &&
-              commentAttrs != null =>
-            val ca = commentAttrs
-            def cattr(n: String): Option[String] = ca.get(n)
-            discussion += ParsedComment(
-              cattr("date").map(v => Instant.parse(v)).map(i =>
-                i.getEpochSecond * 1000000L + i.getNano / 1000L),
-              cattr("uid").flatMap(_.toLongOption),
-              cattr("user"),
-              commentText)
-            commentAttrs = null
-            textBuf = null
+    protected def step(event: Int): ParsedChangeset = event match {
+      case XMLStreamConstants.START_ELEMENT =>
+        r.getLocalName match {
+          case "osm" => sawRoot = true
+          case "changeset" =>
+            if (!sawRoot) throw new IllegalStateException(
+              "This does not appear to be an OSM changeset file.")
+            attrs = attributes()
+            tags.clear()
+            discussion.clear()
+          case "tag" if attrs != null => tags += tag()
+          case "comment" if attrs != null =>
+            commentAttrs = attributes()
             commentText = ""
-          case XMLStreamConstants.END_ELEMENT if r.getLocalName == "changeset" =>
-            nextRec = ParsedChangeset(
-              attr("id").map(_.toLong).getOrElse(
-                throw new IllegalArgumentException("changeset without id")),
-              tags.toSeq,
-              micros("created_at"),
-              attr("open").exists(_.toBoolean),
-              micros("closed_at"),
-              lng("comments_count"),
-              dec("min_lat"), dec("max_lat"), dec("min_lon"), dec("max_lon"),
-              lng("num_changes"),
-              lng("uid"),
-              attr("user"),
-              discussion.toSeq)
-            attrs = null
-          case _ =>
+          case "text" if commentAttrs != null =>
+            textBuf = new java.lang.StringBuilder
+          case other if !sawRoot => throw new IllegalStateException(
+            s"This does not appear to be an OSM changeset file (root <$other>).")
+          case _ => // discussion wrapper etc.
         }
-      }
-    }
-
-    advance()
-    override def hasNext: Boolean = nextRec != null
-    override def next(): ParsedChangeset = {
-      val out = nextRec
-      advance()
-      out
+        null
+      case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA
+          if textBuf != null =>
+        textBuf.append(r.getText)
+        null
+      case XMLStreamConstants.END_ELEMENT if r.getLocalName == "text" &&
+          textBuf != null =>
+        commentText = textBuf.toString
+        textBuf = null
+        null
+      case XMLStreamConstants.END_ELEMENT if r.getLocalName == "comment" &&
+          commentAttrs != null =>
+        discussion += ParsedComment(commentAttrs.micros("date"),
+          commentAttrs.lng("uid"), commentAttrs("user"), commentText)
+        commentAttrs = null
+        textBuf = null
+        commentText = ""
+        null
+      case XMLStreamConstants.END_ELEMENT if r.getLocalName == "changeset" =>
+        val rec = ParsedChangeset(
+          attrs("id").map(_.toLong).getOrElse(
+            throw new IllegalArgumentException("changeset without id")),
+          tags.toSeq,
+          attrs.micros("created_at"),
+          attrs("open").exists(_.toBoolean),
+          attrs.micros("closed_at"),
+          attrs.lng("comments_count"),
+          attrs.dec("min_lat"), attrs.dec("max_lat"),
+          attrs.dec("min_lon"), attrs.dec("max_lon"),
+          attrs.lng("num_changes"),
+          attrs.lng("uid"),
+          attrs("user"),
+          discussion.toSeq)
+        attrs = null
+        rec
+      case _ => null
     }
   }
 }

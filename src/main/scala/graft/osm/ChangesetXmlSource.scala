@@ -1,48 +1,19 @@
 package graft.osm
 
-import java.util
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.compress.CompressionCodecFactory
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{Decimal, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.StructType
 
 import graft.osm.ChangesetParse.ParsedChangeset
-import graft.osm.pbf.SerializableHadoopConf
 
 /** DataSource V2 for OSM changeset XML:
-  * `spark.read.format("osm-changesets").load(path)` — same architecture
-  * as the PBF source (SURVEY §2A A3). One file = one input partition
-  * (gzip XML is not splittable); many replication files fan out
-  * naturally. Column pruning skips conversion of unreferenced columns.
+  * `spark.read.format("osm-changesets").load(path)` — the shared XML
+  * source classes (SURVEY §2A A3) over [[ChangesetParse]]. The option
+  * is read case-insensitively and leniently, the same for the inferred
+  * schema and the table.
   */
-class ChangesetXmlSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "osm-changesets"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ChangesetXmlSource.schemaFor(options.getBoolean("discussion", false))
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val props = properties.asScala.toMap
-    // same case-insensitive, lenient boolean parse as inferSchema — a
-    // strict props.get("discussion").toBoolean here would let the two
-    // disagree on ".option(\"DISCUSSION\", true)" (14-column inferred
-    // schema, 13-column table) or throw on non-canonical booleans
-    val opts = new CaseInsensitiveStringMap(properties)
-    new ChangesetXmlTable(OsmPbfSourcePaths.paths(props),
-      opts.getBoolean("discussion", false))
-  }
-}
+class ChangesetXmlSource extends XmlSourceProvider(o =>
+  ChangesetXmlSource.format(o.getBoolean("discussion", false)))
 
 object ChangesetXmlSource {
   /** Reference-parity 13 columns by default; `.option("discussion",
@@ -52,136 +23,36 @@ object ChangesetXmlSource {
   def schemaFor(withDiscussion: Boolean): StructType =
     if (withDiscussion) OsmSchemas.ChangesetsWithDiscussion
     else OsmSchemas.Changesets
-}
 
-private[osm] object OsmPbfSourcePaths {
-  /** `load(a, b, …)` arrives as a JSON-array `paths` property (decoded
-    * verbatim — commas inside a path survive). A non-JSON `paths` or a
-    * single-string `path` keeps the comma-separated convenience callers
-    * of `.option("path(s)", "a,b")` relied on before round 4 (paths
-    * containing commas must use the multi-arg `load` / JSON form).
-    */
-  def paths(props: Map[String, String]): Seq[String] =
-    props.get("paths").map(decode)
-      .orElse(props.get("path").map(commaSplit))
-      .getOrElse(throw new IllegalArgumentException("no path specified"))
-
-  private def decode(s: String): Seq[String] =
-    if (s.trim.startsWith("[")) {
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      mapper.readValue(s, classOf[Array[String]]).toSeq
-    } else commaSplit(s)
-
-  private def commaSplit(s: String): Seq[String] =
-    s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-}
-
-class ChangesetXmlTable(paths: Seq[String], withDiscussion: Boolean = false)
-    extends Table with SupportsRead {
-  override def name(): String = s"osm-changesets:${paths.mkString(",")}"
-  override def schema(): StructType = ChangesetXmlSource.schemaFor(withDiscussion)
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ChangesetXmlScanBuilder(paths, schema())
-}
-
-class ChangesetXmlScanBuilder(paths: Seq[String], base: StructType)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = base
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = OsmXmlUtil.topLevelPrune(base, requiredSchema)
-  override def build(): Scan = new ChangesetXmlScan(paths, required,
-    new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()))
-}
-
-case class ChangesetXmlInputPartition(path: String) extends InputPartition
-
-class ChangesetXmlScan(paths: Seq[String], required: StructType,
-    conf: SerializableHadoopConf) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String = s"ChangesetXmlScan[${paths.mkString(",")}]"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = paths.flatMap { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf.value)
-      if (fs.getFileStatus(hp).isDirectory)
-        // skip hidden/marker files (_SUCCESS, .crc, README…): directory
-        // input takes only recognized changeset-XML extensions
-        // (.xml/.osm/.osc, optionally gzipped) — a DOCUMENTED contract,
-        // not silent best-effort: differently-named data files must be
-        // passed as explicit file paths, which bypass this filter.
-        fs.listStatus(hp).filter { st =>
-          val n = st.getPath.getName.toLowerCase
-          val known = Seq(".xml", ".osm", ".osc")
-            .exists(e => n.endsWith(e) || n.endsWith(e + ".gz"))
-          st.isFile && !n.startsWith("_") && !n.startsWith(".") && known
-        }.map(_.getPath.toString)
-      else Seq(p)
-    }
-    files.map(f => ChangesetXmlInputPartition(f): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ChangesetXmlReaderFactory(required, conf)
-}
-
-class ChangesetXmlReaderFactory(required: StructType, conf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new ChangesetXmlPartitionReader(
-      partition.asInstanceOf[ChangesetXmlInputPartition], required, conf)
-}
-
-class ChangesetXmlPartitionReader(part: ChangesetXmlInputPartition,
-    required: StructType, conf: SerializableHadoopConf)
-    extends PartitionReader[InternalRow] {
+  private[osm] def format(withDiscussion: Boolean): XmlFormat =
+    XmlFormat("osm-changesets", "ChangesetXmlScan", schemaFor(withDiscussion),
+      OsmInputs.ChangesetExtensions, (in, path, required) =>
+        OsmXmlUtil.rowsOf(ChangesetParse.iterator(in, path), required, column))
 
   import OsmXmlUtil.{dec, tagsMap, utf8}
 
-  private val in = OsmXmlUtil.openDecompressed(part.path, conf.value)
-  private val it = OsmXmlUtil.closing(in)(ChangesetParse.iterator(in))
-  private var current: InternalRow = _
-
-  private val extractors: Array[ParsedChangeset => Any] = required.fields.map { f =>
-    f.name match {
-      case "id" => (c: ParsedChangeset) => c.id
-      case "tags" => (c: ParsedChangeset) => tagsMap(c.tags)
-      case "created_at" => (c: ParsedChangeset) => c.createdAtMicros.map(Long.box).orNull
-      case "open" => (c: ParsedChangeset) => c.open
-      case "closed_at" => (c: ParsedChangeset) => c.closedAtMicros.map(Long.box).orNull
-      case "comments_count" => (c: ParsedChangeset) => c.commentsCount.map(Long.box).orNull
-      case "min_lat" => (c: ParsedChangeset) => dec(c.minLat, 9)
-      case "max_lat" => (c: ParsedChangeset) => dec(c.maxLat, 9)
-      case "min_lon" => (c: ParsedChangeset) => dec(c.minLon, 10)
-      case "max_lon" => (c: ParsedChangeset) => dec(c.maxLon, 10)
-      case "num_changes" => (c: ParsedChangeset) => c.numChanges.map(Long.box).orNull
-      case "uid" => (c: ParsedChangeset) => c.uid.map(Long.box).orNull
-      case "user" => (c: ParsedChangeset) => c.user.map(utf8).orNull
-      case "discussion" => (c: ParsedChangeset) =>
-        new GenericArrayData(c.discussion.map { cm =>
-          new GenericInternalRow(Array[Any](
-            cm.dateMicros.map(Long.box).orNull,
-            cm.uid.map(Long.box).orNull,
-            cm.user.map(utf8).orNull,
-            utf8(cm.text)))
-        }.toArray[Any])
-      case other => throw new IllegalArgumentException(s"unknown changesets column $other")
-    }
+  private def column(name: String): ParsedChangeset => Any = name match {
+    case "id" => _.id
+    case "tags" => c => tagsMap(c.tags)
+    case "created_at" => _.createdAtMicros.map(Long.box).orNull
+    case "open" => _.open
+    case "closed_at" => _.closedAtMicros.map(Long.box).orNull
+    case "comments_count" => _.commentsCount.map(Long.box).orNull
+    case "min_lat" => c => dec(c.minLat, 9)
+    case "max_lat" => c => dec(c.maxLat, 9)
+    case "min_lon" => c => dec(c.minLon, 10)
+    case "max_lon" => c => dec(c.maxLon, 10)
+    case "num_changes" => _.numChanges.map(Long.box).orNull
+    case "uid" => _.uid.map(Long.box).orNull
+    case "user" => _.user.map(utf8).orNull
+    case "discussion" => c =>
+      new GenericArrayData(c.discussion.map { cm =>
+        new GenericInternalRow(Array[Any](
+          cm.dateMicros.map(Long.box).orNull,
+          cm.uid.map(Long.box).orNull,
+          cm.user.map(utf8).orNull,
+          utf8(cm.text)))
+      }.toArray[Any])
+    case other => throw new IllegalArgumentException(s"unknown changesets column $other")
   }
-
-  override def next(): Boolean = {
-    if (!it.hasNext) return false
-    val c = it.next()
-    val values = new Array[Any](extractors.length)
-    var i = 0
-    while (i < extractors.length) { values(i) = extractors(i)(c); i += 1 }
-    current = new GenericInternalRow(values)
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = in.close()
 }

@@ -51,7 +51,7 @@ object Main {
     val Array(rawInput, output) = rest
     val changesets = flags.filter(_ == "--changesets")
     val xml = flags.contains("--xml") ||
-      Seq(".osm", ".osm.gz", ".osm.bz2").exists(rawInput.toLowerCase.endsWith)
+      OsmInputs.hasExtension(rawInput, OsmInputs.OsmXmlExtensions)
 
     val builder = SparkSession.builder()
       .appName("graft-osm2orc")

@@ -42,16 +42,9 @@ object OrcSink {
     * sorted=true for unordered inputs.
     */
   def writePlanet(df: DataFrame, out: String, bounds: Option[String] = None,
-      sorted: Boolean = false, bloomColumns: String = ""): Unit = {
-    val toWrite = if (sorted) df.sortWithinPartitions("type", "id") else df
-    val w = toWrite.write
-      .mode(SaveMode.Overwrite)
-      .option("orc.block.padding", "false")
-    (if (bloomColumns.nonEmpty) w.option("orc.bloom.filter.columns", bloomColumns)
-     else w).orc(out)
-    writeSidecar(df.sparkSession, out, bounds)
-    stampFooters(df.sparkSession, out, bounds)
-  }
+      sorted: Boolean = false, bloomColumns: String = ""): Unit =
+    write(if (sorted) df.sortWithinPartitions("type", "id") else df, out, bounds,
+      bloomColumns)
 
   /** Geographically-clustered planet write: range-partition + sort by
     * the Z-order curve index so spatially-near rows co-locate in ORC
@@ -64,48 +57,36 @@ object OrcSink {
     import org.apache.spark.sql.functions.col
     val z = graft.functions.ZOrderFunctions.zorder(col("lat"), col("lon"))
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val w = df.withColumn("__z", z)
+    write(df.withColumn("__z", z)
       .repartitionByRange(parts, col("__z"))
       .sortWithinPartitions("__z")
-      .drop("__z")
-      .write
+      .drop("__z"), out, bounds, bloomColumns)
+  }
+
+  def writeChangesets(df: DataFrame, out: String): Unit = write(df, out, None, "")
+
+  /** The one ORC write: overwrite, block padding off, the optional bloom
+    * columns, then the metadata — `osm.schema.version` and the optional
+    * bounds — as the JSON sidecar and, for parity with the reference
+    * (OsmPbf2Orc.java:90,122-125), in each part file's ORC footer so
+    * orc-core consumers see them via getMetadataValue.
+    */
+  private def write(df: DataFrame, out: String, bounds: Option[String],
+      bloomColumns: String): Unit = {
+    val w = df.write
       .mode(SaveMode.Overwrite)
       .option("orc.block.padding", "false")
     (if (bloomColumns.nonEmpty) w.option("orc.bloom.filter.columns", bloomColumns)
      else w).orc(out)
-    writeSidecar(df.sparkSession, out, bounds)
-    stampFooters(df.sparkSession, out, bounds)
-  }
-
-  def writeChangesets(df: DataFrame, out: String): Unit = {
-    df.write
-      .mode(SaveMode.Overwrite)
-      .option("orc.block.padding", "false")
-      .orc(out)
-    writeSidecar(df.sparkSession, out, None)
-    stampFooters(df.sparkSession, out, None)
-  }
-
-  /** Footer parity with the reference (OsmPbf2Orc.java:90,122-125):
-    * stamp the same keys the sidecar carries into each part file's ORC
-    * footer so orc-core consumers see them via getMetadataValue.
-    */
-  private def stampFooters(spark: org.apache.spark.sql.SparkSession, out: String,
-      bounds: Option[String]): Unit = {
-    val meta = Map(OsmSchemas.SchemaVersionKey -> OsmSchemas.SchemaVersion) ++
+    val meta = Seq(OsmSchemas.SchemaVersionKey -> OsmSchemas.SchemaVersion) ++
       bounds.map("bounds" -> _)
-    OrcMetadata.stampDirectory(out, spark.sessionState.newHadoopConf(), meta)
-  }
-
-  private def writeSidecar(spark: org.apache.spark.sql.SparkSession, out: String,
-      bounds: Option[String]): Unit = {
-    val meta = Seq(
-      Some(s""""${OsmSchemas.SchemaVersionKey}": "${OsmSchemas.SchemaVersion}""""),
-      bounds.map(b => s""""bounds": "$b"""")).flatten.mkString("{", ", ", "}")
-    val p = new Path(out, "_graft_metadata.json")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val os = fs.create(p, true)
-    try os.write(meta.getBytes(StandardCharsets.UTF_8)) finally os.close()
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    val sidecar = new Path(out, "_graft_metadata.json")
+    val os = sidecar.getFileSystem(conf).create(sidecar, true)
+    try os.write(meta.map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
+      .getBytes(StandardCharsets.UTF_8))
+    finally os.close()
+    OrcMetadata.stampDirectory(out, conf, meta.toMap)
   }
 
   /** Read the OSMHeader bbox ("left,bottom,right,top" in degrees) from a
@@ -115,59 +96,8 @@ object OrcSink {
     */
   def pbfBounds(spark: org.apache.spark.sql.SparkSession, path: String): Option[String] = {
     val hp = new Path(path)
-    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
-    val in = fs.open(hp)
-    try {
-      val data = new DataInputStream(in)
-      val headerLen = data.readInt()
-      val headerBytes = new Array[Byte](headerLen)
-      data.readFully(headerBytes)
-      val r = graft.osm.pbf.Proto.reader(headerBytes)
-      var typ = ""
-      var datasize = 0
-      while (r.hasMore) {
-        val tag = r.readTag()
-        (tag >> 3) match {
-          case 1 => typ = r.readString()
-          case 3 => datasize = r.readVarint().toInt
-          case _ => r.skip(tag & 7)
-        }
-      }
-      if (typ != "OSMHeader") None
-      else {
-        val blob = new Array[Byte](datasize)
-        data.readFully(blob)
-        val block = Proto2HeaderBounds(PbfDecode.decompressBlob(blob))
-        block
-      }
-    } finally in.close()
-  }
-
-  /** HeaderBlock: bbox(1) = HeaderBBox{left(1) right(2) top(3) bottom(4)}
-    * sint64 nanodegrees.
-    */
-  private def Proto2HeaderBounds(headerBlock: Array[Byte]): Option[String] = {
-    val r = graft.osm.pbf.Proto.reader(headerBlock)
-    while (r.hasMore) {
-      val tag = r.readTag()
-      if ((tag >> 3) == 1) {
-        val b = r.readSlice()
-        var left, right, top, bottom = 0L
-        while (b.hasMore) {
-          val t2 = b.readTag()
-          (t2 >> 3) match {
-            case 1 => left = graft.osm.pbf.Proto.zigzag(b.readVarint())
-            case 2 => right = graft.osm.pbf.Proto.zigzag(b.readVarint())
-            case 3 => top = graft.osm.pbf.Proto.zigzag(b.readVarint())
-            case 4 => bottom = graft.osm.pbf.Proto.zigzag(b.readVarint())
-            case _ => b.skip(t2 & 7)
-          }
-        }
-        def deg(n: Long): String =
-          java.math.BigDecimal.valueOf(n, 9).stripTrailingZeros.toPlainString
-        return Some(s"${deg(left)},${deg(bottom)},${deg(right)},${deg(top)}")
-      } else r.skip(tag & 7)
-    }
-    None
+    val in = hp.getFileSystem(spark.sessionState.newHadoopConf()).open(hp)
+    try PbfDecode.firstHeaderBlock(new DataInputStream(in), path).flatMap(_.bbox)
+    finally in.close()
   }
 }

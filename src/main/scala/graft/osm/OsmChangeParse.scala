@@ -1,9 +1,8 @@
 package graft.osm
 
 import java.io.InputStream
-import java.time.Instant
 
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import javax.xml.stream.XMLStreamConstants
 
 import scala.collection.mutable
 
@@ -15,8 +14,8 @@ import scala.collection.mutable
   * (`visible` defaults to false inside `<delete>`, true otherwise — the
   * osmosis convention).
   *
-  * Same streaming O(1)-memory shape as [[ChangesetParse]]; root must be
-  * `<osmChange>`.
+  * Same [[XmlRecords]] streaming shape as [[ChangesetParse]]; root must
+  * be `<osmChange>`.
   */
 object OsmChangeParse {
 
@@ -39,110 +38,79 @@ object OsmChangeParse {
   private val Ops = Set("create", "modify", "delete")
   private val Kinds = Set("node", "way", "relation")
 
-  def iterator(in: InputStream): Iterator[ParsedChange] =
-    make(in, planet = false)
+  def iterator(in: InputStream, path: String): Iterator[ParsedChange] =
+    new ChangeIterator(in, path, planet = false)
 
   /** Planet/history `.osm` XML (osmosis `--read-xml`): same entity
     * elements directly under an `<osm>` root — no operation containers,
     * `op` is empty, `visible` defaults true (planet convention; history
     * dumps carry explicit visible="false" rows).
     */
-  def planetIterator(in: InputStream): Iterator[ParsedChange] =
-    make(in, planet = true)
+  def planetIterator(in: InputStream, path: String): Iterator[ParsedChange] =
+    new ChangeIterator(in, path, planet = true)
 
-  private def make(in: InputStream, planet: Boolean): Iterator[ParsedChange] = {
-    val factory = XMLInputFactory.newInstance()
-    factory.setProperty(XMLInputFactory.IS_COALESCING, true)
-    factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    new ChangeIterator(factory.createXMLStreamReader(in), in, planet)
-  }
-
-  private final class ChangeIterator(r: XMLStreamReader, in: InputStream,
-      planet: Boolean) extends Iterator[ParsedChange] {
-    private var nextRec: ParsedChange = _
-    private var done = false
+  private final class ChangeIterator(in: InputStream, path: String,
+      planet: Boolean) extends XmlRecords[ParsedChange](in, path) {
     private var sawRoot = false
     private var op: String = _
     private var kind: String = _
-    private var attrs: Map[String, String] = _
+    private var attrs: XmlAttrs = _
     private val tags = mutable.ArrayBuffer.empty[(String, String)]
     private val nds = mutable.ArrayBuffer.empty[Long]
     private val members = mutable.ArrayBuffer.empty[(String, Long, String)]
 
-    private def attr(n: String): Option[String] = attrs.get(n)
-    private def micros(n: String): Option[Long] =
-      attr(n).map(Instant.parse).map(i =>
-        i.getEpochSecond * 1000000L + i.getNano / 1000L)
-    private def dec(n: String): Option[java.math.BigDecimal] =
-      attr(n).map(new java.math.BigDecimal(_))
-    private def lng(n: String): Option[Long] = attr(n).flatMap(_.toLongOption)
-
-    private def advance(): Unit = {
-      nextRec = null
-      while (nextRec == null && !done) {
-        if (!r.hasNext) { done = true; r.close(); in.close() }
-        else r.next() match {
-          case XMLStreamConstants.START_ELEMENT =>
-            r.getLocalName match {
-              case "osmChange" if !planet => sawRoot = true
-              case "osm" if planet => sawRoot = true
-              case o if !planet && Ops(o) && sawRoot => op = o
-              case k if Kinds(k) && sawRoot && (planet || op != null) =>
-                kind = k
-                attrs = (0 until r.getAttributeCount)
-                  .map(i => r.getAttributeLocalName(i) -> r.getAttributeValue(i)).toMap
-                tags.clear(); nds.clear(); members.clear()
-              case "tag" if kind != null =>
-                tags += (r.getAttributeValue(null, "k") -> r.getAttributeValue(null, "v"))
-              case "nd" if kind != null =>
-                nds += r.getAttributeValue(null, "ref").toLong
-              case "member" if kind != null =>
-                members += ((r.getAttributeValue(null, "type"),
-                  r.getAttributeValue(null, "ref").toLong,
-                  Option(r.getAttributeValue(null, "role")).getOrElse("")))
-              case "changeset" if planet && kind == null =>
-                // a planet file never holds <changeset> ELEMENTS (entities
-                // carry a changeset ATTRIBUTE) — this is a changeset dump
-                // misrouted to the planet parser; silently skipping every
-                // element would "succeed" with zero rows
-                throw new IllegalStateException(
-                  "This looks like a changeset dump (<changeset> elements " +
-                    "under <osm>) — read it with the osm-changesets source " +
-                    "/ the --changesets CLI flag, not as planet XML.")
-              case other if !sawRoot => throw new IllegalStateException(
-                s"This does not appear to be an ${if (planet) "osm" else "osmChange"} " +
-                  s"file (root <$other>).")
-              case _ => // bounds etc.
-            }
-          case XMLStreamConstants.END_ELEMENT =>
-            r.getLocalName match {
-              case k if Kinds(k) && kind == k =>
-                nextRec = ParsedChange(
-                  if (planet) "" else op, kind,
-                  attr("id").map(_.toLong).getOrElse(
-                    throw new IllegalArgumentException(s"$kind without id")),
-                  tags.toSeq,
-                  if (kind == "node") dec("lat") else None,
-                  if (kind == "node") dec("lon") else None,
-                  nds.toSeq, members.toSeq,
-                  lng("changeset"), micros("timestamp"), lng("uid"),
-                  attr("user"), lng("version"),
-                  attr("visible").map(_.toBoolean).getOrElse(op != "delete"))
-                kind = null
-              case o if Ops(o) => op = null
-              case _ =>
-            }
-          case _ =>
+    protected def step(event: Int): ParsedChange = event match {
+      case XMLStreamConstants.START_ELEMENT =>
+        r.getLocalName match {
+          case "osmChange" if !planet => sawRoot = true
+          case "osm" if planet => sawRoot = true
+          case o if !planet && Ops(o) && sawRoot => op = o
+          case k if Kinds(k) && sawRoot && (planet || op != null) =>
+            kind = k
+            attrs = attributes()
+            tags.clear(); nds.clear(); members.clear()
+          case "tag" if kind != null => tags += tag()
+          case "nd" if kind != null =>
+            nds += r.getAttributeValue(null, "ref").toLong
+          case "member" if kind != null =>
+            members += ((r.getAttributeValue(null, "type"),
+              r.getAttributeValue(null, "ref").toLong,
+              Option(r.getAttributeValue(null, "role")).getOrElse("")))
+          case "changeset" if planet && kind == null =>
+            // a planet file never holds <changeset> ELEMENTS (entities
+            // carry a changeset ATTRIBUTE) — this is a changeset dump
+            // misrouted to the planet parser; silently skipping every
+            // element would "succeed" with zero rows
+            throw new IllegalStateException(
+              "This looks like a changeset dump (<changeset> elements " +
+                "under <osm>) — read it with the osm-changesets source " +
+                "/ the --changesets CLI flag, not as planet XML.")
+          case other if !sawRoot => throw new IllegalStateException(
+            s"This does not appear to be an ${if (planet) "osm" else "osmChange"} " +
+              s"file (root <$other>).")
+          case _ => // bounds etc.
         }
-      }
-    }
-
-    advance()
-    override def hasNext: Boolean = nextRec != null
-    override def next(): ParsedChange = {
-      val rec = nextRec
-      advance()
-      rec
+        null
+      case XMLStreamConstants.END_ELEMENT =>
+        r.getLocalName match {
+          case k if Kinds(k) && kind == k =>
+            val rec = ParsedChange(
+              if (planet) "" else op, kind,
+              attrs("id").map(_.toLong).getOrElse(
+                throw new IllegalArgumentException(s"$kind without id")),
+              tags.toSeq,
+              if (kind == "node") attrs.dec("lat") else None,
+              if (kind == "node") attrs.dec("lon") else None,
+              nds.toSeq, members.toSeq,
+              attrs.lng("changeset"), attrs.micros("timestamp"), attrs.lng("uid"),
+              attrs("user"), attrs.lng("version"),
+              attrs("visible").map(_.toBoolean).getOrElse(op != "delete"))
+            kind = null
+            rec
+          case o if Ops(o) => op = null; null
+          case _ => null
+        }
+      case _ => null
     }
   }
 }

@@ -1,49 +1,58 @@
 package graft.osm
 
-import java.util
+import javax.xml.stream.XMLStreamConstants
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{Decimal, StructField, StringType, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{StructField, StringType, StructType}
 
 import graft.osm.OsmChangeParse.ParsedChange
-import graft.osm.pbf.SerializableHadoopConf
 
 /** DataSource V2 for osmChange (`.osc`) replication diffs:
-  * `spark.read.format("osm-osc").load(path)` — one file = one partition
-  * (gzip XML is not splittable; minutely/hourly diff directories fan out
-  * naturally), column pruning skips conversion of unreferenced columns.
+  * `spark.read.format("osm-osc").load(path)` — the shared XML source
+  * classes over [[OsmChangeParse]].
   *
   * Schema = `op` ('create'|'modify'|'delete') + the 13 planet columns,
   * so a diff applies onto a planet table with a plain union + windowed
   * latest-version pick (`OsmQueries.latestVersionsWindow`) — the
   * replication-apply pipeline in two operators.
   */
-class OsmChangeSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "osm-osc"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    OsmChangeSource.Schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new OsmChangeTable(OsmPbfSourcePaths.paths(properties.asScala.toMap))
-}
+class OsmChangeSource extends XmlSourceProvider(_ => OsmChangeSource.Format)
 
 object OsmChangeSource {
   /** op + the planet columns (single source: OsmSchemas.Planet). */
   val Schema: StructType =
     StructType(StructField("op", StringType) +: OsmSchemas.Planet.fields)
+
+  private[osm] val Format = XmlFormat("osm-osc", "OsmChangeScan", Schema,
+    OsmInputs.OscExtensions, (in, path, required) =>
+      OsmXmlUtil.rowsOf(OsmChangeParse.iterator(in, path), required, column))
+
+  import OsmXmlUtil.{dec, tagsMap, utf8}
+
+  private[osm] def column(name: String): ParsedChange => Any = name match {
+    case "op" => c => utf8(c.op)
+    case "id" => _.id
+    case "type" => c => utf8(c.kind)
+    case "tags" => c => tagsMap(c.tags)
+    case "lat" => c => dec(c.lat, 9)
+    case "lon" => c => dec(c.lon, 10)
+    case "nds" => c =>
+      new GenericArrayData(c.nds.map(ref =>
+        new GenericInternalRow(Array[Any](ref))).toArray[Any])
+    case "members" => c =>
+      new GenericArrayData(c.members.map { case (t, ref, role) =>
+        new GenericInternalRow(Array[Any](utf8(t), ref, utf8(role)))
+      }.toArray[Any])
+    case "changeset" => _.changeset.map(Long.box).orNull
+    case "timestamp" => _.timestampMicros.map(Long.box).orNull
+    case "uid" => _.uid.map(Long.box).orNull
+    case "user" => _.user.map(utf8).orNull
+    case "version" => _.version.map(Long.box).orNull
+    case "visible" => _.visible
+    case other => throw new IllegalArgumentException(s"unknown osmChange column $other")
+  }
 }
 
 /** DataSource V2 for planet/history `.osm` XML (the osmosis
@@ -51,25 +60,15 @@ object OsmChangeSource {
   * under the `<osm>` root and no operation containers — rows land in
   * the 13-column planet schema (`op`-free), so the output is
   * immediately queryable by every planet operator and writable by
-  * OrcSink. One file = one partition (gz/bz2 XML is not splittable);
-  * split a planet-scale import into many files for parallelism.
+  * OrcSink. Split a planet-scale import into many files for parallelism.
   */
-class OsmXmlSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "osm-xml"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    OsmSchemas.Planet
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new OsmXmlTable(OsmPbfSourcePaths.paths(properties.asScala.toMap))
-}
+class OsmXmlSource extends XmlSourceProvider(_ => OsmXmlSource.Format)
 
-class OsmXmlTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"osm-xml:${paths.mkString(",")}"
-  override def schema(): StructType = OsmSchemas.Planet
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new OsmChangeScanBuilder(paths, planet = true)
+object OsmXmlSource {
+  private[osm] val Format = XmlFormat("osm-xml", "OsmXmlScan", OsmSchemas.Planet,
+    OsmInputs.OsmXmlExtensions, (in, path, required) =>
+      OsmXmlUtil.rowsOf(OsmChangeParse.planetIterator(in, path), required,
+        OsmChangeSource.column))
 }
 
 /** Façade: `OsmXml.read(spark, path)` — planet XML as the planet table. */
@@ -86,167 +85,29 @@ object OsmXml {
     */
   def bounds(spark: SparkSession, path: String): Option[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    val hp = new Path(path)
-    val fs = hp.getFileSystem(conf)
-    val file: String =
-      if (!fs.getFileStatus(hp).isDirectory) path
-      else {
-        val it = fs.listFiles(hp, true)
-        var found: String = null
-        while (found == null && it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName.toLowerCase
-          if (st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-            Seq(".osm", ".osm.gz", ".osm.bz2").exists(n.endsWith))
-            found = st.getPath.toString
+    OsmInputs.files(Seq(path), OsmInputs.OsmXmlExtensions, conf).headOption.flatMap { file =>
+      val in = OsmXmlUtil.openDecompressed(file, conf)
+      try {
+        // one record: Some(bounds) at <bounds>, None at the first entity
+        val head = new XmlRecords[Option[String]](in, file) {
+          protected def step(event: Int): Option[String] =
+            if (event != XMLStreamConstants.START_ELEMENT) null
+            else r.getLocalName match {
+              case "bounds" =>
+                val a = attributes()
+                def norm(n: String) = a.dec(n).map(_.stripTrailingZeros.toPlainString)
+                for {
+                  minlon <- norm("minlon"); minlat <- norm("minlat")
+                  maxlon <- norm("maxlon"); maxlat <- norm("maxlat")
+                } yield s"$minlon,$minlat,$maxlon,$maxlat"
+              case "node" | "way" | "relation" => None
+              case _ => null
+            }
         }
-        if (found == null) return None else found
-      }
-    val in = OsmXmlUtil.openDecompressed(file, conf)
-    try {
-      val factory = javax.xml.stream.XMLInputFactory.newInstance()
-      factory.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
-      val r = factory.createXMLStreamReader(in)
-      while (r.hasNext) {
-        if (r.next() == javax.xml.stream.XMLStreamConstants.START_ELEMENT) {
-          r.getLocalName match {
-            case "bounds" =>
-              def attr(n: String) = Option(r.getAttributeValue(null, n))
-              def norm(s: String) =
-                new java.math.BigDecimal(s).stripTrailingZeros.toPlainString
-              return for {
-                minlon <- attr("minlon"); minlat <- attr("minlat")
-                maxlon <- attr("maxlon"); maxlat <- attr("maxlat")
-              } yield s"${norm(minlon)},${norm(minlat)},${norm(maxlon)},${norm(maxlat)}"
-            case "node" | "way" | "relation" => return None // no header bounds
-            case _ =>
-          }
-        }
-      }
-      None
-    } finally in.close()
-  }
-}
-
-class OsmChangeTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"osm-osc:${paths.mkString(",")}"
-  override def schema(): StructType = OsmChangeSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new OsmChangeScanBuilder(paths, planet = false)
-}
-
-class OsmChangeScanBuilder(paths: Seq[String], planet: Boolean)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private def full: StructType =
-    if (planet) OsmSchemas.Planet else OsmChangeSource.Schema
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = OsmXmlUtil.topLevelPrune(full, requiredSchema)
-  override def build(): Scan = new OsmChangeScan(paths, required,
-    new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()),
-    planet)
-}
-
-case class OsmChangeInputPartition(path: String) extends InputPartition
-
-class OsmChangeScan(paths: Seq[String], required: StructType,
-    conf: SerializableHadoopConf, planet: Boolean = false)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"${if (planet) "OsmXmlScan" else "OsmChangeScan"}[${paths.mkString(",")}]"
-
-  private val extensions: Seq[String] =
-    if (planet) Seq(".osm", ".osm.gz", ".osm.bz2") else Seq(".osc", ".osc.gz")
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = paths.flatMap { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf.value)
-      if (fs.getFileStatus(hp).isDirectory) {
-        // RECURSIVE: real replication dirs nest (AAA/BBB/CCC.osc.gz);
-        // recognized diff extensions only, markers/hidden files skipped
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = fs.listFiles(hp, true)
-        while (it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName.toLowerCase
-          if (st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-            extensions.exists(n.endsWith)) out += st.getPath.toString
-        }
-        out.toSeq
-      } else Seq(p)
-    }
-    files.map(f => OsmChangeInputPartition(f): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new OsmChangeReaderFactory(required, conf, planet)
-}
-
-class OsmChangeReaderFactory(required: StructType,
-    conf: SerializableHadoopConf, planet: Boolean)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new OsmChangePartitionReader(
-      partition.asInstanceOf[OsmChangeInputPartition], required, conf, planet)
-}
-
-class OsmChangePartitionReader(part: OsmChangeInputPartition,
-    required: StructType, conf: SerializableHadoopConf, planet: Boolean)
-    extends PartitionReader[InternalRow] {
-
-  import OsmXmlUtil.{dec, tagsMap, utf8}
-
-  private val in = OsmXmlUtil.openDecompressed(part.path, conf.value)
-  private val it = OsmXmlUtil.closing(in)(
-    if (planet) OsmChangeParse.planetIterator(in) else OsmChangeParse.iterator(in))
-  private var current: InternalRow = _
-
-  private def ndsArray(c: ParsedChange): GenericArrayData =
-    new GenericArrayData(c.nds.map(ref =>
-      new GenericInternalRow(Array[Any](ref))).toArray[Any])
-
-  private def membersArray(c: ParsedChange): GenericArrayData =
-    new GenericArrayData(c.members.map { case (t, ref, role) =>
-      new GenericInternalRow(Array[Any](utf8(t), ref, utf8(role)))
-    }.toArray[Any])
-
-  private val extractors: Array[ParsedChange => Any] = required.fields.map { f =>
-    f.name match {
-      case "op" => (c: ParsedChange) => utf8(c.op)
-      case "id" => (c: ParsedChange) => c.id
-      case "type" => (c: ParsedChange) => utf8(c.kind)
-      case "tags" => (c: ParsedChange) => tagsMap(c.tags)
-      case "lat" => (c: ParsedChange) => dec(c.lat, 9)
-      case "lon" => (c: ParsedChange) => dec(c.lon, 10)
-      case "nds" => (c: ParsedChange) => ndsArray(c)
-      case "members" => (c: ParsedChange) => membersArray(c)
-      case "changeset" => (c: ParsedChange) => c.changeset.map(Long.box).orNull
-      case "timestamp" => (c: ParsedChange) => c.timestampMicros.map(Long.box).orNull
-      case "uid" => (c: ParsedChange) => c.uid.map(Long.box).orNull
-      case "user" => (c: ParsedChange) => c.user.map(utf8).orNull
-      case "version" => (c: ParsedChange) => c.version.map(Long.box).orNull
-      case "visible" => (c: ParsedChange) => c.visible
-      case other => throw new IllegalArgumentException(s"unknown osmChange column $other")
+        if (head.hasNext) head.next() else None
+      } finally in.close()
     }
   }
-
-  override def next(): Boolean = {
-    if (!it.hasNext) return false
-    val c = it.next()
-    val values = new Array[Any](extractors.length)
-    var i = 0
-    while (i < extractors.length) { values(i) = extractors(i)(c); i += 1 }
-    current = new GenericInternalRow(values)
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = in.close()
 }
 
 /** Façade: `OsmChange.read(spark, path)` + the replication-apply

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{Decimal, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.osm.OsmSchemas
+import graft.osm.{OsmInputs, OsmSchemas}
 import graft.osm.pbf.PbfDecode._
 
 /** DataSource V2 for OSM PBF files: `spark.read.format("osm-pbf").load(path)`.
@@ -49,14 +49,11 @@ class OsmPbfSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = OsmSchemas.Planet
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
-    new OsmPbfTable(OsmPbfSource.paths(properties.asScala.toMap))
+    new OsmPbfTable(OsmInputs.paths(properties.asScala.toMap))
   override def supportsExternalMetadata(): Boolean = false
 }
 
 object OsmPbfSource {
-  private[pbf] def paths(props: Map[String, String]): Seq[String] =
-    graft.osm.OsmPbfSourcePaths.paths(props)
-
   /** Convenience entry: read a PBF as the planet DataFrame. */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format("osm-pbf").load(path)
@@ -115,36 +112,25 @@ class OsmPbfScan(paths: Seq[String], required: StructType, maxPartBytes: Long,
 
   override def planInputPartitions(): Array[InputPartition] = {
     val parts = ArrayBuffer.empty[InputPartition]
-    for (p <- paths) {
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf.value)
-      val files =
-        if (fs.getFileStatus(hp).isDirectory)
-          fs.listStatus(hp).filter(f => f.isFile && f.getPath.getName.endsWith(".pbf"))
-            .map(_.getPath).toSeq
-        else Seq(hp)
-      for (file <- files) {
-        val in = fs.open(file)
-        val spans =
-          try PbfDecode.scanBlobSpans(new DataInputStream(in), n => in.seek(in.getPos + n))
-          finally in.close()
+    for (path <- OsmInputs.files(paths, OsmInputs.PbfExtensions, conf.value)) {
+      val file = new Path(path)
+      val fs = file.getFileSystem(conf.value)
+      val in = fs.open(file)
+      try {
+        val data = new DataInputStream(in)
+        val spans = PbfDecode.scanBlobSpans(data, n => in.seek(in.getPos + n), path)
         // spec compliance: reject files whose header requires features
         // this reader doesn't implement (driver-side, one blob)
         spans.find(_.blobType == "OSMHeader").foreach { h =>
-          val hin = fs.open(file)
-          try {
-            hin.seek(h.dataStart)
-            val blob = new Array[Byte](h.dataSize)
-            new DataInputStream(hin).readFully(blob)
-            PbfDecode.checkRequiredFeatures(PbfDecode.decompressBlob(blob))
-          } finally hin.close()
+          in.seek(h.dataStart)
+          PbfDecode.readHeaderBlock(data, h, path).checkRequiredFeatures()
         }
         // group consecutive OSMData spans into ~maxPartBytes partitions
         var runStart = -1L
         var runEnd = -1L
         var runBytes = 0L
         def flush(): Unit = if (runStart >= 0) {
-          parts += OsmPbfInputPartition(file.toString, runStart, runEnd)
+          parts += OsmPbfInputPartition(path, runStart, runEnd)
           runStart = -1L; runBytes = 0L
         }
         for (s <- spans if s.blobType == "OSMData") {
@@ -154,7 +140,7 @@ class OsmPbfScan(paths: Seq[String], required: StructType, maxPartBytes: Long,
           if (runBytes >= maxPartBytes) flush()
         }
         flush()
-      }
+      } finally in.close()
     }
     parts.toArray
   }
@@ -275,26 +261,17 @@ class OsmPbfPartitionReader(part: OsmPbfInputPartition, required: StructType,
     new GenericInternalRow(values)
   }
 
+  /** Offset of the blob being decoded, for error messages. */
+  private var blobOffset = part.startOffset
+
   private def advanceBlob(): Boolean = {
-    if (in.getPos >= part.endOffset) return false
-    val headerLen = data.readInt()
-    val headerBytes = new Array[Byte](headerLen)
-    data.readFully(headerBytes)
-    // BlobHeader: type(1), datasize(3)
-    val r = Proto.reader(headerBytes)
-    var typ = ""
-    var datasize = 0
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => typ = r.readString()
-        case 3 => datasize = r.readVarint().toInt
-        case _ => r.skip(tag & 7)
-      }
-    }
-    val blob = new Array[Byte](datasize)
-    data.readFully(blob)
-    if (typ == "OSMData") {
+    blobOffset = in.getPos
+    if (blobOffset >= part.endOffset) return false
+    val span = PbfDecode.readBlobHeader(data, blobOffset, part.path).getOrElse(
+      throw new PbfFormatException(part.path, blobOffset,
+        s"file ends before the partition's end offset ${part.endOffset}"))
+    val blob = PbfDecode.readBlobData(data, span, part.path)
+    if (span.blobType == "OSMData") {
       entities = PbfDecode.decodePrimitiveBlock(PbfDecode.decompressBlob(blob),
         pred.keepNodes, pred.keepWays, pred.keepRelations)
         .filter(pred.keep)
@@ -302,11 +279,16 @@ class OsmPbfPartitionReader(part: OsmPbfInputPartition, required: StructType,
     } else advanceBlob()
   }
 
-  override def next(): Boolean = {
-    while (!entities.hasNext) if (!advanceBlob()) return false
-    current = toRow(entities.next())
-    true
-  }
+  /** One handler names the file and blob for whatever a corrupt block
+    * raises, whether in the per-blob decode or in the lazy per-entity one.
+    */
+  override def next(): Boolean =
+    try {
+      var more = entities.hasNext
+      while (!more && advanceBlob()) more = entities.hasNext
+      if (more) current = toRow(entities.next())
+      more
+    } catch PbfDecode.failAt(part.path, blobOffset)
 
   override def get(): InternalRow = current
   override def close(): Unit = in.close()

@@ -1,6 +1,6 @@
 package graft.osm.pbf
 
-import java.io.DataInputStream
+import java.io.{DataInputStream, EOFException}
 import java.util.zip.Inflater
 
 import scala.collection.mutable.ArrayBuffer
@@ -53,46 +53,89 @@ object PbfDecode {
     def endOffset: Long = dataStart + dataSize
   }
 
+  /** A PBF that cannot be read, named by file and byte offset. */
+  final class PbfFormatException(path: String, offset: Long, what: String,
+      cause: Throwable = null)
+      extends IllegalArgumentException(s"PBF $path at byte offset $offset: $what", cause)
+
+  /** Handler naming `path` and `offset` on the exceptions that reading
+    * corrupt or truncated bytes raises: end of file, the decoders' own
+    * IllegalArgumentExceptions, the zlib and lz4 codecs' data errors, and
+    * the raw index/size exceptions of Proto.Reader, which does not check
+    * lengths so that the decode loop stays free of per-field checks.
+    */
+  def failAt(path: String, offset: Long): PartialFunction[Throwable, Nothing] = {
+    case e: PbfFormatException => throw e
+    case e: EOFException =>
+      throw new PbfFormatException(path, offset, "file ends inside this blob's frame", e)
+    case e @ (_: IllegalArgumentException | _: IndexOutOfBoundsException |
+        _: NegativeArraySizeException | _: java.util.zip.DataFormatException |
+        _: net.jpountz.lz4.LZ4Exception) =>
+      throw new PbfFormatException(path, offset, e.toString, e)
+  }
+
   // ---- file framing ------------------------------------------------
 
-  /** Parse a BlobHeader message: type(1), indexdata(2), datasize(3). */
-  private def parseBlobHeader(bytes: Array[Byte]): (String, Int) = {
-    val r = Proto.reader(bytes)
-    var typ = ""
-    var datasize = 0
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => typ = r.readString()
-        case 3 => datasize = r.readVarint().toInt
-        case _ => r.skip(tag & 7)
+  /** The spec's cap on one BlobHeader message. */
+  private val MaxHeaderBytes = 64 * 1024
+
+  /** Read the frame head at `offset`: the 4-byte big-endian BlobHeader
+    * length, then the BlobHeader — type(1), indexdata(2), datasize(3).
+    * None at a clean end of file. Both lengths are checked against their
+    * caps (datasize on the full varint, before it is narrowed) before
+    * anything is allocated for them.
+    */
+  def readBlobHeader(in: DataInputStream, offset: Long, path: String): Option[BlobSpan] = {
+    val b0 = in.read()
+    if (b0 < 0) return None
+    try {
+      val headerLen = (b0.toLong << 24) | (in.readUnsignedByte() << 16) | in.readUnsignedShort()
+      if (headerLen > MaxHeaderBytes) throw new PbfFormatException(path, offset,
+        s"BlobHeader length $headerLen exceeds the spec's 64 KiB cap")
+      val bytes = new Array[Byte](headerLen.toInt)
+      in.readFully(bytes)
+      val r = Proto.reader(bytes)
+      var typ = ""
+      var datasize = 0L
+      while (r.hasMore) {
+        val tag = r.readTag()
+        (tag >> 3) match {
+          case 1 => typ = r.readString()
+          case 3 => datasize = r.readVarint()
+          case _ => r.skip(tag & 7)
+        }
       }
-    }
-    (typ, datasize)
+      if (datasize < 0 || datasize > MaxBlobBytes) throw new PbfFormatException(path, offset,
+        s"BlobHeader declares datasize=$datasize (blob cap $MaxBlobBytes bytes)")
+      Some(BlobSpan(typ, offset, offset + 4 + headerLen, datasize.toInt))
+    } catch failAt(path, offset)
+  }
+
+  /** Read the blob of `span`; `in` stands at `span.dataStart`. */
+  def readBlobData(in: DataInputStream, span: BlobSpan, path: String): Array[Byte] = {
+    val blob = new Array[Byte](span.dataSize)
+    try in.readFully(blob) catch failAt(path, span.headerStart)
+    blob
   }
 
   /** Enumerate blob spans by reading only the 4-byte prefixes and
-    * BlobHeaders, seeking past blob payloads — O(#blobs) I/O, so the
-    * driver can split-plan a planet file cheaply.
+    * BlobHeaders, seeking past blob payloads — O(#blobs) I/O, so split
+    * planning of a planet file stays cheap. `skip` stops one byte short
+    * of each blob's end and that byte is read, so a file cut inside a
+    * blob fails here whatever `skip` does at the end of the file.
     */
-  def scanBlobSpans(in: DataInputStream, skip: Long => Unit): Seq[BlobSpan] = {
+  def scanBlobSpans(in: DataInputStream, skip: Long => Unit,
+      path: String = "stream"): Seq[BlobSpan] = {
     val out = ArrayBuffer.empty[BlobSpan]
-    var offset = 0L
-    var eof = false
-    while (!eof) {
-      val b0 = in.read()
-      if (b0 < 0) eof = true
-      else {
-        val headerLen = (b0 << 24) | (in.readUnsignedByte() << 16) |
-          (in.readUnsignedByte() << 8) | in.readUnsignedByte()
-        val headerBytes = new Array[Byte](headerLen)
-        in.readFully(headerBytes)
-        val (typ, datasize) = parseBlobHeader(headerBytes)
-        val dataStart = offset + 4 + headerLen
-        out += BlobSpan(typ, offset, dataStart, datasize)
-        skip(datasize.toLong)
-        offset = dataStart + datasize
-      }
+    var span = readBlobHeader(in, 0L, path)
+    while (span.isDefined) {
+      val s = span.get
+      out += s
+      if (s.dataSize > 0) try {
+        skip(s.dataSize - 1L)
+        if (in.read() < 0) throw new EOFException()
+      } catch failAt(path, s.headerStart)
+      span = readBlobHeader(in, s.endOffset, path)
     }
     out.toSeq
   }
@@ -286,22 +329,64 @@ object PbfDecode {
   val SupportedFeatures: Set[String] = Set(
     "OsmSchema-V0.6", "DenseNodes", "HistoricalInformation", "Sort.Type_then_ID")
 
-  /** HeaderBlock required_features (field 4, repeated string). */
-  def requiredFeatures(headerBlock: Array[Byte]): Seq[String] = {
-    val r = Proto.reader(headerBlock)
-    val out = ArrayBuffer.empty[String]
-    while (r.hasMore) {
-      val tag = r.readTag()
-      if ((tag >> 3) == 4) out += r.readString() else r.skip(tag & 7)
+  /** The parts of an OSMHeader blob this reader uses: required_features
+    * and the bbox as "left,bottom,right,top" in degrees (the form the ORC
+    * metadata carries).
+    */
+  final case class HeaderBlock(requiredFeatures: Seq[String], bbox: Option[String]) {
+    def checkRequiredFeatures(): Unit = {
+      val unknown = requiredFeatures.filterNot(SupportedFeatures)
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        s"PBF requires unsupported features: ${unknown.mkString(", ")}")
     }
-    out.toSeq
   }
 
-  def checkRequiredFeatures(headerBlock: Array[Byte]): Unit = {
-    val unknown = requiredFeatures(headerBlock).filterNot(SupportedFeatures)
-    if (unknown.nonEmpty) throw new IllegalArgumentException(
-      s"PBF requires unsupported features: ${unknown.mkString(", ")}")
+  /** HeaderBlock: bbox(1) = HeaderBBox{left(1) right(2) top(3) bottom(4)}
+    * in sint64 nanodegrees, required_features(4, repeated string).
+    */
+  def parseHeaderBlock(headerBlock: Array[Byte]): HeaderBlock = {
+    val r = Proto.reader(headerBlock)
+    val features = ArrayBuffer.empty[String]
+    var bbox: Option[String] = None
+    while (r.hasMore) {
+      val tag = r.readTag()
+      (tag >> 3) match {
+        case 1 if bbox.isEmpty =>
+          val b = r.readSlice()
+          var left, right, top, bottom = 0L
+          while (b.hasMore) {
+            val t2 = b.readTag()
+            (t2 >> 3) match {
+              case 1 => left = Proto.zigzag(b.readVarint())
+              case 2 => right = Proto.zigzag(b.readVarint())
+              case 3 => top = Proto.zigzag(b.readVarint())
+              case 4 => bottom = Proto.zigzag(b.readVarint())
+              case _ => b.skip(t2 & 7)
+            }
+          }
+          def deg(n: Long): String =
+            java.math.BigDecimal.valueOf(n, 9).stripTrailingZeros.toPlainString
+          bbox = Some(s"${deg(left)},${deg(bottom)},${deg(right)},${deg(top)}")
+        case 4 => features += r.readString()
+        case _ => r.skip(tag & 7)
+      }
+    }
+    HeaderBlock(features.toSeq, bbox)
   }
+
+  /** Read and parse the OSMHeader blob of `span`; `in` stands at
+    * `span.dataStart`.
+    */
+  def readHeaderBlock(in: DataInputStream, span: BlobSpan, path: String): HeaderBlock =
+    try parseHeaderBlock(decompressBlob(readBlobData(in, span, path)))
+    catch failAt(path, span.headerStart)
+
+  /** The HeaderBlock of a file whose first blob is its OSMHeader, else
+    * None. Reads one frame.
+    */
+  def firstHeaderBlock(in: DataInputStream, path: String): Option[HeaderBlock] =
+    readBlobHeader(in, 0L, path).filter(_.blobType == "OSMHeader")
+      .map(readHeaderBlock(in, _, path))
 
   // ---- osmformat ---------------------------------------------------
 

@@ -45,10 +45,15 @@ object Proto {
       r
     }
 
+    /** Checked, unlike the other reads: copyOfRange would zero-pad a
+      * length that overruns the buffer, allocating whatever it declares.
+      */
     def readBytes(): Array[Byte] = {
-      val n = readVarint().toInt
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + n)
-      pos += n
+      val n = readVarint()
+      if (n < 0 || n > end - pos) throw new IndexOutOfBoundsException(
+        s"field length $n overruns the ${end - pos} bytes left")
+      val out = java.util.Arrays.copyOfRange(buf, pos, pos + n.toInt)
+      pos += n.toInt
       out
     }
 

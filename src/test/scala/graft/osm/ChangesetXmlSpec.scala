@@ -132,4 +132,27 @@ class ChangesetXmlSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
     ex.getMessage should include("does not appear to be an OSM changeset file")
   }
+
+  test("nested changeset directories are read recursively") {
+    val dir = Files.createTempDirectory("csnest")
+    Files.write(dir.resolve("a.osm"), xml.getBytes("UTF-8"))
+    val sub = Files.createDirectories(dir.resolve("2024").resolve("10"))
+    val os = new GZIPOutputStream(Files.newOutputStream(sub.resolve("b.osm.gz")))
+    os.write(xml.getBytes("UTF-8")); os.close()
+    ChangesetXml.read(spark, dir.toString).count() shouldBe 6
+  }
+
+  test("malformed timestamps and markup fail naming the file and line") {
+    for ((content, line) <- Seq(
+        "<osm>\n<changeset id=\"1\" created_at=\"yesterday\" open=\"false\"/>\n</osm>" -> 2,
+        "<osm>\n<changeset id=\"1\" open=\"false\">\n</osm>" -> 3)) {
+      val f = Files.createTempDirectory("csbad").resolve("bad.osm")
+      Files.write(f, content.getBytes("UTF-8"))
+      val ex = intercept[SparkException] { ChangesetXml.read(spark, f.toString).collect() }
+      withClue(content) {
+        ex.getMessage should include("IllegalArgumentException")
+        ex.getMessage should include(s"$f at line $line")
+      }
+    }
+  }
 }

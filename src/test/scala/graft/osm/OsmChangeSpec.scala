@@ -119,6 +119,20 @@ class OsmChangeSpec extends AnyFunSuite with Matchers with SparkSpec {
     ex.getMessage should include("does not appear to be an osmChange file")
   }
 
+  test("malformed timestamps and markup fail naming the file and line") {
+    for ((content, line) <- Seq(
+        "<osmChange>\n<create>\n<node id=\"1\" timestamp=\"2024-13-45\"/>\n</create>\n</osmChange>" -> 3,
+        "<osmChange>\n<create>\n<node id=\"1\">\n</create>\n</osmChange>" -> 4,
+        "" -> 1)) {
+      val f = writeOsc("bad.osc", gz = false, content = content)
+      val ex = intercept[SparkException] { OsmChange.read(spark, f).collect() }
+      withClue(content) {
+        ex.getMessage should include("IllegalArgumentException")
+        ex.getMessage should include(s"$f at line $line")
+      }
+    }
+  }
+
   test("nested-field selection inside members survives nested-schema pruning") {
     // Spark's nested pruning (on by default) hands the scan a schema
     // with struct fields pruned inside the array; the source must keep

@@ -1,13 +1,20 @@
 package graft.osm
 
+import java.io.{ByteArrayInputStream, DataInputStream}
+import java.nio.ByteBuffer
 import java.nio.file.Files
 
-import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.osm.pbf.{OsmPbfScanBuilder, PbfDecode}
+import graft.osm.pbf.PbfDecode.BlobSpan
 
 class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
 
@@ -302,6 +309,174 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
     Files.write(f, cut)
     an[Exception] should be thrownBy
       spark.read.format("osm-pbf").load(f.toString).count()
+  }
+
+  test("nested PBF directories are read recursively") {
+    val dir = Files.createTempDirectory("pbfnest")
+    PbfTestData.writeSample(dir)
+    PbfTestData.writeSample(Files.createDirectories(dir.resolve("2024").resolve("10")))
+    spark.read.format("osm-pbf").load(dir.toString).count() shouldBe 14
+  }
+
+  test("_- and .-prefixed .pbf files in a directory are skipped") {
+    val dir = Files.createTempDirectory("pbfmarks")
+    PbfTestData.writeSample(dir)
+    Files.copy(dir.resolve("sample.osm.pbf"), dir.resolve("_staging.osm.pbf"))
+    Files.copy(dir.resolve("sample.osm.pbf"), dir.resolve(".partial.osm.pbf"))
+    spark.read.format("osm-pbf").load(dir.toString).count() shouldBe 7
+  }
+
+  test("an upper-case .PBF extension is recognized in a directory") {
+    val dir = Files.createTempDirectory("pbfcase")
+    PbfTestData.writeSample(dir)
+    Files.copy(dir.resolve("sample.osm.pbf"), dir.resolve("SECOND.OSM.PBF"))
+    spark.read.format("osm-pbf").load(dir.toString).count() shouldBe 14
+  }
+
+  private def sampleBytes: Array[Byte] = Files.readAllBytes(java.nio.file.Paths.get(pbfPath))
+
+  private def spans(bytes: Array[Byte]): Seq[BlobSpan] = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    PbfDecode.scanBlobSpans(in, n => in.skipNBytes(n))
+  }
+
+  /** The framing corruptions of frame `s` in `bytes`; each must fail at
+    * `s.headerStart`.
+    */
+  private def framingCases(bytes: Array[Byte], s: BlobSpan): Seq[(String, Array[Byte])] = {
+    def withHeaderLength(len: Int) = {
+      val b = bytes.clone()
+      ByteBuffer.wrap(b).putInt(s.headerStart.toInt, len)
+      b
+    }
+    def withDatasize(size: Long) = {
+      val header = new PbfTestData.W().str(1, s.blobType).vint(3, size).toArray
+      bytes.take(s.headerStart.toInt) ++ ByteBuffer.allocate(4).putInt(header.length).array ++
+        header ++ bytes.drop(s.dataStart.toInt)
+    }
+    Seq(
+      "header length with the high bit set" -> withHeaderLength(0x80000010),
+      "header longer than 64 KiB" -> withHeaderLength(16 << 20),
+      "datasize varint >= 2^31" -> withDatasize(1L << 31),
+      "datasize over the blob cap" -> withDatasize((64L << 20) + 1),
+      "file cut inside a header" -> bytes.take(s.headerStart.toInt + 6),
+      "file cut inside a blob" -> bytes.take(s.dataStart.toInt + 3))
+  }
+
+  private def allocatedBy(f: => Unit): Long = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val t = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(t)
+    f
+    mx.getThreadAllocatedBytes(t) - before
+  }
+
+  /** `f` fails with an IllegalArgumentException naming `path` and
+    * `offset`, allocating no more than a few MiB on the way.
+    */
+  private def failsNaming(clue: String, path: String, offset: Long)(f: => Any): Unit =
+    withClue(s"$clue: ") {
+      var ex: IllegalArgumentException = null
+      val allocated = allocatedBy { ex = intercept[IllegalArgumentException](f) }
+      ex.getMessage should include(path)
+      ex.getMessage should include(s"byte offset $offset")
+      allocated should be < (4L << 20)
+    }
+
+  private def scan(path: String, maxPartitionBytes: String = "33554432") = {
+    // OsmPbfScanBuilder.build reads the active session's Hadoop conf
+    SparkSession.setActiveSession(spark)
+    new OsmPbfScanBuilder(Seq(path), new CaseInsensitiveStringMap(
+      Map("maxPartitionBytes" -> maxPartitionBytes).asJava)).build().toBatch
+  }
+
+  private def drain(reader: org.apache.spark.sql.connector.read.PartitionReader[_]): Unit =
+    try while (reader.next()) reader.get() finally reader.close()
+
+  test("corrupt framing fails naming file and offset: split planning") {
+    val bytes = sampleBytes
+    val target = spans(bytes).last
+    scan(pbfPath).planInputPartitions().length shouldBe 1
+    for ((name, corrupt) <- framingCases(bytes, target)) {
+      val f = Files.createTempDirectory("pbfframe").resolve("bad.osm.pbf")
+      Files.write(f, corrupt)
+      val batch = scan(f.toString)
+      failsNaming(name, f.toString, target.headerStart) {
+        batch.planInputPartitions()
+      }
+    }
+  }
+
+  test("corrupt framing fails naming file and offset: partition reader") {
+    val bytes = sampleBytes
+    val target = spans(bytes).last
+    for ((name, corrupt) <- framingCases(bytes, target)) {
+      // split-plan the intact file (one partition per data blob), then
+      // corrupt it under the planned partitions
+      val f = Files.createTempDirectory("pbfframe").resolve("bad.osm.pbf")
+      Files.write(f, bytes)
+      val batch = scan(f.toString, maxPartitionBytes = "1")
+      val parts = batch.planInputPartitions()
+      parts.length shouldBe 2
+      Files.write(f, corrupt)
+      val factory = batch.createReaderFactory()
+      drain(factory.createReader(parts.head)) // the blob before still reads
+      failsNaming(name, f.toString, target.headerStart) {
+        drain(factory.createReader(parts.last))
+      }
+    }
+  }
+
+  test("corrupt framing fails naming file and offset: pbfBounds") {
+    val bytes = sampleBytes
+    val target = spans(bytes).head
+    target.blobType shouldBe "OSMHeader"
+    OrcSink.pbfBounds(spark, pbfPath) shouldBe Some("-0.4,51,0.6,52")
+    for ((name, corrupt) <- framingCases(bytes, target)) {
+      val f = Files.createTempDirectory("pbfframe").resolve("bad.osm.pbf")
+      Files.write(f, corrupt)
+      failsNaming(name, f.toString, target.headerStart) {
+        OrcSink.pbfBounds(spark, f.toString)
+      }
+    }
+  }
+
+  test("a corrupt OSMData block fails naming file and blob offset") {
+    val block = PbfTestData.primitiveBlock()
+    def raw(data: Array[Byte]) = new PbfTestData.W().bytes(1, data).toArray
+    val zlib = PbfTestData.deflate(block)
+    zlib(0) = (zlib(0) ^ 1).toByte // breaks the zlib header check
+    // a node whose tag key indexes past the block's string table
+    val badIndex = new PbfTestData.W()
+      .msg(1)(_.str(1, ""))
+      .msg(2)(_.msg(1) { n => n.sint(1, 6L); n.packed(2, Seq(5L)); n.packed(3, Seq(5L)) })
+      .toArray
+    for ((name, blob) <- Seq(
+        "truncated block" -> raw(block.take(block.length / 2)),
+        "string index out of range" -> raw(badIndex),
+        "bit-flipped zlib payload" ->
+          new PbfTestData.W().vint(2, block.length).bytes(3, zlib).toArray,
+        // zlib_data declaring 256 MiB inside a 10-byte Blob
+        "Blob field overrunning the blob" ->
+          (new PbfTestData.W().tag(3, 2).varint(256L << 20).toArray ++ new Array[Byte](4)))) {
+      val out = new java.io.ByteArrayOutputStream()
+      out.write(sampleBytes)
+      val offset = out.size()
+      val header = new PbfTestData.W().str(1, "OSMData").vint(3, blob.length).toArray
+      out.write(ByteBuffer.allocate(4).putInt(header.length).array)
+      out.write(header)
+      out.write(blob)
+      val f = Files.createTempDirectory("pbfblock").resolve("bad.osm.pbf")
+      Files.write(f, out.toByteArray)
+      val batch = scan(f.toString, maxPartitionBytes = "1")
+      val factory = batch.createReaderFactory()
+      val parts = batch.planInputPartitions()
+      parts.init.foreach(p => drain(factory.createReader(p)))
+      failsNaming(name, f.toString, offset) {
+        drain(factory.createReader(parts.last))
+      }
+    }
   }
 
   private implicit class Dollar(sc: StringContext) {
