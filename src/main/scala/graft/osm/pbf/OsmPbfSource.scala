@@ -30,9 +30,14 @@ import graft.osm.pbf.PbfDecode._
   *    contiguous run of OSMData blobs; the driver enumerates blob spans
   *    by reading only the 4-byte prefixes + BlobHeaders (O(#blobs) I/O —
   *    split planning for a planet file touches ~KBs);
-  *  - partitions target `maxPartitionBytes` of compressed data (default
-  *    32 MiB ≈ 2x that decoded), so a 100 TB corpus fans out to
-  *    100Ks of balanced tasks with no skew from file boundaries;
+  *  - the split size is chosen from the data, as Spark's
+  *    `FilePartition.maxSplitBytes` chooses it: the compressed OSMData
+  *    bytes of all files spread over the session's default parallelism,
+  *    no smaller than [[OsmPbfScan.MinSplitBytes]] (1 MiB, so small
+  *    files stay one task) and no larger than `maxPartitionBytes`
+  *    (default 32 MiB ≈ 2x that decoded). A 5 MB extract fans out
+  *    across every core; a 100 TB corpus fans out to 100Ks of balanced
+  *    32 MiB tasks with no skew from file boundaries;
   *  - SupportsPushDownRequiredColumns: pruned columns are never
   *    materialized into rows (tags/nds/members decode is the expensive
   *    part of a planet scan).
@@ -90,11 +95,12 @@ class OsmPbfScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
   override def build(): Scan = {
+    val spark = SparkSession.active
     val maxBytes = Option(options.get("maxPartitionBytes")).map(_.toLong)
       .getOrElse(32L * 1024 * 1024)
-    new OsmPbfScan(paths, required, maxBytes, OsmPbfFilters.compile(pushed),
-      pushed.map(_.toString),
-      new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()))
+    new OsmPbfScan(paths, required, maxBytes, spark.sparkContext.defaultParallelism,
+      OsmPbfFilters.compile(pushed), pushed.map(_.toString),
+      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
   }
 }
 
@@ -102,47 +108,68 @@ class OsmPbfScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
 case class OsmPbfInputPartition(path: String, startOffset: Long, endOffset: Long)
   extends InputPartition
 
+object OsmPbfScan {
+  /** The smallest split the planner aims for, in compressed OSMData
+    * bytes, so that small files stay one task.
+    */
+  val MinSplitBytes: Long = 1L << 20
+}
+
 class OsmPbfScan(paths: Seq[String], required: StructType, maxPartBytes: Long,
-    pred: OsmPbfFilters.Compiled, pushedDesc: Array[String],
+    parallelism: Int, pred: OsmPbfFilters.Compiled, pushedDesc: Array[String],
     conf: SerializableHadoopConf) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
     s"OsmPbfScan[${paths.mkString(",")}] pushed=[${pushedDesc.mkString(", ")}]"
 
+  /** Groups each file's consecutive OSMData blobs into runs of at least
+    * `min(maxPartBytes, max(MinSplitBytes, ceil(total / parallelism)))`
+    * compressed bytes, where `total` sums the OSMData blobs of every file.
+    */
   override def planInputPartitions(): Array[InputPartition] = {
+    val files = OsmInputs.files(paths, OsmInputs.PbfExtensions, conf.value)
+      .map(path => path -> dataSpans(path))
+    val total = files.iterator.flatMap(_._2).map(_.dataSize.toLong).sum
+    val target = math.min(maxPartBytes,
+      math.max(OsmPbfScan.MinSplitBytes, (total + parallelism - 1) / parallelism))
     val parts = ArrayBuffer.empty[InputPartition]
-    for (path <- OsmInputs.files(paths, OsmInputs.PbfExtensions, conf.value)) {
-      val file = new Path(path)
-      val fs = file.getFileSystem(conf.value)
-      val in = fs.open(file)
-      try {
-        val data = new DataInputStream(in)
-        val spans = PbfDecode.scanBlobSpans(data, n => in.seek(in.getPos + n), path)
-        // spec compliance: reject files whose header requires features
-        // this reader doesn't implement (driver-side, one blob)
-        spans.find(_.blobType == "OSMHeader").foreach { h =>
-          in.seek(h.dataStart)
-          PbfDecode.readHeaderBlock(data, h, path).checkRequiredFeatures()
-        }
-        // group consecutive OSMData spans into ~maxPartBytes partitions
-        var runStart = -1L
-        var runEnd = -1L
-        var runBytes = 0L
-        def flush(): Unit = if (runStart >= 0) {
-          parts += OsmPbfInputPartition(path, runStart, runEnd)
-          runStart = -1L; runBytes = 0L
-        }
-        for (s <- spans if s.blobType == "OSMData") {
-          if (runStart < 0) runStart = s.headerStart
-          runEnd = s.endOffset
-          runBytes += s.dataSize
-          if (runBytes >= maxPartBytes) flush()
-        }
-        flush()
-      } finally in.close()
+    for ((path, spans) <- files) {
+      var runStart = -1L
+      var runEnd = -1L
+      var runBytes = 0L
+      def flush(): Unit = if (runStart >= 0) {
+        parts += OsmPbfInputPartition(path, runStart, runEnd)
+        runStart = -1L; runBytes = 0L
+      }
+      for (s <- spans) {
+        if (runStart < 0) runStart = s.headerStart
+        runEnd = s.endOffset
+        runBytes += s.dataSize
+        if (runBytes >= target) flush()
+      }
+      flush()
     }
     parts.toArray
+  }
+
+  /** The OSMData spans of `path`, found by reading only its frame heads
+    * (O(#blobs) I/O), after rejecting a header that requires features
+    * this reader does not implement.
+    */
+  private def dataSpans(path: String): Seq[BlobSpan] = {
+    val file = new Path(path)
+    val in = file.getFileSystem(conf.value).open(file)
+    try {
+      val data = new DataInputStream(in)
+      val spans = PbfDecode.scanBlobSpans(data, n => in.seek(in.getPos + n), path)
+      spans.find(_.blobType == "OSMHeader").foreach { h =>
+        in.seek(h.dataStart)
+        val header = PbfDecode.readHeaderBlock(data, h, path)
+        try header.checkRequiredFeatures() catch PbfDecode.failAt(path, h.headerStart)
+      }
+      spans.filter(_.blobType == "OSMData")
+    } finally in.close()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

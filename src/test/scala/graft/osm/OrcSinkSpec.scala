@@ -1,11 +1,15 @@
 package graft.osm
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{array_sort, col, map_entries}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
+import graft.osm.pbf.OsmPbfSource
 
 class OrcSinkSpec extends AnyFunSuite with Matchers with SparkSpec {
 
@@ -29,15 +33,43 @@ class OrcSinkSpec extends AnyFunSuite with Matchers with SparkSpec {
 
     // footer parity (OsmPbf2Orc.java:90,122-125): every part file carries
     // the keys in its ORC footer, readable through orc-core itself
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
-    val parts = fs.listStatus(new org.apache.hadoop.fs.Path(out))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".orc"))
+    val parts = orcParts(out)
     parts should not be empty
+    footersCarry(parts, "-0.4,51,0.6,52")
+  }
+
+  private def orcParts(out: String): Seq[Path] = {
+    val dir = new Path(out)
+    dir.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(dir).toSeq
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".orc")).map(_.getPath)
+  }
+
+  private def footersCarry(parts: Seq[Path], bounds: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
     parts.foreach { p =>
-      OrcMetadata.readValue(p.getPath, conf, "osm.schema.version") shouldBe Some("0.6")
-      OrcMetadata.readValue(p.getPath, conf, "bounds") shouldBe Some("-0.4,51,0.6,52")
+      OrcMetadata.readValue(p, conf, "osm.schema.version") shouldBe Some("0.6")
+      OrcMetadata.readValue(p, conf, "bounds") shouldBe Some(bounds)
     }
+  }
+
+  test("a multi-partition PBF read writes one footer-stamped part file per partition") {
+    val pbf = SplitPbf.write(Files.createTempDirectory("pbf-split"))
+    val out = Files.createTempDirectory("orc-split").resolve("planet.orc").toString
+    val src = OsmPbfSource.read(spark, pbf)
+    val bounds = "-180,-90,180,90"
+    OrcSink.writePlanet(src, out, bounds = Some(bounds))
+
+    val parts = orcParts(out)
+    parts.length should be > 1
+    parts.length shouldBe src.rdd.getNumPartitions
+    footersCarry(parts, bounds)
+    new String(Files.readAllBytes(Paths.get(out, "_graft_metadata.json")), "UTF-8") should
+      include(s""""bounds": "$bounds"""")
+    // the source's rows in any order; tags compared as sorted entries
+    def rows(df: DataFrame): Seq[String] =
+      df.withColumn("tags", array_sort(map_entries(col("tags")))).collect()
+        .map(_.toString).toSeq.sorted
+    rows(spark.read.orc(out)) shouldBe rows(src)
   }
 
   test("query workload answers identically on converted ORC and direct PBF") {

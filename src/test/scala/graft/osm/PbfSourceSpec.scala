@@ -2,7 +2,7 @@ package graft.osm
 
 import java.io.{ByteArrayInputStream, DataInputStream}
 import java.nio.ByteBuffer
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
-import graft.osm.pbf.{OsmPbfScanBuilder, PbfDecode}
+import graft.osm.pbf.{OsmPbfInputPartition, OsmPbfScan, OsmPbfScanBuilder, PbfDecode}
 import graft.osm.pbf.PbfDecode.BlobSpan
 
 class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
@@ -155,6 +155,8 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
       spark.read.format("osm-pbf").load(f.toString).count()
     }
     ex.getMessage should include("FancyFuture")
+    ex.getMessage should include(f.toString)
+    ex.getMessage should include("byte offset 0")
     // known features pass (the golden fixture has none, and DenseNodes-style
     // headers are accepted)
     spark.read.format("osm-pbf").load(pbfPath).count() shouldBe 7
@@ -384,11 +386,11 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
       allocated should be < (4L << 20)
     }
 
-  private def scan(path: String, maxPartitionBytes: String = "33554432") = {
+  private def scan(path: String, options: (String, String)*) = {
     // OsmPbfScanBuilder.build reads the active session's Hadoop conf
     SparkSession.setActiveSession(spark)
-    new OsmPbfScanBuilder(Seq(path), new CaseInsensitiveStringMap(
-      Map("maxPartitionBytes" -> maxPartitionBytes).asJava)).build().toBatch
+    new OsmPbfScanBuilder(Seq(path), new CaseInsensitiveStringMap(options.toMap.asJava))
+      .build().toBatch
   }
 
   private def drain(reader: org.apache.spark.sql.connector.read.PartitionReader[_]): Unit =
@@ -416,7 +418,7 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
       // corrupt it under the planned partitions
       val f = Files.createTempDirectory("pbfframe").resolve("bad.osm.pbf")
       Files.write(f, bytes)
-      val batch = scan(f.toString, maxPartitionBytes = "1")
+      val batch = scan(f.toString, "maxPartitionBytes" -> "1")
       val parts = batch.planInputPartitions()
       parts.length shouldBe 2
       Files.write(f, corrupt)
@@ -469,7 +471,7 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
       out.write(blob)
       val f = Files.createTempDirectory("pbfblock").resolve("bad.osm.pbf")
       Files.write(f, out.toByteArray)
-      val batch = scan(f.toString, maxPartitionBytes = "1")
+      val batch = scan(f.toString, "maxPartitionBytes" -> "1")
       val factory = batch.createReaderFactory()
       val parts = batch.planInputPartitions()
       parts.init.foreach(p => drain(factory.createReader(p)))
@@ -477,6 +479,42 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
         drain(factory.createReader(parts.last))
       }
     }
+  }
+
+  private lazy val splitPbf = SplitPbf.write(Files.createTempDirectory("pbfsplit"))
+
+  private def planned(path: String, options: (String, String)*): Seq[OsmPbfInputPartition] =
+    scan(path, options: _*).planInputPartitions().toSeq
+      .map(_.asInstanceOf[OsmPbfInputPartition])
+
+  test("split size follows the input's bytes and the session's parallelism") {
+    val parallelism = spark.sparkContext.defaultParallelism
+    val data = spans(Files.readAllBytes(Paths.get(splitPbf))).filter(_.blobType == "OSMData")
+    data.map(_.dataSize.toLong).sum should be > 2 * OsmPbfScan.MinSplitBytes
+    val parts = planned(splitPbf)
+    if (parallelism >= 2) parts.length should be > 1
+    parts.length should be <= math.min(data.length, parallelism)
+    // blob-aligned, contiguous and non-overlapping: each partition is a
+    // run of whole OSMData blobs, and the runs in order are every blob once
+    val runs = parts.map(p => data.filter(s => s.headerStart >= p.startOffset &&
+      s.endOffset <= p.endOffset))
+    parts.zip(runs).foreach { case (p, run) =>
+      run should not be empty
+      (p.startOffset, p.endOffset) shouldBe ((run.head.headerStart, run.last.endOffset))
+    }
+    parts.zip(parts.tail).foreach { case (a, b) => b.startOffset shouldBe a.endOffset }
+    runs.flatten shouldBe data
+
+    val df = spark.read.format("osm-pbf").load(splitPbf)
+    df.rdd.getNumPartitions shouldBe parts.length
+    val key = (e: PbfFixtureEncoder.Entity) => (e.kind, e.id)
+    PbfFixtureEncoder.fromRows(df.withColumn("tags", map_entries($"tags")).collect().toSeq)
+      .sortBy(key) shouldBe SplitPbf.entities.sortBy(key)
+
+    // below the floor a file stays one partition; an explicit cap still
+    // splits per blob
+    planned(pbfPath).length shouldBe 1
+    planned(splitPbf, "maxPartitionBytes" -> "1").length shouldBe data.length
   }
 
   private implicit class Dollar(sc: StringContext) {
