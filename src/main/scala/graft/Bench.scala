@@ -25,9 +25,37 @@ import org.apache.spark.sql.SparkSession
   *  - per-query MEDIANS are emitted alongside the mins ("medians" key)
   *    so repo-local runs and driver runs can be compared on a statistic
   *    that is robust in the other direction (median of 2 = midpoint);
-  *  - deterministic alphabetical query order.
+  *  - deterministic alphabetical query order;
+  *  - a query with a run that threw is counted in `failed` on both JSON
+  *    lines and named in the full line's `failed_queries` ([[aggregate]]),
+  *    so a failure cannot pass for a fast query.
   */
 object Bench {
+
+  /** Per query: (name, min, median) over its successful samples, or -1
+    * for both when none succeeded. `total` is the sum of the successful
+    * mins; `failed` names every query with a failed sample (a -1), so a
+    * query that starts throwing is reported as failed rather than only
+    * shrinking the total.
+    */
+  final case class Aggregate(perQuery: Seq[(String, Double, Double)], total: Double,
+      failed: Seq[String])
+
+  def aggregate(samples: Seq[(String, Seq[Double])]): Aggregate = {
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.isEmpty) -1.0
+      else if (s.length % 2 == 1) s(s.length / 2)
+      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+    }
+    val perQuery = samples.map { case (n, xs) =>
+      val ok = xs.filter(_ >= 0)
+      (n, if (ok.isEmpty) -1.0 else ok.min, median(ok))
+    }
+    Aggregate(perQuery, perQuery.map(_._2).filter(_ >= 0).sum,
+      samples.collect { case (n, xs) if xs.exists(_ < 0) => n })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -73,28 +101,18 @@ object Bench {
     names.foreach(materialize(_, warmDir)) // warmup, untimed
     def timed(): Seq[(String, Double)] = names.map(n => n -> materialize(n, sfDir))
     val (pass1, pass2) = (timed(), timed())
-    val pass3 = names.map(n =>
-      n -> (if (cacheFamily(n)) materialize(n, sfDir) else -1.0)).toMap
+    val pass3 = names.filter(cacheFamily).map(n => n -> materialize(n, sfDir)).toMap
     val samples: Seq[(String, Seq[Double])] = pass1.zip(pass2).map {
-      case ((n, a), (_, b)) => n -> Seq(a, b, pass3(n)).filter(_ >= 0)
+      case ((n, a), (_, b)) => n -> (Seq(a, b) ++ pass3.get(n))
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) -1.0
-      else if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    val results = samples.map { case (n, xs) =>
-      (n, if (xs.isEmpty) -1.0 else xs.min, median(xs))
-    }
-
+    val Aggregate(results, total, failed) = aggregate(samples)
     val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val meds = results.map { case (k, _, m) => "\"" + k + "\":" + m }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val failedNames = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"medians":$meds,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"failed_queries":$failedNames,"queries":$qs,"medians":$meds,"sf":"$sfDir"}"""
     // The driver captures only a bounded stdout TAIL (BENCH_r12
     // "parsed": null once the 285-query map outgrew it). The full
     // per-query line therefore goes ONLY to the archive file; stdout's
@@ -128,6 +146,6 @@ object Bench {
     // prefixing it or appending a [success] trailer after it)
     spark.stop()
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"per_query":$perQuery,"sf":"$sfDir","full":"$outPath"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"n":${results.size},"per_query":$perQuery,"sf":"$sfDir","full":"$outPath"}""")
   }
 }

@@ -1,121 +1,15 @@
 package graft.osm
 
-import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.orc.OrcFile
 
-/** Post-write ORC footer user-metadata stamping.
-  *
-  * The reference writes `osm.schema.version` / `bounds` into the ORC
-  * file footer itself (OsmPbf2Orc.java:90,122-125). Spark's ORC writer
-  * exposes no addUserMetadata hook, so each part file is rewritten
-  * footer-only after the Spark job: stripes are copied as RAW BYTES via
-  * `Writer.appendStripe` (the same API `OrcFile.mergeFiles` uses — no
-  * decode/re-encode, indexes and bloom filters ride along inside the
-  * stripe bytes), then the footer is rebuilt with the user metadata
-  * attached.
-  *
-  * Cost at scale: one sequential read + write of the output per file,
-  * no decompression, no shuffle — executed per-file and trivially
-  * parallelizable across files; the dominant transcode cost (decode +
-  * encode) is not repeated.
+/** ORC footer user metadata, read back through orc-core. The writer side
+  * is [[OsmOrcFileFormat]].
   */
 object OrcMetadata {
-
-  /** Stamp every `*.orc` part file under `dir` (non-recursive) with the
-    * given user-metadata entries, preserving all existing data, stats,
-    * bloom filters, and any prior metadata keys. Files are stamped in
-    * parallel (per-file work is independent; a JVM-wide pool is plenty —
-    * the per-file cost is one sequential read + write, no decode).
-    */
-  def stampDirectory(dir: String, conf: Configuration,
-      meta: Map[String, String]): Unit = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(conf)
-    val files = fs.listStatus(p)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".orc") &&
-        !st.getPath.getName.startsWith("."))
-    java.util.Arrays.stream(files).parallel()
-      .forEach(st => stampFile(st.getPath, conf, meta))
-  }
-
-  /** Rewrite one ORC file with extra footer user metadata (raw stripe
-    * copy). The writer carries over the source's compression kind,
-    * buffer size, row-index stride, and format version so the verbatim
-    * stripe bytes stay decodable; the final replace is an atomic
-    * rename-with-overwrite (no delete window that could strand a
-    * half-replaced file).
-    */
-  def stampFile(src: Path, conf: Configuration, meta: Map[String, String]): Unit = {
-    val fs = src.getFileSystem(conf)
-    val reader = OrcFile.createReader(src, OrcFile.readerOptions(conf))
-    val tmp = new Path(src.getParent, s".${src.getName}.stamp")
-    try {
-      val opts = OrcFile.writerOptions(conf)
-        .setSchema(reader.getSchema)
-        .compress(reader.getCompressionKind)
-        .version(reader.getFileVersion)
-        .rowIndexStride(reader.getRowIndexStride)
-        .blockPadding(false)
-        .overwrite(true)
-      // raw stripe bytes are encoded against the SOURCE compression
-      // buffer size — declare it (and pin it) or readers decode chunks
-      // against the new writer's default block size
-      if (reader.getCompressionSize > 0) {
-        opts.bufferSize(reader.getCompressionSize)
-        opts.enforceBufferSize()
-      }
-      val writer = OrcFile.createWriter(tmp, opts)
-      val stripeStats = reader.getOrcProtoStripeStatistics
-      val stripes = reader.getStripes.asScala
-      // appendStripe requires one proto stripe-statistics entry per
-      // stripe (both orc-core overloads reject null stats); a file
-      // written with stats disabled would IndexOutOfBounds below.
-      // Spark's ORC writer always emits them — for foreign files that
-      // don't, skip stamping instead of crashing the job.
-      if (stripeStats.size() < stripes.size) {
-        System.err.println(s"[orc-meta] $src has ${stripeStats.size()} stripe-" +
-          s"statistics entries for ${stripes.size} stripes; skipping stamp")
-        writer.close()
-        fs.delete(tmp, false)
-        return
-      }
-      val in = fs.open(src)
-      try {
-        stripes.zipWithIndex.foreach { case (si, i) =>
-          val lenL = si.getIndexLength + si.getDataLength + si.getFooterLength
-          // one stripe is materialized at a time; stripes are bounded by
-          // orc.stripe.size (default 64 MiB) — guard the pathological case
-          require(lenL <= Int.MaxValue - 8,
-            s"ORC stripe of $lenL bytes exceeds the 2 GiB raw-copy limit in $src")
-          val len = lenL.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(si.getOffset, buf, 0, len)
-          writer.appendStripe(buf, 0, len, si, stripeStats.get(i))
-        }
-      } finally in.close()
-      // carry over any pre-existing user metadata, then add ours
-      reader.getMetadataKeys.asScala.foreach(k =>
-        writer.addUserMetadata(k, reader.getMetadataValue(k)))
-      meta.foreach { case (k, v) =>
-        writer.addUserMetadata(k, ByteBuffer.wrap(v.getBytes(StandardCharsets.UTF_8)))
-      }
-      writer.close()
-    } finally reader.close()
-    // replace via FileContext.rename(OVERWRITE): no delete-then-rename
-    // window. On filesystems with atomic rename (HDFS, local POSIX) a
-    // crash leaves either the original or the stamped file, never
-    // neither; object stores emulating rename (S3A) give no such
-    // guarantee — there, re-run the stamp on failure (it is idempotent:
-    // stamping a stamped file re-applies the same metadata)
-    org.apache.hadoop.fs.FileContext.getFileContext(src.toUri, conf)
-      .rename(tmp, src, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
 
   /** Read a footer user-metadata value back as UTF-8 (test/consumer
     * convenience).

@@ -22,10 +22,13 @@ import graft.osm.pbf.PbfDecode
   *    primitive high-cardinality columns probed by equality (`user`:
   *    -32% lookup time in the same measurement) — opt in per column
   *    via `bloomColumns`;
-  *  - `osm.schema.version` + optional `bounds` stamped BOTH as a JSON
+  *  - `osm.schema.version` + optional `bounds` written BOTH as a JSON
   *    sidecar (`_graft_metadata.json`) and into each part file's ORC
-  *    footer (OrcMetadata raw-stripe rewrite) — footer parity with the
-  *    reference for orc-core consumers, sidecar for directory listers.
+  *    footer — footer parity with the reference for orc-core consumers,
+  *    sidecar for directory listers. The footer goes in during the one
+  *    write pass: [[OsmOrcFileFormat]] fills orc-core's row batches
+  *    straight from Spark's rows and adds the metadata before close, so
+  *    no file is re-read, rewritten or renamed after Spark's commit.
   *
   * Scale notes: `sortWithinPartitions(type, id)` before write mirrors
   * the reference's observation that sorted runs compress better
@@ -65,28 +68,29 @@ object OrcSink {
 
   def writeChangesets(df: DataFrame, out: String): Unit = write(df, out, None, "")
 
-  /** The one ORC write: overwrite, block padding off, the optional bloom
-    * columns, then the metadata — `osm.schema.version` and the optional
-    * bounds — as the JSON sidecar and, for parity with the reference
-    * (OsmPbf2Orc.java:90,122-125), in each part file's ORC footer so
-    * orc-core consumers see them via getMetadataValue.
+  /** The one ORC write, through [[OsmOrcFileFormat]]: overwrite, block
+    * padding off, the optional bloom columns, and the metadata —
+    * `osm.schema.version` and the optional bounds — as write options the
+    * format adds to each part file's footer (parity with the reference,
+    * OsmPbf2Orc.java:90,122-125), then as the JSON sidecar.
     */
   private def write(df: DataFrame, out: String, bounds: Option[String],
       bloomColumns: String): Unit = {
+    val meta = Seq(OsmSchemas.SchemaVersionKey -> OsmSchemas.SchemaVersion) ++
+      bounds.map(OsmSchemas.BoundsKey -> _)
     val w = df.write
+      .format(classOf[OsmOrcFileFormat].getName)
       .mode(SaveMode.Overwrite)
       .option("orc.block.padding", "false")
+      .options(meta.toMap)
     (if (bloomColumns.nonEmpty) w.option("orc.bloom.filter.columns", bloomColumns)
-     else w).orc(out)
-    val meta = Seq(OsmSchemas.SchemaVersionKey -> OsmSchemas.SchemaVersion) ++
-      bounds.map("bounds" -> _)
+     else w).save(out)
     val conf = df.sparkSession.sessionState.newHadoopConf()
     val sidecar = new Path(out, "_graft_metadata.json")
     val os = sidecar.getFileSystem(conf).create(sidecar, true)
     try os.write(meta.map { case (k, v) => s""""$k": "$v"""" }.mkString("{", ", ", "}")
       .getBytes(StandardCharsets.UTF_8))
     finally os.close()
-    OrcMetadata.stampDirectory(out, conf, meta.toMap)
   }
 
   /** Read the OSMHeader bbox ("left,bottom,right,top" in degrees) from a

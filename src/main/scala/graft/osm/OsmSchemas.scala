@@ -87,10 +87,12 @@ object OsmSchemas {
     StructType(Changesets.fields :+
       StructField("discussion", ArrayType(DiscussionCommentType)))
 
-  /** ORC user-metadata the reference stamps (OsmPbf2Orc.java:90,122-125);
-    * Spark's writer has no addUserMetadata, so we emit a sidecar —
-    * see OrcSink.
+  /** ORC user-metadata the reference stamps (OsmPbf2Orc.java:90,122-125).
+    * OrcSink's writer ([[OsmOrcFileFormat]]) adds it to each part file's
+    * footer with addUserMetadata before close, and also writes it to a
+    * JSON sidecar for directory listers.
     */
   val SchemaVersionKey = "osm.schema.version"
   val SchemaVersion = "0.6"
+  val BoundsKey = "bounds"
 }

@@ -27,8 +27,9 @@ import graft.osm.OsmChange
   *
   * Crash safety: the maintained table lives in `gen-<epoch>-<batchId>`
   * directories under `tableDir` with a `_CURRENT` pointer file replaced
-  * via rename (atomic on HDFS/local — same contract as OrcMetadata). A
-  * batch replayed after a crash either finds the pointer already at its
+  * via rename (atomic on HDFS and local disk; object stores that emulate
+  * rename, such as S3A, give no such guarantee). A batch replayed after
+  * a crash either finds the pointer already at its
   * own generation (fully committed → skip) or re-derives it from the
   * previous generation — and [[OsmChange.applyDiff]] replays are
   * idempotent by its source-priority tiebreak, so a diff applied onto an

@@ -2,6 +2,8 @@ package graft.osm
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{array_sort, col, map_entries}
@@ -70,6 +72,23 @@ class OrcSinkSpec extends AnyFunSuite with Matchers with SparkSpec {
       df.withColumn("tags", array_sort(map_entries(col("tags")))).collect()
         .map(_.toString).toSeq.sorted
     rows(spark.read.orc(out)) shouldBe rows(src)
+  }
+
+  test("a write leaves only part files, _SUCCESS and the sidecar, none rewritten after commit") {
+    val pbf = SplitPbf.write(Files.createTempDirectory("pbf-stray"))
+    val out = Files.createTempDirectory("orc-stray").resolve("planet.orc")
+    OrcSink.writePlanet(OsmPbfSource.read(spark, pbf), out.toString, bounds = Some("0,0,1,1"))
+    // Hadoop's local file system keeps a hidden .crc checksum beside each file
+    val names = Files.list(out).iterator().asScala.map(_.getFileName.toString)
+      .filterNot(n => n.startsWith(".") && n.endsWith(".crc")).toSeq
+    val parts = names.filter(_.startsWith("part-"))
+    parts.length should be > 1
+    all(parts) should fullyMatch regex """part-\d{5}-.*\.orc"""
+    names.toSet -- parts shouldBe Set("_SUCCESS", "_graft_metadata.json")
+    // a part file rewritten or replaced after the commit would be newer
+    // than the _SUCCESS marker the commit writes last
+    val committed = Files.getLastModifiedTime(out.resolve("_SUCCESS"))
+    parts.foreach(p => Files.getLastModifiedTime(out.resolve(p)).compareTo(committed) should be <= 0)
   }
 
   test("query workload answers identically on converted ORC and direct PBF") {

@@ -17,12 +17,16 @@ BENCHMARK.json's `run_seconds`.
 Prints every run as it finishes, then one row per workload and end-to-end
 metric: parent median and quartiles, change median, change/parent ratio
 of the medians, and the pairs the change won (ties count for neither
-side). Failed ops are summed per side. The tool only reads osmbench/; the
-parent copy is deleted at the end unless --keep is given.
+side). Then the same per op (e.g. `planet`, `changesets`, `diffApply`),
+over each run's median latency of that op: the `per_op.<op>.p50_s` of the
+stamped record the run names with `record=osmbench/records/...`. Failed
+ops are summed per side. The tool only reads osmbench/; the parent copy
+is deleted at the end unless --keep is given.
 """
 import argparse
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -50,7 +54,19 @@ def run_once(checkout, workload, seed, seconds):
         tail = "\n".join(proc.stderr.splitlines()[-20:])
         print(f"  run failed in {checkout} (exit {proc.returncode}):\n{tail}", flush=True)
         return None
-    return json.loads(lines[-1])
+    result = json.loads(lines[-1])
+    result["per_op"] = per_op_medians(checkout, proc.stdout)
+    return result
+
+
+def per_op_medians(checkout, stdout):
+    """{op: median latency in s} from the record named by `record=` on stdout."""
+    m = re.search(r" record=(osmbench/records/\S+\.json)", stdout)
+    if not m:
+        return {}
+    with open(os.path.join(checkout, m.group(1))) as f:
+        per_op = json.load(f).get("per_op", {})
+    return {op: v["p50_s"] for op, v in per_op.items() if v.get("p50_s") is not None}
 
 
 def quartiles(xs):
@@ -101,7 +117,7 @@ def main():
             shutil.rmtree(parent_dir, ignore_errors=True)
 
     print()
-    print(f"{'workload':10} {'metric':12} {'parent med [q1, q3]':28} {'change med':>10} "
+    print(f"{'workload':10} {'metric':16} {'parent med [q1, q3]':28} {'change med':>10} "
           f"{'chg/par':>8} {'wins':>6}")
     for w in workloads:
         pairs = [(p, c) for (_, p), (_, c) in zip(results[w]["parent"], results[w]["change"])
@@ -109,15 +125,20 @@ def main():
         if not pairs:
             print(f"{w:10} no complete pair")
             continue
-        for m in metrics:
-            name, lower = m["name"], m["better"] == "lower"
-            par = [p["metrics"][name]["value"] for p, _ in pairs]
-            chg = [c["metrics"][name]["value"] for _, c in pairs]
+        def row(name, par, chg, lower=True):
             wins = sum(1 for x, y in zip(par, chg) if (y < x if lower else y > x))
             q1, q3 = quartiles(par)
             pm, cm = statistics.median(par), statistics.median(chg)
-            print(f"{w:10} {name:12} {f'{pm:.4g} [{q1:.4g}, {q3:.4g}]':28} {cm:>10.4g} "
+            print(f"{w:10} {name:16} {f'{pm:.4g} [{q1:.4g}, {q3:.4g}]':28} {cm:>10.4g} "
                   f"{cm / pm:>8.3f} {f'{wins}/{len(pairs)}':>6}")
+
+        for m in metrics:
+            name = m["name"]
+            row(name, [p["metrics"][name]["value"] for p, _ in pairs],
+                [c["metrics"][name]["value"] for _, c in pairs], m["better"] == "lower")
+        ops = sorted(set.intersection(*(set(p["per_op"]) & set(c["per_op"]) for p, c in pairs)))
+        for op in ops:
+            row(f"op {op}", [p["per_op"][op] for p, _ in pairs], [c["per_op"][op] for _, c in pairs])
         for side in ("parent", "change"):
             runs = [r for _, r in results[w][side] if r is not None]
             failed = sum(r["failed"] for r in runs)
