@@ -1558,7 +1558,7 @@ object Dedup {
     val spark = history.sparkSession
     import spark.implicits._
     require(shards > 0, "shards must be positive")
-    val hconf = new graft.osm.pbf.SerializableHadoopConf(
+    val hconf = new org.apache.spark.util.SerializableConfiguration(
       spark.sessionState.newHadoopConf())
     // EAGER by design (a "build" API, the d12 eagerness note): the
     // action must complete before the manifest below can list the
@@ -1639,7 +1639,7 @@ object Dedup {
   def incrementalOverlapShardedOn(shingles: DataFrame, bloomDir: String,
       shards: Int, minHit: Int): DataFrame = {
     import shingles.sparkSession.implicits._
-    val hconf = new graft.osm.pbf.SerializableHadoopConf(
+    val hconf = new org.apache.spark.util.SerializableConfiguration(
       shingles.sparkSession.sessionState.newHadoopConf())
     val history = shingles.filter($"doc_id" % 10 =!= 0)
     val delta = shingles.filter($"doc_id" % 10 === 0)

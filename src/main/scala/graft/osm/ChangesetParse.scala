@@ -101,8 +101,8 @@ object ChangesetParse {
           attrs("open").exists(_.toBoolean),
           attrs.micros("closed_at"),
           attrs.lng("comments_count"),
-          attrs.dec("min_lat"), attrs.dec("max_lat"),
-          attrs.dec("min_lon"), attrs.dec("max_lon"),
+          attrs.coord("min_lat", 9), attrs.coord("max_lat", 9),
+          attrs.coord("min_lon", 10), attrs.coord("max_lon", 10),
           attrs.lng("num_changes"),
           attrs.lng("uid"),
           attrs("user"),

@@ -7,12 +7,12 @@ import org.apache.spark.sql.types.StructType
 import graft.osm.ChangesetParse.ParsedChangeset
 
 /** DataSource V2 for OSM changeset XML:
-  * `spark.read.format("osm-changesets").load(path)` — the shared XML
-  * source classes (SURVEY §2A A3) over [[ChangesetParse]]. The option
+  * `spark.read.format("osm-changesets").load(path)` — an [[XmlFormat]]
+  * of the shared OSM source classes (SURVEY §2A A3) over [[ChangesetParse]]. The option
   * is read case-insensitively and leniently, the same for the inferred
   * schema and the table.
   */
-class ChangesetXmlSource extends XmlSourceProvider(o =>
+class ChangesetXmlSource extends OsmSourceProvider(o =>
   ChangesetXmlSource.format(o.getBoolean("discussion", false)))
 
 object ChangesetXmlSource {
@@ -25,7 +25,7 @@ object ChangesetXmlSource {
     else OsmSchemas.Changesets
 
   private[osm] def format(withDiscussion: Boolean): XmlFormat =
-    XmlFormat("osm-changesets", "ChangesetXmlScan", schemaFor(withDiscussion),
+    new XmlFormat("osm-changesets", "ChangesetXmlScan", schemaFor(withDiscussion),
       OsmInputs.ChangesetExtensions, (in, path, required) =>
         OsmXmlUtil.rowsOf(ChangesetParse.iterator(in, path), required, column))
 

@@ -38,16 +38,15 @@ import graft.osm.pbf.PbfDecode
   */
 object OrcSink {
 
-  /** `sorted=false` by default: planet PBFs are already (type, id)
-    * ordered, so preserving input order (like the reference's
-    * single-pass writer) gets the compression benefit without paying a
-    * redundant per-partition sort (~2x write time measured). Pass
-    * sorted=true for unordered inputs.
+  /** Writes rows in input order: planet PBFs are already (type, id)
+    * ordered, so preserving it (like the reference's single-pass writer)
+    * gets the compression benefit without paying a redundant
+    * per-partition sort (~2x write time measured). For unordered inputs,
+    * call `sortWithinPartitions("type", "id")` on `df` first.
     */
   def writePlanet(df: DataFrame, out: String, bounds: Option[String] = None,
-      sorted: Boolean = false, bloomColumns: String = ""): Unit =
-    write(if (sorted) df.sortWithinPartitions("type", "id") else df, out, bounds,
-      bloomColumns)
+      bloomColumns: String = ""): Unit =
+    write(df, out, bounds, bloomColumns)
 
   /** Geographically-clustered planet write: range-partition + sort by
     * the Z-order curve index so spatially-near rows co-locate in ORC

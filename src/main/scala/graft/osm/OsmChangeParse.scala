@@ -99,8 +99,8 @@ object OsmChangeParse {
               attrs("id").map(_.toLong).getOrElse(
                 throw new IllegalArgumentException(s"$kind without id")),
               tags.toSeq,
-              if (kind == "node") attrs.dec("lat") else None,
-              if (kind == "node") attrs.dec("lon") else None,
+              if (kind == "node") attrs.coord("lat", 9) else None,
+              if (kind == "node") attrs.coord("lon", 10) else None,
               nds.toSeq, members.toSeq,
               attrs.lng("changeset"), attrs.micros("timestamp"), attrs.lng("uid"),
               attrs("user"), attrs.lng("version"),

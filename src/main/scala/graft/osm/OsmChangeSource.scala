@@ -10,22 +10,22 @@ import org.apache.spark.sql.types.{StructField, StringType, StructType}
 import graft.osm.OsmChangeParse.ParsedChange
 
 /** DataSource V2 for osmChange (`.osc`) replication diffs:
-  * `spark.read.format("osm-osc").load(path)` — the shared XML source
-  * classes over [[OsmChangeParse]].
+  * `spark.read.format("osm-osc").load(path)` — an [[XmlFormat]] of the
+  * shared OSM source classes over [[OsmChangeParse]].
   *
   * Schema = `op` ('create'|'modify'|'delete') + the 13 planet columns,
   * so a diff applies onto a planet table with a plain union + windowed
   * latest-version pick (`OsmQueries.latestVersionsWindow`) — the
   * replication-apply pipeline in two operators.
   */
-class OsmChangeSource extends XmlSourceProvider(_ => OsmChangeSource.Format)
+class OsmChangeSource extends OsmSourceProvider(_ => OsmChangeSource.Format)
 
 object OsmChangeSource {
   /** op + the planet columns (single source: OsmSchemas.Planet). */
   val Schema: StructType =
     StructType(StructField("op", StringType) +: OsmSchemas.Planet.fields)
 
-  private[osm] val Format = XmlFormat("osm-osc", "OsmChangeScan", Schema,
+  private[osm] val Format = new XmlFormat("osm-osc", "OsmChangeScan", Schema,
     OsmInputs.OscExtensions, (in, path, required) =>
       OsmXmlUtil.rowsOf(OsmChangeParse.iterator(in, path), required, column))
 
@@ -62,10 +62,10 @@ object OsmChangeSource {
   * immediately queryable by every planet operator and writable by
   * OrcSink. Split a planet-scale import into many files for parallelism.
   */
-class OsmXmlSource extends XmlSourceProvider(_ => OsmXmlSource.Format)
+class OsmXmlSource extends OsmSourceProvider(_ => OsmXmlSource.Format)
 
 object OsmXmlSource {
-  private[osm] val Format = XmlFormat("osm-xml", "OsmXmlScan", OsmSchemas.Planet,
+  private[osm] val Format = new XmlFormat("osm-xml", "OsmXmlScan", OsmSchemas.Planet,
     OsmInputs.OsmXmlExtensions, (in, path, required) =>
       OsmXmlUtil.rowsOf(OsmChangeParse.planetIterator(in, path), required,
         OsmChangeSource.column))
@@ -85,7 +85,8 @@ object OsmXml {
     */
   def bounds(spark: SparkSession, path: String): Option[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    OsmInputs.files(Seq(path), OsmInputs.OsmXmlExtensions, conf).headOption.flatMap { file =>
+    val first = OsmInputs.files(Seq(path), OsmInputs.OsmXmlExtensions, conf).headOption
+    first.flatMap { case (file, _) =>
       val in = OsmXmlUtil.openDecompressed(file, conf)
       try {
         // one record: Some(bounds) at <bounds>, None at the first entity

@@ -1,10 +1,6 @@
 package graft.osm.pbf
 
-import java.io.{DataInputStream, ObjectInputStream, ObjectOutputStream}
-import java.util
-
-import scala.collection.mutable.ArrayBuffer
-import scala.jdk.CollectionConverters._
+import java.io.DataInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -12,35 +8,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.PartitionReader
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{Decimal, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.osm.{OsmInputs, OsmSchemas}
+import graft.osm.{FileUnit, OsmFileRange, OsmFormat, OsmInputs, OsmScanBuilder, OsmSchemas,
+  OsmSourceProvider}
 import graft.osm.pbf.PbfDecode._
 
-/** DataSource V2 for OSM PBF files: `spark.read.format("osm-pbf").load(path)`.
+/** DataSource V2 for OSM PBF files: `spark.read.format("osm-pbf").load(path)`,
+  * the PBF [[OsmFormat]] of the shared OSM source classes.
   *
   * Design (SURVEY.md §2A A2, §4.3):
-  *  - PBF Blobs are independently decodable, so each input partition is a
-  *    contiguous run of OSMData blobs; the driver enumerates blob spans
-  *    by reading only the 4-byte prefixes + BlobHeaders (O(#blobs) I/O —
-  *    split planning for a planet file touches ~KBs);
-  *  - the split size is chosen from the data, as Spark's
-  *    `FilePartition.maxSplitBytes` chooses it: the compressed OSMData
-  *    bytes of all files spread over the session's default parallelism,
-  *    no smaller than [[OsmPbfScan.MinSplitBytes]] (1 MiB, so small
-  *    files stay one task) and no larger than `maxPartitionBytes`
-  *    (default 32 MiB ≈ 2x that decoded). A 5 MB extract fans out
-  *    across every core; a 100 TB corpus fans out to 100Ks of balanced
-  *    32 MiB tasks with no skew from file boundaries;
-  *  - SupportsPushDownRequiredColumns: pruned columns are never
-  *    materialized into rows (tags/nds/members decode is the expensive
-  *    part of a planet scan).
+  *  - PBF Blobs are independently decodable, so a file's units are its
+  *    OSMData blobs and each input partition is a contiguous run of
+  *    them; the driver enumerates blob spans by reading only the 4-byte
+  *    prefixes + BlobHeaders (O(#blobs) I/O — split planning for a
+  *    planet file touches ~KBs);
+  *  - a unit weighs its compressed OSMData bytes, so the shared planner
+  *    chooses the split size as Spark's `FilePartition.maxSplitBytes`
+  *    chooses it: the OSMData bytes of all files spread over the
+  *    session's default parallelism, no smaller than
+  *    [[graft.osm.OsmScan.MinSplitBytes]] (1 MiB, so small files stay
+  *    one task) and no larger than `maxPartitionBytes` (default 32 MiB ≈
+  *    2x that decoded). A 5 MB extract fans out across every core; a
+  *    100 TB corpus fans out to 100Ks of balanced 32 MiB tasks with no
+  *    skew from file boundaries;
+  *  - pruned columns are never materialized into rows (tags/nds/members
+  *    decode is the expensive part of a planet scan), and the
+  *    [[OsmPbfFilters]] are evaluated during decode.
   *
   * Semantics parity with the reference transcoder
   * (OsmPbf2Orc.java:146-281): union-wide rows, lowercase type strings,
@@ -49,147 +47,57 @@ import graft.osm.pbf.PbfDecode._
   * epoch-millis timestamps, visible defaulting true, member-type
   * validation error on unknown enum.
   */
-class OsmPbfSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "osm-pbf"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = OsmSchemas.Planet
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new OsmPbfTable(OsmInputs.paths(properties.asScala.toMap))
-  override def supportsExternalMetadata(): Boolean = false
-}
+class OsmPbfSource extends OsmSourceProvider(_ => OsmPbfSource.Format)
 
 object OsmPbfSource {
   /** Convenience entry: read a PBF as the planet DataFrame. */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format("osm-pbf").load(path)
-}
 
-class OsmPbfTable(paths: Seq[String]) extends Table with SupportsRead {
-  override def name(): String = s"osm-pbf:${paths.mkString(",")}"
-  override def schema(): StructType = OsmSchemas.Planet
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new OsmPbfScanBuilder(paths, options)
-}
+  object Format extends OsmFormat("osm-pbf", "OsmPbfScan", OsmSchemas.Planet,
+      OsmInputs.PbfExtensions) {
+    override def pushes(f: Filter): Boolean = OsmPbfFilters.supported(f)
+    override def describe(paths: Seq[String], pushed: Array[Filter]): String =
+      s"${super.describe(paths, pushed)} pushed=[${pushed.mkString(", ")}]"
 
-class OsmPbfScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = OsmSchemas.Planet
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  // top-level pruning only: Spark's nested-schema pruning may hand us
-  // structs pruned INSIDE nds/members arrays, but the decoder emits
-  // full structs — echoing a nested-pruned schema would misalign
-  // ordinals (see OsmXmlUtil.topLevelPrune).
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = graft.osm.OsmXmlUtil.topLevelPrune(OsmSchemas.Planet, requiredSchema)
-  /** accepted filters are evaluated during decode but ALSO returned as
-    * residual — Spark re-applies them exactly (the source only skips
-    * rows that provably fail; see OsmPbfFilters).
-    */
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    pushed = filters.filter(OsmPbfFilters.supported)
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
-  override def build(): Scan = {
-    val spark = SparkSession.active
-    val maxBytes = Option(options.get("maxPartitionBytes")).map(_.toLong)
-      .getOrElse(32L * 1024 * 1024)
-    new OsmPbfScan(paths, required, maxBytes, spark.sparkContext.defaultParallelism,
-      OsmPbfFilters.compile(pushed), pushed.map(_.toString),
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
-  }
-}
-
-/** A contiguous run of blobs in one file. */
-case class OsmPbfInputPartition(path: String, startOffset: Long, endOffset: Long)
-  extends InputPartition
-
-object OsmPbfScan {
-  /** The smallest split the planner aims for, in compressed OSMData
-    * bytes, so that small files stay one task.
-    */
-  val MinSplitBytes: Long = 1L << 20
-}
-
-class OsmPbfScan(paths: Seq[String], required: StructType, maxPartBytes: Long,
-    parallelism: Int, pred: OsmPbfFilters.Compiled, pushedDesc: Array[String],
-    conf: SerializableHadoopConf) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"OsmPbfScan[${paths.mkString(",")}] pushed=[${pushedDesc.mkString(", ")}]"
-
-  /** Groups each file's consecutive OSMData blobs into runs of at least
-    * `min(maxPartBytes, max(MinSplitBytes, ceil(total / parallelism)))`
-    * compressed bytes, where `total` sums the OSMData blobs of every file.
-    */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = OsmInputs.files(paths, OsmInputs.PbfExtensions, conf.value)
-      .map(path => path -> dataSpans(path))
-    val total = files.iterator.flatMap(_._2).map(_.dataSize.toLong).sum
-    val target = math.min(maxPartBytes,
-      math.max(OsmPbfScan.MinSplitBytes, (total + parallelism - 1) / parallelism))
-    val parts = ArrayBuffer.empty[InputPartition]
-    for ((path, spans) <- files) {
-      var runStart = -1L
-      var runEnd = -1L
-      var runBytes = 0L
-      def flush(): Unit = if (runStart >= 0) {
-        parts += OsmPbfInputPartition(path, runStart, runEnd)
-        runStart = -1L; runBytes = 0L
-      }
-      for (s <- spans) {
-        if (runStart < 0) runStart = s.headerStart
-        runEnd = s.endOffset
-        runBytes += s.dataSize
-        if (runBytes >= target) flush()
-      }
-      flush()
+    /** The OSMData spans of `path`, found by reading only its frame heads
+      * (O(#blobs) I/O), after rejecting a header that requires features
+      * this reader does not implement.
+      */
+    override def units(path: String, length: Long, conf: Configuration): Seq[FileUnit] = {
+      val file = new Path(path)
+      val in = file.getFileSystem(conf).open(file)
+      try {
+        val data = new DataInputStream(in)
+        val spans = PbfDecode.scanBlobSpans(data, n => in.seek(in.getPos + n), path)
+        spans.find(_.blobType == "OSMHeader").foreach { h =>
+          in.seek(h.dataStart)
+          val header = PbfDecode.readHeaderBlock(data, h, path)
+          try header.checkRequiredFeatures() catch PbfDecode.failAt(path, h.headerStart)
+        }
+        spans.filter(_.blobType == "OSMData")
+          .map(s => FileUnit(s.headerStart, s.endOffset, s.dataSize))
+      } finally in.close()
     }
-    parts.toArray
-  }
 
-  /** The OSMData spans of `path`, found by reading only its frame heads
-    * (O(#blobs) I/O), after rejecting a header that requires features
-    * this reader does not implement.
-    */
-  private def dataSpans(path: String): Seq[BlobSpan] = {
-    val file = new Path(path)
-    val in = file.getFileSystem(conf.value).open(file)
-    try {
-      val data = new DataInputStream(in)
-      val spans = PbfDecode.scanBlobSpans(data, n => in.seek(in.getPos + n), path)
-      spans.find(_.blobType == "OSMHeader").foreach { h =>
-        in.seek(h.dataStart)
-        val header = PbfDecode.readHeaderBlock(data, h, path)
-        try header.checkRequiredFeatures() catch PbfDecode.failAt(path, h.headerStart)
-      }
-      spans.filter(_.blobType == "OSMData")
-    } finally in.close()
+    override def reader(range: OsmFileRange, required: StructType, pushed: Array[Filter],
+        conf: Configuration): PartitionReader[InternalRow] =
+      new OsmPbfPartitionReader(range, required, OsmPbfFilters.compile(pushed), conf)
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new OsmPbfReaderFactory(required, pred, conf)
 }
 
-class OsmPbfReaderFactory(required: StructType, pred: OsmPbfFilters.Compiled,
-    conf: SerializableHadoopConf) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new OsmPbfPartitionReader(partition.asInstanceOf[OsmPbfInputPartition], required,
-      pred, conf)
-}
+/** The shared scan builder over the PBF format, on the active session,
+  * for callers that build a scan without a table.
+  */
+class OsmPbfScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
+  extends OsmScanBuilder(OsmPbfSource.Format, paths, options, SparkSession.active)
 
-class OsmPbfPartitionReader(part: OsmPbfInputPartition, required: StructType,
-    pred: OsmPbfFilters.Compiled,
-    conf: SerializableHadoopConf) extends PartitionReader[InternalRow] {
+class OsmPbfPartitionReader(part: OsmFileRange, required: StructType,
+    pred: OsmPbfFilters.Compiled, conf: Configuration) extends PartitionReader[InternalRow] {
 
   private val in = {
     val hp = new Path(part.path)
-    val stream = hp.getFileSystem(conf.value).open(hp)
+    val stream = hp.getFileSystem(conf).open(hp)
     stream.seek(part.startOffset)
     stream
   }
@@ -319,19 +227,4 @@ class OsmPbfPartitionReader(part: OsmPbfInputPartition, required: StructType,
 
   override def get(): InternalRow = current
   override def close(): Unit = in.close()
-}
-
-/** java-serializable Hadoop Configuration (Spark's own wrapper is
-  * private[spark]).
-  */
-class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
 }

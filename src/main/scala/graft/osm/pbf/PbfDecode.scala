@@ -60,9 +60,10 @@ object PbfDecode {
 
   /** Handler naming `path` and `offset` on the exceptions that reading
     * corrupt or truncated bytes raises: end of file, the decoders' own
-    * IllegalArgumentExceptions, the zlib and lz4 codecs' data errors, and
-    * the raw index/size exceptions of Proto.Reader, which does not check
-    * lengths so that the decode loop stays free of per-field checks.
+    * IllegalArgumentExceptions, the zlib and lz4 codecs' data errors, the
+    * raw index/size exceptions of Proto.Reader, which does not check
+    * lengths so that the decode loop stays free of per-field checks, and
+    * the ArithmeticException of a coordinate outside decimal(9,7)/(10,7).
     */
   def failAt(path: String, offset: Long): PartialFunction[Throwable, Nothing] = {
     case e: PbfFormatException => throw e
@@ -70,7 +71,7 @@ object PbfDecode {
       throw new PbfFormatException(path, offset, "file ends inside this blob's frame", e)
     case e @ (_: IllegalArgumentException | _: IndexOutOfBoundsException |
         _: NegativeArraySizeException | _: java.util.zip.DataFormatException |
-        _: net.jpountz.lz4.LZ4Exception) =>
+        _: net.jpountz.lz4.LZ4Exception | _: ArithmeticException) =>
       throw new PbfFormatException(path, offset, e.toString, e)
   }
 
@@ -218,61 +219,21 @@ object PbfDecode {
     } else if (zlib != null) {
       val inf = new Inflater()
       inf.setInput(zlib)
-      // undeclared-size guess buffer is CLAMPED to the blob cap: an
-      // over-cap result must flow through the grow path's cap check
-      // (an unclamped 4x-compressed guess could hold > MaxBlobBytes
-      // outright and return it unchecked)
-      var out = new Array[Byte](if (rawSize >= 0) rawSize
-        else math.min(math.max(64L, zlib.length.toLong * 4), MaxBlobBytes).toInt)
-      var n = 0
-      try {
-        while (!inf.finished()) {
-          if (n == out.length) {
-            // buffer full but stream unfinished — probe one byte: a
-            // stream whose remaining symbols are only the end marker
-            // (e.g. raw_size == 0 or an exactly-sized buffer) finishes
-            // without producing output; real extra data either errors
-            // (declared raw_size lied) or grows the guess buffer.
-            val probe = new Array[Byte](1)
-            val got = inf.inflate(probe, 0, 1)
-            if (got == 0) {
-              if (inf.finished()) ()
-              else throw new IllegalArgumentException(
-                "truncated or corrupt zlib payload in PBF blob")
-            } else {
-              if (rawSize >= 0) throw new IllegalArgumentException(
-                s"zlib data inflates past declared raw_size=$rawSize")
-              // undeclared-size growth path: cap it too, or a tiny
-              // zlib bomb inflates to attacker-controlled gigabytes
-              if (out.length >= MaxBlobBytes) throw new IllegalArgumentException(
-                "zlib PBF blob inflates past the 32 MiB blob cap " +
-                  "— corrupt or malicious payload")
-              // grown buffer is clamped to the cap too: a doubling that
-              // overshoots it would fit an oversized payload and return
-              // it without ever re-reaching this check
-              out = java.util.Arrays.copyOf(out,
-                math.min(math.max(64, out.length * 2), MaxBlobBytes.toInt))
-              out(n) = probe(0)
-              n += 1
-            }
-          } else {
-            val got = inf.inflate(out, n, out.length - n)
-            // inflate() == 0 while unfinished means it wants more input
-            // (or a preset dictionary) — with the full blob already
-            // supplied that is a truncated/corrupt payload.
-            if (got == 0 && !inf.finished() && (inf.needsInput() || inf.needsDictionary()))
-              throw new IllegalArgumentException(
-                "truncated or corrupt zlib payload in PBF blob")
-            n += got
-          }
-        }
+      try readBounded("zlib", rawSize, zlib.length) { (buf, off, len) =>
+        val got = inf.inflate(buf, off, len)
+        // 0 while unfinished means it wants more input (or a preset
+        // dictionary) — with the full blob already supplied that is a
+        // truncated/corrupt payload
+        if (got > 0) got
+        else if (inf.finished()) -1
+        else if (inf.needsInput() || inf.needsDictionary()) throw new IllegalArgumentException(
+          "truncated or corrupt zlib payload in PBF blob")
+        else 0
       } finally inf.end()
-      if (n == out.length) out else java.util.Arrays.copyOf(out, n)
     } else if (lzma != null) {
       // legacy .lzma (LZMA1) stream; LZMAInputStream parses/validates
       // the 13-byte header. The memory limit bounds the dictionary a
-      // crafted dict-size field could demand; the read loop applies the
-      // same declared-size/blob-cap discipline as the zlib branch.
+      // crafted dict-size field could demand.
       val limitKiB = (MaxBlobBytes >> 10).toInt * 4 // 256 MiB dict cap
       val in =
         try new org.tukaani.xz.LZMAInputStream(
@@ -282,35 +243,10 @@ object PbfDecode {
             s"corrupt lzma header in PBF blob: ${e.getMessage}", e)
         }
       try {
-        // same clamp discipline as the zlib guess buffer (see above)
-        var out = new Array[Byte](if (rawSize >= 0) rawSize
-          else math.min(math.max(64L, lzma.length.toLong * 4), MaxBlobBytes).toInt)
-        var n = 0
-        var eof = false
-        while (!eof) {
-          if (n == out.length) {
-            val probe = in.read()
-            if (probe < 0) eof = true
-            else {
-              if (rawSize >= 0) throw new IllegalArgumentException(
-                s"lzma data decompresses past declared raw_size=$rawSize")
-              if (out.length >= MaxBlobBytes) throw new IllegalArgumentException(
-                "lzma PBF blob inflates past the 32 MiB blob cap " +
-                  "— corrupt or malicious payload")
-              // same grow clamp as the zlib branch (see there)
-              out = java.util.Arrays.copyOf(out,
-                math.min(math.max(64, out.length * 2), MaxBlobBytes.toInt))
-              out(n) = probe.toByte
-              n += 1
-            }
-          } else {
-            val got = in.read(out, n, out.length - n)
-            if (got < 0) eof = true else n += got
-          }
-        }
-        if (rawSize >= 0 && n != rawSize) throw new IllegalArgumentException(
-          s"lzma data decompresses to $n bytes, declared raw_size=$rawSize")
-        if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+        val out = readBounded("lzma", rawSize, lzma.length)(in.read)
+        if (rawSize >= 0 && out.length != rawSize) throw new IllegalArgumentException(
+          s"lzma data decompresses to ${out.length} bytes, declared raw_size=$rawSize")
+        out
       } catch { case e: java.io.IOException =>
         // CorruptedInputException / MemoryLimitException / truncation
         throw new IllegalArgumentException(
@@ -319,6 +255,50 @@ object PbfDecode {
     } else throw new IllegalArgumentException(
       "unsupported Blob encoding (raw, zlib_data, lzma_data, lz4_data " +
         "and zstd_data are all implemented — this blob carries none of them)")
+  }
+
+  /** The bounded read loop of the streaming codecs (zlib, lzma). `read`
+    * fills `buf(off until off + len)` and returns the bytes it produced,
+    * -1 at the end of the stream. Output goes into a buffer of the
+    * declared `rawSize`, else into a guess from the compressed length.
+    * The guess and every doubling are CLAMPED to the blob cap, so an
+    * over-cap result always reaches the grow path's cap check (an
+    * unclamped 4x-compressed guess could hold it outright and return it
+    * unchecked). A full buffer probes one byte: a stream whose remaining
+    * symbols are only the end marker (e.g. raw_size == 0 or an
+    * exactly-sized buffer) ends without output; real extra data either
+    * errors (the declared raw_size lied) or grows the guess buffer, up
+    * to the cap, or a tiny bomb would inflate to attacker-controlled
+    * gigabytes.
+    */
+  private def readBounded(codec: String, rawSize: Int, compressedLength: Int)(
+      read: (Array[Byte], Int, Int) => Int): Array[Byte] = {
+    var out = new Array[Byte](if (rawSize >= 0) rawSize
+      else math.min(math.max(64L, compressedLength.toLong * 4), MaxBlobBytes).toInt)
+    val probe = new Array[Byte](1)
+    var n = 0
+    var eof = false
+    while (!eof) {
+      if (n < out.length) {
+        val got = read(out, n, out.length - n)
+        if (got < 0) eof = true else n += got
+      } else read(probe, 0, 1) match {
+        case -1 => eof = true
+        case 0 => throw new IllegalArgumentException(
+          s"truncated or corrupt $codec payload in PBF blob")
+        case _ =>
+          if (rawSize >= 0) throw new IllegalArgumentException(
+            s"$codec data decompresses past declared raw_size=$rawSize")
+          if (out.length >= MaxBlobBytes) throw new IllegalArgumentException(
+            s"$codec PBF blob inflates past the 32 MiB blob cap " +
+              "— corrupt or malicious payload")
+          out = java.util.Arrays.copyOf(out,
+            math.min(math.max(64, out.length * 2), MaxBlobBytes.toInt))
+          out(n) = probe(0)
+          n += 1
+      }
+    }
+    if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 
   /** Features this reader implements; a conforming reader MUST reject a

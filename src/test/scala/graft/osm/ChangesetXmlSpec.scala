@@ -145,7 +145,9 @@ class ChangesetXmlSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("malformed timestamps and markup fail naming the file and line") {
     for ((content, line) <- Seq(
         "<osm>\n<changeset id=\"1\" created_at=\"yesterday\" open=\"false\"/>\n</osm>" -> 2,
-        "<osm>\n<changeset id=\"1\" open=\"false\">\n</osm>" -> 3)) {
+        "<osm>\n<changeset id=\"1\" open=\"false\">\n</osm>" -> 3,
+        // a bounding box latitude outside decimal(9,7)
+        "<osm>\n<changeset id=\"1\" open=\"false\" min_lat=\"-100\"/>\n</osm>" -> 2)) {
       val f = Files.createTempDirectory("csbad").resolve("bad.osm")
       Files.write(f, content.getBytes("UTF-8"))
       val ex = intercept[SparkException] { ChangesetXml.read(spark, f.toString).collect() }

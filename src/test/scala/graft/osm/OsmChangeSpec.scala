@@ -123,6 +123,8 @@ class OsmChangeSpec extends AnyFunSuite with Matchers with SparkSpec {
     for ((content, line) <- Seq(
         "<osmChange>\n<create>\n<node id=\"1\" timestamp=\"2024-13-45\"/>\n</create>\n</osmChange>" -> 3,
         "<osmChange>\n<create>\n<node id=\"1\">\n</create>\n</osmChange>" -> 4,
+        // a latitude outside decimal(9,7)
+        "<osmChange>\n<create>\n<node id=\"1\" lat=\"100\" lon=\"0\"/>\n</create>\n</osmChange>" -> 3,
         "" -> 1)) {
       val f = writeOsc("bad.osc", gz = false, content = content)
       val ex = intercept[SparkException] { OsmChange.read(spark, f).collect() }

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
-import graft.osm.pbf.{OsmPbfInputPartition, OsmPbfScan, OsmPbfScanBuilder, PbfDecode}
+import graft.osm.pbf.{OsmPbfScanBuilder, PbfDecode}
 import graft.osm.pbf.PbfDecode.BlobSpan
 
 class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
@@ -454,9 +454,15 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
       .msg(1)(_.str(1, ""))
       .msg(2)(_.msg(1) { n => n.sint(1, 6L); n.packed(2, Seq(5L)); n.packed(3, Seq(5L)) })
       .toArray
+    // a node at latitude 100°, outside decimal(9,7)
+    val badLat = new PbfTestData.W()
+      .msg(1)(_.str(1, ""))
+      .msg(2)(_.msg(1) { n => n.sint(1, 6L); n.sint(8, 1000000000L); n.sint(9, 0L) })
+      .toArray
     for ((name, blob) <- Seq(
         "truncated block" -> raw(block.take(block.length / 2)),
         "string index out of range" -> raw(badIndex),
+        "latitude outside decimal(9,7)" -> raw(badLat),
         "bit-flipped zlib payload" ->
           new PbfTestData.W().vint(2, block.length).bytes(3, zlib).toArray,
         // zlib_data declaring 256 MiB inside a 10-byte Blob
@@ -483,14 +489,14 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private lazy val splitPbf = SplitPbf.write(Files.createTempDirectory("pbfsplit"))
 
-  private def planned(path: String, options: (String, String)*): Seq[OsmPbfInputPartition] =
+  private def planned(path: String, options: (String, String)*): Seq[OsmFileRange] =
     scan(path, options: _*).planInputPartitions().toSeq
-      .map(_.asInstanceOf[OsmPbfInputPartition])
+      .map(_.asInstanceOf[OsmFileRange])
 
   test("split size follows the input's bytes and the session's parallelism") {
     val parallelism = spark.sparkContext.defaultParallelism
     val data = spans(Files.readAllBytes(Paths.get(splitPbf))).filter(_.blobType == "OSMData")
-    data.map(_.dataSize.toLong).sum should be > 2 * OsmPbfScan.MinSplitBytes
+    data.map(_.dataSize.toLong).sum should be > 2 * OsmScan.MinSplitBytes
     val parts = planned(splitPbf)
     if (parallelism >= 2) parts.length should be > 1
     parts.length should be <= math.min(data.length, parallelism)

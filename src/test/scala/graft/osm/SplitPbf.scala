@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import graft.osm.PbfFixtureEncoder.Entity
 
 /** A PBF large enough for split planning to fan out: its OSMData blobs
-  * hold several MiB of zlib data, above `OsmPbfScan.MinSplitBytes`.
+  * hold several MiB of zlib data, above `OsmScan.MinSplitBytes`.
   * Random names and coordinates keep zlib from shrinking it below that.
   */
 object SplitPbf {

@@ -17,11 +17,18 @@ BENCHMARK.json's `run_seconds`.
 Prints every run as it finishes, then one row per workload and end-to-end
 metric: parent median and quartiles, change median, change/parent ratio
 of the medians, and the pairs the change won (ties count for neither
-side). Then the same per op (e.g. `planet`, `changesets`, `diffApply`),
-over each run's median latency of that op: the `per_op.<op>.p50_s` of the
-stamped record the run names with `record=osmbench/records/...`. Failed
-ops are summed per side. The tool only reads osmbench/; the parent copy
-is deleted at the end unless --keep is given.
+side). An end-to-end metric whose change median is worse than the parent
+median by more than its `bound` in BENCHMARK.json (a fraction of the
+parent median) is marked WORSE. Then the same per op (e.g. `planet`,
+`changesets`, `diffApply`), over each run's median latency of that op: the
+`per_op.<op>.p50_s` of the stamped record the run names with
+`record=osmbench/records/...`; ops carry no bound. Failed ops are summed
+per side. The tool only reads osmbench/; the parent copy is deleted at the
+end unless --keep is given.
+
+Ends with a verdict line and exits 1 when any metric is marked WORSE, when
+the change side has more failed ops than the parent side, or when a
+change-side run failed; else exits 0.
 """
 import argparse
 import json
@@ -119,32 +126,51 @@ def main():
     print()
     print(f"{'workload':10} {'metric':16} {'parent med [q1, q3]':28} {'change med':>10} "
           f"{'chg/par':>8} {'wins':>6}")
+    problems = []
     for w in workloads:
         pairs = [(p, c) for (_, p), (_, c) in zip(results[w]["parent"], results[w]["change"])
                  if p is not None and c is not None]
         if not pairs:
             print(f"{w:10} no complete pair")
-            continue
-        def row(name, par, chg, lower=True):
+        def row(name, par, chg, lower=True, bound=None):
             wins = sum(1 for x, y in zip(par, chg) if (y < x if lower else y > x))
             q1, q3 = quartiles(par)
             pm, cm = statistics.median(par), statistics.median(chg)
+            worse = bound is not None and (cm > pm * (1 + bound) if lower
+                                           else cm < pm * (1 - bound))
+            if worse:
+                problems.append(f"{w} {name} {cm:.4g} against {pm:.4g} (bound {bound})")
             print(f"{w:10} {name:16} {f'{pm:.4g} [{q1:.4g}, {q3:.4g}]':28} {cm:>10.4g} "
-                  f"{cm / pm:>8.3f} {f'{wins}/{len(pairs)}':>6}")
+                  f"{cm / pm:>8.3f} {f'{wins}/{len(pairs)}':>6}{'  WORSE' if worse else ''}")
 
-        for m in metrics:
+        for m in metrics if pairs else []:
             name = m["name"]
             row(name, [p["metrics"][name]["value"] for p, _ in pairs],
-                [c["metrics"][name]["value"] for _, c in pairs], m["better"] == "lower")
-        ops = sorted(set.intersection(*(set(p["per_op"]) & set(c["per_op"]) for p, c in pairs)))
+                [c["metrics"][name]["value"] for _, c in pairs], m["better"] == "lower",
+                m.get("bound"))
+        ops = sorted(set.intersection(*(set(p["per_op"]) & set(c["per_op"]) for p, c in pairs))
+                     if pairs else [])
         for op in ops:
             row(f"op {op}", [p["per_op"][op] for p, _ in pairs], [c["per_op"][op] for _, c in pairs])
+        failed = {}
         for side in ("parent", "change"):
             runs = [r for _, r in results[w][side] if r is not None]
-            failed = sum(r["failed"] for r in runs)
+            failed[side] = sum(r["failed"] for r in runs)
             attempted = sum(r["attempted"] for r in runs)
             missing = len(results[w][side]) - len(runs)
-            print(f"{w:10} {side} failed ops {failed}/{attempted}, runs that failed: {missing}")
+            print(f"{w:10} {side} failed ops {failed[side]}/{attempted}, "
+                  f"runs that failed: {missing}")
+            if side == "change" and missing:
+                problems.append(f"{w}: {missing} change-side run(s) failed")
+        if failed["change"] > failed["parent"]:
+            problems.append(f"{w}: {failed['change']} failed ops on the change side, "
+                            f"{failed['parent']} on the parent side")
+
+    print()
+    if problems:
+        print("verdict: WORSE: " + "; ".join(problems))
+        sys.exit(1)
+    print("verdict: no end-to-end metric worse than its bound, no extra failures")
 
 
 if __name__ == "__main__":
