@@ -41,11 +41,12 @@ object ChangesetParse {
       user: Option[String],
       discussion: Seq[ParsedComment])
 
-  def iterator(in: InputStream, path: String): Iterator[ParsedChangeset] =
-    new ChangesetIterator(in, path)
+  /** The changesets of `in`; `at` names a line of it in errors. */
+  def iterator(in: InputStream, at: Int => String): Iterator[ParsedChangeset] =
+    new ChangesetIterator(in, at)
 
-  private final class ChangesetIterator(in: InputStream, path: String)
-      extends XmlRecords[ParsedChangeset](in, path) {
+  private final class ChangesetIterator(in: InputStream, at: Int => String)
+      extends XmlRecords[ParsedChangeset](in, at) {
     private var sawRoot = false
     private var attrs: XmlAttrs = _
     private val tags = mutable.ArrayBuffer.empty[(String, String)]
@@ -59,7 +60,7 @@ object ChangesetParse {
         r.getLocalName match {
           case "osm" => sawRoot = true
           case "changeset" =>
-            if (!sawRoot) throw new IllegalStateException(
+            if (!sawRoot) throw new IllegalArgumentException(
               "This does not appear to be an OSM changeset file.")
             attrs = attributes()
             tags.clear()
@@ -70,7 +71,7 @@ object ChangesetParse {
             commentText = ""
           case "text" if commentAttrs != null =>
             textBuf = new java.lang.StringBuilder
-          case other if !sawRoot => throw new IllegalStateException(
+          case other if !sawRoot => throw new IllegalArgumentException(
             s"This does not appear to be an OSM changeset file (root <$other>).")
           case _ => // discussion wrapper etc.
         }

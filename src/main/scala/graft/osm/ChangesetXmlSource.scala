@@ -8,9 +8,10 @@ import graft.osm.ChangesetParse.ParsedChangeset
 
 /** DataSource V2 for OSM changeset XML:
   * `spark.read.format("osm-changesets").load(path)` — an [[XmlFormat]]
-  * of the shared OSM source classes (SURVEY §2A A3) over [[ChangesetParse]]. The option
-  * is read case-insensitively and leniently, the same for the inferred
-  * schema and the table.
+  * of the shared OSM source classes (SURVEY §2A A3) over [[ChangesetParse]],
+  * with `changeset` as its record tag: a plain or bz2 dump is split on
+  * record boundaries ([[XmlSplit]]). The option is read case-insensitively
+  * and leniently, the same for the inferred schema and the table.
   */
 class ChangesetXmlSource extends OsmSourceProvider(o =>
   ChangesetXmlSource.format(o.getBoolean("discussion", false)))
@@ -26,8 +27,8 @@ object ChangesetXmlSource {
 
   private[osm] def format(withDiscussion: Boolean): XmlFormat =
     new XmlFormat("osm-changesets", "ChangesetXmlScan", schemaFor(withDiscussion),
-      OsmInputs.ChangesetExtensions, (in, path, required) =>
-        OsmXmlUtil.rowsOf(ChangesetParse.iterator(in, path), required, column))
+      OsmInputs.ChangesetExtensions, Some("changeset"), (in, at, required) =>
+        OsmXmlUtil.rowsOf(ChangesetParse.iterator(in, at), required, column))
 
   import OsmXmlUtil.{dec, tagsMap, utf8}
 

@@ -38,19 +38,20 @@ object OsmChangeParse {
   private val Ops = Set("create", "modify", "delete")
   private val Kinds = Set("node", "way", "relation")
 
-  def iterator(in: InputStream, path: String): Iterator[ParsedChange] =
-    new ChangeIterator(in, path, planet = false)
+  /** The changes of `in`; `at` names a line of it in errors. */
+  def iterator(in: InputStream, at: Int => String): Iterator[ParsedChange] =
+    new ChangeIterator(in, at, planet = false)
 
   /** Planet/history `.osm` XML (osmosis `--read-xml`): same entity
     * elements directly under an `<osm>` root — no operation containers,
     * `op` is empty, `visible` defaults true (planet convention; history
     * dumps carry explicit visible="false" rows).
     */
-  def planetIterator(in: InputStream, path: String): Iterator[ParsedChange] =
-    new ChangeIterator(in, path, planet = true)
+  def planetIterator(in: InputStream, at: Int => String): Iterator[ParsedChange] =
+    new ChangeIterator(in, at, planet = true)
 
-  private final class ChangeIterator(in: InputStream, path: String,
-      planet: Boolean) extends XmlRecords[ParsedChange](in, path) {
+  private final class ChangeIterator(in: InputStream, at: Int => String,
+      planet: Boolean) extends XmlRecords[ParsedChange](in, at) {
     private var sawRoot = false
     private var op: String = _
     private var kind: String = _
@@ -81,11 +82,11 @@ object OsmChangeParse {
             // carry a changeset ATTRIBUTE) — this is a changeset dump
             // misrouted to the planet parser; silently skipping every
             // element would "succeed" with zero rows
-            throw new IllegalStateException(
+            throw new IllegalArgumentException(
               "This looks like a changeset dump (<changeset> elements " +
                 "under <osm>) — read it with the osm-changesets source " +
                 "/ the --changesets CLI flag, not as planet XML.")
-          case other if !sawRoot => throw new IllegalStateException(
+          case other if !sawRoot => throw new IllegalArgumentException(
             s"This does not appear to be an ${if (planet) "osm" else "osmChange"} " +
               s"file (root <$other>).")
           case _ => // bounds etc.

@@ -26,8 +26,8 @@ object OsmChangeSource {
     StructType(StructField("op", StringType) +: OsmSchemas.Planet.fields)
 
   private[osm] val Format = new XmlFormat("osm-osc", "OsmChangeScan", Schema,
-    OsmInputs.OscExtensions, (in, path, required) =>
-      OsmXmlUtil.rowsOf(OsmChangeParse.iterator(in, path), required, column))
+    OsmInputs.OscExtensions, None, (in, at, required) =>
+      OsmXmlUtil.rowsOf(OsmChangeParse.iterator(in, at), required, column))
 
   import OsmXmlUtil.{dec, tagsMap, utf8}
 
@@ -66,8 +66,8 @@ class OsmXmlSource extends OsmSourceProvider(_ => OsmXmlSource.Format)
 
 object OsmXmlSource {
   private[osm] val Format = new XmlFormat("osm-xml", "OsmXmlScan", OsmSchemas.Planet,
-    OsmInputs.OsmXmlExtensions, (in, path, required) =>
-      OsmXmlUtil.rowsOf(OsmChangeParse.planetIterator(in, path), required,
+    OsmInputs.OsmXmlExtensions, None, (in, at, required) =>
+      OsmXmlUtil.rowsOf(OsmChangeParse.planetIterator(in, at), required,
         OsmChangeSource.column))
 }
 
@@ -90,7 +90,7 @@ object OsmXml {
       val in = OsmXmlUtil.openDecompressed(file, conf)
       try {
         // one record: Some(bounds) at <bounds>, None at the first entity
-        val head = new XmlRecords[Option[String]](in, file) {
+        val head = new XmlRecords[Option[String]](in, OsmXmlUtil.atLine(file)) {
           protected def step(event: Int): Option[String] =
             if (event != XMLStreamConstants.START_ELEMENT) null
             else r.getLocalName match {

@@ -178,7 +178,12 @@ object OsmOrcFileFormat {
           if (b.precision > d.precision) setNull(v, r) else vec.vector(r) = b.unscaledValue.longValue
         }
     case TimestampType => (g, o, v, r) =>
-      val us = RebaseDateTime.rebaseGregorianToJulianMicros(g.getLong(o))
+      // the rebase is the identity from its last switch on, in every
+      // zone; below it, it reads the default time zone
+      val t = g.getLong(o)
+      val us =
+        if (t >= RebaseDateTime.lastSwitchGregorianTs) t
+        else RebaseDateTime.rebaseGregorianToJulianMicros(t)
       val ts = v.asInstanceOf[TimestampColumnVector]
       ts.time(r) = Math.floorDiv(us, 1000L)
       ts.nanos(r) = (Math.floorMod(us, 1000000L) * 1000L).toInt

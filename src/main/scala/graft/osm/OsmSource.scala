@@ -23,7 +23,7 @@ private[osm] object OsmInputs {
   /** The file-name extensions each format's directory reads take. */
   val PbfExtensions: Seq[String] = Seq(".pbf")
   val ChangesetExtensions: Seq[String] =
-    Seq(".xml", ".xml.gz", ".osm", ".osm.gz", ".osc", ".osc.gz")
+    Seq(".xml", ".xml.gz", ".xml.bz2", ".osm", ".osm.gz", ".osm.bz2", ".osc", ".osc.gz")
   val OscExtensions: Seq[String] = Seq(".osc", ".osc.gz")
   val OsmXmlExtensions: Seq[String] = Seq(".osm", ".osm.gz", ".osm.bz2")
 
@@ -106,7 +106,10 @@ abstract class OsmFormat(val shortName: String, val scanName: String,
     s"$scanName[${paths.mkString(",")}]"
 
   /** The splittable units of the file `path` of `length` bytes, in file
-    * order; [[OsmScan]] makes each run of consecutive units a partition.
+    * order; [[OsmScan]] makes each run of consecutive units a partition,
+    * and [[reader]] reads one. PBF's units are its OSMData blobs, a
+    * splittable changeset file's are 64 KiB byte chunks ([[XmlSplit]]),
+    * and any other file is one unit.
     */
   def units(path: String, length: Long, conf: Configuration): Seq[FileUnit]
 
@@ -193,11 +196,14 @@ class OsmScan(format: OsmFormat, paths: Seq[String], required: StructType,
   override def toBatch: Batch = this
   override def description(): String = format.describe(paths, pushed)
 
-  /** Groups each file's consecutive units into runs of at least
-    * `min(maxPartBytes, max(MinSplitBytes, ceil(total / parallelism)))`
+  /** Cuts each file's consecutive units into runs of about `target =
+    * min(maxPartBytes, max(MinSplitBytes, ceil(total / parallelism)))`
     * bytes, where `total` sums the units of every file — the way Spark's
-    * `FilePartition.maxSplitBytes` sizes a file split. A file of one unit
-    * is one partition.
+    * `FilePartition.maxSplitBytes` sizes a file split. A run ends with
+    * the unit that takes the file's running unit bytes to or past a
+    * multiple of `target`, so a file of equal units splits into runs
+    * that differ by at most one unit. A file of one unit is one
+    * partition.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val files = OsmInputs.files(paths, format.extensions, conf.value)
@@ -209,18 +215,17 @@ class OsmScan(format: OsmFormat, paths: Seq[String], required: StructType,
     for ((path, units) <- files) {
       var runStart = -1L
       var runEnd = -1L
-      var runBytes = 0L
-      def flush(): Unit = if (runStart >= 0) {
-        parts += OsmFileRange(path, runStart, runEnd)
-        runStart = -1L; runBytes = 0L
-      }
+      var done = 0L
       for (u <- units) {
         if (runStart < 0) runStart = u.start
         runEnd = u.end
-        runBytes += u.bytes
-        if (runBytes >= target) flush()
+        done += u.bytes
+        if (done / target > (done - u.bytes) / target) {
+          parts += OsmFileRange(path, runStart, runEnd)
+          runStart = -1L
+        }
       }
-      flush()
+      if (runStart >= 0) parts += OsmFileRange(path, runStart, runEnd)
     }
     parts.toArray
   }

@@ -131,6 +131,7 @@ class ChangesetXmlSpec extends AnyFunSuite with Matchers with SparkSpec {
       ChangesetXml.read(spark, f.toString).collect()
     }
     ex.getMessage should include("does not appear to be an OSM changeset file")
+    ex.getMessage should include(s"$f at line 1")
   }
 
   test("nested changeset directories are read recursively") {
@@ -140,6 +141,50 @@ class ChangesetXmlSpec extends AnyFunSuite with Matchers with SparkSpec {
     val os = new GZIPOutputStream(Files.newOutputStream(sub.resolve("b.osm.gz")))
     os.write(xml.getBytes("UTF-8")); os.close()
     ChangesetXml.read(spark, dir.toString).count() shouldBe 6
+  }
+
+  test("a directory of bz2 changeset dumps is read") {
+    // the planet's changeset dump is changesets-YYMMDD.osm.bz2
+    val dir = Files.createTempDirectory("csbz2")
+    val bytes = SplitChangesets.bz2(xml.getBytes("UTF-8"))
+    Files.write(dir.resolve("changesets-241007.osm.bz2"), bytes)
+    val sub = Files.createDirectories(dir.resolve("old"))
+    Files.write(sub.resolve("changesets.xml.bz2"), bytes)
+    ChangesetXml.read(spark, dir.toString).count() shouldBe 6
+  }
+
+  test("timestamps: the plain-form fast path agrees with Instant.parse") {
+    val rnd = new scala.util.Random(17)
+    def two(n: Int) = f"$n%02d"
+    def plain(y: Int, mo: Int, d: Int, h: Int, mi: Int, s: Int) =
+      f"$y%04d-${two(mo)}-${two(d)}T${two(h)}:${two(mi)}:${two(s)}Z"
+    val valid = Seq.fill(3000)(plain(rnd.nextInt(10000), 1 + rnd.nextInt(12),
+      1 + rnd.nextInt(28), rnd.nextInt(24), rnd.nextInt(60), rnd.nextInt(60)))
+    val edges = Seq(
+      "1970-01-01T00:00:00Z", "0000-01-01T00:00:00Z", "9999-12-31T23:59:59Z",
+      "1969-12-31T23:59:59Z", "1582-10-10T12:00:00Z", "2000-02-29T00:00:00Z",
+      "2024-02-29T23:59:59Z", "1900-02-29T00:00:00Z", "2023-02-29T00:00:00Z",
+      "2023-04-31T00:00:00Z", "2023-13-01T00:00:00Z", "2023-00-10T00:00:00Z",
+      "2023-01-00T00:00:00Z", "2023-01-32T00:00:00Z", "2023-01-01T24:00:00Z",
+      "2023-01-01T23:60:00Z", "2023-01-01T12:00:60Z", "2016-12-31T23:59:60Z",
+      "2023-01-01T00:00:00.5Z", "2023-01-01T00:00:00.123456789Z", "2023-01-01T00:00:00+01:00",
+      "2023-01-01T00:00:00-00:30", "2023-01-01t00:00:00z", "2023-01-01 00:00:00Z",
+      "2023-1-01T00:00:00Z", "2023-01-01T00:00Z", "+2023-01-01T00:00:00Z",
+      "-0001-01-01T00:00:00Z", "20230-01-01T00:00:00Z", "2023-01-01T00:00:00ZZ",
+      "2O23-01-01T00:00:00Z", "2023-01-01T0:00:000Z", "", "yesterday")
+    val mutated = valid.take(500).map { s =>
+      val i = rnd.nextInt(s.length)
+      s.updated(i, "0123456789-:TZ.+x"(rnd.nextInt(17)))
+    }
+    def parse(f: String => Long, s: String): Either[Class[_], Long] =
+      try Right(f(s)) catch { case e: Exception => Left(e.getClass) }
+    def reference(s: String) = {
+      val i = java.time.Instant.parse(s)
+      i.getEpochSecond * 1000000L + i.getNano / 1000L
+    }
+    val all = valid ++ edges ++ mutated
+    all.count(s => parse(reference, s).isLeft) should be > 30
+    for (s <- all) withClue(s) { parse(XmlAttrs.micros, s) shouldBe parse(reference, s) }
   }
 
   test("malformed timestamps and markup fail naming the file and line") {

@@ -117,6 +117,7 @@ class OsmChangeSpec extends AnyFunSuite with Matchers with SparkSpec {
       OsmChange.read(spark, f).collect()
     }
     ex.getMessage should include("does not appear to be an osmChange file")
+    ex.getMessage should include(s"$f at line 1")
   }
 
   test("malformed timestamps and markup fail naming the file and line") {

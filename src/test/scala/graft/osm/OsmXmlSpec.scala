@@ -98,6 +98,7 @@ class OsmXmlSpec extends AnyFunSuite with Matchers with SparkSpec {
       content = "<osmChange><create><node id=\"1\"/></create></osmChange>")
     val e = intercept[SparkException] { OsmXml.read(spark, f).count() }
     e.getMessage should include("does not appear to be an osm")
+    e.getMessage should include(s"$f at line 1")
   }
 
   test("xml convert path lands the planet ORC table (the --xml CLI branch)") {
@@ -123,6 +124,7 @@ class OsmXmlSpec extends AnyFunSuite with Matchers with SparkSpec {
       content = """<osm><changeset id="42" open="false"/></osm>""")
     val e = intercept[SparkException] { OsmXml.read(spark, f).count() }
     e.getMessage should include("changeset dump")
+    e.getMessage should include(s"$f at line 1")
   }
 
   test("same entities through osm-xml equal osm-osc rows minus op") {

@@ -4,7 +4,7 @@
 Usage (from the root of a checkout):
 
     python3 tools/bench_ab.py PARENT --seeds 601,602,603 \
-        [--workloads ingest,query] [--seconds S] [--keep]
+        [--workloads ingest,query] [--seconds S] [--keep] [--claim METRIC@WORKLOAD]
 
 Exports PARENT's committed files (`git archive`) into a fresh directory
 under the system temp dir ($TMPDIR, else /tmp), then, for each seed and
@@ -29,6 +29,12 @@ end unless --keep is given.
 Ends with a verdict line and exits 1 when any metric is marked WORSE, when
 the change side has more failed ops than the parent side, or when a
 change-side run failed; else exits 0.
+
+`--claim pass_s@ingest` also judges a claimed gain on one end-to-end
+metric of one workload: CLAIM MET when the change wins at least nine
+tenths of the pairs (ties count for neither side) and its median is
+better than the parent's by more than the parent's quartile distance
+(q3 - q1); else CLAIM NOT MET, and the exit code is 1.
 """
 import argparse
 import json
@@ -83,6 +89,21 @@ def quartiles(xs):
     return q[0], q[2]
 
 
+def judge_claim(par, chg, lower=True):
+    """(met, reason) for a claimed gain: the change wins >= 9/10 of the
+    pairs and the medians differ, in its favour, by more than the parent's
+    quartile distance."""
+    n = len(par)
+    wins = sum(1 for x, y in zip(par, chg) if (y < x if lower else y > x))
+    q1, q3 = quartiles(par)
+    gain = statistics.median(par) - statistics.median(chg)
+    if not lower:
+        gain = -gain
+    met = n > 0 and 10 * wins >= 9 * n and gain > q3 - q1
+    return met, (f"{wins}/{n} pairs won (need 9/10), median gain {gain:.4g} "
+                 f"against parent quartile distance {q3 - q1:.4g}")
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("parent")
@@ -90,6 +111,7 @@ def main():
     ap.add_argument("--workloads", help="comma-separated; default: all in BENCHMARK.json")
     ap.add_argument("--seconds", type=float)
     ap.add_argument("--keep", action="store_true", help="keep the parent copy")
+    ap.add_argument("--claim", help="METRIC@WORKLOAD whose gain is claimed, e.g. pass_s@ingest")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -98,6 +120,13 @@ def main():
     seconds = a.seconds if a.seconds is not None else spec["run_seconds"]
     seeds = [int(s) for s in a.seeds.split(",")]
     metrics = spec["end_to_end"]
+    claim = None
+    if a.claim:
+        name, _, wl = a.claim.partition("@")
+        claim = next((m for m in metrics if m["name"] == name), None)
+        if claim is None or wl not in workloads:
+            ap.error(f"--claim {a.claim}: no end-to-end metric {name!r} on a run workload")
+        claim_workload = wl
 
     parent_dir = tempfile.mkdtemp(prefix="bench_ab-")
     print(f"parent {a.parent} exported to {parent_dir}", flush=True)
@@ -166,11 +195,26 @@ def main():
             problems.append(f"{w}: {failed['change']} failed ops on the change side, "
                             f"{failed['parent']} on the parent side")
 
+    claim_met = True
+    if claim:
+        pairs = [(p, c) for (_, p), (_, c) in zip(results[claim_workload]["parent"],
+                                                  results[claim_workload]["change"])
+                 if p is not None and c is not None]
+        name = claim["name"]
+        claim_met, why = judge_claim([p["metrics"][name]["value"] for p, _ in pairs],
+                                     [c["metrics"][name]["value"] for _, c in pairs],
+                                     claim["better"] == "lower")
+        print()
+        print(f"claim {name}@{claim_workload}: {'CLAIM MET' if claim_met else 'CLAIM NOT MET'}"
+              f" ({why})")
+
     print()
     if problems:
         print("verdict: WORSE: " + "; ".join(problems))
         sys.exit(1)
     print("verdict: no end-to-end metric worse than its bound, no extra failures")
+    if not claim_met:
+        sys.exit(1)
 
 
 if __name__ == "__main__":
