@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -16,11 +14,10 @@ import org.apache.spark.sql.SparkSession
   *    spikes (BASELINE.md BENCH_NOTES r3/r4 document the floor); the
   *    min of two independent materializations of an identical plan is
   *    the engine's cost, the max is the host's;
-  *  - a THIRD pass for the canonicalize cache family only (round-5;
-  *    p09 joined in round-7): d06/d08/d11/p06/p09 each recompute the
-  *    full ~3.5-4 s pipeline under
-  *    per-query cache isolation, so they dominate total variance — one
-  *    extra sample there buys the most noise rejection per second of
+  *  - a THIRD pass for the queries declared `resample` (d06/d08/d11/
+  *    p06/p09): each recomputes the full ~3.5-4 s canonicalize pipeline
+  *    under per-query cache isolation, so they dominate total variance —
+  *    one extra sample there buys the most noise rejection per second of
   *    bench time;
   *  - per-query MEDIANS are emitted alongside the mins ("medians" key)
   *    so repo-local runs and driver runs can be compared on a statistic
@@ -60,13 +57,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Verify.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     def materialize(name: String, dir: String): Double = {
@@ -84,24 +75,15 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // the queries that recompute the full canonicalize pipeline
-    // under per-query cache isolation — the dominant variance source,
-    // worth one extra sample each
-    val cacheFamily = Set("d06_canonicalize", "d08_canonical_best",
-      "d11_cluster_stats", "p06_dedup_budget", "p09_cluster_split")
-
     // optional args: restrict to the named queries (dev iteration on a
-    // hot spot without re-timing the whole surface); unknown names fail
-    // fast like Verify's filter
+    // hot spot without re-timing the whole surface)
     val only: Set[String] = args.toSet
-    require((only -- SparkEntry.queries.keySet).isEmpty,
-      s"unknown queries: ${(only -- SparkEntry.queries.keySet).mkString(", ")}")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only.contains(n))
+    val selected = SparkEntry.select(only)
+    val names = selected.map(_.name)
     names.foreach(materialize(_, warmDir)) // warmup, untimed
     def timed(): Seq[(String, Double)] = names.map(n => n -> materialize(n, sfDir))
     val (pass1, pass2) = (timed(), timed())
-    val pass3 = names.filter(cacheFamily).map(n => n -> materialize(n, sfDir)).toMap
+    val pass3 = selected.filter(_.resample).map(q => q.name -> materialize(q.name, sfDir)).toMap
     val samples: Seq[(String, Seq[Double])] = pass1.zip(pass2).map {
       case ((n, a), (_, b)) => n -> (Seq(a, b) ++ pass3.get(n))
     }

@@ -2,16 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{Bpe, Dedup, Multimodal, Relational, Sampling, Similarity, TextAnalysis, Unigram}
+import graft.operators.{DedupQueries, MultimodalQueries, Relational, RelationalQueries,
+  SamplingQueries, SimilarityQueries, TextQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every operator in SURVEY.md §2B (plus the §2B-extensions) is exposed
-  * twice: as a Spark DataFrame builder in [[queries]] and as equivalent
-  * ANSI SQL for the DuckDB oracle in [[oracleSql]]. Column names and
-  * types are aligned pair-by-pair; every double-valued aggregate is
-  * rounded at (or finer than) the decimal grid of its exact value so
-  * summation order can never flip a comparison.
+  * Every query is declared once, beside its operator family, as a
+  * [[Query]]: name, DataFrame builder and gate (DuckDB oracle SQL, or
+  * the specs that check it when no SQL can). [[queries]] and
+  * [[oracleSql]] are derived from that one list.
   */
 object SparkEntry {
 
@@ -19,8098 +18,29 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // —— §2B relational surface (the reference's published workload) ——
-    "q01_pricing_summary" -> (Relational.pricingSummary _),
-    "q02_range_filter" -> (Relational.rangeFilter _),
-    "q03_like_filter" -> (Relational.likeFilter _),
-    "q04_map_tags" -> (Relational.mapTags _),
-    "q05_unnest_ordinality" -> (Relational.unnestOrdinality _),
-    "q06_reassemble_join" -> (Relational.reassembleJoin _),
-    "q07_latest_version" -> (Relational.latestVersion _),
-    "q07_latest_version_win" -> (Relational.latestVersionWindow _),
-    "q08_arbitrary" -> (Relational.arbitraryPerGroup _),
-    "q09_month_trunc" -> (Relational.monthlyActivity _),
-    "q10_union_all" -> (Relational.unionBranches _),
-    "q11_case_order" -> (Relational.caseOrderedAgg _),
-    "q12_window_lag" -> (Relational.windowLag _),
-    "q13_topn_per_group" -> (Relational.topNPerGroup _),
-    "q14_exists_anti" -> (Relational.existsAnti _),
-    "q15_regex_extract" -> (Relational.regexExtract _),
-    "q16_daily_windows" -> (Relational.dailyEventWindows _),
-    "q17_rollup" -> (Relational.rollupAgg _),
-    "q30_grouping_sets" -> (Relational.groupingSetsAgg _),
-    "q18_setops" -> (Relational.setOps _),
-    "q19_topk_limit" -> (Relational.topKLimit _),
-    "q20_json_extract" -> (Relational.jsonExtract _),
-    "q21_scalar_pack" -> (Relational.scalarPack _),
-    "q22_approx_distinct" -> (Relational.approxDistinct _),
-    "q37_kmv_distinct" -> ((s: SparkSession, d: String) => Relational.kmvDistinct(s, d)),
-    "q38_hll_distinct" -> (Relational.hllDistinct _),
-    "q39_table_profile" -> (Relational.tableProfile _),
-    "q40_fk_audit" -> (Relational.fkAudit _),
-    "q41_exact_kth" -> ((s: SparkSession, d: String) => Relational.exactKth(s, d)),
-    "q42_scd2_intervals" -> (Relational.scd2Intervals _),
-    "q43_incremental_agg" -> ((s: SparkSession, d: String) => Relational.incrementalAgg(s, d)),
-    "q44_kmv_setops" -> ((s: SparkSession, d: String) => Relational.kmvSetOps(s, d)),
-    "q45_funnel" -> ((s: SparkSession, d: String) => Relational.funnelSteps(s, d)),
-    "q46_robust_outliers" -> ((s: SparkSession, d: String) =>
-      Relational.robustOutliers(s, d)),
-    "q47_equidepth_hist" -> ((s: SparkSession, d: String) =>
-      Relational.equiDepthHistogram(s, d)),
-    "q48_group_trend" -> ((s: SparkSession, d: String) =>
-      Relational.groupTrend(s, d)),
-    "q49_gap_chains" -> ((s: SparkSession, d: String) =>
-      Relational.gapChains(s, d)),
-    "q50_cusum" -> ((s: SparkSession, d: String) =>
-      Relational.cusumChart(s, d)),
-    "q51_bitmap_overlap" -> (Relational.bitmapOverlap _),
-    "q52_range_window" -> (Relational.trailingRangeWindow _),
-    "q53_merge_upsert" -> (Relational.mergeUpsert _),
-    "q54_pit_join" -> (Relational.pitJoin _),
-    "q55_join_skew" -> ((s: SparkSession, d: String) =>
-      Relational.joinSkewAdvisor(s, d)),
-    "q56_ks_drift" -> (Relational.ksDrift _),
-    "q57_transitions" -> (Relational.eventTransitions _),
-    "q58_multi_touch" -> ((s: SparkSession, d: String) =>
-      Relational.multiTouchAttribution(s, d)),
-    "q60_interval_islands" -> (Relational.intervalIslands _),
-    "q61_lorenz_gini" -> ((s: SparkSession, d: String) =>
-      Relational.lorenzGini(s, d)),
-    "q62_theil" -> (Relational.theilIndex _),
-    "q63_benford" -> (Relational.benfordAudit _),
-    "q64_corr_audit" -> (Relational.corrAudit _),
-    "q65_ewma" -> (Relational.ewmaSmooth _),
-    "q67_theil_l" -> (Relational.theilL _),
-    "p23_match_distribution" -> ((s: SparkSession, d: String) =>
-      Sampling.matchDistribution(s, d)),
-    "s42_assortativity" -> ((s: SparkSession, d: String) =>
-      Similarity.degreeAssortativity(s, d)),
-    "s43_label_assortativity" -> ((s: SparkSession, d: String) =>
-      Similarity.labelAssortativity(s, d)),
-    "s44_knn_artifact" -> (Similarity.knnArtifactGate _),
-    "q66_benford2" -> (Relational.benford2Audit _),
-    "q59_session_paths" -> ((s: SparkSession, d: String) =>
-      Relational.sessionPaths(s, d)),
-    "p19_temperature_mix" -> ((s: SparkSession, d: String) =>
-      Sampling.temperatureMix(s, d)),
-    "p20_split_quota" -> ((s: SparkSession, d: String) =>
-      Sampling.splitQuota(s, d)),
-    "d28_lsh_recall" -> ((s: SparkSession, d: String) =>
-      Dedup.lshRecallCurve(s, d)),
-    "d29_embed_lsh_recall" -> ((s: SparkSession, d: String) =>
-      Dedup.embedLshRecallCurve(s, d)),
-    "d30_suffix_repeats" -> ((s: SparkSession, d: String) =>
-      Dedup.suffixRepeats(s, d)),
-    "d31_suffix_scrub" -> ((s: SparkSession, d: String) =>
-      Dedup.suffixScrub(s, d)),
-    "d33_weighted_jaccard" -> ((s: SparkSession, d: String) =>
-      Dedup.weightedJaccard(s, d)),
-    "q23_percentiles" -> (Relational.percentiles _),
-    "q24_cube" -> (Relational.cubeAgg _),
-    "q25_pivot" -> (Relational.pivotStatus _),
-    "q26_window_frames" -> (Relational.windowFrames _),
-    "q31_correlated_scalar" -> (Relational.correlatedScalar _),
-    "q32_rank_variants" -> (Relational.rankVariants _),
-    "q33_lateral_topn" -> (Relational.lateralTopN _),
-    "q34_cohort_retention" -> (Relational.cohortRetention _),
-    // —— extensions: dedup ——
-    "d01_dedup_exact" -> (Dedup.exact _),
-    "d02_ngram_jaccard" -> ((s: SparkSession, d: String) => Dedup.ngramJaccard(s, d)),
-    "d34_winnowing" -> ((s: SparkSession, d: String) =>
-      Dedup.winnowFingerprints(s, d)),
-    "d35_bbit_minhash" -> ((s: SparkSession, d: String) =>
-      Dedup.bbitMinHash(s, d)),
-    "d36_tfidf_cosine" -> ((s: SparkSession, d: String) =>
-      Dedup.tfidfCosine(s, d)),
-    "d03_minhash_lsh" -> (Dedup.minHashLsh _),
-    "d09_minhash_estimate" -> (Dedup.minHashEstimate _),
-    "d03_minhash_lsh_hashed" -> (Dedup.minHashLshHashed _),
-    "d04_simhash" -> (Dedup.simHash _),
-    "d04_simhash_pairs" -> ((s: SparkSession, d: String) => Dedup.simHashPairs(s, d)),
-    "d04_simhash_pairs_hashed" -> ((s: SparkSession, d: String) => Dedup.simHashPairsHashed(s, d)),
-    "d05_embed_neardup" -> ((s: SparkSession, d: String) => Dedup.embeddingNearDup(s, d)),
-    "d06_canonicalize" -> ((s: SparkSession, d: String) => Dedup.canonicalize(s, d)),
-    "d37_canon_artifact" -> (Dedup.canonArtifactGate _),
-    "d08_canonical_best" -> ((s: SparkSession, d: String) => Dedup.canonicalizeBest(s, d)),
-    "d10_passage_dedup" -> ((s: SparkSession, d: String) => Dedup.passageDedup(s, d)),
-    "d11_cluster_stats" -> ((s: SparkSession, d: String) => Dedup.clusterStats(s, d)),
-    "d12_incremental_overlap" -> ((s: SparkSession, d: String) => Dedup.incrementalOverlap(s, d)),
-    "d21_incremental_sharded" -> ((s: SparkSession, d: String) => Dedup.incrementalOverlapSharded(s, d)),
-    "d22_mutual_knn" -> ((s: SparkSession, d: String) => Dedup.mutualKnnCanonicalize(s, d)),
-    "d23_jaccard_prefix" -> ((s: SparkSession, d: String) => Dedup.jaccardPrefixJoin(s, d)),
-    "d24_dbscan" -> ((s: SparkSession, d: String) => Dedup.dbscan(s, d)),
-    "d25_edit_join" -> ((s: SparkSession, d: String) => Dedup.editDistanceJoin(s, d)),
-    "d26_containment" -> ((s: SparkSession, d: String) => Dedup.containmentJoin(s, d)),
-    "d27_edit_segments" -> ((s: SparkSession, d: String) => Dedup.editDistanceJoinSegments(s, d)),
-    "d13_embed_neardup_lsh" -> ((s: SparkSession, d: String) => Dedup.embeddingNearDupLsh(s, d)),
-    "d14_embed_neardup_multiprobe" -> ((s: SparkSession, d: String) => Dedup.embeddingNearDupMultiProbe(s, d)),
-    "d15_semdedup" -> ((s: SparkSession, d: String) => Dedup.semDedup(s, d)),
-    "d16_incremental_embed" -> ((s: SparkSession, d: String) => Dedup.incrementalEmbedOverlap(s, d)),
-    "d17_repeated_spans" -> ((s: SparkSession, d: String) => Dedup.repeatedSpans(s, d)),
-    // r13-opt: gate the spans-materialized variant — identical rows
-    // (SpanScrubSpec pins cached == plan-only), half the tokenize+md5
-    // cost per action; the plan-only form stays as the composable API
-    "d18_span_scrub" -> ((s: SparkSession, d: String) => Dedup.spanScrubCached(s, d)),
-    "d19_corpus_diff" -> ((s: SparkSession, d: String) => Dedup.corpusDiff(s, d)),
-    "d20_source_overlap" -> ((s: SparkSession, d: String) => Dedup.sourceOverlap(s, d)),
-    // —— extensions: similarity search ——
-    "s01_ann_bruteforce" -> (Similarity.annBruteForce _),
-    "s02_ann_lsh" -> ((s: SparkSession, d: String) => Similarity.annLsh(s, d)),
-    "s03_ann_ivf" -> ((s: SparkSession, d: String) => Similarity.annIvf(s, d)),
-    "s04_centroids" -> ((s: SparkSession, d: String) => Similarity.centroids(s, d)),
-    "s05_assign_centroids" -> ((s: SparkSession, d: String) => Similarity.assignToCentroids(s, d)),
-    "s06_ann_multiprobe" -> ((s: SparkSession, d: String) => Similarity.annMultiProbe(s, d)),
-    "s07_matryoshka" -> ((s: SparkSession, d: String) => Similarity.annMatryoshka(s, d)),
-    "s08_rrf_fusion" -> ((s: SparkSession, d: String) => Similarity.rrfFusion(s, d)),
-    "s09_ann_int8" -> ((s: SparkSession, d: String) => Similarity.annInt8(s, d)),
-    "s10_ann_pq" -> ((s: SparkSession, d: String) => Similarity.annPq(s, d)),
-    "s11_corpus_clusters" -> ((s: SparkSession, d: String) => Similarity.corpusClusters(s, d)),
-    "s12_embed_outliers" -> ((s: SparkSession, d: String) => Similarity.embedOutliers(s, d)),
-    "s13_ann_recall" -> ((s: SparkSession, d: String) => Similarity.annRecall(s, d)),
-    "s14_ann_filtered" -> ((s: SparkSession, d: String) => Similarity.annFiltered(s, d)),
-    "s15_ann_ivfpq" -> ((s: SparkSession, d: String) => Similarity.annIvfPq(s, d)),
-    "s16_knn_graph" -> ((s: SparkSession, d: String) => Similarity.knnGraph(s, d)),
-    "s18_ann_beam" -> ((s: SparkSession, d: String) => Similarity.annBeam(s, d)),
-    "s19_ann_mmr" -> ((s: SparkSession, d: String) => Similarity.annMmr(s, d)),
-    "s20_ann_binary" -> ((s: SparkSession, d: String) => Similarity.annBinary(s, d)),
-    "s21_pagerank" -> ((s: SparkSession, d: String) => Similarity.pageRank(s, d)),
-    "s38_ppr" -> ((s: SparkSession, d: String) =>
-      Similarity.personalizedPageRank(s, d)),
-    "s39_hits" -> ((s: SparkSession, d: String) => Similarity.hits(s, d)),
-    "s40_hard_negatives" -> ((s: SparkSession, d: String) =>
-      Similarity.hardNegatives(s, d)),
-    "s41_rocchio" -> ((s: SparkSession, d: String) =>
-      Similarity.rocchioExpand(s, d)),
-    "s22_kcenter" -> ((s: SparkSession, d: String) => Similarity.kCenter(s, d)),
-    "s17_ann_ivfpq_res" -> ((s: SparkSession, d: String) => Similarity.annIvfPq(s, d, residual = true)),
-    "s23_triangles" -> ((s: SparkSession, d: String) => Similarity.triangleCounts(s, d)),
-    "s24_labelprop" -> ((s: SparkSession, d: String) => Similarity.labelPropagation(s, d)),
-    "s25_kcore" -> ((s: SparkSession, d: String) => Similarity.kCorePeel(s, d)),
-    "s26_link_pred" -> ((s: SparkSession, d: String) => Similarity.linkPrediction(s, d)),
-    "s27_knn_classify" -> ((s: SparkSession, d: String) => Similarity.knnClassify(s, d)),
-    "s29_bfs_hops" -> ((s: SparkSession, d: String) =>
-      Similarity.bfsHops(s, d)),
-    "s30_ann_mrr" -> (Similarity.annMrr _),
-    "s31_ivf_refresh" -> ((s: SparkSession, d: String) =>
-      Similarity.annIvfRefresh(s, d)),
-    "s32_cell_drift" -> ((s: SparkSession, d: String) =>
-      Similarity.cellDrift(s, d)),
-    "s28_ivf_recall_curve" -> ((s: SparkSession, d: String) =>
-      Similarity.ivfRecallCurve(s, d)),
-    "s33_silhouette" -> ((s: SparkSession, d: String) =>
-      Similarity.silhouette(s, d)),
-    "s34_cluster_purity" -> ((s: SparkSession, d: String) =>
-      Similarity.clusterPurity(s, d)),
-    "s35_cluster_report" -> ((s: SparkSession, d: String) =>
-      Similarity.clusterReport(s, d)),
-    "s37_ann_rpforest" -> ((s: SparkSession, d: String) =>
-      Similarity.annRpForest(s, d)),
-    "s36_ann_rptree" -> ((s: SparkSession, d: String) =>
-      Similarity.annRpTree(s, d)),
-    // —— extensions: text analysis ——
-    "t01_text_stats" -> (TextAnalysis.textStats _),
-    "t02_lang_id" -> (TextAnalysis.langId _),
-    "t03_fingerprint" -> (TextAnalysis.fingerprint _),
-    "t04_langid_char_ngram" -> (TextAnalysis.langIdCharNgram _),
-    "t05_bpe_tokens" -> (TextAnalysis.bpeTokenCount _),
-    "t06_repetition" -> (TextAnalysis.repetition _),
-    "t07_top_ngrams" -> ((s: SparkSession, d: String) => TextAnalysis.topNgrams(s, d)),
-    "t08_token_rarity" -> (TextAnalysis.tokenRarity _),
-    "t09_ngram_novelty" -> (TextAnalysis.ngramNovelty _),
-    "t10_inverted_index" -> ((s: SparkSession, d: String) => TextAnalysis.invertedIndex(s, d)),
-    "t11_bm25" -> (TextAnalysis.bm25 _),
-    "t12_langid_eval" -> (TextAnalysis.langIdEval _),
-    "t13_token_drift" -> ((s: SparkSession, d: String) => TextAnalysis.tokenDrift(s, d)),
-    "t14_pii_scrub" -> (TextAnalysis.piiScrub _),
-    "t15_boilerplate" -> ((s: SparkSession, d: String) => TextAnalysis.boilerplateRemove(s, d)),
-    "t16_quality_classifier" -> ((s: SparkSession, d: String) => TextAnalysis.qualityClassifier(s, d)),
-    "t17_token_gini" -> (TextAnalysis.tokenGini _),
-    "t18_corpus_report" -> (TextAnalysis.corpusReport _),
-    "t19_gopher_rules" -> ((s: SparkSession, d: String) => TextAnalysis.gopherRules(s, d)),
-    "t20_bigram_lm" -> (TextAnalysis.bigramLm _),
-    // learned-BPE token stats: the merge list is the fixed point of an
-    // iterated argmax — not SQL-expressible, so rows-only at the gate
-    // (the third and last such entry); BpeSpec proves the distributed
-    // learner merge-for-merge equal to a sequential reference and
-    // recomputes the gated counts per doc
-    "t21_learned_bpe" -> ((s: SparkSession, d: String) => Bpe.tokenStats(s, d)),
-    "t22_bpe_merges" -> ((s: SparkSession, d: String) => Bpe.learnedMerges(s, d)),
-    "t23_perplexity_bucket" -> ((s: SparkSession, d: String) => TextAnalysis.perplexityBucket(s, d)),
-    "t24_cdc_chunks" -> ((s: SparkSession, d: String) => TextAnalysis.cdcChunks(s, d)),
-    "t25_countmin" -> ((s: SparkSession, d: String) => TextAnalysis.countMin(s, d)),
-    "t26_heavy_hitters" -> (TextAnalysis.heavyHittersGate _),
-    "t27_pmi_colloc" -> ((s: SparkSession, d: String) => TextAnalysis.pmiCollocations(s, d)),
-    "t28_textrank" -> ((s: SparkSession, d: String) => TextAnalysis.textRankKeywords(s, d)),
-    "t29_trigram_backoff" -> ((s: SparkSession, d: String) => TextAnalysis.trigramBackoff(s, d)),
-    "t30_span_corrupt" -> ((s: SparkSession, d: String) => TextAnalysis.spanCorrupt(s, d)),
-    "t31_rake_keywords" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.rakeKeywords(s, d)),
-    "t32_vocab_growth" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.vocabGrowth(s, d)),
-    "t33_wordpiece" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.wordPieceEncode(s, d)),
-    "t35_kn_bigram" -> (TextAnalysis.knBigramLm _),
-    "t36_normalize" -> (TextAnalysis.normalizeText _),
-    "t37_url_domains" -> (TextAnalysis.urlDomainStats _),
-    "t38_good_turing" -> (TextAnalysis.goodTuring _),
-    "t39_feature_hash" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.featureHash(s, d)),
-    "t40_chi2_keyness" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.chi2Keyness(s, d)),
-    "t41_burstiness" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.burstiness(s, d)),
-    "t42_kwic" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.kwic(s, d)),
-    "t43_dice_colloc" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.diceCollocations(s, d)),
-    "t44_unigram_vocab" -> (Unigram.trainedVocab _),
-    "t45_unigram_encode" -> (Unigram.encodeTable _),
-    "t46_zipf_fit" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.zipfFit(s, d)),
-    "t47_js_drift" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.jsDrift(s, d)),
-    "t48_vocab_richness" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.vocabRichness(s, d)),
-    "t49_tfidf_terms" -> ((s: SparkSession, d: String) =>
-      TextAnalysis.tfidfTerms(s, d)),
-    "d07_decontaminate" -> ((s: SparkSession, d: String) => TextAnalysis.decontaminate(s, d)),
-    "q27_sessionize_batch" -> (Relational.sessionizeBatch _),
-    "q28_asof_join" -> (Relational.asofJoin _),
-    "q29_range_join" -> (Relational.rangeJoin _),
-    // the streaming interval join's batch twin: the IDENTICAL plan
-    // (withWatermark is a no-op in batch), projected to integer micros
-    // because the raw event timestamps carry sub-microsecond precision
-    // the engine's TimestampType truncates
-    "q35_interval_attribution" -> ((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.functions._
-      graft.streaming.EventStream.intervalJoinStream(
-          Tables.events(s, d), maxDelayMin = 720)
-        .select(col("user_id"), col("a_id"), col("b_id"),
-          unix_micros(col("a_ts")).as("a_us"), unix_micros(col("b_ts")).as("b_us"),
-          col("a_value"), col("b_value"))
-        .orderBy(col("a_id"), col("b_id"))
-    }),
-    // q35's left-outer complement: views the watermark proved
-    // unattributed — in batch, left-outer + null-filter IS the
-    // oracle's NOT EXISTS over the interval
-    "q36_unattributed_views" -> ((s: SparkSession, d: String) => {
-      import org.apache.spark.sql.functions._
-      graft.streaming.EventStream.unattributedStream(
-          Tables.events(s, d), maxDelayMin = 720)
-        .select(col("user_id"), col("a_id"),
-          unix_micros(col("a_ts")).as("a_us"), col("a_value"))
-        .orderBy(col("a_id"))
-    }),
-    // —— extensions: multimodal plumbing ——
-    "m01_media_meta" -> (Multimodal.mediaMeta _),
-    "m02_frame_hashes" -> ((s: SparkSession, d: String) => Multimodal.frameHashes(s, d)),
-    "m03_media_neardup" -> ((s: SparkSession, d: String) => Multimodal.mediaNearDup(s, d)),
-    "m04_frame_df" -> ((s: SparkSession, d: String) => Multimodal.frameDf(s, d)),
-    "m05_raster_gate" -> (Multimodal.rasterChecksumGate _),
-    "m06_perceptual_gate" -> (Multimodal.perceptualGate _),
-    "m07_audio_gate" -> (Multimodal.pcmGate _),
-    "m30_silence_trim" -> (Multimodal.silenceTrimGate _),
-    "m31_hist_equalize" -> (Multimodal.histEqualizeGate _),
-    "m36_otsu" -> (Multimodal.otsuGate _),
-    "m37_sobel" -> (Multimodal.sobelGate _),
-    "m38_cc_label" -> (Multimodal.ccLabelGate _),
-    "m39_hist_entropy" -> (Multimodal.histEntropyGate _),
-    "m40_otsu2" -> (Multimodal.otsu2Gate _),
-    "m32_patchify" -> (Multimodal.patchifyGate _),
-    "m33_rle_signal" -> (Multimodal.rleSignalGate _),
-    "m34_dither" -> (Multimodal.orderedDitherGate _),
-    "m35_glcm" -> (Multimodal.glcmGate _),
-    "m08_audio_fingerprint" -> (Multimodal.audioFingerprintGate _),
-    "m09_audio_neardup" -> ((s: SparkSession, d: String) => Multimodal.audioNearDup(s, d)),
-    "m10_resize_gate" -> (Multimodal.resizeGate _),
-    "m11_png_gate" -> (Multimodal.pngChecksumGate _),
-    "m12_gif_gate" -> (Multimodal.gifChecksumGate _),
-    "m13_png_rgb_gate" -> (Multimodal.pngRgbChecksumGate _),
-    "m14_codec_meta" -> (Multimodal.codecMetaGate _),
-    "m15_png_palette_gate" -> (Multimodal.pngPaletteChecksumGate _),
-    "m17_png_adam7_gate" -> (Multimodal.pngAdam7ChecksumGate _),
-    "m18_bmp_rle_gate" -> (Multimodal.bmpRleChecksumGate _),
-    "m16_exif_meta" -> (Multimodal.exifMetaGate _),
-    "m19_tiff_gate" -> (Multimodal.tiffChecksumGate _),
-    "m20_g711_gate" -> (Multimodal.g711Gate _),
-    "m21_id3_gate" -> (Multimodal.id3Gate _),
-    "m22_resample_gate" -> (Multimodal.resamplePcmGate _),
-    "m24_autocorr_gate" -> (Multimodal.autocorrGate _),
-    "m25_webp_gate" -> (Multimodal.webpMetaGate _),
-    "m26_qoi_gate" -> (Multimodal.qoiChecksumGate _),
-    "m27_orient_gate" -> (Multimodal.orientGate _),
-    "m28_gif_anim_gate" -> (Multimodal.gifAnimGate _),
-    "m29_downmix_gate" -> (Multimodal.downmixGate _),
-    "m23_png16_gate" -> (Multimodal.png16ChecksumGate _),
-    // —— extensions: corpus sampling / data mixing ——
-    "p01_hash_sample" -> ((s: SparkSession, d: String) => Sampling.hashSample(s, d)),
-    "p02_stratified_sample" -> ((s: SparkSession, d: String) => Sampling.stratifiedSample(s, d)),
-    "p03_token_budget" -> ((s: SparkSession, d: String) => Sampling.tokenBudget(s, d)),
-    "p04_mixture_weights" -> (Sampling.mixtureWeights _),
-    "p21_clean_mixture" -> (Sampling.cleanMixture _),
-    "p22_epoch_schedule" -> ((s: SparkSession, d: String) =>
-      Sampling.epochSchedule(s, d)),
-    "p05_apply_mixture" -> ((s: SparkSession, d: String) => Sampling.applyMixture(s, d)),
-    "p06_dedup_budget" -> ((s: SparkSession, d: String) => Sampling.dedupBudget(s, d)),
-    "p07_pack_sequences" -> ((s: SparkSession, d: String) => Sampling.packSequences(s, d)),
-    "p08_filtered_pack" -> ((s: SparkSession, d: String) => Sampling.filteredPack(s, d)),
-    "p09_cluster_split" -> ((s: SparkSession, d: String) => Sampling.clusterSplit(s, d)),
-    "p10_source_cap" -> ((s: SparkSession, d: String) => Sampling.sourceCap(s, d)),
-    "p11_seeded_shuffle" -> ((s: SparkSession, d: String) => Sampling.seededShuffle(s, d)),
-    "p12_cluster_sample" -> ((s: SparkSession, d: String) => Sampling.clusterSample(s, d)),
-    "p13_length_batches" -> ((s: SparkSession, d: String) => Sampling.lengthBatches(s, d)),
-    "p14_chunk_windows" -> ((s: SparkSession, d: String) => Sampling.chunkStride(s, d)),
-    "p15_weighted_sample" -> ((s: SparkSession, d: String) => Sampling.weightedSample(s, d)),
-    "p16_curriculum" -> ((s: SparkSession, d: String) => Sampling.curriculumOrder(s, d)),
-    "p17_interleave" -> ((s: SparkSession, d: String) => Sampling.weightedInterleave(s, d)),
-    "p18_unimax" -> ((s: SparkSession, d: String) => Sampling.unimaxAlloc(s, d)),
-    // —— the reference's own README workload over the committed
-    //    converted fixture (graft.osm.OsmFixture; SURVEY §5.3) ——
-    "o01_reassemble_ways" -> (osm.OsmOracle.reassembledWayPaths _),
-    "o02_latest_versions" -> (osm.OsmOracle.latestVersionRows _),
-    "o03_deleted_count" -> (osm.OsmOracle.deletedCounts _),
-    "o04_tag_usage_month" -> (osm.OsmOracle.tagUsagePerMonth _),
-    "o05_bbox_nodes" -> (osm.OsmOracle.bboxNodes _),
-    "o06_editor_counts" -> (osm.OsmOracle.editorCounts _),
-    "o07_changesets_bbox" -> (osm.OsmOracle.intersectingChangesets _),
-    "o08_tag_transitions" -> (osm.OsmOracle.amenityTransitions _),
-    "o09_all_geometries" -> (osm.OsmOracle.geometryPaths _),
-    "o10_commented_changesets" -> (osm.OsmOracle.commentedChangesets _),
-    "o11_discussion_comments" -> (osm.OsmOracle.discussionComments _),
-    "o12_pbf_latest_versions" -> (osm.OsmOracle.pbfLatestVersionRows _),
-    "o13_pbf_bbox_nodes" -> (osm.OsmOracle.pbfBboxNodes _),
-    "o14_pbf_tag_usage" -> (osm.OsmOracle.pbfTagUsagePerMonth _),
-    "o15_super_relations" -> (osm.OsmOracle.superRelationMembers _),
-    "o16_way_geom" -> (osm.OsmOracle.wayGeomStats _),
-    "o17_pbf_reassemble" -> (osm.OsmOracle.pbfReassembledWayPaths _),
-    "o18_pbf_members" -> (osm.OsmOracle.pbfRelationMembers _),
-    "o19_zorder_nodes" -> (osm.OsmOracle.zorderNodes _),
-    "o20_zrange_bbox" -> (osm.OsmOracle.zrangeBboxNodes _),
-    "o23_hilbert_nodes" -> (osm.OsmOracle.hilbertNodes _),
-    "o24_curve_locality" -> (osm.OsmOracle.curveLocality _),
-    "o25_changeset_impact" -> (osm.OsmOracle.changesetImpact _),
-    "o21_polygon_areas" -> (osm.OsmOracle.polygonAreas _),
-    "o22_polygon_centroids" -> (osm.OsmOracle.polygonCentroids _),
-    "o26_replication_table" -> (osm.OsmOracle.replicationMaintained _),
-    "o27_multipolygon_rings" -> (osm.OsmOracle.multipolygonRings _),
-  )
+  /** Every declared query, family by family. */
+  val all: Seq[Query] = RelationalQueries.all ++ DedupQueries.all ++
+    TextQueries.all ++ SimilarityQueries.all ++ SamplingQueries.all ++
+    MultimodalQueries.all ++ osm.OsmOracle.queries
 
-  /** DuckDB mirror of OsmQueries.multipolygonRings (o27): the same
-    * deterministic two-phase assembly as generated CTE rounds —
-    * `labelRounds` min-way-id label propagations over the shared-
-    * endpoint graph, then `walkRounds` ring-walk extensions carrying
-    * (refs, used, cur_end) as LIST columns, candidate picked per round
-    * by (way_id ASC, forward before reversed), reversal via
-    * list_reverse — then the o21 anchored shoelace over each stitched
-    * sequence. One algorithm, two engines (the s18/m38 iterative-chain
-    * discipline).
+  /** name → builder. Builds no oracle SQL. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
+
+  /** name → DuckDB SQL for every oracle-gated query; evaluates each
+    * declaration's SQL thunk on every call.
     */
-  private def multipolygonSql(labelRounds: Int, walkRounds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH mw AS (
-       |  SELECT DISTINCT r.id AS rel_id, r.members[i].role AS role,
-       |    r.members[i].ref AS way_id
-       |  FROM (SELECT id, members FROM $OsmP
-       |        WHERE type = 'relation' AND tags['type'][1] = 'multipolygon') r,
-       |       UNNEST(range(1, len(r.members) + 1)) AS t(i)
-       |  WHERE r.members[i].type = 'way'
-       |    AND r.members[i].role IN ('outer', 'inner')),
-       |wseq AS (SELECT id AS way_id, list_transform(nds, x -> x.ref) AS refs
-       |  FROM $OsmP WHERE type = 'way'),
-       |ways AS (SELECT mw.rel_id, mw.role, mw.way_id, w.refs,
-       |    w.refs[1] AS a, w.refs[len(w.refs)] AS b
-       |  FROM mw JOIN wseq w USING (way_id)),
-       |eps AS (SELECT DISTINCT rel_id, role, way_id, ep FROM
-       |  (SELECT rel_id, role, way_id, unnest([a, b]) AS ep FROM ways)),
-       |nbrs AS (SELECT DISTINCT x.rel_id, x.role, x.way_id, y.way_id AS nb
-       |  FROM eps x JOIN eps y
-       |  ON x.rel_id = y.rel_id AND x.role = y.role AND x.ep = y.ep),
-       |l0 AS (SELECT rel_id, role, way_id, way_id AS lbl FROM ways)""".stripMargin
-    for (r <- 1 to labelRounds) {
-      val p = s"l${r - 1}"
-      sb ++= s""",
-       |l$r AS MATERIALIZED (SELECT l.rel_id, l.role, l.way_id,
-       |    least(l.lbl, coalesce(m.mlbl, l.lbl)) AS lbl
-       |  FROM $p l LEFT JOIN (
-       |    SELECT n.rel_id, n.role, n.way_id, min(q.lbl) AS mlbl
-       |    FROM nbrs n JOIN $p q ON q.rel_id = n.rel_id
-       |      AND q.role = n.role AND q.way_id = n.nb
-       |    GROUP BY 1, 2, 3) m
-       |  ON m.rel_id = l.rel_id AND m.role = l.role
-       |    AND m.way_id = l.way_id)""".stripMargin
-    }
-    sb ++= s""",
-       |comp AS MATERIALIZED (SELECT w.rel_id, w.role, w.way_id, w.refs, w.a, w.b, l.lbl
-       |  FROM ways w JOIN l$labelRounds l
-       |  USING (rel_id, role, way_id)),
-       |w0 AS MATERIALIZED (SELECT rel_id, role, lbl, refs, [way_id] AS used,
-       |    refs[1] AS start_ref, refs[len(refs)] AS cur_end,
-       |    (refs[len(refs)] = refs[1] AND len(refs) >= 4) AS closed
-       |  FROM comp WHERE way_id = lbl)""".stripMargin
-    for (r <- 1 to walkRounds) {
-      val p = s"w${r - 1}"
-      sb ++= s""",
-       |cand$r AS (
-       |  SELECT s.rel_id, s.role, s.lbl, s.refs, s.used, s.start_ref,
-       |    c.way_id AS cw, c.refs AS crefs, c.a AS ca, c.b AS cb,
-       |    CASE WHEN c.a = s.cur_end THEN 0 ELSE 1 END AS dir,
-       |    row_number() OVER (PARTITION BY s.rel_id, s.role, s.lbl
-       |      ORDER BY c.way_id,
-       |        CASE WHEN c.a = s.cur_end THEN 0 ELSE 1 END) AS rn
-       |  FROM $p s JOIN comp c
-       |    ON c.rel_id = s.rel_id AND c.role = s.role AND c.lbl = s.lbl
-       |    AND NOT list_contains(s.used, c.way_id)
-       |    AND (c.a = s.cur_end OR c.b = s.cur_end)
-       |  WHERE NOT s.closed),
-       |ext$r AS (
-       |  SELECT rel_id, role, lbl, refs, used, start_ref, cur_end,
-       |    (cur_end = start_ref AND len(refs) >= 4) AS closed
-       |  FROM (SELECT rel_id, role, lbl,
-       |      list_concat(refs, CASE WHEN dir = 0 THEN crefs[2:]
-       |        ELSE list_reverse(crefs)[2:] END) AS refs,
-       |      list_append(used, cw) AS used, start_ref,
-       |      CASE WHEN dir = 0 THEN cb ELSE ca END AS cur_end
-       |    FROM cand$r WHERE rn = 1)),
-       |w$r AS MATERIALIZED (
-       |  SELECT s.* FROM $p s LEFT JOIN ext$r e
-       |    ON e.rel_id = s.rel_id AND e.role = s.role AND e.lbl = s.lbl
-       |  WHERE e.lbl IS NULL
-       |  UNION ALL SELECT * FROM ext$r)""".stripMargin
-    }
-    sb ++= s""",
-       |rings AS (SELECT rel_id, role, lbl, refs, closed,
-       |    CAST(row_number() OVER (PARTITION BY rel_id
-       |      ORDER BY role DESC, lbl) AS INT) AS ring_idx,
-       |    CAST(len(used) AS INT) AS n_ways
-       |  FROM w$walkRounds),
-       |rv AS (SELECT rel_id, ring_idx, i AS pos, refs[CAST(i AS INT)] AS ref
-       |  FROM rings, UNNEST(range(1, len(refs) + 1)) t(i)),
-       |mpnodes AS (SELECT id AS ref,
-       |    CAST(lat * 10000000 AS BIGINT) AS lat_nano,
-       |    CAST(lon * 10000000 AS BIGINT) AS lon_nano
-       |  FROM $OsmP WHERE type = 'node'),
-       |cen AS (SELECT rv.rel_id, rv.ring_idx, pos,
-       |    lon_nano - first_value(lon_nano) OVER pw AS cx,
-       |    lat_nano - first_value(lat_nano) OVER pw AS cy
-       |  FROM rv JOIN mpnodes n USING (ref)
-       |  WINDOW pw AS (PARTITION BY rv.rel_id, rv.ring_idx ORDER BY pos)),
-       |crx AS (SELECT rel_id, ring_idx, cx, cy,
-       |    lag(cx) OVER pw AS pcx, lag(cy) OVER pw AS pcy
-       |  FROM cen WINDOW pw AS (PARTITION BY rel_id, ring_idx ORDER BY pos)),
-       |geo AS (SELECT rel_id, ring_idx, CAST(count(*) AS BIGINT) AS n_pts,
-       |    CAST(sum(pcx * cy - cx * pcy) AS BIGINT) AS a2
-       |  FROM crx GROUP BY 1, 2)
-       |SELECT r.rel_id, r.ring_idx, r.role, r.n_ways, r.closed, g.n_pts,
-       |  CASE WHEN r.closed THEN abs(g.a2) END AS area2_nano,
-       |  CASE WHEN NOT r.closed THEN 'open'
-       |       WHEN g.a2 > 0 THEN 'CCW' WHEN g.a2 < 0 THEN 'CW'
-       |       ELSE 'degenerate' END AS orientation
-       |FROM rings r LEFT JOIN geo g USING (rel_id, ring_idx)
-       |ORDER BY r.rel_id, r.ring_idx""".stripMargin
-    sb.toString
+  def oracleSql: Map[String, String] =
+    all.collect { case Query(name, _, Oracle(sql), _) => name -> sql() }.toMap
+
+  /** The named declarations in name order, or every one when `names` is
+    * empty; an unknown name fails fast (a silent zero-match filter would
+    * run nothing and exit 0).
+    */
+  def select(names: Iterable[String]): Seq[Query] = {
+    val wanted = names.toSet
+    val unknown = wanted -- queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.filter(q => wanted.isEmpty || wanted(q.name)).sortBy(_.name)
   }
-
-  // The committed OSM fixture's canonical parquet location — embedded
-  // in the o-query oracle SQL (DuckDB reads the same converted bytes
-  // the Spark side reads; no view registration involved).
-  private val OsmP = s"read_parquet('${osm.OsmFixture.CanonicalDir}/planet/*.parquet')"
-  private val OsmH = s"read_parquet('${osm.OsmFixture.CanonicalDir}/planet_history/*.parquet')"
-  private val OsmC = s"read_parquet('${osm.OsmFixture.CanonicalDir}/changesets/*.parquet')"
-
-  // Canonical DuckDB tokenization — must stay in lockstep with
-  // graft.functions.Text.toks / Text.shingles.
-  private val Toks =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-
-  private def tkCte(where: String): String =
-    s"tk AS (SELECT doc_id, $Toks AS tk FROM documents $where)"
-
-  // Single source for the DuckDB 3-gram construction (lockstep with
-  // Text.shingles): position subquery + join-by-space gram expression.
-  private val GramPos =
-    "(SELECT doc_id, tk, unnest(range(1, greatest(len(tk) - 2, 0) + 1)) AS i FROM tk) t"
-  private val GramExpr =
-    "list_extract(tk, i) || ' ' || list_extract(tk, i+1) || ' ' || list_extract(tk, i+2)"
-
-  /** distinct (doc_id, shingle) pairs — set semantics (dedup operators). */
-  private val ShCte =
-    s"sh AS (SELECT DISTINCT doc_id, $GramExpr AS sh FROM $GramPos)"
-
-  /** every (doc_id, shingle) occurrence — bag semantics (frequency ops). */
-  private val ShxCte =
-    s"shx AS (SELECT doc_id, $GramExpr AS sh FROM $GramPos)"
-
-  private val DictCte =
-    "dict AS (SELECT sh, dense_rank() OVER (ORDER BY sh) AS sid FROM (SELECT DISTINCT sh FROM sh) dd)"
-
-  private val HashCte =
-    "h AS (SELECT i, 4097 + 7919*i AS a, 17 + 104729*i AS b FROM (SELECT unnest(range(0, 16)) AS i) hh)"
-
-  // First 4 hex chars of md5(text) as an integer (the Sampling selection
-  // key; Spark side uses conv(substring(md5, 1, 4), 16, 10)).
-  private def hexBucketCte(from: String,
-      cols: String = "doc_id, lang, source, text"): String =
-    s"""b AS (
-       |  SELECT $cols,
-       |    CAST((((strpos('0123456789abcdef', substr(md5(text), 1, 1)) - 1) * 16
-       |         + (strpos('0123456789abcdef', substr(md5(text), 2, 1)) - 1)) * 16
-       |         + (strpos('0123456789abcdef', substr(md5(text), 3, 1)) - 1)) * 16
-       |         + (strpos('0123456789abcdef', substr(md5(text), 4, 1)) - 1) AS BIGINT) AS hb
-       |  FROM $from
-       |)""".stripMargin
-
-  private val HexBucketCte = hexBucketCte("documents")
-
-  /** First `digits` hex chars of `expr` as a BIGINT — the p01 strpos
-    * idiom generalized to a Horner chain (DuckDB-portable hex→int
-    * without from_hex/bit casts).
-    */
-  private def hexIntSql(expr: String, digits: Int): String = {
-    val ds = (1 to digits).map(i =>
-      s"(strpos('0123456789abcdef', substr($expr, $i, 1)) - 1)")
-    "CAST(" + ds.reduceLeft((acc, x) => s"($acc * 16 + $x)") + " AS BIGINT)"
-  }
-
-  /** Shared CTE chain for d06/d08: shingle sets → exact Jaccard near
-    * edges + exact-dup edges → undirected closure → components with
-    * min-doc_id labels (the DuckDB mirror of GraphX CC).
-    */
-  private val CanonCtes: String =
-    s"""${tkCte("")},
-       |$ShCte,
-       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ic
-       |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2
-       |),
-       |near AS (
-       |  SELECT a, b FROM inter
-       |  JOIN sizes sa ON a = sa.doc_id JOIN sizes sb ON b = sb.doc_id
-       |  WHERE ic / (sa.n + sb.n - ic) >= 0.6
-       |),
-       |ex AS (
-       |  SELECT x.doc_id AS a, y.doc_id AS b
-       |  FROM documents x JOIN documents y ON x.text = y.text AND x.doc_id < y.doc_id
-       |),
-       |und AS (
-       |  SELECT a, b FROM near UNION SELECT b, a FROM near
-       |  UNION SELECT a, b FROM ex UNION SELECT b, a FROM ex
-       |),
-       |reach(s, t) AS (
-       |  SELECT a, b FROM und
-       |  UNION
-       |  SELECT r.s, u.b FROM reach r JOIN und u ON r.t = u.a
-       |),
-       |comp AS (SELECT s AS doc_id, least(s, min(t)) AS canonical_id FROM reach GROUP BY s)""".stripMargin
-
-  // Position-exploded embedding elements (cast to DOUBLE so products
-  // match Spark's double arithmetic bit-for-bit).
-  private def embCte(where: String): String =
-    s"""e AS (
-       |  SELECT vec_id, i, CAST(list_extract(embedding, i) AS DOUBLE) AS x
-       |  FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
-       |        FROM embeddings WHERE $where) t
-       |)""".stripMargin
-
-  /** DuckDB mirror of Similarity.annIvf's relational Lloyd quantizer:
-    * seed centroids = first k candidate vectors; each iteration is one
-    * integer-grid argmin assignment (d_i/a_i) and one exact integer
-    * re-average (c_{i+1}); cells/probes rank against the final c_iters.
-    * All quantizer arithmetic is order-free integer sums, so the CTE
-    * chain hash-matches the Spark plan bit-for-bit.
-    */
-  /** The s10 per-subspace Lloyd chain (ivfCtes with `sub` joining every
-    * key): seed codebook cb0 from the candidate-ordinal mod-ksub means,
-    * then per round an exact-integer argmin assign (pd_i → pa_i) and
-    * re-average (cb_{i+1}). Expects a CTE `c` of (vec_id, sub, pos, xq);
-    * the caller encodes/LUTs against the final cb{iters}.
-    */
-  private def pqLloydCtes(ksub: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"cb0 AS (SELECT sub, CAST((vec_id // 20) % $ksub AS INT) AS code, pos,\n"
-    sb ++= "         CAST(round(sum(xq) / count(*), 0) AS BIGINT) AS cq\n"
-    sb ++= "       FROM c GROUP BY 1, 2, 3)"
-    for (i <- 0 until iters) {
-      sb ++= ",\n"
-      sb ++= s"pd$i AS (\n"
-      sb ++= "  SELECT c.vec_id, c.sub, cb.code,\n"
-      sb ++= "    CAST(sum((c.xq - cb.cq) * (c.xq - cb.cq)) AS BIGINT) AS dist2q\n"
-      sb ++= s"  FROM c JOIN cb$i cb ON c.sub = cb.sub AND c.pos = cb.pos\n"
-      sb ++= "  GROUP BY 1, 2, 3\n"
-      sb ++= "),\n"
-      sb ++= s"pa$i AS (\n"
-      sb ++= "  SELECT vec_id, sub, code FROM (\n"
-      sb ++= "    SELECT vec_id, sub, code,\n"
-      sb ++= "      row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist2q, code) AS rn\n"
-      sb ++= s"    FROM pd$i) r WHERE rn = 1\n"
-      sb ++= "),\n"
-      sb ++= s"cb${i + 1} AS (\n"
-      sb ++= "  SELECT c.sub, a.code, c.pos,\n"
-      sb ++= "    CAST(round(sum(c.xq) / count(*), 0) AS BIGINT) AS cq\n"
-      sb ++= s"  FROM c JOIN pa$i a ON c.vec_id = a.vec_id AND c.sub = a.sub\n"
-      sb ++= "  GROUP BY 1, 2, 3\n"
-      sb ++= ")"
-    }
-    sb.result()
-  }
-
-  private def ivfCtes(k: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= "cp AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq\n"
-    sb ++= "      FROM e WHERE vec_id % 20 = 0),\n"
-    sb ++= "qp AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq\n"
-    sb ++= "      FROM e WHERE vec_id < 8),\n"
-    sb ++= s"c0 AS (SELECT CAST(vec_id // 20 AS INT) AS cluster, pos, xq AS cq\n"
-    sb ++= s"      FROM cp WHERE vec_id < ${20L * k}),\n"
-    for (i <- 0 until iters) {
-      sb ++= s"d$i AS (\n"
-      sb ++= s"  SELECT cp.vec_id, c.cluster,\n"
-      sb ++= s"    CAST(sum((cp.xq - c.cq) * (cp.xq - c.cq)) AS BIGINT) AS dist2q\n"
-      sb ++= s"  FROM cp JOIN c$i c ON cp.pos = c.pos GROUP BY 1, 2\n"
-      sb ++= s"),\n"
-      sb ++= s"a$i AS (\n"
-      sb ++= s"  SELECT vec_id, cluster FROM (\n"
-      sb ++= s"    SELECT vec_id, cluster,\n"
-      sb ++= s"      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn\n"
-      sb ++= s"    FROM d$i) r WHERE rn = 1\n"
-      sb ++= s"),\n"
-      sb ++= s"c${i + 1} AS (\n"
-      sb ++= s"  SELECT a.cluster, cp.pos,\n"
-      sb ++= s"    CAST(round(sum(cp.xq) / count(*), 0) AS BIGINT) AS cq\n"
-      sb ++= s"  FROM cp JOIN a$i a ON cp.vec_id = a.vec_id GROUP BY 1, 2\n"
-      sb ++= s")"
-      if (i < iters - 1) sb ++= ",\n"
-    }
-    sb.result()
-  }
-
-  /** DuckDB mirror of Similarity.corpusClusters' full-corpus Lloyd:
-    * seed centroids = the first k VECTORS, then `iters` exact
-    * integer-grid rounds. Expects a CTE `p(vec_id, pos, xq)`; emits
-    * cb0..cb\$iters, the final centroids being cb\$iters.
-    */
-  private def corpusLloydCtes(k: Int, iters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"cb0 AS (SELECT CAST(vec_id AS INT) AS cluster, pos, xq AS cq\n"
-    sb ++= s"        FROM p WHERE vec_id < $k)"
-    for (i <- 0 until iters) {
-      sb ++= ",\n"
-      sb ++= s"kd$i AS (\n"
-      sb ++= "  SELECT p.vec_id, c.cluster,\n"
-      sb ++= "    CAST(sum((p.xq - c.cq) * (p.xq - c.cq)) AS BIGINT) AS dist2q\n"
-      sb ++= s"  FROM p JOIN cb$i c ON p.pos = c.pos GROUP BY 1, 2\n"
-      sb ++= "),\n"
-      sb ++= s"ka$i AS (\n"
-      sb ++= "  SELECT vec_id, cluster FROM (\n"
-      sb ++= "    SELECT vec_id, cluster,\n"
-      sb ++= "      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn\n"
-      sb ++= s"    FROM kd$i) r WHERE rn = 1\n"
-      sb ++= "),\n"
-      sb ++= s"cb${i + 1} AS (\n"
-      sb ++= "  SELECT a.cluster, p.pos,\n"
-      sb ++= "    CAST(round(sum(p.xq) / count(*), 0) AS BIGINT) AS cq\n"
-      sb ++= s"  FROM p JOIN ka$i a ON p.vec_id = a.vec_id GROUP BY 1, 2\n"
-      sb ++= ")"
-    }
-    sb.result()
-  }
-
-  /** Shared CTE chain for s16/d22 (the corpus k-NN graph): the s11
-    * trained assignment (corpusLloydCtes over all vectors) + exact
-    * norms + within-cell neighbor pairs ranked per src by (rounded
-    * cosine DESC, dst). Consumers filter `ranked.rnk`.
-    */
-  private lazy val KnnCtes: String =
-    s"""${embCte("TRUE")},
-       |p AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-       |${corpusLloydCtes(8, 2)},
-       |fin AS (
-       |  SELECT p.vec_id, c.cluster,
-       |    CAST(sum((p.xq - c.cq) * (p.xq - c.cq)) AS BIGINT) AS dist2q
-       |  FROM p JOIN cb2 c ON p.pos = c.pos GROUP BY 1, 2
-       |),
-       |asg AS (
-       |  SELECT vec_id, cluster FROM (
-       |    SELECT vec_id, cluster,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-       |    FROM fin) r WHERE rn = 1
-       |),
-       |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-       |d AS (
-       |  SELECT aa.vec_id AS src, bb.vec_id AS dst, aa.cluster AS cell,
-       |    sum(ea.x * eb.x) AS dp
-       |  FROM asg aa JOIN asg bb
-       |    ON aa.cluster = bb.cluster AND aa.vec_id <> bb.vec_id
-       |  JOIN e ea ON ea.vec_id = aa.vec_id
-       |  JOIN e eb ON eb.vec_id = bb.vec_id AND eb.i = ea.i
-       |  GROUP BY 1, 2, 3
-       |),
-       |scored AS (
-       |  SELECT src, dst, cell, round(dp / sqrt(na.nrm * nb.nrm), 6) AS cos
-       |  FROM d JOIN n na ON na.vec_id = src JOIN n nb ON nb.vec_id = dst
-       |),
-       |ranked AS (
-       |  SELECT src, dst, cell, cos,
-       |    CAST(row_number() OVER (PARTITION BY src ORDER BY cos DESC, dst) AS INT) AS rnk
-       |  FROM scored
-       |)""".stripMargin
-
-  /** DuckDB mirror of Similarity.pageRank (s21): KnnCtes supplies the
-    * literal s16 edges; each fixed-point round is one generated pair
-    * of CTEs — dst-keyed integer contribution sum (`pr // deg`) and
-    * the damped update `150000 + (85·in) // 100` left-joined over all
-    * ids (dangling mass leaks, both engines). AS MATERIALIZED on each
-    * pr round — the bpeSql lesson.
-    */
-  private def pageRankSql(prIters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH $KnnCtes,\n"
-    sb ++= "edges AS MATERIALIZED (SELECT src, dst FROM ranked WHERE rnk <= 3),\n"
-    sb ++= "deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),\n"
-    sb ++= "ids AS (SELECT vec_id FROM embeddings),\n"
-    sb ++= "pr0 AS (SELECT vec_id, CAST(1000000 AS BIGINT) AS pr FROM ids)"
-    for (i <- 1 to prIters) {
-      sb ++= s""",
-         |in$i AS (
-         |  SELECT e.dst AS vec_id, CAST(sum(p.pr // d.deg) AS BIGINT) AS inm
-         |  FROM edges e JOIN deg d ON e.src = d.src
-         |  JOIN pr${i - 1} p ON p.vec_id = e.src
-         |  GROUP BY 1),
-         |pr$i AS MATERIALIZED (
-         |  SELECT i.vec_id,
-         |    CAST(150000 + (85 * coalesce(n.inm, 0)) // 100 AS BIGINT) AS pr
-         |  FROM ids i LEFT JOIN in$i n ON i.vec_id = n.vec_id)""".stripMargin
-    }
-    sb ++= s"\nSELECT vec_id, pr FROM pr$prIters ORDER BY vec_id"
-    sb.toString
-  }
-
-  /** DuckDB mirror of Similarity.personalizedPageRank (s38):
-    * pageRankSql with seed as an extra key column and the SPARSE
-    * update — damped inbound mass per (seed, dst) plus the 150000
-    * restart re-injected at each seed, unreached nodes absent (exact
-    * zeros). AS MATERIALIZED per round (the bpeSql lesson).
-    */
-  private def pprSql(pprIters: Int, nSeeds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH $KnnCtes,\n"
-    sb ++= "edges AS MATERIALIZED (SELECT src, dst FROM ranked WHERE rnk <= 3),\n"
-    sb ++= "deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM edges GROUP BY 1),\n"
-    sb ++= s"pp0 AS (SELECT vec_id AS seed, vec_id, CAST(1000000 AS BIGINT) AS pr FROM embeddings WHERE vec_id < $nSeeds)"
-    for (i <- 1 to pprIters) {
-      sb ++= s""",
-         |pin$i AS (
-         |  SELECT p.seed, e.dst AS vec_id,
-         |    CAST(sum(p.pr // d.deg) AS BIGINT) AS inm
-         |  FROM edges e JOIN deg d ON e.src = d.src
-         |  JOIN pp${i - 1} p ON p.vec_id = e.src
-         |  GROUP BY 1, 2),
-         |pp$i AS MATERIALIZED (
-         |  SELECT seed, vec_id, CAST(sum(pr) AS BIGINT) AS pr FROM (
-         |    SELECT seed, vec_id, (85 * inm) // 100 AS pr FROM pin$i
-         |    UNION ALL
-         |    SELECT vec_id AS seed, vec_id, CAST(150000 AS BIGINT) AS pr
-         |    FROM embeddings WHERE vec_id < $nSeeds) u
-         |  GROUP BY 1, 2)""".stripMargin
-    }
-    sb ++= s"\nSELECT seed, vec_id, pr FROM pp$pprIters WHERE pr > 0 ORDER BY seed, vec_id"
-    sb.toString
-  }
-
-  /** DuckDB mirror of Similarity.hits (s39): KnnCtes supplies the s16
-    * edges; each synchronous round is two generated keyed-sum CTEs
-    * (hub from the previous auth, auth from the previous hub) LEFT-
-    * joined over all ids. AS MATERIALIZED per round (the bpeSql
-    * lesson).
-    */
-  private def hitsSql(hitsIters: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH $KnnCtes,\n"
-    sb ++= "edges AS MATERIALIZED (SELECT src, dst FROM ranked WHERE rnk <= 3),\n"
-    sb ++= "ids AS (SELECT vec_id FROM embeddings),\n"
-    sb ++= "hb0 AS (SELECT vec_id, CAST(1 AS BIGINT) AS h FROM ids),\n"
-    sb ++= "au0 AS (SELECT vec_id, CAST(1 AS BIGINT) AS a FROM ids)"
-    for (i <- 1 to hitsIters) {
-      sb ++= s""",
-         |hin$i AS (
-         |  SELECT e.src AS vec_id, CAST(sum(a.a) AS BIGINT) AS h
-         |  FROM edges e JOIN au${i - 1} a ON a.vec_id = e.dst GROUP BY 1),
-         |ain$i AS (
-         |  SELECT e.dst AS vec_id, CAST(sum(h.h) AS BIGINT) AS a
-         |  FROM edges e JOIN hb${i - 1} h ON h.vec_id = e.src GROUP BY 1),
-         |hb$i AS MATERIALIZED (
-         |  SELECT i.vec_id, CAST(coalesce(n.h, 0) AS BIGINT) AS h
-         |  FROM ids i LEFT JOIN hin$i n ON i.vec_id = n.vec_id),
-         |au$i AS MATERIALIZED (
-         |  SELECT i.vec_id, CAST(coalesce(n.a, 0) AS BIGINT) AS a
-         |  FROM ids i LEFT JOIN ain$i n ON i.vec_id = n.vec_id)""".stripMargin
-    }
-    sb ++= s"""\nSELECT h.vec_id, h.h AS hub, a.a AS auth
-       |FROM hb$hitsIters h JOIN au$hitsIters a ON a.vec_id = h.vec_id
-       |ORDER BY h.vec_id""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of Similarity.bfsHops (s29): KnnCtes supplies the
-    * literal s16 edges; each BFS round is one generated pair of CTEs —
-    * frontier propagation across the edge list, then the per-node min
-    * with the settled set. AS MATERIALIZED per round (the bpeSql
-    * lesson).
-    */
-  private def bfsSql(hops: Int, nSeeds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH $KnnCtes,\n"
-    sb ++= "edges AS MATERIALIZED (SELECT src, dst FROM ranked WHERE rnk <= 3),\n"
-    sb ++= s"d0 AS (SELECT vec_id, CAST(0 AS INT) AS hop FROM embeddings WHERE vec_id < $nSeeds)"
-    for (i <- 1 to hops) {
-      sb ++= s""",
-         |p$i AS (
-         |  SELECT e.dst AS vec_id, CAST($i AS INT) AS hop
-         |  FROM edges e JOIN d${i - 1} d ON d.vec_id = e.src),
-         |d$i AS MATERIALIZED (
-         |  SELECT vec_id, CAST(min(hop) AS INT) AS hop FROM (
-         |    SELECT * FROM d${i - 1} UNION ALL SELECT * FROM p$i) u
-         |  GROUP BY vec_id)""".stripMargin
-    }
-    sb ++= s"\nSELECT vec_id, hop FROM d$hops ORDER BY vec_id"
-    sb.toString
-  }
-
-  /** DuckDB mirror of TextAnalysis.wordPieceEncode (t33): vocab
-    * learning (all single chars + top character 2/3-grams of the
-    * distinct word set) and the greedy longest-match loop unrolled to
-    * `rounds` generated CTE pairs — pick (length DESC, gram argmax per
-    * word), then advance. AS MATERIALIZED per round (the bpeSql
-    * lesson).
-    */
-  private def wordPieceSql(topGrams: Int, maxWordLen: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH ${tkCte("")},
-       |ww AS (SELECT DISTINCT unnest(tk) AS word FROM tk),
-       |w AS (SELECT word FROM ww WHERE length(word) BETWEEN 1 AND $maxWordLen),
-       |singles AS (
-       |  SELECT DISTINCT substr(word, CAST(i AS INT), 1) AS v
-       |  FROM w, UNNEST(range(1, $maxWordLen + 1)) AS t(i)
-       |  WHERE i <= length(word)),
-       |gm AS (
-       |  SELECT substr(word, CAST(i AS INT), CAST(n AS INT)) AS v,
-       |    CAST(count(*) AS BIGINT) AS cnt
-       |  FROM w, UNNEST(range(2, 4)) AS tn(n),
-       |    UNNEST(range(1, $maxWordLen + 1)) AS t(i)
-       |  WHERE i + n - 1 <= length(word)
-       |  GROUP BY 1),
-       |topg AS (
-       |  SELECT v FROM (
-       |    SELECT v, row_number() OVER (ORDER BY cnt DESC, v) AS rn FROM gm) r
-       |  WHERE rn <= $topGrams),
-       |vocab AS MATERIALIZED (
-       |  SELECT v, CAST(length(v) AS INT) AS vl FROM (
-       |    SELECT v FROM singles UNION SELECT v FROM topg) u),
-       |s0 AS (SELECT word, CAST(1 AS INT) AS off FROM w)""".stripMargin
-    for (r <- 1 to maxWordLen) {
-      sb ++= s""",
-         |pick$r AS MATERIALIZED (
-         |  SELECT word, off, v, vl FROM (
-         |    SELECT s.word, s.off, vb.v, vb.vl,
-         |      row_number() OVER (PARTITION BY s.word
-         |        ORDER BY vb.vl DESC, vb.v) AS rn
-         |    FROM s${r - 1} s JOIN vocab vb
-         |      ON substr(s.word, s.off, vb.vl) = vb.v) c
-         |  WHERE rn = 1),
-         |e$r AS (SELECT word, CAST($r AS INT) AS pos,
-         |  CASE WHEN off = 1 THEN v ELSE '##' || v END AS piece FROM pick$r),
-         |s$r AS MATERIALIZED (
-         |  SELECT word, CAST(off + vl AS INT) AS off FROM pick$r
-         |  WHERE off + vl <= length(word))""".stripMargin
-    }
-    sb ++= "\nSELECT word, pos, piece FROM ("
-    sb ++= (1 to maxWordLen).map(r => s"SELECT * FROM e$r")
-      .mkString(" UNION ALL ")
-    sb ++= ") u ORDER BY word, pos"
-    sb.toString
-  }
-
-  /** Exact fixed-point log2 as a generated CTE chain — the DuckDB
-    * mirror of [[graft.functions.IntLog.log2Fixed]], in lockstep via
-    * the shared F/SH/step constants: 11 conditional constant shifts
-    * normalize `v` into a [2^SH, 2^(SH+1)) mantissa accumulating the
-    * exponent, then F square-and-carry rounds extract fractional bits.
-    * Integer compares/shifts only, so both engines truncate
-    * identically — no IEEE `ln` anywhere near a hash gate. Emits CTEs
-    * `tag_0..tag_N`; returns (cteText, finalCteName) where the final
-    * CTE carries `keep` passthrough columns plus `out`.
-    */
-  private def ilogChainSql(tag: String, src: String, v: String,
-      out: String, keep: Seq[String]): (String, String) = {
-    import graft.functions.IntLog.{F, SH, DownSteps, UpSteps}
-    val sb = new StringBuilder
-    val kp = keep.map(c => s"p.$c, ").mkString
-    var prev = src
-    var idx = 0
-    def step(sel: String): Unit = {
-      sb ++= s",\n${tag}_$idx AS (SELECT $kp$sel FROM $prev p)"
-      prev = s"${tag}_$idx"; idx += 1
-    }
-    step(s"CAST(p.$v AS BIGINT) AS m, CAST(0 AS BIGINT) AS b")
-    for (k <- DownSteps) step(
-      s"CASE WHEN p.m >= (CAST(1 AS BIGINT) << ${SH + k}) " +
-        s"THEN p.m >> $k ELSE p.m END AS m, " +
-        s"CASE WHEN p.m >= (CAST(1 AS BIGINT) << ${SH + k}) " +
-        s"THEN p.b + $k ELSE p.b END AS b")
-    for (k <- UpSteps) step(
-      s"CASE WHEN p.m < (CAST(1 AS BIGINT) << ${SH + 1 - k}) " +
-        s"THEN p.m << $k ELSE p.m END AS m, " +
-        s"CASE WHEN p.m < (CAST(1 AS BIGINT) << ${SH + 1 - k}) " +
-        s"THEN p.b - $k ELSE p.b END AS b")
-    step(s"p.m AS m, p.b + $SH AS r")
-    for (_ <- 0 until F) step(
-      s"CASE WHEN ((p.m * p.m) >> $SH) >= (CAST(1 AS BIGINT) << ${SH + 1}) " +
-        s"THEN ((p.m * p.m) >> $SH) >> 1 ELSE (p.m * p.m) >> $SH END AS m, " +
-        s"CASE WHEN ((p.m * p.m) >> $SH) >= (CAST(1 AS BIGINT) << ${SH + 1}) " +
-        s"THEN p.r * 2 + 1 ELSE p.r * 2 END AS r")
-    step(s"p.r AS $out")
-    (sb.toString, prev)
-  }
-
-  /** DuckDB mirror of graft.operators.Unigram (t44/t45): the WHOLE
-    * unigram-LM training run replayed declaratively — seed substring
-    * frequencies, then per EM round a fixed-point cost assignment
-    * ([[ilogChainSql]]), a Viterbi DP unrolled to word-length rounds
-    * (per position the (cost, np, path) argmin over the <= MaxPieceLen
-    * candidate spans; the '|'-joined path string is the total
-    * tie-break, equal-length by construction among compared
-    * candidates), the usage re-count, and the prune. `encode = false`
-    * emits the final vocabulary with costs (t44); `encode = true` runs
-    * one more DP under the final costs and unnests the segmentations
-    * (t45). AS MATERIALIZED on every reused round table — the bpeSql
-    * lesson.
-    */
-  private def unigramSql(encode: Boolean): String = {
-    import graft.operators.Unigram.{MaxWordLen, MaxPieceLen, SeedMultis, KeepSchedule}
-    val sb = new StringBuilder
-    sb ++= s"""WITH ${tkCte("")},
-       |wc AS (SELECT word, CAST(count(*) AS BIGINT) AS wcount
-       |  FROM (SELECT unnest(tk) AS word FROM tk) GROUP BY 1),
-       |w AS MATERIALIZED (
-       |  SELECT word, wcount FROM wc
-       |  WHERE length(word) BETWEEN 1 AND $MaxWordLen),
-       |sub AS MATERIALIZED (
-       |  SELECT substr(word, CAST(i AS INT), CAST(n AS INT)) AS piece,
-       |    CAST(sum(wcount) AS BIGINT) AS freq
-       |  FROM w, UNNEST(range(1, $MaxWordLen + 1)) AS t(i),
-       |    UNNEST(range(1, $MaxPieceLen + 1)) AS tn(n)
-       |  WHERE i + n - 1 <= length(word)
-       |  GROUP BY 1),
-       |sing AS (SELECT piece, freq FROM sub WHERE length(piece) = 1),
-       |v0 AS MATERIALIZED (
-       |  SELECT piece, freq FROM sing
-       |  UNION ALL
-       |  SELECT piece, freq FROM (
-       |    SELECT piece, freq,
-       |      row_number() OVER (ORDER BY freq DESC, piece) AS rn
-       |    FROM sub WHERE length(piece) >= 2) q
-       |  WHERE rn <= $SeedMultis)""".stripMargin
-    // one cost table + Viterbi DP + segmentation per stage; stages are
-    // the EM rounds plus (for t45) a final encode under the last vocab
-    def costStage(stage: String, vocabCte: String): String = {
-      sb ++= s""",
-         |t$stage AS (SELECT CAST(sum(freq) AS BIGINT) AS tv FROM $vocabCte)""".stripMargin
-      val (ltText, ltName) = ilogChainSql(s"lt$stage", s"t$stage", "tv", "lt", Nil)
-      val (lfText, lfName) =
-        ilogChainSql(s"lf$stage", vocabCte, "freq", "lf", Seq("piece", "freq"))
-      sb ++= ltText
-      sb ++= lfText
-      sb ++= s""",
-         |cost$stage AS MATERIALIZED (
-         |  SELECT f.piece, f.freq, (t.lt - f.lf) AS cost
-         |  FROM $lfName f CROSS JOIN $ltName t)""".stripMargin
-      s"cost$stage"
-    }
-    def dpStage(stage: String, costCte: String): String = {
-      sb ++= s""",
-         |ed$stage AS MATERIALIZED (
-         |  SELECT w.word, CAST(i AS INT) AS s, CAST(n AS INT) AS n,
-         |    c.piece, c.cost
-         |  FROM w, UNNEST(range(1, $MaxWordLen + 1)) AS t(i),
-         |    UNNEST(range(1, $MaxPieceLen + 1)) AS tn(n), $costCte c
-         |  WHERE i + n - 1 <= length(w.word)
-         |    AND substr(w.word, CAST(i AS INT), CAST(n AS INT)) = c.piece),
-         |dp${stage}_0 AS (SELECT word, CAST(0 AS BIGINT) AS cost,
-         |  CAST(0 AS INT) AS np, '' AS path FROM w)""".stripMargin
-      for (j <- 1 to MaxWordLen) {
-        val branches = (1 to math.min(MaxPieceLen, j)).map { n =>
-          s"""SELECT d.word, d.cost + e.cost AS cost,
-             |      CAST(d.np + 1 AS INT) AS np,
-             |      CASE WHEN d.np = 0 THEN e.piece
-             |           ELSE d.path || '|' || e.piece END AS path
-             |    FROM dp${stage}_${j - n} d JOIN ed$stage e
-             |      ON e.word = d.word AND e.s = ${j - n + 1} AND e.n = $n""".stripMargin
-        }.mkString("\n    UNION ALL\n    ")
-        sb ++= s""",
-           |dp${stage}_$j AS MATERIALIZED (
-           |  SELECT word, cost, np, path FROM (
-           |    SELECT c.*, row_number() OVER (PARTITION BY word
-           |      ORDER BY cost, np, path) AS rn
-           |    FROM ($branches) c) x
-           |  WHERE rn = 1)""".stripMargin
-      }
-      val segBranches = (1 to MaxWordLen).map(j =>
-        s"SELECT d.word, w.wcount, d.path FROM dp${stage}_$j d " +
-          s"JOIN w ON w.word = d.word AND length(w.word) = $j")
-        .mkString("\n  UNION ALL\n  ")
-      sb ++= s""",
-         |seg$stage AS MATERIALIZED (
-         |  $segBranches)""".stripMargin
-      s"seg$stage"
-    }
-    var vocab = "v0"
-    for ((keep, i) <- KeepSchedule.zipWithIndex) {
-      val r = i + 1
-      val cost = costStage(s"$r", vocab)
-      val seg = dpStage(s"$r", cost)
-      sb ++= s""",
-         |use$r AS MATERIALIZED (
-         |  SELECT piece, CAST(sum(wcount) AS BIGINT) AS usage FROM (
-         |    SELECT unnest(string_split(path, '|')) AS piece, wcount
-         |    FROM $seg) u
-         |  GROUP BY 1),
-         |v$r AS MATERIALIZED (
-         |  SELECT s.piece, greatest(coalesce(u.usage, 0), 1) AS freq
-         |  FROM sing s LEFT JOIN use$r u ON u.piece = s.piece
-         |  UNION ALL
-         |  SELECT piece, usage AS freq FROM (
-         |    SELECT piece, usage,
-         |      row_number() OVER (ORDER BY usage DESC, piece) AS rn
-         |    FROM use$r WHERE length(piece) >= 2 AND usage > 0) q
-         |  WHERE rn <= $keep)""".stripMargin
-      vocab = s"v$r"
-    }
-    val costF = costStage("f", vocab)
-    if (!encode) {
-      sb ++= s"\nSELECT piece, freq, cost FROM $costF ORDER BY piece"
-    } else {
-      val segF = dpStage("f", costF)
-      sb ++= s""",
-         |pieces AS (
-         |  SELECT word,
-         |    CAST(unnest(range(1, len(string_split(path, '|')) + 1)) AS INT)
-         |      AS pos,
-         |    unnest(string_split(path, '|')) AS piece
-         |  FROM $segF)
-         |SELECT word, pos, piece FROM pieces ORDER BY word, pos""".stripMargin
-    }
-    sb.toString
-  }
-
-  /** DuckDB mirror of TextAnalysis.zipfFit (t46): per-source top-R
-    * token ranks, two ilogChainSql passes (rank then freq onto the
-    * shared fixed-point grid), and the integer least-squares slope/R²
-    * with the division sign handled explicitly (both engines only ever
-    * divide non-negative operands — Spark `div` truncates toward zero,
-    * DuckDB `//` floors, and they agree exactly there). The R²
-    * numerator rides HUGEINT (the t40 chi² discipline).
-    */
-  private def zipfSql(topR: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH occ AS (SELECT source, unnest($Toks) AS token FROM documents),
-       |cnt AS (SELECT source, token, CAST(count(*) AS BIGINT) AS freq
-       |  FROM occ GROUP BY 1, 2),
-       |top AS (SELECT source, freq,
-       |    CAST(row_number() OVER (PARTITION BY source
-       |      ORDER BY freq DESC, token) AS BIGINT) AS rnk
-       |  FROM cnt QUALIFY rnk <= $topR)""".stripMargin
-    val (xt, xn) = ilogChainSql("zx", "top", "rnk", "x", Seq("source", "freq"))
-    sb ++= xt
-    val (yt, yn) = ilogChainSql("zy", xn, "freq", "y", Seq("source", "x"))
-    sb ++= yt
-    sb ++= s""",
-       |st AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-       |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-       |    CAST(sum(x * y) AS BIGINT) AS sxy,
-       |    CAST(sum(x * x) AS BIGINT) AS sxx,
-       |    CAST(sum(y * y) AS BIGINT) AS syy
-       |  FROM $yn GROUP BY 1 HAVING count(*) >= 2),
-       |nd AS (SELECT source, n, sy, syy,
-       |    n * sxy - sx * sy AS num, n * sxx - sx * sx AS den
-       |  FROM st)
-       |SELECT source, n AS n_ranks,
-       |  CAST(CASE WHEN num >= 0 THEN num * 1000000 // den
-       |       ELSE -((-num) * 1000000 // den) END AS BIGINT) AS slope_ppm,
-       |  CAST(CASE WHEN n * syy - sy * sy = 0 THEN NULL
-       |       ELSE (CAST(num AS HUGEINT) * num * 1000000) //
-       |         (CAST(den AS HUGEINT) * (n * syy - sy * sy)) END AS BIGINT)
-       |    AS r2_ppm
-       |FROM nd ORDER BY source""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of TextAnalysis.jsDrift (t47): the (source, token)
-    * counts, floor-ppm p/q/m distributions over the corpus-vocab ×
-    * source grid, and one ilogChainSql pass per distribution; the
-    * LEFT-joined final select keeps every source even if a side sums
-    * empty (the Spark groupBy over the grid always emits all sources).
-    */
-  private lazy val jsDriftSql: String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH occ AS (SELECT source, unnest($Toks) AS token FROM documents),
-       |sc AS MATERIALIZED (
-       |  SELECT source, token, CAST(count(*) AS BIGINT) AS c
-       |  FROM occ GROUP BY 1, 2),
-       |stot AS (SELECT source, CAST(sum(c) AS BIGINT) AS st FROM sc GROUP BY 1),
-       |voc AS (SELECT token, CAST(sum(c) AS BIGINT) AS cc FROM sc GROUP BY 1),
-       |nt AS (SELECT CAST(sum(cc) AS BIGINT) AS nn FROM voc),
-       |qd AS MATERIALIZED (
-       |  SELECT token, CAST(cc * 1000000 // nn AS BIGINT) AS q_ppm
-       |  FROM voc, nt),
-       |qpos AS (SELECT q_ppm FROM qd WHERE q_ppm >= 1)""".stripMargin
-    val (qt, qn) = ilogChainSql("jq", "qpos", "q_ppm", "lq", Seq("q_ppm"))
-    sb ++= qt
-    sb ++= s""",
-       |sq AS (SELECT CAST(sum(q_ppm * lq) AS BIGINT) AS s_q FROM $qn),
-       |pm AS MATERIALIZED (
-       |  SELECT s.source, s.st,
-       |    CAST(coalesce(c.c, 0) * 1000000 // s.st AS BIGINT) AS p_ppm,
-       |    CAST((coalesce(c.c, 0) * 1000000 // s.st + q.q_ppm) // 2
-       |      AS BIGINT) AS m_ppm
-       |  FROM qd q CROSS JOIN stot s
-       |  LEFT JOIN sc c ON c.source = s.source AND c.token = q.token),
-       |ppos AS (SELECT source, p_ppm FROM pm WHERE p_ppm >= 1)""".stripMargin
-    val (pt, pn) = ilogChainSql("jp", "ppos", "p_ppm", "lp", Seq("source", "p_ppm"))
-    sb ++= pt
-    sb ++= s""",
-       |sp AS (SELECT source, CAST(sum(p_ppm * lp) AS BIGINT) AS s_p
-       |  FROM $pn GROUP BY 1),
-       |mpos AS (SELECT source, m_ppm FROM pm WHERE m_ppm >= 1)""".stripMargin
-    val (mt, mn) = ilogChainSql("jm", "mpos", "m_ppm", "lm", Seq("source", "m_ppm"))
-    sb ++= mt
-    sb ++= s""",
-       |sm AS (SELECT source, CAST(sum(m_ppm * lm) AS BIGINT) AS s_m
-       |  FROM $mn GROUP BY 1)
-       |SELECT t.source, t.st AS n_tokens,
-       |  CAST(coalesce(sp.s_p, 0) AS BIGINT) AS s_p,
-       |  CAST(coalesce(sm.s_m, 0) AS BIGINT) AS s_m, sq.s_q,
-       |  CAST((coalesce(sp.s_p, 0) + sq.s_q) // 2 - coalesce(sm.s_m, 0)
-       |    AS BIGINT) AS jsd_fix
-       |FROM stot t
-       |LEFT JOIN sp ON sp.source = t.source
-       |LEFT JOIN sm ON sm.source = t.source
-       |CROSS JOIN sq
-       |ORDER BY t.source""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of Dedup.tfidfCosine (d36): the sampled tf table,
-    * two ilogChainSql passes (N and per-token df onto the shared
-    * fixed-point grid), weights, norms, the posting-list pair join,
-    * and the HUGEINT squared-cosine threshold.
-    */
-  private def tfidfSql(maxSample: Int, minCos2Ppm: Long): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH dd AS (SELECT doc_id, $Toks AS tk FROM documents
-       |  WHERE doc_id % 10 = 0 AND doc_id < ${10L * maxSample}),
-       |tf AS MATERIALIZED (
-       |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(tk) AS tok FROM dd) t GROUP BY 1, 2),
-       |ndc AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM dd),
-       |dfc AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1)""".stripMargin
-    val (at, an) = ilogChainSql("ca", "ndc", "nd", "lnd", Nil)
-    sb ++= at
-    val (bt, bn) = ilogChainSql("cb", "dfc", "df", "ldf", Seq("tok"))
-    sb ++= bt
-    sb ++= s""",
-       |wt AS MATERIALIZED (
-       |  SELECT t.doc_id, t.tok, t.tf * (a.lnd - b.ldf) AS w
-       |  FROM tf t JOIN $bn b ON b.tok = t.tok CROSS JOIN $an a
-       |  WHERE t.tf * (a.lnd - b.ldf) >= 1),
-       |n2 AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2
-       |  FROM wt GROUP BY 1),
-       |dt AS (SELECT x.doc_id AS a, y.doc_id AS b,
-       |    CAST(sum(x.w * y.w) AS BIGINT) AS dot
-       |  FROM wt x JOIN wt y ON x.tok = y.tok AND x.doc_id < y.doc_id
-       |  GROUP BY 1, 2)
-       |SELECT a, b, dot, na.n2 AS n2_a, nb.n2 AS n2_b,
-       |  CAST((CAST(dot AS HUGEINT) * dot * 1000000) //
-       |    (CAST(na.n2 AS HUGEINT) * nb.n2) AS BIGINT) AS cos2_ppm
-       |FROM dt JOIN n2 na ON na.doc_id = a JOIN n2 nb ON nb.doc_id = b
-       |WHERE (CAST(dot AS HUGEINT) * dot * 1000000) //
-       |    (CAST(na.n2 AS HUGEINT) * nb.n2) >= $minCos2Ppm
-       |ORDER BY a, b""".stripMargin
-    sb.toString
-  }
-
-  /** The m36 Otsu-threshold CTE block (through `pf`: per-doc
-    * threshold/score/n_bg/n_fg over the 8×8 ord() raster) — the ONE
-    * definition shared by the m36 gate and m38's binarization input.
-    */
-  private lazy val OtsuCtes: String =
-    """d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-      |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-      |        CAST(ord(text[CAST(i AS INT)]) AS BIGINT) AS v
-      |      FROM d, UNNEST(range(1, 65)) t(i)),
-      |cnt AS (SELECT doc_id, v, CAST(count(*) AS BIGINT) AS c
-      |        FROM v GROUP BY 1, 2),
-      |tot AS (SELECT doc_id, CAST(sum(v) AS BIGINT) AS s,
-      |          CAST(count(*) AS BIGINT) AS n, CAST(max(v) AS BIGINT) AS vmax
-      |        FROM v GROUP BY 1),
-      |cdf AS (SELECT doc_id, v,
-      |          CAST(sum(c) OVER w AS BIGINT) AS n0,
-      |          CAST(sum(v * c) OVER w AS BIGINT) AS s0
-      |        FROM cnt WINDOW w AS (PARTITION BY doc_id ORDER BY v)),
-      |cand AS (SELECT c.doc_id, c.v, c.n0, t.n - c.n0 AS n1,
-      |           c.s0 * (t.n - c.n0) - (t.s - c.s0) * c.n0 AS num
-      |         FROM cdf c JOIN tot t USING (doc_id)
-      |         WHERE t.n - c.n0 > 0),
-      |scored AS (SELECT doc_id, v, n0, n1,
-      |             (num * num * 1048576) // (n0 * n1) AS score
-      |           FROM cand),
-      |pick AS (SELECT doc_id, v, score, n0, n1 FROM (
-      |           SELECT s.*, row_number() OVER (PARTITION BY doc_id
-      |             ORDER BY score DESC, v) AS rn
-      |           FROM scored s) x
-      |         WHERE rn = 1),
-      |pf AS (SELECT t.doc_id,
-      |         CAST(coalesce(p.v, t.vmax) AS INT) AS threshold,
-      |         CAST(coalesce(p.score, 0) AS BIGINT) AS score,
-      |         CAST(coalesce(p.n0, t.n) AS BIGINT) AS n_bg,
-      |         CAST(coalesce(p.n1, 0) AS BIGINT) AS n_fg
-      |       FROM tot t LEFT JOIN pick p USING (doc_id))""".stripMargin
-
-  /** DuckDB mirror of Multimodal.ccLabel (m38): the OtsuCtes threshold,
-    * the foreground adjacency (4-connectivity on the 1-based row-major
-    * grid), and `rounds` generated min-label propagation CTEs — exact
-    * because 63 rounds cover the longest shortest path any 8×8
-    * component can have. AS MATERIALIZED per round (the bpeSql
-    * lesson).
-    */
-  private def ccLabelSql(rounds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH $OtsuCtes,
-       |fg AS MATERIALIZED (
-       |  SELECT v.doc_id, v.idx FROM v JOIN pf p USING (doc_id)
-       |  WHERE v.v > p.threshold),
-       |adj AS MATERIALIZED (
-       |  SELECT a.doc_id, a.idx AS pa, b.idx AS pb
-       |  FROM fg a JOIN fg b ON a.doc_id = b.doc_id AND (
-       |    (b.idx = a.idx + 1 AND (a.idx - 1) % 8 < 7) OR
-       |    (b.idx = a.idx - 1 AND (a.idx - 1) % 8 > 0) OR
-       |    b.idx = a.idx + 8 OR b.idx = a.idx - 8)),
-       |l0 AS (SELECT doc_id, idx, CAST(idx AS BIGINT) AS lbl FROM fg)""".stripMargin
-    for (r <- 1 to rounds) {
-      sb ++= s""",
-         |l$r AS MATERIALIZED (
-         |  SELECT p.doc_id, p.idx,
-         |    least(p.lbl, coalesce(min(q.lbl), p.lbl)) AS lbl
-         |  FROM l${r - 1} p
-         |  LEFT JOIN adj a ON a.doc_id = p.doc_id AND a.pa = p.idx
-         |  LEFT JOIN l${r - 1} q ON q.doc_id = a.doc_id AND q.idx = a.pb
-         |  GROUP BY p.doc_id, p.idx, p.lbl)""".stripMargin
-    }
-    sb ++= s""",
-       |lab AS (SELECT v.doc_id, v.idx, CAST(coalesce(l.lbl, 0) AS BIGINT) AS lbl
-       |  FROM v LEFT JOIN l$rounds l ON l.doc_id = v.doc_id AND l.idx = v.idx),
-       |agg AS (SELECT doc_id,
-       |    CAST(sum(CASE WHEN lbl > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_fg,
-       |    CAST(count(DISTINCT CASE WHEN lbl > 0 THEN lbl END) AS BIGINT)
-       |      AS n_components,
-       |    list_reduce([CAST(0 AS BIGINT)] ||
-       |      list(lbl ORDER BY idx),
-       |      (acc, x) -> (acc * 31 + x) % 1000000007) AS label_checksum
-       |  FROM lab GROUP BY 1),
-       |mx AS (SELECT doc_id, CAST(max(c) AS BIGINT) AS max_component FROM (
-       |    SELECT doc_id, lbl, count(*) AS c FROM lab WHERE lbl > 0
-       |    GROUP BY 1, 2) g
-       |  GROUP BY 1)
-       |SELECT p.doc_id, p.threshold, a.n_fg, a.n_components,
-       |  CAST(coalesce(mx.max_component, 0) AS BIGINT) AS max_component,
-       |  a.label_checksum
-       |FROM pf p JOIN agg a USING (doc_id)
-       |LEFT JOIN mx USING (doc_id)
-       |ORDER BY p.doc_id""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of Similarity.rocchioExpand (s41): the quantized
-    * position table, round-1 ranking, the integer expansion
-    * q' = 6·q + Σ top-k0, and the round-2 re-rank — both rounds the
-    * exact-integer-dot + one-IEEE-division discipline.
-    */
-  private def rocchioSql(k0: Int, k: Int): String =
-    s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-       |p AS MATERIALIZED (
-       |  SELECT vec_id, i, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-       |c AS (SELECT vec_id, i, xq FROM p WHERE vec_id % 20 = 0),
-       |q AS (SELECT vec_id AS qid, i, xq AS qxq FROM p WHERE vec_id < 8),
-       |cn AS (SELECT vec_id, CAST(sum(xq * xq) AS BIGINT) AS nc
-       |  FROM c GROUP BY 1),
-       |qn AS (SELECT qid, CAST(sum(qxq * qxq) AS BIGINT) AS nq
-       |  FROM q GROUP BY 1),
-       |d1 AS (SELECT q.qid, c.vec_id AS cand,
-       |    CAST(sum(q.qxq * c.xq) AS BIGINT) AS dp
-       |  FROM q JOIN c ON c.i = q.i WHERE c.vec_id <> q.qid GROUP BY 1, 2),
-       |s1 AS (SELECT d.qid, d.cand,
-       |    round(d.dp / sqrt(CAST(qn.nq AS DOUBLE) * CAST(cn.nc AS DOUBLE)), 6) AS cos
-       |  FROM d1 d JOIN qn ON qn.qid = d.qid JOIN cn ON cn.vec_id = d.cand),
-       |r1 AS (SELECT qid, cand FROM (
-       |    SELECT qid, cand,
-       |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS rnk
-       |    FROM s1) x WHERE rnk <= $k0),
-       |qe AS MATERIALIZED (
-       |  SELECT q.qid, q.i, CAST(6 * max(q.qxq) + sum(t.xq) AS BIGINT) AS qxq
-       |  FROM q JOIN r1 ON r1.qid = q.qid
-       |  JOIN c t ON t.vec_id = r1.cand AND t.i = q.i
-       |  GROUP BY 1, 2),
-       |qn2 AS (SELECT qid, CAST(sum(qxq * qxq) AS BIGINT) AS nq
-       |  FROM qe GROUP BY 1),
-       |d2 AS (SELECT qe.qid, c.vec_id AS cand,
-       |    CAST(sum(qe.qxq * c.xq) AS BIGINT) AS dp
-       |  FROM qe JOIN c ON c.i = qe.i WHERE c.vec_id <> qe.qid GROUP BY 1, 2),
-       |s2 AS (SELECT d.qid, d.cand,
-       |    round(d.dp / sqrt(CAST(n2.nq AS DOUBLE) * CAST(cn.nc AS DOUBLE)), 6) AS cos
-       |  FROM d2 d JOIN qn2 n2 ON n2.qid = d.qid JOIN cn ON cn.vec_id = d.cand)
-       |SELECT qid, rnk, cand, cos FROM (
-       |  SELECT qid, cand, cos,
-       |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand)
-       |      AS INT) AS rnk
-       |  FROM s2) x WHERE rnk <= $k ORDER BY qid, rnk""".stripMargin
-
-  /** DuckDB mirror of TextAnalysis.tfidfTerms (t49): the full-corpus
-    * tf/df tables, the d36 ilog weight algebra, and a per-doc rank.
-    */
-  private def tfidfTermsSql(topT: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH ${tkCte("")},
-       |tf AS MATERIALIZED (
-       |  SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
-       |  FROM (SELECT doc_id, unnest(tk) AS tok FROM tk) t GROUP BY 1, 2),
-       |ndc AS (SELECT CAST(count(*) AS BIGINT) AS nd FROM documents),
-       |dfc AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1)""".stripMargin
-    val (at, an) = ilogChainSql("ka", "ndc", "nd", "lnd", Nil)
-    sb ++= at
-    val (bt, bn) = ilogChainSql("kb", "dfc", "df", "ldf", Seq("tok"))
-    sb ++= bt
-    sb ++= s""",
-       |wt AS (SELECT t.doc_id, t.tok AS token,
-       |    CAST(t.tf * (a.lnd - b.ldf) AS BIGINT) AS w
-       |  FROM tf t JOIN $bn b ON b.tok = t.tok CROSS JOIN $an a
-       |  WHERE t.tf * (a.lnd - b.ldf) >= 1)
-       |SELECT doc_id, rk, token, w FROM (
-       |  SELECT doc_id, token, w,
-       |    CAST(row_number() OVER (PARTITION BY doc_id
-       |      ORDER BY w DESC, token) AS INT) AS rk
-       |  FROM wt) x WHERE rk <= $topT ORDER BY doc_id, rk""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of Multimodal.histEntropy (m39): per-(doc, level)
-    * counts, two ilogChainSql passes (count and per-doc n), the q62
-    * Theil algebra on pixels.
-    */
-  private lazy val histEntropySql: String = {
-    val twoF = 1L << graft.functions.IntLog.F
-    val sb = new StringBuilder
-    sb ++= """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-       |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-       |        CAST(ord(text[CAST(i AS INT)]) AS BIGINT) AS v
-       |      FROM d, UNNEST(range(1, 65)) t(i)),
-       |cnt AS (SELECT doc_id, v, CAST(count(*) AS BIGINT) AS c
-       |        FROM v GROUP BY 1, 2),
-       |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n,
-       |          CAST(min(v) AS INT) AS lo, CAST(max(v) AS INT) AS hi
-       |        FROM v GROUP BY 1)""".stripMargin
-    val (at, an) = ilogChainSql("ea", "cnt", "c", "lc", Seq("doc_id", "c"))
-    sb ++= at
-    val (bt, bn) = ilogChainSql("eb", "tot", "n", "ln",
-      Seq("doc_id", "n", "lo", "hi"))
-    sb ++= bt
-    sb ++= s""",
-       |h AS (SELECT a.doc_id,
-       |    CAST(sum(a.c * (b.ln - a.lc)) AS BIGINT) AS h_num,
-       |    CAST(count(*) AS BIGINT) AS n_levels
-       |  FROM $an a JOIN $bn b ON b.doc_id = a.doc_id GROUP BY 1)
-       |SELECT b.doc_id, h.n_levels, b.lo, b.hi, h.h_num,
-       |  CAST(h.h_num * 1000 // (b.n * $twoF) AS BIGINT) AS h_mbits
-       |FROM $bn b JOIN h ON h.doc_id = b.doc_id
-       |ORDER BY b.doc_id""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of Relational.theilL (q67): theilSql's CTE shape
-    * with the GE(0) algebra — unweighted within terms lsg − lxn,
-    * n_g-weighted between terms with the ratio flipped, ppm divided by
-    * n_g·2^F.
-    */
-  private lazy val theilLSql: String = {
-    val twoF = 1L << graft.functions.IntLog.F
-    val sb = new StringBuilder
-    sb ++= """WITH sp AS (
-       |  SELECT o_custkey,
-       |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-       |      AS x
-       |  FROM orders GROUP BY 1),
-       |j AS MATERIALIZED (
-       |  SELECT c.c_mktsegment AS segment, s.x
-       |  FROM sp s JOIN customer c ON c.c_custkey = s.o_custkey
-       |  WHERE s.x >= 1),
-       |seg AS MATERIALIZED (
-       |  SELECT segment, CAST(count(*) AS BIGINT) AS n_g,
-       |    CAST(sum(x) AS BIGINT) AS s_g
-       |  FROM j GROUP BY 1),
-       |tot AS (SELECT CAST(sum(n_g) AS BIGINT) AS n,
-       |    CAST(sum(s_g) AS BIGINT) AS s FROM seg),
-       |wi AS (SELECT j.segment, j.x, j.x * g.n_g AS xn
-       |  FROM j JOIN seg g ON g.segment = j.segment)""".stripMargin
-    val (at, an) = ilogChainSql("la", "wi", "xn", "lxn", Seq("segment"))
-    sb ++= at
-    val (bt, bn) = ilogChainSql("lb", "seg", "s_g", "lsg", Seq("segment"))
-    sb ++= bt
-    sb ++= s""",
-       |win AS (
-       |  SELECT w.segment, CAST(sum(b.lsg - w.lxn) AS BIGINT)
-       |    AS theil_l_num
-       |  FROM $an w JOIN $bn b ON b.segment = w.segment GROUP BY 1),
-       |bw AS (SELECT g.segment, g.n_g, g.s_g * t.n AS sgn, t.s * g.n_g AS sng
-       |  FROM seg g CROSS JOIN tot t)""".stripMargin
-    val (ct, cn) = ilogChainSql("lc", "bw", "sgn", "lsgn",
-      Seq("segment", "n_g", "sng"))
-    sb ++= ct
-    val (dt, dn) = ilogChainSql("ld", cn, "sng", "lsng",
-      Seq("segment", "n_g", "lsgn"))
-    sb ++= dt
-    sb ++= s""",
-       |btw AS (SELECT CAST(sum(n_g * (lsng - lsgn)) AS BIGINT)
-       |    AS theil_l_num
-       |  FROM $dn),
-       |u AS (
-       |  SELECT g.segment AS component, g.n_g AS n_users,
-       |    g.s_g AS spend_cents, w.theil_l_num
-       |  FROM win w JOIN seg g ON g.segment = w.segment
-       |  UNION ALL
-       |  SELECT '(between)' AS component, t.n AS n_users,
-       |    t.s AS spend_cents, b.theil_l_num
-       |  FROM btw b CROSS JOIN tot t)
-       |SELECT component, n_users, spend_cents, theil_l_num,
-       |  CAST(CASE WHEN theil_l_num >= 0
-       |    THEN (CAST(theil_l_num AS HUGEINT) * 1000000) //
-       |      (CAST(n_users AS HUGEINT) * $twoF)
-       |    ELSE -((CAST(-theil_l_num AS HUGEINT) * 1000000) //
-       |      (CAST(n_users AS HUGEINT) * $twoF))
-       |  END AS BIGINT) AS theil_l_ppm
-       |FROM u ORDER BY component""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of TextAnalysis.vocabRichness (t48): the per-source
-    * type-frequency rollup and two ilogChainSql passes (V then N) for
-    * Herdan's C; Yule's K rides HUGEINT.
-    */
-  private lazy val vocabRichnessSql: String = {
-    val sb = new StringBuilder
-    sb ++= s"""WITH occ AS (SELECT source, unnest($Toks) AS token FROM documents),
-       |cnt AS (SELECT source, token, CAST(count(*) AS BIGINT) AS r
-       |  FROM occ GROUP BY 1, 2),
-       |st AS (SELECT source, CAST(sum(r) AS BIGINT) AS n_tokens,
-       |    CAST(count(*) AS BIGINT) AS v_types,
-       |    CAST(sum(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-       |    CAST(sum(r * r) AS BIGINT) AS s2
-       |  FROM cnt GROUP BY 1)""".stripMargin
-    val (at, an) = ilogChainSql("va", "st", "v_types", "lv",
-      Seq("source", "n_tokens", "v_types", "hapax", "s2"))
-    sb ++= at
-    val (bt, bn) = ilogChainSql("vb", an, "n_tokens", "ln",
-      Seq("source", "n_tokens", "v_types", "hapax", "s2", "lv"))
-    sb ++= bt
-    sb ++= s"""
-       |SELECT source, n_tokens, v_types, hapax, s2,
-       |  CAST((CAST(s2 - n_tokens AS HUGEINT) * 10000000000) //
-       |    (CAST(n_tokens AS HUGEINT) * n_tokens) AS BIGINT) AS yule_k_micro,
-       |  CASE WHEN ln > 0 THEN CAST(lv * 1000000 // ln AS BIGINT)
-       |       ELSE NULL END AS herdan_c_ppm
-       |FROM $bn ORDER BY source""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of Relational.theilIndex (q62): per-customer cents,
-    * the |segments|-row rollup, and four ilogChainSql passes — x·n_g
-    * and S_g for the within terms, S_g·n and S·n_g for the between
-    * terms; the ppm division is sign-explicit on HUGEINT (both engines
-    * only ever divide non-negative operands).
-    */
-  private lazy val theilSql: String = {
-    val twoF = 1L << graft.functions.IntLog.F
-    val sb = new StringBuilder
-    sb ++= """WITH sp AS (
-       |  SELECT o_custkey,
-       |    CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT)
-       |      AS x
-       |  FROM orders GROUP BY 1),
-       |j AS MATERIALIZED (
-       |  SELECT c.c_mktsegment AS segment, s.x
-       |  FROM sp s JOIN customer c ON c.c_custkey = s.o_custkey
-       |  WHERE s.x >= 1),
-       |seg AS MATERIALIZED (
-       |  SELECT segment, CAST(count(*) AS BIGINT) AS n_g,
-       |    CAST(sum(x) AS BIGINT) AS s_g
-       |  FROM j GROUP BY 1),
-       |tot AS (SELECT CAST(sum(n_g) AS BIGINT) AS n,
-       |    CAST(sum(s_g) AS BIGINT) AS s FROM seg),
-       |wi AS (SELECT j.segment, j.x, j.x * g.n_g AS xn
-       |  FROM j JOIN seg g ON g.segment = j.segment)""".stripMargin
-    val (at, an) = ilogChainSql("ha", "wi", "xn", "lxn", Seq("segment", "x"))
-    sb ++= at
-    val (bt, bn) = ilogChainSql("hb", "seg", "s_g", "lsg", Seq("segment"))
-    sb ++= bt
-    sb ++= s""",
-       |win AS (
-       |  SELECT w.segment, CAST(sum(w.x * (w.lxn - b.lsg)) AS BIGINT)
-       |    AS theil_num
-       |  FROM $an w JOIN $bn b ON b.segment = w.segment GROUP BY 1),
-       |bw AS (SELECT g.segment, g.s_g, g.s_g * t.n AS sgn, t.s * g.n_g AS sng
-       |  FROM seg g CROSS JOIN tot t)""".stripMargin
-    val (ct, cn) = ilogChainSql("hc", "bw", "sgn", "lsgn",
-      Seq("segment", "s_g", "sng"))
-    sb ++= ct
-    val (dt, dn) = ilogChainSql("hd", cn, "sng", "lsng",
-      Seq("segment", "s_g", "lsgn"))
-    sb ++= dt
-    sb ++= s""",
-       |btw AS (SELECT CAST(sum(s_g * (lsgn - lsng)) AS BIGINT) AS theil_num
-       |  FROM $dn),
-       |u AS (
-       |  SELECT g.segment AS component, g.n_g AS n_users,
-       |    g.s_g AS spend_cents, w.theil_num
-       |  FROM win w JOIN seg g ON g.segment = w.segment
-       |  UNION ALL
-       |  SELECT '(between)' AS component, t.n AS n_users,
-       |    t.s AS spend_cents, b.theil_num
-       |  FROM btw b CROSS JOIN tot t)
-       |SELECT component, n_users, spend_cents, theil_num,
-       |  CAST(CASE WHEN theil_num >= 0
-       |    THEN (CAST(theil_num AS HUGEINT) * 1000000) //
-       |      (CAST(spend_cents AS HUGEINT) * $twoF)
-       |    ELSE -((CAST(-theil_num AS HUGEINT) * 1000000) //
-       |      (CAST(spend_cents AS HUGEINT) * $twoF))
-       |  END AS BIGINT) AS theil_ppm
-       |FROM u ORDER BY component""".stripMargin
-    sb.toString
-  }
-
-  /** DuckDB mirror of Similarity.kCenter (s22): seed = min vec_id,
-    * then each generated round computes every unselected point's exact
-    * integer-grid min-distance to the selected set and takes the
-    * (mind DESC, vec_id) argmax — the greedy farthest-point sequence
-    * replayed declaratively.
-    */
-  private def kcenterSql(kSel: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH ${embCte("TRUE")},\n"
-    sb ++= "p AS MATERIALIZED (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),\n"
-    sb ++= "sel1 AS (SELECT CAST(1 AS INT) AS pick, CAST(min(vec_id) AS BIGINT) AS vec_id, CAST(0 AS BIGINT) AS mind FROM p)"
-    for (i <- 2 to kSel) {
-      val prev = (1 until i).map(j => s"SELECT vec_id FROM sel$j")
-        .mkString(" UNION ALL ")
-      sb ++= s""",
-         |selcur$i AS ($prev),
-         |pd$i AS (
-         |  SELECT a.vec_id, b.vec_id AS sid,
-         |    CAST(sum((a.xq - b.xq) * (a.xq - b.xq)) AS BIGINT) AS d2
-         |  FROM p a JOIN p b ON a.pos = b.pos
-         |  JOIN selcur$i s ON b.vec_id = s.vec_id
-         |  WHERE a.vec_id NOT IN (SELECT vec_id FROM selcur$i)
-         |  GROUP BY 1, 2),
-         |md$i AS (SELECT vec_id, min(d2) AS mind FROM pd$i GROUP BY 1),
-         |sel$i AS MATERIALIZED (
-         |  SELECT CAST($i AS INT) AS pick, vec_id, mind FROM (
-         |    SELECT vec_id, mind,
-         |      row_number() OVER (ORDER BY mind DESC, vec_id) AS rn
-         |    FROM md$i) r WHERE rn = 1)""".stripMargin
-    }
-    sb ++= "\n" + (1 to kSel).map(i => s"SELECT pick, vec_id, mind FROM sel$i")
-      .mkString(" UNION ALL ")
-    sb ++= "\nORDER BY pick"
-    sb.toString
-  }
-
-  /** Undirected + bidirectional views of the s16 graph, appended to
-    * [[KnnCtes]] by the graph-analytics oracles (s23/s24/s25): each
-    * directed top-3 edge canonicalized to (least, greatest) and
-    * deduped, then unioned both ways for degree/neighbor scans.
-    */
-  private lazy val UndirCtes: String =
-    """und AS MATERIALIZED (
-      |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-      |  FROM ranked WHERE rnk <= 3),
-      |bidir AS MATERIALIZED (
-      |  SELECT a AS src, b AS dst FROM und
-      |  UNION ALL SELECT b AS src, a AS dst FROM und)""".stripMargin
-
-  /** DuckDB mirror of Similarity.triangleCounts (s23): the canonical
-    * a<b<c enumeration (und ⋈ und on the middle vertex + the closing
-    * edge probe) materializes each triangle once; per-vertex counts
-    * come from unioning the three corners.
-    */
-  private lazy val triangleSql: String =
-    s"""WITH $KnnCtes,
-       |$UndirCtes,
-       |dg AS (SELECT v AS vec_id, CAST(count(*) AS BIGINT) AS deg FROM (
-       |  SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und) u GROUP BY 1),
-       |tri AS (
-       |  SELECT e1.a AS v1, e1.b AS v2, e2.b AS v3
-       |  FROM und e1 JOIN und e2 ON e1.b = e2.a
-       |  JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-       |pv AS (SELECT v AS vec_id, CAST(count(*) AS BIGINT) AS tri FROM (
-       |  SELECT v1 AS v FROM tri UNION ALL SELECT v2 FROM tri
-       |  UNION ALL SELECT v3 FROM tri) u GROUP BY 1)
-       |SELECT i.vec_id, coalesce(d.deg, CAST(0 AS BIGINT)) AS deg,
-       |  coalesce(p.tri, CAST(0 AS BIGINT)) AS tri
-       |FROM embeddings i
-       |LEFT JOIN dg d ON i.vec_id = d.vec_id
-       |LEFT JOIN pv p ON i.vec_id = p.vec_id
-       |ORDER BY i.vec_id""".stripMargin
-
-  /** DuckDB mirror of Similarity.labelPropagation (s24): each
-    * synchronous round is one generated CTE trio — neighbor-label
-    * counts through the bidirectional edges, the (cnt DESC, lbl)
-    * argmax, and the coalesced update (isolated vertices keep their
-    * previous label). AS MATERIALIZED per round — the bpeSql lesson.
-    */
-  private def lpaSql(rounds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH $KnnCtes,\n$UndirCtes,\n"
-    sb ++= "lbl0 AS (SELECT vec_id, vec_id AS lbl FROM embeddings)"
-    for (i <- 1 to rounds) {
-      sb ++= s""",
-         |nl$i AS (
-         |  SELECT b.dst AS vec_id, l.lbl, count(*) AS cnt
-         |  FROM bidir b JOIN lbl${i - 1} l ON l.vec_id = b.src
-         |  GROUP BY 1, 2),
-         |pk$i AS (
-         |  SELECT vec_id, lbl AS nlbl FROM (
-         |    SELECT vec_id, lbl,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cnt DESC, lbl) AS rn
-         |    FROM nl$i) r WHERE rn = 1),
-         |lbl$i AS MATERIALIZED (
-         |  SELECT p.vec_id, coalesce(k.nlbl, p.lbl) AS lbl
-         |  FROM lbl${i - 1} p LEFT JOIN pk$i k ON p.vec_id = k.vec_id)""".stripMargin
-    }
-    sb ++= s"\nSELECT vec_id, lbl FROM lbl$rounds ORDER BY vec_id"
-    sb.result()
-  }
-
-  /** DuckDB mirror of Similarity.kCorePeel (s25): the mutual edge
-    * set is ranked self-joined on the reversed (src, dst) key (both
-    * directions rnk <= 3); each peel round recomputes
-    * survivor-restricted degrees (two semi-join-shaped joins against
-    * the previous alive set) and keeps deg >= coreK; the final
-    * projection re-derives within-core degree over the last survivor
-    * set.
-    */
-  private def kcorePeelSql(coreK: Int, rounds: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH $KnnCtes,\n"
-    sb ++=
-      """mund AS MATERIALIZED (
-        |  SELECT r1.src AS a, r1.dst AS b
-        |  FROM ranked r1 JOIN ranked r2
-        |    ON r1.src = r2.dst AND r1.dst = r2.src
-        |  WHERE r1.rnk <= 3 AND r2.rnk <= 3 AND r1.src < r1.dst),
-        |bidir AS MATERIALIZED (
-        |  SELECT a AS src, b AS dst FROM mund
-        |  UNION ALL SELECT b AS src, a AS dst FROM mund),
-        |""".stripMargin
-    sb ++= "alive0 AS (SELECT vec_id FROM embeddings)"
-    for (i <- 1 to rounds) {
-      sb ++= s""",
-         |dg$i AS (
-         |  SELECT b.src AS vec_id, CAST(count(*) AS BIGINT) AS deg
-         |  FROM bidir b JOIN alive${i - 1} x ON x.vec_id = b.src
-         |  JOIN alive${i - 1} y ON y.vec_id = b.dst
-         |  GROUP BY 1),
-         |alive$i AS MATERIALIZED (
-         |  SELECT vec_id FROM dg$i WHERE deg >= $coreK)""".stripMargin
-    }
-    sb ++= s""",
-       |fdeg AS (
-       |  SELECT b.src AS vec_id, CAST(count(*) AS BIGINT) AS deg
-       |  FROM bidir b JOIN alive$rounds x ON x.vec_id = b.src
-       |  JOIN alive$rounds y ON y.vec_id = b.dst
-       |  GROUP BY 1)
-       |SELECT a.vec_id, coalesce(f.deg, CAST(0 AS BIGINT)) AS deg
-       |FROM alive$rounds a LEFT JOIN fdeg f ON a.vec_id = f.vec_id
-       |ORDER BY a.vec_id""".stripMargin
-    sb.result()
-  }
-
-  /** DuckDB mirror of Similarity.linkPrediction (s26): wedges through
-    * the shared neighbor z (bidir self-join, a < b) carry z's degree;
-    * candidates aggregate cn and the integer resource-allocation sum
-    * Σ 10^6 // deg(z), drop existing und edges, join both endpoint
-    * degrees, and the (cn DESC, ra DESC, a, b) top-N ranks.
-    */
-  private def linkPredSql(topN: Int): String =
-    s"""WITH $KnnCtes,
-       |$UndirCtes,
-       |dg AS MATERIALIZED (
-       |  SELECT src, CAST(count(*) AS BIGINT) AS deg FROM bidir GROUP BY 1),
-       |wedge AS (
-       |  SELECT x.src AS a, y.src AS b, d.deg AS zdeg
-       |  FROM bidir x JOIN bidir y ON x.dst = y.dst AND x.src < y.src
-       |  JOIN dg d ON d.src = x.dst),
-       |cand AS (
-       |  SELECT w.a, w.b, CAST(count(*) AS BIGINT) AS cn,
-       |    CAST(sum(1000000 // zdeg) AS BIGINT) AS ra
-       |  FROM wedge w GROUP BY 1, 2),
-       |nonedge AS (
-       |  SELECT c.* FROM cand c
-       |  WHERE NOT EXISTS (SELECT 1 FROM und u WHERE u.a = c.a AND u.b = c.b)),
-       |lpsc AS (
-       |  SELECT n.a, n.b, n.cn, n.ra, da.deg * db.deg AS pa
-       |  FROM nonedge n
-       |  JOIN dg da ON da.src = n.a
-       |  JOIN dg db ON db.src = n.b)
-       |SELECT CAST(rn AS INT) AS rnk, a, b, cn, ra, pa FROM (
-       |  SELECT *, row_number() OVER (ORDER BY cn DESC, ra DESC, a, b) AS rn
-       |  FROM lpsc) r
-       |WHERE rn <= $topN ORDER BY rnk""".stripMargin
-
-  /** DuckDB mirror of TextAnalysis.textRankKeywords (t28): the word
-    * co-occurrence graph (adjacent tokens, canonical undirected,
-    * weight = count, self-pairs dropped) from the shared tokenization,
-    * then the s21 fixed-point rounds with per-edge weights —
-    * contribution (pr·w) // strength(src), damped 150000 + (85·in) //
-    * 100. AS MATERIALIZED per round — the bpeSql lesson.
-    */
-  private def textRankSql(prRounds: Int, topN: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH ${tkCte("")},\n"
-    sb ++=
-      """adj AS (
-        |  SELECT list_extract(tk, i) AS w1, list_extract(tk, i+1) AS w2
-        |  FROM (SELECT tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) AS i
-        |        FROM tk) t),
-        |undw AS MATERIALIZED (
-        |  SELECT least(w1, w2) AS a, greatest(w1, w2) AS b,
-        |    CAST(count(*) AS BIGINT) AS w
-        |  FROM adj WHERE w1 <> w2 GROUP BY 1, 2),
-        |bid AS MATERIALIZED (
-        |  SELECT a AS src, b AS dst, w FROM undw
-        |  UNION ALL SELECT b AS src, a AS dst, w FROM undw),
-        |st AS (SELECT src, CAST(sum(w) AS BIGINT) AS s FROM bid GROUP BY 1),
-        |nodes AS MATERIALIZED (SELECT DISTINCT src AS word FROM bid),
-        |pr0 AS (SELECT word, CAST(1000000 AS BIGINT) AS pr FROM nodes)""".stripMargin
-    for (i <- 1 to prRounds) {
-      sb ++= s""",
-         |in$i AS (
-         |  SELECT e.dst AS word, CAST(sum((p.pr * e.w) // t.s) AS BIGINT) AS inm
-         |  FROM bid e JOIN st t ON e.src = t.src
-         |  JOIN pr${i - 1} p ON p.word = e.src
-         |  GROUP BY 1),
-         |pr$i AS MATERIALIZED (
-         |  SELECT n.word,
-         |    CAST(150000 + (85 * coalesce(m.inm, 0)) // 100 AS BIGINT) AS pr
-         |  FROM nodes n LEFT JOIN in$i m ON n.word = m.word)""".stripMargin
-    }
-    sb ++= s"""
-       |SELECT CAST(rn AS INT) AS rnk, word, pr, s FROM (
-       |  SELECT p.word, p.pr, t.s,
-       |    row_number() OVER (ORDER BY p.pr DESC, p.word) AS rn
-       |  FROM pr$prRounds p JOIN st t ON t.src = p.word) r
-       |WHERE rn <= $topN ORDER BY rnk""".stripMargin
-    sb.result()
-  }
-
-  /** DuckDB mirror of Similarity.annBeam (s18): KnnCtes supplies the
-    * trained cells (fin/asg), norms and within-cell ranked edges —
-    * the literal s16 graph — then the beam search unrolls to a fixed
-    * CTE chain: entry = each query's `nEntry` nearest cells (ranked
-    * in `fin`, the all-pairs exact distances to the final centroids)
-    * entered at the cell medoid; each hop materializes frontier
-    * (per-query top-`beam` of visited), expansion through the edge
-    * list, a NOT EXISTS anti-join against visited, exact rounded-
-    * cosine scoring of the fresh vertices, and the growing visited
-    * union. AS MATERIALIZED on every multiply-referenced CTE — the
-    * bpeSql lesson (without it the plan re-expands 2^hops times).
-    */
-  private def beamSql(nEntry: Int, beam: Int, hops: Int, topK: Int): String = {
-    val sb = new StringBuilder
-    sb ++= s"WITH $KnnCtes,\n"
-    sb ++= "edges AS MATERIALIZED (SELECT src, dst FROM ranked WHERE rnk <= 3),\n"
-    sb ++= """med AS MATERIALIZED (
-             |  SELECT cluster, vec_id AS cand FROM (
-             |    SELECT a.cluster, a.vec_id,
-             |      row_number() OVER (PARTITION BY a.cluster
-             |        ORDER BY f.dist2q, a.vec_id) AS rn
-             |    FROM asg a JOIN fin f
-             |      ON f.vec_id = a.vec_id AND f.cluster = a.cluster) r
-             |  WHERE rn = 1),
-             |""".stripMargin
-    sb ++= s"""qc AS (
-              |  SELECT vec_id AS qid, cluster FROM (
-              |    SELECT vec_id, cluster,
-              |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-              |    FROM fin WHERE vec_id < 8) r WHERE rn <= $nEntry),
-              |v0 AS (SELECT DISTINCT qc.qid, m.cand FROM qc JOIN med m ON qc.cluster = m.cluster),
-              |""".stripMargin
-    // scoring a (qid, cand) frame: exact dot via the e expansion, then
-    // one rounded IEEE division by the norms (the s01/s16 discipline)
-    def scoreCtes(tag: String, src: String): String =
-      s"""ds$tag AS (
-         |  SELECT w.qid, w.cand, sum(eq.x * ec.x) AS dp
-         |  FROM $src w JOIN e eq ON eq.vec_id = w.qid
-         |  JOIN e ec ON ec.vec_id = w.cand AND ec.i = eq.i
-         |  GROUP BY 1, 2),
-         |ns$tag AS (
-         |  SELECT ds.qid, ds.cand, round(ds.dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM ds$tag ds JOIN n nq ON nq.vec_id = ds.qid
-         |  JOIN n nc ON nc.vec_id = ds.cand)""".stripMargin
-    sb ++= scoreCtes("0", "v0")
-    sb ++= ",\nvis0 AS MATERIALIZED (SELECT * FROM ns0)"
-    for (i <- 1 to hops) {
-      sb ++= s""",
-                |fr$i AS (
-                |  SELECT qid, cand FROM (
-                |    SELECT qid, cand,
-                |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS rn
-                |    FROM vis${i - 1}) r WHERE rn <= $beam),
-                |nw$i AS MATERIALIZED (
-                |  SELECT DISTINCT f.qid, ed.dst AS cand
-                |  FROM fr$i f JOIN edges ed ON ed.src = f.cand
-                |  WHERE NOT EXISTS (SELECT 1 FROM vis${i - 1} v
-                |                    WHERE v.qid = f.qid AND v.cand = ed.dst)),
-                |""".stripMargin
-      sb ++= scoreCtes(i.toString, s"nw$i")
-      sb ++= s""",
-                |vis$i AS MATERIALIZED (
-                |  SELECT * FROM vis${i - 1} UNION ALL SELECT * FROM ns$i)""".stripMargin
-    }
-    sb ++= s"""
-              |SELECT qid, cand, cos, rnk FROM (
-              |  SELECT qid, cand, cos,
-              |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-              |  FROM vis$hops WHERE cand <> qid) r
-              |WHERE rnk <= $topK ORDER BY qid, rnk""".stripMargin
-    sb.result()
-  }
-
-  /** DuckDB mirror of Similarity.annMmr (s19): the s01 scoring CTEs
-    * put the pool on the 1e-6 integer grid (ONE rounding:
-    * round(cos·1e6) as BIGINT), pairwise within-pool sims land on the
-    * same grid, and the greedy loop unrolls to k−1 rounds of
-    * (remaining = pool − selected) → max-sim-to-selected → integer
-    * MMR objective argmax. AS MATERIALIZED on every multiply-
-    * referenced CTE (the bpeSql lesson).
-    */
-  private def mmrSql(poolK: Int, k: Int, lambdaNum: Int, lambdaDen: Int): String = {
-    val pen = lambdaDen - lambdaNum
-    val sb = new StringBuilder
-    sb ++= s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-              |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-              |d AS (
-              |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-              |  FROM e q JOIN e c ON q.i = c.i
-              |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-              |  GROUP BY 1, 2
-              |),
-              |pool AS MATERIALIZED (
-              |  SELECT qid, cand, rel6 FROM (
-              |    SELECT qid, cand,
-              |      CAST(round(dp / sqrt(nq.nrm * nc.nrm) * 1e6, 0) AS BIGINT) AS rel6,
-              |      row_number() OVER (PARTITION BY qid
-              |        ORDER BY round(dp / sqrt(nq.nrm * nc.nrm) * 1e6, 0) DESC, cand) AS rn
-              |    FROM d JOIN n nq ON qid = nq.vec_id JOIN n nc ON cand = nc.vec_id) r
-              |  WHERE rn <= $poolK),
-              |prs AS MATERIALIZED (
-              |  SELECT a.qid, a.cand AS ca, b.cand AS cb,
-              |    CAST(round(sum(ea.x * eb.x) / sqrt(na.nrm * nb.nrm) * 1e6, 0) AS BIGINT) AS sim6
-              |  FROM pool a JOIN pool b ON a.qid = b.qid AND a.cand <> b.cand
-              |  JOIN e ea ON ea.vec_id = a.cand JOIN e eb ON eb.vec_id = b.cand AND eb.i = ea.i
-              |  JOIN n na ON na.vec_id = a.cand JOIN n nb ON nb.vec_id = b.cand
-              |  GROUP BY 1, 2, 3, na.nrm, nb.nrm),
-              |sel1 AS MATERIALIZED (
-              |  SELECT qid, cand, rel6, $lambdaNum * rel6 AS mmr6, 1 AS pick FROM (
-              |    SELECT qid, cand, rel6,
-              |      row_number() OVER (PARTITION BY qid
-              |        ORDER BY $lambdaNum * rel6 DESC, cand) AS rn
-              |    FROM pool) r WHERE rn = 1)""".stripMargin
-    for (i <- 2 to k) {
-      sb ++= s""",
-                |rem$i AS (
-                |  SELECT p.qid, p.cand, p.rel6 FROM pool p
-                |  WHERE NOT EXISTS (SELECT 1 FROM sel${i - 1} s
-                |                    WHERE s.qid = p.qid AND s.cand = p.cand)),
-                |ms$i AS (
-                |  SELECT r.qid, r.cand, max(pr.sim6) AS maxsim6
-                |  FROM rem$i r JOIN prs pr ON pr.qid = r.qid AND pr.ca = r.cand
-                |  JOIN sel${i - 1} s ON s.qid = pr.qid AND s.cand = pr.cb
-                |  GROUP BY 1, 2),
-                |pk$i AS (
-                |  SELECT qid, cand, rel6, mmr6, $i AS pick FROM (
-                |    SELECT r.qid, r.cand, r.rel6,
-                |      $lambdaNum * r.rel6 - $pen * m.maxsim6 AS mmr6,
-                |      row_number() OVER (PARTITION BY r.qid
-                |        ORDER BY $lambdaNum * r.rel6 - $pen * m.maxsim6 DESC, r.cand) AS rn
-                |    FROM rem$i r JOIN ms$i m ON m.qid = r.qid AND m.cand = r.cand) t
-                |  WHERE rn = 1),
-                |sel$i AS MATERIALIZED (
-                |  SELECT * FROM sel${i - 1} UNION ALL SELECT * FROM pk$i)""".stripMargin
-    }
-    sb ++= s"""
-              |SELECT qid, cand, rel6, CAST(mmr6 AS BIGINT) AS mmr6, pick
-              |FROM sel$k ORDER BY qid, pick""".stripMargin
-    sb.result()
-  }
-
-  /** Shared generator for the s15/s17 IVF+PQ oracles: the ivfCtes
-    * coarse quantizer (cells + probes vs the final c2), pqLloydCtes
-    * subspace codebooks over candidate sub-points `c` — RAW for s15,
-    * RESIDUAL (xq − assigned coarse cq) for s17 — and the probed-cells
-    * ADC; the residual form adds the exact per-(query, cell) coarse
-    * term q·c_cell to the score (q·x ≈ q·c_cell + q·r̂).
-    */
-  private def ivfPqSql(residual: Boolean): String = {
-    val cCte =
-      if (!residual)
-        "c AS (SELECT vec_id, CAST((pos - 1) // 16 AS INT) AS sub, pos, xq FROM cp)"
-      else
-        """c AS (
-          |  SELECT cp.vec_id, CAST((cp.pos - 1) // 16 AS INT) AS sub, cp.pos,
-          |    cp.xq - cc.cq AS xq
-          |  FROM cp JOIN cells cl ON cp.vec_id = cl.vec_id
-          |  JOIN c2 cc ON cc.cluster = cl.cell AND cc.pos = cp.pos
-          |)""".stripMargin
-    val adcCtes =
-      if (!residual)
-        """adc AS (SELECT p.qid, codes.vec_id, CAST(sum(lutq) AS BIGINT) AS adcq
-          |        FROM codes
-          |        JOIN cells cl ON codes.vec_id = cl.vec_id
-          |        JOIN probes p ON p.cell = cl.cell
-          |        JOIN lut ON codes.sub = lut.sub AND codes.code = lut.code
-          |          AND lut.qid = p.qid
-          |        WHERE codes.vec_id <> p.qid
-          |        GROUP BY 1, 2)""".stripMargin
-      else
-        """qc AS (SELECT qp.vec_id AS qid, p.cell,
-          |         CAST(sum(qp.xq * cc.cq) AS BIGINT) AS t1q
-          |       FROM qp JOIN probes p ON p.qid = qp.vec_id
-          |       JOIN c2 cc ON cc.cluster = p.cell AND cc.pos = qp.pos
-          |       GROUP BY 1, 2),
-          |radc AS (SELECT p.qid, codes.vec_id, cl.cell,
-          |           CAST(sum(lutq) AS BIGINT) AS rq
-          |         FROM codes
-          |         JOIN cells cl ON codes.vec_id = cl.vec_id
-          |         JOIN probes p ON p.cell = cl.cell
-          |         JOIN lut ON codes.sub = lut.sub AND codes.code = lut.code
-          |           AND lut.qid = p.qid
-          |         WHERE codes.vec_id <> p.qid
-          |         GROUP BY 1, 2, 3),
-          |adc AS (SELECT radc.qid, radc.vec_id,
-          |          CAST(rq + qc.t1q AS BIGINT) AS adcq
-          |        FROM radc JOIN qc ON qc.qid = radc.qid AND qc.cell = radc.cell)""".stripMargin
-    s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-       |${ivfCtes(8, 2)},
-       |dc AS (
-       |  SELECT cp.vec_id, c.cluster,
-       |    CAST(sum((cp.xq - c.cq) * (cp.xq - c.cq)) AS BIGINT) AS dist2q
-       |  FROM cp JOIN c2 c ON cp.pos = c.pos GROUP BY 1, 2
-       |),
-       |cells AS (
-       |  SELECT vec_id, cluster AS cell FROM (
-       |    SELECT vec_id, cluster,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-       |    FROM dc) r WHERE rn = 1
-       |),
-       |dq AS (
-       |  SELECT qp.vec_id, c.cluster,
-       |    CAST(sum((qp.xq - c.cq) * (qp.xq - c.cq)) AS BIGINT) AS dist2q
-       |  FROM qp JOIN c2 c ON qp.pos = c.pos GROUP BY 1, 2
-       |),
-       |probes AS (
-       |  SELECT vec_id AS qid, cluster AS cell FROM (
-       |    SELECT vec_id, cluster,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-       |    FROM dq) r WHERE rn <= 4
-       |),
-       |$cCte,
-       |${pqLloydCtes(8, 2)},
-       |enc AS (
-       |  SELECT vec_id, sub, code,
-       |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist2q, code) AS rn
-       |  FROM (SELECT c.vec_id, c.sub, cb.code,
-       |          CAST(sum((c.xq - cb.cq) * (c.xq - cb.cq)) AS BIGINT) AS dist2q
-       |        FROM c JOIN cb2 cb ON c.sub = cb.sub AND c.pos = cb.pos
-       |        GROUP BY 1, 2, 3) d),
-       |codes AS (SELECT vec_id, sub, code FROM enc WHERE rn = 1),
-       |qsp AS (SELECT vec_id AS qid, CAST((pos - 1) // 16 AS INT) AS sub, pos, xq
-       |        FROM qp),
-       |lut AS (SELECT qid, cb.sub, cb.code, CAST(sum(qsp.xq * cb.cq) AS BIGINT) AS lutq
-       |        FROM qsp JOIN cb2 cb ON qsp.sub = cb.sub AND qsp.pos = cb.pos
-       |        GROUP BY 1, 2, 3),
-       |$adcCtes,
-       |short AS (SELECT qid, vec_id, adcq,
-       |            row_number() OVER (PARTITION BY qid ORDER BY adcq DESC, vec_id) AS srn
-       |          FROM adc),
-       |n AS (SELECT vec_id, list_reduce(
-       |        list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
-       |        (x, y) -> x + y) AS nrm
-       |      FROM embeddings),
-       |rer AS (
-       |  SELECT s.qid, s.vec_id AS cand, s.adcq,
-       |    round(list_reduce(list_transform(list_zip(eq.embedding, ec.embedding),
-       |        z -> z[1]::DOUBLE * z[2]::DOUBLE), (x, y) -> x + y)
-       |      / sqrt(nq.nrm * nc.nrm), 6) AS cos
-       |  FROM short s
-       |  JOIN embeddings eq ON eq.vec_id = s.qid
-       |  JOIN embeddings ec ON ec.vec_id = s.vec_id
-       |  JOIN n nq ON nq.vec_id = s.qid
-       |  JOIN n nc ON nc.vec_id = s.vec_id
-       |  WHERE s.srn <= 16),
-       |fin AS (SELECT qid, cand, adcq, cos,
-       |          CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-       |        FROM rer)
-       |SELECT qid, cand, adcq, cos, rnk FROM fin WHERE rnk <= 3
-       |ORDER BY qid, rnk""".stripMargin
-  }
-
-  /** DuckDB mirror of Bpe.learnMerges: a generated `numMerges`-round
-    * iterative CTE chain replaying the published BPE learning loop
-    * declaratively. Per round: a wcount-weighted adjacent-pair
-    * aggregate over the symbolized word table, the deterministic
-    * argmax (count desc, then (lhs, rhs) lexicographic — binary
-    * collation both engines since tokens are [a-z0-9]+), and a
-    * list_reduce rewrite that merges leftmost-first non-overlapping.
-    * The reduce carries the emitted symbol list directly: a
-    * just-merged tail can never spuriously re-match as `lhs` because
-    * the merged symbol lhs||rhs differs from lhs whenever rhs is
-    * non-empty. Early exhaustion degrades identically: an empty b$$i
-    * empties every later round, so both engines emit the same short
-    * merge list.
-    */
-  private def bpeSql(numMerges: Int): String = {
-    val sb = new StringBuilder
-    // Every round table is AS MATERIALIZED: DuckDB inlines plain CTEs,
-    // and s$i / b$i are each referenced twice (next round + the final
-    // union), so un-materialized the plan tree doubles per round —
-    // 2^numMerges scans of the base parquet. Materialization makes the
-    // chain linear, mirroring the Spark side's per-round checkpoint.
-    sb ++= "WITH wc AS MATERIALIZED (\n"
-    sb ++= s"  SELECT word, count(*) AS wcount\n"
-    sb ++= s"  FROM (SELECT unnest($Toks) AS word FROM documents)\n"
-    sb ++= "  GROUP BY word),\n"
-    sb ++= "s0 AS MATERIALIZED (SELECT list_transform(range(1, length(word) + 1),\n"
-    sb ++= "         i -> word[CAST(i AS INT)]) AS syms, wcount FROM wc)"
-    for (i <- 0 until numMerges) {
-      sb ++= ",\n"
-      sb ++= s"p$i AS MATERIALIZED (\n"
-      sb ++= "  SELECT s.syms[j] AS lhs, s.syms[j + 1] AS rhs, sum(s.wcount) AS cnt\n"
-      sb ++= s"  FROM s$i s, UNNEST(range(1, len(s.syms))) AS t(j)\n"
-      sb ++= "  GROUP BY 1, 2),\n"
-      sb ++= s"b$i AS MATERIALIZED (SELECT lhs, rhs FROM p$i ORDER BY cnt DESC, lhs, rhs LIMIT 1),\n"
-      sb ++= s"s${i + 1} AS MATERIALIZED (\n"
-      sb ++= "  SELECT list_reduce(list_transform(s.syms, x -> [x]),\n"
-      sb ++= "    (acc, x) -> CASE WHEN acc[len(acc)] = b.lhs AND x[1] = b.rhs\n"
-      sb ++= "                THEN acc[1:len(acc) - 1] || [b.lhs || b.rhs]\n"
-      sb ++= "                ELSE acc || x END) AS syms, s.wcount\n"
-      sb ++= s"  FROM s$i s CROSS JOIN b$i b)"
-    }
-    sb ++= "\nSELECT * FROM (\n"
-    sb ++= (0 until numMerges).map(i =>
-      s"  SELECT $i AS rnk, lhs, rhs FROM b$i").mkString("\n  UNION ALL\n")
-    sb ++= "\n) ORDER BY rnk"
-    sb.result()
-  }
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. d03_minhash_lsh_hashed and
-    * d04_simhash_pairs_hashed are intentionally omitted (xxhash64 ids
-    * are not SQL-expressible → rows-only check; exact-duplicate parity
-    * with the dictionary forms is spec-asserted in DedupSpec and
-    * SigAggParitySpec/SimHashParitySpec — see COVERAGE.md "Permanently
-    * spec-gated entries"). t21_learned_bpe is likewise omitted (the
-    * per-doc ENCODE under the learned merges is beyond SQL); BpeSpec
-    * carries its correctness weight, and t22_bpe_merges now
-    * hash-gates the LEARNING loop itself via a generated iterative
-    * CTE chain (bpeSql), so the fixed point t21 encodes against is
-    * oracle-proven.
-    */
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(l_quantity) AS BIGINT) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS sum_disc_price,
-        |  count(*) AS count_order,
-        |  count(DISTINCT l_orderkey) AS n_orders,
-        |  CAST(max(l_quantity) AS BIGINT) AS max_qty
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q02_range_filter" ->
-      """SELECT l_returnflag, count(*) AS cnt, CAST(sum(l_quantity) AS BIGINT) AS sum_qty
-        |FROM lineitem
-        |WHERE l_quantity BETWEEN 10 AND 20
-        |  AND l_shipdate BETWEEN TIMESTAMP '1995-06-01' AND TIMESTAMP '1997-06-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q03_like_filter" ->
-      """SELECT p_brand, count(*) AS cnt FROM part
-        |WHERE p_name LIKE '%widget' OR p_name LIKE 'blue%'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q04_map_tags" ->
-      """SELECT p_partkey, p_brand AS brand, p_type AS typ FROM part
-        |WHERE p_name LIKE '%bolt%' ORDER BY p_partkey""".stripMargin,
-
-    "q05_unnest_ordinality" ->
-      """SELECT l_orderkey,
-        |  CAST(row_number() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_quantity) AS INT) AS idx,
-        |  CAST(l_quantity AS BIGINT) AS qty
-        |FROM lineitem ORDER BY l_orderkey, idx""".stripMargin,
-
-    "q06_reassemble_join" ->
-      """SELECT l_orderkey, string_agg(p_name, ',' ORDER BY l_linenumber, p_name) AS part_names,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q07_latest_version" ->
-      """SELECT e.user_id, e.event_id, e.event_type, e.value
-        |FROM events e
-        |JOIN (SELECT user_id, max(event_id) AS max_id FROM events GROUP BY user_id) m
-        |  ON e.user_id = m.user_id AND e.event_id = m.max_id
-        |ORDER BY e.user_id""".stripMargin,
-
-    "q07_latest_version_win" ->
-      """SELECT e.user_id, e.event_id, e.event_type, e.value
-        |FROM events e
-        |JOIN (SELECT user_id, max(event_id) AS max_id FROM events GROUP BY user_id) m
-        |  ON e.user_id = m.user_id AND e.event_id = m.max_id
-        |ORDER BY e.user_id""".stripMargin,
-
-    "q08_arbitrary" ->
-      """SELECT p_brand, arg_min(p_name, p_partkey) AS any_name, count(*) AS cnt
-        |FROM part GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q09_month_trunc" ->
-      """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-        |  count(*) AS n_orders, round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q10_union_all" ->
-      """SELECT 'customer' AS kind, n_name, count(*) AS cnt
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey GROUP BY n_name
-        |UNION ALL
-        |SELECT 'supplier' AS kind, n_name, count(*) AS cnt
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey GROUP BY n_name
-        |ORDER BY kind, n_name""".stripMargin,
-
-    "q11_case_order" ->
-      """SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 2) AS total,
-        |  CAST(CASE WHEN o_orderstatus = 'O' THEN 1 WHEN o_orderstatus = 'F' THEN 2
-        |            WHEN o_orderstatus = 'P' THEN 3 ELSE 4 END AS INT) AS status_rank
-        |FROM orders GROUP BY 1 ORDER BY status_rank, o_orderstatus""".stripMargin,
-
-    "q12_window_lag" ->
-      """SELECT user_id, event_id, event_type, value,
-        |  CAST(row_number() OVER w AS INT) AS rn,
-        |  value - lag(value, 1) OVER w AS delta
-        |FROM events WHERE user_id < 25
-        |WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q13_topn_per_group" ->
-      """WITH rev AS (
-        |  SELECT p_brand, p_partkey,
-        |    round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS rev
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1, 2
-        |), ranked AS (
-        |  SELECT p_brand, p_partkey, rev,
-        |    CAST(row_number() OVER (PARTITION BY p_brand ORDER BY rev DESC, p_partkey) AS INT) AS rn
-        |  FROM rev
-        |)
-        |SELECT p_brand, p_partkey, rev, rn FROM ranked WHERE rn <= 3
-        |ORDER BY p_brand, rn""".stripMargin,
-
-    "q14_exists_anti" ->
-      """SELECT 'with_orders' AS kind, count(*) AS cnt FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |UNION ALL
-        |SELECT 'without_orders' AS kind, count(*) AS cnt FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY kind""".stripMargin,
-
-    "q15_regex_extract" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(regexp_extract(props, '([0-9]+)', 1) AS INT)) AS BIGINT) AS sum_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q16_daily_windows" ->
-      """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
-        |  count(*) AS n, round(sum(value), 4) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q17_rollup" ->
-      """SELECT o_orderstatus, CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-        |  count(*) AS n, round(sum(o_totalprice), 2) AS total,
-        |  CAST(GROUPING(o_orderstatus, CAST(date_trunc('month', o_orderdate) AS DATE)) AS INT) AS gid
-        |FROM orders
-        |GROUP BY ROLLUP (o_orderstatus, CAST(date_trunc('month', o_orderdate) AS DATE))
-        |ORDER BY gid, o_orderstatus, month""".stripMargin,
-
-    "q30_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total,
-        |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS INT) AS gid
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
-        |  (o_orderstatus), (o_orderpriority))
-        |ORDER BY gid, o_orderstatus, o_orderpriority""".stripMargin,
-
-    "q18_setops" ->
-      """SELECT 'both' AS kind, nkey FROM (
-        |  SELECT DISTINCT c_nationkey AS nkey FROM customer
-        |  INTERSECT
-        |  SELECT DISTINCT s_nationkey AS nkey FROM supplier)
-        |UNION ALL
-        |SELECT 'cust_only' AS kind, nkey FROM (
-        |  SELECT DISTINCT c_nationkey AS nkey FROM customer
-        |  EXCEPT
-        |  SELECT DISTINCT s_nationkey AS nkey FROM supplier)
-        |ORDER BY kind, nkey""".stripMargin,
-
-    "q19_topk_limit" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q20_json_extract" ->
-      """SELECT event_id, event_type,
-        |  CAST(json_extract_string(props, '$.k') AS INT) AS k
-        |FROM events
-        |WHERE json_extract_string(props, '$.k') IS NOT NULL
-        |  AND CAST(json_extract_string(props, '$.k') AS INT) % 7 = 0
-        |ORDER BY event_id""".stripMargin,
-
-    "q21_scalar_pack" ->
-      """SELECT p_partkey,
-        |  upper(p_name) AS uname,
-        |  substr(p_name, 1, 3) AS pre,
-        |  p_brand || '-' || p_type AS label,
-        |  CAST(length(p_name) AS INT) AS name_len,
-        |  CAST(abs(p_size - 25) AS INT) AS size_dist,
-        |  CAST(ceil(p_retailprice) AS BIGINT) AS price_ceil,
-        |  coalesce(nullif(p_brand, 'Brand#1'), 'OTHER') AS brand_or
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q22_approx_distinct" ->
-      """SELECT l_returnflag,
-        |  count(DISTINCT l_orderkey) AS n_orders,
-        |  count(DISTINCT l_partkey) AS n_parts,
-        |  1 AS orders_within_5pct,
-        |  1 AS parts_within_5pct
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // q37: KMV sketch — md5 STRING order picks the k smallest distinct
-    // keys (engine-independent), only the kth value's first 8 hex
-    // digits become a number (strpos Horner chain, exact < 2^32 so the
-    // int→double conversion and one division are IEEE-identical)
-    "q37_kmv_distinct" ->
-      s"""WITH h AS (SELECT DISTINCT lang, md5(text) AS h FROM documents),
-         |exact AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_exact
-         |          FROM h GROUP BY 1),
-         |top AS (SELECT lang, h FROM (
-         |    SELECT lang, h, row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
-         |    FROM h) r WHERE rn <= 32),
-         |kth AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_keys,
-         |          max(h) AS kth_hash FROM top GROUP BY 1)
-         |SELECT k.lang, e.n_exact, k.n_keys, k.kth_hash,
-         |  round(CASE WHEN k.n_keys < 32 THEN CAST(e.n_exact AS DOUBLE)
-         |    ELSE 31.0 * 4294967296 /
-         |      greatest(${hexIntSql("k.kth_hash", 8)}, 1) END, 4) AS est
-         |FROM kth k JOIN exact e ON k.lang = e.lang
-         |ORDER BY k.lang""".stripMargin,
-
-    // q38: HyperLogLog from md5 — register j = first hex digit (m=16),
-    // rank = 33 − bit-length of the next 32 bits (bin() strips leading
-    // zeros identically in both engines), Σ2^−M carried as the exact
-    // BIGINT Σ2^(40−M). Float literals as 0.673e0 etc. force DOUBLE
-    // (a bare 0.673 is DECIMAL in DuckDB → different rounding path).
-    "q38_hll_distinct" ->
-      s"""WITH h AS (SELECT DISTINCT lang, md5(text) AS h FROM documents),
-         |hx AS (SELECT lang, substr(h, 1, 1) AS d1, substr(h, 2, 8) AS d8 FROM h),
-         |r AS (SELECT lang,
-         |        CAST(strpos('0123456789abcdef', d1) - 1 AS INT) AS j,
-         |        ${hexIntSql("d8", 8)} AS v
-         |      FROM hx),
-         |rk AS (SELECT lang, j,
-         |         CAST(CASE WHEN v = 0 THEN 33 ELSE 33 - length(bin(v)) END AS INT) AS rho
-         |       FROM r),
-         |regs AS (SELECT lang, j, max(rho) AS reg FROM rk GROUP BY 1, 2),
-         |dense AS (
-         |  SELECT l.lang, g.j, CAST(coalesce(regs.reg, 0) AS INT) AS reg
-         |  FROM (SELECT DISTINCT lang FROM h) l
-         |  CROSS JOIN (SELECT CAST(unnest(range(0, 16)) AS INT) AS j) g
-         |  LEFT JOIN regs ON regs.lang = l.lang AND regs.j = g.j),
-         |summary AS (
-         |  SELECT lang,
-         |    CAST(sum(CASE WHEN reg = 0 THEN 1 ELSE 0 END) AS BIGINT) AS v_zero,
-         |    CAST(sum(CAST(1 AS BIGINT) << (40 - reg)) AS BIGINT) AS s_scaled,
-         |    string_agg(CAST(reg AS VARCHAR), ',' ORDER BY j) AS registers
-         |  FROM dense GROUP BY 1),
-         |exact AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_exact FROM h GROUP BY 1)
-         |SELECT e.lang, e.n_exact, s.v_zero, s.s_scaled, s.registers,
-         |  round(CASE WHEN 0.673e0 * 256 * 1099511627776.0e0 / s.s_scaled <= 40.0e0
-         |               AND s.v_zero > 0
-         |          THEN 16.0e0 * ln(16.0e0 / s.v_zero)
-         |          ELSE 0.673e0 * 256 * 1099511627776.0e0 / s.s_scaled END, 4) AS est
-         |FROM exact e JOIN summary s ON e.lang = s.lang
-         |ORDER BY e.lang""".stripMargin,
-
-    // q39: numeric table profile — per profiled column the exact
-    // integer-cents statistics, one UNION ALL branch per column
-    // (generated, lockstep with the Spark column list)
-    "q39_table_profile" ->
-      Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax").map { c =>
-        s"""SELECT '$c' AS col, CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(min(round($c * 100)) AS BIGINT) AS min_cents,
-           |  CAST(max(round($c * 100)) AS BIGINT) AS max_cents,
-           |  CAST(sum(round($c * 100)) AS BIGINT) AS sum_cents
-           |FROM lineitem""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY col"),
-
-    // q40: orphan probes are NOT EXISTS over distinct child keys —
-    // the audit numbers must count DISTINCT orphaned keys, not rows
-    "q40_fk_audit" ->
-      Seq(
-        ("customer.nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-        ("lineitem.orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem.part", "lineitem", "l_partkey", "part", "p_partkey"),
-        ("lineitem.supplier", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        ("nation.region", "nation", "n_regionkey", "region", "r_regionkey"),
-        ("orders.customer", "orders", "o_custkey", "customer", "c_custkey"),
-        ("supplier.nation", "supplier", "s_nationkey", "nation", "n_nationkey")
-      ).map { case (fk, child, key, parent, pkey) =>
-        s"""SELECT '$fk' AS fk,
-           |  CAST((SELECT count(*) FROM $child) AS BIGINT) AS child_rows,
-           |  CAST((SELECT count(*) FROM $child WHERE $key IS NULL) AS BIGINT) AS null_keys,
-           |  CAST((SELECT count(DISTINCT $key) FROM $child) AS BIGINT) AS distinct_keys,
-           |  CAST((SELECT count(*) FROM (
-           |    SELECT DISTINCT $key AS k FROM $child WHERE $key IS NOT NULL) c
-           |    WHERE NOT EXISTS (SELECT 1 FROM $parent p WHERE p.$pkey = c.k)) AS BIGINT)
-           |    AS orphan_keys""".stripMargin
-      }.mkString("", "\nUNION ALL\n", "\nORDER BY fk"),
-
-    // q42: exact epoch-micros (epoch_ns // 1000 == Spark's
-    // timestamp_micros truncation); one window spec for version+lead
-    "q42_scd2_intervals" ->
-      """SELECT user_id, CAST(row_number() OVER w AS INT) AS version,
-        |  CAST(round(value * 100, 0) AS BIGINT) AS value_cents,
-        |  epoch_ns(ts) // 1000 AS valid_from_us,
-        |  epoch_ns(lead(ts, 1) OVER w) // 1000 AS valid_to_us
-        |FROM events WHERE user_id < 100
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, version""".stripMargin,
-
-    // q43: the oracle aggregates the WHOLE table in one pass — the
-    // gate's content is merge(partial(base), partial(delta)) ≡ this
-    "q43_incremental_agg" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(round(value * 100, 0)) AS BIGINT) AS sum_cents,
-        |  CAST(min(round(value * 100, 0)) AS BIGINT) AS min_cents,
-        |  CAST(max(round(value * 100, 0)) AS BIGINT) AS max_cents,
-        |  round(sum(round(value * 100, 0)) / count(*), 6) AS avg_cents
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // q44: the θ-sketch algebra replayed literally — per-lang token
-    // bottom-32 sketches, merged bottom-k for the union estimate,
-    // ρ = both-sketch survivors at or below the union threshold;
-    // ρ·est_union/u_keys degrades to exact when unsaturated, no branch
-    "q44_kmv_setops" ->
-      s"""WITH toks AS (SELECT lang, unnest($Toks) AS tok FROM documents),
-         |h AS (SELECT DISTINCT lang, md5(tok) AS h FROM toks),
-         |exact AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_exact FROM h GROUP BY 1),
-         |top AS (SELECT lang, h FROM (
-         |    SELECT lang, h, row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
-         |    FROM h) r WHERE rn <= 32),
-         |sk AS (SELECT t.lang, e.n_exact, list(t.h ORDER BY t.h) AS mins
-         |       FROM top t JOIN exact e ON t.lang = e.lang
-         |       GROUP BY t.lang, e.n_exact),
-         |p AS (SELECT a.lang AS lang_a, b.lang AS lang_b,
-         |        a.n_exact AS n_a, b.n_exact AS n_b,
-         |        a.mins AS ma, b.mins AS mb
-         |      FROM sk a JOIN sk b ON a.lang < b.lang),
-         |m AS (SELECT *, list_slice(list_sort(list_distinct(ma || mb)), 1, 32) AS u
-         |      FROM p),
-         |f AS (SELECT *, CAST(len(u) AS INT) AS u_keys, u[len(u)] AS kth_u FROM m),
-         |g AS (SELECT *,
-         |        round(CASE WHEN u_keys < 32 THEN CAST(u_keys AS DOUBLE)
-         |          ELSE 31.0 * 4294967296 /
-         |            greatest(${hexIntSql("kth_u", 8)}, 1) END, 4) AS est_union,
-         |        CAST(len(list_filter(list_intersect(ma, mb), x -> x <= kth_u))
-         |          AS INT) AS rho
-         |      FROM f)
-         |SELECT lang_a, lang_b, n_a, n_b, u_keys, kth_u, est_union, rho,
-         |  round(rho * est_union / u_keys, 4) AS est_inter
-         |FROM g ORDER BY lang_a, lang_b""".stripMargin,
-
-    // q45: the ordered funnel — each stage anchors on the previous
-    // stage's earliest qualifying timestamp, strictly increasing
-    "q45_funnel" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS t FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS t FROM events e
-        |  JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > v.t GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS t FROM events e
-        |  JOIN c ON e.user_id = c.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.t GROUP BY 1)
-        |SELECT 1 AS step, 'view' AS event_type,
-        |  CAST((SELECT count(*) FROM v) AS BIGINT) AS users
-        |UNION ALL SELECT 2, 'click', CAST((SELECT count(*) FROM c) AS BIGINT)
-        |UNION ALL SELECT 3, 'purchase', CAST((SELECT count(*) FROM p) AS BIGINT)
-        |ORDER BY step""".stripMargin,
-
-    // q41: the oracle replays the selection definition directly —
-    // k = ceil(q·n/100), value = the k-th smallest integer-cent price
-    "q41_exact_kth" ->
-      """WITH v AS (
-        |  SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS v FROM lineitem),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM v),
-        |t AS (
-        |  SELECT q, n.n, (q * n.n + 99) // 100 AS k
-        |  FROM (VALUES (25), (50), (75)) AS qs(q), n),
-        |s AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM v)
-        |SELECT 'p' || CAST(t.q AS VARCHAR) AS stat, t.n,
-        |  CAST(t.k AS BIGINT) AS k, s.v AS value_cents
-        |FROM t JOIN s ON s.rn = t.k
-        |ORDER BY stat""".stripMargin,
-
-    // q46: robust outliers — lower medians at rank (n+1) // 2 under
-    // (value, key) order, MAD the same way over deviations, and the
-    // cleared-denominator modified-z test 6745·d > 10·t·mad at the
-    // standard t = 3500 (3.5 MADs), which genuinely fires per group
-    "q46_robust_outliers" ->
-      """WITH o AS (
-        |  SELECT event_id, event_type AS grp,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |rv AS (
-        |  SELECT grp, cents,
-        |    row_number() OVER (PARTITION BY grp ORDER BY cents, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY grp) AS n
-        |  FROM o),
-        |med AS (SELECT grp, cents AS med FROM rv WHERE rn = (n + 1) // 2),
-        |dev AS (
-        |  SELECT o.grp, o.event_id, o.cents, m.med,
-        |    abs(o.cents - m.med) AS d
-        |  FROM o JOIN med m ON o.grp = m.grp),
-        |rd AS (
-        |  SELECT grp, d,
-        |    row_number() OVER (PARTITION BY grp ORDER BY d, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY grp) AS n
-        |  FROM dev),
-        |mad AS (SELECT grp, d AS mad FROM rd WHERE rn = (n + 1) // 2)
-        |SELECT v.grp, v.event_id, v.cents, v.med, a.mad, v.d
-        |FROM dev v JOIN mad a ON v.grp = a.grp
-        |WHERE a.mad > 0 AND v.d * 6745 > a.mad * 35000
-        |ORDER BY v.grp, v.event_id""".stripMargin,
-
-    // q47: equi-depth histogram — B boundaries at exact global ranks
-    // ceil(i·n/B) under (value, unique-key) order, one row_number
-    "q47_equidepth_hist" ->
-      """WITH v AS (
-        |  SELECT CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS v,
-        |    l_orderkey, l_linenumber
-        |  FROM lineitem),
-        |n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM v),
-        |r AS (
-        |  SELECT v,
-        |    row_number() OVER (ORDER BY v, l_orderkey, l_linenumber) AS rn
-        |  FROM v),
-        |t AS (
-        |  SELECT CAST(b AS INT) AS bucket, (b * n.n + 15) // 16 AS k
-        |  FROM (SELECT unnest(range(1, 17)) AS b) bb, n)
-        |SELECT t.bucket, CAST(t.k AS BIGINT) AS k, r.v AS boundary_cents
-        |FROM t JOIN r ON r.rn = t.k
-        |ORDER BY t.bucket""".stripMargin,
-
-    // p18: UNIMAX budget allocation — closed-form integer water-fill
-    // over the per-language counts: ascending (count, lang) order,
-    // full iff n <= (budget − cum) // remaining, common cap for the
-    // capped suffix, integer leftover explicit
-    "p18_unimax" ->
-      """WITH n AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
-        |           FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(n_docs) AS BIGINT) AS total,
-        |             CAST(count(*) AS BIGINT) AS nl FROM n),
-        |st AS (
-        |  SELECT n.lang, n.n_docs, CAST((t.total * 4) // 5 AS BIGINT) AS budget,
-        |    t.nl, row_number() OVER (ORDER BY n.n_docs, n.lang) AS i,
-        |    CAST(coalesce(sum(n.n_docs) OVER (ORDER BY n.n_docs, n.lang
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum
-        |  FROM n, t),
-        |st2 AS (
-        |  SELECT *, n_docs <= (budget - cum) // (nl - i + 1) AS is_full
-        |  FROM st),
-        |cp AS (
-        |  SELECT CASE WHEN sum(CASE WHEN is_full THEN 1 ELSE 0 END) = max(nl)
-        |              THEN NULL
-        |              ELSE (max(budget) -
-        |                    coalesce(sum(CASE WHEN is_full THEN n_docs END), 0))
-        |                   // (max(nl) - sum(CASE WHEN is_full THEN 1 ELSE 0 END))
-        |         END AS cap
-        |  FROM st2),
-        |al AS (
-        |  SELECT st2.lang, st2.n_docs,
-        |    CAST(CASE WHEN is_full THEN n_docs ELSE cp.cap END AS BIGINT) AS alloc,
-        |    NOT is_full AS capped, st2.budget
-        |  FROM st2, cp)
-        |SELECT lang, n_docs, alloc, capped, budget,
-        |  CAST(budget - sum(alloc) OVER () AS BIGINT) AS leftover
-        |FROM al ORDER BY lang""".stripMargin,
-
-    // q48: grouped OLS trend — daily cent rollups, per-group
-    // re-centered day index, and the exact integer slope fraction
-    // (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²) with a CASE sign; no division
-    "q48_group_trend" ->
-      """WITH daily AS (
-        |  SELECT event_type AS grp,
-        |    CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT) AS day,
-        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS y
-        |  FROM events GROUP BY 1, 2),
-        |d0 AS (SELECT grp, min(day) AS d0 FROM daily GROUP BY 1),
-        |m AS (
-        |  SELECT d.grp, CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(d.day - t.d0) AS BIGINT) AS sx,
-        |    CAST(sum(d.y) AS BIGINT) AS sy,
-        |    CAST(sum((d.day - t.d0) * (d.day - t.d0)) AS BIGINT) AS sxx,
-        |    CAST(sum((d.day - t.d0) * d.y) AS BIGINT) AS sxy
-        |  FROM daily d JOIN d0 t USING (grp) GROUP BY 1)
-        |SELECT grp, CAST(n AS INT) AS n_days,
-        |  CAST(n * sxy - sx * sy AS BIGINT) AS slope_num,
-        |  CAST(n * sxx - sx * sx AS BIGINT) AS slope_den,
-        |  CAST(CASE WHEN n * sxx - sx * sx = 0 THEN 0
-        |            WHEN n * sxy - sx * sy > 0 THEN 1
-        |            WHEN n * sxy - sx * sy < 0 THEN -1
-        |            ELSE 0 END AS INT) AS trend
-        |FROM m ORDER BY grp""".stripMargin,
-
-    // q49: gap-constrained event chains — all view→click→purchase
-    // chains with each hop within the gap, exact integer micros,
-    // strict > so equal timestamps never chain
-    "q49_gap_chains" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-        |            epoch_ns(ts) // 1000 AS us FROM events),
-        |v AS (SELECT user_id, us AS v_us FROM e WHERE event_type = 'view'),
-        |c AS (SELECT user_id, us AS c_us FROM e WHERE event_type = 'click'),
-        |p AS (SELECT user_id, us AS p_us FROM e WHERE event_type = 'purchase')
-        |SELECT v.user_id, CAST(count(*) AS BIGINT) AS n_chains,
-        |  CAST(min(v.v_us) AS BIGINT) AS first_start_us,
-        |  CAST(max(p.p_us) AS BIGINT) AS last_end_us
-        |FROM v JOIN c ON v.user_id = c.user_id
-        |  AND c_us > v_us AND c_us - v_us <= CAST(360 AS BIGINT) * 60 * 1000000
-        |JOIN p ON c.user_id = p.user_id
-        |  AND p_us > c_us AND p_us - c_us <= CAST(360 AS BIGINT) * 60 * 1000000
-        |GROUP BY v.user_id ORDER BY v.user_id""".stripMargin,
-
-    // q50: Page's CUSUM per user — the clamped recursion replayed as
-    // prefix-sum minus running-min (exact identity), deviations on the
-    // cents grid against the floor'd global mean
-    "q50_cusum" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS cents
-        |  FROM events),
-        |m AS (SELECT sum(cents) // count(*) AS mu FROM e),
-        |s AS (
-        |  SELECT user_id,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY us, event_id) AS idx,
-        |    sum(cents - m.mu) OVER (PARTITION BY user_id ORDER BY us, event_id) AS p
-        |  FROM e CROSS JOIN m),
-        |cu AS (
-        |  SELECT user_id, idx,
-        |    p - least(min(p) OVER (PARTITION BY user_id
-        |          ORDER BY idx), 0) AS cs
-        |  FROM s)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(max(cs) AS BIGINT) AS max_cusum,
-        |  CAST(min(CASE WHEN cs >= 100000 THEN idx END) AS INT) AS alarm_idx
-        |FROM cu GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // q51: bitmap audience overlap — the STRONG gate form: the Spark
-    // side packs users into 32-bit lanes and popcounts AND'd words,
-    // while this oracle is plain COUNT(DISTINCT) self-joins with no
-    // bitmap logic at all, so any miscounted bit hash-mismatches
-    "q51_bitmap_overlap" ->
-      """WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
-        |cnt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-        |        FROM du GROUP BY 1),
-        |bo AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-        |         CAST(count(*) AS BIGINT) AS n_both
-        |       FROM du a JOIN du b ON a.user_id = b.user_id
-        |         AND a.event_type < b.event_type
-        |       GROUP BY 1, 2)
-        |SELECT type_a, type_b, ca.n AS n_a, cb.n AS n_b, n_both,
-        |  (n_both * 1000000) // (ca.n + cb.n - n_both) AS jaccard_ppm
-        |FROM bo JOIN cnt ca ON ca.event_type = type_a
-        |        JOIN cnt cb ON cb.event_type = type_b
-        |ORDER BY type_a, type_b""".stripMargin,
-
-    // q52: event-time RANGE frames — trailing hour / leading 10 min
-    // by exact micros distance; RANGE peer semantics (all rows at the
-    // boundary value) must agree across engines
-    "q52_range_window" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us,
-        |  CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events)
-        |SELECT user_id, event_id, us,
-        |  CAST(count(*) OVER wb AS BIGINT) AS n_hour_back,
-        |  CAST(sum(cents) OVER wb AS BIGINT) AS cents_hour_back,
-        |  CAST(count(*) OVER wf AS BIGINT) AS n_10m_fwd
-        |FROM e
-        |WINDOW wb AS (PARTITION BY user_id ORDER BY us
-        |    RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW),
-        |  wf AS (PARTITION BY user_id ORDER BY us
-        |    RANGE BETWEEN CURRENT ROW AND 600000000 FOLLOWING)
-        |ORDER BY user_id, us, event_id""".stripMargin,
-
-    // q53: the oracle snapshots the WHOLE changelog in one pass — the
-    // gate's content is apply(snapshot(base), delta) ≡ snapshot(full)
-    "q53_merge_upsert" ->
-      """WITH log AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us,
-        |    CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS value_cents
-        |  FROM events),
-        |latest AS (SELECT *, row_number() OVER (PARTITION BY user_id
-        |    ORDER BY us DESC, event_id DESC) AS rn FROM log)
-        |SELECT user_id, event_id AS last_event_id, us AS last_us, value_cents
-        |FROM latest WHERE rn = 1 AND op = 'U' ORDER BY user_id""".stripMargin,
-
-    // q54: the oracle probes the SCD2 intervals by genuine BETWEEN
-    // containment — a different plan than the Spark-side union +
-    // carry-forward, so the hash proves carry-forward ≡ containment
-    "q54_pit_join" ->
-      """WITH v AS (SELECT user_id, CAST(row_number() OVER w AS INT) AS version,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS value_cents,
-        |    epoch_ns(ts) // 1000 AS valid_from_us,
-        |    epoch_ns(lead(ts, 1) OVER w) // 1000 AS valid_to_us
-        |  FROM events WHERE user_id < 100
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |p AS (SELECT user_id, event_id AS probe_event_id,
-        |    epoch_ns(ts) // 1000 - 1 AS probe_us
-        |  FROM events WHERE user_id < 100 AND event_id % 7 = 0)
-        |SELECT p.user_id, p.probe_event_id, p.probe_us,
-        |  v.version AS pit_version, v.value_cents AS pit_value_cents
-        |FROM p LEFT JOIN v ON p.user_id = v.user_id
-        |  AND p.probe_us >= v.valid_from_us
-        |  AND (v.valid_to_us IS NULL OR p.probe_us < v.valid_to_us)
-        |ORDER BY p.user_id, p.probe_us, p.probe_event_id""".stripMargin,
-
-    // q55: per-key fan-out audit of a planned equi-join — top keys by
-    // output contribution with exact ppm shares
-    "q55_join_skew" ->
-      """WITH l AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_left
-        |    FROM events GROUP BY user_id),
-        |r AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_right
-        |    FROM events WHERE event_type = 'purchase' GROUP BY user_id),
-        |fan AS (SELECT l.user_id, n_left, n_right, n_left * n_right AS fanout
-        |    FROM l JOIN r ON l.user_id = r.user_id),
-        |tot AS (SELECT CAST(sum(fanout) AS BIGINT) AS total_fanout FROM fan),
-        |top AS (SELECT *, CAST(row_number() OVER (ORDER BY fanout DESC,
-        |    user_id) AS INT) AS rn FROM fan)
-        |SELECT rn, user_id, n_left, n_right, fanout, total_fanout,
-        |  CAST(fanout * 1000000 // total_fanout AS BIGINT) AS share_ppm
-        |FROM top, tot WHERE rn <= 10 ORDER BY rn""".stripMargin,
-
-    // q59: top session paths — q27's gap sessions, ordered type
-    // q60: overlap islands — type-duration intervals, running-max
-    // island cut (strictly-after opens a new island; touching merges),
-    // contiguous [min s, max e] per island
-    "q60_interval_islands" ->
-      """WITH iv AS (
-        |  SELECT user_id, event_id, epoch_ns(ts) // 1000 AS s,
-        |    epoch_ns(ts) // 1000 + (CASE event_type WHEN 'view' THEN 5
-        |      WHEN 'click' THEN 10 WHEN 'purchase' THEN 30
-        |      WHEN 'signup' THEN 15 ELSE 1 END) * 60000000 AS e
-        |  FROM events
-        |),
-        |m AS (
-        |  SELECT user_id, event_id, s, e,
-        |    max(e) OVER (PARTITION BY user_id ORDER BY s, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max_e
-        |  FROM iv
-        |),
-        |f AS (
-        |  SELECT user_id, s, e,
-        |    CASE WHEN prev_max_e IS NULL OR s > prev_max_e THEN 1 ELSE 0 END AS ni,
-        |    event_id
-        |  FROM m
-        |),
-        |isl AS (
-        |  SELECT user_id, s, e,
-        |    sum(ni) OVER (PARTITION BY user_id ORDER BY s, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island_id
-        |  FROM f
-        |)
-        |SELECT user_id, CAST(island_id AS BIGINT) AS island_id,
-        |  CAST(min(s) AS BIGINT) AS start_us, CAST(max(e) AS BIGINT) AS end_us,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(max(e) - min(s) AS BIGINT) AS span_us
-        |FROM isl GROUP BY 1, 2 ORDER BY user_id, island_id""".stripMargin,
-
-    // q61: Lorenz/Gini — ascending (cents, user_id) rank + running
-    // spend, rank-formula Gini, decile boundary ppm; all integer-exact
-    "q61_lorenz_gini" ->
-      """WITH sp AS (
-        |  SELECT user_id,
-        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
-        |  FROM events GROUP BY 1
-        |),
-        |rk AS (
-        |  SELECT user_id, cents,
-        |    CAST(row_number() OVER (ORDER BY cents, user_id) AS BIGINT) AS rnk,
-        |    CAST(sum(cents) OVER (ORDER BY cents, user_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum
-        |  FROM sp
-        |),
-        |tot AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS s0,
-        |    CAST(sum(rnk * cents) AS BIGINT) AS s1
-        |  FROM rk
-        |),
-        |g AS (
-        |  SELECT CAST((2 * s1 - (n + 1) * s0) * 1000000 // (n * s0) AS BIGINT)
-        |    AS gini_ppm
-        |  FROM tot
-        |)
-        |SELECT CAST((rnk - 1) * 10 // t.n AS INT) + 1 AS decile,
-        |  CAST(count(*) AS BIGINT) AS n_users,
-        |  CAST(sum(cents) AS BIGINT) AS spend_cents,
-        |  CAST(max(rnk) * 1000000 // t.n AS BIGINT) AS cum_users_ppm,
-        |  CAST(max(cum) * 1000000 // t.s0 AS BIGINT) AS cum_spend_ppm,
-        |  g.gini_ppm
-        |FROM rk CROSS JOIN tot t CROSS JOIN g
-        |GROUP BY 1, t.n, t.s0, g.gini_ppm
-        |ORDER BY decile""".stripMargin,
-
-    // strings, (count DESC, path) top-k
-    "q59_session_paths" ->
-      """WITH f AS (SELECT user_id, event_id, event_type,
-        |    epoch_ns(ts) // 1000 AS ts_us,
-        |    CASE WHEN lag(epoch_ns(ts) // 1000) OVER w IS NULL
-        |      OR epoch_ns(ts) // 1000 - lag(epoch_ns(ts) // 1000) OVER w
-        |         > CAST(30 AS BIGINT) * 60 * 1000000
-        |      THEN 1 ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id)),
-        |s AS (SELECT *, sum(new_session) OVER (PARTITION BY user_id
-        |    ORDER BY event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM f),
-        |p AS (SELECT user_id, session_id,
-        |    string_agg(event_type, '>' ORDER BY event_id) AS path
-        |  FROM s GROUP BY 1, 2),
-        |c AS (SELECT path, CAST(count(*) AS BIGINT) AS n_sessions
-        |      FROM p GROUP BY 1)
-        |SELECT CAST(row_number() OVER (ORDER BY n_sessions DESC, path)
-        |    AS INT) AS rk, path, n_sessions
-        |FROM c QUALIFY rk <= 10 ORDER BY rk""".stripMargin,
-
-    // q58: multi-touch attribution — q35's join, then exact ppm split
-    // with the first-touch largest-remainder bonus
-    "q58_multi_touch" ->
-      """WITH a AS (SELECT event_id AS a_id, user_id,
-        |            epoch_ns(ts) // 1000 AS a_us
-        |          FROM events WHERE event_type = 'view'),
-        |b AS (SELECT event_id AS b_id, user_id,
-        |        epoch_ns(ts) // 1000 AS b_us
-        |      FROM events WHERE event_type = 'purchase'),
-        |j AS (SELECT a.user_id, a_id, b_id, a_us
-        |      FROM a JOIN b ON a.user_id = b.user_id
-        |       AND b_us >= a_us AND b_us <= a_us + CAST(720 AS BIGINT) * 60 * 1000000),
-        |wk AS (SELECT user_id, b_id AS purchase_id, a_id AS view_id,
-        |    CAST(count(*) OVER (PARTITION BY b_id) AS BIGINT) AS k_touches,
-        |    CAST(row_number() OVER (PARTITION BY b_id ORDER BY a_us, a_id)
-        |      AS BIGINT) AS rk
-        |  FROM j)
-        |SELECT user_id, purchase_id, view_id, k_touches,
-        |  CAST(1000000 // k_touches
-        |    + CASE WHEN rk <= 1000000 % k_touches THEN 1 ELSE 0 END
-        |    AS BIGINT) AS share_ppm
-        |FROM wk ORDER BY purchase_id, view_id""".stripMargin,
-
-    // d33: multiset Jaccard — sum-min over token counts, sum-max by
-    // the identity Na + Nb - sum-min, floor ppm
-    // d36: exact TF-IDF cosine pairs — fixed-point idf, squared-cosine
-    // threshold by HUGEINT cross-multiplication (no sqrt)
-    "d36_tfidf_cosine" -> tfidfSql(maxSample = 512, minCos2Ppm = 250000L),
-
-    "d33_weighted_jaccard" ->
-      s"""WITH dd AS (SELECT doc_id, $Toks AS tk FROM documents
-         |  WHERE doc_id % 10 = 0 AND doc_id < 5120),
-         |c AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c
-         |  FROM (SELECT doc_id, unnest(tk) AS tok FROM dd) t GROUP BY 1, 2),
-         |n AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n FROM c GROUP BY 1),
-         |i AS (SELECT x.doc_id AS a, y.doc_id AS b,
-         |    CAST(sum(least(x.c, y.c)) AS BIGINT) AS mn
-         |  FROM c x JOIN c y ON x.tok = y.tok AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT a, b, na.n AS n_a, nb.n AS n_b, mn,
-         |  mn * 1000000 // (na.n + nb.n - mn) AS wjaccard_ppm
-         |FROM i JOIN n na ON na.doc_id = a JOIN n nb ON nb.doc_id = b
-         |WHERE mn * 1000000 // (na.n + nb.n - mn) >= 500000
-         |ORDER BY a, b""".stripMargin,
-
-    // q57: next-event transition matrix — lag window per user,
-    // row-conditional floor-ppm probabilities
-    "q57_transitions" ->
-      """WITH p AS (SELECT lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev_type, event_type AS next_type
-        |    FROM events),
-        |c AS (SELECT prev_type, next_type, CAST(count(*) AS BIGINT) AS n
-        |      FROM p WHERE prev_type IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT prev_type, CAST(sum(n) AS BIGINT) AS row_n
-        |      FROM c GROUP BY 1)
-        |SELECT c.prev_type, c.next_type, c.n, t.row_n,
-        |  c.n * 1000000 // t.row_n AS p_ppm
-        |FROM c JOIN t USING (prev_type)
-        |ORDER BY c.prev_type, c.next_type""".stripMargin,
-
-    // p20: stratified 3-way split — seeded md5 ranks within language,
-    // exact 80/10/10 quotas by largest remainder ACROSS the splits
-    "p20_split_quota" ->
-      """WITH d AS (SELECT lang, doc_id,
-        |    md5('s0' || CAST(doc_id AS VARCHAR)) AS hkey FROM documents),
-        |n AS (SELECT lang, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1),
-        |st AS (
-        |  SELECT lang, n, s.split, s.ord, s.f,
-        |    CAST(n * s.f // 100 AS BIGINT) AS q0,
-        |    CAST(n * s.f % 100 AS BIGINT) AS rem
-        |  FROM n, (VALUES ('train', 1, 80), ('val', 2, 10),
-        |           ('test', 3, 10)) AS s(split, ord, f)),
-        |qt AS (
-        |  SELECT lang, split, ord,
-        |    q0 + CASE WHEN row_number() OVER (PARTITION BY lang
-        |        ORDER BY rem DESC, ord)
-        |      <= n - sum(q0) OVER (PARTITION BY lang) THEN 1 ELSE 0 END
-        |      AS quota
-        |  FROM st),
-        |qp AS (SELECT lang,
-        |    max(CASE WHEN split = 'train' THEN quota END) AS q_train,
-        |    max(CASE WHEN split = 'val' THEN quota END) AS q_val
-        |  FROM qt GROUP BY lang),
-        |asg AS (
-        |  SELECT d.lang,
-        |    CASE WHEN rnk <= q_train THEN 'train'
-        |         WHEN rnk <= q_train + q_val THEN 'val'
-        |         ELSE 'test' END AS split
-        |  FROM (SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
-        |      ORDER BY hkey, doc_id) AS rnk FROM d) d
-        |  JOIN qp ON d.lang = qp.lang),
-        |cnt AS (SELECT lang, split, CAST(count(*) AS BIGINT) AS n
-        |        FROM asg GROUP BY 1, 2)
-        |SELECT c.lang, c.split, c.n, q.quota
-        |FROM cnt c JOIN qt q ON c.lang = q.lang AND c.split = q.split
-        |ORDER BY c.lang, q.ord""".stripMargin,
-
-    // p19: T=2 temperature mixture — exact isqrt (float floor + the
-    // two-comparison correction) and largest-remainder allocation
-    "p19_temperature_mix" ->
-      s"""WITH n AS (SELECT lang, CAST(sum(len($Toks)) AS BIGINT) AS tokens
-         |  FROM documents GROUP BY lang),
-         |s AS (SELECT lang, tokens,
-         |    CAST(floor(sqrt(tokens)) AS BIGINT) AS s0 FROM n),
-         |iw AS (SELECT lang, tokens,
-         |    s0 - (CASE WHEN s0 * s0 > tokens THEN 1 ELSE 0 END)
-         |       + (CASE WHEN (s0 + 1) * (s0 + 1) <= tokens THEN 1 ELSE 0 END)
-         |      AS w FROM s),
-         |tw AS (SELECT CAST(sum(w) AS BIGINT) AS tw FROM iw),
-         |base AS (SELECT lang, tokens, w,
-         |    CAST(100000 * w // tw AS BIGINT) AS alloc0,
-         |    CAST(100000 * w % tw AS BIGINT) AS rem
-         |  FROM iw, tw),
-         |lo AS (SELECT CAST(100000 - sum(alloc0) AS BIGINT) AS r FROM base),
-         |rk AS (SELECT *, row_number() OVER (ORDER BY rem DESC, lang) AS rk
-         |       FROM base)
-         |SELECT lang, tokens, w, alloc0, rem,
-         |  CAST(alloc0 + CASE WHEN rk <= r THEN 1 ELSE 0 END AS BIGINT) AS alloc
-         |FROM rk, lo ORDER BY lang""".stripMargin,
-
-    // q56: exact KS — RANGE-frame CDF counts (ties complete), the
-    // sup cross-multiplied to one integer, floor-ppm report
-    "q56_ks_drift" ->
-      """WITH ev AS (SELECT event_type, event_id,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
-        |ty AS (SELECT DISTINCT event_type FROM ev),
-        |cnt AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-        |        FROM ev GROUP BY 1),
-        |pr AS (SELECT least(e.event_type, t.event_type) AS type_a,
-        |    greatest(e.event_type, t.event_type) AS type_b,
-        |    e.event_type, e.cents
-        |  FROM ev e JOIN ty t ON t.event_type <> e.event_type),
-        |cdf AS (SELECT type_a, type_b, event_type, cents,
-        |    sum(CASE WHEN event_type = type_a THEN 1 ELSE 0 END)
-        |      OVER w AS cnt_a,
-        |    sum(CASE WHEN event_type = type_b THEN 1 ELSE 0 END)
-        |      OVER w AS cnt_b
-        |  FROM pr
-        |  WINDOW w AS (PARTITION BY type_a, type_b ORDER BY cents
-        |    RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |ks AS (SELECT c.type_a, c.type_b, ca.n AS n_a, cb.n AS n_b,
-        |    CAST(max(abs(cnt_a * cb.n - cnt_b * ca.n)) AS BIGINT) AS ks_num
-        |  FROM cdf c
-        |  JOIN cnt ca ON ca.event_type = c.type_a
-        |  JOIN cnt cb ON cb.event_type = c.type_b
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT type_a, type_b, n_a, n_b, ks_num,
-        |  ks_num * 1000000 // (n_a * n_b) AS ks_ppm
-        |FROM ks ORDER BY type_a, type_b""".stripMargin,
-
-    // p17: weighted fair interleave — within-source seeded ranks,
-    // virtual time r·(12 // w), global order (v, source, doc_id)
-    "p17_interleave" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |    CAST(1 + (CAST(regexp_extract(source, '[0-9]+') AS INT) % 4)
-        |      AS INT) AS w
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, source, w,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY md5('il0:' || CAST(doc_id AS VARCHAR)), doc_id)
-        |      AS BIGINT) AS r
-        |  FROM d),
-        |vt AS (SELECT *, CAST(r * (12 // w) AS BIGINT) AS v FROM r)
-        |SELECT CAST(row_number() OVER (ORDER BY v, source, doc_id)
-        |    AS BIGINT) AS pos,
-        |  doc_id, source, w, r, v
-        |FROM vt ORDER BY pos""".stripMargin,
-
-    "q23_percentiles" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_quantity, 0.5), 4) AS median_qty,
-        |  round(quantile_cont(l_quantity, 0.9), 4) AS p90_qty,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q24_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS INT) AS gid
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY gid, o_orderstatus, o_orderpriority""".stripMargin,
-
-    "q25_pivot" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END) AS BIGINT) AS F,
-        |  CAST(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END) AS BIGINT) AS O
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q26_window_frames" ->
-      """SELECT user_id, event_id, value,
-        |  round(sum(value) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_sum,
-        |  round(sum(value) OVER (w ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS moving_sum3,
-        |  first_value(value) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_val
-        |FROM events WHERE user_id < 10
-        |WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    // the account-balance threshold averages exact integer cents so
-    // both engines compute the identical cut (a float-sum average
-    // could land a boundary customer on different sides)
-    "q31_correlated_scalar" ->
-      """SELECT c.c_custkey, c.c_mktsegment,
-        |  CAST((SELECT count(*) FROM orders o
-        |        WHERE o.o_custkey = c.c_custkey) AS BIGINT) AS n_orders
-        |FROM customer c
-        |WHERE c.c_acctbal >
-        |  (SELECT sum(CAST(round(c2.c_acctbal * 100) AS BIGINT)) / (count(*) * 100.0e0)
-        |   FROM customer c2)
-        |ORDER BY c.c_custkey""".stripMargin,
-
-    "q32_rank_variants" ->
-      """SELECT o_orderkey, o_orderpriority, o_orderstatus,
-        |  CAST(ntile(4) OVER (PARTITION BY o_orderpriority
-        |         ORDER BY o_orderstatus, o_orderkey) AS INT) AS quartile,
-        |  round(percent_rank() OVER (PARTITION BY o_orderpriority
-        |         ORDER BY o_orderstatus), 6) AS pct_rank,
-        |  round(cume_dist() OVER (PARTITION BY o_orderpriority
-        |         ORDER BY o_orderstatus), 6) AS cume
-        |FROM orders WHERE o_orderkey % 7 = 0
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q33_lateral_topn" ->
-      """SELECT n.n_name, t.c_custkey, t.bal_cents
-        |FROM nation n,
-        |LATERAL (
-        |  SELECT c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents
-        |  FROM customer c
-        |  WHERE c.c_nationkey = n.n_nationkey
-        |  ORDER BY bal_cents DESC, c_custkey
-        |  LIMIT 2
-        |) t
-        |ORDER BY n.n_name, t.bal_cents DESC, t.c_custkey""".stripMargin,
-
-    // first-touch cohorts; week offset via explicit integer division
-    // (a double divide + cast-to-int ROUNDS in DuckDB but TRUNCATES in
-    // Spark — `//` / `DIV` floor identically for the nonnegative offsets)
-    "q34_cohort_retention" ->
-      """WITH act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
-        |firsts AS (SELECT user_id, min(day) AS cohort_day FROM act GROUP BY 1)
-        |SELECT f.cohort_day,
-        |  CAST((a.day - f.cohort_day) // 7 AS INT) AS week_offset,
-        |  CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
-        |FROM act a JOIN firsts f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q28_asof_join" ->
-      """WITH tagged AS (
-        |  SELECT user_id, event_id, event_type, value,
-        |    CASE WHEN event_type = 'click' THEN event_id END AS click_id,
-        |    CASE WHEN event_type = 'click' THEN value END AS click_value
-        |  FROM events WHERE event_type IN ('click', 'purchase')
-        |),
-        |carried AS (
-        |  SELECT user_id, event_id, event_type, value,
-        |    last_value(click_id IGNORE NULLS) OVER w AS asof_click_id,
-        |    last_value(click_value IGNORE NULLS) OVER w AS asof_click_value
-        |  FROM tagged
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT user_id, event_id, value, asof_click_id, asof_click_value
-        |FROM carried WHERE event_type = 'purchase'
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    // q35: interval-bounded attribution join in exact integer micros —
-    // epoch_ns // 1000 mirrors the engine's TimestampType truncation of
-    // the parquet TIMESTAMP_NS (raw ns comparison could flip a boundary
-    // pair whose events share a microsecond)
-    "q35_interval_attribution" ->
-      """WITH a AS (SELECT event_id AS a_id, user_id,
-        |            epoch_ns(ts) // 1000 AS a_us, value AS a_value
-        |          FROM events WHERE event_type = 'view'),
-        |b AS (SELECT event_id AS b_id, user_id,
-        |        epoch_ns(ts) // 1000 AS b_us, value AS b_value
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT a.user_id, a_id, b_id, a_us, b_us, a_value, b_value
-        |FROM a JOIN b ON a.user_id = b.user_id
-        | AND b_us >= a_us AND b_us <= a_us + CAST(720 AS BIGINT) * 60 * 1000000
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    // q36: the q35 complement — NOT EXISTS over the same interval, in
-    // the same exact integer micros
-    "q36_unattributed_views" ->
-      """WITH a AS (SELECT event_id AS a_id, user_id,
-        |            epoch_ns(ts) // 1000 AS a_us, value AS a_value
-        |          FROM events WHERE event_type = 'view'),
-        |b AS (SELECT user_id, epoch_ns(ts) // 1000 AS b_us
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT user_id, a_id, a_us, a_value FROM a
-        |WHERE NOT EXISTS (SELECT 1 FROM b WHERE b.user_id = a.user_id
-        |  AND b_us >= a_us AND b_us <= a_us + CAST(720 AS BIGINT) * 60 * 1000000)
-        |ORDER BY a_id""".stripMargin,
-
-    "q29_range_join" ->
-      """SELECT band, count(*) AS n, round(sum(value), 4) AS sum_value
-        |FROM events
-        |JOIN (VALUES ('low', 0.0, 25.0), ('mid', 25.0, 50.0),
-        |             ('high', 50.0, 75.0), ('top', 75.0, 1e9)) b(band, lo, hi)
-        |  ON value >= lo AND value < hi
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "d01_dedup_exact" ->
-      """SELECT md5(text) AS content_hash, count(*) AS n_copies, min(doc_id) AS keep_id
-        |FROM documents GROUP BY 1 ORDER BY keep_id""".stripMargin,
-
-    // doc_id < 5120 mirrors ngramJaccard's maxSample=512 id-prefix cap
-    // (fixed-size sample — the quadratic ground truth stays bounded at
-    // any corpus size; non-binding at the sf0.01 gate's 500 docs)
-    "d02_ngram_jaccard" ->
-      s"""WITH ${tkCte("WHERE doc_id % 10 = 0 AND doc_id < 5120")},
-         |$ShCte,
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ic
-         |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT a, b, round(ic / (sa.n + sb.n - ic), 6) AS jaccard
-         |FROM inter JOIN sizes sa ON a = sa.doc_id JOIN sizes sb ON b = sb.doc_id
-         |WHERE round(ic / (sa.n + sb.n - ic), 6) >= 0.5
-         |ORDER BY a, b""".stripMargin,
-
-    // d34: winnowing (Schleimer et al. 2003) — per-doc window-min
-    // fingerprints with rightmost tiebreak, packed as (h+1)*2^20 - pos
-    // so one min() carries both the hash order and the tiebreak; the
-    // oracle replays the identical pack/window/decode
-    "d34_winnowing" ->
-      s"""WITH ${tkCte("")},
-         |g AS (SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         |        ${hexIntSql(s"md5($GramExpr)", 8)} AS h
-         |      FROM $GramPos),
-         |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM g GROUP BY 1),
-         |kv AS (SELECT doc_id, pos, (h + 1) * 1048576 - pos AS v FROM g),
-         |wmin AS (
-         |  SELECT doc_id, pos,
-         |    min(v) OVER (PARTITION BY doc_id ORDER BY pos
-         |                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS vmin
-         |  FROM kv
-         |),
-         |sel AS (
-         |  SELECT w.doc_id,
-         |    (vmin // 1048576 + 1) * 1048576 - vmin AS pos,
-         |    vmin // 1048576 AS h
-         |  FROM wmin w JOIN n USING (doc_id) WHERE w.pos <= n.n - 3
-         |)
-         |SELECT DISTINCT doc_id, pos, h FROM sel
-         |ORDER BY doc_id, pos""".stripMargin,
-
-    // d23: prefix filtering is LOSSLESS, so the oracle is simply the
-    // full-corpus brute-force Jaccard join — no sample cap, unlike d02.
-    // If the Spark side's candidate generation ever dropped a true
-    // pair, this gate would hash-mismatch.
-    "d23_jaccard_prefix" ->
-      s"""WITH ${tkCte("")},
-         |$ShCte,
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ic
-         |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT a, b, CAST(ic AS BIGINT) AS inter,
-         |  CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-         |  round(ic / (sa.n + sb.n - ic), 6) AS jaccard
-         |FROM inter JOIN sizes sa ON a = sa.doc_id JOIN sizes sb ON b = sb.doc_id
-         |WHERE round(ic / (sa.n + sb.n - ic), 6) >= 0.5
-         |ORDER BY a, b""".stripMargin,
-
-    // d26: containment — the oracle is the full brute-force DIRECTED
-    // join (both orientations of every pair), so a candidate split
-    // that lost either direction would hash-mismatch
-    "d26_containment" ->
-      s"""WITH ${tkCte("")},
-         |$ShCte,
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ic
-         |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id <> y.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT a, b, CAST(ic AS BIGINT) AS inter,
-         |  CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-         |  round(ic / sa.n, 6) AS containment
-         |FROM inter JOIN sizes sa ON a = sa.doc_id JOIN sizes sb ON b = sb.doc_id
-         |WHERE round(ic / sa.n, 6) >= 0.5
-         |ORDER BY a, b""".stripMargin,
-
-    // d27: the PassJoin variant over a CORPUS-scale domain (12-char
-    // doc prefixes) — same brute-force-oracle discipline as d25: the
-    // positional-segment candidate split must lose nothing
-    "d27_edit_segments" ->
-      """WITH s AS (
-        |  SELECT DISTINCT substr(text, 1, 12) AS s FROM documents
-        |  WHERE length(text) >= 1)
-        |SELECT a.s AS sa, b.s AS sb,
-        |  CAST(levenshtein(a.s, b.s) AS INT) AS dist
-        |FROM s a JOIN s b ON a.s < b.s
-        |WHERE levenshtein(a.s, b.s) <= 2
-        |ORDER BY sa, sb""".stripMargin,
-
-    // d24: DBSCAN — order-pinned list_reduce cosine (the d13 fold),
-    // degree → core (>= 4 neighbors at sim >= 0.3) → recursive-CTE
-    // components over core-core edges (min-id labels, the d06 mirror
-    // of GraphX CC) → border = min cluster among core neighbors →
-    // noise NULL. Every step is integer/rounded-exact, so the full
-    // clustering hash-matches.
-    "d24_dbscan" ->
-      """WITH RECURSIVE v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
-        |n AS (SELECT vec_id, list_reduce(
-        |        list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
-        |        (x, y) -> x + y) AS nrm FROM v),
-        |p AS (
-        |  SELECT a.vec_id AS a, b.vec_id AS b,
-        |    round(list_reduce(list_transform(list_zip(a.embedding, b.embedding),
-        |        z -> z[1]::DOUBLE * z[2]::DOUBLE), (x, y) -> x + y)
-        |      / sqrt(na.nrm * nb.nrm), 6) AS sim
-        |  FROM v a JOIN v b ON a.vec_id < b.vec_id
-        |  JOIN n na ON na.vec_id = a.vec_id JOIN n nb ON nb.vec_id = b.vec_id),
-        |e AS (SELECT a, b FROM p WHERE sim >= 0.3),
-        |und AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-        |deg AS (SELECT u AS vec_id, CAST(count(*) AS BIGINT) AS n_neighbors FROM und GROUP BY 1),
-        |pts AS (SELECT v.vec_id, coalesce(deg.n_neighbors, 0) AS n_neighbors,
-        |          coalesce(deg.n_neighbors, 0) >= 4 AS is_core
-        |        FROM v LEFT JOIN deg USING (vec_id)),
-        |ce AS (SELECT e.a, e.b FROM e
-        |       JOIN pts pa ON e.a = pa.vec_id JOIN pts pb ON e.b = pb.vec_id
-        |       WHERE pa.is_core AND pb.is_core),
-        |cund AS (SELECT a, b FROM ce UNION SELECT b, a FROM ce),
-        |reach(s, t) AS (
-        |  SELECT a, b FROM cund
-        |  UNION
-        |  SELECT r.s, u.b FROM reach r JOIN cund u ON r.t = u.a),
-        |comp AS (SELECT s AS vec_id, least(s, min(t)) AS cid FROM reach GROUP BY s),
-        |coremap AS (SELECT p.vec_id, coalesce(c.cid, p.vec_id) AS cluster_id
-        |            FROM pts p LEFT JOIN comp c USING (vec_id) WHERE p.is_core),
-        |border AS (SELECT und.u AS vec_id, min(cm.cluster_id) AS b_cluster
-        |           FROM und JOIN pts pu ON und.u = pu.vec_id AND NOT pu.is_core
-        |           JOIN coremap cm ON und.v = cm.vec_id GROUP BY 1)
-        |SELECT p.vec_id,
-        |  CASE WHEN p.is_core THEN 'core'
-        |       WHEN b.vec_id IS NOT NULL THEN 'border'
-        |       ELSE 'noise' END AS role,
-        |  coalesce(cm.cluster_id, b.b_cluster) AS cluster_id,
-        |  p.n_neighbors
-        |FROM pts p LEFT JOIN coremap cm USING (vec_id) LEFT JOIN border b USING (vec_id)
-        |ORDER BY p.vec_id""".stripMargin,
-
-    "d03_minhash_lsh" ->
-      s"""WITH ${tkCte("WHERE doc_id % 10 = 0")},
-         |$ShCte,
-         |$DictCte,
-         |$HashCte,
-         |mh AS (
-         |  SELECT s.doc_id, h.i, min((h.a * d.sid + h.b) % 2147483647) AS mh
-         |  FROM sh s JOIN dict d ON s.sh = d.sh CROSS JOIN h
-         |  GROUP BY 1, 2
-         |),
-         |bs AS (
-         |  SELECT doc_id, CAST(i // 4 AS INT) AS band,
-         |    string_agg(CAST(mh AS VARCHAR), '-' ORDER BY i) AS sig
-         |  FROM mh GROUP BY 1, 2
-         |)
-         |SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |FROM bs x JOIN bs y ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
-         |ORDER BY a, b""".stripMargin,
-
-    // d28: the LSH S-curve measured — shared-shingle pairs bucketed by
-    // integer Jaccard decile, full-outer with d03's banded candidates;
-    // no-shared-shingle candidates land in bucket -1 as explicit FPs
-    "d28_lsh_recall" ->
-      s"""WITH ${tkCte("")},
-         |$ShCte,
-         |$DictCte,
-         |$HashCte,
-         |mh AS (
-         |  SELECT s.doc_id, h.i, min((h.a * d.sid + h.b) % 2147483647) AS mh
-         |  FROM sh s JOIN dict d ON s.sh = d.sh CROSS JOIN h
-         |  GROUP BY 1, 2
-         |),
-         |bs AS (
-         |  SELECT doc_id, CAST(i // 4 AS INT) AS band,
-         |    string_agg(CAST(mh AS VARCHAR), '-' ORDER BY i) AS sig
-         |  FROM mh GROUP BY 1, 2
-         |),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |  FROM bs x JOIN bs y ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
-         |),
-         |sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b, CAST(count(*) AS BIGINT) AS ic
-         |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2
-         |),
-         |pr AS (
-         |  SELECT i.a, i.b,
-         |    CAST((i.ic * 10) // (sa.n + sb.n - i.ic) AS INT) AS bucket
-         |  FROM inter i JOIN sizes sa ON i.a = sa.doc_id
-         |  JOIN sizes sb ON i.b = sb.doc_id
-         |),
-         |fo AS (
-         |  SELECT coalesce(p.bucket, -1) AS bucket,
-         |    CASE WHEN p.a IS NOT NULL THEN 1 ELSE 0 END AS is_pair,
-         |    CASE WHEN c.a IS NOT NULL THEN 1 ELSE 0 END AS is_hit
-         |  FROM pr p FULL OUTER JOIN cand c ON p.a = c.a AND p.b = c.b
-         |)
-         |SELECT bucket, CAST(sum(is_pair) AS BIGINT) AS n_pairs,
-         |  CAST(sum(is_hit) AS BIGINT) AS n_caught
-         |FROM fo GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    // d29: the embedding-LSH recall curve — d05-sample all-pairs cosine
-    // banded in 0.2 steps; per band, pairs caught by the single-bucket
-    // join (plane-sign hamming 0) and by hamming-1 multi-probe
-    "d29_embed_lsh_recall" ->
-      s"""WITH ${embCte("vec_id % 2 = 0 AND vec_id < 2048")},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |dots AS (
-         |  SELECT vec_id, j,
-         |    sum(CAST(round(x * 1e6, 0) AS BIGINT) * (((17 * j + 31 * (i - 1) + 5) % 7) - 3)) AS pd
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-         |  GROUP BY 1, 2
-         |),
-         |bkt AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN pd > 0 THEN (1 << j) ELSE 0 END) AS INT) AS bucket
-         |  FROM dots GROUP BY 1
-         |),
-         |d AS (
-         |  SELECT q.vec_id AS a, c.vec_id AS b, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i AND q.vec_id < c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |sc AS (
-         |  SELECT round(d.dp / sqrt(na.nrm * nb.nrm), 6) AS cos,
-         |    bit_count(xor(ba.bucket, bb.bucket)) AS hd
-         |  FROM d JOIN n na ON d.a = na.vec_id JOIN n nb ON d.b = nb.vec_id
-         |  JOIN bkt ba ON d.a = ba.vec_id JOIN bkt bb ON d.b = bb.vec_id
-         |),
-         |bd AS (
-         |  SELECT CAST(CASE WHEN cos < 0.0 THEN 0
-         |                   WHEN cos < 0.2 THEN 1
-         |                   WHEN cos < 0.4 THEN 2
-         |                   WHEN cos < 0.6 THEN 3
-         |                   WHEN cos < 0.8 THEN 4
-         |                   ELSE 5 END AS INT) AS band, hd
-         |  FROM sc)
-         |SELECT band, CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(CASE WHEN hd = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_same_bucket,
-         |  CAST(sum(CASE WHEN hd <= 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_probe1
-         |FROM bd GROUP BY band ORDER BY band""".stripMargin,
-
-    // d30: exact suffix-repeat profile — capped suffixes sorted
-    // globally (the suffix array over the bounded sample), adjacent
-    // LCP via first-mismatch scan, per-position max over the two
-    // rank-neighbors, histogram of lengths >= 8
-    "d30_suffix_repeats" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id, substr(text, 1, 128) AS t FROM documents
-         |  WHERE doc_id < 64 AND length(text) > 0
-         |),
-         |pos AS (
-         |  SELECT doc_id, CAST(o.off AS INT) AS off,
-         |    substr(t, CAST(o.off AS INT) + 1, 64) AS sfx
-         |  FROM docs CROSS JOIN (SELECT unnest(range(0, 128)) AS off) o
-         |  WHERE o.off < length(t)
-         |),
-         |sa AS (
-         |  SELECT doc_id, off, sfx,
-         |    row_number() OVER (ORDER BY sfx, doc_id, off) AS rk
-         |  FROM pos
-         |),
-         |lcps AS (
-         |  SELECT a.rk,
-         |    coalesce(
-         |      min(CASE WHEN substr(a.sfx, ii.i, 1) <> substr(b.sfx, ii.i, 1)
-         |               THEN ii.i END) - 1,
-         |      least(length(a.sfx), length(b.sfx))) AS lcp
-         |  FROM sa a JOIN sa b ON b.rk = a.rk + 1
-         |  CROSS JOIN (SELECT CAST(unnest(range(1, 65)) AS INT) AS i) ii
-         |  GROUP BY a.rk, a.sfx, b.sfx
-         |),
-         |ends AS (
-         |  SELECT rk, lcp FROM lcps
-         |  UNION ALL SELECT rk + 1 AS rk, lcp FROM lcps
-         |),
-         |pm AS (SELECT rk, max(lcp) AS repeat_len FROM ends GROUP BY 1)
-         |SELECT CAST(repeat_len AS INT) AS repeat_len,
-         |  CAST(count(*) AS BIGINT) AS n_positions
-         |FROM pm WHERE repeat_len >= 8 GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // d31: the cut itself — a char is removed iff it sits inside any
-    // repeat >= 16 starting at or before it; coverage is the per-doc
-    // running max of (off + repeat_len), and the scrubbed text is the
-    // order-sensitive rebuild of survivors
-    "d31_suffix_scrub" ->
-      s"""WITH docs AS (
-         |  SELECT doc_id, substr(text, 1, 128) AS t FROM documents
-         |  WHERE doc_id < 64 AND length(text) > 0
-         |),
-         |pos AS (
-         |  SELECT doc_id, CAST(o.off AS INT) AS off,
-         |    substr(t, CAST(o.off AS INT) + 1, 64) AS sfx
-         |  FROM docs CROSS JOIN (SELECT unnest(range(0, 128)) AS off) o
-         |  WHERE o.off < length(t)
-         |),
-         |sa AS (
-         |  SELECT doc_id, off, sfx,
-         |    row_number() OVER (ORDER BY sfx, doc_id, off) AS rk
-         |  FROM pos
-         |),
-         |lcps AS (
-         |  SELECT a.rk,
-         |    coalesce(
-         |      min(CASE WHEN substr(a.sfx, ii.i, 1) <> substr(b.sfx, ii.i, 1)
-         |               THEN ii.i END) - 1,
-         |      least(length(a.sfx), length(b.sfx))) AS lcp
-         |  FROM sa a JOIN sa b ON b.rk = a.rk + 1
-         |  CROSS JOIN (SELECT CAST(unnest(range(1, 65)) AS INT) AS i) ii
-         |  GROUP BY a.rk, a.sfx, b.sfx
-         |),
-         |ends AS (
-         |  SELECT rk, lcp FROM lcps
-         |  UNION ALL SELECT rk + 1 AS rk, lcp FROM lcps
-         |),
-         |pm AS (SELECT rk, max(lcp) AS repeat_len FROM ends GROUP BY 1),
-         |pl AS (
-         |  SELECT s.doc_id, s.off, substr(s.sfx, 1, 1) AS chr,
-         |    coalesce(pm.repeat_len, 0) AS rl
-         |  FROM sa s LEFT JOIN pm ON s.rk = pm.rk
-         |),
-         |cov AS (
-         |  SELECT doc_id, off, chr,
-         |    max(CASE WHEN rl >= 16 THEN off + rl ELSE -1 END)
-         |      OVER (PARTITION BY doc_id ORDER BY off) AS rend
-         |  FROM pl
-         |)
-         |SELECT doc_id,
-         |  CAST(sum(CASE WHEN off >= rend THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         |  CAST(sum(CASE WHEN off < rend THEN 1 ELSE 0 END) AS BIGINT) AS n_cut,
-         |  coalesce(string_agg(CASE WHEN off >= rend THEN chr END, ''
-         |    ORDER BY off), '') AS scrubbed
-         |FROM cov GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // est = equal signature positions / 16 (unbiased Jaccard estimator);
-    // exact jaccard joined alongside so the oracle pins both columns
-    "d09_minhash_estimate" ->
-      s"""WITH ${tkCte("WHERE doc_id % 10 = 0")},
-         |$ShCte,
-         |$DictCte,
-         |$HashCte,
-         |mh AS (
-         |  SELECT s.doc_id, h.i, min((h.a * d.sid + h.b) % 2147483647) AS mh
-         |  FROM sh s JOIN dict d ON s.sh = d.sh CROSS JOIN h
-         |  GROUP BY 1, 2
-         |),
-         |bs AS (
-         |  SELECT doc_id, CAST(i // 4 AS INT) AS band,
-         |    string_agg(CAST(mh AS VARCHAR), '-' ORDER BY i) AS sig
-         |  FROM mh GROUP BY 1, 2
-         |),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |  FROM bs x JOIN bs y ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
-         |),
-         |mtch AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS m
-         |  FROM mh x JOIN mh y ON x.i = y.i AND x.mh = y.mh AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2
-         |),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS ic
-         |  FROM sh x JOIN sh y ON x.sh = y.sh AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT c.a, c.b,
-         |  round(coalesce(mm.m, 0) / 16.0, 6) AS est,
-         |  round(coalesce(i.ic, 0) / (sa.n + sb.n - coalesce(i.ic, 0)), 6) AS jaccard
-         |FROM cand c
-         |LEFT JOIN mtch mm ON c.a = mm.a AND c.b = mm.b
-         |LEFT JOIN inter i ON c.a = i.a AND c.b = i.b
-         |JOIN sizes sa ON c.a = sa.doc_id
-         |JOIN sizes sb ON c.b = sb.doc_id
-         |ORDER BY c.a, c.b""".stripMargin,
-
-    // d35: the d09 chain with the b-bit twist — low-2-bit matches per
-    // position, Li-König correction (4C-1)/3 on the exact ppm grid
-    "d35_bbit_minhash" ->
-      s"""WITH ${tkCte("WHERE doc_id % 10 = 0")},
-         |$ShCte,
-         |$DictCte,
-         |$HashCte,
-         |mh AS (
-         |  SELECT s.doc_id, h.i, min((h.a * d.sid + h.b) % 2147483647) AS mh
-         |  FROM sh s JOIN dict d ON s.sh = d.sh CROSS JOIN h
-         |  GROUP BY 1, 2
-         |),
-         |bs AS (
-         |  SELECT doc_id, CAST(i // 4 AS INT) AS band,
-         |    string_agg(CAST(mh AS VARCHAR), '-' ORDER BY i) AS sig
-         |  FROM mh GROUP BY 1, 2
-         |),
-         |cand AS (
-         |  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-         |  FROM bs x JOIN bs y ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
-         |),
-         |mtch AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS m
-         |  FROM mh x JOIN mh y ON x.i = y.i AND x.mh = y.mh AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2
-         |),
-         |mtchb AS (
-         |  SELECT x.doc_id AS a, y.doc_id AS b, count(*) AS mb
-         |  FROM mh x JOIN mh y ON x.i = y.i AND x.mh % 4 = y.mh % 4 AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT c.a, c.b,
-         |  CAST(coalesce(mm.m, 0) AS BIGINT) AS eq_full,
-         |  CAST(coalesce(mb.mb, 0) AS BIGINT) AS eq_b,
-         |  coalesce(mm.m, 0) * 1000000 // 16 AS est_full_ppm,
-         |  greatest(0, (4 * coalesce(mb.mb, 0) - 16) * 1000000 // 48) AS est_b_ppm
-         |FROM cand c
-         |LEFT JOIN mtch mm ON c.a = mm.a AND c.b = mm.b
-         |LEFT JOIN mtchb mb ON c.a = mb.a AND c.b = mb.b
-         |ORDER BY c.a, c.b""".stripMargin,
-
-    // passage hash parity: identical window build (1-based inclusive
-    // list slice = Spark slice(tk, i*20+1, 20)), md5 lowercase hex on
-    // both engines; single distinct agg (no Expand rewrite either side)
-    "d10_passage_dedup" ->
-      s"""WITH ${tkCte("")},
-         |p AS (
-         |  SELECT doc_id, md5(array_to_string(tk[(i-1)*20+1 : i*20], ' ')) AS ph
-         |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) // 20 + 1)) AS i FROM tk) t
-         |)
-         |SELECT ph, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         |  CAST(count(*) AS BIGINT) AS n_occ, min(doc_id) AS min_doc
-         |FROM p GROUP BY ph HAVING count(DISTINCT doc_id) >= 2
-         |ORDER BY ph""".stripMargin,
-
-    // d17: d10's build with stride-1 (overlapping) spans — tk[i : i+19]
-    // is DuckDB's inclusive 1-based list slice, 20 tokens from i, in
-    // lockstep with Spark slice(tk, i, 20)
-    "d17_repeated_spans" ->
-      s"""WITH ${tkCte("")},
-         |p AS (
-         |  SELECT doc_id, md5(array_to_string(tk[i : i+19], ' ')) AS ph
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(1, greatest(len(tk) - 20 + 1, 0) + 1)) AS i
-         |        FROM tk) t
-         |)
-         |SELECT ph, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-         |  CAST(count(*) AS BIGINT) AS n_occ, min(doc_id) AS min_doc
-         |FROM p GROUP BY ph HAVING count(DISTINCT doc_id) >= 2
-         |ORDER BY ph""".stripMargin,
-
-    // d18: the d17 spans joined back to positions — covered = any
-    // repeated span's [i, i+19] in a non-keeper doc; string_agg skips
-    // the NULLed covered tokens exactly as collect_list drops null
-    // whens; coalesce('') matches Spark's empty-array join on a fully
-    // covered doc
-    "d18_span_scrub" ->
-      s"""WITH ${tkCte("")},
-         |toks AS (
-         |  SELECT doc_id, i AS pos, list_extract(tk, i) AS token
-         |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i FROM tk) t
-         |),
-         |spans AS (
-         |  SELECT doc_id, i, md5(array_to_string(tk[i : i+19], ' ')) AS ph
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(1, greatest(len(tk) - 20 + 1, 0) + 1)) AS i
-         |        FROM tk) t
-         |),
-         |rep AS (
-         |  SELECT ph, min(doc_id) AS min_doc FROM spans
-         |  GROUP BY ph HAVING count(DISTINCT doc_id) >= 2
-         |),
-         |cov AS (
-         |  SELECT DISTINCT s.doc_id, s.i + o.off AS pos
-         |  FROM spans s JOIN rep r ON s.ph = r.ph AND s.doc_id <> r.min_doc
-         |  CROSS JOIN (SELECT unnest(range(0, 20)) AS off) o
-         |)
-         |SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CASE WHEN c.pos IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_removed,
-         |  coalesce(string_agg(CASE WHEN c.pos IS NULL THEN t.token END,
-         |    ' ' ORDER BY t.pos), '') AS clean
-         |FROM toks t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.pos = c.pos
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // d19: snapshot diff by content hash — full outer on (lang, h),
-    // membership flags from null-side detection
-    "d19_corpus_diff" ->
-      """WITH o AS (SELECT DISTINCT lang, md5(text) AS h FROM documents
-        |           WHERE doc_id % 2 = 0),
-        |n AS (SELECT DISTINCT lang, md5(text) AS h FROM documents
-        |      WHERE doc_id % 2 = 1)
-        |SELECT coalesce(o.lang, n.lang) AS lang,
-        |  CAST(sum(CASE WHEN o.h IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_added,
-        |  CAST(sum(CASE WHEN n.h IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-        |  CAST(sum(CASE WHEN o.h IS NOT NULL AND n.h IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_retained
-        |FROM o FULL JOIN n ON o.lang = n.lang AND o.h = n.h
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // d20: cross-source shingle overlap — distinct (source, 3-gram)
-    // self-join, Jaccard + containment from exact integer counts
-    "d20_source_overlap" ->
-      s"""WITH tk AS (SELECT source, $Toks AS tk FROM documents),
-         |gp AS (SELECT source, tk,
-         |         unnest(range(1, greatest(len(tk) - 2, 0) + 1)) AS i FROM tk),
-         |ss AS (SELECT DISTINCT source, $GramExpr AS sh FROM gp),
-         |sizes AS (SELECT source, count(*) AS n FROM ss GROUP BY source),
-         |inter AS (
-         |  SELECT x.source AS src_a, y.source AS src_b, count(*) AS shared
-         |  FROM ss x JOIN ss y ON x.sh = y.sh AND x.source < y.source
-         |  GROUP BY 1, 2
-         |)
-         |SELECT src_a, src_b, shared,
-         |  round(shared / (sa.n + sb.n - shared), 6) AS jaccard,
-         |  round(shared / least(sa.n, sb.n), 6) AS containment
-         |FROM inter JOIN sizes sa ON src_a = sa.source
-         |           JOIN sizes sb ON src_b = sb.source
-         |ORDER BY src_a, src_b""".stripMargin,
-
-    "d04_simhash" ->
-      s"""WITH ${tkCte("")},
-         |$ShCte,
-         |$DictCte,
-         |$HashCte,
-         |votes AS (
-         |  SELECT s.doc_id, h.i,
-         |    sum(CASE WHEN ((h.a * d.sid + h.b) % 2147483647) % 2 = 1 THEN 1 ELSE -1 END) AS v
-         |  FROM sh s JOIN dict d ON s.sh = d.sh CROSS JOIN h
-         |  GROUP BY 1, 2
-         |)
-         |SELECT doc_id,
-         |  CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS simhash
-         |FROM votes GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "d04_simhash_pairs" ->
-      s"""WITH ${tkCte("")},
-         |$ShCte,
-         |$DictCte,
-         |h AS (SELECT i, 4097 + 7919*i AS a, 17 + 104729*i AS b FROM (SELECT unnest(range(0, 32)) AS i) hh),
-         |votes AS (
-         |  SELECT s.doc_id, h.i,
-         |    sum(CASE WHEN ((h.a * d.sid + h.b) % 2147483647) % 2 = 1 THEN 1 ELSE -1 END) AS v
-         |  FROM sh s JOIN dict d ON s.sh = d.sh CROSS JOIN h
-         |  GROUP BY 1, 2
-         |),
-         |fp AS (
-         |  SELECT doc_id,
-         |    CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << i) ELSE 0 END) AS BIGINT) AS simhash
-         |  FROM votes GROUP BY doc_id
-         |),
-         |bkt AS (SELECT doc_id, simhash, simhash // 65536 AS hi,
-         |               simhash % 65536 AS lo FROM fp)
-         |SELECT a, b, hamming FROM (
-         |  SELECT x.doc_id AS a, y.doc_id AS b,
-         |    CAST(bit_count(xor(x.simhash, y.simhash)) AS INT) AS hamming
-         |  FROM bkt x JOIN bkt y ON x.hi = y.hi AND x.doc_id < y.doc_id
-         |  WHERE bit_count(xor(x.simhash, y.simhash)) <= 2
-         |  UNION
-         |  SELECT x.doc_id AS a, y.doc_id AS b,
-         |    CAST(bit_count(xor(x.simhash, y.simhash)) AS INT) AS hamming
-         |  FROM bkt x JOIN bkt y ON x.lo = y.lo AND x.doc_id < y.doc_id
-         |  WHERE bit_count(xor(x.simhash, y.simhash)) <= 2
-         |) u ORDER BY a, b""".stripMargin,
-
-    // Ground-truth canonicalization: exact-dup edges + ALL Jaccard>=0.6
-    // pairs, clustered by a recursive transitive closure (DuckDB's CC),
-    // canonical = min doc_id of the component — semantically what the
-    // Spark pipeline computes, with LSH candidate recall the only
-    // approximation (4x4 banding recall at j>=0.6 is the documented
-    // trade; at the gate scale every qualifying pair is recalled, and
-    // exact dups always collide in every band).
-    "d06_canonicalize" ->
-      s"""WITH RECURSIVE $CanonCtes
-         |SELECT d.doc_id,
-         |  coalesce(c.canonical_id, d.doc_id) AS canonical_id,
-         |  coalesce(c.canonical_id, d.doc_id) <> d.doc_id AS is_duplicate
-         |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // d37: the cluster-map artifact roundtrip — the Spark side writes
-    // the session artifact (clusterMapWrite) and returns the parquet
-    // READ-BACK; the oracle rebuilds the map from the base tables
-    // (d06's recursive-CC SQL, sans decoration). Hash-green = build →
-    // parquet → scan loses nothing, licensing the d08/d11/p06/p09
-    // artifact consumption.
-    "d37_canon_artifact" ->
-      s"""WITH RECURSIVE $CanonCtes
-         |SELECT d.doc_id,
-         |  coalesce(c.canonical_id, d.doc_id) AS canonical_id
-         |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // cluster-size histogram over d06's components (the dedup-run
-    // observability rollup)
-    "d11_cluster_stats" ->
-      s"""WITH RECURSIVE $CanonCtes,
-         |allc AS (
-         |  SELECT d.doc_id, coalesce(c.canonical_id, d.doc_id) AS canonical_id
-         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-         |),
-         |sz AS (
-         |  SELECT canonical_id, CAST(count(*) AS BIGINT) AS cluster_size
-         |  FROM allc GROUP BY 1
-         |)
-         |SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
-         |FROM sz GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // d06's clusters + t01's quality score: keep each cluster's
-    // highest-quality member (quality desc, doc_id tiebreak).
-    "d08_canonical_best" ->
-      s"""WITH RECURSIVE $CanonCtes,
-         |allc AS (
-         |  SELECT d.doc_id, coalesce(c.canonical_id, d.doc_id) AS canonical_id
-         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-         |),
-         |q AS (
-         |  SELECT doc_id,
-         |    round(least(1.0, CAST(len(tk) AS DOUBLE) / 100.0) *
-         |      (1.0 - CAST(len(list_filter(tk, x -> x IN ('the','a','and','of','to','is','in'))) AS DOUBLE)
-         |             / len(tk)), 6) AS quality
-         |  FROM tk WHERE len(tk) > 0
-         |),
-         |r AS (
-         |  SELECT a.doc_id, a.canonical_id,
-         |    row_number() OVER (PARTITION BY a.canonical_id
-         |                       ORDER BY q.quality DESC, a.doc_id) AS rn
-         |  FROM allc a JOIN q ON a.doc_id = q.doc_id
-         |),
-         |k AS (SELECT canonical_id, doc_id AS keep_id FROM r WHERE rn = 1)
-         |SELECT r.doc_id, r.canonical_id, k.keep_id, r.doc_id = k.keep_id AS keep
-         |FROM r JOIN k ON r.canonical_id = k.canonical_id
-         |ORDER BY r.doc_id""".stripMargin,
-
-    // vec_id < 12800 mirrors embeddingNearDup's maxSample=256 id-prefix
-    // cap (fixed-size sample; non-binding at the sf0.01 gate's 500 rows)
-    "d05_embed_neardup" ->
-      s"""WITH ${embCte("vec_id % 50 = 0 AND vec_id < 12800")},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |d AS (
-         |  SELECT ea.vec_id AS a, eb.vec_id AS b, sum(ea.x * eb.x) AS dp
-         |  FROM e ea JOIN e eb ON ea.i = eb.i AND ea.vec_id < eb.vec_id
-         |  GROUP BY 1, 2
-         |)
-         |SELECT a, b, round(dp / sqrt(na.nrm * nb.nrm), 6) AS cos
-         |FROM d JOIN n na ON a = na.vec_id JOIN n nb ON b = nb.vec_id
-         |WHERE round(dp / sqrt(na.nrm * nb.nrm), 6) >= 0.2
-         |ORDER BY a, b""".stripMargin,
-
-    // d05's corpus-scale twin: same exact-cosine verifier, but pair
-    // candidates come from the s02 hyperplane-sign buckets over the
-    // FULL corpus — nothing quadratic in corpus size. Because the pair
-    // count grows with the corpus (unlike d05's fixed-size sample), the
-    // verify dot/norm here are ORDER-PINNED: list_reduce folds
-    // left-to-right, bit-identical to Spark's fold (verified on the
-    // parquet floats), so round(cos, 6) and the threshold never sit on
-    // an unordered-float-sum boundary. (Residual: Spark seeds its fold
-    // with +0.0, list_reduce with the first product — they differ only
-    // in the sign of an all-zero dot, which the >= 0.2 filter drops.)
-    "d13_embed_neardup_lsh" ->
-      s"""WITH ${embCte("TRUE")},
-         |n AS (SELECT vec_id, list_reduce(
-         |        list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
-         |        (x, y) -> x + y) AS nrm
-         |      FROM embeddings),
-         |dots AS (
-         |  SELECT vec_id, j,
-         |    sum(CAST(round(x * 1e6, 0) AS BIGINT) * (((17 * j + 31 * (i - 1) + 5) % 7) - 3)) AS pd
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-         |  GROUP BY 1, 2
-         |),
-         |bkt AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN pd > 0 THEN (1 << j) ELSE 0 END) AS INT) AS bucket
-         |  FROM dots GROUP BY 1
-         |),
-         |pairs AS (
-         |  SELECT xa.vec_id AS a, xb.vec_id AS b, xa.bucket
-         |  FROM bkt xa JOIN bkt xb ON xa.bucket = xb.bucket AND xa.vec_id < xb.vec_id
-         |),
-         |d AS (
-         |  SELECT p.a, p.b, p.bucket, list_reduce(
-         |    list_transform(list_zip(ea.embedding, eb.embedding),
-         |      z -> z[1]::DOUBLE * z[2]::DOUBLE),
-         |    (x, y) -> x + y) AS dp
-         |  FROM pairs p
-         |  JOIN embeddings ea ON ea.vec_id = p.a
-         |  JOIN embeddings eb ON eb.vec_id = p.b
-         |)
-         |SELECT a, b, bucket, round(dp / sqrt(na.nrm * nb.nrm), 6) AS cos
-         |FROM d JOIN n na ON a = na.vec_id JOIN n nb ON b = nb.vec_id
-         |WHERE round(dp / sqrt(na.nrm * nb.nrm), 6) >= 0.2
-         |ORDER BY a, b""".stripMargin,
-
-    // d13 + hamming-1 multi-probe pair mining: the LEFT copy explodes
-    // to {bucket} ∪ {bucket XOR 2^j} (pairwise distinct), so a pair at
-    // bucket-hamming <= 1 matches probe == bucket exactly once — no
-    // dedup needed; exact cosine verifies, with the same order-pinned
-    // list_reduce fold as d13 (pair count grows with the corpus)
-    "d14_embed_neardup_multiprobe" ->
-      s"""WITH ${embCte("TRUE")},
-         |n AS (SELECT vec_id, list_reduce(
-         |        list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
-         |        (x, y) -> x + y) AS nrm
-         |      FROM embeddings),
-         |dots AS (
-         |  SELECT vec_id, j,
-         |    sum(CAST(round(x * 1e6, 0) AS BIGINT) * (((17 * j + 31 * (i - 1) + 5) % 7) - 3)) AS pd
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-         |  GROUP BY 1, 2
-         |),
-         |bkt AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN pd > 0 THEN (1 << j) ELSE 0 END) AS INT) AS bucket
-         |  FROM dots GROUP BY 1
-         |),
-         |probes AS (
-         |  SELECT vec_id, bucket,
-         |    CASE WHEN j = 0 THEN bucket
-         |         ELSE CAST(xor(bucket, 1 << (j - 1)) AS INT) END AS probe
-         |  FROM bkt CROSS JOIN (SELECT unnest(range(0, 5)) AS j) js
-         |),
-         |pairs AS (
-         |  SELECT xa.vec_id AS a, xb.vec_id AS b,
-         |    xa.bucket AS bucket_a, xb.bucket AS bucket_b
-         |  FROM probes xa JOIN bkt xb ON xa.probe = xb.bucket AND xa.vec_id < xb.vec_id
-         |),
-         |d AS (
-         |  SELECT p.a, p.b, p.bucket_a, p.bucket_b, list_reduce(
-         |    list_transform(list_zip(ea.embedding, eb.embedding),
-         |      z -> z[1]::DOUBLE * z[2]::DOUBLE),
-         |    (x, y) -> x + y) AS dp
-         |  FROM pairs p
-         |  JOIN embeddings ea ON ea.vec_id = p.a
-         |  JOIN embeddings eb ON eb.vec_id = p.b
-         |)
-         |SELECT a, b, bucket_a, bucket_b, round(dp / sqrt(na.nrm * nb.nrm), 6) AS cos
-         |FROM d JOIN n na ON a = na.vec_id JOIN n nb ON b = nb.vec_id
-         |WHERE round(dp / sqrt(na.nrm * nb.nrm), 6) >= 0.2
-         |ORDER BY a, b""".stripMargin,
-
-    // d16: d12's delta-vs-history pattern in vector space — delta (odd
-    // vec_id) probes history (even) through the shared hyperplane
-    // buckets; order-pinned cosine verify; best match = highest rounded
-    // cosine with min-id tiebreak
-    "d16_incremental_embed" ->
-      s"""WITH ${embCte("TRUE")},
-         |n AS (SELECT vec_id, list_reduce(
-         |        list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
-         |        (x, y) -> x + y) AS nrm
-         |      FROM embeddings),
-         |dots AS (
-         |  SELECT vec_id, j,
-         |    sum(CAST(round(x * 1e6, 0) AS BIGINT) * (((17 * j + 31 * (i - 1) + 5) % 7) - 3)) AS pd
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-         |  GROUP BY 1, 2
-         |),
-         |bkt AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN pd > 0 THEN (1 << j) ELSE 0 END) AS INT) AS bucket
-         |  FROM dots GROUP BY 1
-         |),
-         |pairs0 AS (
-         |  SELECT da.vec_id, da.bucket, hb.vec_id AS hid,
-         |    round(list_reduce(list_transform(list_zip(ea.embedding, eb.embedding),
-         |        z -> z[1]::DOUBLE * z[2]::DOUBLE), (x, y) -> x + y)
-         |      / sqrt(na.nrm * nb.nrm), 6) AS cos
-         |  FROM bkt da JOIN bkt hb ON da.bucket = hb.bucket
-         |  JOIN embeddings ea ON ea.vec_id = da.vec_id
-         |  JOIN embeddings eb ON eb.vec_id = hb.vec_id
-         |  JOIN n na ON na.vec_id = da.vec_id
-         |  JOIN n nb ON nb.vec_id = hb.vec_id
-         |  WHERE da.vec_id % 2 = 1 AND hb.vec_id % 2 = 0
-         |),
-         |pairs AS (SELECT * FROM pairs0 WHERE cos >= 0.2),
-         |r AS (
-         |  SELECT vec_id, bucket, hid, cos,
-         |    CAST(count(*) OVER (PARTITION BY vec_id) AS BIGINT) AS n_matches,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, hid) AS rn
-         |  FROM pairs
-         |)
-         |SELECT vec_id, bucket, n_matches, hid AS best_match, cos AS best_cos
-         |FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    // d15 SemDeDup: integer-grid cells (the s05 CTEs verbatim), pair
-    // join bounded to same-cell mates, order-pinned exact cosine, and
-    // the min-id keep policy — a vector is dropped iff ANY smaller-id
-    // cluster-mate clears the threshold (the over-approximation of
-    // keep-first; see the operator scaladoc)
-    "d15_semdedup" ->
-      s"""WITH ${embCte("TRUE")},
-         |q AS (SELECT vec_id, CAST(vec_id % 8 AS INT) AS cluster, i AS pos,
-         |        CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-         |cent AS (
-         |  SELECT cluster, pos, CAST(round(sum(xq) / count(*), 0) AS BIGINT) AS cq
-         |  FROM q GROUP BY 1, 2
-         |),
-         |d AS (
-         |  SELECT q.vec_id, c.cluster,
-         |    CAST(sum((q.xq - c.cq) * (q.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM q JOIN cent c ON q.pos = c.pos
-         |  GROUP BY 1, 2
-         |),
-         |cells AS (
-         |  SELECT vec_id, cluster AS cell
-         |  FROM (SELECT vec_id, cluster,
-         |          row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |        FROM d) r
-         |  WHERE rn = 1
-         |),
-         |n AS (SELECT vec_id, list_reduce(
-         |        list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
-         |        (x, y) -> x + y) AS nrm
-         |      FROM embeddings),
-         |pairs AS (
-         |  SELECT cb.vec_id AS b
-         |  FROM cells ca JOIN cells cb ON ca.cell = cb.cell AND ca.vec_id < cb.vec_id
-         |  JOIN embeddings ea ON ea.vec_id = ca.vec_id
-         |  JOIN embeddings eb ON eb.vec_id = cb.vec_id
-         |  JOIN n na ON na.vec_id = ca.vec_id
-         |  JOIN n nb ON nb.vec_id = cb.vec_id
-         |  WHERE round(list_reduce(list_transform(list_zip(ea.embedding, eb.embedding),
-         |      z -> z[1]::DOUBLE * z[2]::DOUBLE), (x, y) -> x + y)
-         |    / sqrt(na.nrm * nb.nrm), 6) >= 0.2
-         |),
-         |dups AS (SELECT b, count(*) AS n_dups FROM pairs GROUP BY 1)
-         |SELECT c.vec_id, c.cell, COALESCE(d2.n_dups, 0) AS n_dups,
-         |  COALESCE(d2.n_dups, 0) = 0 AS keep
-         |FROM cells c LEFT JOIN dups d2 ON c.vec_id = d2.b
-         |ORDER BY c.vec_id""".stripMargin,
-
-    "s01_ann_bruteforce" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT qid, cand, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d JOIN n nq ON qid = nq.vec_id JOIN n nc ON cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, cand, cos, rnk FROM ranked WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin,
-
-    "s02_ann_lsh" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |dots AS (
-         |  SELECT vec_id, j,
-         |    sum(CAST(round(x * 1e6, 0) AS BIGINT) * (((17 * j + 31 * (i - 1) + 5) % 7) - 3)) AS pd
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-         |  GROUP BY 1, 2
-         |),
-         |bkt AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN pd > 0 THEN (1 << j) ELSE 0 END) AS INT) AS bucket
-         |  FROM dots GROUP BY 1
-         |),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT d.qid, d.cand, bq.bucket, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d
-         |  JOIN bkt bq ON d.qid = bq.vec_id
-         |  JOIN bkt bc ON d.cand = bc.vec_id AND bq.bucket = bc.bucket
-         |  JOIN n nq ON d.qid = nq.vec_id JOIN n nc ON d.cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, bucket, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, cand, bucket, cos, rnk FROM ranked WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin,
-
-    // s36: the RP-tree — per-level projections at offsets 10+l, lower
-    // median BY VALUE per node ((dot, vec_id) rank, t = max of first
-    // (n+1)//2), route left iff dt <= t; queries walk the identical
-    // thresholds; exact-cosine re-rank within the shared leaf
-    "s36_ann_rptree" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |c0 AS (SELECT DISTINCT vec_id, 0 AS node FROM e WHERE vec_id % 20 = 0),
-         |q0 AS (SELECT DISTINCT vec_id AS qid, 0 AS node FROM e WHERE vec_id < 8),
-         |${rpTreeCtes(3)},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT d.qid, d.cand, CAST(q3.node AS INT) AS leaf,
-         |    round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d
-         |  JOIN c3 ON d.cand = c3.vec_id
-         |  JOIN q3 ON d.qid = q3.qid AND c3.node = q3.node
-         |  JOIN n nq ON d.qid = nq.vec_id JOIN n nc ON d.cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, leaf, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, cand, leaf, cos, rnk FROM ranked WHERE rnk <= 3
-         |ORDER BY qid, rnk""".stripMargin,
-
-    // s37: the RP-forest — three rpTreeCtesAt chains (tree t at offsets
-    // 10+3t; tree 0 == the s36 tree), per-tree leaf matches unioned and
-    // deduped with the tree-vote count, exact-cosine re-rank of the union
-    "s37_ann_rpforest" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |${rpForestCtes(3, 3)},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT p.qid, p.cand, p.n_trees,
-         |    round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM pairs p
-         |  JOIN d ON d.qid = p.qid AND d.cand = p.cand
-         |  JOIN n nq ON p.qid = nq.vec_id JOIN n nc ON p.cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, n_trees, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, cand, n_trees, cos, rnk FROM ranked WHERE rnk <= 3
-         |ORDER BY qid, rnk""".stripMargin,
-
-    // IVF with the relational integer-grid Lloyd quantizer (seed = first
-    // 8 candidate vectors, 2 assign→re-average rounds — ivfCtes), final
-    // candidate cells + query probes ranked against c2, exact-cosine
-    // re-rank of the probed cells only
-    "s03_ann_ivf" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |${ivfCtes(8, 2)},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |dc AS (
-         |  SELECT cp.vec_id, c.cluster,
-         |    CAST(sum((cp.xq - c.cq) * (cp.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM cp JOIN c2 c ON cp.pos = c.pos GROUP BY 1, 2
-         |),
-         |cells AS (
-         |  SELECT vec_id, cluster AS cell FROM (
-         |    SELECT vec_id, cluster,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |    FROM dc) r WHERE rn = 1
-         |),
-         |dq AS (
-         |  SELECT qp.vec_id, c.cluster,
-         |    CAST(sum((qp.xq - c.cq) * (qp.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM qp JOIN c2 c ON qp.pos = c.pos GROUP BY 1, 2
-         |),
-         |probes AS (
-         |  SELECT vec_id AS qid, cluster AS cell FROM (
-         |    SELECT vec_id, cluster,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |    FROM dq) r WHERE rn <= 4
-         |),
-         |dd AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT dd.qid, dd.cand, cl.cell,
-         |    round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM dd
-         |  JOIN cells cl ON dd.cand = cl.vec_id
-         |  JOIN probes p ON dd.qid = p.qid AND p.cell = cl.cell
-         |  JOIN n nq ON dd.qid = nq.vec_id JOIN n nc ON dd.cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, cell, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, cand, cell, cos, rnk FROM ranked WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin,
-
-    // s02 + hamming-1 multi-probe: each query also probes every bucket
-    // one plane-sign flip away (probe set = bucket XOR single bits;
-    // pairwise distinct, so no pair dedup before the re-rank)
-    "s06_ann_multiprobe" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |dots AS (
-         |  SELECT vec_id, j,
-         |    sum(CAST(round(x * 1e6, 0) AS BIGINT) * (((17 * j + 31 * (i - 1) + 5) % 7) - 3)) AS pd
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-         |  GROUP BY 1, 2
-         |),
-         |bkt AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN pd > 0 THEN (1 << j) ELSE 0 END) AS INT) AS bucket
-         |  FROM dots GROUP BY 1
-         |),
-         |probes AS (
-         |  SELECT vec_id, CASE WHEN j = 0 THEN bucket
-         |                      ELSE CAST(xor(bucket, 1 << (j - 1)) AS INT) END AS probe
-         |  FROM bkt CROSS JOIN (SELECT unnest(range(0, 5)) AS j) js
-         |  WHERE vec_id < 8
-         |),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT d.qid, d.cand, bc.bucket, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d
-         |  JOIN probes pq ON d.qid = pq.vec_id
-         |  JOIN bkt bc ON d.cand = bc.vec_id AND pq.probe = bc.bucket
-         |  JOIN n nq ON d.qid = nq.vec_id JOIN n nc ON d.cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, bucket, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, cand, bucket, cos, rnk FROM ranked WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin,
-
-    // matryoshka two-stage: shortlist on the rounded 16-dim-prefix
-    // cosine (cand tiebreak — both engines shortlist identically),
-    // exact full-dim re-rank of the shortlist only
-    "s07_matryoshka" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |ns AS (SELECT vec_id, sum(x * x) AS snrm FROM e WHERE i <= 16 GROUP BY 1),
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |dsub AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |    AND q.i <= 16
-         |  GROUP BY 1, 2
-         |),
-         |coarse AS (
-         |  SELECT d.qid, d.cand,
-         |    round(dp / sqrt(nq.snrm * nc.snrm), 6) AS sub_cos
-         |  FROM dsub d
-         |  JOIN ns nq ON d.qid = nq.vec_id JOIN ns nc ON d.cand = nc.vec_id
-         |),
-         |short AS (
-         |  SELECT qid, cand, sub_cos,
-         |    row_number() OVER (PARTITION BY qid ORDER BY sub_cos DESC, cand) AS srn
-         |  FROM coarse
-         |),
-         |dfull AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |reranked AS (
-         |  SELECT s.qid, s.cand, s.sub_cos,
-         |    round(df.dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM short s
-         |  JOIN dfull df ON s.qid = df.qid AND s.cand = df.cand
-         |  JOIN n nq ON s.qid = nq.vec_id JOIN n nc ON s.cand = nc.vec_id
-         |  WHERE s.srn <= 10
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, sub_cos, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM reranked
-         |)
-         |SELECT qid, cand, sub_cos, cos, rnk FROM ranked WHERE rnk <= 3
-         |ORDER BY qid, rnk""".stripMargin,
-
-    // reciprocal-rank fusion of the full-width and 16-dim-prefix
-    // retrievers (Similarity.rrfFusion): both ranks are row_numbers
-    // over (rounded cosine DESC, cand); the fused score is a fixed
-    // two-term sum of exact IEEE divisions
-    "s08_rrf_fusion" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |ns AS (SELECT vec_id, sum(x * x) AS snrm FROM e WHERE i <= 16 GROUP BY 1),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |dsub AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |    AND q.i <= 16
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT d.qid, d.cand,
-         |    round(d.dp / sqrt(nq.nrm * nc.nrm), 6) AS cos,
-         |    round(ds.dp / sqrt(sq.snrm * sc.snrm), 6) AS sub_cos
-         |  FROM d JOIN dsub ds ON d.qid = ds.qid AND d.cand = ds.cand
-         |  JOIN n nq ON d.qid = nq.vec_id JOIN n nc ON d.cand = nc.vec_id
-         |  JOIN ns sq ON d.qid = sq.vec_id JOIN ns sc ON d.cand = sc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rank_full,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY sub_cos DESC, cand) AS INT) AS rank_sub
-         |  FROM scored
-         |),
-         |fused AS (
-         |  SELECT qid, cand, rank_full, rank_sub,
-         |    round(1.0e0 / (60 + rank_full) + 1.0e0 / (60 + rank_sub), 6) AS rrf
-         |  FROM ranked
-         |),
-         |fin AS (
-         |  SELECT qid, cand, rank_full, rank_sub, rrf,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY rrf DESC, cand) AS INT) AS rnk
-         |  FROM fused
-         |)
-         |SELECT qid, cand, rank_full, rank_sub, rrf, rnk FROM fin
-         |WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin,
-
-    // int8-quantized ANN: per-vector max-abs scale, [-127,127] codes,
-    // cosine from INTEGER dot + integer norms (order-free — the one
-    // float step divides exact integers)
-    "s09_ann_int8" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |mx AS (SELECT vec_id, max(abs(x)) AS mx FROM e GROUP BY 1),
-         |qv AS (
-         |  SELECT e.vec_id, i, CAST(round(x / mx * 127) AS BIGINT) AS q
-         |  FROM e JOIN mx ON e.vec_id = mx.vec_id WHERE mx > 0
-         |),
-         |qn AS (SELECT vec_id, CAST(sum(q * q) AS BIGINT) AS qn FROM qv GROUP BY 1),
-         |d AS (
-         |  SELECT a.vec_id AS qid, b.vec_id AS cand,
-         |    CAST(sum(a.q * b.q) AS BIGINT) AS intdot
-         |  FROM qv a JOIN qv b ON a.i = b.i
-         |  WHERE a.vec_id < 8 AND b.vec_id % 20 = 0 AND a.vec_id <> b.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT d.qid, d.cand,
-         |    round(intdot / sqrt(CAST(na.qn * nb.qn AS DOUBLE)), 6) AS cos_q
-         |  FROM d JOIN qn na ON d.qid = na.vec_id JOIN qn nb ON d.cand = nb.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, cos_q,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos_q DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, cand, cos_q, rnk FROM ranked WHERE rnk <= 3
-         |ORDER BY qid, rnk""".stripMargin,
-
-    // s10 product quantization: per-subspace codebooks (seeded mod-ksub
-    // mean, s04 idiom), argmin encode, integer ADC lookup-table scoring,
-    // exact re-rank of the shortlist with the order-pinned list_reduce
-    // fold (d13 idiom). // is integer division — CAST(double AS INT)
-    // would ROUND, not truncate.
-    "s10_ann_pq" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |c AS (SELECT vec_id, CAST((i - 1) // 16 AS INT) AS sub, i AS pos,
-         |        CAST(round(x * 1e6, 0) AS BIGINT) AS xq
-         |      FROM e WHERE vec_id % 20 = 0),
-         |${pqLloydCtes(8, 2)},
-         |enc AS (
-         |  SELECT vec_id, sub, code,
-         |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist2q, code) AS rn
-         |  FROM (SELECT c.vec_id, c.sub, cb.code,
-         |          CAST(sum((c.xq - cb.cq) * (c.xq - cb.cq)) AS BIGINT) AS dist2q
-         |        FROM c JOIN cb2 cb ON c.sub = cb.sub AND c.pos = cb.pos
-         |        GROUP BY 1, 2, 3) d),
-         |codes AS (SELECT vec_id, sub, code FROM enc WHERE rn = 1),
-         |qp AS (SELECT vec_id AS qid, CAST((i - 1) // 16 AS INT) AS sub, i AS pos,
-         |         CAST(round(x * 1e6, 0) AS BIGINT) AS xq
-         |       FROM e WHERE vec_id < 8),
-         |lut AS (SELECT qid, cb.sub, cb.code, CAST(sum(qp.xq * cb.cq) AS BIGINT) AS lutq
-         |        FROM qp JOIN cb2 cb ON qp.sub = cb.sub AND qp.pos = cb.pos
-         |        GROUP BY 1, 2, 3),
-         |adc AS (SELECT lut.qid, codes.vec_id, CAST(sum(lutq) AS BIGINT) AS adcq
-         |        FROM codes JOIN lut ON codes.sub = lut.sub AND codes.code = lut.code
-         |        WHERE codes.vec_id <> lut.qid
-         |        GROUP BY 1, 2),
-         |short AS (SELECT qid, vec_id, adcq,
-         |            row_number() OVER (PARTITION BY qid ORDER BY adcq DESC, vec_id) AS srn
-         |          FROM adc),
-         |n AS (SELECT vec_id, list_reduce(
-         |        list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
-         |        (x, y) -> x + y) AS nrm
-         |      FROM embeddings),
-         |rer AS (
-         |  SELECT s.qid, s.vec_id AS cand, s.adcq,
-         |    round(list_reduce(list_transform(list_zip(eq.embedding, ec.embedding),
-         |        z -> z[1]::DOUBLE * z[2]::DOUBLE), (x, y) -> x + y)
-         |      / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM short s
-         |  JOIN embeddings eq ON eq.vec_id = s.qid
-         |  JOIN embeddings ec ON ec.vec_id = s.vec_id
-         |  JOIN n nq ON nq.vec_id = s.qid
-         |  JOIN n nc ON nc.vec_id = s.vec_id
-         |  WHERE s.srn <= 16),
-         |fin AS (SELECT qid, cand, adcq, cos,
-         |          CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |        FROM rer)
-         |SELECT qid, cand, adcq, cos, rnk FROM fin WHERE rnk <= 3
-         |ORDER BY qid, rnk""".stripMargin,
-
-    // s15: IVF+PQ combined — ivfCtes trains the coarse quantizer
-    // (cells + query probes against the final c2), pqLloydCtes trains
-    // the subspace codebooks over the SAME candidate set, and the ADC
-    // aggregate runs ONLY over candidates whose cell the query probed
-    // (the one semantic difference from s10's adc); shortlist + exact
-    // re-rank exactly as s10. qsp = the query sub-points (the name qp
-    // is ivfCtes' query grid points here).
-    "s15_ann_ivfpq" -> ivfPqSql(residual = false),
-
-    // s17: the FAISS-default residual variant — the PQ chain trains on
-    // and encodes x − c_cell (the c CTE subtracts the assigned coarse
-    // centroid), and the ADC score adds the exact per-(query, cell)
-    // coarse term q·c_cell; everything else is s15's chain verbatim
-    // (one generator, two queries).
-    "s17_ann_ivfpq_res" -> ivfPqSql(residual = true),
-
-    // s16: the corpus k-NN graph — s11's trained assignment partitions
-    // the corpus into cells, neighbors are searched within the cell
-    // only (the production kNN-graph approximation), per-src top-3 by
-    // (rounded cosine DESC, dst). KnnCtes is shared with d22.
-    "s16_knn_graph" ->
-      s"""WITH $KnnCtes
-         |SELECT src, dst, cell, cos, rnk FROM ranked WHERE rnk <= 3
-         |ORDER BY src, rnk""".stripMargin,
-
-    // s44: the persisted kNN-edge artifact roundtrip — the Spark side
-    // writes the session artifact (knnGraphWrite) and returns the
-    // parquet READ-BACK; the oracle rebuilds the same edges from the
-    // base tables (s16's SQL verbatim). Hash-green = build → parquet →
-    // scan loses nothing, licensing the family's artifact consumption.
-    "s44_knn_artifact" ->
-      s"""WITH $KnnCtes
-         |SELECT src, dst, cell, cos, rnk FROM ranked WHERE rnk <= 3
-         |ORDER BY src, rnk""".stripMargin,
-
-    // s18: graph-ANN beam search — the s16 graph searched by a
-    // bounded best-first traversal (entry = nEntry nearest cells'
-    // medoids, `hops` expand/score/prune rounds, exact re-rank of the
-    // visited set); the whole search unrolls to an iterative CTE
-    // chain over the shared KnnCtes, so the traversal itself is
-    // hash-gated, not just its ingredients
-    "s18_ann_beam" -> beamSql(nEntry = 2, beam = 4, hops = 2, topK = 5),
-
-    // s21: integer PageRank over the s16 graph — fixed-point rounds
-    // generated as a CTE chain; dangling mass leaks identically
-    "s21_pagerank" -> pageRankSql(prIters = 3),
-
-    // s38: personalized PageRank — the sparse seed-keyed walk; only
-    // reached (seed, node) pairs carry mass
-    "s38_ppr" -> pprSql(pprIters = 3, nSeeds = 8),
-
-    // s39: HITS hubs/authorities — unnormalized synchronous rounds,
-    // exact integers (normalization only rescales rank order)
-    "s39_hits" -> hitsSql(hitsIters = 3),
-
-    // s41: Rocchio pseudo-relevance feedback — integer expansion
-    // q' = 6q + Σ top-3, two exact-grid ranking rounds
-    "s41_rocchio" -> rocchioSql(k0 = 3, k = 5),
-
-    // s32: cell-population drift under the frozen quantizer — exact
-    // floor-ppm shares before/after the new batch, alert past the
-    // threshold
-    "s32_cell_drift" ->
-      s"""WITH ${embCte("vec_id % 20 = 0 OR vec_id % 20 = 10")},
-         |${ivfCtes(8, 2)},
-         |ap AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq
-         |      FROM e WHERE vec_id % 20 = 0 OR vec_id % 20 = 10),
-         |db AS (
-         |  SELECT cp.vec_id, c.cluster,
-         |    CAST(sum((cp.xq - c.cq) * (cp.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM cp JOIN c2 c ON cp.pos = c.pos GROUP BY 1, 2),
-         |cb AS (SELECT cluster AS cell, CAST(count(*) AS BIGINT) AS n_base
-         |  FROM (SELECT vec_id, cluster, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn FROM db) r
-         |  WHERE rn = 1 GROUP BY 1),
-         |da AS (
-         |  SELECT ap.vec_id, c.cluster,
-         |    CAST(sum((ap.xq - c.cq) * (ap.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM ap JOIN c2 c ON ap.pos = c.pos GROUP BY 1, 2),
-         |ca AS (SELECT cluster AS cell, CAST(count(*) AS BIGINT) AS n_after
-         |  FROM (SELECT vec_id, cluster, row_number() OVER (
-         |      PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn FROM da) r
-         |  WHERE rn = 1 GROUP BY 1),
-         |tb AS (SELECT CAST(sum(n_base) AS BIGINT) AS t_base FROM cb),
-         |ta AS (SELECT CAST(sum(n_after) AS BIGINT) AS t_after FROM ca),
-         |m AS (SELECT coalesce(cb.cell, ca.cell) AS cell,
-         |    coalesce(n_base, 0) AS n_base, coalesce(n_after, 0) AS n_after
-         |  FROM cb FULL JOIN ca ON cb.cell = ca.cell)
-         |SELECT cell, n_base, n_after,
-         |  CAST(n_base * 1000000 // t_base AS BIGINT) AS share_base_ppm,
-         |  CAST(n_after * 1000000 // t_after AS BIGINT) AS share_after_ppm,
-         |  CAST(abs(n_after * 1000000 // t_after - n_base * 1000000 // t_base)
-         |    AS BIGINT) AS drift_ppm,
-         |  CAST(CASE WHEN abs(n_after * 1000000 // t_after
-         |      - n_base * 1000000 // t_base) > 20000 THEN 1 ELSE 0 END
-         |    AS INT) AS alert
-         |FROM m, tb, ta ORDER BY cell""".stripMargin,
-
-    // s31: incremental IVF refresh — quantizer trained on the BASE
-    // slice only (ivfCtes), new batch assigned under the frozen book,
-    // search over the merged cells with the freshness flag
-    "s31_ivf_refresh" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0 OR vec_id % 20 = 10")},
-         |${ivfCtes(8, 2)},
-         |ap AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq
-         |      FROM e WHERE vec_id % 20 = 0 OR vec_id % 20 = 10),
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |da AS (
-         |  SELECT ap.vec_id, c.cluster,
-         |    CAST(sum((ap.xq - c.cq) * (ap.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM ap JOIN c2 c ON ap.pos = c.pos GROUP BY 1, 2
-         |),
-         |cells AS (
-         |  SELECT vec_id, cluster AS cell FROM (
-         |    SELECT vec_id, cluster,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |    FROM da) r WHERE rn = 1
-         |),
-         |dq AS (
-         |  SELECT qp.vec_id, c.cluster,
-         |    CAST(sum((qp.xq - c.cq) * (qp.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM qp JOIN c2 c ON qp.pos = c.pos GROUP BY 1, 2
-         |),
-         |probes AS (
-         |  SELECT vec_id AS qid, cluster AS cell FROM (
-         |    SELECT vec_id, cluster,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |    FROM dq) r WHERE rn <= 4
-         |),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND (c.vec_id % 20 = 0 OR c.vec_id % 20 = 10)
-         |    AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT d.qid, d.cand, cl.cell, d.cand % 20 = 10 AS is_new,
-         |    round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d
-         |  JOIN cells cl ON d.cand = cl.vec_id
-         |  JOIN probes pr ON pr.qid = d.qid AND pr.cell = cl.cell
-         |  JOIN n nq ON d.qid = nq.vec_id JOIN n nc ON d.cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, cell, is_new, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, cand, cell, is_new, cos, rnk FROM ranked WHERE rnk <= 3
-         |ORDER BY qid, rnk""".stripMargin,
-
-    // s29: BFS as a generated fixed-round CTE chain    // s29: BFS as a generated fixed-round CTE chain over the same
-    // literal kNN edges — the min with the settled set makes fixed
-    // rounds ≡ true BFS truncated at `hops`
-    "s29_bfs_hops" -> bfsSql(hops = 4, nSeeds = 2),
-
-    // s30: rank of the brute-force top-1 inside the LSH method's
-    // ranking; reciprocal rank as exact 10^6 div rank, 0 on a miss
-    "s30_ann_mrr" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT qid, cand, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d JOIN n nq ON qid = nq.vec_id JOIN n nc ON cand = nc.vec_id
-         |),
-         |truth AS (
-         |  SELECT qid, cand AS truth_cand FROM (
-         |    SELECT qid, cand,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS rnk
-         |    FROM scored) r WHERE rnk = 1
-         |),
-         |dots AS (
-         |  SELECT vec_id, j,
-         |    sum(CAST(round(x * 1e6, 0) AS BIGINT) * (((17 * j + 31 * (i - 1) + 5) % 7) - 3)) AS pd
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-         |  GROUP BY 1, 2
-         |),
-         |bkt AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN pd > 0 THEN (1 << j) ELSE 0 END) AS INT) AS bucket
-         |  FROM dots GROUP BY 1
-         |),
-         |meth AS (
-         |  SELECT qid, cand, CAST(row_number() OVER (PARTITION BY qid
-         |      ORDER BY cos DESC, cand) AS INT) AS method_rank
-         |  FROM (
-         |    SELECT s.qid, s.cand, s.cos
-         |    FROM scored s
-         |    JOIN bkt bq ON s.qid = bq.vec_id
-         |    JOIN bkt bc ON s.cand = bc.vec_id AND bq.bucket = bc.bucket) b
-         |)
-         |SELECT t.qid, t.truth_cand,
-         |  CASE WHEN m.method_rank <= 3 THEN m.method_rank END AS method_rank,
-         |  CAST(coalesce(CASE WHEN m.method_rank <= 3
-         |    THEN 1000000 // m.method_rank END, 0) AS BIGINT) AS rr_ppm
-         |FROM truth t LEFT JOIN meth m
-         |  ON t.qid = m.qid AND t.truth_cand = m.cand
-         |ORDER BY t.qid""".stripMargin,
-
-    // s22: greedy k-center coreset — exact integer-grid farthest-point
-    // selection, every argmax replayed round by round
-    "s22_kcenter" -> kcenterSql(kSel = 5),
-    "s23_triangles" -> triangleSql,
-    "s24_labelprop" -> lpaSql(rounds = 3),
-    "s25_kcore" -> kcorePeelSql(coreK = 2, rounds = 10),
-
-    // s26: link prediction — common-neighbor / resource-allocation /
-    // preferential-attachment scores for non-edge pairs of the s16
-    // graph; ra is the integer fixed-point Σ 10^6 // deg(z) (no log)
-    "s26_link_pred" -> linkPredSql(topN = 50),
-
-    // s27: k-NN majority-vote classification — s01's scoring CTE with
-    // labels riding along; the vote is (votes DESC, label ASC) argmax
-    "s27_knn_classify" ->
-      """WITH e AS (
-        |  SELECT vec_id, i, CAST(list_extract(embedding, i) AS DOUBLE) AS x
-        |  FROM (SELECT vec_id, embedding, unnest(range(1, len(embedding) + 1)) AS i
-        |        FROM embeddings WHERE vec_id < 8 OR vec_id % 20 = 0) t),
-        |lab AS (SELECT vec_id, label FROM embeddings
-        |        WHERE vec_id < 8 OR vec_id % 20 = 0),
-        |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-        |d AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-        |  FROM e q JOIN e c ON q.i = c.i
-        |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-        |  GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT qid, cand, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-        |  FROM d JOIN n nq ON qid = nq.vec_id JOIN n nc ON cand = nc.vec_id),
-        |nb AS (
-        |  SELECT qid, cand,
-        |    row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS rnk
-        |  FROM scored),
-        |votes AS (
-        |  SELECT nb.qid, lc.label, CAST(count(*) AS BIGINT) AS votes
-        |  FROM nb JOIN lab lc ON nb.cand = lc.vec_id
-        |  WHERE nb.rnk <= 5 GROUP BY 1, 2),
-        |win AS (
-        |  SELECT qid, label, votes,
-        |    row_number() OVER (PARTITION BY qid ORDER BY votes DESC, label) AS vr
-        |  FROM votes)
-        |SELECT w.qid, lq.label AS true_label, w.label AS pred_label,
-        |  CAST(w.votes AS INT) AS votes
-        |FROM win w JOIN lab lq ON w.qid = lq.vec_id
-        |WHERE w.vr = 1 ORDER BY w.qid""".stripMargin,
-
-    // s19: MMR diversified top-k — greedy maximal-marginal-relevance
-    // over the s01 top-10 pool, integer-exact objective
-    // (lambdaNum·rel6 − (lambdaDen−lambdaNum)·maxsim6 on the 1e-6
-    // grid), the k-round greedy loop unrolled to an iterative CTE
-    // chain so every pick's argmax is hash-gated
-    "s19_ann_mmr" -> mmrSql(poolK = 10, k = 5, lambdaNum = 1, lambdaDen = 2),
-
-    // s20: binary (sign-bit) quantization — one bit per dimension
-    // packed into two 32-bit words (bit 63 would need BIGINT's sign
-    // bit, so two halves keep every partial sum positive and exact on
-    // both engines), Hamming = bit_count of two XORs, shortlist by
-    // (ham ASC, cand), exact-cosine re-rank via the s10 list_reduce
-    // fold. Integer-exact end to end except the final rounded cosine.
-    "s20_ann_binary" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |bits AS (
-         |  SELECT vec_id,
-         |    CAST(sum(CASE WHEN x > 0 AND i <= 32
-         |          THEN CAST(1 AS BIGINT) << CAST(i - 1 AS INT) ELSE 0 END) AS BIGINT) AS lo,
-         |    CAST(sum(CASE WHEN x > 0 AND i > 32
-         |          THEN CAST(1 AS BIGINT) << CAST(i - 33 AS INT) ELSE 0 END) AS BIGINT) AS hi
-         |  FROM e GROUP BY 1),
-         |ham AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand,
-         |    CAST(bit_count(xor(q.lo, c.lo)) + bit_count(xor(q.hi, c.hi)) AS INT) AS ham
-         |  FROM bits q JOIN bits c
-         |    ON q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id),
-         |short AS (
-         |  SELECT qid, cand, ham,
-         |    row_number() OVER (PARTITION BY qid ORDER BY ham, cand) AS srn
-         |  FROM ham),
-         |n AS (SELECT vec_id, list_reduce(
-         |        list_transform(embedding, x -> x::DOUBLE * x::DOUBLE),
-         |        (x, y) -> x + y) AS nrm
-         |      FROM embeddings),
-         |rer AS (
-         |  SELECT s.qid, s.cand, s.ham,
-         |    round(list_reduce(list_transform(list_zip(eq.embedding, ec.embedding),
-         |        z -> z[1]::DOUBLE * z[2]::DOUBLE), (x, y) -> x + y)
-         |      / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM short s
-         |  JOIN embeddings eq ON eq.vec_id = s.qid
-         |  JOIN embeddings ec ON ec.vec_id = s.cand
-         |  JOIN n nq ON nq.vec_id = s.qid
-         |  JOIN n nc ON nc.vec_id = s.cand
-         |  WHERE s.srn <= 8),
-         |fin AS (SELECT qid, cand, ham, cos,
-         |          CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |        FROM rer)
-         |SELECT qid, cand, ham, cos, rnk FROM fin WHERE rnk <= 3
-         |ORDER BY qid, rnk""".stripMargin,
-
-    // d22: mutual-kNN canonicalize — the s16 top-3 edges, kept only
-    // when BOTH endpoints list each other (the symmetric criterion
-    // that keeps hub vectors from merging clusters) and the cosine
-    // clears 0.2; undirected recursive closure (the d06 reach/comp
-    // pattern — GraphX CC's min-label convention), isolated vectors
-    // canonicalize to themselves
-    "d22_mutual_knn" ->
-      s"""WITH RECURSIVE $KnnCtes,
-         |topk AS (SELECT src, dst, cos FROM ranked WHERE rnk <= 3),
-         |mut AS (
-         |  SELECT x.src AS a, x.dst AS b FROM topk x JOIN topk y
-         |    ON x.src = y.dst AND x.dst = y.src AND x.src < x.dst
-         |  WHERE x.cos >= 0.2),
-         |und AS (SELECT a, b FROM mut UNION SELECT b, a FROM mut),
-         |reach(s, t) AS (
-         |  SELECT a, b FROM und
-         |  UNION
-         |  SELECT r.s, u.b FROM reach r JOIN und u ON r.t = u.a
-         |),
-         |comp AS (SELECT s AS vec_id, least(s, min(t)) AS canonical_id
-         |         FROM reach GROUP BY s)
-         |SELECT v.vec_id, coalesce(comp.canonical_id, v.vec_id) AS canonical_id,
-         |  coalesce(comp.canonical_id, v.vec_id) <> v.vec_id AS is_duplicate
-         |FROM (SELECT vec_id FROM embeddings) v LEFT JOIN comp USING (vec_id)
-         |ORDER BY v.vec_id""".stripMargin,
-
-    // s11: full-corpus Lloyd — seed = first k vectors, 2 exact
-    // integer-grid rounds, final assignment with its distance
-    "s11_corpus_clusters" ->
-      s"""WITH ${embCte("TRUE")},
-         |p AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-         |${corpusLloydCtes(8, 2)},
-         |fin AS (
-         |  SELECT p.vec_id, c.cluster,
-         |    CAST(sum((p.xq - c.cq) * (p.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM p JOIN cb2 c ON p.pos = c.pos GROUP BY 1, 2
-         |)
-         |SELECT vec_id, cluster, dist2q FROM (
-         |  SELECT vec_id, cluster, dist2q,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |  FROM fin) r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    // s33: simplified silhouette — distances to ALL k trained
-    // centroids, own (rn=1) vs nearest-other (min of rn>1), margin as
-    // exact floor ppm on the squared integer grid
-    "s33_silhouette" ->
-      s"""WITH ${embCte("TRUE")},
-         |p AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-         |${corpusLloydCtes(8, 2)},
-         |fin AS (
-         |  SELECT p.vec_id, c.cluster,
-         |    CAST(sum((p.xq - c.cq) * (p.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM p JOIN cb2 c ON p.pos = c.pos GROUP BY 1, 2
-         |),
-         |r AS (
-         |  SELECT vec_id, cluster, dist2q,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |  FROM fin
-         |),
-         |own AS (SELECT vec_id, cluster, dist2q AS a2 FROM r WHERE rn = 1),
-         |oth AS (SELECT vec_id, CAST(min(dist2q) AS BIGINT) AS b2
-         |        FROM r WHERE rn > 1 GROUP BY 1)
-         |SELECT o.vec_id, o.cluster, a2, b2,
-         |  CASE WHEN greatest(a2, b2) = 0 THEN 0
-         |       ELSE (b2 - a2) * 1000000 // greatest(a2, b2) END AS sil_ppm
-         |FROM own o JOIN oth USING (vec_id) ORDER BY o.vec_id""".stripMargin,
-
-    // s34: external validity of the s11 clustering against the label
-    // column — majority share + Gini impurity per cluster, overall
-    // purity as a 1-row total, all exact floor ppm
-    "s34_cluster_purity" ->
-      s"""WITH ${embCte("TRUE")},
-         |p AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-         |${corpusLloydCtes(8, 2)},
-         |fin AS (
-         |  SELECT p.vec_id, c.cluster,
-         |    CAST(sum((p.xq - c.cq) * (p.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM p JOIN cb2 c ON p.pos = c.pos GROUP BY 1, 2
-         |),
-         |asg AS (
-         |  SELECT vec_id, cluster FROM (
-         |    SELECT vec_id, cluster, dist2q,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |    FROM fin) r WHERE rn = 1
-         |),
-         |cl AS (
-         |  SELECT a.cluster, em.label, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM asg a JOIN embeddings em ON a.vec_id = em.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |tots AS (
-         |  SELECT cluster, CAST(sum(cnt) AS BIGINT) AS n,
-         |    CAST(sum(cnt * cnt) AS BIGINT) AS sum_sq
-         |  FROM cl GROUP BY 1
-         |),
-         |maj AS (
-         |  SELECT cluster, label AS maj_label, cnt AS maj_cnt FROM (
-         |    SELECT cluster, label, cnt,
-         |      row_number() OVER (PARTITION BY cluster ORDER BY cnt DESC, label) AS rn
-         |    FROM cl) r WHERE rn = 1
-         |),
-         |j AS (SELECT m.cluster, n, maj_label, maj_cnt, sum_sq
-         |      FROM maj m JOIN tots USING (cluster)),
-         |ov AS (SELECT CAST(sum(maj_cnt) AS BIGINT) AS t_maj,
-         |              CAST(sum(n) AS BIGINT) AS t_n FROM j)
-         |SELECT cluster, n, maj_label, maj_cnt,
-         |  maj_cnt * 1000000 // n AS purity_ppm,
-         |  1000000 - sum_sq * 1000000 // (n * n) AS gini_ppm,
-         |  t_maj * 1000000 // t_n AS overall_ppm
-         |FROM j, ov ORDER BY cluster""".stripMargin,
-
-    // s35: the cartography dashboard — ONE shared Lloyd chain feeds
-    // the s11 distortion rollup, the s33 margin mean, and the s34
-    // purity columns
-    "s35_cluster_report" ->
-      s"""WITH ${embCte("TRUE")},
-         |p AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-         |${corpusLloydCtes(8, 2)},
-         |fin AS (
-         |  SELECT p.vec_id, c.cluster,
-         |    CAST(sum((p.xq - c.cq) * (p.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM p JOIN cb2 c ON p.pos = c.pos GROUP BY 1, 2
-         |),
-         |r AS (
-         |  SELECT vec_id, cluster, dist2q,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |  FROM fin
-         |),
-         |asg AS (SELECT vec_id, cluster, dist2q FROM r WHERE rn = 1),
-         |dist AS (SELECT cluster, CAST(count(*) AS BIGINT) AS n,
-         |           CAST(sum(dist2q) AS BIGINT) AS sum_d
-         |         FROM asg GROUP BY 1),
-         |oth AS (SELECT vec_id, CAST(min(dist2q) AS BIGINT) AS b2
-         |        FROM r WHERE rn > 1 GROUP BY 1),
-         |silrows AS (
-         |  SELECT a.cluster,
-         |    CASE WHEN greatest(a.dist2q, b2) = 0 THEN 0
-         |         ELSE (b2 - a.dist2q) * 1000000 // greatest(a.dist2q, b2)
-         |    END AS sil_ppm
-         |  FROM asg a JOIN oth USING (vec_id)
-         |),
-         |sil AS (SELECT cluster, CAST(sum(sil_ppm) AS BIGINT) AS sil_sum
-         |        FROM silrows GROUP BY 1),
-         |cl AS (
-         |  SELECT a.cluster, em.label, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM asg a JOIN embeddings em ON a.vec_id = em.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |tots AS (SELECT cluster, CAST(sum(cnt) AS BIGINT) AS np,
-         |           CAST(sum(cnt * cnt) AS BIGINT) AS sum_sq
-         |         FROM cl GROUP BY 1),
-         |maj AS (
-         |  SELECT cluster, label AS maj_label, cnt AS maj_cnt FROM (
-         |    SELECT cluster, label, cnt,
-         |      row_number() OVER (PARTITION BY cluster ORDER BY cnt DESC, label) AS rn
-         |    FROM cl) x WHERE rn = 1
-         |)
-         |SELECT d.cluster, d.n, d.sum_d,
-         |  sil_sum // d.n AS mean_sil_ppm,
-         |  maj_label,
-         |  maj_cnt * 1000000 // np AS purity_ppm,
-         |  1000000 - sum_sq * 1000000 // (np * np) AS gini_ppm
-         |FROM dist d JOIN sil USING (cluster) JOIN maj USING (cluster)
-         |  JOIN tots USING (cluster)
-         |ORDER BY d.cluster""".stripMargin,
-
-    // s12: the s11 assignment + per-cluster mean-distance outlier flag
-    "s12_embed_outliers" ->
-      s"""WITH ${embCte("TRUE")},
-         |p AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-         |${corpusLloydCtes(8, 2)},
-         |fin AS (
-         |  SELECT p.vec_id, c.cluster,
-         |    CAST(sum((p.xq - c.cq) * (p.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM p JOIN cb2 c ON p.pos = c.pos GROUP BY 1, 2
-         |),
-         |asg AS (
-         |  SELECT vec_id, cluster, dist2q FROM (
-         |    SELECT vec_id, cluster, dist2q,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |    FROM fin) r WHERE rn = 1
-         |),
-         |st AS (
-         |  SELECT cluster, CAST(count(*) AS BIGINT) AS n_c,
-         |    CAST(sum(dist2q) AS BIGINT) AS sum_d
-         |  FROM asg GROUP BY 1
-         |)
-         |SELECT a.vec_id, a.cluster, a.dist2q, n_c, sum_d,
-         |  a.dist2q > 2.0e0 * sum_d / n_c AS is_outlier
-         |FROM asg a JOIN st USING (cluster) ORDER BY a.vec_id""".stripMargin,
-
-    // s13: recall@3 of the s02 LSH search against s01 ground truth —
-    // the shared exact-dot CTEs score once, the truth ranking and the
-    // bucket-restricted ranking both derive from them, and the final
-    // division is one exact IEEE op per query
-    "s13_ann_recall" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |sc AS (
-         |  SELECT qid, cand, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d JOIN n nq ON qid = nq.vec_id JOIN n nc ON cand = nc.vec_id
-         |),
-         |truth AS (
-         |  SELECT qid, cand FROM (
-         |    SELECT qid, cand,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS rnk
-         |    FROM sc) r WHERE rnk <= 3
-         |),
-         |dots AS (
-         |  SELECT vec_id, j,
-         |    sum(CAST(round(x * 1e6, 0) AS BIGINT) * (((17 * j + 31 * (i - 1) + 5) % 7) - 3)) AS pd
-         |  FROM e CROSS JOIN (SELECT unnest(range(0, 4)) AS j) js
-         |  GROUP BY 1, 2
-         |),
-         |bkt AS (
-         |  SELECT vec_id, CAST(sum(CASE WHEN pd > 0 THEN (1 << j) ELSE 0 END) AS INT) AS bucket
-         |  FROM dots GROUP BY 1
-         |),
-         |a_sc AS (
-         |  SELECT sc.qid, sc.cand, sc.cos
-         |  FROM sc
-         |  JOIN bkt bq ON sc.qid = bq.vec_id
-         |  JOIN bkt bc ON sc.cand = bc.vec_id AND bq.bucket = bc.bucket
-         |),
-         |approx AS (
-         |  SELECT qid, cand FROM (
-         |    SELECT qid, cand,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS rnk
-         |    FROM a_sc) r WHERE rnk <= 3
-         |)
-         |SELECT t.qid, CAST(count(*) AS BIGINT) AS n_truth,
-         |  CAST(count(a.cand) AS BIGINT) AS n_hits,
-         |  round(CAST(count(a.cand) AS DOUBLE) / count(*), 6) AS recall
-         |FROM truth t LEFT JOIN approx a ON t.qid = a.qid AND t.cand = a.cand
-         |GROUP BY t.qid ORDER BY t.qid""".stripMargin,
-
-    // s28: the IVF nprobe tuning curve — the s03 Lloyd chain (ivfCtes)
-    // re-trained, then every brute-force top-3 pair joined to the FULL
-    // per-query cell ranking; one unnest fans the k probe budgets out
-    "s28_ivf_recall_curve" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |${ivfCtes(8, 2)},
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |dcf AS (
-         |  SELECT cp.vec_id, c.cluster,
-         |    CAST(sum((cp.xq - c.cq) * (cp.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM cp JOIN c2 c ON cp.pos = c.pos GROUP BY 1, 2
-         |),
-         |cells AS (
-         |  SELECT vec_id, cluster AS cell FROM (
-         |    SELECT vec_id, cluster,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |    FROM dcf) r WHERE rn = 1
-         |),
-         |dqf AS (
-         |  SELECT qp.vec_id, c.cluster,
-         |    CAST(sum((qp.xq - c.cq) * (qp.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM qp JOIN c2 c ON qp.pos = c.pos GROUP BY 1, 2
-         |),
-         |cellrank AS (
-         |  SELECT vec_id AS qid, cluster AS cell,
-         |    CAST(row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS INT) AS crn
-         |  FROM dqf
-         |),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |sc AS (
-         |  SELECT qid, cand, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d JOIN n nq ON qid = nq.vec_id JOIN n nc ON cand = nc.vec_id
-         |),
-         |truth AS (
-         |  SELECT qid, cand FROM (
-         |    SELECT qid, cand,
-         |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS rnk
-         |    FROM sc) r WHERE rnk <= 3
-         |),
-         |pc AS (
-         |  SELECT t.qid, cr.crn
-         |  FROM truth t
-         |  JOIN cells cl ON t.cand = cl.vec_id
-         |  JOIN cellrank cr ON cr.qid = t.qid AND cr.cell = cl.cell
-         |)
-         |SELECT CAST(np.nprobe AS INT) AS nprobe,
-         |  CAST(count(*) AS BIGINT) AS n_pairs,
-         |  CAST(sum(CASE WHEN crn <= np.nprobe THEN 1 ELSE 0 END) AS BIGINT) AS n_caught
-         |FROM pc CROSS JOIN (SELECT unnest(range(1, 9)) AS nprobe) np
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // s14: metadata-FILTERED top-k — the s01 ranking restricted to
-    // same-label candidates; the label predicate joins BEFORE scoring
-    // in both engines (a non-matching candidate contributes no pair)
-    "s14_ann_filtered" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |l AS (SELECT vec_id, label FROM embeddings
-         |      WHERE vec_id < 8 OR vec_id % 20 = 0),
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  JOIN l lq ON lq.vec_id = q.vec_id
-         |  JOIN l lc ON lc.vec_id = c.vec_id AND lq.label = lc.label
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT qid, cand, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d JOIN n nq ON qid = nq.vec_id JOIN n nc ON cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand) AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT r.qid, l.label, r.cand, r.cos, r.rnk
-         |FROM ranked r JOIN l ON r.qid = l.vec_id
-         |WHERE r.rnk <= 5 ORDER BY r.qid, r.rnk""".stripMargin,
-
-    // s40: hard-negative mining — s14 with the label predicate
-    // inverted (nearest candidates with a DIFFERENT label)
-    "s40_hard_negatives" ->
-      s"""WITH ${embCte("vec_id < 8 OR vec_id % 20 = 0")},
-         |l AS (SELECT vec_id, label FROM embeddings
-         |      WHERE vec_id < 8 OR vec_id % 20 = 0),
-         |n AS (SELECT vec_id, sum(x * x) AS nrm FROM e GROUP BY 1),
-         |d AS (
-         |  SELECT q.vec_id AS qid, c.vec_id AS cand, lc.label,
-         |    sum(q.x * c.x) AS dp
-         |  FROM e q JOIN e c ON q.i = c.i
-         |  JOIN l lq ON lq.vec_id = q.vec_id
-         |  JOIN l lc ON lc.vec_id = c.vec_id AND lq.label <> lc.label
-         |  WHERE q.vec_id < 8 AND c.vec_id % 20 = 0 AND q.vec_id <> c.vec_id
-         |  GROUP BY 1, 2, 3
-         |),
-         |scored AS (
-         |  SELECT qid, cand, label, round(dp / sqrt(nq.nrm * nc.nrm), 6) AS cos
-         |  FROM d JOIN n nq ON qid = nq.vec_id JOIN n nc ON cand = nc.vec_id
-         |),
-         |ranked AS (
-         |  SELECT qid, cand, label, cos,
-         |    CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cand)
-         |      AS INT) AS rnk
-         |  FROM scored
-         |)
-         |SELECT qid, rnk, cand, label, cos FROM ranked
-         |WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin,
-
-    // p12: the s11 assignment + per-cluster hash-order quota
-    "p12_cluster_sample" ->
-      s"""WITH ${embCte("TRUE")},
-         |p AS (SELECT vec_id, i AS pos, CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-         |${corpusLloydCtes(8, 2)},
-         |fin AS (
-         |  SELECT p.vec_id, c.cluster,
-         |    CAST(sum((p.xq - c.cq) * (p.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM p JOIN cb2 c ON p.pos = c.pos GROUP BY 1, 2
-         |),
-         |asg AS (SELECT vec_id, cluster FROM (
-         |  SELECT vec_id, cluster,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |  FROM fin) r WHERE rn = 1),
-         |rk AS (
-         |  SELECT cluster, vec_id,
-         |    row_number() OVER (PARTITION BY cluster
-         |      ORDER BY md5('cs:' || CAST(vec_id AS VARCHAR)), vec_id) AS rn
-         |  FROM asg
-         |)
-         |SELECT cluster, CAST(rn AS INT) AS rn, vec_id
-         |FROM rk WHERE rn <= 20 ORDER BY cluster, rn""".stripMargin,
-
-    // s04/s05 arithmetic is EXACT: components quantize to 1e-6-grid
-    // integers first, so every aggregate is an order-free integer sum —
-    // no float summation-order noise near rounding boundaries on either
-    // engine (q.xq below mirrors Similarity.quantized).
-    "s04_centroids" ->
-      s"""WITH ${embCte("TRUE")},
-         |q AS (SELECT vec_id, CAST(vec_id % 8 AS INT) AS cluster, i AS pos,
-         |        CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e)
-         |SELECT cluster, pos,
-         |  CAST(round(sum(xq) / count(*), 0) AS BIGINT) / 1e6 AS centroid
-         |FROM q GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "s05_assign_centroids" ->
-      s"""WITH ${embCte("TRUE")},
-         |q AS (SELECT vec_id, CAST(vec_id % 8 AS INT) AS cluster, i AS pos,
-         |        CAST(round(x * 1e6, 0) AS BIGINT) AS xq FROM e),
-         |cent AS (
-         |  SELECT cluster, pos, CAST(round(sum(xq) / count(*), 0) AS BIGINT) AS cq
-         |  FROM q GROUP BY 1, 2
-         |),
-         |d AS (
-         |  SELECT q.vec_id, c.cluster,
-         |    CAST(sum((q.xq - c.cq) * (q.xq - c.cq)) AS BIGINT) AS dist2q
-         |  FROM q JOIN cent c ON q.pos = c.pos
-         |  GROUP BY 1, 2
-         |),
-         |r AS (
-         |  SELECT vec_id, cluster, dist2q,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY dist2q, cluster) AS rn
-         |  FROM d
-         |)
-         |SELECT vec_id, cluster AS cell, dist2q FROM r WHERE rn = 1
-         |ORDER BY vec_id""".stripMargin,
-
-    "t01_text_stats" ->
-      s"""WITH base AS (SELECT doc_id, lang, $Toks AS tk FROM documents),
-         |st AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len(tk) AS INT) AS n_tokens,
-         |    CAST(len(list_filter(tk, x -> x IN ('the','a','and','of','to','is','in'))) AS INT) AS n_stop,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS INT) AS tok_chars
-         |  FROM base
-         |)
-         |SELECT doc_id, lang, n_tokens, n_stop,
-         |  round(CAST(tok_chars AS DOUBLE) / n_tokens, 6) AS avg_tok_len,
-         |  round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stop_ratio,
-         |  round(least(1.0e0, CAST(n_tokens AS DOUBLE) / 100.0e0) *
-         |        (1.0e0 - CAST(n_stop AS DOUBLE) / n_tokens), 6) AS quality
-         |FROM st WHERE n_tokens > 0 ORDER BY doc_id""".stripMargin,
-
-    // t16: fixed-weight linear scorer over t01's rounded features; the
-    // squash is the ALGEBRAIC sigmoid x/(1+|x|) — no exp/ln anywhere
-    // (libm transcendentals differ across engines; add/abs/divide are
-    // exact IEEE). Weight order mirrors the engine's left-to-right
-    // arithmetic; keep thresholds the ROUNDED score.
-    "t16_quality_classifier" ->
-      s"""WITH base AS (SELECT doc_id, lang, $Toks AS tk FROM documents),
-         |st AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len(tk) AS INT) AS n_tokens,
-         |    CAST(len(list_filter(tk, x -> x IN ('the','a','and','of','to','is','in'))) AS INT) AS n_stop,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS INT) AS tok_chars
-         |  FROM base
-         |),
-         |f AS (
-         |  SELECT doc_id, lang,
-         |    round(CAST(tok_chars AS DOUBLE) / n_tokens, 6) AS avg_tok_len,
-         |    round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stop_ratio,
-         |    round(least(1.0e0, CAST(n_tokens AS DOUBLE) / 100.0e0) *
-         |          (1.0e0 - CAST(n_stop AS DOUBLE) / n_tokens), 6) AS quality
-         |  FROM st WHERE n_tokens > 0
-         |),
-         |l AS (
-         |  SELECT doc_id, lang, quality,
-         |    4.0e0 * quality - 0.5e0 * stop_ratio + 0.25e0 * (avg_tok_len - 4.0e0) +
-         |    0.3e0 * (CASE WHEN lang = 'en' THEN 1.0e0 ELSE 0.0e0 END) - 1.0e0 AS logit
-         |  FROM f
-         |)
-         |SELECT doc_id, lang, quality,
-         |  round(logit / (1.0e0 + abs(logit)), 6) AS score,
-         |  round(logit / (1.0e0 + abs(logit)), 6) >= 0.25e0 AS keep
-         |FROM l ORDER BY doc_id""".stripMargin,
-
-    // t17: Gini impurity of the per-doc token distribution — the
-    // rational entropy stand-in (no ln anywhere); exact integers until
-    // one double division
-    "t17_token_gini" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($Toks) AS tok FROM documents),
-         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-         |agg AS (
-         |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
-         |    count(*) AS n_distinct, CAST(sum(tf * tf) AS BIGINT) AS sumsq
-         |  FROM tf GROUP BY 1
-         |)
-         |SELECT doc_id, n_tokens, n_distinct, sumsq,
-         |  round(1.0e0 - CAST(sumsq AS DOUBLE) / (n_tokens * n_tokens), 6) AS gini
-         |FROM agg ORDER BY doc_id""".stripMargin,
-
-    // t18: per-lang corpus health rollup — the t16 score chain feeds
-    // an integer-quantized (order-free) average; one count-distinct
-    "t18_corpus_report" ->
-      s"""WITH base AS (
-         |  SELECT lang, count(*) AS n_docs,
-         |    count(DISTINCT md5(text)) AS n_distinct,
-         |    CAST(sum(len($Toks)) AS BIGINT) AS total_tokens
-         |  FROM documents GROUP BY lang
-         |),
-         |tb AS (SELECT doc_id, lang, $Toks AS tk FROM documents),
-         |st AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len(tk) AS INT) AS n_tokens,
-         |    CAST(len(list_filter(tk, x -> x IN ('the','a','and','of','to','is','in'))) AS INT) AS n_stop,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS INT) AS tok_chars
-         |  FROM tb
-         |),
-         |f AS (
-         |  SELECT doc_id, lang,
-         |    round(CAST(tok_chars AS DOUBLE) / n_tokens, 6) AS avg_tok_len,
-         |    round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stop_ratio,
-         |    round(least(1.0e0, CAST(n_tokens AS DOUBLE) / 100.0e0) *
-         |          (1.0e0 - CAST(n_stop AS DOUBLE) / n_tokens), 6) AS quality
-         |  FROM st WHERE n_tokens > 0
-         |),
-         |l AS (
-         |  SELECT doc_id, lang,
-         |    4.0e0 * quality - 0.5e0 * stop_ratio + 0.25e0 * (avg_tok_len - 4.0e0) +
-         |    0.3e0 * (CASE WHEN lang = 'en' THEN 1.0e0 ELSE 0.0e0 END) - 1.0e0 AS logit
-         |  FROM f
-         |),
-         |sc AS (
-         |  SELECT lang, count(*) AS n_scored,
-         |    CAST(sum(CAST(round(round(logit / (1.0e0 + abs(logit)), 6) * 1e6, 0) AS BIGINT)) AS BIGINT) AS sqs,
-         |    CAST(sum(CASE WHEN round(logit / (1.0e0 + abs(logit)), 6) >= 0.25e0 THEN 1 ELSE 0 END) AS BIGINT) AS n_keep
-         |  FROM l GROUP BY lang
-         |)
-         |SELECT base.lang, n_docs, n_distinct,
-         |  round(1 - n_distinct / n_docs, 6) AS dup_ratio,
-         |  total_tokens,
-         |  round(total_tokens / n_docs, 6) AS avg_tokens,
-         |  round(sqs / n_scored / 1e6, 6) AS avg_score,
-         |  round(n_keep / n_scored, 6) AS keep_ratio
-         |FROM base JOIN sc ON base.lang = sc.lang
-         |ORDER BY base.lang""".stripMargin,
-
-    // t19: Gopher-style rule gate — every rule is exact integer
-    // arithmetic (cross-multiplied bounds, distinct-stopword counts,
-    // dup-gram fraction), so no rounded-double discipline is needed
-    "t19_gopher_rules" ->
-      s"""WITH ${tkCte("")},
-         |g AS (
-         |  SELECT doc_id,
-         |    CAST(count(*) AS INT) AS n_grams,
-         |    CAST(count(DISTINCT $GramExpr) AS INT) AS nd_grams
-         |  FROM $GramPos GROUP BY doc_id
-         |),
-         |u AS (SELECT doc_id, unnest(tk) AS tok FROM tk),
-         |tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM u GROUP BY 1, 2),
-         |st AS (
-         |  SELECT doc_id,
-         |    CAST(sum(tf) AS BIGINT) AS n_tokens,
-         |    CAST(max(tf) AS BIGINT) AS max_tf,
-         |    CAST(sum(tf * length(tok)) AS BIGINT) AS tok_chars,
-         |    CAST(sum(CASE WHEN tok IN ('the','a','and','of','to','is','in') THEN 1 ELSE 0 END) AS BIGINT) AS n_stop_kinds
-         |  FROM tf GROUP BY doc_id
-         |)
-         |SELECT s.doc_id, n_tokens,
-         |  n_tokens BETWEEN 20 AND 100000 AS r_len,
-         |  3 * n_tokens <= tok_chars AND tok_chars <= 10 * n_tokens AS r_meanlen,
-         |  n_stop_kinds >= 2 AS r_stop,
-         |  5 * max_tf <= n_tokens AS r_toptok,
-         |  10 * (coalesce(g.n_grams, 0) - coalesce(g.nd_grams, 0)) <= 3 * coalesce(g.n_grams, 0) AS r_dupgram,
-         |  (n_tokens BETWEEN 20 AND 100000)
-         |    AND (3 * n_tokens <= tok_chars AND tok_chars <= 10 * n_tokens)
-         |    AND n_stop_kinds >= 2
-         |    AND 5 * max_tf <= n_tokens
-         |    AND 10 * (coalesce(g.n_grams, 0) - coalesce(g.nd_grams, 0)) <= 3 * coalesce(g.n_grams, 0) AS keep
-         |FROM st s LEFT JOIN g ON s.doc_id = g.doc_id
-         |ORDER BY s.doc_id""".stripMargin,
-
-    // t20: corpus bigram-LM score — add-one-smoothed conditional
-    // probability per bigram occurrence, quantized to integer
-    // nano-units BEFORE the per-doc sum (the integer-quantize-then-sum
-    // rule; no ln anywhere)
-    "t20_bigram_lm" ->
-      s"""WITH ${tkCte("")},
-         |u AS (SELECT doc_id, unnest(tk) AS w FROM tk),
-         |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM u GROUP BY w),
-         |vv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
-         |bg AS (
-         |  SELECT doc_id, list_extract(tk, i) || ' ' || list_extract(tk, i+1) AS bg
-         |  FROM (SELECT doc_id, tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) AS i FROM tk) t
-         |),
-         |c2 AS (SELECT bg, CAST(count(*) AS BIGINT) AS c2 FROM bg GROUP BY bg),
-         |sc AS (
-         |  SELECT doc_id,
-         |    CAST(round(CAST(c2.c2 + 1 AS DOUBLE) / (uni.c1 + vv.v) * 1e9, 0) AS BIGINT) AS qp
-         |  FROM bg JOIN c2 USING (bg)
-         |  JOIN uni ON split_part(bg.bg, ' ', 1) = uni.w
-         |  CROSS JOIN vv
-         |)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |  CAST(sum(qp) AS BIGINT) AS sum_qp,
-         |  CAST(round(sum(qp) / count(*), 0) AS BIGINT) AS avg_qp
-         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // t22: the LEARNED BPE merge table — the generated 20-round
-    // iterative CTE chain (bpeSql) replays the learning loop in
-    // DuckDB; hash-green proves the distributed learner's fixed point
-    // merge-for-merge (upgrading t21's spec-only signal to an oracle).
-    "t22_bpe_merges" -> bpeSql(20),
-
-    // t23: the CCNet cross-corpus quality split — an add-one bigram LM
-    // trained on the even-doc_id reference slice scores EVERY document
-    // (left joins + coalesce: unseen bigrams (0+1)/(c1+V), unseen left
-    // unigrams (0+1)/(0+V)); docs rank by (avg_qp DESC, doc_id) and cut
-    // into 3 equal-width rank quantiles, bucket = (rank-1)*3 DIV total
-    // + 1 (deliberately NOT SQL ntile's remainder convention — one
-    // integer expression both engines evaluate identically); keep
-    // drops the tail bucket.
-    "t23_perplexity_bucket" ->
-      s"""WITH ${tkCte("")},
-         |ref AS (SELECT doc_id, tk FROM tk WHERE doc_id % 2 = 0),
-         |uni AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1
-         |        FROM (SELECT unnest(tk) AS w1 FROM ref) u GROUP BY w1),
-         |vv AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni),
-         |bgr AS (
-         |  SELECT bg, CAST(count(*) AS BIGINT) AS c2 FROM (
-         |    SELECT list_extract(tk, i) || ' ' || list_extract(tk, i+1) AS bg
-         |    FROM (SELECT tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) AS i
-         |          FROM ref) t) b
-         |  GROUP BY bg),
-         |bg AS (
-         |  SELECT doc_id, list_extract(tk, i) || ' ' || list_extract(tk, i+1) AS bg
-         |  FROM (SELECT doc_id, tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) AS i
-         |        FROM tk) t),
-         |sc AS (
-         |  SELECT doc_id,
-         |    CAST(round(CAST(coalesce(bgr.c2, 0) + 1 AS DOUBLE)
-         |      / (coalesce(uni.c1, 0) + vv.v) * 1e9, 0) AS BIGINT) AS qp
-         |  FROM bg LEFT JOIN bgr USING (bg)
-         |  LEFT JOIN uni ON split_part(bg.bg, ' ', 1) = uni.w1
-         |  CROSS JOIN vv),
-         |d AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |    CAST(round(sum(qp) / count(*), 0) AS BIGINT) AS avg_qp
-         |  FROM sc GROUP BY doc_id),
-         |r AS (
-         |  SELECT doc_id, n_bigrams, avg_qp,
-         |    row_number() OVER (ORDER BY avg_qp DESC, doc_id) AS rn,
-         |    count(*) OVER () AS total
-         |  FROM d)
-         |SELECT doc_id, n_bigrams, avg_qp,
-         |  CAST((rn - 1) * 3 // total + 1 AS INT) AS bucket,
-         |  (rn - 1) * 3 // total + 1 < 3 AS keep
-         |FROM r ORDER BY doc_id""".stripMargin,
-
-    // t24: content-defined chunking — per-token value r = first 8 hex
-    // chars of md5(token) (the p01 Horner idiom), window hash =
-    // r + 31·lag1 + 961·lag2 + 29791·lag3 mod 1e9+7 (all products
-    // inside BIGINT), boundary AFTER token i when pos >= 3 and
-    // hash % 64 = 0; chunk_no = exclusive running boundary count, so a
-    // boundary token ENDS its chunk; chunk hash over the ORDER BY pos
-    // string_agg (the B13 ordered-agg convention).
-    "t24_cdc_chunks" ->
-      s"""WITH ${tkCte("")},
-         |t AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-         |        list_extract(tk, i) AS tok
-         |      FROM (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i
-         |            FROM tk) u),
-         |rv AS (SELECT doc_id, pos, tok,
-         |         ${hexIntSql("md5(tok)", 8)} AS r FROM t),
-         |h AS (SELECT doc_id, pos, tok,
-         |        CASE WHEN pos >= 3 THEN
-         |          (r + 31 * lag(r, 1) OVER w + 961 * lag(r, 2) OVER w
-         |             + 29791 * lag(r, 3) OVER w) % 1000000007
-         |        END AS hw
-         |      FROM rv WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-         |cn AS (SELECT doc_id, pos, tok,
-         |        CAST(coalesce(sum(CASE WHEN pos >= 3 AND hw % 64 = 0
-         |            THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY pos
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |          AS BIGINT) AS chunk_no
-         |      FROM h)
-         |SELECT doc_id, chunk_no, CAST(min(pos) AS BIGINT) AS start_pos,
-         |  CAST(count(*) AS BIGINT) AS n_toks,
-         |  md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_md5
-         |FROM cn GROUP BY doc_id, chunk_no ORDER BY doc_id, chunk_no""".stripMargin,
-
-    // t25: the count-min sketch cell table — row-d hash = first 8 md5
-    // hex chars of "cm<d>:<token>" mod 256 (the p01 Horner idiom), one
-    // count cell per (d, col); the sketch is the output, so the oracle
-    // replays every hash placement exactly
-    "t25_countmin" ->
-      s"""WITH ${tkCte("")},
-         |u AS (SELECT unnest(tk) AS tok FROM tk),
-         |x AS (SELECT tok, CAST(d AS INT) AS d
-         |      FROM u, UNNEST(range(0, 4)) AS t(d)),
-         |c AS (SELECT d,
-         |        CAST(${hexIntSql("md5('cm' || CAST(d AS VARCHAR) || ':' || tok)", 8)} % 256 AS INT) AS col
-         |      FROM x)
-         |SELECT d, col, CAST(count(*) AS BIGINT) AS cnt
-         |FROM c GROUP BY d, col ORDER BY d, col""".stripMargin,
-
-    // t26: heavy hitters = count-min + candidates (the CM top-k
-    // composition) — candidates are t07's top-20 unigrams, each
-    // probed at its depth hashed cells (missing sparse cells read 0),
-    // estimate = min over rows, ranked by (est DESC, gram). The true
-    // freq rides along so the oracle re-proves est >= freq row-wise.
-    "t26_heavy_hitters" ->
-      s"""WITH ${tkCte("")},
-         |u AS (SELECT unnest(tk) AS tok FROM tk),
-         |cand AS (SELECT tok AS gram, CAST(count(*) AS BIGINT) AS freq
-         |         FROM u GROUP BY 1 ORDER BY freq DESC, gram LIMIT 20),
-         |x AS (SELECT tok, CAST(d AS INT) AS d
-         |      FROM u, UNNEST(range(0, 4)) AS t(d)),
-         |cm AS (SELECT d,
-         |        CAST(${hexIntSql("md5('cm' || CAST(d AS VARCHAR) || ':' || tok)", 8)} % 256 AS INT) AS col,
-         |        CAST(count(*) AS BIGINT) AS cnt
-         |      FROM x GROUP BY 1, 2),
-         |pc AS (SELECT gram, freq, CAST(d AS INT) AS d,
-         |        CAST(${hexIntSql("md5('cm' || CAST(d AS VARCHAR) || ':' || gram)", 8)} % 256 AS INT) AS col
-         |      FROM cand, UNNEST(range(0, 4)) AS t(d)),
-         |est AS (SELECT p.gram, p.freq,
-         |          CAST(min(coalesce(cm.cnt, 0)) AS BIGINT) AS est
-         |        FROM pc p LEFT JOIN cm ON cm.d = p.d AND cm.col = p.col
-         |        GROUP BY 1, 2)
-         |SELECT CAST(row_number() OVER (ORDER BY est DESC, gram) AS INT) AS rnk,
-         |  gram, freq, est
-         |FROM est ORDER BY rnk""".stripMargin,
-
-    // t27: PMI collocations — the log-free monotone integer fixed
-    // point (N·pair_c·10^6) // (c1a·c1b); hapax pairs dropped below
-    // minCount = 3 before ranking
-    "t27_pmi_colloc" ->
-      s"""WITH ${tkCte("")},
-         |u AS (SELECT unnest(tk) AS w FROM tk),
-         |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM u GROUP BY w),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM u),
-         |bg AS (
-         |  SELECT list_extract(tk, i) AS w1, list_extract(tk, i+1) AS w2
-         |  FROM (SELECT tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) AS i
-         |        FROM tk) t),
-         |c2 AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS pair_c
-         |       FROM bg GROUP BY 1, 2 HAVING count(*) >= 3),
-         |sc AS (
-         |  SELECT c2.w1, c2.w2, c2.pair_c, a.c1 AS c1a, b.c1 AS c1b,
-         |    CAST((nn.n * c2.pair_c * 1000000) // (a.c1 * b.c1) AS BIGINT) AS pmi_q
-         |  FROM c2 JOIN uni a ON c2.w1 = a.w JOIN uni b ON c2.w2 = b.w
-         |  CROSS JOIN nn)
-         |SELECT CAST(rn AS INT) AS rnk, w1, w2, pair_c, c1a, c1b, pmi_q FROM (
-         |  SELECT *, row_number() OVER (ORDER BY pmi_q DESC, w1, w2) AS rn
-         |  FROM sc) r
-         |WHERE rn <= 50 ORDER BY rnk""".stripMargin,
-
-    // t28: TextRank keywords — weighted integer PageRank over the
-    // adjacent-token co-occurrence graph, generated CTE rounds
-    "t28_textrank" -> textRankSql(prRounds = 3, topN = 30),
-
-    // t29: trigram stupid backoff — the even-slice model scores every
-    // trigram occurrence with the α = 2/5 penalty cleared into pure
-    // integer division (no float at any level of the backoff)
-    "t29_trigram_backoff" ->
-      s"""WITH ${tkCte("")},
-         |ref AS (SELECT doc_id, tk FROM tk WHERE doc_id % 2 = 0),
-         |u AS (SELECT unnest(tk) AS w FROM ref),
-         |c1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM u GROUP BY w),
-         |nr AS (SELECT CAST(count(*) AS BIGINT) AS nref FROM u),
-         |c2 AS (
-         |  SELECT bg, CAST(count(*) AS BIGINT) AS c2 FROM (
-         |    SELECT list_extract(tk, i) || ' ' || list_extract(tk, i+1) AS bg
-         |    FROM (SELECT tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) AS i
-         |          FROM ref) t) b GROUP BY bg),
-         |c3 AS (
-         |  SELECT tg, CAST(count(*) AS BIGINT) AS c3 FROM (
-         |    SELECT list_extract(tk, i) || ' ' || list_extract(tk, i+1)
-         |      || ' ' || list_extract(tk, i+2) AS tg
-         |    FROM (SELECT tk, unnest(range(1, greatest(len(tk) - 2, 0) + 1)) AS i
-         |          FROM ref) t) b GROUP BY tg),
-         |occ AS (
-         |  SELECT doc_id,
-         |    list_extract(tk, i) AS a, list_extract(tk, i+1) AS b,
-         |    list_extract(tk, i+2) AS c
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(1, greatest(len(tk) - 2, 0) + 1)) AS i
-         |        FROM tk) t),
-         |sc AS (
-         |  SELECT o.doc_id,
-         |    CASE
-         |      WHEN t3.c3 IS NOT NULL THEN (t3.c3 * 1000000000) // ab.c2
-         |      WHEN bc.c2 IS NOT NULL THEN (bc.c2 * 2000000000) // (5 * ub.c1)
-         |      WHEN uc.c1 IS NOT NULL THEN (uc.c1 * 4000000000) // (25 * nr.nref)
-         |      ELSE CAST(0 AS BIGINT)
-         |    END AS qp
-         |  FROM occ o
-         |  LEFT JOIN c3 t3 ON t3.tg = o.a || ' ' || o.b || ' ' || o.c
-         |  LEFT JOIN c2 ab ON ab.bg = o.a || ' ' || o.b
-         |  LEFT JOIN c2 bc ON bc.bg = o.b || ' ' || o.c
-         |  LEFT JOIN c1 ub ON ub.w = o.b
-         |  LEFT JOIN c1 uc ON uc.w = o.c
-         |  CROSS JOIN nr)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-         |  CAST(sum(qp) AS BIGINT) AS sum_qp,
-         |  CAST(sum(qp) // count(*) AS BIGINT) AS avg_qp
-         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // t30: T5 span corruption — stride-3 blocks fire on an md5 key
-    // (25%), span length 1 + (h//4)%3 <= the stride so spans never
-    // overlap; sentinels number left-to-right; string_agg skips the
-    // NULL pieces exactly as the Spark filter drops them
-    "t30_span_corrupt" ->
-      s"""WITH ${tkCte("")},
-         |pos AS (
-         |  SELECT doc_id, CAST(i AS INT) - 1 AS p, list_extract(tk, i) AS w
-         |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i
-         |        FROM tk) t),
-         |blk AS (SELECT doc_id, p, w, p - (p % 3) AS s FROM pos),
-         |hx AS (
-         |  SELECT doc_id, s,
-         |    ${hexIntSql("md5('sc0:' || CAST(doc_id AS VARCHAR) || ':' || CAST(s AS VARCHAR))", 4)} AS h
-         |  FROM (SELECT DISTINCT doc_id, s FROM blk) u),
-         |sp AS (
-         |  SELECT doc_id, s, 1 + (h // 4) % 3 AS len,
-         |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY s) - 1 AS INT) AS idx
-         |  FROM hx WHERE h % 4 = 0),
-         |m AS (
-         |  SELECT b.doc_id, b.p, b.w, b.s, sp.idx,
-         |    coalesce(b.p - b.s < sp.len, false) AS masked
-         |  FROM blk b LEFT JOIN sp ON b.doc_id = sp.doc_id AND b.s = sp.s),
-         |corr AS (
-         |  SELECT doc_id,
-         |    string_agg(CASE WHEN NOT masked THEN w
-         |                    WHEN p = s THEN '<X' || CAST(idx AS VARCHAR) || '>'
-         |               END, ' ' ORDER BY p) AS corrupted
-         |  FROM m GROUP BY doc_id),
-         |tg1 AS (
-         |  SELECT doc_id, s,
-         |    '<X' || CAST(idx AS VARCHAR) || '> ' ||
-         |      string_agg(w, ' ' ORDER BY p) AS span_str
-         |  FROM m WHERE masked GROUP BY doc_id, s, idx),
-         |tg AS (
-         |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_spans,
-         |    string_agg(span_str, ' ' ORDER BY s) AS targets
-         |  FROM tg1 GROUP BY doc_id),
-         |nt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens
-         |       FROM pos GROUP BY doc_id)
-         |SELECT nt.doc_id, nt.n_tokens,
-         |  CAST(coalesce(tg.n_spans, 0) AS BIGINT) AS n_spans,
-         |  corr.corrupted, coalesce(tg.targets, '') AS targets
-         |FROM nt JOIN corr USING (doc_id) LEFT JOIN tg USING (doc_id)
-         |ORDER BY nt.doc_id""".stripMargin,
-
-    // t31: RAKE — phrases = maximal stopword-free runs (pid = running
-    // stopword count), per-doc word freq/degree, phrase score =
-    // sum(degree*1e6 // freq) on the integer grid, top-3 per doc
-    "t31_rake_keywords" ->
-      s"""WITH ${tkCte("")},
-         |pos AS (
-         |  SELECT doc_id, CAST(i AS INT) AS i, tk[CAST(i AS INT)] AS tok
-         |  FROM tk, UNNEST(range(1, len(tk) + 1)) AS t(i)
-         |),
-         |marked AS (
-         |  SELECT doc_id, i, tok,
-         |    CASE WHEN tok IN ('the','a','and','of','to','is','in')
-         |         THEN 1 ELSE 0 END AS is_stop
-         |  FROM pos
-         |),
-         |cand AS (
-         |  SELECT doc_id, i, tok,
-         |    sum(is_stop) OVER (PARTITION BY doc_id ORDER BY i) AS pid
-         |  FROM marked QUALIFY is_stop = 0
-         |),
-         |plen AS (
-         |  SELECT doc_id, pid, count(*) AS plen FROM cand GROUP BY 1, 2
-         |),
-         |wl AS (SELECT c.doc_id, c.pid, c.i, c.tok, p.plen
-         |       FROM cand c JOIN plen p USING (doc_id, pid)),
-         |wstats AS (
-         |  SELECT doc_id, tok, count(*) AS freq, sum(plen) AS degree
-         |  FROM wl GROUP BY 1, 2
-         |),
-         |scored AS (
-         |  SELECT wl.doc_id, wl.pid,
-         |    string_agg(wl.tok, ' ' ORDER BY wl.i) AS phrase,
-         |    CAST(sum((ws.degree * 1000000) // ws.freq) AS BIGINT) AS score
-         |  FROM wl JOIN wstats ws ON wl.doc_id = ws.doc_id AND wl.tok = ws.tok
-         |  GROUP BY wl.doc_id, wl.pid
-         |)
-         |SELECT doc_id,
-         |  CAST(row_number() OVER (PARTITION BY doc_id
-         |         ORDER BY score DESC, phrase, pid) AS INT) AS rnk,
-         |  phrase, score
-         |FROM scored QUALIFY rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-
-    // t32: Heaps-law trajectory — per doc-count decile, cumulative
-    // token count and distinct vocab; vocab membership in a prefix is
-    // decided by the token's first-seen doc alone
-    // t35: interpolated Kneser-Ney — discounted bigram term +
-    // continuation-unigram backoff, all floor-ppb integer arithmetic
-    "t35_kn_bigram" ->
-      s"""WITH ${tkCte("")},
-         |pos AS (SELECT doc_id, tk, unnest(range(1, greatest(len(tk) - 1, 0) + 1)) AS i FROM tk),
-         |bgs AS (SELECT list_extract(tk, CAST(i AS INT)) AS w1,
-         |        list_extract(tk, CAST(i AS INT) + 1) AS w2 FROM pos),
-         |bg AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
-         |       FROM bgs GROUP BY 1, 2),
-         |c1 AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
-         |        CAST(count(*) AS BIGINT) AS n1p_succ FROM bg GROUP BY 1),
-         |pr AS (SELECT w2, CAST(count(*) AS BIGINT) AS n1p_pred
-         |       FROM bg GROUP BY 1),
-         |ty AS (SELECT CAST(count(*) AS BIGINT) AS b FROM bg)
-         |SELECT bg.w1, bg.w2, c12, c1, n1p_succ, n1p_pred, b,
-         |  greatest(100 * c12 - 75, 0) * 1000000000 // (100 * c1) AS term1_ppb,
-         |  (75 * n1p_succ * 1000000000 // (100 * c1))
-         |    * (n1p_pred * 1000000000 // b) // 1000000000 AS term2_ppb,
-         |  greatest(100 * c12 - 75, 0) * 1000000000 // (100 * c1)
-         |    + (75 * n1p_succ * 1000000000 // (100 * c1))
-         |      * (n1p_pred * 1000000000 // b) // 1000000000 AS p_kn_ppb
-         |FROM bg JOIN c1 ON bg.w1 = c1.w1 JOIN pr ON bg.w2 = pr.w2, ty
-         |ORDER BY bg.w1, bg.w2""".stripMargin,
-
-    // t36: the oracle rebuilds the identical unicode-garbled string
-    // from chr() first principles, then runs its own normalization
-    // chain — translate + global regexp_replace — so every fold
-    // (curly quotes, dashes, NBSP, zero-widths, controls, collapse,
-    // trim, lower) must byte-agree across engines
-    "t36_normalize" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    chr(8220) || upper(substr(text, 1, 12)) || chr(8221) ||
-        |    chr(8212) || chr(160) ||
-        |    CASE WHEN doc_id % 2 = 0 THEN chr(8203) ELSE chr(65279) END ||
-        |    'it' || chr(8217) || 's' || chr(9) ||
-        |    CASE WHEN doc_id % 3 = 0 THEN chr(7)
-        |         WHEN doc_id % 3 = 1 THEN chr(11)
-        |         ELSE chr(13) || chr(10) END ||
-        |    substr(text, 13) ||
-        |    '  ' || chr(8216) || 'q' || chr(8217) || ' ' || chr(8211) ||
-        |    ' end  ' AS dirty
-        |  FROM documents WHERE length(text) >= 20
-        |), n AS (
-        |  SELECT doc_id, dirty,
-        |    lower(trim(regexp_replace(regexp_replace(regexp_replace(
-        |      translate(dirty,
-        |        chr(8220) || chr(8221) || chr(8216) || chr(8217) ||
-        |        chr(8212) || chr(8211) || chr(160),
-        |        '""' || chr(39) || chr(39) || '-- '),
-        |      '[' || chr(8203) || chr(65279) || ']', '', 'g'),
-        |      '[\x01-\x1f\x7f]', ' ', 'g'),
-        |      ' +', ' ', 'g'))) AS norm
-        |  FROM g
-        |)
-        |SELECT doc_id, norm, CAST(length(dirty) AS INT) AS dirty_chars,
-        |  CAST(length(norm) AS INT) AS norm_chars
-        |FROM n ORDER BY doc_id""".stripMargin,
-
-    // t38: Good-Turing frequency-of-frequencies — histogram over token
-    // counts, adjusted count r* = (r+1)N_{r+1}/N_r and unseen mass
-    // N_1/N, both exact floor ppm
-    "t38_good_turing" ->
-      s"""WITH ${tkCte("")},
-         |occ AS (SELECT unnest(tk) AS token FROM tk),
-         |cnt AS (SELECT token, CAST(count(*) AS BIGINT) AS r
-         |        FROM occ GROUP BY 1),
-         |hist AS (SELECT r, CAST(count(*) AS BIGINT) AS n_r
-         |         FROM cnt GROUP BY 1),
-         |tot AS (SELECT CAST(sum(r * n_r) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CASE WHEN r = 1 THEN n_r ELSE 0 END) AS BIGINT) AS n_1
-         |  FROM hist)
-         |SELECT h.r, h.n_r, COALESCE(h2.n_r, 0) AS n_next,
-         |  (h.r + 1) * COALESCE(h2.n_r, 0) * 1000000 // h.n_r AS rstar_ppm,
-         |  n_1 * 1000000 // n_tokens AS p0_ppm, n_tokens
-         |FROM hist h LEFT JOIN hist h2 ON h.r + 1 = h2.r, tot
-         |ORDER BY h.r""".stripMargin,
-
-    // t43: Dice collocations — 2·c12/(c1+c2) floor ppm, support floor
-    // c12 >= 3, (dice DESC, w1, w2) top-50
-    "t43_dice_colloc" ->
-      s"""WITH ${tkCte("")},
-         |uni AS (SELECT token AS w, CAST(count(*) AS BIGINT) AS c
-         |        FROM (SELECT unnest(tk) AS token FROM tk) o GROUP BY 1),
-         |pos AS (SELECT doc_id, tk,
-         |          unnest(range(1, greatest(len(tk) - 1, 0) + 1)) AS i
-         |        FROM tk),
-         |bg AS (SELECT list_extract(tk, CAST(i AS INT)) AS w1,
-         |         list_extract(tk, CAST(i AS INT) + 1) AS w2,
-         |         CAST(count(*) AS BIGINT) AS c12
-         |       FROM pos GROUP BY 1, 2
-         |       HAVING count(*) >= 3)
-         |SELECT w1, w2, c12, u1.c AS c1, u2.c AS c2,
-         |  2 * c12 * 1000000 // (u1.c + u2.c) AS dice_ppm
-         |FROM bg JOIN uni u1 ON bg.w1 = u1.w JOIN uni u2 ON bg.w2 = u2.w
-         |ORDER BY dice_ppm DESC, w1, w2 LIMIT 50""".stripMargin,
-
-    // t42: KWIC — the data-derived top token with ±3 tokens of
-    // context; inclusive list_slice mirrors Spark's (start, length)
-    // slice at both document edges (empty contexts → '')
-    "t42_kwic" ->
-      s"""WITH ${tkCte("")},
-         |occ AS (SELECT doc_id, tk, CAST(i AS BIGINT) AS pos,
-         |          list_extract(tk, CAST(i AS INT)) AS token
-         |        FROM (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i
-         |              FROM tk) t),
-         |tgt AS (SELECT token AS t FROM (
-         |  SELECT token, count(*) AS n FROM occ GROUP BY 1
-         |  ORDER BY n DESC, token LIMIT 1))
-         |SELECT doc_id, pos,
-         |  COALESCE(array_to_string(list_slice(tk,
-         |    CAST(greatest(1, pos - 3) AS INT), CAST(pos - 1 AS INT)), ' '),
-         |    '') AS left_ctx,
-         |  token,
-         |  COALESCE(array_to_string(list_slice(tk, CAST(pos + 1 AS INT),
-         |    CAST(least(len(tk), pos + 3) AS INT)), ' '), '') AS right_ctx
-         |FROM occ, tgt WHERE token = t ORDER BY doc_id, pos""".stripMargin,
-
-    // t41: index of dispersion — n·Σx²−(Σx)² over n·Σx on the ppm
-    // grid, absent docs riding through the totals
-    "t41_burstiness" ->
-      s"""WITH base AS (SELECT doc_id, $Toks AS tk FROM documents),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-         |pd AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS x
-         |       FROM (SELECT doc_id, unnest(tk) AS token FROM base) o
-         |       GROUP BY 1, 2),
-         |t AS (SELECT token, CAST(count(*) AS BIGINT) AS n_docs_with,
-         |        CAST(sum(x) AS BIGINT) AS total_tf,
-         |        CAST(sum(x * x) AS BIGINT) AS sum_sq
-         |      FROM pd GROUP BY 1)
-         |SELECT token, n_docs_with, total_tf, sum_sq,
-         |  (n * sum_sq - total_tf * total_tf) * 1000000 // (n * total_tf)
-         |    AS d_ppm
-         |FROM t, nn WHERE total_tf >= 5
-         |ORDER BY d_ppm DESC, token""".stripMargin,
-
-    // t40: chi-squared keyness of the 'en' slice vs the rest — exact
-    // HUGEINT contingency arithmetic, one floor division to the micro
-    // grid, (chi2 DESC, token) top-50
-    "t40_chi2_keyness" ->
-      s"""WITH base AS (SELECT lang, $Toks AS tk FROM documents),
-         |occ AS (SELECT (lang = 'en') AS ina, unnest(tk) AS token FROM base),
-         |cnt AS (SELECT token,
-         |    CAST(sum(CASE WHEN ina THEN 1 ELSE 0 END) AS BIGINT) AS a,
-         |    CAST(sum(CASE WHEN ina THEN 0 ELSE 1 END) AS BIGINT) AS b
-         |  FROM occ GROUP BY 1),
-         |tot AS (SELECT CAST(sum(a) AS BIGINT) AS na,
-         |               CAST(sum(b) AS BIGINT) AS nb FROM cnt),
-         |sc AS (
-         |  SELECT token, a, b,
-         |    CAST(a AS HUGEINT) * (nb - b) - CAST(b AS HUGEINT) * (na - a) AS det,
-         |    na, nb
-         |  FROM cnt, tot WHERE a + b >= 5
-         |)
-         |SELECT token, a, b, det > 0 AS over_slice,
-         |  CAST((CAST(na + nb AS HUGEINT) * det * det * 1000000) //
-         |    (CAST(a + b AS HUGEINT) * (na + nb - a - b) *
-         |     CAST(na AS HUGEINT) * nb) AS BIGINT) AS chi2_micro
-         |FROM sc ORDER BY chi2_micro DESC, token LIMIT 50""".stripMargin,
-
-    // t39: the signed hashing trick — bucket from the first 4 md5 hex
-    // chars, sign from the 5th char's parity, collisions cancel via
-    // summed signs; zero dims drop
-    "t39_feature_hash" ->
-      s"""WITH ${tkCte("")},
-         |occ AS (SELECT doc_id, unnest(tk) AS token FROM tk),
-         |hh AS (SELECT doc_id,
-         |    CAST((${hexIntSql("md5(token)", 4)}) % 16 AS INT) AS dim,
-         |    CASE WHEN (${hexIntSql("substr(md5(token), 5, 1)", 1)}) % 2 = 0
-         |         THEN 1 ELSE -1 END AS sgn
-         |  FROM occ)
-         |SELECT doc_id, dim, CAST(sum(sgn) AS BIGINT) AS val
-         |FROM hh GROUP BY 1, 2 HAVING sum(sgn) <> 0
-         |ORDER BY doc_id, dim""".stripMargin,
-
-    // t37: the oracle re-embeds the identical URLs, then re-runs
-    // extraction / host parse / www-strip / registered-domain
-    // reduction with its own regex engine (RE2 vs Java — the patterns
-    // stay inside the shared-dialect subset)
-    "t37_url_domains" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    text || ' see https://' ||
-        |    'd' || replace(substr(text, 1, 6), ' ', '') ||
-        |    '.example.com/p/x and http://www.' ||
-        |    'd' || replace(substr(text, 9, 6), ' ', '') ||
-        |    '.org/a?b=1 plus https://cdn.img.' ||
-        |    'd' || replace(substr(text, 17, 6), ' ', '') ||
-        |    '.net/y ignore ftp://skip.me end' AS u
-        |  FROM documents WHERE length(text) >= 40
-        |), e AS (
-        |  SELECT doc_id,
-        |    unnest(regexp_extract_all(u, 'https?://[a-z0-9._/?=-]+')) AS url
-        |  FROM d
-        |), r AS (
-        |  SELECT doc_id, url,
-        |    regexp_extract(
-        |      regexp_replace(
-        |        regexp_extract(url, '^https?://([a-z0-9.-]+)', 1),
-        |        '^www\.', ''),
-        |      '([a-z0-9-]+\.[a-z0-9-]+)$', 1) AS domain
-        |  FROM e
-        |)
-        |SELECT domain, CAST(count(*) AS BIGINT) AS n_urls,
-        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN url LIKE 'https://%' THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_https
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // t33: vocab learning + the greedy longest-match loop, both
-    // replayed as one generated CTE chain
-    "t33_wordpiece" -> wordPieceSql(topGrams = 50, maxWordLen = 12),
-
-    // t44/t45: the unigram-LM trainer — seed, every hard-EM round
-    // (fixed-point integer-log costs, Viterbi DP, usage re-count,
-    // prune) and the final costs/segmentation, all replayed as one
-    // generated CTE chain; hash-green proves the learning fixed point
-    // equal on an independent engine (the t22 upgrade, third family)
-    "t44_unigram_vocab" -> unigramSql(encode = false),
-    "t45_unigram_encode" -> unigramSql(encode = true),
-
-    // q62: Theil within/between decomposition — fixed-point log2 grid,
-    // exact integer numerators, sign-explicit HUGEINT ppm
-    "q62_theil" -> theilSql,
-
-    // p23: distribution-matched subsampling — cross-multiplied exact
-    // keep ratios per (source, length bucket), p01 hash admission
-    "p23_match_distribution" ->
-      s"""WITH b AS (SELECT doc_id, source, n_chars // 100 AS bucket,
-         |    ${hexIntSql("md5(text)", 4)} AS h16 FROM documents),
-         |r AS (SELECT bucket, CAST(count(*) AS BIGINT) AS ref_n FROM b
-         |  WHERE source = 'src0' GROUP BY 1),
-         |rt AS (SELECT CAST(sum(ref_n) AS BIGINT) AS ref_tot FROM r),
-         |s AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS src_n
-         |  FROM b WHERE source <> 'src0' GROUP BY 1, 2),
-         |st AS (SELECT source, CAST(sum(src_n) AS BIGINT) AS src_tot
-         |  FROM s GROUP BY 1),
-         |ra AS (SELECT s.source, s.bucket,
-         |    least(1000000, coalesce(r.ref_n, 0) * st.src_tot * 1000000 //
-         |      (rt.ref_tot * s.src_n)) AS keep_ppm
-         |  FROM s LEFT JOIN r ON r.bucket = s.bucket
-         |  JOIN st ON st.source = s.source CROSS JOIN rt)
-         |SELECT doc_id, source, bucket, keep_ppm FROM (
-         |  SELECT b.doc_id, b.source, b.bucket,
-         |    CAST(ra.keep_ppm AS BIGINT) AS keep_ppm
-         |  FROM b JOIN ra ON ra.source = b.source AND ra.bucket = b.bucket
-         |  WHERE b.h16 * 1000000 < ra.keep_ppm * 65536
-         |  UNION ALL
-         |  SELECT doc_id, source, bucket, CAST(1000000 AS BIGINT) AS keep_ppm
-         |  FROM b WHERE source = 'src0') u
-         |ORDER BY doc_id""".stripMargin,
-
-    // s43: label assortativity — Newman's categorical mixing r over
-    // the s16 edges, sign-explicit HUGEINT ppm, NULL when degenerate
-    "s43_label_assortativity" ->
-      s"""WITH $KnnCtes,
-         |edges AS MATERIALIZED (SELECT src, dst FROM ranked WHERE rnk <= 3),
-         |lbl AS (SELECT vec_id, label FROM embeddings),
-         |el AS (SELECT la.label AS la, lb.label AS lb FROM edges e
-         |  JOIN lbl la ON la.vec_id = e.src
-         |  JOIN lbl lb ON lb.vec_id = e.dst),
-         |mix AS (SELECT la, lb, CAST(count(*) AS BIGINT) AS c
-         |  FROM el GROUP BY 1, 2),
-         |nn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM mix),
-         |aa AS (SELECT la, CAST(sum(c) AS BIGINT) AS ca FROM mix GROUP BY 1),
-         |bb AS (SELECT lb, CAST(sum(c) AS BIGINT) AS cb FROM mix GROUP BY 1),
-         |ab AS (SELECT CAST(coalesce(sum(aa.ca * bb.cb), 0) AS BIGINT) AS sab
-         |  FROM aa JOIN bb ON bb.lb = aa.la),
-         |sm AS (SELECT CAST(coalesce(sum(CASE WHEN la = lb THEN c END), 0)
-         |    AS BIGINT) AS n_same FROM mix)
-         |SELECT nn.n AS n_edges, sm.n_same,
-         |  CASE WHEN CAST(nn.n AS HUGEINT) * nn.n - ab.sab = 0
-         |    THEN CAST(NULL AS BIGINT)
-         |  WHEN CAST(sm.n_same AS HUGEINT) * nn.n - ab.sab >= 0
-         |    THEN CAST((CAST(sm.n_same AS HUGEINT) * nn.n - ab.sab) * 1000000
-         |      // (CAST(nn.n AS HUGEINT) * nn.n - ab.sab) AS BIGINT)
-         |  ELSE -CAST((CAST(ab.sab AS HUGEINT) -
-         |      CAST(sm.n_same AS HUGEINT) * nn.n) * 1000000
-         |      // (CAST(nn.n AS HUGEINT) * nn.n - ab.sab) AS BIGINT)
-         |  END AS r_ppm
-         |FROM nn CROSS JOIN ab CROSS JOIN sm""".stripMargin,
-
-    // s42: kNN-graph in-degree assortativity — the q64 moment algebra
-    // over the edge list, one exact row
-    "s42_assortativity" ->
-      s"""WITH $KnnCtes,
-         |edges AS MATERIALIZED (SELECT src, dst FROM ranked WHERE rnk <= 3),
-         |ind AS (SELECT dst AS vec_id, CAST(count(*) AS BIGINT) AS ind
-         |  FROM edges GROUP BY 1),
-         |ex AS (SELECT coalesce(a.ind, 0) AS x, b.ind AS y
-         |  FROM edges e LEFT JOIN ind a ON a.vec_id = e.src
-         |  JOIN ind b ON b.vec_id = e.dst),
-         |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |    CAST(sum(x * y) AS BIGINT) AS sxy,
-         |    CAST(sum(x * x) AS BIGINT) AS sxx,
-         |    CAST(sum(y * y) AS BIGINT) AS syy
-         |  FROM ex),
-         |asst AS (SELECT n AS n_edges,
-         |    CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS num,
-         |    CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS dx,
-         |    CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS dy
-         |  FROM m)
-         |SELECT n_edges,
-         |  CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END
-         |    AS INT) AS r_sign,
-         |  CASE WHEN dx = 0 OR dy = 0 THEN CAST(NULL AS BIGINT)
-         |       ELSE CAST(((num * num // dx) * 1000000) // dy AS BIGINT)
-         |  END AS r2_ppm
-         |FROM asst""".stripMargin,
-
-    // q65: truncated EWMA — exact integer weights 16384·(3/4)^k,
-    // per-user lag window, available-mass renormalization
-    "q65_ewma" -> {
-      val lags = graft.operators.Relational.EwmaW.zipWithIndex.map {
-        case (_, k) => s"lag(cents, $k) OVER w AS l$k"
-      }.mkString(",\n        |    ")
-      val dot = graft.operators.Relational.EwmaW.zipWithIndex.map {
-        case (wt, k) => s"CASE WHEN l$k IS NOT NULL THEN $wt * l$k ELSE 0 END"
-      }.mkString(" + ")
-      val wsum = graft.operators.Relational.EwmaW.zipWithIndex.map {
-        case (wt, k) => s"CASE WHEN l$k IS NOT NULL THEN $wt ELSE 0 END"
-      }.mkString(" + ")
-      s"""WITH b0 AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS us,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
-        |b AS (SELECT * FROM b0 WHERE cents >= 0),
-        |l AS (SELECT user_id, event_id, cents,
-        |    $lags
-        |  FROM b WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id))
-        |SELECT user_id, event_id, cents,
-        |  CAST(($dot) // ($wsum) AS BIGINT) AS ewma_cents
-        |FROM l ORDER BY user_id, event_id""".stripMargin
-    },
-
-    // q64: pairwise Pearson correlation audit — exact HUGEINT moment
-    // algebra, signed covariance, documented two-step-floor r² ppm
-    "q64_corr_audit" ->
-      """WITH m AS (
-        |  SELECT user_id,
-        |    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS x,
-        |    CAST(count(*) AS BIGINT) AS y,
-        |    CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS z
-        |  FROM events GROUP BY 1),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(z) AS BIGINT) AS sz,
-        |    CAST(sum(x * y) AS BIGINT) AS sxy,
-        |    CAST(sum(x * z) AS BIGINT) AS sxz,
-        |    CAST(sum(y * z) AS BIGINT) AS syz,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx,
-        |    CAST(sum(y * y) AS BIGINT) AS syy,
-        |    CAST(sum(z * z) AS BIGINT) AS szz
-        |  FROM m),
-        |p AS (
-        |  SELECT 'cents_vs_events' AS pair, n AS n_users,
-        |    CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS num,
-        |    CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS dx,
-        |    CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS dy
-        |  FROM s
-        |  UNION ALL
-        |  SELECT 'cents_vs_errors' AS pair, n AS n_users,
-        |    CAST(n AS HUGEINT) * sxz - CAST(sx AS HUGEINT) * sz AS num,
-        |    CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS dx,
-        |    CAST(n AS HUGEINT) * szz - CAST(sz AS HUGEINT) * sz AS dy
-        |  FROM s
-        |  UNION ALL
-        |  SELECT 'events_vs_errors' AS pair, n AS n_users,
-        |    CAST(n AS HUGEINT) * syz - CAST(sy AS HUGEINT) * sz AS num,
-        |    CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS dx,
-        |    CAST(n AS HUGEINT) * szz - CAST(sz AS HUGEINT) * sz AS dy
-        |  FROM s)
-        |SELECT pair, n_users,
-        |  CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END
-        |    AS INT) AS r_sign,
-        |  CASE WHEN dx = 0 OR dy = 0 THEN CAST(NULL AS BIGINT)
-        |       ELSE CAST(((num * num // dx) * 1000000) // dy AS BIGINT)
-        |  END AS r2_ppm
-        |FROM p ORDER BY pair""".stripMargin,
-
-    // q66: Benford second-digit audit — Nigrini's escalation; the q63
-    // contract with the 10-digit constant table and cents >= 10
-    "q66_benford2" ->
-      s"""WITH c AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT)
-         |    AS cents FROM orders),
-         |f AS (SELECT CAST(substr(CAST(cents AS VARCHAR), 2, 1) AS INT)
-         |    AS digit
-         |  FROM c WHERE cents >= 10),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f),
-         |o AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_obs
-         |  FROM f GROUP BY 1),
-         |e(digit, exp_ppm) AS (VALUES ${
-           graft.operators.Relational.Benford2Ppm
-             .map { case (d, p) => s"($d, $p)" }.mkString(", ")}),
-         |r AS (SELECT e.digit, CAST(coalesce(o.n_obs, 0) AS BIGINT) AS n_obs,
-         |    CAST(e.exp_ppm AS BIGINT) AS exp_ppm, nn.n
-         |  FROM e LEFT JOIN o USING (digit) CROSS JOIN nn),
-         |r2 AS (SELECT digit, n_obs,
-         |    CAST(n_obs * 1000000 // n AS BIGINT) AS obs_ppm, exp_ppm,
-         |    n_obs * 1000000 - n * exp_ppm AS dev, n FROM r),
-         |r3 AS (SELECT digit, n_obs, obs_ppm, exp_ppm, dev,
-         |    CAST((CAST(dev AS HUGEINT) * dev) //
-         |      (CAST(n AS HUGEINT) * exp_ppm) AS BIGINT) AS chi2_micro
-         |  FROM r2),
-         |t AS (SELECT CAST(sum(chi2_micro) AS BIGINT) AS chi2_micro_total
-         |  FROM r3)
-         |SELECT digit, n_obs, obs_ppm, exp_ppm, dev, chi2_micro,
-         |  t.chi2_micro_total
-         |FROM r3 CROSS JOIN t ORDER BY digit""".stripMargin,
-
-    // q67: Theil L (mean log deviation) — q62's dual on the same
-    // fixed-point grid; ppm divides by n_g*2^F
-    "q67_theil_l" -> theilLSql,
-
-    // q63: Benford first-digit audit — shared literal constant table,
-    // exact common-denominator deviations, HUGEINT χ² micro terms
-    "q63_benford" ->
-      s"""WITH c AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT)
-         |    AS cents FROM orders),
-         |f AS (SELECT CAST(left(CAST(cents AS VARCHAR), 1) AS INT) AS digit
-         |  FROM c WHERE cents >= 1),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f),
-         |o AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_obs
-         |  FROM f GROUP BY 1),
-         |e(digit, exp_ppm) AS (VALUES ${
-           graft.operators.Relational.BenfordPpm
-             .map { case (d, p) => s"($d, $p)" }.mkString(", ")}),
-         |r AS (SELECT e.digit, CAST(coalesce(o.n_obs, 0) AS BIGINT) AS n_obs,
-         |    CAST(e.exp_ppm AS BIGINT) AS exp_ppm, nn.n
-         |  FROM e LEFT JOIN o USING (digit) CROSS JOIN nn),
-         |r2 AS (SELECT digit, n_obs,
-         |    CAST(n_obs * 1000000 // n AS BIGINT) AS obs_ppm, exp_ppm,
-         |    n_obs * 1000000 - n * exp_ppm AS dev, n FROM r),
-         |r3 AS (SELECT digit, n_obs, obs_ppm, exp_ppm, dev,
-         |    CAST((CAST(dev AS HUGEINT) * dev) //
-         |      (CAST(n AS HUGEINT) * exp_ppm) AS BIGINT) AS chi2_micro
-         |  FROM r2),
-         |t AS (SELECT CAST(sum(chi2_micro) AS BIGINT) AS chi2_micro_total
-         |  FROM r3)
-         |SELECT digit, n_obs, obs_ppm, exp_ppm, dev, chi2_micro,
-         |  t.chi2_micro_total
-         |FROM r3 CROSS JOIN t ORDER BY digit""".stripMargin,
-
-    // t46: per-source Zipf fit — top-100 ranks, fixed-point log2 grid,
-    // sign-explicit integer least squares (slope + R² in floor ppm)
-    "t46_zipf_fit" -> zipfSql(topR = 100),
-
-    // t47: per-source Jensen–Shannon drift vs the corpus — floor-ppm
-    // distributions, fixed-point log2, jsd = (S(P)+S(Q))//2 − S(M)
-    "t47_js_drift" -> jsDriftSql,
-
-    // t48: Yule's K / Herdan's C vocabulary richness — HUGEINT K,
-    // fixed-point log-ratio C
-    "t48_vocab_richness" -> vocabRichnessSql,
-
-    // t49: per-doc TF-IDF top terms — d36's fixed-point weights over
-    // the full corpus, per-document rank
-    "t49_tfidf_terms" -> tfidfTermsSql(topT = 3),
-
-    "t32_vocab_growth" ->
-      s"""WITH ${tkCte("")},
-         |pos AS (SELECT doc_id, unnest(tk) AS tok FROM tk),
-         |ks AS (
-         |  SELECT CAST(t.k AS INT) AS k, (t.k * m.n) // 10 AS thr
-         |  FROM (SELECT max(doc_id) + 1 AS n FROM documents) m
-         |  CROSS JOIN (SELECT unnest(range(1, 11)) AS k) t
-         |),
-         |fs AS (SELECT tok, min(doc_id) AS fs FROM pos GROUP BY 1),
-         |vc AS (SELECT ks.k, count(*) AS vocab
-         |       FROM ks JOIN fs ON fs.fs < ks.thr GROUP BY 1),
-         |tpd AS (SELECT doc_id, count(*) AS nt FROM pos GROUP BY 1),
-         |nt AS (SELECT ks.k, sum(tpd.nt) AS n_tokens
-         |       FROM ks JOIN tpd ON tpd.doc_id < ks.thr GROUP BY 1),
-         |nd AS (SELECT ks.k, count(*) AS n_docs
-         |       FROM ks JOIN documents d ON d.doc_id < ks.thr GROUP BY 1)
-         |SELECT nd.k, CAST(nd.n_docs AS BIGINT) AS n_docs,
-         |  CAST(coalesce(nt.n_tokens, 0) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(vc.vocab, 0) AS BIGINT) AS vocab
-         |FROM nd LEFT JOIN nt USING (k) LEFT JOIN vc USING (k)
-         |ORDER BY nd.k""".stripMargin,
-
-    // p13: length-bucketed batch manifest — fixed power-of-two bands,
-    // per-band hash-order ranks, integer DIV/mod batch arithmetic
-    "p13_length_batches" ->
-      s"""WITH n AS (
-         |  SELECT doc_id, CAST(len($Toks) AS BIGINT) AS n_tokens FROM documents
-         |),
-         |b AS (
-         |  SELECT doc_id, n_tokens,
-         |    CAST(CASE WHEN n_tokens <= 16 THEN 16 WHEN n_tokens <= 32 THEN 32
-         |              WHEN n_tokens <= 64 THEN 64 WHEN n_tokens <= 128 THEN 128
-         |              ELSE 256 END AS INT) AS band
-         |  FROM n WHERE n_tokens > 0
-         |),
-         |r AS (
-         |  SELECT band, doc_id, n_tokens,
-         |    row_number() OVER (PARTITION BY band
-         |      ORDER BY md5('lb:' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
-         |  FROM b
-         |)
-         |SELECT band, CAST((rn - 1) // 8 AS BIGINT) AS batch_id,
-         |  CAST((rn - 1) % 8 AS INT) AS slot, doc_id, n_tokens
-         |FROM r ORDER BY band, batch_id, slot""".stripMargin,
-
-    // p14: strided token-window chunking; starts 1, 1+24, … while <= n
-    // (greatest(n,1) so an empty token list still yields one chunk)
-    "p14_chunk_windows" ->
-      s"""WITH ${tkCte("")},
-         |c AS (
-         |  SELECT doc_id, tk,
-         |    unnest(generate_series(1, greatest(len(tk), 1), 24)) AS start
-         |  FROM tk
-         |)
-         |SELECT doc_id, CAST((start - 1) // 24 AS INT) AS chunk_idx,
-         |  CAST(len(list_slice(tk, start, start + 31)) AS BIGINT) AS n_tokens,
-         |  array_to_string(list_slice(tk, start, start + 31), ' ') AS chunk_text
-         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // p15: ticket expansion replayed literally — per-doc
-    // generate_series(1, w) lateral, the identical md5 ticket keys,
-    // min per doc, rank over the full key order then LIMIT (same
-    // order ⇒ same top-m as Spark's TakeOrdered-then-rank)
-    "p15_weighted_sample" ->
-      """WITH w AS (
-        |  SELECT doc_id,
-        |    CAST(greatest(least((n_chars + 99) // 100, 20), 1) AS INT) AS w
-        |  FROM documents),
-        |t AS (
-        |  SELECT doc_id, w,
-        |    md5('wt:' || CAST(doc_id AS VARCHAR) || ':' || CAST(g AS VARCHAR)) AS tkey
-        |  FROM (SELECT doc_id, w, unnest(generate_series(1, w)) AS g FROM w) x),
-        |k AS (SELECT doc_id, w, min(tkey) AS draw FROM t GROUP BY 1, 2)
-        |SELECT CAST(row_number() OVER (ORDER BY draw, doc_id) AS INT) AS rn,
-        |  doc_id, w, draw
-        |FROM k ORDER BY draw, doc_id LIMIT 50""".stripMargin,
-
-    // p16: curriculum order — bucket-major (length terciles by fixed
-    // thresholds) with the seeded md5 shuffle inside each bucket; one
-    // composite-key row_number IS the sharded-rank result
-    "p16_curriculum" ->
-      """WITH b AS (
-        |  SELECT doc_id, n_chars,
-        |    CAST(CASE WHEN n_chars <= 250 THEN 1
-        |              WHEN n_chars <= 400 THEN 2 ELSE 3 END AS INT) AS bucket
-        |  FROM documents)
-        |SELECT doc_id, bucket, n_chars,
-        |  CAST(row_number() OVER (
-        |    ORDER BY bucket, md5('cur0:' || CAST(doc_id AS VARCHAR)), doc_id)
-        |    AS BIGINT) AS pos
-        |FROM b ORDER BY pos""".stripMargin,
-
-    // d25: the oracle is the BRUTE-FORCE distinct-string join — the
-    // candidate split's losslessness is what the gate checks
-    "d25_edit_join" ->
-      """WITH s AS (SELECT DISTINCT p_name AS s FROM part)
-        |SELECT a.s AS sa, b.s AS sb,
-        |  CAST(levenshtein(a.s, b.s) AS INT) AS dist
-        |FROM s a JOIN s b ON a.s < b.s
-        |WHERE levenshtein(a.s, b.s) <= 2
-        |ORDER BY sa, sb""".stripMargin,
-
-    "t02_lang_id" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($Toks) AS tok FROM documents),
-         |scores AS (
-         |  SELECT doc_id, cand_lang, CAST(sum((length(tok) * c) % 7) AS BIGINT) AS score
-         |  FROM toks CROSS JOIN (VALUES ('de', 5), ('en', 3), ('es', 7), ('fr', 11), ('zh', 13)) v(cand_lang, c)
-         |  GROUP BY 1, 2
-         |),
-         |ranked AS (
-         |  SELECT doc_id, cand_lang, score,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand_lang) AS rn
-         |  FROM scores
-         |)
-         |SELECT doc_id, cand_lang AS pred_lang, score FROM ranked WHERE rn = 1
-         |ORDER BY doc_id""".stripMargin,
-
-    // classifier-eval rollup: the t02 prediction chain joined to the
-    // labeled lang column, accuracy per source slice (integer counts
-    // until one rounded division)
-    "t12_langid_eval" ->
-      s"""WITH toks AS (SELECT doc_id, unnest($Toks) AS tok FROM documents),
-         |scores AS (
-         |  SELECT doc_id, cand_lang, CAST(sum((length(tok) * c) % 7) AS BIGINT) AS score
-         |  FROM toks CROSS JOIN (VALUES ('de', 5), ('en', 3), ('es', 7), ('fr', 11), ('zh', 13)) v(cand_lang, c)
-         |  GROUP BY 1, 2
-         |),
-         |ranked AS (
-         |  SELECT doc_id, cand_lang, score,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand_lang) AS rn
-         |  FROM scores
-         |),
-         |pred AS (SELECT doc_id, cand_lang AS pred_lang FROM ranked WHERE rn = 1)
-         |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum(CASE WHEN p.pred_lang = d.lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-         |  round(CAST(sum(CASE WHEN p.pred_lang = d.lang THEN 1 ELSE 0 END) AS BIGINT)
-         |        / count(*), 6) AS accuracy
-         |FROM pred p JOIN documents d USING (doc_id)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // slice drift: top movers ranked on the EXACT integer numerator
-    // |tf_a*tot_b - tf_b*tot_a| (common-denominator TVD contribution);
-    // the one float step divides exact integers once (t08/t09 pattern)
-    "t13_token_drift" ->
-      s"""WITH occ AS (SELECT lang, unnest($Toks) AS token FROM documents
-         |             WHERE lang IN ('en', 'de')),
-         |tf AS (SELECT lang, token, count(*) AS tf FROM occ GROUP BY 1, 2),
-         |ta AS (SELECT CAST(sum(tf) AS BIGINT) AS tot_a FROM tf WHERE lang = 'en'),
-         |tb AS (SELECT CAST(sum(tf) AS BIGINT) AS tot_b FROM tf WHERE lang = 'de'),
-         |j AS (
-         |  SELECT COALESCE(a.token, b.token) AS token,
-         |    COALESCE(a.tf, 0) AS tf_a, COALESCE(b.tf, 0) AS tf_b
-         |  FROM (SELECT token, tf FROM tf WHERE lang = 'en') a
-         |  FULL JOIN (SELECT token, tf FROM tf WHERE lang = 'de') b ON a.token = b.token
-         |)
-         |SELECT token, tf_a, tf_b,
-         |  CAST(abs(tf_a * tot_b - tf_b * tot_a) AS BIGINT) AS numq,
-         |  round(CAST(abs(tf_a * tot_b - tf_b * tot_a) AS BIGINT)
-         |        / (2e0 * tot_a * tot_b), 9) AS drift
-         |FROM j CROSS JOIN ta CROSS JOIN tb
-         |ORDER BY numq DESC, token LIMIT 40""".stripMargin,
-
-    // t14: the corpus has no digits, so both engines plant the SAME
-    // doc_id-derived PII and the scrub is verified to find and redact
-    // all of it. Patterns are the RE2/java.regex common subset; stage
-    // order (email -> ip -> phone) is part of the operator contract.
-    "t14_pii_scrub" ->
-      s"""WITH enr AS (
-         |  SELECT doc_id,
-         |    text || ' contact user' || CAST(doc_id AS VARCHAR) ||
-         |    '@mail.example or +1 (' || CAST(200 + doc_id % 700 AS VARCHAR) ||
-         |    ') ' || CAST(100 + doc_id % 800 AS VARCHAR) ||
-         |    '-' || CAST(1000 + doc_id % 9000 AS VARCHAR) ||
-         |    ' from 10.' || CAST(doc_id % 256 AS VARCHAR) ||
-         |    '.0.' || CAST(doc_id % 200 AS VARCHAR) AS raw
-         |  FROM documents),
-         |s1 AS (SELECT doc_id, raw,
-         |         regexp_replace(raw, '${TextAnalysis.PiiEmail}', '<EMAIL>', 'g') AS t1
-         |       FROM enr),
-         |s2 AS (SELECT doc_id, raw, t1,
-         |         regexp_replace(t1, '${TextAnalysis.PiiIp}', '<IP>', 'g') AS t2
-         |       FROM s1)
-         |SELECT doc_id,
-         |  CAST(len(regexp_extract_all(raw, '${TextAnalysis.PiiEmail}')) AS INT) AS n_email,
-         |  CAST(len(regexp_extract_all(t1, '${TextAnalysis.PiiIp}')) AS INT) AS n_ip,
-         |  CAST(len(regexp_extract_all(t2, '${TextAnalysis.PiiPhone}')) AS INT) AS n_phone,
-         |  regexp_replace(t2, '${TextAnalysis.PiiPhone}', '<PHONE>', 'g') AS clean
-         |FROM s2 ORDER BY doc_id""".stripMargin,
-
-    // t15: passages partition the token stream (trailing partial kept,
-    // unlike d10's full-window unit), df counted on the md5 key exactly
-    // as the engine shuffles it; docs rebuild from surviving passages
-    // in order. COALESCE mirrors Spark's empty-array -> '' when every
-    // passage of a doc is boilerplate.
-    "t15_boilerplate" ->
-      s"""WITH ${tkCte("")},
-         |p AS (
-         |  SELECT doc_id, i, array_to_string(tk[(i*20+1):(i*20+20)], ' ') AS ptext
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(range(0, CAST(ceil(len(tk) / 20.0) AS INT))) AS i
-         |        FROM tk) t),
-         |d AS (SELECT md5(ptext) AS ph, count(DISTINCT doc_id) AS df
-         |      FROM p GROUP BY 1)
-         |SELECT p.doc_id, count(*) AS n_passages,
-         |  count(*) FILTER (WHERE d.df >= 2) AS n_removed,
-         |  COALESCE(string_agg(p.ptext, ' ' ORDER BY p.i) FILTER (WHERE d.df < 2), '') AS clean
-         |FROM p JOIN d ON md5(p.ptext) = d.ph
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    "t03_fingerprint" ->
-      s"""WITH ${tkCte("")},
-         |toks AS (
-         |  SELECT doc_id, i AS pos, list_extract(tk, i) AS tok
-         |  FROM (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i FROM tk) t
-         |),
-         |vocab AS (SELECT tok, dense_rank() OVER (ORDER BY tok) AS tid
-         |          FROM (SELECT DISTINCT tok FROM toks) v)
-         |SELECT t.doc_id,
-         |  CAST(sum((t.pos * (v.tid % 1000000007)) % 1000000007) % 1000000007 AS BIGINT) AS fp
-         |FROM toks t JOIN vocab v ON t.tok = v.tok
-         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    "t04_langid_char_ngram" ->
-      """WITH bg AS (
-        |  SELECT doc_id, substr(text, CAST(i AS INT), 2) AS bg
-        |  FROM (SELECT doc_id, text, unnest(range(1, length(text))) AS i
-        |        FROM documents WHERE length(text) >= 2) t
-        |),
-        |scores AS (
-        |  SELECT doc_id, cand_lang,
-        |    CAST(sum(((ascii(substr(bg, 1, 1)) * 31 + ascii(substr(bg, 2, 1))) * c) % 13) AS BIGINT) AS score
-        |  FROM bg CROSS JOIN (VALUES ('de', 5), ('en', 3), ('es', 7), ('fr', 11), ('zh', 13)) v(cand_lang, c)
-        |  GROUP BY 1, 2
-        |),
-        |ranked AS (
-        |  SELECT doc_id, cand_lang, score,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand_lang) AS rn
-        |  FROM scores
-        |)
-        |SELECT doc_id, cand_lang AS pred_lang, score FROM ranked WHERE rn = 1
-        |ORDER BY doc_id""".stripMargin,
-
-    "t05_bpe_tokens" ->
-      s"""SELECT doc_id,
-         |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS INT) AS n_bpe_tokens,
-         |  CAST(len($Toks) AS INT) AS n_ws_tokens
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "t06_repetition" ->
-      s"""WITH ${tkCte("")},
-         |$ShxCte
-         |SELECT doc_id, count(*) AS n_shingles, count(DISTINCT sh) AS n_distinct,
-         |  round(1.0 - count(DISTINCT sh) / count(*), 6) AS rep_ratio
-         |FROM shx GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    "t07_top_ngrams" ->
-      s"""WITH ${tkCte("")},
-         |uni AS (SELECT unnest(tk) AS gram FROM tk),
-         |$ShxCte,
-         |u AS (SELECT 1 AS n, gram, count(*) AS freq FROM uni GROUP BY 2
-         |      ORDER BY freq DESC, gram LIMIT 20),
-         |g AS (SELECT 3 AS n, sh AS gram, count(*) AS freq FROM shx GROUP BY 2
-         |      ORDER BY freq DESC, gram LIMIT 20),
-         |allg AS (SELECT * FROM u UNION ALL SELECT * FROM g)
-         |SELECT n, CAST(row_number() OVER (PARTITION BY n ORDER BY freq DESC, gram) AS INT) AS rnk,
-         |  gram, freq
-         |FROM allg ORDER BY n, rnk""".stripMargin,
-
-    // integer arithmetic until the final rounded division (no float
-    // logs — the cross-engine-exact stand-in for unigram perplexity)
-    "t08_token_rarity" ->
-      s"""WITH ${tkCte("")},
-         |tox AS (SELECT doc_id, unnest(tk) AS tok FROM tk),
-         |d AS (
-         |  SELECT tok, CAST(count(*) AS BIGINT) AS df
-         |  FROM (SELECT DISTINCT doc_id, tok FROM tox) u GROUP BY tok
-         |)
-         |SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |  round(CAST(sum(df) AS BIGINT) / count(*), 6) AS mean_df
-         |FROM tox t JOIN d USING (tok)
-         |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-
-    // novelty = share of shingle OCCURRENCES whose shingle has df == 1;
-    // integer counts until the final rounded division
-    "t09_ngram_novelty" ->
-      s"""WITH ${tkCte("")},
-         |$ShxCte,
-         |d AS (
-         |  SELECT sh, CAST(count(*) AS BIGINT) AS df
-         |  FROM (SELECT DISTINCT doc_id, sh FROM shx) u GROUP BY sh
-         |)
-         |SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-         |  round(CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |        / count(*), 6) AS novelty
-         |FROM shx s JOIN d USING (sh)
-         |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin,
-
-    // posting-list head is ranked BEFORE collecting (mirrors the
-    // Spark side's bounded-array build)
-    "t10_inverted_index" ->
-      s"""WITH ${tkCte("")},
-         |tox AS (SELECT doc_id, unnest(tk) AS term FROM tk),
-         |stats AS (
-         |  SELECT term, CAST(count(*) AS BIGINT) AS tf,
-         |    CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-         |  FROM tox GROUP BY term
-         |),
-         |u AS (SELECT DISTINCT term, doc_id FROM tox),
-         |h AS (SELECT term, doc_id,
-         |        row_number() OVER (PARTITION BY term ORDER BY doc_id) AS rn
-         |      FROM u),
-         |heads AS (SELECT term, string_agg(doc_id, ',' ORDER BY doc_id) AS postings_head
-         |          FROM h WHERE rn <= 20 GROUP BY term)
-         |SELECT s.term, s.df, s.tf, heads.postings_head
-         |FROM stats s JOIN heads USING (term) ORDER BY s.term""".stripMargin,
-
-    // rational-idf BM25 (monotone transform of log idf — see
-    // TextAnalysis.bm25 scaladoc); every float literal is e-notation so
-    // DuckDB types it DOUBLE (a plain 0.5 is DECIMAL there, which would
-    // fork the arithmetic tree from Spark's doubles)
-    "t11_bm25" ->
-      s"""WITH ${tkCte("")},
-         |lens AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl FROM tk),
-         |corpus AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |                  CAST(sum(dl) AS BIGINT) AS tot_tokens FROM lens),
-         |occ AS (SELECT doc_id, unnest(tk) AS term FROM tk),
-         |qocc AS (SELECT doc_id, term FROM occ
-         |         WHERE term IN ('spark', 'vector', 'window')),
-         |tf AS (
-         |  SELECT doc_id,
-         |    CAST(sum(CASE WHEN term = 'spark' THEN 1 ELSE 0 END) AS BIGINT) AS tf_spark,
-         |    CAST(sum(CASE WHEN term = 'vector' THEN 1 ELSE 0 END) AS BIGINT) AS tf_vector,
-         |    CAST(sum(CASE WHEN term = 'window' THEN 1 ELSE 0 END) AS BIGINT) AS tf_window
-         |  FROM qocc GROUP BY doc_id
-         |),
-         |dfs AS (
-         |  SELECT
-         |    CAST(count(DISTINCT CASE WHEN term = 'spark' THEN doc_id END) AS BIGINT) AS df_spark,
-         |    CAST(count(DISTINCT CASE WHEN term = 'vector' THEN doc_id END) AS BIGINT) AS df_vector,
-         |    CAST(count(DISTINCT CASE WHEN term = 'window' THEN doc_id END) AS BIGINT) AS df_window
-         |  FROM qocc
-         |)
-         |SELECT t.doc_id, l.dl, t.tf_spark, t.tf_vector, t.tf_window,
-         |  round(
-         |    ((n_docs - df_spark + 0.5e0) / (df_spark + 0.5e0))
-         |      * (CAST(tf_spark AS DOUBLE) * 2.2e0)
-         |      / (CAST(tf_spark AS DOUBLE)
-         |         + 1.2e0 * (0.25e0 + 0.75e0 * (dl / (tot_tokens / n_docs))))
-         |    + ((n_docs - df_vector + 0.5e0) / (df_vector + 0.5e0))
-         |      * (CAST(tf_vector AS DOUBLE) * 2.2e0)
-         |      / (CAST(tf_vector AS DOUBLE)
-         |         + 1.2e0 * (0.25e0 + 0.75e0 * (dl / (tot_tokens / n_docs))))
-         |    + ((n_docs - df_window + 0.5e0) / (df_window + 0.5e0))
-         |      * (CAST(tf_window AS DOUBLE) * 2.2e0)
-         |      / (CAST(tf_window AS DOUBLE)
-         |         + 1.2e0 * (0.25e0 + 0.75e0 * (dl / (tot_tokens / n_docs)))), 6) AS score
-         |FROM tf t JOIN lens l USING (doc_id)
-         |CROSS JOIN corpus CROSS JOIN dfs
-         |ORDER BY t.doc_id""".stripMargin,
-
-    // delta-vs-history overlap: the bloom prefilter on the Spark side
-    // cannot change the result (no false negatives; false positives die
-    // in the exact join), so the oracle is the plain shingle join
-    "d12_incremental_overlap" ->
-      s"""WITH ${tkCte("")},
-         |$ShCte,
-         |hist AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 10 <> 0),
-         |delta AS (SELECT doc_id, sh FROM sh WHERE doc_id % 10 = 0)
-         |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_overlap
-         |FROM delta d JOIN hist h ON d.sh = h.sh
-         |GROUP BY 1 HAVING count(*) >= 5 ORDER BY d.doc_id""".stripMargin,
-
-    // d21: the sharded-bloom prefilter is result-invariant exactly like
-    // d12's broadcast bloom (per-shard false negatives impossible,
-    // false positives die in the exact join) — SAME oracle
-    "d21_incremental_sharded" ->
-      s"""WITH ${tkCte("")},
-         |$ShCte,
-         |hist AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 10 <> 0),
-         |delta AS (SELECT doc_id, sh FROM sh WHERE doc_id % 10 = 0)
-         |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_overlap
-         |FROM delta d JOIN hist h ON d.sh = h.sh
-         |GROUP BY 1 HAVING count(*) >= 5 ORDER BY d.doc_id""".stripMargin,
-
-    "d07_decontaminate" ->
-      s"""WITH ${tkCte("")},
-         |$ShCte,
-         |bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 97 = 0)
-         |SELECT s.doc_id, count(*) AS n_overlap
-         |FROM sh s JOIN bench b ON s.sh = b.sh
-         |WHERE s.doc_id % 97 <> 0
-         |GROUP BY 1 HAVING count(*) >= 5 ORDER BY doc_id""".stripMargin,
-
-    "q27_sessionize_batch" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id,
-        |    CASE WHEN ts - lag(ts, 1) OVER w > INTERVAL 30 MINUTE
-        |           OR lag(ts, 1) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id)
-        |),
-        |sess AS (
-        |  SELECT user_id, event_id,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM flagged
-        |)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  count(*) AS n_events, min(event_id) AS first_event, max(event_id) AS last_event
-        |FROM sess GROUP BY 1, 2 ORDER BY user_id, session_id""".stripMargin,
-
-    // m01: format-detected media metadata over a MIXED corpus — per
-    // doc_id % 3 the payload is a real PGM, a real PNG (same pixels),
-    // or undecodable (0x00-prefixed bytes). The oracle recomputes the
-    // canonical pixels from ord() and replays BOTH checksum folds: the
-    // pixel fold (identical for the two real encodings — the
-    // compression-invariance claim) and the raw-byte fold with the
-    // leading 0 (the stub fallback's honest answer), plus the -1
-    // sentinels on the stub branch.
-    "m01_media_meta" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 64) AS px
-        |  FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |    CAST(ord(px[CAST(i AS INT)]) AS BIGINT) AS v
-        |  FROM d, UNNEST(range(1, 65)) t(i)),
-        |chk AS (SELECT doc_id,
-        |    list_reduce([CAST(0 AS BIGINT)] || list(v ORDER BY idx),
-        |      (acc, x) -> (acc * 31 + x) % 1000000007) AS pix_chk,
-        |    list_reduce([CAST(0 AS BIGINT), CAST(0 AS BIGINT)] ||
-        |        list(v ORDER BY idx),
-        |      (acc, x) -> (acc * 31 + x) % 1000000007) AS stub_chk
-        |  FROM v GROUP BY doc_id)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'pgm' WHEN doc_id % 3 = 1 THEN 'png'
-        |       ELSE 'stub' END AS format,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN -1 ELSE 8 END AS INT) AS width,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN -1 ELSE 8 END AS INT) AS height,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN -1 ELSE 1 END AS INT) AS channels,
-        |  CASE WHEN doc_id % 3 = 2 THEN stub_chk ELSE pix_chk END
-        |    AS pixel_checksum
-        |FROM chk ORDER BY doc_id""".stripMargin,
-
-    // ASCII-CORPUS ASSUMPTION (m02/m03/m04): the decoded PGM pixels ARE
-    // the text-prefix bytes, and DuckDB's substr/md5 slice VARCHAR
-    // (character offsets) — identical only while every document byte is
-    // single-byte. The synthetic documents table is pure ASCII
-    // (asserted by MultimodalSpec's "corpus is single-byte" guard); a
-    // non-ASCII corpus needs these oracles rewritten over
-    // encode(text)/BLOB before the gate means anything.
-    // m02: frame sampling over REAL DECODED pixels — Spark encodes each
-    // 64-byte text prefix as a binary P5 PGM, decodes it back through
-    // the real header walk + pixel copy, and slices 16-byte frames
-    // every 8 from the DECODED stream; the oracle slices the prefix
-    // directly (decode(encode(x)) = x is the claim under test).
-    "m02_frame_hashes" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 64) AS px
-        |  FROM documents WHERE length(text) >= 64),
-        |f AS (
-        |  SELECT doc_id, i, substr(px, CAST(i AS INT), 16) AS frame
-        |  FROM (SELECT doc_id, px, unnest(range(1, 64 - 16 + 2, 8)) AS i
-        |        FROM d) t
-        |)
-        |SELECT doc_id, CAST((i - 1) // 8 + 1 AS INT) AS frame_no, md5(frame) AS frame_hash
-        |FROM f ORDER BY doc_id, frame_no""".stripMargin,
-
-    // shared-frame near-dup: distinct (doc, frame-hash) sets from the
-    // m02 decoded-frame slicing, one equi-join on the hash, pair
-    // overlap count
-    "m03_media_neardup" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 64) AS px
-        |  FROM documents WHERE length(text) >= 64),
-        |f AS (
-        |  SELECT DISTINCT doc_id, md5(substr(px, CAST(i AS INT), 16)) AS fh
-        |  FROM (SELECT doc_id, px, unnest(range(1, 64 - 16 + 2, 8)) AS i
-        |        FROM d) t
-        |)
-        |SELECT x.doc_id AS a, y.doc_id AS b, CAST(count(*) AS BIGINT) AS n_shared
-        |FROM f x JOIN f y ON x.fh = y.fh AND x.doc_id < y.doc_id
-        |GROUP BY 1, 2 HAVING count(*) >= 3
-        |ORDER BY a, b""".stripMargin,
-
-    // frame-hash document frequency (the m03 cap-sizing report); same
-    // decoded-frame slicing as the m02 CTE, bag + distinct counts per
-    // hash
-    "m04_frame_df" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 64) AS px
-        |  FROM documents WHERE length(text) >= 64),
-        |f AS (
-        |  SELECT doc_id, md5(substr(px, CAST(i AS INT), 16)) AS fh
-        |  FROM (SELECT doc_id, px, unnest(range(1, 64 - 16 + 2, 8)) AS i
-        |        FROM d) t
-        |)
-        |SELECT fh, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_occ
-        |FROM f GROUP BY fh HAVING count(DISTINCT doc_id) >= 2
-        |ORDER BY fh""".stripMargin,
-
-    // m05: REAL pixel decode under the gate — the Spark side builds an
-    // actual binary P5 PGM per document (first 64 text bytes as an 8x8
-    // raster), decodes it with decodeRasterPixels, and fingerprints
-    // the canonical pixel array; the oracle never sees a binary
-    // payload — it recomputes each pixel with ord() on the text prefix
-    // (single-byte corpus, the m02 premise) and replays the rolling
-    // checksum ((acc*31+px) % 1e9+7) via list_reduce.
-    "m05_raster_gate" ->
-      """SELECT doc_id, 'pgm' AS format, 8 AS width, 8 AS height,
-        |  1 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(range(1, 65), i ->
-        |      CAST(ord(text[CAST(i AS INT)]) AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 64 ORDER BY doc_id""".stripMargin,
-
-    // m11: REAL PNG decode under the gate — the Spark side encodes
-    // each document's 64-byte text prefix as a genuine
-    // DEFLATE-compressed PNG (per-row filter varying (doc_id+y)%5, so
-    // all five PNG filters appear across the corpus), decodes it with
-    // decodePngPixels (JDK Inflater + the five unfilter branches +
-    // chunk CRC verification), and fingerprints the canonical pixels;
-    // the oracle recomputes each pixel with ord() on the text prefix,
-    // never seeing a compressed byte. Identical pixel math to m05 —
-    // only the container (and therefore the decode chain under test)
-    // differs.
-    "m11_png_gate" ->
-      """SELECT doc_id, 'png' AS format, 8 AS width, 8 AS height,
-        |  1 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(range(1, 65), i ->
-        |      CAST(ord(text[CAST(i AS INT)]) AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 64 ORDER BY doc_id""".stripMargin,
-
-    // m12: REAL GIF LZW decode under the gate — the Spark side
-    // compresses each document's 64-byte text prefix into a genuine
-    // GIF87a (real LZW: dictionary growth + width bumps) over the
-    // 256-entry grayscale identity palette, decodes it with
-    // decodeGifPixels, and fingerprints the canonical RGB pixels; the
-    // oracle recomputes each pixel as the ord() byte REPEATED across
-    // the three channels and replays the rolling checksum, never
-    // seeing a compressed byte.
-    "m12_gif_gate" ->
-      """SELECT doc_id, 'gif' AS format, 8 AS width, 8 AS height,
-        |  3 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    flatten(list_transform(range(1, 65), i ->
-        |      [CAST(ord(text[CAST(i AS INT)]) AS BIGINT),
-        |       CAST(ord(text[CAST(i AS INT)]) AS BIGINT),
-        |       CAST(ord(text[CAST(i AS INT)]) AS BIGINT)])),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 64 ORDER BY doc_id""".stripMargin,
-
-    // m13: the RGB PNG gate — same bridge as m11 but 3 channels over
-    // the first 192 text bytes, so the Sub/Average/Paeth predictors'
-    // bpp=3 reach-back (untouched by the grayscale gate) is proven
-    // cross-engine
-    "m13_png_rgb_gate" ->
-      """SELECT doc_id, 'png' AS format, 8 AS width, 8 AS height,
-        |  3 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(range(1, 193), i ->
-        |      CAST(ord(text[CAST(i AS INT)]) AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 192 ORDER BY doc_id""".stripMargin,
-
-    // m14: compressed-audio header metadata — the Spark side parses
-    // genuine bit-packed FLAC STREAMINFO / MP3 frame headers built
-    // from text bytes; the oracle re-derives every field from ord()
-    // arithmetic (including the public bitrate/sample-rate tables and
-    // the 144000·br//sr frame-length integer division)
-    "m14_codec_meta" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 8) AS px
-        |           FROM documents WHERE length(text) >= 8),
-        |o AS (SELECT doc_id,
-        |        ord(substr(px, 1, 1)) AS o0, ord(substr(px, 2, 1)) AS o1,
-        |        ord(substr(px, 3, 1)) AS o2, ord(substr(px, 4, 1)) AS o3,
-        |        ord(substr(px, 5, 1)) AS o4, ord(substr(px, 6, 1)) AS o5,
-        |        ord(substr(px, 7, 1)) AS o6
-        |      FROM d),
-        |flac AS (SELECT doc_id, 'flac' AS format,
-        |    CAST(8000 + o0 * 37 + o1 AS INT) AS sample_rate,
-        |    CAST(1 + (o2 % 2) AS INT) AS channels,
-        |    CAST(8 + (o3 % 17) AS INT) AS bits_per_sample,
-        |    CAST(o4 * 65536 + o5 * 256 + o6 AS BIGINT) AS total_samples,
-        |    CAST(NULL AS INT) AS bitrate_kbps,
-        |    CAST(NULL AS INT) AS frame_len
-        |  FROM o),
-        |mp3 AS (SELECT doc_id, 'mp3' AS format,
-        |    CAST(list_extract([44100, 48000, 32000], 1 + (o1 % 3)) AS INT) AS sample_rate,
-        |    CAST(CASE WHEN (o3 % 4) = 3 THEN 1 ELSE 2 END AS INT) AS channels,
-        |    CAST(NULL AS INT) AS bits_per_sample,
-        |    CAST(NULL AS BIGINT) AS total_samples,
-        |    CAST(list_extract([32, 40, 48, 56, 64, 80, 96, 112, 128, 160,
-        |                       192, 224, 256, 320], 1 + (o0 % 14)) AS INT) AS bitrate_kbps,
-        |    CAST(144000 * list_extract([32, 40, 48, 56, 64, 80, 96, 112, 128,
-        |            160, 192, 224, 256, 320], 1 + (o0 % 14))
-        |         // list_extract([44100, 48000, 32000], 1 + (o1 % 3))
-        |         + (o2 % 2) AS INT) AS frame_len
-        |  FROM o)
-        |SELECT * FROM flac UNION ALL SELECT * FROM mp3
-        |ORDER BY doc_id, format""".stripMargin,
-
-    // m15: the indexed-PNG gate — the Spark side unfilters the index
-    // plane and expands through PLTE; the oracle derives each RGB
-    // triple from ord() via the deranged palette formulas
-    "m15_png_palette_gate" ->
-      """SELECT doc_id, 'png' AS format, 8 AS width, 8 AS height,
-        |  3 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    flatten(list_transform(range(1, 65), i ->
-        |      [CAST(ord(text[CAST(i AS INT)]) AS BIGINT),
-        |       CAST((ord(text[CAST(i AS INT)]) * 7 + 13) % 256 AS BIGINT),
-        |       CAST((ord(text[CAST(i AS INT)]) * 31 + 5) % 256 AS BIGINT)])),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 64 ORDER BY doc_id""".stripMargin,
-
-    // m17: the Adam7 gate — the Spark side round-trips the text
-    // prefix through the INTERLACED wire format (seven pass
-    // sub-images, pass-confined predictors, scatter geometry); the
-    // oracle is the m11 pixel recompute VERBATIM — canonical pixels
-    // are interlace-invariant, which is exactly the claim under test
-    "m17_png_adam7_gate" ->
-      """SELECT doc_id, 'png' AS format, 8 AS width, 8 AS height,
-        |  1 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(range(1, 65), i ->
-        |      CAST(ord(text[CAST(i AS INT)]) AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 64 ORDER BY doc_id""".stripMargin,
-
-    // m18: the RLE8 BMP gate — the Spark side decodes a genuine
-    // run-length stream (runs + absolute literals alternating) back
-    // through the deranged palette; the oracle is the m15 pixel
-    // recompute VERBATIM — expected pixels are compression-invariant
-    "m18_bmp_rle_gate" ->
-      """SELECT doc_id, 'bmp' AS format, 8 AS width, 8 AS height,
-        |  3 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    flatten(list_transform(range(1, 65), i ->
-        |      [CAST(ord(text[CAST(i AS INT)]) AS BIGINT),
-        |       CAST((ord(text[CAST(i AS INT)]) * 7 + 13) % 256 AS BIGINT),
-        |       CAST((ord(text[CAST(i AS INT)]) * 31 + 5) % 256 AS BIGINT)])),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 64 ORDER BY doc_id""".stripMargin,
-
-    // m16: EXIF/TIFF IFD0 — the Spark side walks genuine directories
-    // in BOTH byte orders (doc parity picks II/MM); the oracle
-    // recomputes the fields from ord() and the parity
-    "m16_exif_meta" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END AS byte_order,
-        |  CAST(100 + ord(substr(text, 1, 1)) * 17 + ord(substr(text, 2, 1)) AS BIGINT) AS width,
-        |  CAST(100 + ord(substr(text, 2, 1)) * 13 + ord(substr(text, 3, 1)) AS BIGINT) AS height,
-        |  CAST(1 + (ord(substr(text, 4, 1)) % 8) AS INT) AS orientation
-        |FROM documents WHERE length(text) >= 4 ORDER BY doc_id""".stripMargin,
-
-    // m19: REAL TIFF strip decode under the gate — the Spark side
-    // walks genuine strip-organized directories (both byte orders by
-    // the second parity bit, gray/RGB by doc parity, three uneven
-    // strips with offset-stored arrays) built from text bytes; the
-    // oracle recomputes every pixel with ord() on the prefix — 64
-    // gray samples for even docs, 192 RGB samples for odd — and
-    // replays the rolling checksum, never seeing a TIFF byte.
-    "m19_tiff_gate" ->
-      """SELECT doc_id, 'tiff' AS format, 8 AS width, 8 AS height,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 3 END AS INT) AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(
-        |      range(1, CASE WHEN doc_id % 2 = 0 THEN 65 ELSE 193 END), i ->
-        |      CAST(ord(text[CAST(i AS INT)]) AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 192 ORDER BY doc_id""".stripMargin,
-
-    // m20: G.711 µ-law/A-law expansion under the gate — wire code j
-    // is (ord_j·7 + j) mod 256 (spans all 256 code points); µ-law for
-    // even docs (complement, mantissa<<3 + 132 bias, segment shift,
-    // sign from bit 7), A-law for odd (XOR 0x55, mantissa<<4, segment
-    // 0/1/shift cases, bit 7 = POSITIVE); features replay m07's
-    // definitions over the expanded LINEAR samples
-    "m20_g711_gate" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |cd AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |        (ord(text[CAST(i AS INT)]) * 7 + (CAST(i AS INT) - 1)) % 256 AS code
-        |      FROM d, UNNEST(range(1, 65)) AS t(i)),
-        |v AS (SELECT doc_id, idx,
-        |    CASE WHEN doc_id % 2 = 0 THEN
-        |      CASE WHEN (255 - code) >= 128
-        |        THEN 132 - ((((255 - code) % 16) * 8 + 132) * (1 << (((255 - code) // 16) % 8)))
-        |        ELSE ((((255 - code) % 16) * 8 + 132) * (1 << (((255 - code) // 16) % 8))) - 132 END
-        |    ELSE
-        |      CASE WHEN xor(code, 85) >= 128 THEN 1 ELSE -1 END *
-        |      CASE WHEN (xor(code, 85) // 16) % 8 = 0 THEN (xor(code, 85) % 16) * 16 + 8
-        |           WHEN (xor(code, 85) // 16) % 8 = 1 THEN (xor(code, 85) % 16) * 16 + 264
-        |           ELSE ((xor(code, 85) % 16) * 16 + 264) * (1 << ((xor(code, 85) // 16) % 8 - 1)) END
-        |    END AS s
-        |  FROM cd),
-        |f AS (SELECT doc_id, CAST(max(abs(s)) AS INT) AS peak,
-        |        CAST(sum(abs(s)) AS BIGINT) AS sum_abs FROM v GROUP BY doc_id),
-        |z AS (SELECT doc_id,
-        |    CAST(count(CASE WHEN (pv < 0) <> (s < 0) THEN 1 END) AS INT) AS zero_crossings
-        |  FROM (SELECT doc_id, s,
-        |          lag(s) OVER (PARTITION BY doc_id ORDER BY idx) AS pv FROM v) t
-        |  GROUP BY doc_id),
-        |c AS (SELECT doc_id, list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(list(s ORDER BY idx), x -> CAST(x + 32768 AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS sample_checksum
-        |  FROM v GROUP BY doc_id)
-        |SELECT f.doc_id,
-        |  CASE WHEN f.doc_id % 2 = 0 THEN 'ulaw' ELSE 'alaw' END AS law,
-        |  CAST(8000 AS INT) AS sample_rate, CAST(1 AS INT) AS channels,
-        |  CAST(8 AS INT) AS bits_per_sample, CAST(64 AS BIGINT) AS n_samples,
-        |  f.peak, f.sum_abs, z.zero_crossings, c.sample_checksum
-        |FROM f JOIN z USING (doc_id) JOIN c USING (doc_id)
-        |ORDER BY f.doc_id""".stripMargin,
-
-    // m21: ID3v2 tag metadata — the oracle re-derives version from
-    // parity, the three varying text lengths from ord() mod 12, the
-    // declared synchsafe size as 33 + those lengths, and the frame
-    // texts from substr() — never seeing a tag byte
-    "m21_id3_gate" ->
-      """WITH d AS (SELECT doc_id, substr(text, 1, 40) AS px
-        |           FROM documents WHERE length(text) >= 40),
-        |o AS (SELECT doc_id, px,
-        |        1 + ord(substr(px, 1, 1)) % 12 AS tl,
-        |        1 + ord(substr(px, 2, 1)) % 12 AS al,
-        |        1 + ord(substr(px, 3, 1)) % 12 AS bl
-        |      FROM d)
-        |SELECT doc_id,
-        |  CAST(3 + doc_id % 2 AS INT) AS version,
-        |  CAST(33 + tl + al + bl AS INT) AS tag_size,
-        |  CAST(3 AS INT) AS n_frames,
-        |  substr(px, 4, tl) AS title,
-        |  substr(px, 16, al) AS artist,
-        |  substr(px, 28, bl) AS album
-        |FROM o ORDER BY doc_id""".stripMargin,
-
-    // m22: 8000 -> 6000 Hz (3/4) linear-interp resample of the m07
-    // WAVs — Spark decodes the real binary and interpolates; the
-    // oracle rebuilds source samples from ord() and replays the
-    // SHIFTED-space interpolation (numerator non-negative, so // is
-    // the same floor as the Scala division on longs)
-    "m22_resample_gate" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) - 1 AS idx,
-        |        (ord(text[CAST(i AS INT)]) - 96) * 128 + 32768 AS sh
-        |      FROM d, UNNEST(range(1, 65)) AS t(i)),
-        |js AS (SELECT CAST(j AS INT) AS j,
-        |         CAST((j * 4) // 3 AS INT) AS q,
-        |         CAST((j * 4) % 3 AS INT) AS rem
-        |       FROM (SELECT unnest(range(0, 96)) AS j) t
-        |       WHERE CASE WHEN (j * 4) % 3 = 0 THEN (j * 4) // 3 <= 63
-        |                  ELSE (j * 4) // 3 + 1 <= 63 END),
-        |r AS (SELECT s0.doc_id, js.j,
-        |        CASE WHEN js.rem = 0 THEN s0.sh
-        |             ELSE ((3 - js.rem) * s0.sh + js.rem * s1.sh) // 3
-        |        END AS shv
-        |      FROM js
-        |      JOIN v s0 ON s0.idx = js.q
-        |      LEFT JOIN v s1 ON s1.doc_id = s0.doc_id AND s1.idx = js.q + 1
-        |      WHERE js.rem = 0 OR s1.idx IS NOT NULL)
-        |SELECT doc_id, j, CAST(6000 AS INT) AS out_rate,
-        |  CAST(shv - 32768 AS INT) AS sample
-        |FROM r ORDER BY doc_id, j""".stripMargin,
-
-    // m24: autocorrelation profile — the oracle rebuilds samples from
-    // ord() arithmetic and replays each lag's product sum plus the
-    // dominant-lag argmax (ties to the smaller lag)
-    "m24_autocorr_gate" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) - 1 AS idx,
-        |        (ord(text[CAST(i AS INT)]) - 96) * 128 AS s
-        |      FROM d, UNNEST(range(1, 65)) AS t(i)),
-        |l AS (SELECT CAST(unnest([1, 2, 4, 8]) AS INT) AS lag),
-        |p AS (SELECT a.doc_id, l.lag,
-        |        CAST(sum(CAST(a.s AS BIGINT) * b.s) AS BIGINT) AS ac
-        |      FROM v a CROSS JOIN l
-        |      JOIN v b ON b.doc_id = a.doc_id AND b.idx = a.idx + l.lag
-        |      GROUP BY 1, 2),
-        |e AS (SELECT doc_id, CAST(sum(CAST(s AS BIGINT) * s) AS BIGINT) AS r0
-        |      FROM v GROUP BY 1),
-        |rk AS (SELECT p.doc_id, p.lag, p.ac, e.r0,
-        |        row_number() OVER (PARTITION BY p.doc_id
-        |          ORDER BY p.ac DESC, p.lag) AS rn
-        |      FROM p JOIN e USING (doc_id))
-        |SELECT doc_id, lag, ac, r0,
-        |  CAST(max(CASE WHEN rn = 1 THEN lag END)
-        |    OVER (PARTITION BY doc_id) AS INT) AS dom_lag
-        |FROM rk ORDER BY doc_id, lag""".stripMargin,
-
-    // m29: stereo de-interleave + shifted-space downmix — the oracle
-    // rebuilds both channels from ord() and replays the non-negative
-    // floor division
-    "m29_downmix_gate" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(j AS INT) AS j,
-        |    (ord(text[CAST(j + 1 AS INT)]) - 96) * 128 AS l,
-        |    (ord(text[CAST(j + 33 AS INT)]) - 96) * 128 + j % 2 AS r
-        |  FROM d, UNNEST(range(0, 32)) AS t(j))
-        |SELECT doc_id, j, CAST(l AS INT) AS "left", CAST(r AS INT) AS "right",
-        |  CAST((l + 32768 + r + 32768) // 2 - 32768 AS INT) AS mix
-        |FROM v ORDER BY doc_id, j""".stripMargin,
-
-    // m28: animated-GIF composition — the oracle recomputes both
-    // composited canvases from ord() arithmetic: frame 1 the deranged
-    // palette over text bytes; frame 2 the disposal-2-restored
-    // background (entry 7) except where the 4x4 patch is opaque
-    // (patch idx = ord % 8, 0 = transparent -> background)
-    "m28_gif_anim_gate" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 80),
-        |f1 AS (SELECT doc_id, CAST(1 AS INT) AS frame_no,
-        |    CAST(doc_id % 100 AS INT) AS delay_cs, CAST(2 AS INT) AS disposal,
-        |    list_reduce([CAST(0 AS BIGINT)] ||
-        |      flatten(list_transform(range(1, 65), i ->
-        |        [CAST(ord(text[CAST(i AS INT)]) AS BIGINT),
-        |         CAST((ord(text[CAST(i AS INT)]) * 7 + 13) % 256 AS BIGINT),
-        |         CAST((ord(text[CAST(i AS INT)]) * 31 + 5) % 256 AS BIGINT)])),
-        |      (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |  FROM d),
-        |v2 AS (SELECT doc_id, j,
-        |    CASE WHEN (j % 8) BETWEEN 2 AND 5 AND (j // 8) BETWEEN 2 AND 5
-        |      THEN (CASE WHEN ord(text[CAST(65 + (j // 8 - 2) * 4
-        |               + (j % 8 - 2) AS INT)]) % 8 = 0 THEN 7
-        |            ELSE ord(text[CAST(65 + (j // 8 - 2) * 4
-        |               + (j % 8 - 2) AS INT)]) % 8 END)
-        |      ELSE 7 END AS v
-        |  FROM d, UNNEST(range(0, 64)) AS t(j)),
-        |f2 AS (SELECT doc_id, CAST(2 AS INT) AS frame_no,
-        |    CAST((doc_id + 37) % 100 AS INT) AS delay_cs,
-        |    CAST(0 AS INT) AS disposal,
-        |    list_reduce([CAST(0 AS BIGINT)] ||
-        |      flatten(list([CAST(v AS BIGINT),
-        |        CAST((v * 7 + 13) % 256 AS BIGINT),
-        |        CAST((v * 31 + 5) % 256 AS BIGINT)] ORDER BY j)),
-        |      (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |  FROM v2 GROUP BY doc_id)
-        |SELECT * FROM f1 UNION ALL SELECT * FROM f2
-        |ORDER BY doc_id, frame_no""".stripMargin,
-
-    // m27: EXIF orientation over real QOI pixels    // m27: EXIF orientation over real QOI pixels — the oracle replays
-    // the inverse index map (sx, sy per output position, CASE over the
-    // eight tags) with ord() arithmetic through the deranged channels
-    "m27_orient_gate" ->
-      """WITH d AS (SELECT doc_id, text, CAST(1 + doc_id % 8 AS INT) AS o
-        |           FROM documents WHERE length(text) >= 16),
-        |pos AS (SELECT doc_id, text, o, CAST(j AS INT) AS j,
-        |    CAST(j % 8 AS INT) AS x, CAST(j // 8 AS INT) AS y
-        |  FROM d, UNNEST(range(0, 64)) AS t(j)),
-        |src AS (SELECT doc_id, text, o, j,
-        |    CASE WHEN o IN (1, 4) THEN x WHEN o IN (2, 3) THEN 7 - x
-        |         WHEN o IN (5, 6) THEN y ELSE 7 - y END AS sx,
-        |    CASE WHEN o IN (1, 2) THEN y WHEN o IN (3, 4) THEN 7 - y
-        |         WHEN o IN (5, 8) THEN x ELSE 7 - x END AS sy
-        |  FROM pos),
-        |v AS (SELECT doc_id, o, j,
-        |    ord(text[CAST((sy * 8 + sx) // 4 + 1 AS INT)]) AS pv
-        |  FROM src),
-        |ck AS (SELECT doc_id, o,
-        |    list_reduce([CAST(0 AS BIGINT)] ||
-        |      flatten(list(
-        |        [CAST(pv AS BIGINT), CAST((pv * 7 + 13) % 256 AS BIGINT),
-        |         CAST((pv * 31 + 5) % 256 AS BIGINT)] ORDER BY j)),
-        |      (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |  FROM v GROUP BY doc_id, o)
-        |SELECT doc_id, o AS orientation, 8 AS width, 8 AS height,
-        |  3 AS channels, pixel_checksum
-        |FROM ck ORDER BY doc_id""".stripMargin,
-
-    // m26: REAL QOI decode — the oracle recomputes the deranged-
-    // channel canonical pixels from ord() arithmetic (pixel j reads
-    // text byte j//4), never seeing a run/index/diff/luma byte
-    "m26_qoi_gate" ->
-      """SELECT doc_id, 'qoi' AS format, 8 AS width, 8 AS height,
-        |  3 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    flatten(list_transform(range(0, 64), j ->
-        |      [CAST(ord(text[CAST(j // 4 + 1 AS INT)]) AS BIGINT),
-        |       CAST((ord(text[CAST(j // 4 + 1 AS INT)]) * 7 + 13) % 256 AS BIGINT),
-        |       CAST((ord(text[CAST(j // 4 + 1 AS INT)]) * 31 + 5) % 256 AS BIGINT)])),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 16 ORDER BY doc_id""".stripMargin,
-
-    // m25: WebP dims — the oracle recomputes variant (doc_id mod 3)
-    // and dimensions from ord() arithmetic, never seeing a RIFF byte
-    "m25_webp_gate" ->
-      """WITH d AS (SELECT doc_id,
-        |    ord(text[1]) AS o0, ord(text[2]) AS o1,
-        |    ord(text[3]) AS o2, ord(text[4]) AS o3
-        |  FROM documents WHERE length(text) >= 4)
-        |SELECT doc_id,
-        |  CASE doc_id % 3 WHEN 0 THEN 'VP8 ' WHEN 1 THEN 'VP8L'
-        |    ELSE 'VP8X' END AS variant,
-        |  CAST(CASE doc_id % 3
-        |    WHEN 0 THEN 1 + (o0 * 53 + o1) % 16383
-        |    WHEN 1 THEN 1 + (o0 * 53 + o1) % 16384
-        |    ELSE 1 + (o0 * 65000 + o1 * 251 + o2) % 16777216
-        |  END AS INT) AS width,
-        |  CAST(CASE doc_id % 3
-        |    WHEN 0 THEN 1 + (o1 * 53 + o2) % 16383
-        |    WHEN 1 THEN 1 + (o1 * 53 + o2) % 16384
-        |    ELSE 1 + (o1 * 65000 + o2 * 251 + o3) % 16777216
-        |  END AS INT) AS height
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // m23: the 16-bit gray PNG gate — canonical pixels are the
-    // high-byte reduction, which the builder pins to the raw ord()
-    // value (sample = v*256 + (255-v)), so the oracle is m11's
-    // first-principles checksum verbatim
-    "m23_png16_gate" ->
-      """SELECT doc_id, 'png' AS format, 8 AS width, 8 AS height,
-        |  1 AS channels,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(range(1, 65), i ->
-        |      CAST(ord(text[CAST(i AS INT)]) AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS pixel_checksum
-        |FROM documents WHERE length(text) >= 64 ORDER BY doc_id""".stripMargin,
-
-    // m06: perceptual hashes over REAL decoded pixels, cross-engine —
-    // aHash: 8x8 grid (identity sampling at this size), threshold at
-    // the integer mean (floor division of the exact sum); dHash: 9x8
-    // grid with nearest-neighbor column sampling (x*8)//9, bit =
-    // left < right. Bit 63 cannot be built by shifting (BIGINT shift
-    // overflow) — its contribution is the min-long literal.
-    "m06_perceptual_gate" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) - 1 AS idx,
-        |        CAST(ord(text[CAST(i AS INT)]) AS BIGINT) AS v
-        |      FROM d, UNNEST(range(1, 65)) AS t(i)),
-        |m AS (SELECT doc_id, sum(v) // 64 AS mean FROM v GROUP BY doc_id),
-        |ab AS (SELECT v.doc_id,
-        |    CAST(sum(CASE WHEN v.v >= m.mean THEN
-        |        CASE WHEN v.idx = 63 THEN -9223372036854775807 - 1
-        |             ELSE CAST(1 AS BIGINT) << v.idx END
-        |      ELSE 0 END) AS BIGINT) AS ahash
-        |  FROM v JOIN m USING (doc_id) GROUP BY v.doc_id),
-        |dc AS (SELECT d.doc_id, CAST(x AS INT) AS x, CAST(y AS INT) AS y,
-        |    ord(text[CAST(y * 8 + (x * 8) // 9 + 1 AS INT)]) AS cl,
-        |    ord(text[CAST(y * 8 + ((x + 1) * 8) // 9 + 1 AS INT)]) AS cr
-        |  FROM d, UNNEST(range(0, 8)) AS tx(x), UNNEST(range(0, 8)) AS ty(y)),
-        |db AS (SELECT doc_id,
-        |    CAST(sum(CASE WHEN cl < cr THEN
-        |        CASE WHEN y * 8 + x = 63 THEN -9223372036854775807 - 1
-        |             ELSE CAST(1 AS BIGINT) << (y * 8 + x) END
-        |      ELSE 0 END) AS BIGINT) AS dhash
-        |  FROM dc GROUP BY doc_id)
-        |SELECT ab.doc_id, ab.ahash, db.dhash
-        |FROM ab JOIN db USING (doc_id) ORDER BY ab.doc_id""".stripMargin,
-
-    // m07: REAL PCM sample decode under the gate — the Spark side
-    // builds an actual 16-bit mono WAV per document (sample j =
-    // (byte_j − 96)·128 over the first 64 text bytes — signs vary, so
-    // negative samples round-trip through two's-complement bytes),
-    // decodes it with decodePcmSamples, and derives signal features;
-    // the oracle recomputes every sample with ord() arithmetic. The
-    // checksum runs over the BIASED sample s + 32768 (non-negative, so
-    // the modular arithmetic is engine-independent); a zero crossing
-    // is a (prev < 0) != (cur < 0) transition with 0 counted
-    // non-negative.
-    "m07_audio_gate" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |        (ord(text[CAST(i AS INT)]) - 96) * 128 AS s
-        |      FROM d, UNNEST(range(1, 65)) AS t(i)),
-        |f AS (SELECT doc_id, CAST(max(abs(s)) AS INT) AS peak,
-        |        CAST(sum(abs(s)) AS BIGINT) AS sum_abs FROM v GROUP BY doc_id),
-        |z AS (SELECT doc_id,
-        |    CAST(count(CASE WHEN (pv < 0) <> (s < 0) THEN 1 END) AS INT) AS zero_crossings
-        |  FROM (SELECT doc_id, s,
-        |          lag(s) OVER (PARTITION BY doc_id ORDER BY idx) AS pv FROM v) t
-        |  GROUP BY doc_id),
-        |c AS (SELECT doc_id, list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(range(1, 65), i ->
-        |      CAST((ord(text[CAST(i AS INT)]) - 96) * 128 + 32768 AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS sample_checksum FROM d)
-        |SELECT f.doc_id, CAST(8000 AS INT) AS sample_rate,
-        |  CAST(1 AS INT) AS channels, CAST(16 AS INT) AS bits_per_sample,
-        |  CAST(64 AS BIGINT) AS n_samples, f.peak, f.sum_abs,
-        |  z.zero_crossings, c.sample_checksum
-        |FROM f JOIN z USING (doc_id) JOIN c USING (doc_id)
-        |ORDER BY f.doc_id""".stripMargin,
-
-    // m35: Haralick GLCM sums — horizontal pairs via idx+1 self-join,
-    // exact contrast/energy/floor-ppm homogeneity
-    "m35_glcm" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |        (CAST(i AS INT) - 1) % 8 AS x,
-        |        ord(text[CAST(i AS INT)]) AS v
-        |      FROM d, UNNEST(range(1, 65)) t(i)),
-        |pr AS (SELECT a.doc_id, a.v AS va, b.v AS vb
-        |       FROM v a JOIN v b ON a.doc_id = b.doc_id
-        |         AND b.idx = a.idx + 1 AND a.x < 7),
-        |s AS (SELECT doc_id,
-        |        CAST(sum((va - vb) * (va - vb)) AS BIGINT) AS contrast,
-        |        CAST(sum(1000000 // ((1 + (va - vb) * (va - vb)) * 56)) AS BIGINT)
-        |          AS homogeneity_ppm
-        |      FROM pr GROUP BY 1),
-        |cnt AS (SELECT doc_id, va, vb, CAST(count(*) AS BIGINT) AS c
-        |        FROM pr GROUP BY 1, 2, 3),
-        |en AS (SELECT doc_id, CAST(sum(c * c) AS BIGINT) AS energy_num
-        |       FROM cnt GROUP BY 1)
-        |SELECT s.doc_id, CAST(56 AS BIGINT) AS n_pairs, contrast,
-        |  energy_num, homogeneity_ppm
-        |FROM s JOIN en USING (doc_id) ORDER BY s.doc_id""".stripMargin,
-
-    // m34: the Bayer 4x4 dither — white iff v > 16*B[y%4][x%4] + 8,
-    // matrix as a flat list lookup, fold over the 0/255 stream
-    "m34_dither" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |        (CAST(i AS INT) - 1) // 8 AS y, (CAST(i AS INT) - 1) % 8 AS x,
-        |        ord(text[CAST(i AS INT)]) AS v
-        |      FROM d, UNNEST(range(1, 65)) t(i)),
-        |o AS (SELECT doc_id, idx,
-        |        CASE WHEN v > 16 * list_extract(
-        |          [0,8,2,10,12,4,14,6,3,11,1,9,15,7,13,5],
-        |          (y % 4) * 4 + (x % 4) + 1) + 8
-        |        THEN 255 ELSE 0 END AS ov
-        |      FROM v)
-        |SELECT doc_id, CAST(64 AS INT) AS n_px,
-        |  CAST(sum(CASE WHEN ov = 255 THEN 1 ELSE 0 END) AS INT) AS n_white,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list(CAST(ov AS BIGINT) ORDER BY idx),
-        |    (acc, xx) -> (acc * 31 + xx) % 1000000007) AS dith_checksum
-        |FROM o GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // m33: the run census — runs counted with a lag window over ord()
-    // pixels, distinct bytes, naive 2-byte-per-run RLE size, floor-ppm
-    // ratio
-    "m33_rle_signal" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |        ord(text[CAST(i AS INT)]) AS v
-        |      FROM d, UNNEST(range(1, 65)) t(i)),
-        |l AS (SELECT doc_id, v,
-        |        lag(v) OVER (PARTITION BY doc_id ORDER BY idx) AS pv
-        |      FROM v),
-        |a AS (SELECT doc_id,
-        |        CAST(1 + count(CASE WHEN pv IS NOT NULL AND v <> pv THEN 1 END) AS INT) AS n_runs,
-        |        CAST(count(DISTINCT v) AS INT) AS n_distinct
-        |      FROM l GROUP BY 1)
-        |SELECT doc_id, CAST(64 AS INT) AS n_px, n_runs, n_distinct,
-        |  CAST(2 * n_runs AS BIGINT) AS rle_bytes,
-        |  CAST(2 * n_runs AS BIGINT) * 1000000 // 64 AS ratio_ppm,
-        |  2 * n_runs < 64 AS compressible
-        |FROM a ORDER BY doc_id""".stripMargin,
-
-    // m32: the ViT patch walk — pixels from ord(), patch = (y div 4,
-    // x div 4), row-major fold + exact stats per patch
-    "m32_patchify" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |        (CAST(i AS INT) - 1) // 8 AS y, (CAST(i AS INT) - 1) % 8 AS x,
-        |        ord(text[CAST(i AS INT)]) AS v
-        |      FROM d, UNNEST(range(1, 65)) t(i))
-        |SELECT doc_id, CAST(y // 4 AS INT) AS patch_row,
-        |  CAST(x // 4 AS INT) AS patch_col,
-        |  CAST(sum(v) AS BIGINT) AS sum_v,
-        |  CAST(min(v) AS INT) AS lo, CAST(max(v) AS INT) AS hi,
-        |  CAST(sum(v) // 16 AS BIGINT) AS mean_v,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list(CAST(v AS BIGINT) ORDER BY idx),
-        |    (acc, xx) -> (acc * 31 + xx) % 1000000007) AS pchk
-        |FROM v GROUP BY 1, 2, 3
-        |ORDER BY doc_id, patch_row, patch_col""".stripMargin,
-
-    // m31: histogram equalization over REAL decoded pixels — the
-    // oracle rebuilds the 8x8 gray raster from ord(), computes the
-    // per-image CDF with a running-sum window, and replays the
-    // (cdf - cdf_min)*255 // (n - cdf_min) remap plus the rolling fold
-    // of the remapped stream
-    // m37: Sobel edge density — the 3×3 gradient stencil replayed
-    // relationally (offset join, CASE-free algebraic kernel weights),
-    // L1 magnitudes, rolling checksum in (y, x) row-major order
-    "m37_sobel" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |        CAST(ord(text[CAST(i AS INT)]) AS BIGINT) AS v
-        |      FROM d, UNNEST(range(1, 65)) t(i)),
-        |g AS (SELECT doc_id, CAST(x AS INT) AS x, CAST(y AS INT) AS y
-        |      FROM d, UNNEST(range(1, 7)) tx(x), UNNEST(range(1, 7)) ty(y)),
-        |o AS (SELECT CAST(dx AS INT) AS dx, CAST(dy AS INT) AS dy
-        |      FROM UNNEST(range(-1, 2)) a(dx), UNNEST(range(-1, 2)) b(dy)),
-        |s AS (SELECT g.doc_id, g.x, g.y,
-        |        CAST(sum(o.dx * (2 - abs(o.dy)) * v.v) AS BIGINT) AS gx,
-        |        CAST(sum(o.dy * (2 - abs(o.dx)) * v.v) AS BIGINT) AS gy
-        |      FROM g CROSS JOIN o
-        |      JOIN v ON v.doc_id = g.doc_id
-        |        AND v.idx = (g.y + o.dy) * 8 + (g.x + o.dx) + 1
-        |      GROUP BY 1, 2, 3),
-        |m AS (SELECT doc_id, x, y, abs(gx) + abs(gy) AS mag FROM s),
-        |f AS (SELECT doc_id,
-        |        CAST(count(*) AS BIGINT) AS n_interior,
-        |        CAST(sum(CASE WHEN mag >= 128 THEN 1 ELSE 0 END) AS BIGINT)
-        |          AS n_edges,
-        |        CAST(sum(mag) AS BIGINT) AS mag_sum,
-        |        CAST(max(mag) AS BIGINT) AS mag_max,
-        |        list_reduce([CAST(0 AS BIGINT)] ||
-        |          list(CAST(mag AS BIGINT) ORDER BY y, x),
-        |          (acc, xx) -> (acc * 31 + xx) % 1000000007) AS edge_checksum
-        |      FROM m GROUP BY 1)
-        |SELECT doc_id, n_interior, n_edges, mag_sum, mag_max, edge_checksum
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // m40: two-level Otsu — the 3-class threshold-pair argmax over
-    // present-level pairs on the same 2^20 grid (OtsuCtes supplies the
-    // per-level prefix sums; its single-threshold tail CTEs go unused)
-    "m40_otsu2" ->
-      s"""WITH $OtsuCtes,
-        |pairs AS (
-        |  SELECT a.doc_id, a.v AS t1, b.v AS t2,
-        |    a.n0 AS n1, a.s0 AS s1,
-        |    b.n0 - a.n0 AS n2, b.s0 - a.s0 AS s2,
-        |    t.n - b.n0 AS n3, t.s - b.s0 AS s3
-        |  FROM cdf a JOIN cdf b ON b.doc_id = a.doc_id AND b.v > a.v
-        |  JOIN tot t ON t.doc_id = a.doc_id
-        |  WHERE t.n - b.n0 > 0),
-        |scored2 AS (SELECT doc_id, t1, t2,
-        |    (s1 * s1 * 1048576) // n1 + (s2 * s2 * 1048576) // n2 +
-        |    (s3 * s3 * 1048576) // n3 AS score
-        |  FROM pairs),
-        |pick2 AS (SELECT doc_id, t1, t2, score FROM (
-        |    SELECT p.*, row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY score DESC, t1, t2) AS rn
-        |    FROM scored2 p) x
-        |  WHERE rn = 1),
-        |pf2 AS (SELECT t.doc_id,
-        |    CAST(coalesce(p.t1, t.vmax) AS INT) AS t1,
-        |    CAST(coalesce(p.t2, t.vmax) AS INT) AS t2,
-        |    CAST(coalesce(p.score, 0) AS BIGINT) AS score
-        |  FROM tot t LEFT JOIN pick2 p USING (doc_id)),
-        |o AS (SELECT v.doc_id, v.idx,
-        |    CASE WHEN v.v <= p.t1 THEN 0 WHEN v.v <= p.t2 THEN 128
-        |         ELSE 255 END AS qv
-        |  FROM v JOIN pf2 p USING (doc_id)),
-        |f AS (SELECT doc_id,
-        |    CAST(sum(CASE WHEN qv = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-        |    CAST(sum(CASE WHEN qv = 128 THEN 1 ELSE 0 END) AS BIGINT) AS n_mid,
-        |    CAST(sum(CASE WHEN qv = 255 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_high,
-        |    list_reduce([CAST(0 AS BIGINT)] ||
-        |      list(CAST(qv AS BIGINT) ORDER BY idx),
-        |      (acc, x) -> (acc * 31 + x) % 1000000007) AS tri_checksum
-        |  FROM o GROUP BY 1)
-        |SELECT p.doc_id, p.t1, p.t2, p.score, f.n_low, f.n_mid, f.n_high,
-        |  f.tri_checksum
-        |FROM pf2 p JOIN f USING (doc_id) ORDER BY p.doc_id""".stripMargin,
-
-    // m36: Otsu threshold — per-image between-class-variance argmax on
-    // the exact 2^20-scaled integer grid (candidates = present gray
-    // levels with a non-empty upper class, tie-break smallest level;
-    // flat images fall back to their single level), plus the binarized
-    // stream's rolling checksum
-    "m36_otsu" ->
-      s"""WITH $OtsuCtes,
-        |o AS (SELECT v.doc_id, v.idx,
-        |        CASE WHEN v.v > p.threshold THEN 255 ELSE 0 END AS ov
-        |      FROM v JOIN pf p USING (doc_id)),
-        |f AS (SELECT doc_id,
-        |        list_reduce([CAST(0 AS BIGINT)] ||
-        |          list(CAST(ov AS BIGINT) ORDER BY idx),
-        |          (acc, x) -> (acc * 31 + x) % 1000000007) AS bin_checksum
-        |      FROM o GROUP BY 1)
-        |SELECT p.doc_id, p.threshold, p.score, p.n_bg, p.n_fg,
-        |  f.bin_checksum
-        |FROM pf p JOIN f USING (doc_id) ORDER BY p.doc_id""".stripMargin,
-
-    // m38: connected components on the m36-binarized raster — min-label
-    // propagation to the provable 63-round 8×8 bound (OtsuCtes is the
-    // ONE threshold definition shared with m36)
-    "m38_cc_label" -> ccLabelSql(rounds = 63),
-
-    // m39: histogram entropy — the Theil algebra on pixels
-    "m39_hist_entropy" -> histEntropySql,
-
-    "m31_hist_equalize" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
-        |        ord(text[CAST(i AS INT)]) AS v
-        |      FROM d, UNNEST(range(1, 65)) t(i)),
-        |cnt AS (SELECT doc_id, v, CAST(count(*) AS BIGINT) AS c
-        |        FROM v GROUP BY 1, 2),
-        |cdf AS (SELECT doc_id, v,
-        |          sum(c) OVER (PARTITION BY doc_id ORDER BY v) AS cdf
-        |        FROM cnt),
-        |st AS (SELECT doc_id, min(v) AS lo_in, max(v) AS hi_in
-        |       FROM v GROUP BY 1),
-        |mn AS (SELECT c.doc_id, c.cdf AS cdf_min
-        |       FROM cdf c JOIN st ON c.doc_id = st.doc_id AND c.v = st.lo_in),
-        |mp AS (SELECT cdf.doc_id, v,
-        |         CASE WHEN 64 = cdf_min THEN 0
-        |              ELSE CAST((cdf - cdf_min) * 255 // (64 - cdf_min) AS INT)
-        |         END AS ov
-        |       FROM cdf JOIN mn USING (doc_id)),
-        |o AS (SELECT v.doc_id, idx, ov FROM v JOIN mp USING (doc_id, v)),
-        |f AS (SELECT doc_id,
-        |        list_reduce([CAST(0 AS BIGINT)] ||
-        |          list(CAST(ov AS BIGINT) ORDER BY idx),
-        |          (acc, x) -> (acc * 31 + x) % 1000000007) AS eq_checksum,
-        |        CAST(min(ov) AS INT) AS lo_out,
-        |        CAST(max(ov) AS INT) AS hi_out
-        |      FROM o GROUP BY 1)
-        |SELECT st.doc_id, CAST(8 AS INT) AS width, CAST(8 AS INT) AS height,
-        |  CAST(lo_in AS INT) AS lo_in, CAST(hi_in AS INT) AS hi_in,
-        |  lo_out, hi_out, eq_checksum
-        |FROM st JOIN f USING (doc_id) ORDER BY st.doc_id""".stripMargin,
-
-    // m30: leading/trailing silence trim over REAL decoded PCM — the
-    // oracle rebuilds the quiet-wrapped sample stream (quiet zones
-    // from doc_id arithmetic, body from ord()) and replays the
-    // first-loud/last-loud rule + the kept-region rolling fold
-    "m30_silence_trim" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (
-        |  SELECT doc_id, CAST(i AS INT) AS idx,
-        |    CAST(((doc_id + i) % 5) - 2 AS INT) AS s
-        |  FROM d, UNNEST(range(0, doc_id % 7)) t(i)
-        |  UNION ALL
-        |  SELECT doc_id, CAST(doc_id % 7 + i - 1 AS INT),
-        |    CAST((ord(text[CAST(i AS INT)]) - 96) * 128 AS INT)
-        |  FROM d, UNNEST(range(1, 65)) t(i)
-        |  UNION ALL
-        |  SELECT doc_id, CAST(doc_id % 7 + 64 + i AS INT),
-        |    CAST(((doc_id + i) % 5) - 2 AS INT)
-        |  FROM d, UNNEST(range(0, (doc_id // 7) % 5)) t(i)
-        |),
-        |a AS (
-        |  SELECT doc_id, CAST(count(*) AS INT) AS n,
-        |    min(CASE WHEN abs(s) >= 256 THEN idx END) AS fl,
-        |    max(CASE WHEN abs(s) >= 256 THEN idx END) AS ll
-        |  FROM v GROUP BY 1
-        |),
-        |c AS (
-        |  SELECT v.doc_id,
-        |    list_reduce([CAST(0 AS BIGINT)] ||
-        |      list(CAST(s + 32768 AS BIGINT) ORDER BY idx),
-        |      (acc, x) -> (acc * 31 + x) % 1000000007) AS kept_checksum
-        |  FROM v JOIN a USING (doc_id)
-        |  WHERE idx >= fl AND idx <= ll GROUP BY 1
-        |)
-        |SELECT a.doc_id, n AS n_samples,
-        |  CAST(CASE WHEN fl IS NULL THEN n ELSE fl END AS INT) AS lead_trim,
-        |  CAST(CASE WHEN fl IS NULL THEN 0 ELSE n - 1 - ll END AS INT) AS tail_trim,
-        |  CAST(CASE WHEN fl IS NULL THEN 0 ELSE ll - fl + 1 END AS INT) AS kept_n,
-        |  CAST(COALESCE(c.kept_checksum, 0) AS BIGINT) AS kept_checksum
-        |FROM a LEFT JOIN c USING (doc_id) ORDER BY a.doc_id""".stripMargin,
-
-    // m08: the 15-bit frame-energy-gradient audio fingerprint — 16
-    // frames of 4 samples, exact integer energies Σ|s|, bit f set iff
-    // e(f) < e(f+1); the oracle assembles the same bits from ord()
-    // arithmetic
-    "m08_audio_fingerprint" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) - 1 AS idx,
-        |        (ord(text[CAST(i AS INT)]) - 96) * 128 AS s
-        |      FROM d, UNNEST(range(1, 65)) AS t(i)),
-        |e AS (SELECT doc_id, idx // 4 AS f, sum(abs(s)) AS en
-        |      FROM v GROUP BY 1, 2),
-        |fp AS (SELECT a.doc_id,
-        |    CAST(sum(CASE WHEN a.en < b.en THEN (1 << a.f) ELSE 0 END) AS BIGINT) AS ehash
-        |  FROM e a JOIN e b ON a.doc_id = b.doc_id AND b.f = a.f + 1
-        |  GROUP BY a.doc_id)
-        |SELECT doc_id, ehash FROM fp ORDER BY doc_id""".stripMargin,
-
-    // m09: banded-hamming near-dup over m08's fingerprints — three
-    // 5-bit bands (pigeonhole-exact for hamming <= 2), candidates from
-    // band equality, exact popcount filter, UNION dedupes pairs caught
-    // by more than one band
-    "m09_audio_neardup" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
-        |v AS (SELECT doc_id, CAST(i AS INT) - 1 AS idx,
-        |        (ord(text[CAST(i AS INT)]) - 96) * 128 AS s
-        |      FROM d, UNNEST(range(1, 65)) AS t(i)),
-        |e AS (SELECT doc_id, idx // 4 AS f, sum(abs(s)) AS en
-        |      FROM v GROUP BY 1, 2),
-        |fp AS (SELECT a.doc_id,
-        |    CAST(sum(CASE WHEN a.en < b.en THEN (1 << a.f) ELSE 0 END) AS BIGINT) AS ehash
-        |  FROM e a JOIN e b ON a.doc_id = b.doc_id AND b.f = a.f + 1
-        |  GROUP BY a.doc_id),
-        |bkt AS (SELECT doc_id, ehash, ehash % 32 AS b0,
-        |        (ehash // 32) % 32 AS b1, (ehash // 1024) % 32 AS b2 FROM fp)
-        |SELECT a, b, hamming FROM (
-        |  SELECT x.doc_id AS a, y.doc_id AS b,
-        |    CAST(bit_count(xor(x.ehash, y.ehash)) AS INT) AS hamming
-        |  FROM bkt x JOIN bkt y ON x.b0 = y.b0 AND x.doc_id < y.doc_id
-        |  WHERE bit_count(xor(x.ehash, y.ehash)) <= 2
-        |  UNION
-        |  SELECT x.doc_id AS a, y.doc_id AS b,
-        |    CAST(bit_count(xor(x.ehash, y.ehash)) AS INT) AS hamming
-        |  FROM bkt x JOIN bkt y ON x.b1 = y.b1 AND x.doc_id < y.doc_id
-        |  WHERE bit_count(xor(x.ehash, y.ehash)) <= 2
-        |  UNION
-        |  SELECT x.doc_id AS a, y.doc_id AS b,
-        |    CAST(bit_count(xor(x.ehash, y.ehash)) AS INT) AS hamming
-        |  FROM bkt x JOIN bkt y ON x.b2 = y.b2 AND x.doc_id < y.doc_id
-        |  WHERE bit_count(xor(x.ehash, y.ehash)) <= 2
-        |) u ORDER BY a, b""".stripMargin,
-
-    // m10: REAL nearest-neighbor resize under the gate — the Spark
-    // side decodes each document's 8x8 PGM and resizes DOWN to 4x4
-    // (decimation: output (y,x) samples source (2y,2x)) and UP to
-    // 16x16 (replication: output (y,x) samples source (y//2,x//2)),
-    // checksumming each resized array; the oracle replays the index
-    // arithmetic with ord() on the text prefix, never touching a
-    // binary payload. Output index i maps row-major: down src =
-    // ((i//4)*2)*8 + (i%4)*2, up src = ((i//16)//2)*8 + (i%16)//2.
-    "m10_resize_gate" ->
-      """SELECT doc_id,
-        |  4 AS down_w, 4 AS down_h,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(range(0, 16), i ->
-        |      CAST(ord(text[CAST(((i // 4) * 2) * 8 + (i % 4) * 2 + 1 AS INT)]) AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS down_checksum,
-        |  16 AS up_w, 16 AS up_h,
-        |  list_reduce([CAST(0 AS BIGINT)] ||
-        |    list_transform(range(0, 256), i ->
-        |      CAST(ord(text[CAST(((i // 16) // 2) * 8 + (i % 16) // 2 + 1 AS INT)]) AS BIGINT)),
-        |    (acc, x) -> (acc * 31 + x) % 1000000007) AS up_checksum
-        |FROM documents WHERE length(text) >= 64 ORDER BY doc_id""".stripMargin,
-
-    "p01_hash_sample" ->
-      s"""WITH $HexBucketCte
-         |SELECT doc_id, lang, hb % 100 AS bucket
-         |FROM b WHERE hb % 100 < 20 ORDER BY doc_id""".stripMargin,
-
-    // p07: concat-and-wrap packing per content-hash shard — exclusive
-    // integer prefix sum in doc_id order, chunking via // (floor
-    // division; CAST(double AS INT) would ROUND). Window sum returns
-    // HUGEINT in DuckDB — cast back to BIGINT for schema parity.
-    "p07_pack_sequences" ->
-      s"""WITH $HexBucketCte,
-         |t AS (SELECT doc_id, CAST(hb % 8 AS INT) AS shard,
-         |        CAST(len($Toks) AS BIGINT) AS n_tokens
-         |      FROM b),
-         |g AS (SELECT doc_id, shard, n_tokens,
-         |        CAST(COALESCE(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS g_start
-         |      FROM t WHERE n_tokens > 0)
-         |SELECT shard, doc_id, n_tokens, g_start,
-         |  CAST(g_start // 256 AS BIGINT) AS seq_id,
-         |  CAST(g_start % 256 AS BIGINT) AS seq_off,
-         |  CAST((g_start + n_tokens - 1) // 256 - g_start // 256 + 1 AS BIGINT) AS n_seqs
-         |FROM g ORDER BY shard, doc_id""".stripMargin,
-
-    // p08: the composed pipeline — d01 keepers ∩ t16 keeps, packed with
-    // the p07 machinery; every CTE is the already-green idiom of its
-    // stage
-    "p08_filtered_pack" ->
-      s"""WITH $HexBucketCte,
-         |dk AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-         |tkq AS (SELECT doc_id, lang, $Toks AS tk FROM documents),
-         |st AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len(tk) AS INT) AS n_tokens,
-         |    CAST(len(list_filter(tk, x -> x IN ('the','a','and','of','to','is','in'))) AS INT) AS n_stop,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS INT) AS tok_chars
-         |  FROM tkq
-         |),
-         |f AS (
-         |  SELECT doc_id, lang,
-         |    round(CAST(tok_chars AS DOUBLE) / n_tokens, 6) AS avg_tok_len,
-         |    round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stop_ratio,
-         |    round(least(1.0e0, CAST(n_tokens AS DOUBLE) / 100.0e0) *
-         |          (1.0e0 - CAST(n_stop AS DOUBLE) / n_tokens), 6) AS quality
-         |  FROM st WHERE n_tokens > 0
-         |),
-         |l AS (
-         |  SELECT doc_id,
-         |    4.0e0 * quality - 0.5e0 * stop_ratio + 0.25e0 * (avg_tok_len - 4.0e0) +
-         |    0.3e0 * (CASE WHEN lang = 'en' THEN 1.0e0 ELSE 0.0e0 END) - 1.0e0 AS logit
-         |  FROM f
-         |),
-         |qk AS (SELECT doc_id FROM l
-         |       WHERE round(logit / (1.0e0 + abs(logit)), 6) >= 0.25e0),
-         |sel AS (
-         |  SELECT b.doc_id, CAST(b.hb % 8 AS INT) AS shard,
-         |    CAST(len($Toks) AS BIGINT) AS n_tokens
-         |  FROM b JOIN dk ON b.doc_id = dk.doc_id
-         |         JOIN qk ON b.doc_id = qk.doc_id),
-         |g AS (SELECT doc_id, shard, n_tokens,
-         |        CAST(COALESCE(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS g_start
-         |      FROM sel WHERE n_tokens > 0)
-         |SELECT shard, doc_id, n_tokens, g_start,
-         |  CAST(g_start // 256 AS BIGINT) AS seq_id,
-         |  CAST(g_start % 256 AS BIGINT) AS seq_off,
-         |  CAST((g_start + n_tokens - 1) // 256 - g_start // 256 + 1 AS BIGINT) AS n_seqs
-         |FROM g ORDER BY shard, doc_id""".stripMargin,
-
-    "p02_stratified_sample" ->
-      """WITH r AS (
-        |  SELECT lang, doc_id,
-        |    CAST(row_number() OVER (PARTITION BY lang ORDER BY md5(text), doc_id) AS INT) AS rn
-        |  FROM documents
-        |)
-        |SELECT lang, rn, doc_id FROM r WHERE rn <= 30 ORDER BY lang, rn""".stripMargin,
-
-    "p03_token_budget" ->
-      s"""WITH $HexBucketCte,
-         |t AS (
-         |  SELECT doc_id, md5(text) AS hkey, CAST(hb % 8 AS INT) AS shard,
-         |    CAST(len($Toks) AS INT) AS n_tokens
-         |  FROM b
-         |),
-         |c AS (
-         |  SELECT shard, doc_id, n_tokens,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY hkey, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-         |  FROM t
-         |)
-         |SELECT shard, doc_id, n_tokens, cum_tokens FROM c
-         |WHERE cum_tokens <= 2000 ORDER BY shard, cum_tokens, doc_id""".stripMargin,
-
-    // dedup-then-pack composition: the p03 budget pack, but only over
-    // d06's canonical keepers (one survivor per near-dup cluster)
-    "p06_dedup_budget" ->
-      s"""WITH RECURSIVE $CanonCtes,
-         |keep AS (
-         |  SELECT d.doc_id, d.text FROM documents d
-         |  LEFT JOIN comp c ON d.doc_id = c.doc_id
-         |  WHERE coalesce(c.canonical_id, d.doc_id) = d.doc_id
-         |),
-         |${hexBucketCte("keep", "doc_id, text")},
-         |t AS (
-         |  SELECT doc_id, md5(text) AS hkey, CAST(hb % 8 AS INT) AS shard,
-         |    CAST(len($Toks) AS INT) AS n_tokens
-         |  FROM b
-         |),
-         |cum AS (
-         |  SELECT shard, doc_id, n_tokens,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY hkey, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-         |  FROM t
-         |)
-         |SELECT shard, doc_id, n_tokens, cum_tokens FROM cum
-         |WHERE cum_tokens <= 2000 ORDER BY shard, cum_tokens, doc_id""".stripMargin,
-
-    // p09: split decision hashes the CANONICAL CLUSTER id (md5 of its
-    // decimal string — identical bytes both engines), so near-dup
-    // cluster members land in one split together; comp is the shared
-    // d06 recursive-CTE closure
-    "p09_cluster_split" ->
-      s"""WITH RECURSIVE $CanonCtes,
-         |cmap AS (
-         |  SELECT d.doc_id, coalesce(c.canonical_id, d.doc_id) AS canonical_id
-         |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-         |)
-         |SELECT doc_id, canonical_id,
-         |  CAST(${hexIntSql("md5(CAST(canonical_id AS VARCHAR))", 4)} % 100 AS INT) AS bucket,
-         |  CASE WHEN ${hexIntSql("md5(CAST(canonical_id AS VARCHAR))", 4)} % 100 < 10 THEN 'test'
-         |       WHEN ${hexIntSql("md5(CAST(canonical_id AS VARCHAR))", 4)} % 100 < 20 THEN 'val'
-         |       ELSE 'train' END AS split
-         |FROM cmap ORDER BY doc_id""".stripMargin,
-
-    // p10: per-source quality-ranked cap — the t16 score chain verbatim,
-    // then rank within source by (score desc, doc_id)
-    "p10_source_cap" ->
-      s"""WITH base AS (SELECT doc_id, lang, $Toks AS tk FROM documents),
-         |st AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len(tk) AS INT) AS n_tokens,
-         |    CAST(len(list_filter(tk, x -> x IN ('the','a','and','of','to','is','in'))) AS INT) AS n_stop,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS INT) AS tok_chars
-         |  FROM base
-         |),
-         |f AS (
-         |  SELECT doc_id,
-         |    round(CAST(tok_chars AS DOUBLE) / n_tokens, 6) AS avg_tok_len,
-         |    round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stop_ratio,
-         |    round(least(1.0e0, CAST(n_tokens AS DOUBLE) / 100.0e0) *
-         |          (1.0e0 - CAST(n_stop AS DOUBLE) / n_tokens), 6) AS quality,
-         |    lang
-         |  FROM st WHERE n_tokens > 0
-         |),
-         |l AS (
-         |  SELECT doc_id,
-         |    4.0e0 * quality - 0.5e0 * stop_ratio + 0.25e0 * (avg_tok_len - 4.0e0) +
-         |    0.3e0 * (CASE WHEN lang = 'en' THEN 1.0e0 ELSE 0.0e0 END) - 1.0e0 AS logit
-         |  FROM f
-         |),
-         |sc AS (SELECT doc_id, round(logit / (1.0e0 + abs(logit)), 6) AS score FROM l),
-         |r AS (
-         |  SELECT d.source, sc.doc_id, sc.score,
-         |    row_number() OVER (PARTITION BY d.source
-         |                       ORDER BY sc.score DESC, sc.doc_id) AS rn
-         |  FROM sc JOIN documents d ON sc.doc_id = d.doc_id
-         |)
-         |SELECT source, CAST(rn AS INT) AS rn, doc_id, score
-         |FROM r WHERE rn <= 15 ORDER BY source, rn""".stripMargin,
-
-    // p11: seeded deterministic shuffle — one global hash order, the
-    // engine-side sharded-rank plan must reproduce it exactly
-    "p11_seeded_shuffle" ->
-      """SELECT doc_id,
-        |  CAST(row_number() OVER (
-        |    ORDER BY md5('epoch0:' || CAST(doc_id AS VARCHAR)), doc_id)
-        |    AS BIGINT) AS pos
-        |FROM documents ORDER BY pos""".stripMargin,
-
-    // weights from sqrt (IEEE-exact both engines), powered counts
-    // quantized to 1e-6-grid integers before the order-free sum
-    "p04_mixture_weights" ->
-      s"""WITH t AS (
-         |  SELECT source, CAST(sum(len($Toks)) AS BIGINT) AS tokens
-         |  FROM documents GROUP BY source
-         |),
-         |p AS (SELECT source, tokens,
-         |        CAST(round(sqrt(tokens) * 1e6, 0) AS BIGINT) AS pq FROM t),
-         |s AS (SELECT CAST(sum(pq) AS BIGINT) AS tot FROM p)
-         |SELECT source, tokens, round(pq / tot, 6) AS weight
-         |FROM p, s ORDER BY source""".stripMargin,
-
-    // p22: the data-constrained repetition plan — p04's pq grid, exact
-    // ppm weights, floor token allocation, floor-ppm epochs, >4-epoch
-    // cap flag
-    "p22_epoch_schedule" ->
-      s"""WITH t AS (
-         |  SELECT source, CAST(sum(len($Toks)) AS BIGINT) AS tokens
-         |  FROM documents GROUP BY source
-         |),
-         |p AS (SELECT source, tokens,
-         |        CAST(round(sqrt(tokens) * 1e6, 0) AS BIGINT) AS pq FROM t),
-         |s AS (SELECT CAST(sum(pq) AS BIGINT) AS tot FROM p)
-         |SELECT source, tokens, pq,
-         |  pq * 1000000 // tot AS weight_ppm,
-         |  100000 * pq // tot AS allocated,
-         |  (100000 * pq // tot) * 1000000 // tokens AS epochs_ppm,
-         |  (100000 * pq // tot) * 1000000 // tokens > 4000000 AS over_cap
-         |FROM p, s ORDER BY source""".stripMargin,
-
-    // p21: the composed pipeline — d01 keepers ∩ t16 keeps, per-source
-    // survivor counts/tokens, floor-ppm shares; left joins keep
-    // zero-survivor sources visible
-    "p21_clean_mixture" ->
-      s"""WITH k AS (SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-         |base AS (SELECT doc_id, lang, $Toks AS tk FROM documents),
-         |st AS (
-         |  SELECT doc_id, lang,
-         |    CAST(len(tk) AS INT) AS n_tokens,
-         |    CAST(len(list_filter(tk, x -> x IN ('the','a','and','of','to','is','in'))) AS INT) AS n_stop,
-         |    CAST(list_sum(list_transform(tk, x -> length(x))) AS INT) AS tok_chars
-         |  FROM base
-         |),
-         |f AS (
-         |  SELECT doc_id, lang,
-         |    round(CAST(tok_chars AS DOUBLE) / n_tokens, 6) AS avg_tok_len,
-         |    round(CAST(n_stop AS DOUBLE) / n_tokens, 6) AS stop_ratio,
-         |    round(least(1.0e0, CAST(n_tokens AS DOUBLE) / 100.0e0) *
-         |          (1.0e0 - CAST(n_stop AS DOUBLE) / n_tokens), 6) AS quality
-         |  FROM st WHERE n_tokens > 0
-         |),
-         |l AS (
-         |  SELECT doc_id,
-         |    4.0e0 * quality - 0.5e0 * stop_ratio + 0.25e0 * (avg_tok_len - 4.0e0) +
-         |    0.3e0 * (CASE WHEN lang = 'en' THEN 1.0e0 ELSE 0.0e0 END) - 1.0e0 AS logit
-         |  FROM f
-         |),
-         |q AS (SELECT doc_id FROM l
-         |      WHERE round(logit / (1.0e0 + abs(logit)), 6) >= 0.25e0),
-         |sv AS (SELECT d.source, CAST(len($Toks) AS BIGINT) AS n
-         |       FROM documents d JOIN k USING (doc_id) JOIN q USING (doc_id)),
-         |raw AS (SELECT source, CAST(count(*) AS BIGINT) AS n_raw
-         |        FROM documents GROUP BY 1),
-         |dd AS (SELECT d.source, CAST(count(*) AS BIGINT) AS n_dedup
-         |       FROM documents d JOIN k USING (doc_id) GROUP BY 1),
-         |fin AS (SELECT source, CAST(count(*) AS BIGINT) AS n_final,
-         |          CAST(sum(n) AS BIGINT) AS tokens_final
-         |        FROM sv GROUP BY 1),
-         |tot AS (SELECT CAST(sum(tokens_final) AS BIGINT) AS tot FROM fin)
-         |SELECT raw.source, n_raw,
-         |  CAST(COALESCE(n_dedup, 0) AS BIGINT) AS n_dedup,
-         |  CAST(COALESCE(n_final, 0) AS BIGINT) AS n_final,
-         |  CAST(COALESCE(tokens_final, 0) AS BIGINT) AS tokens_final,
-         |  CAST(COALESCE(tokens_final, 0) AS BIGINT) * 1000000 // tot AS share_ppm
-         |FROM raw LEFT JOIN dd USING (source) LEFT JOIN fin USING (source), tot
-         |ORDER BY raw.source""".stripMargin,
-
-    // mixture applied: integer budget arithmetic end-to-end (the
-    // 1e-6-grid weight recovered as an exact integer, budgets via
-    // integer division) so both engines pick the identical boundary doc
-    "p05_apply_mixture" ->
-      s"""WITH $HexBucketCte,
-         |t AS (
-         |  SELECT source, CAST(sum(len($Toks)) AS BIGINT) AS tokens
-         |  FROM documents GROUP BY source
-         |),
-         |p AS (SELECT source,
-         |        CAST(round(sqrt(tokens) * 1e6, 0) AS BIGINT) AS pq FROM t),
-         |s AS (SELECT CAST(sum(pq) AS BIGINT) AS tot FROM p),
-         |wgt AS (SELECT source,
-         |          CAST(round(round(pq / tot, 6) * 1e6, 0) AS BIGINT) AS wq
-         |        FROM p, s),
-         |bud AS (SELECT source,
-         |          CAST((wq * 40000) // (1000000 * 4) AS BIGINT) AS shard_budget
-         |        FROM wgt),
-         |d AS (
-         |  SELECT doc_id, source, md5(text) AS hkey, CAST(hb % 4 AS INT) AS shard,
-         |    CAST(len($Toks) AS INT) AS n_tokens
-         |  FROM b
-         |),
-         |c AS (
-         |  SELECT source, shard, doc_id, n_tokens,
-         |    CAST(sum(n_tokens) OVER (PARTITION BY source, shard ORDER BY hkey, doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-         |  FROM d
-         |)
-         |SELECT c.source, shard, doc_id, n_tokens, cum_tokens
-         |FROM c JOIN bud ON c.source = bud.source
-         |WHERE cum_tokens <= shard_budget
-         |ORDER BY c.source, shard, cum_tokens, doc_id""".stripMargin,
-
-    // —— OSM README workload over the committed converted fixture.
-    //    DuckDB has no WITH ORDINALITY: 1-based positions come from
-    //    UNNEST(range(...)) + list indexing. Map extraction yields a
-    //    LIST here — [1] unwraps to the scalar the Spark side reads. ——
-    "o01_reassemble_ways" ->
-      s"""WITH nodes AS (SELECT id AS node_id, lat, lon FROM $OsmP WHERE type = 'node'),
-         |wx AS (SELECT w.id AS way_id, i AS idx, w.nds[i].ref AS ref
-         |       FROM (SELECT id, nds FROM $OsmP WHERE type = 'way') w,
-         |            UNNEST(range(1, len(w.nds) + 1)) AS t(i))
-         |SELECT way_id, count(*) AS n_pts,
-         |  string_agg(CAST(n.lat AS VARCHAR) || ',' || CAST(n.lon AS VARCHAR), ';' ORDER BY idx) AS coord_path
-         |FROM wx JOIN nodes n ON wx.ref = n.node_id
-         |GROUP BY way_id ORDER BY way_id""".stripMargin,
-
-    // o26: the replication-maintained table — the Spark side RUNS the
-    // Structured Streaming pipeline (two .osc micro-batches, generation
-    // writes, pointer swings, retirement) and reads the live table
-    // back; the oracle replays the maintained-table semantics as one
-    // window over base ∪ the diffs' parsed rows (literal VALUES — the
-    // committed fixtures/osm/src/replication files' exact decode, see
-    // OsmOracle.replicationMaintained). Strictly increasing versions
-    // make the fold batch-order-free, so a single window is exact.
-    "o26_replication_table" ->
-      s"""WITH base AS (
-         |  SELECT type, id, version, visible, changeset, uid,
-         |    "user" AS usr,
-         |    CAST(lat AS VARCHAR) AS lat_s, CAST(lon AS VARCHAR) AS lon_s,
-         |    CAST(cardinality(tags) AS INT) AS n_tags,
-         |    CAST(len(nds) AS INT) AS n_nds,
-         |    "timestamp" AS ts, 0 AS src
-         |  FROM $OsmH),
-         |diff(type, id, version, visible, changeset, uid, usr, lat_s,
-         |     lon_s, n_tags, n_nds, ts, src) AS (VALUES
-         |  ('node', CAST(1 AS BIGINT), CAST(2 AS BIGINT), true,
-         |    CAST(901 AS BIGINT), CAST(42 AS BIGINT), 'repl',
-         |    '51.5000000', '-0.1000000', 2, 0,
-         |    TIMESTAMP '2024-01-01 00:00:00', 1),
-         |  ('node', CAST(9001 AS BIGINT), CAST(1 AS BIGINT), true,
-         |    CAST(901 AS BIGINT), CAST(42 AS BIGINT), 'repl',
-         |    '51.9010000', '-0.9010000', 1, 0,
-         |    TIMESTAMP '2024-01-01 00:00:01', 1),
-         |  ('node', CAST(5 AS BIGINT), CAST(2 AS BIGINT), false,
-         |    CAST(901 AS BIGINT), CAST(42 AS BIGINT), 'repl',
-         |    NULL, NULL, 0, 0, TIMESTAMP '2024-01-01 00:00:02', 1),
-         |  ('node', CAST(1 AS BIGINT), CAST(3 AS BIGINT), true,
-         |    CAST(902 AS BIGINT), CAST(42 AS BIGINT), 'repl',
-         |    '51.6000000', '-0.2000000', 1, 0,
-         |    TIMESTAMP '2024-01-02 00:00:00', 1),
-         |  ('way', CAST(10010 AS BIGINT), CAST(2 AS BIGINT), true,
-         |    CAST(902 AS BIGINT), CAST(42 AS BIGINT), 'repl',
-         |    NULL, NULL, 1, 2, TIMESTAMP '2024-01-02 00:00:01', 1),
-         |  ('node', CAST(9001 AS BIGINT), CAST(2 AS BIGINT), false,
-         |    CAST(902 AS BIGINT), CAST(42 AS BIGINT), 'repl',
-         |    NULL, NULL, 0, 0, TIMESTAMP '2024-01-02 00:00:02', 1)),
-         |u AS (SELECT * FROM base UNION ALL SELECT * FROM diff),
-         |r AS (SELECT *, row_number() OVER (PARTITION BY type, id
-         |    ORDER BY version DESC, ts DESC, src DESC) AS rn FROM u)
-         |SELECT type, id, version, visible, changeset, uid, usr, lat_s,
-         |  lon_s, n_tags, n_nds
-         |FROM r WHERE rn = 1 ORDER BY type, id""".stripMargin,
-
-    // o27: multipolygon ring assembly — label + walk rounds generated
-    // to mirror OsmQueries.multipolygonRings exactly (see
-    // multipolygonSql); parameters are part of the gate
-    "o27_multipolygon_rings" -> multipolygonSql(labelRounds = 6,
-      walkRounds = 8),
-
-    "o02_latest_versions" ->
-      s"""WITH h AS (SELECT * FROM $OsmH),
-         |latest AS (SELECT type, id, max(version) AS version FROM h GROUP BY type, id)
-         |SELECT h.type, h.id, h.version, h.visible, h.changeset, h.uid, h."user" AS usr
-         |FROM h JOIN latest USING (type, id, version) ORDER BY h.type, h.id""".stripMargin,
-
-    "o03_deleted_count" ->
-      s"""WITH h AS (SELECT * FROM $OsmH),
-         |latest AS (SELECT type, id, max(version) AS version FROM h GROUP BY type, id)
-         |SELECT h.type, count(*) AS n_deleted
-         |FROM h JOIN latest USING (type, id, version)
-         |WHERE NOT h.visible GROUP BY h.type ORDER BY h.type""".stripMargin,
-
-    "o04_tag_usage_month" ->
-      s"""SELECT CAST(date_trunc('month', "timestamp") AS DATE) AS month, count(*) AS n
-         |FROM $OsmH WHERE tags['amenity'][1] IS NOT NULL
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "o05_bbox_nodes" ->
-      s"""SELECT id, CAST(lat AS VARCHAR) AS lat, CAST(lon AS VARCHAR) AS lon
-         |FROM $OsmP WHERE type = 'node'
-         |AND lon BETWEEN -0.25e0 AND -0.05e0 AND lat BETWEEN 51.05e0 AND 51.25e0
-         |ORDER BY id""".stripMargin,
-
-    "o06_editor_counts" ->
-      s"""SELECT tags['created_by'][1] AS editor, count(id) AS n FROM $OsmC
-         |WHERE tags['created_by'][1] LIKE 'JOSM%' GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "o07_changesets_bbox" ->
-      s"""SELECT id, num_changes FROM $OsmC
-         |WHERE min_lon <= -124.02e0 AND max_lon >= -124.18e0
-         |  AND min_lat <= 41.3e0 AND max_lat >= 41.05e0
-         |ORDER BY id""".stripMargin,
-
-    "o08_tag_transitions" ->
-      s"""WITH v AS (SELECT type, id, version, tags['amenity'][1] AS value FROM $OsmH),
-         |lagged AS (SELECT type, id, version, value,
-         |  lag(value, 1) OVER (PARTITION BY type, id ORDER BY version) AS prev_value FROM v)
-         |SELECT type, id, version, value, prev_value FROM lagged
-         |WHERE value IS NOT NULL AND (prev_value IS NULL OR prev_value <> value)
-         |ORDER BY type, id, version""".stripMargin,
-
-    "o09_all_geometries" ->
-      s"""WITH nodes AS (SELECT id AS node_id, lat, lon FROM $OsmP WHERE type = 'node'),
-         |wx AS (SELECT w.id AS way_id, i AS idx, w.nds[i].ref AS ref
-         |       FROM (SELECT id, nds FROM $OsmP WHERE type = 'way') w,
-         |            UNNEST(range(1, len(w.nds) + 1)) AS t(i)),
-         |ways AS (SELECT way_id AS id, 'way' AS type, count(*) AS n_pts,
-         |  string_agg(CAST(n.lat AS VARCHAR) || ',' || CAST(n.lon AS VARCHAR), ';' ORDER BY idx) AS coord_path
-         |  FROM wx JOIN nodes n ON wx.ref = n.node_id GROUP BY way_id),
-         |pts AS (SELECT id, 'node' AS type, CAST(1 AS BIGINT) AS n_pts,
-         |  CAST(lat AS VARCHAR) || ',' || CAST(lon AS VARCHAR) AS coord_path
-         |  FROM $OsmP WHERE type = 'node')
-         |SELECT * FROM pts UNION ALL SELECT * FROM ways ORDER BY type, id""".stripMargin,
-
-    "o10_commented_changesets" ->
-      s"""SELECT id, tags['comment'][1] AS comment, "user" AS usr, num_changes
-         |FROM $OsmC WHERE tags['comment'][1] IS NOT NULL ORDER BY id""".stripMargin,
-
-    // o11: the Spark side parses the discussion ARRAY from the fixture
-    // XML; the oracle recomputes every projected value from the
-    // parquet's scalar columns (the generator's (id, j) arithmetic) —
-    // count parity + first-comment attr/text parity.
-    "o11_discussion_comments" ->
-      s"""SELECT id, comments_count AS n_comments,
-         |  CAST((id + 1) % 7 AS BIGINT) AS first_uid,
-         |  'c1 on ' || id AS first_text
-         |FROM $OsmC WHERE comments_count > 0 ORDER BY id""".stripMargin,
-
-    // o12/o13: the Spark side converts the committed .osm.pbf LIVE via
-    // the DSv2 PBF source; the oracle reads the XML-converted parquet.
-    // Hash-green == PBF decode and XML decode agree row-for-row.
-    "o12_pbf_latest_versions" ->
-      s"""WITH h AS (SELECT * FROM $OsmH),
-         |latest AS (SELECT type, id, max(version) AS version FROM h GROUP BY type, id)
-         |SELECT h.type, h.id, h.version, h.visible, h.changeset, h.uid, h."user" AS usr
-         |FROM h JOIN latest USING (type, id, version) ORDER BY h.type, h.id""".stripMargin,
-
-    "o13_pbf_bbox_nodes" ->
-      s"""SELECT id, CAST(lat AS VARCHAR) AS lat, CAST(lon AS VARCHAR) AS lon
-         |FROM $OsmP WHERE type = 'node'
-         |AND lon BETWEEN -0.25e0 AND -0.05e0 AND lat BETWEEN 51.05e0 AND 51.25e0
-         |ORDER BY id""".stripMargin,
-
-    // o14: tags + timestamp decode parity for the PBF path (o04's SQL
-    // over the XML-converted parquet)
-    "o14_pbf_tag_usage" ->
-      s"""SELECT CAST(date_trunc('month', "timestamp") AS DATE) AS month, count(*) AS n
-         |FROM $OsmH WHERE tags['amenity'][1] IS NOT NULL
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // o15: the Spark side runs a bounded iterative-fixpoint driver
-    // loop; the oracle is a genuine recursive CTE over the same member
-    // edges, depth-capped identically — hash-green proves the two
-    // recursion styles compute the same closure (min depth per
-    // multi-path member included).
-    "o15_super_relations" ->
-      s"""WITH RECURSIVE
-         |edges AS (
-         |  SELECT r.id AS rel_id, r.members[i].type AS member_type, r.members[i].ref AS ref
-         |  FROM (SELECT id, members FROM $OsmP WHERE type = 'relation') r,
-         |       UNNEST(range(1, len(r.members) + 1)) AS t(i)),
-         |expand AS (
-         |  SELECT rel_id AS root_id, member_type, ref, 1 AS depth FROM edges
-         |  UNION ALL
-         |  SELECT x.root_id, e.member_type, e.ref, x.depth + 1
-         |  FROM expand x JOIN edges e ON x.ref = e.rel_id
-         |  WHERE x.member_type = 'relation' AND x.depth < 5)
-         |SELECT root_id, member_type, ref, min(depth) AS depth
-         |FROM expand GROUP BY root_id, member_type, ref
-         |ORDER BY root_id, member_type, ref""".stripMargin,
-
-    // o16: every column bigint via exact ×10^7 nanodegree scaling of
-    // the scale-7 decimals — integer-exact geometry, no float
-    // canonicalization caveat anywhere.
-    "o16_way_geom" ->
-      s"""WITH nodes AS (SELECT id AS node_id,
-         |    CAST(lat * 10000000 AS BIGINT) AS lat_nano,
-         |    CAST(lon * 10000000 AS BIGINT) AS lon_nano
-         |  FROM $OsmP WHERE type = 'node'),
-         |wx AS (SELECT w.id AS way_id, i AS idx, w.nds[i].ref AS ref
-         |       FROM (SELECT id, nds FROM $OsmP WHERE type = 'way') w,
-         |            UNNEST(range(1, len(w.nds) + 1)) AS t(i)),
-         |seg AS (SELECT way_id, lat_nano, lon_nano,
-         |    lag(lat_nano) OVER (PARTITION BY way_id ORDER BY idx) AS plat,
-         |    lag(lon_nano) OVER (PARTITION BY way_id ORDER BY idx) AS plon
-         |  FROM wx JOIN nodes n ON wx.ref = n.node_id)
-         |SELECT way_id, count(*) AS n_pts,
-         |  min(lat_nano) AS min_lat_nano, max(lat_nano) AS max_lat_nano,
-         |  min(lon_nano) AS min_lon_nano, max(lon_nano) AS max_lon_nano,
-         |  CAST(sum(abs(lat_nano - plat) + abs(lon_nano - plon)) AS BIGINT) AS manhattan_nano
-         |FROM seg GROUP BY way_id ORDER BY way_id""".stripMargin,
-
-    // o21: closed-ring shoelace in exact integer nanodegrees², the
-    // coordinates anchored at the ring's first vertex (translation-
-    // invariant exactly; keeps every cross product inside int64)
-    // o22: exact floor-nanodegree centroids — HUGEINT-internal sums
-    // (partial sums overflow int64 on degree-wide rings), sign-folded
-    // numerator + positive shift so // is floor on both engines
-    "o22_polygon_centroids" ->
-      s"""WITH nodes AS (SELECT id AS node_id,
-         |    CAST(lat * 10000000 AS BIGINT) AS lat_nano,
-         |    CAST(lon * 10000000 AS BIGINT) AS lon_nano
-         |  FROM $OsmP WHERE type = 'node'),
-         |wx AS (SELECT w.id AS way_id, i AS idx, w.nds[i].ref AS ref
-         |       FROM (SELECT id, nds FROM $OsmP WHERE type = 'way') w,
-         |            UNNEST(range(1, len(w.nds) + 1)) AS t(i)),
-         |cw AS (SELECT way_id FROM (
-         |    SELECT way_id, max(idx) AS n,
-         |      max(CASE WHEN idx = 1 THEN ref END) AS fr,
-         |      arg_max(ref, idx) AS lr
-         |    FROM wx GROUP BY 1) t WHERE n >= 4 AND fr = lr),
-         |c AS (SELECT wx.way_id, idx,
-         |    first_value(lon_nano) OVER pw AS ax,
-         |    first_value(lat_nano) OVER pw AS ay,
-         |    lon_nano - first_value(lon_nano) OVER pw AS cx,
-         |    lat_nano - first_value(lat_nano) OVER pw AS cy
-         |  FROM wx JOIN cw USING (way_id) JOIN nodes n ON wx.ref = n.node_id
-         |  WINDOW pw AS (PARTITION BY wx.way_id ORDER BY idx)),
-         |cr AS (SELECT way_id, ax, ay, cx, cy,
-         |    lag(cx) OVER pw AS pcx, lag(cy) OVER pw AS pcy
-         |  FROM c WINDOW pw AS (PARTITION BY way_id ORDER BY idx)),
-         |agg AS (SELECT way_id, CAST(count(*) AS BIGINT) AS n_pts,
-         |    max(ax) AS ax, max(ay) AS ay,
-         |    CAST(sum(pcx * cy - cx * pcy) AS HUGEINT) AS area2d,
-         |    sum(CAST(pcx + cx AS HUGEINT) * (pcx * cy - cx * pcy)) AS cxn,
-         |    sum(CAST(pcy + cy AS HUGEINT) * (pcx * cy - cx * pcy)) AS cyn
-         |  FROM cr GROUP BY way_id),
-         |f AS (SELECT way_id, n_pts, ax, ay,
-         |    CAST(area2d AS BIGINT) AS area2,
-         |    (CASE WHEN area2d < 0 THEN -cxn ELSE cxn END
-         |      + CAST(2000000000 AS HUGEINT) * (3 * abs(area2d)))
-         |      // (3 * abs(area2d)) - 2000000000 AS offx,
-         |    (CASE WHEN area2d < 0 THEN -cyn ELSE cyn END
-         |      + CAST(2000000000 AS HUGEINT) * (3 * abs(area2d)))
-         |      // (3 * abs(area2d)) - 2000000000 AS offy
-         |  FROM agg WHERE area2d <> 0)
-         |SELECT way_id, n_pts, area2,
-         |  CAST(ax + offx AS BIGINT) AS cen_lon_nano,
-         |  CAST(ay + offy AS BIGINT) AS cen_lat_nano
-         |FROM f ORDER BY way_id""".stripMargin,
-
-    "o21_polygon_areas" ->
-      s"""WITH nodes AS (SELECT id AS node_id,
-         |    CAST(lat * 10000000 AS BIGINT) AS lat_nano,
-         |    CAST(lon * 10000000 AS BIGINT) AS lon_nano
-         |  FROM $OsmP WHERE type = 'node'),
-         |wx AS (SELECT w.id AS way_id, i AS idx, w.nds[i].ref AS ref
-         |       FROM (SELECT id, nds FROM $OsmP WHERE type = 'way') w,
-         |            UNNEST(range(1, len(w.nds) + 1)) AS t(i)),
-         |cw AS (SELECT way_id FROM (
-         |    SELECT way_id, max(idx) AS n,
-         |      max(CASE WHEN idx = 1 THEN ref END) AS fr,
-         |      arg_max(ref, idx) AS lr
-         |    FROM wx GROUP BY 1) t WHERE n >= 4 AND fr = lr),
-         |c AS (SELECT wx.way_id, idx,
-         |    lon_nano - first_value(lon_nano)
-         |      OVER (PARTITION BY wx.way_id ORDER BY idx) AS cx,
-         |    lat_nano - first_value(lat_nano)
-         |      OVER (PARTITION BY wx.way_id ORDER BY idx) AS cy
-         |  FROM wx JOIN cw USING (way_id) JOIN nodes n ON wx.ref = n.node_id),
-         |cr AS (SELECT way_id, cx, cy,
-         |    lag(cx) OVER (PARTITION BY way_id ORDER BY idx) AS pcx,
-         |    lag(cy) OVER (PARTITION BY way_id ORDER BY idx) AS pcy
-         |  FROM c)
-         |SELECT way_id, CAST(count(*) AS BIGINT) AS n_pts,
-         |  CAST(abs(sum(pcx * cy - cx * pcy)) AS BIGINT) AS area2_nano,
-         |  CASE WHEN sum(pcx * cy - cx * pcy) > 0 THEN 'CCW'
-         |       WHEN sum(pcx * cy - cx * pcy) < 0 THEN 'CW'
-         |       ELSE 'degenerate' END AS orientation
-         |FROM cr GROUP BY way_id ORDER BY way_id""".stripMargin,
-
-    // o17: the Spark side reassembles ways from the LIVE PBF-converted
-    // snapshot; the oracle is o01's SQL over the XML-converted parquet.
-    // Hash-green proves the PBF Way refs delta decode yields the same
-    // ORDERED nd lists as the XML path (coord_path is order-sensitive).
-    "o17_pbf_reassemble" ->
-      s"""WITH nodes AS (SELECT id AS node_id, lat, lon FROM $OsmP WHERE type = 'node'),
-         |wx AS (SELECT w.id AS way_id, i AS idx, w.nds[i].ref AS ref
-         |       FROM (SELECT id, nds FROM $OsmP WHERE type = 'way') w,
-         |            UNNEST(range(1, len(w.nds) + 1)) AS t(i))
-         |SELECT way_id, count(*) AS n_pts,
-         |  string_agg(CAST(n.lat AS VARCHAR) || ',' || CAST(n.lon AS VARCHAR), ';' ORDER BY idx) AS coord_path
-         |FROM wx JOIN nodes n ON wx.ref = n.node_id
-         |GROUP BY way_id ORDER BY way_id""".stripMargin,
-
-    // o18: flat relation-member projection WITH ORDINALITY from the
-    // PBF-converted snapshot vs the XML-converted parquet — gates the
-    // PBF memids delta / roles_sid string-table / member-type enum
-    // decode including member ORDER and role strings.
-    "o18_pbf_members" ->
-      s"""SELECT r.id AS rel_id, CAST(i AS INT) AS idx,
-         |  r.members[i].type AS member_type, r.members[i].ref AS ref,
-         |  r.members[i].role AS role
-         |FROM (SELECT id, members FROM $OsmP WHERE type = 'relation') r,
-         |     UNNEST(range(1, len(r.members) + 1)) AS t(i)
-         |ORDER BY rel_id, idx""".stripMargin,
-
-    // o19: the custom codegen'd zorder(lat, lon) expression under the
-    // gate — the oracle regenerates the 21-bit scale (same IEEE
-    // divide/multiply then trunc-toward-zero) and the Morton
-    // interleave as explicit per-bit integer arithmetic
-    "o19_zorder_nodes" ->
-      s"""WITH n AS (
-         |  SELECT id, version, CAST(lat AS DOUBLE) AS lat, CAST(lon AS DOUBLE) AS lon
-         |  FROM $OsmP WHERE type = 'node' AND lat IS NOT NULL AND lon IS NOT NULL),
-         |s AS (SELECT id, version,
-         |        ${zScaleSql("lon", "-180.0e0", "360.0e0")} AS lons,
-         |        ${zScaleSql("lat", "-90.0e0", "180.0e0")} AS lats
-         |      FROM n),
-         |z AS (SELECT id, version,
-         |        (${zSpreadSql("lons")}) + 2 * (${zSpreadSql("lats")}) AS zval
-         |      FROM s)
-         |SELECT id, version, zval, CAST(zval >> 50 AS INT) AS zcell
-         |FROM z ORDER BY id, version""".stripMargin,
-
-    // o23: the codegen'd hilbert(lat, lon) expression under the gate —
-    // the oracle replays the 16-bit scale and all sixteen
-    // quadrant-rotation rounds as generated CASE arithmetic (rx/ry
-    // pick the quadrant, d accumulates s² sub-squares, ry=0 rotates
-    // with an rx=1 reflection)
-    "o23_hilbert_nodes" ->
-      s"""WITH n AS (
-         |  SELECT id, version, CAST(lat AS DOUBLE) AS lat, CAST(lon AS DOUBLE) AS lon
-         |  FROM $OsmP WHERE type = 'node' AND lat IS NOT NULL AND lon IS NOT NULL),
-         |h0 AS (SELECT id, version,
-         |        ${hScaleSql("lon", "-180.0e0", "360.0e0")} AS x,
-         |        ${hScaleSql("lat", "-90.0e0", "180.0e0")} AS y,
-         |        CAST(0 AS BIGINT) AS d
-         |      FROM n),
-         |${hilbertRoundsSql()}
-         |SELECT id, version, d AS hval, CAST(d >> 24 AS INT) AS hcell
-         |FROM h16 ORDER BY id, version""".stripMargin,
-
-    // o25: the two converted sinks joined on the changeset FK —
-    // per-changeset element census, touched-node bbox (stringified
-    // decimals), num_changes delta, three-valued containment audit
-    "o25_changeset_impact" ->
-      s"""WITH t AS (
-         |  SELECT changeset,
-         |    CAST(sum(CASE WHEN type = 'node' THEN 1 ELSE 0 END) AS BIGINT) AS n_nodes,
-         |    CAST(sum(CASE WHEN type = 'way' THEN 1 ELSE 0 END) AS BIGINT) AS n_ways,
-         |    CAST(sum(CASE WHEN type = 'relation' THEN 1 ELSE 0 END) AS BIGINT) AS n_rels,
-         |    CAST(count(*) AS BIGINT) AS n_total,
-         |    min(CASE WHEN type = 'node' THEN lat END) AS nmin_lat,
-         |    max(CASE WHEN type = 'node' THEN lat END) AS nmax_lat,
-         |    min(CASE WHEN type = 'node' THEN lon END) AS nmin_lon,
-         |    max(CASE WHEN type = 'node' THEN lon END) AS nmax_lon
-         |  FROM $OsmP GROUP BY 1
-         |)
-         |SELECT c.id,
-         |  CAST(COALESCE(n_nodes, 0) AS BIGINT) AS n_nodes,
-         |  CAST(COALESCE(n_ways, 0) AS BIGINT) AS n_ways,
-         |  CAST(COALESCE(n_rels, 0) AS BIGINT) AS n_rels,
-         |  CAST(COALESCE(n_total, 0) AS BIGINT) AS n_total,
-         |  c.num_changes,
-         |  c.num_changes - CAST(COALESCE(n_total, 0) AS BIGINT) AS delta,
-         |  CAST(nmin_lat AS VARCHAR) AS node_min_lat,
-         |  CAST(nmax_lat AS VARCHAR) AS node_max_lat,
-         |  CAST(nmin_lon AS VARCHAR) AS node_min_lon,
-         |  CAST(nmax_lon AS VARCHAR) AS node_max_lon,
-         |  (nmin_lat >= c.min_lat AND nmax_lat <= c.max_lat AND
-         |   nmin_lon >= c.min_lon AND nmax_lon <= c.max_lon) AS in_bounds
-         |FROM $OsmC c LEFT JOIN t ON c.id = t.changeset
-         |ORDER BY c.id""".stripMargin,
-
-    // o24: both curves' cell footprints over the o20 bbox at equal
-    // 2048x2048 granularity — the oracle replays BOTH pipelines
-    // (Morton scale+spread+dense repack, Hilbert scale+16 rotation
-    // rounds) and the same shift/aggregate
-    "o24_curve_locality" ->
-      s"""WITH n AS (
-         |  SELECT id, version, CAST(lat AS DOUBLE) AS lat, CAST(lon AS DOUBLE) AS lon
-         |  FROM $OsmP WHERE type = 'node'
-         |  AND lon BETWEEN -0.25e0 AND -0.05e0 AND lat BETWEEN 51.05e0 AND 51.25e0),
-         |zs AS (SELECT id, version,
-         |        ${zScaleSql("lon", "-180.0e0", "360.0e0")} AS lons,
-         |        ${zScaleSql("lat", "-90.0e0", "180.0e0")} AS lats
-         |      FROM n),
-         |zv AS (SELECT id, version,
-         |        (${zSpreadSql("lons")}) + 2 * (${zSpreadSql("lats")}) AS z
-         |      FROM zs),
-         |zc AS (SELECT 'zorder' AS curve,
-         |        ${(0 until 11).map(b =>
-                    s"(((z >> ${30 + 3 * b}) & 1) << ${2 * b}) + (((z >> ${31 + 3 * b}) & 1) << ${2 * b + 1})")
-                    .mkString(" + ")} AS cell
-         |      FROM zv),
-         |h0 AS (SELECT id, version,
-         |        ${hScaleSql("lon", "-180.0e0", "360.0e0")} AS x,
-         |        ${hScaleSql("lat", "-90.0e0", "180.0e0")} AS y,
-         |        CAST(0 AS BIGINT) AS d
-         |      FROM n),
-         |${hilbertRoundsSql()},
-         |hc AS (SELECT 'hilbert' AS curve, d >> 10 AS cell FROM h16),
-         |u AS (SELECT * FROM zc UNION ALL SELECT * FROM hc)
-         |SELECT curve, CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(count(DISTINCT cell) AS BIGINT) AS n_cells,
-         |  CAST(min(cell) AS BIGINT) AS cell_min,
-         |  CAST(max(cell) AS BIGINT) AS cell_max,
-         |  CAST(max(cell) - min(cell) + 1 AS BIGINT) AS span
-         |FROM u GROUP BY 1 ORDER BY curve""".stripMargin,
-
-    // o20: the z-range-pruned bbox scan's LOSSLESSNESS gate — the
-    // oracle is the PLAIN o05 bbox filter with no z logic in the
-    // selection (zval recomputed per matched row only for the output
-    // column); a single true row dropped by Spark's z-range prefilter
-    // hash-mismatches
-    "o20_zrange_bbox" ->
-      s"""WITH n AS (
-         |  SELECT id, lat, lon, CAST(lat AS DOUBLE) AS latd, CAST(lon AS DOUBLE) AS lond
-         |  FROM $OsmP WHERE type = 'node'
-         |  AND lon BETWEEN -0.25e0 AND -0.05e0 AND lat BETWEEN 51.05e0 AND 51.25e0),
-         |s AS (SELECT id, lat, lon,
-         |        ${zScaleSql("lond", "-180.0e0", "360.0e0")} AS lons,
-         |        ${zScaleSql("latd", "-90.0e0", "180.0e0")} AS lats
-         |      FROM n)
-         |SELECT id, CAST(lat AS VARCHAR) AS lat, CAST(lon AS VARCHAR) AS lon,
-         |  (${zSpreadSql("lons")}) + 2 * (${zSpreadSql("lats")}) AS zval
-         |FROM s ORDER BY id""".stripMargin,
-  )
-
-  /** 21-bit coordinate scaling, the ZCurve.scale mirror: the identical
-    * IEEE sequence (subtract, divide, multiply by 2^21) then
-    * trunc-toward-zero (matching Scala's Double→Long) and the clamp.
-    */
-  private def zScaleSql(v: String, min: String, range: String): String =
-    s"greatest(0, least(2097151, CAST(trunc(((($v) - ($min)) / $range) * 2097152.0e0) AS BIGINT)))"
-
-  /** The ZCurve.spread mirror: every low bit b of `v` lands at 3b (the
-    * shipped spread uses the 3-D Morton masks — verified bit-for-bit
-    * against the Scala implementation in ZOrderSpec).
-    */
-  private def zSpreadSql(v: String): String =
-    (0 until 21).map(b => s"((($v >> $b) & 1) << ${3 * b})").mkString(" + ")
-
-  /** The RP-tree build/route rounds (s36/s37): level l projects with
-    * the planeDotQ weight family at offset base+l, splits each node at
-    * the value of its (n+1)//2-th smallest projection, and routes both
-    * the candidate set (c-chain) and the queries (q-chain) by the SAME
-    * thresholds. `pfx` namespaces the CTEs so the s37 forest can stack
-    * several trees in one query; the caller defines ${pfx}c0/${pfx}q0.
-    */
-  private def rpTreeCtesAt(pfx: String, base: Int, depth: Int): String =
-    (0 until depth).map { l =>
-      s"""${pfx}d$l AS (
-         |  SELECT vec_id,
-         |    CAST(sum(CAST(round(x * 1e6, 0) AS BIGINT) *
-         |      (((${17 * (base + l)} + 31 * (i - 1) + 5) % 7) - 3)) AS BIGINT) AS dt
-         |  FROM e GROUP BY 1
-         |),
-         |${pfx}rk$l AS (
-         |  SELECT c.vec_id, c.node, dt,
-         |    row_number() OVER (PARTITION BY c.node ORDER BY dt, c.vec_id) AS rn,
-         |    count(*) OVER (PARTITION BY c.node) AS nn
-         |  FROM ${pfx}c$l c JOIN ${pfx}d$l USING (vec_id)
-         |),
-         |${pfx}th$l AS (SELECT node, max(dt) AS t FROM ${pfx}rk$l
-         |         WHERE rn <= (nn + 1) // 2 GROUP BY 1),
-         |${pfx}c${l + 1} AS (
-         |  SELECT vec_id, node * 2 + CASE WHEN dt > t THEN 1 ELSE 0 END AS node
-         |  FROM ${pfx}rk$l JOIN ${pfx}th$l USING (node)
-         |),
-         |${pfx}q${l + 1} AS (
-         |  SELECT q.qid, q.node * 2 + CASE WHEN d.dt > t.t THEN 1 ELSE 0 END AS node
-         |  FROM ${pfx}q$l q JOIN ${pfx}d$l d ON q.qid = d.vec_id
-         |  JOIN ${pfx}th$l t ON q.node = t.node
-         |)""".stripMargin
-    }.mkString(",\n")
-
-  private def rpTreeCtes(depth: Int): String = rpTreeCtesAt("", 10, depth)
-
-  /** The s37 forest: `trees` rpTreeCtesAt chains (tree t at offset base
-    * 10 + depth*t — tree 0 is EXACTLY the s36 tree), leaf-matched
-    * per tree, unioned and deduped to (qid, cand, n_trees), then
-    * exact-cosine re-ranked.
-    */
-  private def rpForestCtes(trees: Int, depth: Int): String = {
-    val chains = (0 until trees).map { t =>
-      s"""t${t}c0 AS (SELECT DISTINCT vec_id, 0 AS node FROM e WHERE vec_id % 20 = 0),
-         |t${t}q0 AS (SELECT DISTINCT vec_id AS qid, 0 AS node FROM e WHERE vec_id < 8),
-         |${rpTreeCtesAt(s"t$t", 10 + depth * t, depth)}""".stripMargin
-    }.mkString(",\n")
-    val matches = (0 until trees).map { t =>
-      s"""  SELECT q.qid, c.vec_id AS cand
-         |  FROM t${t}q$depth q JOIN t${t}c$depth c ON c.node = q.node
-         |  WHERE c.vec_id <> q.qid""".stripMargin
-    }.mkString("\n  UNION ALL\n")
-    s"""$chains,
-       |pairs AS MATERIALIZED (
-       |  SELECT qid, cand, CAST(count(*) AS INT) AS n_trees FROM (
-       |$matches) u
-       |  GROUP BY 1, 2)""".stripMargin
-  }
-
-  /** 16-bit coordinate scaling, the HilbertCurve.scale mirror (same
-    * IEEE sequence as [[zScaleSql]], narrower grid).
-    */
-  private def hScaleSql(v: String, min: String, range: String): String =
-    s"greatest(0, least(65535, CAST(trunc(((($v) - ($min)) / $range) * 65536.0e0) AS BIGINT)))"
-
-  /** The HilbertCurve.xy2d loop unrolled: round k works at scale bit
-    * s = 2^(15-k); each round reads h_k's (x, y, d) and emits the
-    * rotated frame plus the quadrant's s² contribution — the exact
-    * transform order of the Scala walk (d from the CURRENT quadrant
-    * bits, then ry=0 rotate with the rx=1 reflection folded in).
-    */
-  private def hilbertRoundsSql(): String =
-    (0 until 16).map { k =>
-      val s = 1L << (15 - k)
-      s"""h${k + 1} AS (
-         |  SELECT id, version,
-         |    CASE WHEN (y & $s) > 0 THEN x
-         |         WHEN (x & $s) > 0 THEN 65535 - y ELSE y END AS x,
-         |    CASE WHEN (y & $s) > 0 THEN y
-         |         WHEN (x & $s) > 0 THEN 65535 - x ELSE x END AS y,
-         |    d + CAST(${s * s} AS BIGINT) *
-         |      (CASE WHEN (x & $s) > 0 AND (y & $s) > 0 THEN 2
-         |            WHEN (x & $s) > 0 THEN 3
-         |            WHEN (y & $s) > 0 THEN 1 ELSE 0 END) AS d
-         |  FROM h$k)""".stripMargin
-    }.mkString(",\n")
 }

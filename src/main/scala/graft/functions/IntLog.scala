@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 /** Exact fixed-point base-2 logarithm on the integer grid —
   * `log2Fixed(n) = floor-ish(2^F * log2(n))` computed with NOTHING but
   * integer compares, adds, and constant shifts, so a DuckDB oracle can
-  * replay it bit-for-bit (SparkEntry.ilogSqlChain stays in lockstep).
+  * replay it bit-for-bit (OracleSql.ilogChainSql stays in lockstep).
   * IEEE `ln()` is NOT cross-engine stable at the last ulp, and the
   * house gates are hash-exact, so transcendental functions are banned
   * from any gated value; this is the integer-exact substitute the

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Canonical tokenization / shingling used by every text operator.
   *
   * The exact same definition is mirrored in the DuckDB oracle SQL
-  * (see [[graft.SparkEntry.oracleSql]]): tokens are the non-empty
+  * (see graft.OracleSql.Toks): tokens are the non-empty
   * pieces of `lower(text)` split on runs of non-alphanumerics;
   * positions are 1-based; a k-shingle is k consecutive tokens joined
   * by a single space.

@@ -171,7 +171,7 @@ object Bpe {
 
   /** t22 gate entry: the learned merge table ITSELF, hash-gated
     * against a generated DuckDB iterative-CTE chain (the kmeansSql
-    * precedent — SparkEntry.bpeSql replays the identical algorithm
+    * precedent — TextQueries.bpeSql replays the identical algorithm
     * declaratively: per round a pair-count aggregate, the total-order
     * argmax (count desc, left, right), and a list_reduce leftmost-
     * non-overlapping rewrite). Hash-green proves the distributed

@@ -23,7 +23,6 @@ object Dedup {
 
   val Prime = 2147483647L // 2^31 - 1
   val NumHashes = 16
-  val BandRows = 4 // 4 bands x 4 rows
 
   /** Exact dedup: content-hash group-by — one shuffle on md5(text),
     * map-side partial aggregation; at 100 TB this is the cheapest
@@ -379,17 +378,6 @@ object Dedup {
     */
   private def sidLists(withIds: DataFrame): DataFrame =
     withIds.groupBy(col("doc_id")).agg(collect_list(col("sid")).as("sids"))
-
-  // h_i(s) = ((4097 + 7919*i) * s + 17 + 104729*i) mod P, P = 2^31-1 —
-  // must stay in lockstep with the DuckDB oracle (SparkEntry.HashCte).
-  // Interpreted HOF form — kept as the cross-check reference for the
-  // codegen'd graft.functions.MinHashSig used on the hot path
-  // (SigExpressionsSpec asserts bit-identity on real corpus data).
-  private[operators] val MinhashSigExpr =
-    """transform(sequence(0, 15), i ->
-      |  aggregate(sids, CAST(2147483647 AS BIGINT),
-      |    (m, s) -> least(m, ((4097 + 7919*i) * s + 17 + 104729*i) % 2147483647)))"""
-      .stripMargin
 
   private val BandExpr =
     """transform(sequence(0, 3), b ->
@@ -853,7 +841,6 @@ object Dedup {
     * -> 4 bands of 4 -> candidate pairs sharing any band signature.
     */
   def minHashLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
     val sh = graft.Caches.track(shingleSet(spark, sfDir, Some(10)))
     val withIds = sh.join(shingleDict(sh), "sh")
     bandPairs(spark, withIds)
@@ -952,6 +939,8 @@ object Dedup {
     * spec-asserted): min over a group commutes with min over a list.
     */
   private[operators] def signatures(withIds: DataFrame): DataFrame = {
+    // h_i(s) = ((4097 + 7919*i) * s + 17 + 104729*i) mod P, P = 2^31-1 —
+    // must stay in lockstep with the DuckDB oracle (DedupQueries.HashCte)
     val mins = (0 until NumHashes).map { i =>
       min(expr(s"((${4097L + 7919L * i} * sid + ${17L + 104729L * i}) % $Prime)"))
         .as(s"m$i")
@@ -1073,19 +1062,6 @@ object Dedup {
       .select($"doc_id",
         graft.functions.SigFunctions.simhashSig($"sids", bits).as("simhash"))
   }
-
-  /** per-bit +/-1 votes and the bit assembly fold in one expression over
-    * the sid list — must stay in lockstep with the DuckDB oracle.
-    * Interpreted HOF form — cross-check reference for the codegen'd
-    * graft.functions.SimHashSig used on the hot path.
-    */
-  private[operators] def simHashExpr(bits: Int): Column = expr(
-    s"""aggregate(sequence(0, ${bits - 1}), CAST(0 AS BIGINT), (acc, j) ->
-       |  acc + IF(
-       |    aggregate(sids, CAST(0 AS BIGINT), (v, s) ->
-       |      v + IF((((4097 + 7919*j) * s + 17 + 104729*j) % 2147483647) % 2 = 1,
-       |             CAST(1 AS BIGINT), CAST(-1 AS BIGINT))) > 0,
-       |    shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT)))""".stripMargin)
 
   /** SimHash fingerprints, scale form: shingle ids via xxhash64 — no
     * dictionary, no global sort; the only wide op is the signature
@@ -1745,7 +1721,6 @@ object Dedup {
     */
   def canonicalizeBest(spark: SparkSession, sfDir: String,
       jaccardThreshold: Double = 0.6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val clusters = clusterMap(spark, sfDir, jaccardThreshold)
     val quality = TextAnalysis.textStats(spark, sfDir)

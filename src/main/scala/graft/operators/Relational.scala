@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1813,6 +1813,26 @@ object Relational {
       .orderBy($"digit")
   }
 
+  /** The exact Pearson terms from the moment columns n, Σa (`sa`), Σb,
+    * Σab, Σa², Σb²: the DECIMAL(38) covariance numerator `num` and the
+    * variance terms `dx`, `dy`. [[PearsonResult]] turns them into the
+    * sign and the floored r² ppm; q64, s42 and the streaming monitor
+    * share both, and their oracles replay them.
+    */
+  def pearsonTerms(sa: String, sb: String, sab: String, saa: String,
+      sbb: String): Seq[Column] = Seq(
+    expr(s"CAST(n AS DECIMAL(38,0)) * $sab - CAST($sa AS DECIMAL(38,0)) * $sb").as("num"),
+    expr(s"CAST(n AS DECIMAL(38,0)) * $saa - CAST($sa AS DECIMAL(38,0)) * $sa").as("dx"),
+    expr(s"CAST(n AS DECIMAL(38,0)) * $sbb - CAST($sb AS DECIMAL(38,0)) * $sb").as("dy"))
+
+  /** r_sign and r2_ppm = ((num² div dx)·1e6) div dy from [[pearsonTerms]]. */
+  val PearsonResult: Seq[Column] = Seq(
+    expr("CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 " +
+      "ELSE 0 END AS INT)").as("r_sign"),
+    expr("CASE WHEN dx = 0 OR dy = 0 THEN CAST(NULL AS BIGINT) " +
+      "ELSE CAST(((num * num div dx) * 1000000) div dy AS BIGINT) " +
+      "END").as("r2_ppm"))
+
   /** Pairwise Pearson correlation audit (q64) — the profiling pass
     * between q39 (single-column stats) and a feature-engineering
     * pipeline: which per-user metrics move together? Per metric pair
@@ -1862,19 +1882,9 @@ object Relational {
     def pair(name: String, a: String, b: String): DataFrame = {
       val prod = Map(("x", "y") -> "sxy", ("x", "z") -> "sxz",
         ("y", "z") -> "syz")((a, b))
-      s.select(lit(name).as("pair"), $"n".as("n_users"),
-          expr(s"CAST(n AS DECIMAL(38,0)) * $prod - " +
-            s"CAST(s$a AS DECIMAL(38,0)) * s$b").as("num"),
-          expr(s"CAST(n AS DECIMAL(38,0)) * s$a$a - " +
-            s"CAST(s$a AS DECIMAL(38,0)) * s$a").as("dx"),
-          expr(s"CAST(n AS DECIMAL(38,0)) * s$b$b - " +
-            s"CAST(s$b AS DECIMAL(38,0)) * s$b").as("dy"))
-        .select($"pair", $"n_users",
-          expr("CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 " +
-            "ELSE 0 END AS INT)").as("r_sign"),
-          expr("CASE WHEN dx = 0 OR dy = 0 THEN CAST(NULL AS BIGINT) " +
-            "ELSE CAST(((num * num div dx) * 1000000) div dy AS BIGINT) " +
-            "END").as("r2_ppm"))
+      s.select(Seq(lit(name).as("pair"), $"n".as("n_users")) ++
+          pearsonTerms(s"s$a", s"s$b", prod, s"s$a$a", s"s$b$b"): _*)
+        .select(Seq($"pair", $"n_users") ++ PearsonResult: _*)
     }
     pair("cents_vs_events", "x", "y")
       .unionByName(pair("cents_vs_errors", "x", "z"))

@@ -1885,20 +1885,9 @@ object Similarity {
     ex.agg(count(lit(1)).as("n"), sum($"x").as("sx"), sum($"y").as("sy"),
         sum($"x" * $"y").as("sxy"), sum($"x" * $"x").as("sxx"),
         sum($"y" * $"y").as("syy"))
-      .select(
-        $"n".as("n_edges"),
-        expr("CAST(n AS DECIMAL(38,0)) * sxy - " +
-          "CAST(sx AS DECIMAL(38,0)) * sy").as("num"),
-        expr("CAST(n AS DECIMAL(38,0)) * sxx - " +
-          "CAST(sx AS DECIMAL(38,0)) * sx").as("dx"),
-        expr("CAST(n AS DECIMAL(38,0)) * syy - " +
-          "CAST(sy AS DECIMAL(38,0)) * sy").as("dy"))
-      .select($"n_edges",
-        expr("CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 " +
-          "ELSE 0 END AS INT)").as("r_sign"),
-        expr("CASE WHEN dx = 0 OR dy = 0 THEN CAST(NULL AS BIGINT) " +
-          "ELSE CAST(((num * num div dx) * 1000000) div dy AS BIGINT) " +
-          "END").as("r2_ppm"))
+      .select($"n".as("n_edges") +:
+        Relational.pearsonTerms("sx", "sy", "sxy", "sxx", "syy"): _*)
+      .select($"n_edges" +: Relational.PearsonResult: _*)
   }
 
   /** Label assortativity of the corpus k-NN graph (s43) — Newman

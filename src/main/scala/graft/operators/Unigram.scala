@@ -19,7 +19,7 @@ import graft.functions.{IntLog, Text}
   *    — expected counts become exact integer counts, so every quantity
   *    in the loop lives on the integer grid and a DuckDB CTE chain
   *    replays the whole training run bit-for-bit
-  *    (SparkEntry.unigramSql). Kudo's soft E-step differs only in
+  *    (TextQueries.unigramSql). Kudo's soft E-step differs only in
   *    using forward-backward fractional counts; the
   *    seed-prune-resegment structure is identical.
   *  - Piece costs are FIXED-POINT INTEGER logs:
@@ -192,7 +192,7 @@ object Unigram {
 
   /** t44 gate entry: the trained vocabulary itself — (piece, freq,
     * cost) on the exact integer grid, hash-gated against a generated
-    * DuckDB CTE chain (SparkEntry.unigramSql) that replays seed, every
+    * DuckDB CTE chain (TextQueries.unigramSql) that replays seed, every
     * EM round (fixed-point costs, Viterbi DP, usage re-count, prune),
     * and the final cost assignment. Hash-green proves the whole
     * learning fixed point equal on an independent engine — the t22

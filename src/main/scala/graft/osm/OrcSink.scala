@@ -99,8 +99,10 @@ object OrcSink {
     */
   def pbfBounds(spark: org.apache.spark.sql.SparkSession, path: String): Option[String] = {
     val hp = new Path(path)
-    val in = hp.getFileSystem(spark.sessionState.newHadoopConf()).open(hp)
-    try PbfDecode.firstHeaderBlock(new DataInputStream(in), path).flatMap(_.bbox)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    val in = fs.open(hp)
+    try PbfDecode.firstHeaderBlock(new DataInputStream(in), path, fs.getFileStatus(hp).getLen)
+      .flatMap(_.bbox)
     finally in.close()
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Resolution: `SPARK_GRAFT_OSM_FIXTURE` env override, else
   * `fixtures/osm` under the working directory, else the canonical
-  * checkout location (the oracle SQL in SparkEntry embeds the same
+  * checkout location (the o-query oracle SQL in OsmOracle embeds the same
   * canonical absolute path — DuckDB gets no env indirection).
   */
 object OsmFixture {

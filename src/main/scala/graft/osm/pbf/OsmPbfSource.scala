@@ -72,7 +72,7 @@ object OsmPbfSource {
         val spans = PbfDecode.scanBlobSpans(data, n => in.seek(in.getPos + n), path)
         spans.find(_.blobType == "OSMHeader").foreach { h =>
           in.seek(h.dataStart)
-          val header = PbfDecode.readHeaderBlock(data, h, path)
+          val header = PbfDecode.readHeaderBlock(data, h, path, length)
           try header.checkRequiredFeatures() catch PbfDecode.failAt(path, h.headerStart)
         }
         spans.filter(_.blobType == "OSMData")
@@ -205,7 +205,7 @@ class OsmPbfPartitionReader(part: OsmFileRange, required: StructType,
     val span = PbfDecode.readBlobHeader(data, blobOffset, part.path).getOrElse(
       throw new PbfFormatException(part.path, blobOffset,
         s"file ends before the partition's end offset ${part.endOffset}"))
-    val blob = PbfDecode.readBlobData(data, span, part.path)
+    val blob = PbfDecode.readBlobData(data, span, part.path, part.endOffset)
     if (span.blobType == "OSMData") {
       entities = PbfDecode.decodePrimitiveBlock(PbfDecode.decompressBlob(blob),
         pred.keepNodes, pred.keepWays, pred.keepRelations)

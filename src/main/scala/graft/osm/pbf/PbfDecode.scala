@@ -112,8 +112,13 @@ object PbfDecode {
     } catch failAt(path, offset)
   }
 
-  /** Read the blob of `span`; `in` stands at `span.dataStart`. */
-  def readBlobData(in: DataInputStream, span: BlobSpan, path: String): Array[Byte] = {
+  /** Read the blob of `span`; `in` stands at `span.dataStart`. A blob
+    * reaching past `end` (its file's or partition's end) fails before its
+    * declared size is allocated.
+    */
+  def readBlobData(in: DataInputStream, span: BlobSpan, path: String, end: Long): Array[Byte] = {
+    if (span.endOffset > end) throw new PbfFormatException(path, span.headerStart,
+      s"blob ends at byte ${span.endOffset}, past the end of its range at $end")
     val blob = new Array[Byte](span.dataSize)
     try in.readFully(blob) catch failAt(path, span.headerStart)
     blob
@@ -355,18 +360,18 @@ object PbfDecode {
   }
 
   /** Read and parse the OSMHeader blob of `span`; `in` stands at
-    * `span.dataStart`.
+    * `span.dataStart`, and the file is `length` bytes long.
     */
-  def readHeaderBlock(in: DataInputStream, span: BlobSpan, path: String): HeaderBlock =
-    try parseHeaderBlock(decompressBlob(readBlobData(in, span, path)))
+  def readHeaderBlock(in: DataInputStream, span: BlobSpan, path: String, length: Long): HeaderBlock =
+    try parseHeaderBlock(decompressBlob(readBlobData(in, span, path, length)))
     catch failAt(path, span.headerStart)
 
-  /** The HeaderBlock of a file whose first blob is its OSMHeader, else
-    * None. Reads one frame.
+  /** The HeaderBlock of a `length`-byte file whose first blob is its
+    * OSMHeader, else None. Reads one frame.
     */
-  def firstHeaderBlock(in: DataInputStream, path: String): Option[HeaderBlock] =
+  def firstHeaderBlock(in: DataInputStream, path: String, length: Long): Option[HeaderBlock] =
     readBlobHeader(in, 0L, path).filter(_.blobType == "OSMHeader")
-      .map(readHeaderBlock(in, _, path))
+      .map(readHeaderBlock(in, _, path, length))
 
   // ---- osmformat ---------------------------------------------------
 

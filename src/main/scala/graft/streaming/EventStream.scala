@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.operators.Relational
+
 /** Structured Streaming over the events stream (SURVEY.md §2.9 / §2A A12).
   *
   * The reference's only streaming surface is the push-based Osmosis sink
@@ -144,19 +146,9 @@ object EventStream {
         sum(col("z")).as("sz"), sum(col("x") * col("z")).as("sxz"),
         sum(col("x") * col("x")).as("sxx"),
         sum(col("z") * col("z")).as("szz"))
-      .select(col("window.start").as("window_start"), col("n"),
-        expr("CAST(n AS DECIMAL(38,0)) * sxz - " +
-          "CAST(sx AS DECIMAL(38,0)) * sz").as("num"),
-        expr("CAST(n AS DECIMAL(38,0)) * sxx - " +
-          "CAST(sx AS DECIMAL(38,0)) * sx").as("dx"),
-        expr("CAST(n AS DECIMAL(38,0)) * szz - " +
-          "CAST(sz AS DECIMAL(38,0)) * sz").as("dy"))
-      .select(col("window_start"), col("n"),
-        expr("CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 " +
-          "ELSE 0 END AS INT)").as("r_sign"),
-        expr("CASE WHEN dx = 0 OR dy = 0 THEN CAST(NULL AS BIGINT) " +
-          "ELSE CAST(((num * num div dx) * 1000000) div dy AS BIGINT) " +
-          "END").as("r2_ppm"))
+      .select(Seq(col("window.start").as("window_start"), col("n")) ++
+        Relational.pearsonTerms("sx", "sz", "sxz", "sxx", "szz"): _*)
+      .select(Seq(col("window_start"), col("n")) ++ Relational.PearsonResult: _*)
 
   /** A document arriving on a stream (ingestion-time dedup input). */
   case class Doc(doc_id: Long, ts: Timestamp, text: String)

@@ -373,10 +373,6 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSpec {
     ) shouldBe true
   }
 
-  test("every oracle entry names a declared query") {
-    SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet shouldBe empty
-  }
-
   test("map-only text stats have no exchange except the final sort") {
     val p = plan("t01_text_stats")
     p.sliding("Exchange".length).count(_ == "Exchange") shouldBe 1

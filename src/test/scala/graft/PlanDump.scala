@@ -2,14 +2,13 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (test scope — not shipped): dump `.explain("formatted")` for
   * named queries to files, for the plans/rNN/ before/after evidence the
   * optimization rounds commit.
   *
-  * Usage: Test/runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1> [q2 ...]
-  * Writes <outDir>/<query>_<suffix>.txt per query.
+  * Usage: Test/runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1 q2 ...]
+  * Writes <outDir>/<query>_<suffix>.txt per query; no names means every
+  * declared query, and an unknown name fails fast.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,19 +17,12 @@ object PlanDump {
     val suffix = args(2)
     val names = args.drop(3).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Verify.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    for (n <- names) {
-      val unknown = !SparkEntry.queries.contains(n)
-      require(!unknown, s"unknown query: $n")
-      val df = SparkEntry.queries(n)(spark, sfDir)
+    for (q <- SparkEntry.select(names)) {
+      val n = q.name
+      val df = q.build(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), plan)

@@ -44,4 +44,24 @@ class SigAggParitySpec extends AnyFunSuite with Matchers with SparkSpec {
       }
     }
   }
+
+  test("hashed and dictionary minhash LSH both pair the planted exact duplicate") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-fixture").toFile
+    dir.deleteOnExit()
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog again and again today"
+    // both forms sample doc_id % 10 == 0, so doc 5 stays out
+    Seq(0L -> base, 10L -> base, 5L -> base,
+        20L -> "completely unrelated text about spark catalyst expression codegen")
+      .map { case (id, t) => (id, t, "en", "synth", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+      val out = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      graft.Caches.releaseAll(spark)
+      out
+    }
+    pairs(Dedup.minHashLsh(spark, dir.getAbsolutePath)) should contain((0L, 10L))
+    pairs(Dedup.minHashLshHashed(spark, dir.getAbsolutePath)) shouldBe Set((0L, 10L))
+  }
 }

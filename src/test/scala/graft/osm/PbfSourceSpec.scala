@@ -361,6 +361,7 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
       "header longer than 64 KiB" -> withHeaderLength(16 << 20),
       "datasize varint >= 2^31" -> withDatasize(1L << 31),
       "datasize over the blob cap" -> withDatasize((64L << 20) + 1),
+      "datasize under the cap, past the end of the file" -> withDatasize(60L << 20),
       "file cut inside a header" -> bytes.take(s.headerStart.toInt + 6),
       "file cut inside a blob" -> bytes.take(s.dataStart.toInt + 3))
   }

@@ -7,7 +7,9 @@ Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 Registers each <sfDir>/<table>.parquet as a DuckDB view, runs every
 oracle SQL from <verifyOutDir>/oracle_sql.json, and compares against the
 Spark result parquet in <verifyOutDir>/<name>/ — columns sorted by name,
-rows sorted, exact value equality.
+rows sorted, exact value equality. The summary line also names every
+PASS that compared 0 rows with 0 rows: such a pass shows nothing about
+the query, so each needs a spec with planted positives.
 """
 import json
 import glob
@@ -30,6 +32,7 @@ if "--dumped-only" in sys.argv:
     oracle = {n: s for n, s in oracle.items()
               if os.path.isdir(f"{out_dir}/{n}")}
 fails = []
+empty = []
 for name, sql in sorted(oracle.items()):
     try:
         exp = con.execute(sql).df()
@@ -75,6 +78,9 @@ for name, sql in sorted(oracle.items()):
         fails.append(name)
     else:
         print(f"PASS {name} ({len(exp)} rows)")
+        if len(exp) == 0:
+            empty.append(name)
 
-print(f"\n{len(oracle) - len(fails)}/{len(oracle)} PASS")
+print(f"\n{len(oracle) - len(fails)}/{len(oracle)} PASS; "
+      f"{len(empty)} with 0 rows: {', '.join(empty) or 'none'}")
 sys.exit(1 if fails else 0)
