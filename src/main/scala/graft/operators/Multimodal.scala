@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -88,6 +88,37 @@ object Multimodal {
     */
   val MaxResizeBytes: Long = 64L << 20
 
+  // ------------------------------------------------------------------
+  // Wire primitives shared by every codec below: fixed-width integer
+  // reads in both byte orders (unchecked — callers bound the offset
+  // first), the matching writes, and the four-character tag test.
+  // ------------------------------------------------------------------
+
+  private def u8(c: Array[Byte], off: Int): Int = c(off) & 0xff
+  private def leU16(c: Array[Byte], off: Int): Int = u8(c, off) | (u8(c, off + 1) << 8)
+  private def beU16(c: Array[Byte], off: Int): Int = (u8(c, off) << 8) | u8(c, off + 1)
+  private def leU32(c: Array[Byte], off: Int): Long =
+    leU16(c, off).toLong | (leU16(c, off + 2).toLong << 16)
+  private def beU32(c: Array[Byte], off: Int): Long =
+    (beU16(c, off).toLong << 16) | beU16(c, off + 2)
+  private def leI32(c: Array[Byte], off: Int): Int = leU32(c, off).toInt
+  private def beI32(c: Array[Byte], off: Int): Int = beU32(c, off).toInt
+
+  /** True when the bytes at `off` spell the ASCII tag `s`. */
+  private def tagAt(c: Array[Byte], off: Int, s: String): Boolean =
+    s.indices.forall(k => c(off + k) == s.charAt(k).toByte)
+
+  /** The low `n` bytes of `v` in the given byte order. */
+  private def bytesOf(v: Long, n: Int, little: Boolean): Array[Byte] =
+    Array.tabulate(n)(k => (v >> (8 * (if (little) k else n - 1 - k))).toByte)
+
+  /** A growable payload buffer whose integer writes use one byte order. */
+  private final class ByteWriter(little: Boolean) extends java.io.ByteArrayOutputStream {
+    def u16(v: Long): Unit = write(bytesOf(v, 2, little))
+    def u32(v: Long): Unit = write(bytesOf(v, 4, little))
+    def ascii(s: String): Unit = write(s.getBytes("US-ASCII"))
+  }
+
   /** REAL byte-level header parse for three public container
     * families — the "one media path is real end-to-end" slice (no
     * codec library involved, just the published layouts):
@@ -121,22 +152,12 @@ object Multimodal {
     * back to the stub — never throws on arbitrary payloads).
     */
   def parseImageHeader(c: Array[Byte]): Option[(String, Int, Int, Int)] = {
-    def leI32(off: Int): Int =
-      (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8) |
-        ((c(off + 2) & 0xff) << 16) | ((c(off + 3) & 0xff) << 24)
-    def leU16(off: Int): Int = (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8)
-    def beI32(off: Int): Int =
-      ((c(off) & 0xff) << 24) | ((c(off + 1) & 0xff) << 16) |
-        ((c(off + 2) & 0xff) << 8) | (c(off + 3) & 0xff)
-    val pngSig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte)
     // 8 sig + 4 len + 4 "IHDR" + 13 data + 4 CRC = 33 bytes minimum
-    if (c.length >= 33 && c.startsWith(pngSig)) {
-      val ihdrLen = beI32(8)
-      val tagOk = c(12) == 'I'.toByte && c(13) == 'H'.toByte &&
-        c(14) == 'D'.toByte && c(15) == 'R'.toByte
-      val w = beI32(16)
-      val h = beI32(20)
+    if (c.length >= 33 && c.startsWith(PngSig)) {
+      val ihdrLen = beI32(c, 8)
+      val tagOk = tagAt(c, 12, "IHDR")
+      val w = beI32(c, 16)
+      val h = beI32(c, 20)
       val depth = c(24) & 0xff
       val colorType = c(25) & 0xff
       // the spec's legal (color type -> bit depths); channels per type
@@ -157,11 +178,11 @@ object Multimodal {
         Some(("png", w, h, channels))
       else None
     } else if (c.length >= 54 && c(0) == 'B'.toByte && c(1) == 'M'.toByte) {
-      val biSize = leI32(14)
-      val w = leI32(18)
-      val hRaw = leI32(22)
+      val biSize = leI32(c, 14)
+      val w = leI32(c, 18)
+      val hRaw = leI32(c, 22)
       val h = math.abs(hRaw)
-      val bits = leU16(28)
+      val bits = leU16(c, 28)
       // COLOR channels, not bytes per pixel: 16-bit RGB555/565 packs
       // three color channels into two bytes (advisor round-7)
       val channelsByBits = Map(1 -> 1, 4 -> 1, 8 -> 1,
@@ -217,8 +238,8 @@ object Multimodal {
       // GIF87a/89a: Logical Screen Descriptor right after the 6-byte
       // signature — width LE u16 @6, height LE u16 @8. Always paletted:
       // 1 channel of color-table indices (the BMP paletted convention).
-      val w = leU16(6)
-      val h = leU16(8)
+      val w = leU16(c, 6)
+      val h = leU16(c, 8)
       if (w >= 1 && h >= 1) Some(("gif", w, h, 1)) else None
     } else if (c.length >= 4 && (c(0) & 0xff) == 0xff && (c(1) & 0xff) == 0xd8) {
       // JPEG: SOI (FFD8), then marker segments [FF mm len_hi len_lo
@@ -231,7 +252,6 @@ object Multimodal {
       // hierarchical) fall to the stub; a SOS before any SOF, an
       // fffe-style lying length, or EOI/truncation end the walk as
       // malformed. 0xFF fill bytes before a marker are legal.
-      def beU16(off: Int): Int = ((c(off) & 0xff) << 8) | (c(off + 1) & 0xff)
       var i = 2
       var res: Option[(String, Int, Int, Int)] = None
       var done = false
@@ -244,15 +264,15 @@ object Multimodal {
           else if (m == 0xd9 || m == 0xda) done = true // EOI / SOS: no SOF seen
           else if (i + 3 >= c.length) done = true // truncated length field
           else {
-            val len = beU16(i + 2)
+            val len = beU16(c, i + 2)
             if (len < 2 || i + 2 + len > c.length) done = true // lying length
             else if ((m == 0xc0 || m == 0xc2) && len >= 11) {
               // SOF0 payload at i+4: [precision][h hi lo][w hi lo][ncomp]
               // (len >= 11 = 2 + the 8-byte fixed part + one component,
               // checked BEFORE touching the payload bytes)
               val precision = c(i + 4) & 0xff
-              val h = beU16(i + 5)
-              val w = beU16(i + 7)
+              val h = beU16(c, i + 5)
+              val w = beU16(c, i + 7)
               val ncomp = c(i + 9) & 0xff
               if (precision == 8 && len == 8 + 3 * ncomp &&
                   (ncomp == 1 || ncomp == 3 || ncomp == 4) &&
@@ -333,11 +353,8 @@ object Multimodal {
     if (c.length < 22) return None
     if (c(0) != 'q'.toByte || c(1) != 'o'.toByte || c(2) != 'i'.toByte ||
         c(3) != 'f'.toByte) return None
-    def be32(off: Int): Long =
-      ((c(off) & 0xffL) << 24) | ((c(off + 1) & 0xffL) << 16) |
-        ((c(off + 2) & 0xffL) << 8) | (c(off + 3) & 0xffL)
-    val w = be32(4)
-    val h = be32(8)
+    val w = beU32(c, 4)
+    val h = beU32(c, 8)
     val ch = c(12) & 0xff
     val cs = c(13) & 0xff
     if (w < 1 || w > MaxDim || h < 1 || h > MaxDim ||
@@ -409,14 +426,10 @@ object Multimodal {
     require(img.width >= 1 && img.height >= 1 &&
       img.pixels.length == img.width * img.height * img.channels,
       "pixel buffer must match dims")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    buf ++= "qoif".getBytes("US-ASCII")
-    def putBe32(v: Int): Unit = {
-      buf += ((v >>> 24) & 0xff).toByte; buf += ((v >>> 16) & 0xff).toByte
-      buf += ((v >>> 8) & 0xff).toByte; buf += (v & 0xff).toByte
-    }
-    putBe32(img.width); putBe32(img.height)
-    buf += img.channels.toByte; buf += 0 // sRGB colorspace tag
+    val buf = new ByteWriter(little = false)
+    buf.ascii("qoif")
+    buf.u32(img.width); buf.u32(img.height)
+    buf.write(img.channels); buf.write(0) // sRGB colorspace tag
     val index = new Array[Int](64)
     var pr = 0; var pg = 0; var pb = 0; var pa = 255
     var run = 0
@@ -430,12 +443,12 @@ object Multimodal {
       val a = if (ch == 4) img.pixels(o + 3) & 0xff else pa
       if (r == pr && g == pg && b == pb && a == pa) {
         run += 1
-        if (run == 62) { buf += (0xc0 | (run - 1)).toByte; run = 0 }
+        if (run == 62) { buf.write(0xc0 | (run - 1)); run = 0 }
       } else {
-        if (run > 0) { buf += (0xc0 | (run - 1)).toByte; run = 0 }
+        if (run > 0) { buf.write(0xc0 | (run - 1)); run = 0 }
         val packed = (r << 24) | (g << 16) | (b << 8) | a
         val hash = (r * 3 + g * 5 + b * 7 + a * 11) % 64
-        if (index(hash) == packed) buf += hash.toByte
+        if (index(hash) == packed) buf.write(hash)
         else {
           index(hash) = packed
           if (a == pa) {
@@ -446,33 +459,29 @@ object Multimodal {
             val drg = dr - dg; val dbg = db - dg
             if (dr >= -2 && dr <= 1 && dg >= -2 && dg <= 1 &&
                 db >= -2 && db <= 1)
-              buf += (0x40 | ((dr + 2) << 4) | ((dg + 2) << 2) | (db + 2)).toByte
+              buf.write(0x40 | ((dr + 2) << 4) | ((dg + 2) << 2) | (db + 2))
             else if (dg >= -32 && dg <= 31 && drg >= -8 && drg <= 7 &&
                 dbg >= -8 && dbg <= 7) {
-              buf += (0x80 | (dg + 32)).toByte
-              buf += (((drg + 8) << 4) | (dbg + 8)).toByte
+              buf.write(0x80 | (dg + 32))
+              buf.write(((drg + 8) << 4) | (dbg + 8))
             } else {
-              buf += 0xfe.toByte; buf += r.toByte; buf += g.toByte; buf += b.toByte
+              buf.write(0xfe); buf.write(Array(r.toByte, g.toByte, b.toByte))
             }
           } else {
-            buf += 0xff.toByte
-            buf += r.toByte; buf += g.toByte; buf += b.toByte; buf += a.toByte
+            buf.write(0xff)
+            buf.write(Array(r.toByte, g.toByte, b.toByte, a.toByte))
           }
         }
         pr = r; pg = g; pb = b; pa = a
       }
       i += 1
     }
-    if (run > 0) buf += (0xc0 | (run - 1)).toByte
-    buf ++= Array[Byte](0, 0, 0, 0, 0, 0, 0, 1)
-    buf.toArray
+    if (run > 0) buf.write(0xc0 | (run - 1))
+    buf.write(Array[Byte](0, 0, 0, 0, 0, 0, 0, 1))
+    buf.toByteArray
   }
 
   def decodeRasterPixels(c: Array[Byte]): Option[RasterImage] = {
-    def leI32(off: Int): Int =
-      (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8) |
-        ((c(off + 2) & 0xff) << 16) | ((c(off + 3) & 0xff) << 24)
-    def leU16(off: Int): Int = (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8)
     def isWs(b: Byte): Boolean =
       b == ' '.toByte || b == '\t'.toByte || b == '\n'.toByte || b == '\r'.toByte
     if (c.length >= 8 && (c(0) & 0xff) == 0x89 && c(1) == 'P'.toByte &&
@@ -485,13 +494,13 @@ object Multimodal {
         c(2) == 'i'.toByte && c(3) == 'f'.toByte) {
       decodeQoiPixels(c)
     } else if (c.length >= 54 && c(0) == 'B'.toByte && c(1) == 'M'.toByte) {
-      val offBits = leI32(10)
-      val biSize = leI32(14)
-      val w = leI32(18)
-      val hRaw = leI32(22)
+      val offBits = leI32(c, 10)
+      val biSize = leI32(c, 14)
+      val w = leI32(c, 18)
+      val hRaw = leI32(c, 22)
       val h = math.abs(hRaw)
-      val bits = leU16(28)
-      val compression = leI32(30)
+      val bits = leU16(c, 28)
+      val compression = leI32(c, 30)
       val isRle = compression == 1
       if (biSize < 40 || w <= 0 || w > MaxDim || h <= 0 || h > MaxDim ||
           hRaw == Int.MinValue ||
@@ -504,7 +513,7 @@ object Multimodal {
       // 8-bit: the color table (BGRX quads) right after the info header
       val palOff = 14 + biSize
       val palCount = if (bits == 8) {
-        val declared = if (biSize >= 36 && palOff > 50) leI32(46) else 0
+        val declared = if (biSize >= 36 && palOff > 50) leI32(c, 46) else 0
         if (declared > 0) declared else 256
       } else 0
       if (bits == 8 &&
@@ -656,31 +665,46 @@ object Multimodal {
     * Scale shape: row-at-a-time inside `mapPartitions` like the other
     * raster decodes; MaxDim and the w·h·ch product bound allocations.
     */
-  private def decodeTiffPixels(c: Array[Byte]): Option[RasterImage] = {
+  /** A TIFF file's IFD0 (TIFF 6.0 §2): the byte order from the II/MM
+    * mark, bounds-checked reads in that order (−1 past either end of the
+    * buffer), and the directory's offset and entry count. [[tiffIfd0]]
+    * reads it for [[decodeTiffPixels]] and [[parseExifIfd0]].
+    */
+  private final class TiffIfd(c: Array[Byte], val little: Boolean) {
+    def u16(off: Long): Int =
+      if (off < 0 || off + 2 > c.length) -1
+      else if (little) leU16(c, off.toInt) else beU16(c, off.toInt)
+    def u32(off: Long): Long =
+      if (off < 0 || off + 4 > c.length) -1L
+      else if (little) leU32(c, off.toInt) else beU32(c, off.toInt)
+    val offset: Long = u32(4)
+    val entries: Int = u16(offset)
+    /** Offset of entry `i`'s 12 bytes (tag, type, count, value). */
+    def entry(i: Int): Int = offset.toInt + 2 + 12 * i
+  }
+
+  /** The 8-byte TIFF header and IFD0 bounds: II/MM, the magic 42, an
+    * IFD0 offset past the header, at least one entry, and room for the
+    * entries plus `tail` bytes after them (the caller's rule for the
+    * next-IFD link); None otherwise.
+    */
+  private def tiffIfd0(c: Array[Byte], tail: Int): Option[TiffIfd] = {
     if (c.length < 8) return None
     val little = c(0) == 'I'.toByte && c(1) == 'I'.toByte
     val big = c(0) == 'M'.toByte && c(1) == 'M'.toByte
     if (!little && !big) return None
-    def u16(off: Long): Int =
-      if (off < 0 || off + 2 > c.length) -1
-      else if (little) (c(off.toInt) & 0xff) | ((c(off.toInt + 1) & 0xff) << 8)
-      else ((c(off.toInt) & 0xff) << 8) | (c(off.toInt + 1) & 0xff)
-    def u32(off: Long): Long =
-      if (off < 0 || off + 4 > c.length) -1L
-      else {
-        val o = off.toInt
-        if (little)
-          (c(o) & 0xffL) | ((c(o + 1) & 0xffL) << 8) |
-            ((c(o + 2) & 0xffL) << 16) | ((c(o + 3) & 0xffL) << 24)
-        else
-          ((c(o) & 0xffL) << 24) | ((c(o + 1) & 0xffL) << 16) |
-            ((c(o + 2) & 0xffL) << 8) | (c(o + 3) & 0xffL)
-      }
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
-    if (ifd < 8 || ifd + 2 > c.length) return None
-    val n = u16(ifd)
-    if (n <= 0 || ifd + 2 + 12L * n + 4 > c.length) return None
+    val t = new TiffIfd(c, little)
+    if (t.u16(2) != 42) return None
+    if (t.offset < 8 || t.offset + 2 > c.length) return None
+    val n = t.entries
+    if (n <= 0 || t.offset + 2 + 12L * n + tail > c.length) return None
+    Some(t)
+  }
+
+  private def decodeTiffPixels(c: Array[Byte]): Option[RasterImage] = {
+    // the next-IFD link must fit after the entries
+    val t = tiffIfd0(c, tail = 4).getOrElse(return None)
+    import t.{u16, u32}
     // SHORT/LONG values, inline when size·count <= 4 else at offset
     def values(e: Int): Option[Array[Long]] = {
       val tpe = u16(e + 2); val cnt = u32(e + 4)
@@ -704,8 +728,8 @@ object Multimodal {
     var stripCounts: Array[Long] = null; var planar = 1L
     var prevTag = -1
     var i = 0
-    while (i < n) {
-      val e = ifd.toInt + 2 + 12 * i
+    while (i < t.entries) {
+      val e = t.entry(i)
       val tag = u16(e)
       if (tag <= prevTag) return None // entries must ascend (TIFF 6.0)
       prevTag = tag
@@ -771,19 +795,9 @@ object Multimodal {
     val counts = Array.tabulate(strips)(i =>
       math.min(rowsPerStrip, h - i * rowsPerStrip) * w * channels)
     val offs = counts.scanLeft(extOff)(_ + _).init
-    val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit =
-      if (little) { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      else { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def w32(v: Long): Unit =
-      if (little) {
-        out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-        out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-      } else {
-        out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-      }
-    out.write(if (little) 'I' else 'M'); out.write(if (little) 'I' else 'M')
+    val out = new ByteWriter(little)
+    import out.{u16 => w16, u32 => w32}
+    out.ascii(if (little) "II" else "MM")
     w16(42); w32(8L)
     w16(10) // entry count; tags strictly ascending
     def shortEntry(tag: Int, value: Int): Unit = {
@@ -836,18 +850,46 @@ object Multimodal {
     * image's buffers live at once; the MaxDim and w·h·ch bounds cap
     * the allocation a lying header can demand.
     */
+  /** The PNG file signature (PNG §5.2). */
+  private val PngSig: Array[Byte] =
+    Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
+
+  /** Adam7's seven (x0, y0, dx, dy) pass grids (PNG §8.2). */
+  private val Adam7 = Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
+    (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
+
+  /** A pass grid's sub-image width and height over a w×h image; 0 when
+    * the pass is empty.
+    */
+  private def passDims(p: (Int, Int, Int, Int), w: Int, h: Int): (Int, Int) = {
+    val (x0, y0, dx, dy) = p
+    (if (w > x0) (w - x0 + dx - 1) / dx else 0,
+      if (h > y0) (h - y0 + dy - 1) / dy else 0)
+  }
+
+  /** The PNG §9 predictor of filter type `ft` from the left (a), above
+    * (b) and above-left (cc) bytes: the exact integer arithmetic both
+    * [[decodePngPixels]] adds back and [[encodePngCore]] subtracts —
+    * Average truncates (a+b)/2, Paeth breaks ties a-then-b-then-c.
+    */
+  private def pngPredictor(ft: Int, a: Int, b: Int, cc: Int): Int = ft match {
+    case 0 => 0
+    case 1 => a
+    case 2 => b
+    case 3 => (a + b) / 2
+    case _ =>
+      val p = a + b - cc
+      val pa = math.abs(p - a); val pb = math.abs(p - b)
+      val pc = math.abs(p - cc)
+      if (pa <= pb && pa <= pc) a else if (pb <= pc) b else cc
+  }
+
   private def decodePngPixels(c: Array[Byte]): Option[RasterImage] = {
-    def beI32(off: Int): Int =
-      ((c(off) & 0xff) << 24) | ((c(off + 1) & 0xff) << 16) |
-        ((c(off + 2) & 0xff) << 8) | (c(off + 3) & 0xff)
-    val sig = Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
     if (c.length < 8 + 25) return None // sig + IHDR chunk + room for IEND
-    var i = 0
-    while (i < 8) { if ((c(i) & 0xff) != sig(i)) return None; i += 1 }
+    if (!c.startsWith(PngSig)) return None
     // IHDR must be the first chunk (PNG §11.2.2), length exactly 13
-    if (beI32(8) != 13 || c(12) != 'I'.toByte || c(13) != 'H'.toByte ||
-        c(14) != 'D'.toByte || c(15) != 'R'.toByte) return None
-    val w = beI32(16); val h = beI32(20)
+    if (beI32(c, 8) != 13 || !tagAt(c, 12, "IHDR")) return None
+    val w = beI32(c, 16); val h = beI32(c, 20)
     val bitDepth = c(24) & 0xff; val colorType = c(25) & 0xff
     val compression = c(26) & 0xff; val filterMethod = c(27) & 0xff
     val interlace = c(28) & 0xff
@@ -872,7 +914,7 @@ object Multimodal {
     def chunkCrcOk(typeOff: Int, len: Int): Boolean = {
       crc.reset()
       crc.update(c, typeOff, 4 + len)
-      crc.getValue.toInt == beI32(typeOff + 4 + len)
+      crc.getValue.toInt == beI32(c, typeOff + 4 + len)
     }
     if (!chunkCrcOk(12, 13)) return None
     // chunk walk: concatenate IDAT payloads until IEND; capture PLTE
@@ -883,23 +925,18 @@ object Multimodal {
     var sawEnd = false
     while (!sawEnd) {
       if (pos + 12 > c.length) return None // truncated chunk frame
-      val len = beI32(pos)
+      val len = beI32(c, pos)
       if (len < 0 || pos + 12L + len > c.length) return None
-      val t0 = c(pos + 4); val t1 = c(pos + 5)
-      val t2 = c(pos + 6); val t3 = c(pos + 7)
-      if (t0 == 'I'.toByte && t1 == 'D'.toByte && t2 == 'A'.toByte &&
-          t3 == 'T'.toByte) {
+      if (tagAt(c, pos + 4, "IDAT")) {
         if (!chunkCrcOk(pos + 4, len)) return None
         idat.write(c, pos + 8, len)
-      } else if (t0 == 'P'.toByte && t1 == 'L'.toByte && t2 == 'T'.toByte &&
-          t3 == 'E'.toByte) {
+      } else if (tagAt(c, pos + 4, "PLTE")) {
         if (!chunkCrcOk(pos + 4, len)) return None
         // 1..256 RGB triples, before any IDAT, at most one PLTE
         if (len == 0 || len % 3 != 0 || len > 768 || idat.size() > 0 ||
             palette != null) return None
         palette = java.util.Arrays.copyOfRange(c, pos + 8, pos + 8 + len)
-      } else if (t0 == 'I'.toByte && t1 == 'E'.toByte && t2 == 'N'.toByte &&
-          t3 == 'D'.toByte) {
+      } else if (tagAt(c, pos + 4, "IEND")) {
         sawEnd = true
       }
       // ancillary chunks (tEXt, pHYs, …) are skipped without CRC work
@@ -910,20 +947,12 @@ object Multimodal {
     if (compressed.isEmpty) return None
     // pass geometry: progressive is the single identity pass; Adam7 is
     // the spec's seven (x0, y0, dx, dy) grids, empty passes absent
-    val passes =
-      if (interlace == 0) Array((0, 0, 1, 1))
-      else Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
-    def passDims(p: (Int, Int, Int, Int)): (Int, Int) = {
-      val (x0, y0, dx, dy) = p
-      (if (w > x0) (w - x0 + dx - 1) / dx else 0,
-        if (h > y0) (h - y0 + dy - 1) / dy else 0)
-    }
+    val passes = if (interlace == 0) Array((0, 0, 1, 1)) else Adam7
     // inflate to EXACTLY Σ passes of ph * (1 + pw*bytesPerPx)
     val bytesPerPx = channels * byteDepth
     val stride = w * channels
     val expected = passes.map { p =>
-      val (pw, ph) = passDims(p)
+      val (pw, ph) = passDims(p, w, h)
       if (pw > 0 && ph > 0) ph * (1 + pw * bytesPerPx) else 0
     }.sum
     val raw = new Array[Byte](expected)
@@ -969,18 +998,7 @@ object Multimodal {
           val a = if (x >= bpp) plane(rowOut + x - bpp) & 0xff else 0
           val b = if (y > 0) plane(rowOut - ps + x) & 0xff else 0
           val cc = if (y > 0 && x >= bpp) plane(rowOut - ps + x - bpp) & 0xff else 0
-          val v = ft match {
-            case 0 => rv
-            case 1 => rv + a
-            case 2 => rv + b
-            case 3 => rv + (a + b) / 2
-            case _ => // Paeth
-              val p = a + b - cc
-              val pa = math.abs(p - a); val pb = math.abs(p - b)
-              val pc = math.abs(p - cc)
-              rv + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else cc)
-          }
-          plane(rowOut + x) = (v & 0xff).toByte
+          plane(rowOut + x) = ((rv + pngPredictor(ft, a, b, cc)) & 0xff).toByte
           x += 1
         }
         y += 1
@@ -991,7 +1009,7 @@ object Multimodal {
     var pi = 0
     while (pi < passes.length) {
       val (x0, y0, dx, dy) = passes(pi)
-      val (pw, ph) = passDims(passes(pi))
+      val (pw, ph) = passDims(passes(pi), w, h)
       if (pw > 0 && ph > 0) {
         val plane = unfilterPass(rawOff, pw, ph) match {
           case None => return None
@@ -1035,6 +1053,96 @@ object Multimodal {
     }
   }
 
+  /** One image block from [[gifBlocks]]: the descriptor's rect and
+    * packed flags byte, its color table as (offset, entries) — the local
+    * one, else the global one, None when neither exists — and the LZW
+    * minimum code size with the concatenated sub-block data.
+    */
+  private case class GifImageBlock(left: Int, top: Int, w: Int, h: Int,
+      flags: Int, palette: Option[(Int, Int)], minCode: Int, data: Array[Byte])
+
+  /** The color table that `packed` flags at `pos` (3·2^(n+1) bytes): the
+    * table as (offset, entries) if present and the offset after it; None
+    * when it runs past the end.
+    */
+  private def gifColorTable(c: Array[Byte], packed: Int,
+      pos: Int): Option[(Option[(Int, Int)], Int)] =
+    if ((packed & 0x80) == 0) Some((None, pos))
+    else {
+      val entries = 1 << ((packed & 7) + 1)
+      val end = pos + 3 * entries
+      if (end > c.length) None else Some((Some((pos, entries)), end))
+    }
+
+  /** The GIF87a/89a signature and Logical Screen Descriptor: the global
+    * color table and the offset of the first block; None when the
+    * signature is wrong or the table is truncated. The screen's own
+    * width and height are the caller's to check.
+    */
+  private def gifScreen(c: Array[Byte]): Option[(Option[(Int, Int)], Int)] =
+    if (c.length < 14 || !tagAt(c, 0, "GIF8") ||
+        (c(4) != '7'.toByte && c(4) != '9'.toByte) || c(5) != 'a'.toByte) None
+    else gifColorTable(c, c(10) & 0xff, 13)
+
+  /** The sub-blocks at `pos` up to their 0 terminator, appended to `sink`
+    * unless it is null: the offset after the terminator, or −1 when they
+    * run past the end.
+    */
+  private def gifSubBlocks(c: Array[Byte], pos0: Int,
+      sink: java.io.ByteArrayOutputStream): Int = {
+    var pos = pos0
+    if (pos >= c.length) return -1
+    var len = c(pos) & 0xff
+    while (len != 0) {
+      if (pos + 1 + len > c.length) return -1
+      if (sink != null) sink.write(c, pos + 1, len)
+      pos += 1 + len
+      if (pos >= c.length) return -1
+      len = c(pos) & 0xff
+    }
+    pos + 1
+  }
+
+  /** The GIF block walk from `pos` (after [[gifScreen]]) to the trailer,
+    * shared by [[decodeGifPixels]] and [[decodeGifFrames]]. A Graphic
+    * Control Extension goes to `gce` with its introducer's offset and
+    * returns the offset after it, or −1 when the caller rejects it; any
+    * other extension is skipped structurally. Each image block goes to
+    * `image`, which returns false to stop the walk. True only when the
+    * walk reached the trailer: a truncated, malformed or unknown block,
+    * or a stop from `image`, gives false.
+    */
+  private def gifBlocks(c: Array[Byte], pos0: Int, gct: Option[(Int, Int)],
+      gce: Int => Int, image: GifImageBlock => Boolean): Boolean = {
+    var pos = pos0
+    while (pos < c.length) {
+      (c(pos) & 0xff) match {
+        case 0x3b => return true
+        case 0x21 => // extension: label byte + sub-blocks
+          if (pos + 1 >= c.length) return false
+          pos = if ((c(pos + 1) & 0xff) == 0xf9) gce(pos)
+            else gifSubBlocks(c, pos + 2, null)
+          if (pos < 0) return false
+        case 0x2c =>
+          if (pos + 10 > c.length) return false
+          val flags = c(pos + 9) & 0xff
+          val (lct, tableEnd) = gifColorTable(c, flags, pos + 10)
+            .getOrElse(return false)
+          if (tableEnd >= c.length) return false
+          val data = new java.io.ByteArrayOutputStream()
+          val end = gifSubBlocks(c, tableEnd + 1, data)
+          if (end < 0) return false
+          val block = GifImageBlock(leU16(c, pos + 1), leU16(c, pos + 3),
+            leU16(c, pos + 5), leU16(c, pos + 7), flags, lct.orElse(gct),
+            c(tableEnd) & 0xff, data.toByteArray)
+          if (!image(block)) return false
+          pos = end
+        case _ => return false // unknown block type: malformed
+      }
+    }
+    false
+  }
+
   /** REAL GIF first-frame pixel decode — the last common web-crawl
     * raster format without real pixels after PNG landed, and like it
     * dependency-free: the only GIF-specific machinery is the block
@@ -1059,93 +1167,45 @@ object Multimodal {
     * invent a background.
     */
   private def decodeGifPixels(c: Array[Byte]): Option[RasterImage] = {
-    def leU16(off: Int): Int = (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8)
-    if (c.length < 14 || c(3) != '8'.toByte ||
-        (c(4) != '7'.toByte && c(4) != '9'.toByte) || c(5) != 'a'.toByte)
-      return None
-    val packed = c(10) & 0xff
-    var pos = 13
-    val gct: Option[(Int, Int)] = if ((packed & 0x80) != 0) {
-      val entries = 1 << ((packed & 7) + 1)
-      val off = pos
-      pos += 3 * entries
-      if (pos > c.length) return None
-      Some((off, entries))
-    } else None
-    // block walk to the first image descriptor
-    while (pos < c.length) {
-      (c(pos) & 0xff) match {
-        case 0x3b => return None // trailer before any image
-        case 0x21 => // extension: label byte + sub-blocks
-          pos += 2
-          var len = if (pos < c.length) c(pos) & 0xff else return None
-          while (len != 0) {
-            pos += 1 + len
-            if (pos >= c.length) return None
-            len = c(pos) & 0xff
-          }
-          pos += 1 // the terminating 0
-        case 0x2c =>
-          if (pos + 10 > c.length) return None
-          val left = leU16(pos + 1); val top = leU16(pos + 3)
-          val w = leU16(pos + 5); val h = leU16(pos + 7)
-          val ip = c(pos + 9) & 0xff
-          pos += 10
-          val interlaced = (ip & 0x40) != 0
-          val lct: Option[(Int, Int)] = if ((ip & 0x80) != 0) {
-            val entries = 1 << ((ip & 7) + 1)
-            val off = pos
-            pos += 3 * entries
-            if (pos > c.length) return None
-            Some((off, entries))
-          } else None
-          val (palOff, palEntries) = lct.orElse(gct).getOrElse(return None)
-          if (left != 0 || top != 0 || w < 1 || h < 1 ||
-              w > MaxDim || h > MaxDim ||
-              w.toLong * h * 3 > Int.MaxValue / 2) return None
-          if (pos >= c.length) return None
-          val minCode = c(pos) & 0xff
-          pos += 1
-          // concatenate the LZW sub-blocks
-          val data = new java.io.ByteArrayOutputStream()
-          var len = if (pos < c.length) c(pos) & 0xff else return None
-          while (len != 0) {
-            if (pos + 1 + len > c.length) return None
-            data.write(c, pos + 1, len)
-            pos += 1 + len
-            if (pos >= c.length) return None
-            len = c(pos) & 0xff
-          }
-          val idx = lzwDecode(data.toByteArray, minCode, w * h)
-            .getOrElse(return None)
-          // sequential-row k of the code stream lands on rowMap(k):
-          // identity when progressive, the 4-pass order when interlaced
-          val rowMap = new Array[Int](h)
-          if (interlaced) {
-            var k = 0
-            for ((start, step) <- Seq((0, 8), (4, 8), (2, 4), (1, 2))) {
-              var r = start
-              while (r < h) { rowMap(k) = r; k += 1; r += step }
-            }
-          } else {
-            var r = 0
-            while (r < h) { rowMap(r) = r; r += 1 }
-          }
-          val out = new Array[Byte](w * h * 3)
-          var i = 0
-          while (i < w * h) {
-            val v = idx(i) & 0xff
-            if (v >= palEntries) return None // index outside the table
-            val p = palOff + v * 3
-            val o = (rowMap(i / w) * w + i % w) * 3
-            out(o) = c(p); out(o + 1) = c(p + 1); out(o + 2) = c(p + 2)
-            i += 1
-          }
-          return Some(RasterImage("gif", w, h, 3, out))
-        case _ => return None // unknown block type: malformed
+    val (gct, start) = gifScreen(c).getOrElse(return None)
+    def decodeFirst(b: GifImageBlock): Option[RasterImage] = {
+      val (palOff, palEntries) = b.palette.getOrElse(return None)
+      val w = b.w; val h = b.h
+      if (b.left != 0 || b.top != 0 || w < 1 || h < 1 ||
+          w > MaxDim || h > MaxDim ||
+          w.toLong * h * 3 > Int.MaxValue / 2) return None
+      val idx = lzwDecode(b.data, b.minCode, w * h)
+        .getOrElse(return None)
+      // sequential-row k of the code stream lands on rowMap(k):
+      // identity when progressive, the 4-pass order when interlaced
+      val rowMap = new Array[Int](h)
+      if ((b.flags & 0x40) != 0) {
+        var k = 0
+        for ((start, step) <- Seq((0, 8), (4, 8), (2, 4), (1, 2))) {
+          var r = start
+          while (r < h) { rowMap(k) = r; k += 1; r += step }
+        }
+      } else {
+        var r = 0
+        while (r < h) { rowMap(r) = r; r += 1 }
       }
+      val out = new Array[Byte](w * h * 3)
+      var i = 0
+      while (i < w * h) {
+        val v = idx(i) & 0xff
+        if (v >= palEntries) return None // index outside the table
+        val p = palOff + v * 3
+        val o = (rowMap(i / w) * w + i % w) * 3
+        out(o) = c(p); out(o + 1) = c(p + 1); out(o + 2) = c(p + 2)
+        i += 1
+      }
+      Some(RasterImage("gif", w, h, 3, out))
     }
-    None
+    // the first image block decides; the walk stops there
+    var first: Option[RasterImage] = None
+    gifBlocks(c, start, gct, gce = pos => gifSubBlocks(c, pos + 2, null),
+      image = { b => first = decodeFirst(b); false })
+    first
   }
 
   /** One composited animation frame (m28): the FULL canvas as RGB
@@ -1175,24 +1235,11 @@ object Multimodal {
     * ladder's constant-memory contract.
     */
   def decodeGifFrames(c: Array[Byte]): Option[GifAnimation] = {
-    def leU16(off: Int): Int = (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8)
-    if (c.length < 14 || c(0) != 'G'.toByte || c(1) != 'I'.toByte ||
-        c(2) != 'F'.toByte || c(3) != '8'.toByte ||
-        (c(4) != '7'.toByte && c(4) != '9'.toByte) || c(5) != 'a'.toByte)
-      return None
-    val cw = leU16(6); val ch = leU16(8)
+    val (gct, start) = gifScreen(c).getOrElse(return None)
+    val cw = leU16(c, 6); val ch = leU16(c, 8)
     if (cw < 1 || ch < 1 || cw > MaxDim || ch > MaxDim ||
         cw.toLong * ch * 3 > Int.MaxValue / 2) return None
-    val packed = c(10) & 0xff
     val bgIndex = c(11) & 0xff
-    var pos = 13
-    val gct: Option[(Int, Int)] = if ((packed & 0x80) != 0) {
-      val entries = 1 << ((packed & 7) + 1)
-      val off = pos
-      pos += 3 * entries
-      if (pos > c.length) return None
-      Some((off, entries))
-    } else None
     // the background color needs a GCT (disposal-2 restores to it)
     val (gOff, gEntries) = gct.getOrElse(return None)
     if (bgIndex >= gEntries) return None
@@ -1215,82 +1262,45 @@ object Multimodal {
     var delay = 0
     var disposal = 0
     var transIdx = -1
-    while (pos < c.length) {
-      (c(pos) & 0xff) match {
-        case 0x3b =>
-          return if (frames.nonEmpty) Some(GifAnimation(cw, ch, frames.toSeq))
-            else None
-        case 0x21 =>
-          if (pos + 1 >= c.length) return None
-          val label = c(pos + 1) & 0xff
-          if (label == 0xf9) { // Graphic Control Extension
-            if (pos + 7 >= c.length || (c(pos + 2) & 0xff) != 4) return None
-            val gp = c(pos + 3) & 0xff
-            disposal = (gp >> 2) & 7
-            if (disposal == 3 || disposal > 3) return None // out of slice
-            delay = leU16(pos + 4)
-            transIdx = if ((gp & 1) != 0) c(pos + 6) & 0xff else -1
-            if ((c(pos + 7) & 0xff) != 0) return None
-            pos += 8
-          } else { // other extension: skip sub-blocks
-            pos += 2
-            var len = if (pos < c.length) c(pos) & 0xff else return None
-            while (len != 0) {
-              pos += 1 + len
-              if (pos >= c.length) return None
-              len = c(pos) & 0xff
-            }
-            pos += 1
-          }
-        case 0x2c =>
-          if (pos + 10 > c.length) return None
-          val left = leU16(pos + 1); val top = leU16(pos + 3)
-          val w = leU16(pos + 5); val h = leU16(pos + 7)
-          val ip = c(pos + 9) & 0xff
-          pos += 10
-          if ((ip & 0x40) != 0) return None // interlaced frames: stills path only
-          if (w < 1 || h < 1 || left + w > cw || top + h > ch) return None
-          val lct: Option[(Int, Int)] = if ((ip & 0x80) != 0) {
-            val entries = 1 << ((ip & 7) + 1)
-            val off = pos
-            pos += 3 * entries
-            if (pos > c.length) return None
-            Some((off, entries))
-          } else None
-          val (palOff, palEntries) = lct.getOrElse((gOff, gEntries))
-          if (pos >= c.length) return None
-          val minCode = c(pos) & 0xff
-          pos += 1
-          val data = new java.io.ByteArrayOutputStream()
-          var len = if (pos < c.length) c(pos) & 0xff else return None
-          while (len != 0) {
-            if (pos + 1 + len > c.length) return None
-            data.write(c, pos + 1, len)
-            pos += 1 + len
-            if (pos >= c.length) return None
-            len = c(pos) & 0xff
-          }
-          pos += 1
-          val idx = lzwDecode(data.toByteArray, minCode, w * h)
-            .getOrElse(return None)
-          var i = 0
-          while (i < w * h) {
-            val v = idx(i) & 0xff
-            if (v >= palEntries) return None
-            if (v != transIdx) {
-              val p = palOff + v * 3
-              val o = ((top + i / w) * cw + (left + i % w)) * 3
-              canvas(o) = c(p); canvas(o + 1) = c(p + 1); canvas(o + 2) = c(p + 2)
-            }
-            i += 1
-          }
-          frames += GifFrame(delay, disposal, canvas.clone())
-          if (disposal == 2) restoreRect(left, top, w, h)
-          delay = 0; disposal = 0; transIdx = -1
-        case _ => return None
-      }
+    // Graphic Control Extension: timing, disposal and transparency for
+    // the next image
+    def control(pos: Int): Int = {
+      if (pos + 7 >= c.length || (c(pos + 2) & 0xff) != 4) return -1
+      val gp = c(pos + 3) & 0xff
+      disposal = (gp >> 2) & 7
+      if (disposal == 3 || disposal > 3) return -1 // out of slice
+      delay = leU16(c, pos + 4)
+      transIdx = if ((gp & 1) != 0) c(pos + 6) & 0xff else -1
+      if ((c(pos + 7) & 0xff) != 0) return -1
+      pos + 8
     }
-    None // ran off the end without a trailer
+    def render(b: GifImageBlock): Boolean = {
+      if ((b.flags & 0x40) != 0) return false // interlaced frames: stills path only
+      val (left, top, w, h) = (b.left, b.top, b.w, b.h)
+      if (w < 1 || h < 1 || left + w > cw || top + h > ch) return false
+      val (palOff, palEntries) = b.palette.getOrElse((gOff, gEntries))
+      val idx = lzwDecode(b.data, b.minCode, w * h)
+        .getOrElse(return false)
+      var i = 0
+      while (i < w * h) {
+        val v = idx(i) & 0xff
+        if (v >= palEntries) return false
+        if (v != transIdx) {
+          val p = palOff + v * 3
+          val o = ((top + i / w) * cw + (left + i % w)) * 3
+          canvas(o) = c(p); canvas(o + 1) = c(p + 1); canvas(o + 2) = c(p + 2)
+        }
+        i += 1
+      }
+      frames += GifFrame(delay, disposal, canvas.clone())
+      if (disposal == 2) restoreRect(left, top, w, h)
+      delay = 0; disposal = 0; transIdx = -1
+      true
+    }
+    // a walk that ran off the end without a trailer is malformed
+    if (gifBlocks(c, start, gct, control, render) && frames.nonEmpty)
+      Some(GifAnimation(cw, ch, frames.toSeq))
+    else None
   }
 
   /** One frame spec for [[encodeGifAnim]]: a sub-rectangle of palette
@@ -1312,10 +1322,9 @@ object Multimodal {
     require(bgIndex >= 0 && bgIndex < entries, s"bg index $bgIndex outside palette")
     val bits = 31 - Integer.numberOfLeadingZeros(entries)
     val minCode = math.max(2, bits)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF89a".getBytes("US-ASCII"))
-    def leU16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    leU16(width); leU16(height)
+    val out = new ByteWriter(little = true)
+    out.ascii("GIF89a")
+    out.u16(width); out.u16(height)
     out.write(0x80 | (bits - 1))
     out.write(bgIndex); out.write(0)
     out.write(palette)
@@ -1328,10 +1337,10 @@ object Multimodal {
         s"disposal ${f.disposal} out of slice")
       out.write(0x21); out.write(0xf9); out.write(4)
       out.write((f.disposal << 2) | (if (f.transparentIdx >= 0) 1 else 0))
-      leU16(f.delayCs)
+      out.u16(f.delayCs)
       out.write(math.max(0, f.transparentIdx)); out.write(0)
       out.write(0x2c)
-      leU16(f.left); leU16(f.top); leU16(f.w); leU16(f.h); out.write(0)
+      out.u16(f.left); out.u16(f.top); out.u16(f.w); out.u16(f.h); out.write(0)
       out.write(minCode)
       lzwCompressBlocks(f.indices, minCode, out)
     }
@@ -1433,15 +1442,14 @@ object Multimodal {
     require(pixels.forall(p => (p & 0xff) < entries), "index outside palette")
     val bits = 31 - Integer.numberOfLeadingZeros(entries)
     val minCode = math.max(2, bits)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write("GIF87a".getBytes("US-ASCII"))
-    def leU16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    leU16(width); leU16(height)
+    val out = new ByteWriter(little = true)
+    out.ascii("GIF87a")
+    out.u16(width); out.u16(height)
     out.write(0x80 | (bits - 1)) // GCT present, 2^bits entries
     out.write(0); out.write(0)
     out.write(palette)
     out.write(0x2c) // image descriptor at (0,0), full size, no LCT
-    leU16(0); leU16(0); leU16(width); leU16(height); out.write(0)
+    out.u16(0); out.u16(0); out.u16(width); out.u16(height); out.write(0)
     out.write(minCode)
     lzwCompressBlocks(pixels, minCode, out)
     out.write(0x3b) // trailer
@@ -1604,13 +1612,9 @@ object Multimodal {
     data.write(0); data.write(1) // EOD
     val rle = data.toByteArray
     val offBits = 54 + 4 * nPal
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >>> 8) & 0xff)
-      out.write((v >>> 16) & 0xff); out.write((v >>> 24) & 0xff)
-    }
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    out.write('B'); out.write('M')
+    val out = new ByteWriter(little = true)
+    import out.{u16 => le16, u32 => le32}
+    out.ascii("BM")
     le32(offBits + rle.length); le16(0); le16(0); le32(offBits)
     le32(40); le32(width); le32(height); le16(1); le16(8)
     le32(1) // BI_RLE8
@@ -1675,18 +1679,7 @@ object Multimodal {
           val a = if (x >= bpp) plane(rowIn + x - bpp) & 0xff else 0
           val b = if (y > 0) plane(rowIn - ps + x) & 0xff else 0
           val cc = if (y > 0 && x >= bpp) plane(rowIn - ps + x - bpp) & 0xff else 0
-          val pred = ft match {
-            case 0 => 0
-            case 1 => a
-            case 2 => b
-            case 3 => (a + b) / 2
-            case _ =>
-              val p = a + b - cc
-              val pa = math.abs(p - a); val pb = math.abs(p - b)
-              val pc = math.abs(p - cc)
-              if (pa <= pb && pa <= pc) a else if (pb <= pc) b else cc
-          }
-          row(1 + x) = ((v - pred) & 0xff).toByte
+          row(1 + x) = ((v - pngPredictor(ft, a, b, cc)) & 0xff).toByte
           x += 1
         }
         sink.write(row, 0, 1 + ps)
@@ -1698,12 +1691,9 @@ object Multimodal {
     if (!adam7) {
       filterPlane(pixels, width, height, 0, sink)
     } else {
-      val passes = Array((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-        (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2))
       var row0 = 0
-      for ((x0, y0, dx, dy) <- passes) {
-        val pw = if (width > x0) (width - x0 + dx - 1) / dx else 0
-        val ph = if (height > y0) (height - y0 + dy - 1) / dy else 0
+      for (pass @ (x0, y0, dx, dy) <- Adam7) {
+        val (pw, ph) = passDims(pass, width, height)
         if (pw > 0 && ph > 0) {
           val plane = new Array[Byte](pw * ph * bpp)
           var py = 0
@@ -1733,9 +1723,8 @@ object Multimodal {
         buf.toByteArray
       } finally defl.end()
     val out = new java.io.ByteArrayOutputStream()
-    out.write(Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte))
-    def be(v: Int): Array[Byte] = Array((v >>> 24).toByte, (v >>> 16).toByte,
-      (v >>> 8).toByte, v.toByte)
+    out.write(PngSig)
+    def be(v: Int): Array[Byte] = bytesOf(v, 4, little = false)
     def chunk(tpe: String, data: Array[Byte]): Unit = {
       out.write(be(data.length))
       val tb = tpe.getBytes("US-ASCII")
@@ -2088,47 +2077,75 @@ object Multimodal {
     *
     * Returns (sampleRate, channels, bitsPerSample, nFrames).
     */
-  def parseWavHeader(c: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    def leU16(off: Int): Int = (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8)
-    def leU32(off: Int): Long =
-      (c(off) & 0xffL) | ((c(off + 1) & 0xffL) << 8) |
-        ((c(off + 2) & 0xffL) << 16) | ((c(off + 3) & 0xffL) << 24)
-    def tag(off: Int, s: String): Boolean =
-      c(off) == s.charAt(0).toByte && c(off + 1) == s.charAt(1).toByte &&
-        c(off + 2) == s.charAt(2).toByte && c(off + 3) == s.charAt(3).toByte
-    if (c.length < 44 || !tag(0, "RIFF") || !tag(8, "WAVE")) return None
+  def parseWavHeader(c: Array[Byte]): Option[(Int, Int, Int, Long)] =
+    walkWav(c, f => (f.audioFmt == 1 || f.audioFmt == 3) &&
+        f.bits >= 1 && f.bits % 8 == 0 && f.blockAlign == f.channels * (f.bits / 8))
+      .collect { case (f, _, dataSize) if dataSize % f.blockAlign == 0 =>
+        (f.rate.toInt, f.channels, f.bits, dataSize / f.blockAlign)
+      }
+
+  /** A WAV `fmt ` chunk's fields (its first 16 bytes). */
+  private case class WavFmt(audioFmt: Int, channels: Int, rate: Long,
+      blockAlign: Int, bits: Int)
+
+  /** The RIFF/WAVE chunk walk shared by [[parseWavHeader]] and
+    * [[decodePcmSamples]]: "RIFF" + LE u32 riff size + "WAVE", then
+    * [4-byte id][LE u32 size][payload, odd sizes padded to even] until
+    * both a `fmt ` and a `data` chunk have been seen. A fmt chunk of at
+    * least 16 bytes must declare 1–64 channels, a rate in 1..2^20, and
+    * pass `accept` (the caller's codec rules); otherwise the payload is
+    * malformed — a fmt chunk that lies is not stub-able noise. Returns
+    * the last fmt seen, the data chunk's body offset and its DECLARED
+    * size (a header-only slice may legitimately truncate the payload);
+    * None on a wrong header, a rejected fmt, or a walk that ends before
+    * both chunks.
+    */
+  private def walkWav(c: Array[Byte],
+      accept: WavFmt => Boolean): Option[(WavFmt, Int, Long)] = {
+    if (c.length < 44 || !tagAt(c, 0, "RIFF") || !tagAt(c, 8, "WAVE")) return None
     // the walk index is a LONG: a junk chunk declaring size near
     // Int.MaxValue must run i past c.length and end the loop — Int
     // arithmetic would overflow negative, keep `i + 8 <= length` true,
     // and index c at a negative offset (never-throw contract violation)
     var i = 12L
-    var fmt: Option[(Int, Int, Int, Int)] = None // (audioFmt, ch, rate, bits) + align below
-    var blockAlign = 0
+    var fmt: Option[WavFmt] = None
+    var dataOff = -1
     var dataSize = -1L
-    while (i + 8 <= c.length && (fmt.isEmpty || dataSize < 0)) {
+    while (i + 8 <= c.length && (fmt.isEmpty || dataOff < 0)) {
       val off = i.toInt // safe: i + 8 <= c.length <= Int.MaxValue
-      val size = leU32(off + 4)
+      val size = leU32(c, off + 4)
       val body = off + 8
-      if (tag(off, "fmt ") && size >= 16 && body + 16 <= c.length) {
-        val audioFmt = leU16(body)
-        val ch = leU16(body + 2)
-        val rate = leU32(body + 4)
-        blockAlign = leU16(body + 12)
-        val bits = leU16(body + 14)
-        if ((audioFmt == 1 || audioFmt == 3) && ch >= 1 && ch <= 64 &&
-            rate >= 1 && rate <= (1 << 20) && bits >= 1 && bits % 8 == 0 &&
-            blockAlign == ch * (bits / 8))
-          fmt = Some((audioFmt, ch, rate.toInt, bits))
-        else return None // a fmt chunk that lies is malformed, not stub-able noise
-      } else if (tag(off, "data")) {
-        // data payload may legitimately be truncated in a header-only
-        // slice; the DECLARED size still yields the frame count
+      if (tagAt(c, off, "fmt ") && size >= 16 && body + 16 <= c.length) {
+        val f = WavFmt(leU16(c, body), leU16(c, body + 2), leU32(c, body + 4),
+          leU16(c, body + 12), leU16(c, body + 14))
+        if (f.channels >= 1 && f.channels <= 64 && f.rate >= 1 &&
+            f.rate <= (1 << 20) && accept(f)) fmt = Some(f)
+        else return None
+      } else if (tagAt(c, off, "data")) {
+        dataOff = body
         dataSize = size
       }
       i = body.toLong + size + (size % 2) // odd chunks pad to even
     }
-    for ((_, ch, rate, bits) <- fmt; if dataSize >= 0 && dataSize % blockAlign == 0)
-      yield (rate, ch, bits, dataSize / blockAlign)
+    for (f <- fmt; if dataOff >= 0) yield (f, dataOff, dataSize)
+  }
+
+  /** A canonical 44-byte-header WAV: RIFF, a 16-byte `fmt ` chunk
+    * (format tag, channels, rate, byte rate, block align, bits) and one
+    * `data` chunk holding `data` — the writer behind every WAV builder.
+    */
+  private def wavFile(audioFmt: Int, channels: Int, sampleRate: Int,
+      bits: Int, data: Array[Byte]): Array[Byte] = {
+    val align = channels * bits / 8
+    val out = new ByteWriter(little = true)
+    out.ascii("RIFF"); out.u32(36L + data.length); out.ascii("WAVE")
+    out.ascii("fmt "); out.u32(16L)
+    out.u16(audioFmt); out.u16(channels)
+    out.u32(sampleRate.toLong); out.u32(sampleRate.toLong * align)
+    out.u16(align); out.u16(bits)
+    out.ascii("data"); out.u32(data.length.toLong)
+    out.write(data)
+    out.toByteArray
   }
 
   /** [[decode]]'s audio twin: WAV headers parse for REAL; everything
@@ -2188,10 +2205,7 @@ object Multimodal {
     * honest header-only answer.
     */
   def parseMp4Header(c: Array[Byte]): Option[Mp4Meta] = {
-    def beU32(off: Int): Long =
-      ((c(off) & 0xffL) << 24) | ((c(off + 1) & 0xffL) << 16) |
-        ((c(off + 2) & 0xffL) << 8) | (c(off + 3) & 0xffL)
-    def beU64(off: Int): Long = (beU32(off) << 32) | beU32(off + 4)
+    def beU64(off: Int): Long = (beU32(c, off) << 32) | beU32(c, off + 4)
     def tag4(off: Int): String = new String(c, off, 4, "ISO-8859-1")
     // flat child walk of [from, to): every box must fit exactly
     def walk(from: Long, to: Long): Option[Seq[(String, Long, Long)]] = {
@@ -2199,7 +2213,7 @@ object Multimodal {
       var i = from
       var bad = false
       while (!bad && i + 8 <= to) {
-        val size32 = beU32(i.toInt)
+        val size32 = beU32(c, i.toInt)
         val typ = tag4(i.toInt + 4)
         val (body, endBox): (Long, Long) =
           if (size32 == 0) (i + 8, to)
@@ -2235,9 +2249,9 @@ object Multimodal {
       ver = c(hb.toInt) & 0xff
       tsDur <-
         if (ver == 0 && he - hb >= 20)
-          Some((beU32(hb.toInt + 12), beU32(hb.toInt + 16)))
+          Some((beU32(c, hb.toInt + 12), beU32(c, hb.toInt + 16)))
         else if (ver == 1 && he - hb >= 32)
-          Some((beU32(hb.toInt + 20), beU64(hb.toInt + 24)))
+          Some((beU32(c, hb.toInt + 20), beU64(hb.toInt + 24)))
         else None
       (ts, dur) = tsDur
       if ts >= 1 && ts <= Int.MaxValue && dur >= 0
@@ -2253,8 +2267,8 @@ object Multimodal {
             layout.flatMap { case (wOff, hOff, minLen) =>
               if (ke - kb < minLen) None
               else {
-                val w = (beU32(kb.toInt + wOff) >> 16).toInt
-                val h = (beU32(kb.toInt + hOff) >> 16).toInt
+                val w = (beU32(c, kb.toInt + wOff) >> 16).toInt
+                val h = (beU32(c, kb.toInt + hOff) >> 16).toInt
                 if (w > 0 && h > 0 && w <= MaxDim && h <= MaxDim) Some((w, h))
                 else None
               }
@@ -2411,6 +2425,56 @@ object Multimodal {
       .orderBy($"fh")
   }
 
+  /** Each document with at least `n` text characters, paired with its
+    * first `n`: the source of every m-family payload. The corpus is
+    * ASCII (MultimodalSpec pins the single-byte premise), so the oracle
+    * recomputes each payload's pixels, samples or fields with ord() on
+    * the same prefix and never sees a binary byte.
+    */
+  private def textPrefixes(spark: SparkSession, sfDir: String,
+      n: Int): Dataset[(Long, String)] = {
+    import spark.implicits._
+    Tables.documents(spark, sfDir)
+      .filter(length($"text") >= n)
+      .select($"doc_id", substring($"text", 1, n).as("px"))
+      .as[(Long, String)]
+  }
+
+  /** One `kind` payload per [[textPrefixes]] row: `encode(doc_id,
+    * prefix)` is the builder's own encode step.
+    */
+  private def docMedia(spark: SparkSession, sfDir: String, n: Int, kind: String)(
+      encode: (Long, String) => Array[Byte]): Dataset[MediaRow] = {
+    import spark.implicits._
+    textPrefixes(spark, sfDir, n).map { case (id, px) => MediaRow(id, kind, encode(id, px)) }
+  }
+
+  /** The m15 DERANGED 256-entry palette — entry i → RGB (i,
+    * (7i+13) mod 256, (31i+5) mod 256) — behind the m15, m18, m26 and
+    * m28 payloads: a decoder that skipped palette expansion or swapped
+    * channels would still pass an identity palette, never this one.
+    */
+  private val DerangedPalette: Array[Byte] = Array.tabulate(256 * 3) { k =>
+    val i = k / 3
+    (k % 3 match {
+      case 0 => i
+      case 1 => (i * 7 + 13) % 256
+      case _ => (i * 31 + 5) % 256
+    }).toByte
+  }
+
+  /** The raster checksum gates' report: [[rasterFeatures]] of `rows`
+    * keyed by doc_id — detected format, dimensions, channels and the
+    * canonical-pixel checksum the oracle replays from ord().
+    */
+  private def checksumReport(rows: Dataset[MediaRow]): DataFrame = {
+    import rows.sparkSession.implicits._
+    rasterFeatures(rows).toDF()
+      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
+        $"channels", $"pixel_checksum")
+      .orderBy($"doc_id")
+  }
+
   /** Deterministic single-tile PGM payload per document (first 64 text
     * bytes as an 8×8 grayscale raster): the bridge that drives the
     * REAL pixel-decode path through the DuckDB gate. The corpus is
@@ -2419,16 +2483,10 @@ object Multimodal {
     * the text prefix — one engine decodes actual PGM bytes, the other
     * never sees a binary payload at all, and the hashes must agree.
     */
-  private def docPgmRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        MediaRow(id, "image", ("P5\n8 8\n255\n" + px).getBytes("ISO-8859-1"))
-      }
-  }
+  private def docPgmRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "image") { (_, px) =>
+      ("P5\n8 8\n255\n" + px).getBytes("ISO-8859-1")
+    }
 
   /** m05 gate entry: [[decodeRasterPixels]] + the canonical-pixel
     * rolling checksum, cross-engine — hash-green proves the P5 header
@@ -2437,13 +2495,27 @@ object Multimodal {
     * them from first principles (ord() on the text prefix, never
     * seeing a binary payload at all).
     */
-  def rasterChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docPgmRows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def rasterChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docPgmRows(spark, sfDir))
+
+  /** The prologue of every gray-raster op (m31–m40): each payload of
+    * `ds` that decodes to one channel goes to `f` as (media_id, image,
+    * pixels as unsigned 0..255 values); every other payload is dropped.
+    */
+  private def grayOp[T: Encoder](ds: Dataset[MediaRow])(
+      f: (Long, RasterImage, Array[Int]) => IterableOnce[T]): Dataset[T] =
+    ds.flatMap { r =>
+      decodeRasterPixels(r.content).filter(_.channels == 1).iterator
+        .flatMap(img => f(r.media_id, img, img.pixels.map(_ & 0xff)))
+    }
+
+  /** A gray-raster gate (m31–m40): `op` over the [[docPgmRows]]
+    * rasters, ordered by `keys`. The oracle rebuilds each raster from
+    * ord() on the text prefix and replays the op in SQL.
+    */
+  def pgmGate(op: Dataset[MediaRow] => DataFrame, keys: String*)(
+      spark: SparkSession, sfDir: String): DataFrame =
+    op(docPgmRows(spark, sfDir)).orderBy(keys.map(col): _*)
 
   /** Histogram equalization (m31) — the classic contrast-normalization
     * preprocessing pass (the textbook CDF remap): per grayscale image,
@@ -2459,28 +2531,29 @@ object Multimodal {
     * Scale shape: decode + per-image histogram + remap in ONE map over
     * the binary column (a 256-int buffer per row) — no shuffle, the
     * m05 discipline.
+    *
+    * Gated as m31 by [[pgmGate]]: the oracle rebuilds pixels from ord(),
+    * recomputes the per-image CDF with a window, and replays the remap +
+    * fold.
     */
   def histEqualize(ds: Dataset[MediaRow]): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        val px = img.pixels.map(_ & 0xff)
-        val n = px.length
-        val hist = new Array[Int](256)
-        px.foreach(v => hist(v) += 1)
-        val cdf = new Array[Int](256)
-        var acc = 0
-        var v = 0
-        while (v < 256) { acc += hist(v); cdf(v) = acc; v += 1 }
-        val lo = px.min
-        val hi = px.max
-        val cdfMin = cdf(lo)
-        val out = px.map(v0 =>
-          if (n == cdfMin) 0
-          else ((cdf(v0) - cdfMin).toLong * 255 / (n - cdfMin)).toInt)
-        (r.media_id, img.width, img.height, lo, hi, out.min, out.max,
-          byteChecksum(out.map(_.toByte)))
-      }
+    grayOp(ds) { (id, img, px) =>
+      val n = px.length
+      val hist = new Array[Int](256)
+      px.foreach(v => hist(v) += 1)
+      val cdf = new Array[Int](256)
+      var acc = 0
+      var v = 0
+      while (v < 256) { acc += hist(v); cdf(v) = acc; v += 1 }
+      val lo = px.min
+      val hi = px.max
+      val cdfMin = cdf(lo)
+      val out = px.map(v0 =>
+        if (n == cdfMin) 0
+        else ((cdf(v0) - cdfMin).toLong * 255 / (n - cdfMin)).toInt)
+      Some((id, img.width, img.height, lo, hi, out.min, out.max,
+        byteChecksum(out.map(_.toByte))))
     }.toDF("doc_id", "width", "height", "lo_in", "hi_in", "lo_out",
       "hi_out", "eq_checksum")
   }
@@ -2499,31 +2572,33 @@ object Multimodal {
     * Scale shape: decode + patch walk in ONE map over the binary
     * column, emitting (h/p)·(w/p) rows per image — no shuffle, the
     * m05 discipline.
+    *
+    * Gated as m32 by [[pgmGate]]: the oracle rebuilds pixels from ord(),
+    * assigns each to its (row div p, col div p) patch, and replays stats
+    * + the row-major fold.
     */
   def patchify(ds: Dataset[MediaRow], p: Int = 4): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).toSeq.flatMap { img =>
-        for {
-          pr <- 0 until img.height / p
-          pc <- 0 until img.width / p
-        } yield {
-          var sum = 0L; var lo = 255; var hi = 0; var acc = 0L
-          var y = pr * p
-          while (y < (pr + 1) * p) {
-            var x = pc * p
-            while (x < (pc + 1) * p) {
-              val v = img.pixels(y * img.width + x) & 0xff
-              sum += v
-              if (v < lo) lo = v
-              if (v > hi) hi = v
-              acc = (acc * 31 + v) % 1000000007L
-              x += 1
-            }
-            y += 1
+    grayOp(ds) { (id, img, px) =>
+      for {
+        pr <- 0 until img.height / p
+        pc <- 0 until img.width / p
+      } yield {
+        var sum = 0L; var lo = 255; var hi = 0; var acc = 0L
+        var y = pr * p
+        while (y < (pr + 1) * p) {
+          var x = pc * p
+          while (x < (pc + 1) * p) {
+            val v = px(y * img.width + x)
+            sum += v
+            if (v < lo) lo = v
+            if (v > hi) hi = v
+            acc = (acc * 31 + v) % 1000000007L
+            x += 1
           }
-          (r.media_id, pr, pc, sum, lo, hi, sum / (p * p), acc)
+          y += 1
         }
+        (id, pr, pc, sum, lo, hi, sum / (p * p), acc)
       }
     }.toDF("doc_id", "patch_row", "patch_col", "sum_v", "lo", "hi",
       "mean_v", "pchk")
@@ -2539,27 +2614,27 @@ object Multimodal {
     * (screenshots, borders, rendered text) collapse to few runs; photo
     * noise doesn't — the signal that routes media to the right
     * pipeline. Map-only over the decoded pixels, the m05 discipline.
+    *
+    * Gated as m33 by [[pgmGate]]: the oracle rebuilds pixels from ord()
+    * and counts runs with a lag window.
     */
   def rleSignal(ds: Dataset[MediaRow]): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        val px = img.pixels
-        val n = px.length
-        var runs = if (n == 0) 0 else 1
-        var i = 1
-        val seen = new Array[Boolean](256)
-        if (n > 0) seen(px(0) & 0xff) = true
-        while (i < n) {
-          if (px(i) != px(i - 1)) runs += 1
-          seen(px(i) & 0xff) = true
-          i += 1
-        }
-        val distinct = seen.count(identity)
-        val rleBytes = 2L * runs
-        (r.media_id, n, runs, distinct, rleBytes,
-          if (n == 0) 0L else rleBytes * 1000000L / n, rleBytes < n)
+    grayOp(ds) { (id, _, px) =>
+      val n = px.length
+      var runs = if (n == 0) 0 else 1
+      var i = 1
+      val seen = new Array[Boolean](256)
+      if (n > 0) seen(px(0)) = true
+      while (i < n) {
+        if (px(i) != px(i - 1)) runs += 1
+        seen(px(i)) = true
+        i += 1
       }
+      val distinct = seen.count(identity)
+      val rleBytes = 2L * runs
+      Some((id, n, runs, distinct, rleBytes,
+        if (n == 0) 0L else rleBytes * 1000000L / n, rleBytes < n))
     }.toDF("doc_id", "n_px", "n_runs", "n_distinct", "rle_bytes",
       "ratio_ppm", "compressible")
   }
@@ -2576,30 +2651,31 @@ object Multimodal {
     * ord() pixels. The fold over the dithered 0/255 stream pins the
     * tile PHASE — a transposed or shifted matrix flips bits
     * everywhere.
+    *
+    * Gated as m34 by [[pgmGate]]: the oracle replays the tile lookup and
+    * the fold from ord() pixels.
     */
   private val Bayer4 = Array(0, 8, 2, 10, 12, 4, 14, 6, 3, 11, 1, 9, 15, 7, 13, 5)
 
   def orderedDither(ds: Dataset[MediaRow]): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        var white = 0
-        var acc = 0L
-        var y = 0
-        while (y < img.height) {
-          var x = 0
-          while (x < img.width) {
-            val v = img.pixels(y * img.width + x) & 0xff
-            val b = Bayer4((y % 4) * 4 + (x % 4))
-            val o = if (v > 16 * b + 8) 255 else 0
-            if (o == 255) white += 1
-            acc = (acc * 31 + o) % 1000000007L
-            x += 1
-          }
-          y += 1
+    grayOp(ds) { (id, img, px) =>
+      var white = 0
+      var acc = 0L
+      var y = 0
+      while (y < img.height) {
+        var x = 0
+        while (x < img.width) {
+          val v = px(y * img.width + x)
+          val b = Bayer4((y % 4) * 4 + (x % 4))
+          val o = if (v > 16 * b + 8) 255 else 0
+          if (o == 255) white += 1
+          acc = (acc * 31 + o) % 1000000007L
+          x += 1
         }
-        (r.media_id, img.width * img.height, white, acc)
+        y += 1
       }
+      Some((id, img.width * img.height, white, acc))
     }.toDF("doc_id", "n_px", "n_white", "dith_checksum")
   }
 
@@ -2618,80 +2694,37 @@ object Multimodal {
     * Scale shape: decode + pair walk in one map per image (the
     * co-occurrence "matrix" never materializes — the three sums stream
     * over pairs); no shuffle, the m05 discipline.
+    *
+    * Gated as m35 by [[pgmGate]]: the oracle rebuilds pairs by joining
+    * ord() pixels at x+1 and replays the three sums.
     */
   def glcmStats(ds: Dataset[MediaRow]): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        val w = img.width
-        val nPairs = (w - 1).toLong * img.height
-        var contrast = 0L
-        var homSum = 0L
-        val cc = new java.util.HashMap[Int, Long]()
-        var y = 0
-        while (y < img.height) {
-          var x = 0
-          while (x < w - 1) {
-            val a = img.pixels(y * w + x) & 0xff
-            val b = img.pixels(y * w + x + 1) & 0xff
-            val d = (a - b).toLong
-            contrast += d * d
-            homSum += 1000000L / ((1 + d * d) * nPairs)
-            cc.merge(a * 256 + b, 1L, (p, q) => p + q)
-            x += 1
-          }
-          y += 1
+    grayOp(ds) { (id, img, px) =>
+      val w = img.width
+      val nPairs = (w - 1).toLong * img.height
+      var contrast = 0L
+      var homSum = 0L
+      val cc = new java.util.HashMap[Int, Long]()
+      var y = 0
+      while (y < img.height) {
+        var x = 0
+        while (x < w - 1) {
+          val a = px(y * w + x)
+          val b = px(y * w + x + 1)
+          val d = (a - b).toLong
+          contrast += d * d
+          homSum += 1000000L / ((1 + d * d) * nPairs)
+          cc.merge(a * 256 + b, 1L, (p, q) => p + q)
+          x += 1
         }
-        var energy = 0L
-        val it = cc.values.iterator()
-        while (it.hasNext) { val c = it.next(); energy += c * c }
-        (r.media_id, nPairs, contrast, energy, homSum)
+        y += 1
       }
+      var energy = 0L
+      val it = cc.values.iterator()
+      while (it.hasNext) { val c = it.next(); energy += c * c }
+      Some((id, nPairs, contrast, energy, homSum))
     }.toDF("doc_id", "n_pairs", "contrast", "energy_num", "homogeneity_ppm")
-  }
-
-  /** m35 gate entry: the pair walk over [[docPgmRows]]; the oracle
-    * rebuilds pairs by joining ord() pixels at x+1 and replays the
-    * three sums.
-    */
-  def glcmGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    glcmStats(docPgmRows(spark, sfDir)).orderBy($"doc_id")
-  }
-
-  /** m34 gate entry: the Bayer walk over [[docPgmRows]]; the oracle
-    * replays the tile lookup and the fold from ord() pixels.
-    */
-  def orderedDitherGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    orderedDither(docPgmRows(spark, sfDir)).orderBy($"doc_id")
-  }
-
-  /** m33 gate entry: the run census over [[docPgmRows]]; the oracle
-    * rebuilds pixels from ord() and counts runs with a lag window.
-    */
-  def rleSignalGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rleSignal(docPgmRows(spark, sfDir)).orderBy($"doc_id")
-  }
-
-  /** m32 gate entry: the patch walk over [[docPgmRows]]; the oracle
-    * rebuilds pixels from ord(), assigns each to its (row div p,
-    * col div p) patch, and replays stats + the row-major fold.
-    */
-  def patchifyGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    patchify(docPgmRows(spark, sfDir))
-      .orderBy($"doc_id", $"patch_row", $"patch_col")
-  }
-
-  /** m31 gate entry: equalization over the [[docPgmRows]] rasters; the
-    * oracle rebuilds pixels from ord(), recomputes the per-image CDF
-    * with a window, and replays the remap + fold.
-    */
-  def histEqualizeGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    histEqualize(docPgmRows(spark, sfDir)).orderBy($"doc_id")
   }
 
   /** Shared single-threshold Otsu argmax over a gray pixel array — the
@@ -2755,24 +2788,17 @@ object Multimodal {
     * Scale shape: decode + histogram + the ≤256-candidate argmax +
     * remap in ONE map over the binary column — no shuffle, the m05
     * discipline.
+    *
+    * Gated as m36 by [[pgmGate]] over the PGM documents.
     */
   def otsuThreshold(ds: Dataset[MediaRow]): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        val px = img.pixels.map(_ & 0xff)
-        val (t, score) = otsuThresholdOf(px)
-        val out = px.map(p => if (p > t) 255 else 0)
-        (r.media_id, t, score, out.count(_ == 0).toLong,
-          out.count(_ == 255).toLong, byteChecksum(out.map(_.toByte)))
-      }
+    grayOp(ds) { (id, _, px) =>
+      val (t, score) = otsuThresholdOf(px)
+      val out = px.map(p => if (p > t) 255 else 0)
+      Some((id, t, score, out.count(_ == 0).toLong,
+        out.count(_ == 255).toLong, byteChecksum(out.map(_.toByte))))
     }.toDF("doc_id", "threshold", "score", "n_bg", "n_fg", "bin_checksum")
-  }
-
-  /** m36 gate entry: [[otsuThreshold]] over the PGM documents. */
-  def otsuGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    otsuThreshold(docPgmRows(spark, sfDir)).orderBy($"doc_id")
   }
 
   /** Sobel edge density (m37) — the first real convolution over the
@@ -2793,43 +2819,36 @@ object Multimodal {
     * binary column — no shuffle, the m05 discipline (at real
     * resolutions the walk is width×height×9 multiplies per image,
     * embarrassingly parallel across rows of the corpus).
+    *
+    * Gated as m37 by [[pgmGate]] over the PGM documents.
     */
   def sobelEdges(ds: Dataset[MediaRow], threshold: Int = 128): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        val w = img.width
-        val h = img.height
-        val px = img.pixels.map(_ & 0xff)
-        val mags = for (y <- 1 until h - 1; x <- 1 until w - 1) yield {
-          var gx = 0
-          var gy = 0
-          var dy = -1
-          while (dy <= 1) {
-            var dx = -1
-            while (dx <= 1) {
-              val v = px((y + dy) * w + (x + dx))
-              gx += dx * (2 - math.abs(dy)) * v
-              gy += dy * (2 - math.abs(dx)) * v
-              dx += 1
-            }
-            dy += 1
+    grayOp(ds) { (id, img, px) =>
+      val w = img.width
+      val h = img.height
+      val mags = for (y <- 1 until h - 1; x <- 1 until w - 1) yield {
+        var gx = 0
+        var gy = 0
+        var dy = -1
+        while (dy <= 1) {
+          var dx = -1
+          while (dx <= 1) {
+            val v = px((y + dy) * w + (x + dx))
+            gx += dx * (2 - math.abs(dy)) * v
+            gy += dy * (2 - math.abs(dx)) * v
+            dx += 1
           }
-          math.abs(gx) + math.abs(gy)
+          dy += 1
         }
-        val chk = mags.foldLeft(0L)((acc, m) => (acc * 31 + m) % 1000000007L)
-        (r.media_id, mags.length.toLong,
-          mags.count(_ >= threshold).toLong, mags.map(_.toLong).sum,
-          if (mags.isEmpty) 0L else mags.max.toLong, chk)
+        math.abs(gx) + math.abs(gy)
       }
+      val chk = mags.foldLeft(0L)((acc, m) => (acc * 31 + m) % 1000000007L)
+      Some((id, mags.length.toLong,
+        mags.count(_ >= threshold).toLong, mags.map(_.toLong).sum,
+        if (mags.isEmpty) 0L else mags.max.toLong, chk))
     }.toDF("doc_id", "n_interior", "n_edges", "mag_sum", "mag_max",
       "edge_checksum")
-  }
-
-  /** m37 gate entry: [[sobelEdges]] over the PGM documents. */
-  def sobelGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    sobelEdges(docPgmRows(spark, sfDir)).orderBy($"doc_id")
   }
 
   /** Connected-component labeling on the Otsu-binarized raster (m38) —
@@ -2854,48 +2873,41 @@ object Multimodal {
     * pixels in ONE map over the binary column — no shuffle, the m05
     * discipline (at real resolutions this is the standard two-pass
     * labeling, still per-image local).
+    *
+    * Gated as m38 by [[pgmGate]] over the PGM documents.
     */
   def ccLabel(ds: Dataset[MediaRow]): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        val w = img.width
-        val h = img.height
-        val px = img.pixels.map(_ & 0xff)
-        val t = otsuThresholdOf(px)._1 // the ONE m36 threshold definition
-        val fg = px.map(_ > t)
-        // union-find over foreground pixels, 4-connectivity
-        val parent = Array.tabulate(px.length)(identity)
-        def find(a: Int): Int = {
-          var x = a
-          while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-          x
-        }
-        def union(a: Int, b: Int): Unit = {
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        }
-        for (y <- 0 until h; x <- 0 until w if fg(y * w + x)) {
-          val i = y * w + x
-          if (x + 1 < w && fg(i + 1)) union(i, i + 1)
-          if (y + 1 < h && fg(i + w)) union(i, i + w)
-        }
-        // label = 1-based min index of the component; background = 0
-        val labels = px.indices.map(i => if (fg(i)) find(i).toLong + 1 else 0L)
-        val sizes = labels.filter(_ > 0).groupBy(identity)
-          .map { case (_, g) => g.size.toLong }
-        val chk = labels.foldLeft(0L)((acc, l) => (acc * 31 + l) % 1000000007L)
-        (r.media_id, t, labels.count(_ > 0).toLong, sizes.size.toLong,
-          if (sizes.isEmpty) 0L else sizes.max, chk)
+    grayOp(ds) { (id, img, px) =>
+      val w = img.width
+      val h = img.height
+      val t = otsuThresholdOf(px)._1 // the ONE m36 threshold definition
+      val fg = px.map(_ > t)
+      // union-find over foreground pixels, 4-connectivity
+      val parent = Array.tabulate(px.length)(identity)
+      def find(a: Int): Int = {
+        var x = a
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
       }
+      def union(a: Int, b: Int): Unit = {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      for (y <- 0 until h; x <- 0 until w if fg(y * w + x)) {
+        val i = y * w + x
+        if (x + 1 < w && fg(i + 1)) union(i, i + 1)
+        if (y + 1 < h && fg(i + w)) union(i, i + w)
+      }
+      // label = 1-based min index of the component; background = 0
+      val labels = px.indices.map(i => if (fg(i)) find(i).toLong + 1 else 0L)
+      val sizes = labels.filter(_ > 0).groupBy(identity)
+        .map { case (_, g) => g.size.toLong }
+      val chk = labels.foldLeft(0L)((acc, l) => (acc * 31 + l) % 1000000007L)
+      Some((id, t, labels.count(_ > 0).toLong, sizes.size.toLong,
+        if (sizes.isEmpty) 0L else sizes.max, chk))
     }.toDF("doc_id", "threshold", "n_fg", "n_components", "max_component",
       "label_checksum")
-  }
-
-  /** m38 gate entry: [[ccLabel]] over the PGM documents. */
-  def ccLabelGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    ccLabel(docPgmRows(spark, sfDir)).orderBy($"doc_id")
   }
 
   /** Histogram entropy + dynamic-range stats (m39) — the Shannon
@@ -2908,32 +2920,25 @@ object Multimodal {
     * H_bits = H_num/(n·2^F), reported as floor millibits
     * H_num·1000 div (n·2^F). Plus distinct-level count and lo/hi
     * range. Map-only over REAL decoded pixels, the m05 discipline.
+    *
+    * Gated as m39 by [[pgmGate]] over the PGM documents.
     */
   def histEntropy(ds: Dataset[MediaRow]): DataFrame = {
     import ds.sparkSession.implicits._
     import graft.functions.IntLog
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        val px = img.pixels.map(_ & 0xff)
-        val n = px.length.toLong
-        val hist = new Array[Long](256)
-        px.foreach(v => hist(v) += 1)
-        val ln = IntLog.log2FixedRef(n)
-        var hNum = 0L
-        var levels = 0L
-        hist.foreach { c =>
-          if (c > 0) { levels += 1; hNum += c * (ln - IntLog.log2FixedRef(c)) }
-        }
-        (r.media_id, levels, px.min, px.max, hNum,
-          hNum * 1000 / (n * (1L << IntLog.F)))
+    grayOp(ds) { (id, _, px) =>
+      val n = px.length.toLong
+      val hist = new Array[Long](256)
+      px.foreach(v => hist(v) += 1)
+      val ln = IntLog.log2FixedRef(n)
+      var hNum = 0L
+      var levels = 0L
+      hist.foreach { c =>
+        if (c > 0) { levels += 1; hNum += c * (ln - IntLog.log2FixedRef(c)) }
       }
+      Some((id, levels, px.min, px.max, hNum,
+        hNum * 1000 / (n * (1L << IntLog.F))))
     }.toDF("doc_id", "n_levels", "lo", "hi", "h_num", "h_mbits")
-  }
-
-  /** m39 gate entry: [[histEntropy]] over the PGM documents. */
-  def histEntropyGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    histEntropy(docPgmRows(spark, sfDir)).orderBy($"doc_id")
   }
 
   /** Two-level Otsu (m40) — m36's argmax generalized to the 3-class
@@ -2954,58 +2959,51 @@ object Multimodal {
     * ≤levels²/2 candidate scan per image in ONE map over the binary
     * column — no shuffle, the m05 discipline (256 levels → ≤ 32k
     * candidates per image, trivially local).
+    *
+    * Gated as m40 by [[pgmGate]] over the PGM documents.
     */
   def otsu2Threshold(ds: Dataset[MediaRow]): DataFrame = {
     import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      decodeRasterPixels(r.content).filter(_.channels == 1).map { img =>
-        val px = img.pixels.map(_ & 0xff)
-        val hist = new Array[Long](256)
-        px.foreach(v => hist(v) += 1)
-        val present = (0 until 256).filter(hist(_) > 0)
-        // prefix counts/sums at each present level
-        val n0 = new Array[Long](present.length)
-        val s0 = new Array[Long](present.length)
-        var accN = 0L
-        var accS = 0L
-        present.zipWithIndex.foreach { case (v, i) =>
-          accN += hist(v); accS += v * hist(v); n0(i) = accN; s0(i) = accS
-        }
-        val (nTot, sTot) = (accN, accS)
-        // comparison keys in BigInt — ss² on the 2^20 grid wraps Int64
-        // past tiny rasters (the m36/otsuThresholdOf discipline); the
-        // reported Long score falls back to −1 if the exact value ever
-        // exceeds the Int64 grid (multi-megapixel images only)
-        var best = BigInt(-1)
-        var bt1 = -1
-        var bt2 = -1
-        for (i <- present.indices; j <- (i + 1) until present.length) {
-          val (nn1, ss1) = (n0(i), s0(i))
-          val (nn2, ss2) = (n0(j) - n0(i), s0(j) - s0(i))
-          val (nn3, ss3) = (nTot - n0(j), sTot - s0(j))
-          if (nn3 > 0) {
-            val score = BigInt(ss1) * ss1 * 1048576 / nn1 +
-              BigInt(ss2) * ss2 * 1048576 / nn2 +
-              BigInt(ss3) * ss3 * 1048576 / nn3
-            if (score > best) { best = score; bt1 = present(i); bt2 = present(j) }
-          }
-        }
-        val (t1, t2, score) =
-          if (bt1 < 0) (px.max, px.max, 0L)
-          else (bt1, bt2, if (best.isValidLong) best.toLong else -1L)
-        val q = px.map(v => if (v <= t1) 0 else if (v <= t2) 128 else 255)
-        val chk = q.foldLeft(0L)((acc, x) => (acc * 31 + x) % 1000000007L)
-        (r.media_id, t1, t2, score, q.count(_ == 0).toLong,
-          q.count(_ == 128).toLong, q.count(_ == 255).toLong, chk)
+    grayOp(ds) { (id, _, px) =>
+      val hist = new Array[Long](256)
+      px.foreach(v => hist(v) += 1)
+      val present = (0 until 256).filter(hist(_) > 0)
+      // prefix counts/sums at each present level
+      val n0 = new Array[Long](present.length)
+      val s0 = new Array[Long](present.length)
+      var accN = 0L
+      var accS = 0L
+      present.zipWithIndex.foreach { case (v, i) =>
+        accN += hist(v); accS += v * hist(v); n0(i) = accN; s0(i) = accS
       }
+      val (nTot, sTot) = (accN, accS)
+      // comparison keys in BigInt — ss² on the 2^20 grid wraps Int64
+      // past tiny rasters (the m36/otsuThresholdOf discipline); the
+      // reported Long score falls back to −1 if the exact value ever
+      // exceeds the Int64 grid (multi-megapixel images only)
+      var best = BigInt(-1)
+      var bt1 = -1
+      var bt2 = -1
+      for (i <- present.indices; j <- (i + 1) until present.length) {
+        val (nn1, ss1) = (n0(i), s0(i))
+        val (nn2, ss2) = (n0(j) - n0(i), s0(j) - s0(i))
+        val (nn3, ss3) = (nTot - n0(j), sTot - s0(j))
+        if (nn3 > 0) {
+          val score = BigInt(ss1) * ss1 * 1048576 / nn1 +
+            BigInt(ss2) * ss2 * 1048576 / nn2 +
+            BigInt(ss3) * ss3 * 1048576 / nn3
+          if (score > best) { best = score; bt1 = present(i); bt2 = present(j) }
+        }
+      }
+      val (t1, t2, score) =
+        if (bt1 < 0) (px.max, px.max, 0L)
+        else (bt1, bt2, if (best.isValidLong) best.toLong else -1L)
+      val q = px.map(v => if (v <= t1) 0 else if (v <= t2) 128 else 255)
+      val chk = q.foldLeft(0L)((acc, x) => (acc * 31 + x) % 1000000007L)
+      Some((id, t1, t2, score, q.count(_ == 0).toLong,
+        q.count(_ == 128).toLong, q.count(_ == 255).toLong, chk))
     }.toDF("doc_id", "t1", "t2", "score", "n_low", "n_mid", "n_high",
       "tri_checksum")
-  }
-
-  /** m40 gate entry: [[otsu2Threshold]] over the PGM documents. */
-  def otsu2Gate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    otsu2Threshold(docPgmRows(spark, sfDir)).orderBy($"doc_id")
   }
 
   /** m11 payload builder: a REAL PNG per document — the first 64 text
@@ -3017,18 +3015,11 @@ object Multimodal {
     * Inflater path and chunk-CRC verification, not a single easy
     * case.
     */
-  private def docPngRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        MediaRow(id, "image",
-          encodePng(8, 8, 1, px.getBytes("ISO-8859-1"),
-            y => ((id + y) % 5).toInt))
-      }
-  }
+  private def docPngRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "image") { (id, px) =>
+      encodePng(8, 8, 1, px.getBytes("ISO-8859-1"),
+        y => ((id + y) % 5).toInt)
+    }
 
   /** m11 gate entry: REAL PNG decode under the DuckDB gate — the
     * Spark side encodes each document's text prefix as a genuine
@@ -3042,13 +3033,8 @@ object Multimodal {
     * unfilter arithmetic) byte-agrees with an engine computing the
     * pixels from first principles.
     */
-  def pngChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docPngRows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def pngChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docPngRows(spark, sfDir))
 
   /** m23 payload builder: the 16-BIT sibling of the m11 PNG — sample
     * (x, y) = v·256 + (255 − v) over the first 64 text bytes, so the
@@ -3059,32 +3045,20 @@ object Multimodal {
     * m11's ord() arithmetic verbatim while the wire path runs the
     * whole 16-bit slice (bpp = 2 predictors, 2-byte scanlines).
     */
-  private def docPng16Rows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val v = px.getBytes("ISO-8859-1").map(_ & 0xff)
-        MediaRow(id, "image",
-          encodePng16Gray(8, 8, v.map(x => x * 256 + (255 - x)),
-            y => ((id + y) % 5).toInt))
-      }
-  }
+  private def docPng16Rows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "image") { (id, px) =>
+      val v = px.getBytes("ISO-8859-1").map(_ & 0xff)
+      encodePng16Gray(8, 8, v.map(x => x * 256 + (255 - x)),
+        y => ((id + y) % 5).toInt)
+    }
 
   /** m23 gate entry: [[pngChecksumGate]] over [[docPng16Rows]] —
     * hash-green proves the 16-bit scanline walk (bpp = 2 unfilter,
     * big-endian sample order, high-byte canonical reduction)
     * byte-agrees with the first-principles engine.
     */
-  def png16ChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docPng16Rows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def png16ChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docPng16Rows(spark, sfDir))
 
   /** m13 payload builder: the RGB sibling of the m11 PNG — the first
     * 192 text bytes as an 8×8 THREE-CHANNEL raster, filters again
@@ -3093,31 +3067,19 @@ object Multimodal {
     * exercises predictor distances the grayscale gate (bpp=1) never
     * touches — under the DuckDB gate, not just the specs.
     */
-  private def docPngRgbRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 192)
-      .select($"doc_id", substring($"text", 1, 192).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        MediaRow(id, "image",
-          encodePng(8, 8, 3, px.getBytes("ISO-8859-1"),
-            y => ((id + y) % 5).toInt))
-      }
-  }
+  private def docPngRgbRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 192, "image") { (id, px) =>
+      encodePng(8, 8, 3, px.getBytes("ISO-8859-1"),
+        y => ((id + y) % 5).toInt)
+    }
 
   /** m13 gate entry: [[pngChecksumGate]]'s RGB sibling over
     * [[docPngRgbRows]] — hash-green proves the 3-byte-per-pixel
     * unfilter arithmetic byte-agrees with an engine recomputing all
     * 192 samples from ord() first principles.
     */
-  def pngRgbChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docPngRgbRows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def pngRgbChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docPngRgbRows(spark, sfDir))
 
   /** m26 payload builder: a REAL QOI image per document — 8×8 RGB
     * where pixel j takes its value from text byte j/4 (each byte
@@ -3126,25 +3088,14 @@ object Multimodal {
     * swapped channels cannot pass), with repeats/near-values in
     * ordinary text exercising INDEX/DIFF/LUMA alongside the literals.
     */
-  private def docQoiRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 16)
-      .select($"doc_id", substring($"text", 1, 16).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val pixels = new Array[Byte](8 * 8 * 3)
-        var j = 0
-        while (j < 64) {
-          val v = px.charAt(j / 4).toInt & 0xff
-          pixels(j * 3) = v.toByte
-          pixels(j * 3 + 1) = ((v * 7 + 13) % 256).toByte
-          pixels(j * 3 + 2) = ((v * 31 + 5) % 256).toByte
-          j += 1
-        }
-        MediaRow(id, "image", encodeQoi(RasterImage("qoi", 8, 8, 3, pixels)))
+  private def docQoiRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 16, "image") { (_, px) =>
+      // pixel j is palette entry (text byte j/4)
+      val pixels = Array.tabulate(8 * 8 * 3) { k =>
+        DerangedPalette((px.charAt(k / 3 / 4).toInt & 0xff) * 3 + k % 3)
       }
-  }
+      encodeQoi(RasterImage("qoi", 8, 8, 3, pixels))
+    }
 
   /** m26 gate entry: REAL QOI decode under the DuckDB gate — the
     * Spark side walks genuine run/index/diff/luma/literal streams
@@ -3153,13 +3104,8 @@ object Multimodal {
     * the oracle recomputes every canonical pixel from ord()
     * arithmetic, never seeing a QOI byte.
     */
-  def qoiChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docQoiRows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def qoiChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docQoiRows(spark, sfDir))
 
   /** EXIF orientation normalization (m27) — the pixel permutation a
     * pipeline applies between decode and perceptual hashing (m06's
@@ -3239,33 +3185,18 @@ object Multimodal {
     * background) — so composition, disposal, transparency, and the
     * delta-rect geometry all decide the frame-2 canvas.
     */
-  private def docGifAnimRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    val pal = Array.tabulate(256 * 3) { k =>
-      val i = k / 3
-      (k % 3 match {
-        case 0 => i
-        case 1 => (i * 7 + 13) % 256
-        case _ => (i * 31 + 5) % 256
-      }).toByte
+  private def docGifAnimRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 80, "image") { (id, px) =>
+      val b = px.getBytes("ISO-8859-1")
+      val f1 = AnimFrameSpec(0, 0, 8, 8, delayCs = (id % 100).toInt,
+        disposal = 2, transparentIdx = -1, indices = b.take(64))
+      // patch indices fold to 0..7 so index 0 — the transparent
+      // entry — genuinely occurs (~1/8 of patch pixels)
+      val f2 = AnimFrameSpec(2, 2, 4, 4, delayCs = ((id + 37) % 100).toInt,
+        disposal = 0, transparentIdx = 0,
+        indices = b.slice(64, 80).map(v => ((v & 0xff) % 8).toByte))
+      encodeGifAnim(8, 8, DerangedPalette, bgIndex = 7, frames = Seq(f1, f2))
     }
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 80)
-      .select($"doc_id", substring($"text", 1, 80).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val b = px.getBytes("ISO-8859-1")
-        val f1 = AnimFrameSpec(0, 0, 8, 8, delayCs = (id % 100).toInt,
-          disposal = 2, transparentIdx = -1, indices = b.take(64))
-        // patch indices fold to 0..7 so index 0 — the transparent
-        // entry — genuinely occurs (~1/8 of patch pixels)
-        val f2 = AnimFrameSpec(2, 2, 4, 4, delayCs = ((id + 37) % 100).toInt,
-          disposal = 0, transparentIdx = 0,
-          indices = b.slice(64, 80).map(v => ((v & 0xff) % 8).toByte))
-        MediaRow(id, "image", encodeGifAnim(8, 8, pal, bgIndex = 7,
-          frames = Seq(f1, f2)))
-      }
-  }
 
   /** m28 gate entry: animated-GIF composition under the DuckDB gate —
     * the Spark side walks genuine GCE/descriptor/LZW blocks and
@@ -3296,26 +3227,11 @@ object Multimodal {
     * PLTE expansion (or expanded in the wrong channel order) would
     * still pass an identity-palette gate, never this one.
     */
-  private def docPngPalRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    val pal = Array.tabulate(256 * 3) { k =>
-      val i = k / 3
-      (k % 3 match {
-        case 0 => i
-        case 1 => (i * 7 + 13) % 256
-        case _ => (i * 31 + 5) % 256
-      }).toByte
+  private def docPngPalRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "image") { (id, px) =>
+      encodePngIndexed(8, 8, DerangedPalette, px.getBytes("ISO-8859-1"),
+        y => ((id + y) % 5).toInt)
     }
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        MediaRow(id, "image",
-          encodePngIndexed(8, 8, pal, px.getBytes("ISO-8859-1"),
-            y => ((id + y) % 5).toInt))
-      }
-  }
 
   /** m15 gate entry: indexed PNG decode under the DuckDB gate — the
     * Spark side inflates and unfilters the INDEX plane, then expands
@@ -3325,13 +3241,8 @@ object Multimodal {
     * unfilter at bpp=1, PLTE capture/ordering rules, triple-channel
     * expansion) byte-agrees with first principles.
     */
-  def pngPaletteChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docPngPalRows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def pngPaletteChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docPngPalRows(spark, sfDir))
 
   /** m12 payload builder: a REAL GIF87a per document — the first 64
     * text bytes as 8×8 palette indices over the 256-entry grayscale
@@ -3339,15 +3250,10 @@ object Multimodal {
     * (dictionary growth and width bumps happen for real on this data).
     */
   private def docGifRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
     val pal = Array.tabulate(256 * 3)(i => (i / 3).toByte)
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        MediaRow(id, "image", encodeGif(8, 8, pal, px.getBytes("ISO-8859-1")))
-      }
+    docMedia(spark, sfDir, 64, "image") { (_, px) =>
+      encodeGif(8, 8, pal, px.getBytes("ISO-8859-1"))
+    }
   }
 
   /** m12 gate entry: REAL GIF LZW decode under the DuckDB gate — the
@@ -3361,13 +3267,8 @@ object Multimodal {
     * proves the whole LZW decode chain byte-agrees with an engine
     * computing pixels from first principles.
     */
-  def gifChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docGifRows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def gifChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docGifRows(spark, sfDir))
 
   /** m17 payload builder: the ADAM7-INTERLACED sibling of the m11
     * PNG — same 8×8 grayscale raster from the first 64 text bytes,
@@ -3379,18 +3280,11 @@ object Multimodal {
     * reach-back is confined to the PASS geometry, the arithmetic the
     * progressive gates never touch.
     */
-  private def docPngAdam7Rows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        MediaRow(id, "image",
-          encodePng(8, 8, 1, px.getBytes("ISO-8859-1"),
-            idx => ((id + idx) % 5).toInt, adam7 = true))
-      }
-  }
+  private def docPngAdam7Rows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "image") { (id, px) =>
+      encodePng(8, 8, 1, px.getBytes("ISO-8859-1"),
+        idx => ((id + idx) % 5).toInt, adam7 = true)
+    }
 
   /** m17 gate entry: Adam7 PNG decode under the DuckDB gate — the
     * Spark side writes each document's text prefix through the
@@ -3404,13 +3298,8 @@ object Multimodal {
     * reconstructs the identical image through a completely different
     * wire layout.
     */
-  def pngAdam7ChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docPngAdam7Rows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def pngAdam7ChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docPngAdam7Rows(spark, sfDir))
 
   /** m18 payload builder: an RLE8-compressed BMP per document — the
     * first 64 text bytes as 8×8 palette indices over the m15 DERANGED
@@ -3418,26 +3307,11 @@ object Multimodal {
     * run-mode and absolute-mode literals both decode under the gate
     * (8-wide rows satisfy the absolute-mode len ≥ 3 rule every time).
     */
-  private def docBmpRleRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    val pal = Array.tabulate(256 * 3) { k =>
-      val i = k / 3
-      (k % 3 match {
-        case 0 => i
-        case 1 => (i * 7 + 13) % 256
-        case _ => (i * 31 + 5) % 256
-      }).toByte
+  private def docBmpRleRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "image") { (id, px) =>
+      encodeBmpRle8(8, 8, DerangedPalette, px.getBytes("ISO-8859-1"),
+        r => (id + r) % 2 == 0)
     }
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        MediaRow(id, "image",
-          encodeBmpRle8(8, 8, pal, px.getBytes("ISO-8859-1"),
-            r => (id + r) % 2 == 0))
-      }
-  }
 
   /** m18 gate entry: RLE8 BMP decode under the DuckDB gate — the
     * Spark side run-length-encodes each document's text prefix into a
@@ -3449,13 +3323,8 @@ object Multimodal {
     * pixels are compression-invariant, which is the claim under
     * test).
     */
-  def bmpRleChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docBmpRleRows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def bmpRleChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docBmpRleRows(spark, sfDir))
 
   /** m06 gate entry: [[perceptualHashes]] over REAL decoded pixels,
     * cross-engine — the oracle recomputes the 8×8 aHash (threshold at
@@ -3497,10 +3366,7 @@ object Multimodal {
     */
   def mediaMeta(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rows = Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
+    val rows = textPrefixes(spark, sfDir, 64)
       .map { case (id, px) =>
         val b = px.getBytes("ISO-8859-1")
         id % 3 match {
@@ -3511,10 +3377,7 @@ object Multimodal {
           case _ => MediaRow(id, "opaque", Array[Byte](0) ++ b)
         }
       }
-    rasterFeatures(rows).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
+    checksumReport(rows)
   }
 
   // ------------------------------------------------------------------
@@ -3551,48 +3414,15 @@ object Multimodal {
     * are legitimate inputs, the parseWavHeader convention).
     */
   def decodePcmSamples(c: Array[Byte]): Option[PcmAudio] = {
-    def leU16(off: Int): Int = (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8)
-    def leU32(off: Int): Long =
-      (c(off) & 0xffL) | ((c(off + 1) & 0xffL) << 8) |
-        ((c(off + 2) & 0xffL) << 16) | ((c(off + 3) & 0xffL) << 24)
-    def tag(off: Int, s: String): Boolean =
-      c(off) == s.charAt(0).toByte && c(off + 1) == s.charAt(1).toByte &&
-        c(off + 2) == s.charAt(2).toByte && c(off + 3) == s.charAt(3).toByte
-    if (c.length < 44 || !tag(0, "RIFF") || !tag(8, "WAVE")) return None
-    var i = 12L
-    var fmt: Option[(Int, Int, Int)] = None // (ch, rate, bits)
-    var codec = 1
-    var blockAlign = 0
-    var dataOff = -1
-    var dataSize = -1L
-    while (i + 8 <= c.length && (fmt.isEmpty || dataOff < 0)) {
-      val off = i.toInt
-      val size = leU32(off + 4)
-      val body = off + 8
-      if (tag(off, "fmt ") && size >= 16 && body + 16 <= c.length) {
-        val audioFmt = leU16(body)
-        val ch = leU16(body + 2)
-        val rate = leU32(body + 4)
-        blockAlign = leU16(body + 12)
-        val bits = leU16(body + 14)
-        // format 1 = integer PCM; 6/7 = G.711 A-law/µ-law companded
-        // bytes (always 8 wire bits, block align = channel count)
-        val pcmOk = audioFmt == 1 && (bits == 8 || bits == 16) &&
-          blockAlign == ch * (bits / 8)
-        val g711Ok = (audioFmt == 6 || audioFmt == 7) && bits == 8 &&
-          blockAlign == ch
-        if ((pcmOk || g711Ok) && ch >= 1 && ch <= 64 &&
-            rate >= 1 && rate <= (1 << 20)) {
-          codec = audioFmt
-          fmt = Some((ch, rate.toInt, bits))
-        } else return None // a lying fmt stays malformed
-      } else if (tag(off, "data")) {
-        dataOff = body
-        dataSize = size
-      }
-      i = body.toLong + size + (size % 2)
-    }
-    for ((ch, rate, bits) <- fmt; if dataOff >= 0) yield {
+    // format 1 = integer PCM; 6/7 = G.711 A-law/µ-law companded
+    // bytes (always 8 wire bits, block align = channel count)
+    val pcm = walkWav(c, f =>
+      (f.audioFmt == 1 && (f.bits == 8 || f.bits == 16) &&
+        f.blockAlign == f.channels * (f.bits / 8)) ||
+      ((f.audioFmt == 6 || f.audioFmt == 7) && f.bits == 8 &&
+        f.blockAlign == f.channels))
+    for ((f, dataOff, dataSize) <- pcm) yield {
+      val WavFmt(codec, ch, rate, blockAlign, bits) = f
       val bytesPer = bits / 8
       val avail = math.min(dataSize, (c.length - dataOff).toLong)
       val nFrames = (avail / blockAlign).toInt // whole frames only
@@ -3619,7 +3449,7 @@ object Multimodal {
           else ((c(o) & 0xff) | (c(o + 1) << 8)).toShort.toInt // LE sign-extend
         j += 1
       }
-      PcmAudio(rate, ch, bits, out)
+      PcmAudio(rate.toInt, ch, bits, out)
     }
   }
 
@@ -3628,29 +3458,12 @@ object Multimodal {
     * round-tripped through [[decodePcmSamples]]. Samples are truncated
     * to their low 16 bits — callers pass in-range amplitudes.
     */
-  def buildPcm16Wav(samples: Array[Int], sampleRate: Int): Array[Byte] = {
-    val dataSize = samples.length * 2
-    val out = new Array[Byte](44 + dataSize)
-    def putTag(off: Int, s: String): Unit =
-      (0 until 4).foreach(k => out(off + k) = s.charAt(k).toByte)
-    def putLe32(off: Int, v: Long): Unit =
-      (0 until 4).foreach(k => out(off + k) = ((v >> (8 * k)) & 0xff).toByte)
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    putTag(0, "RIFF"); putLe32(4, 36L + dataSize); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16L)
-    putLe16(20, 1); putLe16(22, 1) // PCM, mono
-    putLe32(24, sampleRate.toLong); putLe32(28, sampleRate.toLong * 2)
-    putLe16(32, 2); putLe16(34, 16) // block align, bits
-    putTag(36, "data"); putLe32(40, dataSize.toLong)
-    var j = 0
-    while (j < samples.length) {
-      putLe16(44 + j * 2, samples(j) & 0xffff)
-      j += 1
-    }
-    out
-  }
+  def buildPcm16Wav(samples: Array[Int], sampleRate: Int): Array[Byte] =
+    wavFile(1, 1, sampleRate, 16, pcm16Bytes(samples)) // PCM, mono
+
+  /** 16-bit little-endian PCM sample bytes: each value's low 16 bits. */
+  private def pcm16Bytes(samples: Array[Int]): Array[Byte] =
+    samples.flatMap(s => bytesOf(s, 2, little = true))
 
   /** Per-media signal features over REAL decoded samples: exact
     * integer disciplines throughout — peak = max |s|, sum_abs = Σ|s|
@@ -3703,24 +3516,8 @@ object Multimodal {
     * the raw companded bytes exactly as they go on the wire.
     */
   def buildG711Wav(codes: Array[Byte], sampleRate: Int,
-      aLaw: Boolean): Array[Byte] = {
-    val out = new Array[Byte](44 + codes.length)
-    def putTag(off: Int, s: String): Unit =
-      (0 until 4).foreach(k => out(off + k) = s.charAt(k).toByte)
-    def putLe32(off: Int, v: Long): Unit =
-      (0 until 4).foreach(k => out(off + k) = ((v >> (8 * k)) & 0xff).toByte)
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    putTag(0, "RIFF"); putLe32(4, 36L + codes.length); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16L)
-    putLe16(20, if (aLaw) 6 else 7); putLe16(22, 1) // G.711, mono
-    putLe32(24, sampleRate.toLong); putLe32(28, sampleRate.toLong)
-    putLe16(32, 1); putLe16(34, 8) // block align, wire bits
-    putTag(36, "data"); putLe32(40, codes.length.toLong)
-    codes.copyToArray(out, 44)
-    out
-  }
+      aLaw: Boolean): Array[Byte] =
+    wavFile(if (aLaw) 6 else 7, 1, sampleRate, 8, codes) // G.711, mono
 
   /** m20 payload builder: a REAL G.711 mono WAV per document — µ-law
     * for even doc_ids, A-law for odd, so BOTH expansion tables run
@@ -3729,18 +3526,12 @@ object Multimodal {
     * points across the corpus (ASCII alone never sets the sign bit,
     * which for µ-law would leave half of each expansion untested).
     */
-  private def docG711Rows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val bytes = px.getBytes("ISO-8859-1")
-        val codes = Array.tabulate(64)(j => (((bytes(j) & 0xff) * 7 + j) % 256).toByte)
-        MediaRow(id, "audio", buildG711Wav(codes, 8000, aLaw = id % 2 != 0))
-      }
-  }
+  private def docG711Rows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "audio") { (id, px) =>
+      val bytes = px.getBytes("ISO-8859-1")
+      val codes = Array.tabulate(64)(j => (((bytes(j) & 0xff) * 7 + j) % 256).toByte)
+      buildG711Wav(codes, 8000, aLaw = id % 2 != 0)
+    }
 
   /** m20 gate entry: G.711 expansion under the DuckDB gate — the
     * Spark side decodes genuine companded WAVs (doc parity picks
@@ -3771,18 +3562,12 @@ object Multimodal {
     * sample with ord() arithmetic, never seeing a binary payload
     * (the m05 bridge pattern).
     */
-  private def docWavRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val bytes = px.getBytes("ISO-8859-1")
-        val samples = Array.tabulate(64)(j => ((bytes(j) & 0xff) - 96) * 128)
-        MediaRow(id, "audio", buildPcm16Wav(samples, 8000))
-      }
-  }
+  private def docWavRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "audio") { (_, px) =>
+      val bytes = px.getBytes("ISO-8859-1")
+      val samples = Array.tabulate(64)(j => ((bytes(j) & 0xff) - 96) * 128)
+      buildPcm16Wav(samples, 8000)
+    }
 
   /** m07 gate entry: [[decodePcmSamples]] + [[pcmFeatures]] over real
     * binary WAVs, cross-engine — hash-green proves the RIFF chunk
@@ -3850,24 +3635,18 @@ object Multimodal {
     * 128 < 256) — the trim rule eats those too, which is exactly what
     * the shared first-loud definition pins cross-engine.
     */
-  private def docWavTrimRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val bytes = px.getBytes("ISO-8859-1")
-        def quiet(i: Long): Int = (((id + i) % 5) - 2).toInt
-        val lead = (id % 7).toInt
-        val tail = ((id / 7) % 5).toInt
-        val samples =
-          Array.tabulate(lead)(i => quiet(i.toLong)) ++
-          Array.tabulate(64)(j => ((bytes(j) & 0xff) - 96) * 128) ++
-          Array.tabulate(tail)(i => quiet(i.toLong))
-        MediaRow(id, "audio", buildPcm16Wav(samples, 8000))
-      }
-  }
+  private def docWavTrimRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "audio") { (id, px) =>
+      val bytes = px.getBytes("ISO-8859-1")
+      def quiet(i: Long): Int = (((id + i) % 5) - 2).toInt
+      val lead = (id % 7).toInt
+      val tail = ((id / 7) % 5).toInt
+      val samples =
+        Array.tabulate(lead)(i => quiet(i.toLong)) ++
+        Array.tabulate(64)(j => ((bytes(j) & 0xff) - 96) * 128) ++
+        Array.tabulate(tail)(i => quiet(i.toLong))
+      buildPcm16Wav(samples, 8000)
+    }
 
   /** m30 gate entry: REAL decode + trim over quiet-wrapped WAVs; the
     * oracle rebuilds the identical sample stream (quiet zones from
@@ -3943,29 +3722,9 @@ object Multimodal {
   def buildPcm16StereoWav(left: Array[Int], right: Array[Int],
       sampleRate: Int): Array[Byte] = {
     require(left.length == right.length, "channel length mismatch")
-    val n = left.length
-    val dataSize = n * 4
-    val out = new Array[Byte](44 + dataSize)
-    def putTag(off: Int, s: String): Unit =
-      (0 until 4).foreach(k => out(off + k) = s.charAt(k).toByte)
-    def putLe32(off: Int, v: Long): Unit =
-      (0 until 4).foreach(k => out(off + k) = ((v >> (8 * k)) & 0xff).toByte)
-    def putLe16(off: Int, v: Int): Unit = {
-      out(off) = (v & 0xff).toByte; out(off + 1) = ((v >> 8) & 0xff).toByte
-    }
-    putTag(0, "RIFF"); putLe32(4, 36L + dataSize); putTag(8, "WAVE")
-    putTag(12, "fmt "); putLe32(16, 16L)
-    putLe16(20, 1); putLe16(22, 2) // PCM, stereo
-    putLe32(24, sampleRate.toLong); putLe32(28, sampleRate.toLong * 4)
-    putLe16(32, 4); putLe16(34, 16) // block align, bits
-    putTag(36, "data"); putLe32(40, dataSize.toLong)
-    var j = 0
-    while (j < n) {
-      putLe16(44 + j * 4, left(j) & 0xffff)
-      putLe16(46 + j * 4, right(j) & 0xffff)
-      j += 1
-    }
-    out
+    val frames = Array.tabulate(2 * left.length)(k =>
+      if (k % 2 == 0) left(k / 2) else right(k / 2))
+    wavFile(1, 2, sampleRate, 16, pcm16Bytes(frames)) // PCM, stereo
   }
 
   /** m29 payload builder: a REAL stereo WAV per document — left from
@@ -3973,20 +3732,14 @@ object Multimodal {
     * 32 with a +1 nudge on odd frames so L+R is genuinely odd there
     * (the downmix floor is then a real decision, not an exact /2).
     */
-  private def docStereoWavRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 64)
-      .select($"doc_id", substring($"text", 1, 64).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val b = px.getBytes("ISO-8859-1")
-        val left = Array.tabulate(32)(j => ((b(j) & 0xff) - 96) * 128)
-        val right = Array.tabulate(32)(j =>
-          ((b(32 + j) & 0xff) - 96) * 128 + (j % 2))
-        MediaRow(id, "audio", buildPcm16StereoWav(left, right, 8000))
-      }
-  }
+  private def docStereoWavRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 64, "audio") { (_, px) =>
+      val b = px.getBytes("ISO-8859-1")
+      val left = Array.tabulate(32)(j => ((b(j) & 0xff) - 96) * 128)
+      val right = Array.tabulate(32)(j =>
+        ((b(32 + j) & 0xff) - 96) * 128 + (j % 2))
+      buildPcm16StereoWav(left, right, 8000)
+    }
 
   /** Stereo decode + integer downmix (m29) — the channel-layout half
     * of PCM decode the mono gates never touch: frames DE-INTERLEAVE
@@ -4331,13 +4084,14 @@ object Multimodal {
     val major = c(3) & 0xff
     if (major != 3 && major != 4) return None
     if ((c(4) & 0xff) == 0xff) return None // revision 0xFF is reserved
-    var size = 0
-    var i = 6
-    while (i < 10) {
-      if ((c(i) & 0x80) != 0) return None // synchsafe bytes: bit 7 clear
-      size = (size << 7) | (c(i) & 0x7f)
-      i += 1
-    }
+    // four 7-bit groups, most significant first; −1 when a byte has bit
+    // 7 set (synchsafe bytes keep it clear)
+    def synchsafe(at: Int): Int =
+      (at until at + 4).foldLeft(0) { (v, k) =>
+        if (v < 0 || (c(k) & 0x80) != 0) -1 else (v << 7) | (c(k) & 0x7f)
+      }
+    val size = synchsafe(6)
+    if (size < 0) return None
     val end = 10 + size
     if (end > c.length) return None
     var off = 10
@@ -4347,18 +4101,7 @@ object Multimodal {
       val id = new String(c, off, 4, "ISO-8859-1")
       if (!id.forall(ch => (ch >= 'A' && ch <= 'Z') || (ch >= '0' && ch <= '9')))
         return None
-      var fsz = 0
-      if (major == 4) {
-        var k = off + 4
-        while (k < off + 8) {
-          if ((c(k) & 0x80) != 0) return None
-          fsz = (fsz << 7) | (c(k) & 0x7f)
-          k += 1
-        }
-      } else {
-        fsz = ((c(off + 4) & 0xff) << 24) | ((c(off + 5) & 0xff) << 16) |
-          ((c(off + 6) & 0xff) << 8) | (c(off + 7) & 0xff)
-      }
+      val fsz = if (major == 4) synchsafe(off + 4) else beI32(c, off + 4)
       if (fsz < 1 || off + 10 + fsz > end) return None
       val body = off + 10
       if (id.charAt(0) == 'T') {
@@ -4385,19 +4128,14 @@ object Multimodal {
   def encodeId3v2(major: Int, title: String, artist: String,
       album: String): Array[Byte] = {
     require(major == 3 || major == 4, s"ID3v2.3 or .4 only: $major")
+    def synchsafe(v: Int): Array[Byte] =
+      Array(21, 14, 7, 0).map(shift => ((v >> shift) & 0x7f).toByte)
     def frame(id: String, txt: String): Array[Byte] = {
       val bodyLen = 1 + txt.length
       val out = new Array[Byte](10 + bodyLen)
       id.getBytes("ISO-8859-1").copyToArray(out, 0)
-      if (major == 4) {
-        out(4) = ((bodyLen >> 21) & 0x7f).toByte
-        out(5) = ((bodyLen >> 14) & 0x7f).toByte
-        out(6) = ((bodyLen >> 7) & 0x7f).toByte
-        out(7) = (bodyLen & 0x7f).toByte
-      } else {
-        out(4) = (bodyLen >>> 24).toByte; out(5) = (bodyLen >>> 16).toByte
-        out(6) = (bodyLen >>> 8).toByte; out(7) = bodyLen.toByte
-      }
+      (if (major == 4) synchsafe(bodyLen) else bytesOf(bodyLen, 4, little = false))
+        .copyToArray(out, 4)
       // flags 00 00, then encoding 0 (latin1) + text
       out(10) = 0
       txt.getBytes("ISO-8859-1").copyToArray(out, 11)
@@ -4407,10 +4145,7 @@ object Multimodal {
       frame("TALB", album)
     val size = frames.length
     require(size < (1 << 28), "tag too large for a synchsafe size")
-    val hdr = Array[Byte]('I', 'D', '3', major.toByte, 0, 0,
-      ((size >> 21) & 0x7f).toByte, ((size >> 14) & 0x7f).toByte,
-      ((size >> 7) & 0x7f).toByte, (size & 0x7f).toByte)
-    hdr ++ frames
+    Array[Byte]('I', 'D', '3', major.toByte, 0, 0) ++ synchsafe(size) ++ frames
   }
 
   /** m21 payload builder: a REAL ID3v2 tag per document — v2.3 for
@@ -4418,21 +4153,15 @@ object Multimodal {
     * gate), title/artist/album as text slices whose LENGTHS vary per
     * document (1 + ord mod 12) so declared sizes genuinely differ.
     */
-  private def docId3Rows(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 40)
-      .select($"doc_id", substring($"text", 1, 40).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val o = px.map(_.toInt)
-        val tl = 1 + o(0) % 12; val al = 1 + o(1) % 12; val bl = 1 + o(2) % 12
-        (id, encodeId3v2(3 + (id % 2).toInt,
-          title = px.substring(3, 3 + tl),
-          artist = px.substring(15, 15 + al),
-          album = px.substring(27, 27 + bl)))
-      }
-  }
+  private def docId3Rows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 40, "audio") { (id, px) =>
+      val o = px.map(_.toInt)
+      val tl = 1 + o(0) % 12; val al = 1 + o(1) % 12; val bl = 1 + o(2) % 12
+      encodeId3v2(3 + (id % 2).toInt,
+        title = px.substring(3, 3 + tl),
+        artist = px.substring(15, 15 + al),
+        album = px.substring(27, 27 + bl))
+    }
 
   /** m21 gate entry: ID3v2 under the DuckDB gate — the Spark side
     * walks genuine tags in BOTH major versions (doc parity picks the
@@ -4446,10 +4175,10 @@ object Multimodal {
   def id3Gate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     docId3Rows(spark, sfDir)
-      .map { case (id, bytes) =>
-        val m = parseId3v2(bytes)
-          .getOrElse(throw new IllegalStateException(s"id3 parse failed for $id"))
-        (id, m.version, m.tagSize, m.nFrames, m.title, m.artist, m.album)
+      .map { r =>
+        val m = parseId3v2(r.content)
+          .getOrElse(throw new IllegalStateException(s"id3 parse failed for ${r.media_id}"))
+        (r.media_id, m.version, m.tagSize, m.nFrames, m.title, m.artist, m.album)
       }
       .toDF("doc_id", "version", "tag_size", "n_frames", "title", "artist",
         "album")
@@ -4476,31 +4205,13 @@ object Multimodal {
     * outside 1..8 → None, never throws.
     */
   def parseExifIfd0(c: Array[Byte]): Option[ExifMeta] = {
-    if (c.length < 8) return None
-    val little = c(0) == 'I'.toByte && c(1) == 'I'.toByte
-    val big = c(0) == 'M'.toByte && c(1) == 'M'.toByte
-    if (!little && !big) return None
-    def u16(off: Int): Int =
-      if (off + 2 > c.length) -1
-      else if (little) (c(off) & 0xff) | ((c(off + 1) & 0xff) << 8)
-      else ((c(off) & 0xff) << 8) | (c(off + 1) & 0xff)
-    def u32(off: Int): Long =
-      if (off + 4 > c.length) -1L
-      else if (little)
-        (c(off) & 0xffL) | ((c(off + 1) & 0xffL) << 8) |
-          ((c(off + 2) & 0xffL) << 16) | ((c(off + 3) & 0xffL) << 24)
-      else
-        ((c(off) & 0xffL) << 24) | ((c(off + 1) & 0xffL) << 16) |
-          ((c(off + 2) & 0xffL) << 8) | (c(off + 3) & 0xffL)
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
-    if (ifd < 8 || ifd + 2 > c.length) return None
-    val n = u16(ifd.toInt)
-    if (n <= 0 || ifd + 2 + 12L * n > c.length) return None
+    // IFD0's entries only: the next-IFD link is not read
+    val t = tiffIfd0(c, tail = 0).getOrElse(return None)
+    import t.{u16, u32}
     var width = -1L; var height = -1L; var orientation = -1
     var i = 0
-    while (i < n) {
-      val e = ifd.toInt + 2 + 12 * i
+    while (i < t.entries) {
+      val e = t.entry(i)
       val tag = u16(e); val tpe = u16(e + 2); val cnt = u32(e + 4)
       if (cnt == 1) {
         // SHORT value occupies the FIRST two bytes of the value field
@@ -4519,7 +4230,7 @@ object Multimodal {
       i += 1
     }
     if (width < 0 || height < 0 || orientation < 1 || orientation > 8) None
-    else Some(ExifMeta(if (little) "II" else "MM", width, height, orientation))
+    else Some(ExifMeta(if (t.little) "II" else "MM", width, height, orientation))
   }
 
   /** Minimal TIFF/EXIF IFD0 builder inverted by [[parseExifIfd0]] —
@@ -4529,19 +4240,9 @@ object Multimodal {
   def encodeExifIfd0(little: Boolean, width: Long, height: Long,
       orientation: Int): Array[Byte] = {
     require(orientation >= 1 && orientation <= 8, "orientation 1-8")
-    val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit =
-      if (little) { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-      else { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
-    def w32(v: Long): Unit =
-      if (little) {
-        out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-        out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-      } else {
-        out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-        out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-      }
-    out.write(if (little) 'I' else 'M'); out.write(if (little) 'I' else 'M')
+    val out = new ByteWriter(little)
+    import out.{u16 => w16, u32 => w32}
+    out.ascii(if (little) "II" else "MM")
     w16(42); w32(8L) // IFD0 directly after the header
     w16(3) // three entries
     def entry(tag: Int, tpe: Int, value: Long): Unit = {
@@ -4561,20 +4262,14 @@ object Multimodal {
     * width/height/orientation derived from text bytes for the ord()
     * oracle.
     */
-  private def docExifRows(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 4)
-      .select($"doc_id", substring($"text", 1, 4).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val o = px.map(_.toInt)
-        (id, encodeExifIfd0(little = id % 2 == 0,
-          width = 100L + o(0) * 17 + o(1),
-          height = 100L + o(1) * 13 + o(2),
-          orientation = 1 + (o(3) % 8)))
-      }
-  }
+  private def docExifRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 4, "image") { (id, px) =>
+      val o = px.map(_.toInt)
+      encodeExifIfd0(little = id % 2 == 0,
+        width = 100L + o(0) * 17 + o(1),
+        height = 100L + o(1) * 13 + o(2),
+        orientation = 1 + (o(3) % 8))
+    }
 
   /** m16 gate entry: EXIF IFD0 under the DuckDB gate — the Spark side
     * walks genuine TIFF directories in BOTH byte orders (doc parity
@@ -4587,10 +4282,10 @@ object Multimodal {
   def exifMetaGate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     docExifRows(spark, sfDir)
-      .map { case (id, bytes) =>
-        val m = parseExifIfd0(bytes)
-          .getOrElse(throw new IllegalStateException(s"exif parse failed for $id"))
-        (id, m.byteOrder, m.width, m.height, m.orientation)
+      .map { r =>
+        val m = parseExifIfd0(r.content)
+          .getOrElse(throw new IllegalStateException(s"exif parse failed for ${r.media_id}"))
+        (r.media_id, m.byteOrder, m.width, m.height, m.orientation)
       }
       .toDF("doc_id", "byte_order", "width", "height", "orientation")
       .orderBy($"doc_id")
@@ -4622,30 +4317,26 @@ object Multimodal {
     * what dedup/resize routing needs before a decode is scheduled.
     */
   def parseWebp(c: Array[Byte]): Option[WebpMeta] = {
-    def u8(i: Int) = c(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le24(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16)
-    def le32(i: Int): Long = (le16(i).toLong | (le16(i + 2).toLong << 16)) & 0xffffffffL
-    def tag(i: Int, s: String) = s.indices.forall(k => u8(i + k) == s.charAt(k))
-    if (c.length < 25 || !tag(0, "RIFF") || !tag(8, "WEBP")) return None
-    if (le32(4) != c.length - 8L) return None
-    val size = le32(16)
+    def le24(i: Int) = leU16(c, i) | (u8(c, i + 2) << 16)
+    if (c.length < 25 || !tagAt(c, 0, "RIFF") || !tagAt(c, 8, "WEBP")) return None
+    if (leU32(c, 4) != c.length - 8L) return None
+    val size = leU32(c, 16)
     if (20 + size > c.length) return None
-    if (tag(12, "VP8 ")) {
-      if (size < 10 || (u8(20) & 1) != 0) return None // keyframe bit
-      if (u8(23) != 0x9d || u8(24) != 0x01 || u8(25) != 0x2a) return None
-      val w = le16(26) & 0x3fff
-      val h = le16(28) & 0x3fff
+    if (tagAt(c, 12, "VP8 ")) {
+      if (size < 10 || (u8(c, 20) & 1) != 0) return None // keyframe bit
+      if (u8(c, 23) != 0x9d || u8(c, 24) != 0x01 || u8(c, 25) != 0x2a) return None
+      val w = leU16(c, 26) & 0x3fff
+      val h = leU16(c, 28) & 0x3fff
       if (w == 0 || h == 0) None else Some(WebpMeta("VP8 ", w, h))
-    } else if (tag(12, "VP8L")) {
-      if (size < 5 || u8(20) != 0x2f) return None
-      val bits = le32(21)
+    } else if (tagAt(c, 12, "VP8L")) {
+      if (size < 5 || u8(c, 20) != 0x2f) return None
+      val bits = leU32(c, 21)
       if (((bits >> 29) & 0x7) != 0) return None // version must be 0
       Some(WebpMeta("VP8L", ((bits & 0x3fff) + 1).toInt,
         (((bits >> 14) & 0x3fff) + 1).toInt))
-    } else if (tag(12, "VP8X")) {
-      if (size < 10 || (u8(20) & 0xc1) != 0) return None // reserved flag bits
-      if (u8(21) != 0 || u8(22) != 0 || u8(23) != 0) return None // reserved
+    } else if (tagAt(c, 12, "VP8X")) {
+      if (size < 10 || (u8(c, 20) & 0xc1) != 0) return None // reserved flag bits
+      if (u8(c, 21) != 0 || u8(c, 22) != 0 || u8(c, 23) != 0) return None // reserved
       Some(WebpMeta("VP8X", le24(24) + 1, le24(27) + 1))
     } else None
   }
@@ -4687,15 +4378,11 @@ object Multimodal {
       case other => throw new IllegalArgumentException(s"unknown variant: $other")
     }
     val pad = payload.length % 2
-    val out = new Array[Byte](20 + payload.length + pad)
-    def putTag(off: Int, s: String): Unit =
-      (0 until 4).foreach(k => out(off + k) = s.charAt(k).toByte)
-    def putLe32(off: Int, v: Long): Unit =
-      (0 until 4).foreach(k => out(off + k) = ((v >> (8 * k)) & 0xff).toByte)
-    putTag(0, "RIFF"); putLe32(4, out.length - 8L); putTag(8, "WEBP")
-    putTag(12, variant); putLe32(16, payload.length.toLong)
-    payload.copyToArray(out, 20)
-    out
+    val out = new ByteWriter(little = true)
+    out.ascii("RIFF"); out.u32(12L + payload.length + pad); out.ascii("WEBP")
+    out.ascii(variant); out.u32(payload.length.toLong)
+    out.write(payload); out.write(new Array[Byte](pad))
+    out.toByteArray
   }
 
   /** m25 payload builder: a REAL WebP container per document —
@@ -4705,26 +4392,19 @@ object Multimodal {
     * three bytes of VP8X's 24-bit fields), so a swapped or skipped
     * byte anywhere in the pack/unpack path cannot pass.
     */
-  private def docWebpRows(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 4)
-      .select($"doc_id", substring($"text", 1, 4).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val o = px.map(_.toInt)
-        val bytes = (id % 3) match {
-          case 0 => encodeWebp("VP8 ",
-            1 + (o(0) * 53 + o(1)) % 16383, 1 + (o(1) * 53 + o(2)) % 16383)
-          case 1 => encodeWebp("VP8L",
-            1 + (o(0) * 53 + o(1)) % 16384, 1 + (o(1) * 53 + o(2)) % 16384)
-          case _ => encodeWebp("VP8X",
-            1 + (o(0) * 65000 + o(1) * 251 + o(2)) % (1 << 24),
-            1 + (o(1) * 65000 + o(2) * 251 + o(3)) % (1 << 24))
-        }
-        (id, bytes)
+  private def docWebpRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 4, "image") { (id, px) =>
+      val o = px.map(_.toInt)
+      (id % 3) match {
+        case 0 => encodeWebp("VP8 ",
+          1 + (o(0) * 53 + o(1)) % 16383, 1 + (o(1) * 53 + o(2)) % 16383)
+        case 1 => encodeWebp("VP8L",
+          1 + (o(0) * 53 + o(1)) % 16384, 1 + (o(1) * 53 + o(2)) % 16384)
+        case _ => encodeWebp("VP8X",
+          1 + (o(0) * 65000 + o(1) * 251 + o(2)) % (1 << 24),
+          1 + (o(1) * 65000 + o(2) * 251 + o(3)) % (1 << 24))
       }
-  }
+    }
 
   /** m25 gate entry: WebP dimensions under the DuckDB gate — the
     * Spark side parses genuine containers through three distinct bit
@@ -4734,10 +4414,10 @@ object Multimodal {
   def webpMetaGate(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     docWebpRows(spark, sfDir)
-      .map { case (id, bytes) =>
-        val m = parseWebp(bytes)
-          .getOrElse(throw new IllegalStateException(s"webp parse failed for $id"))
-        (id, m.variant, m.width, m.height)
+      .map { r =>
+        val m = parseWebp(r.content)
+          .getOrElse(throw new IllegalStateException(s"webp parse failed for ${r.media_id}"))
+        (r.media_id, m.variant, m.width, m.height)
       }
       .toDF("doc_id", "variant", "width", "height")
       .orderBy($"doc_id")
@@ -4751,20 +4431,13 @@ object Multimodal {
     * therefore offset-stored StripOffsets/StripByteCounts arrays —
     * the indirection the inline-only m16 wire never exercises.
     */
-  private def docTiffRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 192)
-      .select($"doc_id", substring($"text", 1, 192).as("px"))
-      .as[(Long, String)]
-      .map { case (id, px) =>
-        val ch = if (id % 2 == 0) 1 else 3
-        val bytes = px.substring(0, 64 * ch).getBytes("ISO-8859-1")
-        MediaRow(id, "image",
-          encodeTiff(little = (id / 2) % 2 == 0, 8, 8, ch, bytes,
-            rowsPerStrip = 3))
-      }
-  }
+  private def docTiffRows(spark: SparkSession, sfDir: String): Dataset[MediaRow] =
+    docMedia(spark, sfDir, 192, "image") { (id, px) =>
+      val ch = if (id % 2 == 0) 1 else 3
+      val bytes = px.substring(0, 64 * ch).getBytes("ISO-8859-1")
+      encodeTiff(little = (id / 2) % 2 == 0, 8, 8, ch, bytes,
+        rowsPerStrip = 3)
+    }
 
   /** m19 gate entry: REAL TIFF strip decode under the DuckDB gate —
     * the Spark side walks genuine directories in both byte orders
@@ -4776,13 +4449,8 @@ object Multimodal {
     * TIFF byte. Hash-green proves the endian-dual array indirection
     * and the strip-assembly geometry byte-agree with first principles.
     */
-  def tiffChecksumGate(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    rasterFeatures(docTiffRows(spark, sfDir)).toDF()
-      .select($"media_id".as("doc_id"), $"format", $"width", $"height",
-        $"channels", $"pixel_checksum")
-      .orderBy($"doc_id")
-  }
+  def tiffChecksumGate(spark: SparkSession, sfDir: String): DataFrame =
+    checksumReport(docTiffRows(spark, sfDir))
 
   /** m14 payload builder: per document, a REAL FLAC header and a REAL
     * MP3 frame header whose fields derive from the first text bytes —
@@ -4792,10 +4460,7 @@ object Multimodal {
     */
   private def docCodecRows(spark: SparkSession, sfDir: String): Dataset[(Long, String, Array[Byte])] = {
     import spark.implicits._
-    Tables.documents(spark, sfDir)
-      .filter(length($"text") >= 8)
-      .select($"doc_id", substring($"text", 1, 8).as("px"))
-      .as[(Long, String)]
+    textPrefixes(spark, sfDir, 8)
       .flatMap { case (id, px) =>
         val o = px.map(_.toInt)
         val flac = encodeFlacHeader(

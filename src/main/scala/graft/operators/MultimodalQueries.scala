@@ -702,7 +702,7 @@ object MultimodalQueries {
 
     // m35: Haralick GLCM sums — horizontal pairs via idx+1 self-join,
     // exact contrast/energy/floor-ppm homogeneity
-    query("m35_glcm", Multimodal.glcmGate) oracle
+    query("m35_glcm", Multimodal.pgmGate(Multimodal.glcmStats, "doc_id")) oracle
       """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
         |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
         |        (CAST(i AS INT) - 1) % 8 AS x,
@@ -726,7 +726,7 @@ object MultimodalQueries {
 
     // m34: the Bayer 4x4 dither — white iff v > 16*B[y%4][x%4] + 8,
     // matrix as a flat list lookup, fold over the 0/255 stream
-    query("m34_dither", Multimodal.orderedDitherGate) oracle
+    query("m34_dither", Multimodal.pgmGate(Multimodal.orderedDither, "doc_id")) oracle
       """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
         |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
         |        (CAST(i AS INT) - 1) // 8 AS y, (CAST(i AS INT) - 1) % 8 AS x,
@@ -748,7 +748,7 @@ object MultimodalQueries {
     // m33: the run census — runs counted with a lag window over ord()
     // pixels, distinct bytes, naive 2-byte-per-run RLE size, floor-ppm
     // ratio
-    query("m33_rle_signal", Multimodal.rleSignalGate) oracle
+    query("m33_rle_signal", Multimodal.pgmGate(Multimodal.rleSignal, "doc_id")) oracle
       """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
         |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
         |        ord(text[CAST(i AS INT)]) AS v
@@ -768,7 +768,8 @@ object MultimodalQueries {
 
     // m32: the ViT patch walk — pixels from ord(), patch = (y div 4,
     // x div 4), row-major fold + exact stats per patch
-    query("m32_patchify", Multimodal.patchifyGate) oracle
+    query("m32_patchify", Multimodal.pgmGate(Multimodal.patchify(_),
+      "doc_id", "patch_row", "patch_col")) oracle
       """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
         |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
         |        (CAST(i AS INT) - 1) // 8 AS y, (CAST(i AS INT) - 1) % 8 AS x,
@@ -793,7 +794,7 @@ object MultimodalQueries {
     // m37: Sobel edge density — the 3×3 gradient stencil replayed
     // relationally (offset join, CASE-free algebraic kernel weights),
     // L1 magnitudes, rolling checksum in (y, x) row-major order
-    query("m37_sobel", Multimodal.sobelGate) oracle
+    query("m37_sobel", Multimodal.pgmGate(Multimodal.sobelEdges(_), "doc_id")) oracle
       """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
         |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
         |        CAST(ord(text[CAST(i AS INT)]) AS BIGINT) AS v
@@ -826,7 +827,7 @@ object MultimodalQueries {
     // m40: two-level Otsu — the 3-class threshold-pair argmax over
     // present-level pairs on the same 2^20 grid (OtsuCtes supplies the
     // per-level prefix sums; its single-threshold tail CTEs go unused)
-    query("m40_otsu2", Multimodal.otsu2Gate) oracle
+    query("m40_otsu2", Multimodal.pgmGate(Multimodal.otsu2Threshold, "doc_id")) oracle
       s"""WITH $OtsuCtes,
         |pairs AS (
         |  SELECT a.doc_id, a.v AS t1, b.v AS t2,
@@ -872,7 +873,7 @@ object MultimodalQueries {
     // levels with a non-empty upper class, tie-break smallest level;
     // flat images fall back to their single level), plus the binarized
     // stream's rolling checksum
-    query("m36_otsu", Multimodal.otsuGate) oracle
+    query("m36_otsu", Multimodal.pgmGate(Multimodal.otsuThreshold, "doc_id")) oracle
       s"""WITH $OtsuCtes,
         |o AS (SELECT v.doc_id, v.idx,
         |        CASE WHEN v.v > p.threshold THEN 255 ELSE 0 END AS ov
@@ -889,12 +890,14 @@ object MultimodalQueries {
     // m38: connected components on the m36-binarized raster — min-label
     // propagation to the provable 63-round 8×8 bound (OtsuCtes is the
     // ONE threshold definition shared with m36)
-    query("m38_cc_label", Multimodal.ccLabelGate) oracle ccLabelSql(rounds = 63),
+    query("m38_cc_label", Multimodal.pgmGate(Multimodal.ccLabel, "doc_id")) oracle
+      ccLabelSql(rounds = 63),
 
     // m39: histogram entropy — the Theil algebra on pixels
-    query("m39_hist_entropy", Multimodal.histEntropyGate) oracle histEntropySql,
+    query("m39_hist_entropy", Multimodal.pgmGate(Multimodal.histEntropy, "doc_id")) oracle
+      histEntropySql,
 
-    query("m31_hist_equalize", Multimodal.histEqualizeGate) oracle
+    query("m31_hist_equalize", Multimodal.pgmGate(Multimodal.histEqualize, "doc_id")) oracle
       """WITH d AS (SELECT doc_id, text FROM documents WHERE length(text) >= 64),
         |v AS (SELECT doc_id, CAST(i AS INT) AS idx,
         |        ord(text[CAST(i AS INT)]) AS v

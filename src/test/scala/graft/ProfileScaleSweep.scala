@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry
+
 /** Empirical scale sweep: enlarge the sf0.1 documents table Nx (doc_ids
   * offset per replica, texts salted so replicas are near- but not
   * exact-duplicates) and measure the production dedup paths at 1x / 4x /
@@ -315,7 +317,7 @@ object ProfileScaleSweep {
       time("normalize")(TextAnalysis.normalizeText(spark, dir))
       time("feature_hash")(TextAnalysis.featureHash(spark, dir))
       time("silence_trim")(Multimodal.silenceTrimGate(spark, dir))
-      time("hist_equalize")(Multimodal.histEqualizeGate(spark, dir))
+      time("hist_equalize")(SparkEntry.queries("m31_hist_equalize")(spark, dir))
       time("clean_mixture")(Sampling.cleanMixture(spark, dir))
       // fourth-session closing rows. bbit: d03's signature plan + a
       // projection. rptree: depth × per-node median windows — the
@@ -342,8 +344,8 @@ object ProfileScaleSweep {
       // replicas share words) — growth should track bpe_learn10's
       time("unigram_vocab")(graft.operators.Unigram.trainedVocab(spark, dir))
       time("burstiness")(TextAnalysis.burstiness(spark, dir))
-      time("dither")(Multimodal.orderedDitherGate(spark, dir))
-      time("glcm")(Multimodal.glcmGate(spark, dir))
+      time("dither")(SparkEntry.queries("m34_dither")(spark, dir))
+      time("glcm")(SparkEntry.queries("m35_glcm")(spark, dir))
       // round-12 second batch. s38/s39 ride the sized-k s16 edges
       // (fixed cell population): each fixed round is one edge-frame
       // equi-join + a keyed map-combinable sum — s21's superstep
@@ -359,9 +361,9 @@ object ProfileScaleSweep {
       time("zipf_fit")(TextAnalysis.zipfFit(spark, dir))
       time("js_drift")(TextAnalysis.jsDrift(spark, dir))
       time("tfidf_cosine")(Dedup.tfidfCosine(spark, dir))
-      time("otsu")(Multimodal.otsuGate(spark, dir))
-      time("sobel")(Multimodal.sobelGate(spark, dir))
-      time("cc_label")(Multimodal.ccLabelGate(spark, dir))
+      time("otsu")(SparkEntry.queries("m36_otsu")(spark, dir))
+      time("sobel")(SparkEntry.queries("m37_sobel")(spark, dir))
+      time("cc_label")(SparkEntry.queries("m38_cc_label")(spark, dir))
       // t48 is the t46 shape minus the rank window (vocab-bound);
       // s41's two ranking rounds are broadcast-query joins over the
       // enlarged candidate scan — corpus-linear, query side constant
@@ -371,8 +373,8 @@ object ProfileScaleSweep {
       // cap): one (doc, token) aggregation + a per-doc rank window —
       // the corpus-linear claim is the row. m39 is the map floor.
       time("tfidf_terms")(TextAnalysis.tfidfTerms(spark, dir))
-      time("hist_entropy")(Multimodal.histEntropyGate(spark, dir))
-      time("otsu2")(Multimodal.otsu2Gate(spark, dir))
+      time("hist_entropy")(SparkEntry.queries("m39_hist_entropy")(spark, dir))
+      time("otsu2")(SparkEntry.queries("m40_otsu2")(spark, dir))
       // p23: map-side bucket/hash projection + tiny-key rollups + a
       // broadcast ratio join back onto the scan — the linear floor.
       // s42 rides the sized-k s16 edges + one moment reduction.

@@ -3,7 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import graft.operators.Multimodal.{MediaFeatures, MediaRow}
 
 class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
@@ -1926,7 +1926,7 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     r2.getLong(7) shouldBe 0L
     // gate corpus: equalization stretches to the full range everywhere
     // (word-soup prefixes always carry at least two gray levels)
-    val gate = Multimodal.histEqualizeGate(spark, "/root/testdata/sf0.001")
+    val gate = SparkEntry.queries("m31_hist_equalize")(spark, "/root/testdata/sf0.001")
       .collect()
     gate should not be empty
     gate.foreach { r =>
@@ -1980,7 +1980,7 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     r4.getLong(5) shouldBe 0L
     // gate corpus: every 8x8 image splits into non-empty classes that
     // sum to 64 (word-soup prefixes always carry >= 2 gray levels)
-    val gate = Multimodal.otsuGate(spark, "/root/testdata/sf0.001").collect()
+    val gate = SparkEntry.queries("m36_otsu")(spark, "/root/testdata/sf0.001").collect()
     gate should not be empty
     gate.foreach { r =>
       r.getInt(1) should (be >= 0 and be <= 255)
@@ -2016,7 +2016,7 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     (r3.getLong(2), r3.getLong(3), r3.getLong(4)) shouldBe ((0L, 0L, 0L))
     // gate corpus: 8x8 images -> 36 interior pixels each, and the
     // word-soup rasters are never gradient-free
-    val gate = Multimodal.sobelGate(spark, "/root/testdata/sf0.001").collect()
+    val gate = SparkEntry.queries("m37_sobel")(spark, "/root/testdata/sf0.001").collect()
     gate should not be empty
     gate.foreach { r =>
       r.getLong(1) shouldBe 36L
@@ -2053,9 +2053,9 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     (r3.getLong(2), r3.getLong(3)) shouldBe ((2L, 2L))
     // gate corpus: thresholds agree with m36 (one algorithm, two call
     // sites), components partition the foreground
-    val cc = Multimodal.ccLabelGate(spark, "/root/testdata/sf0.001")
+    val cc = SparkEntry.queries("m38_cc_label")(spark, "/root/testdata/sf0.001")
       .collect().map(r => r.getLong(0) -> r).toMap
-    val otsu = Multimodal.otsuGate(spark, "/root/testdata/sf0.001")
+    val otsu = SparkEntry.queries("m36_otsu")(spark, "/root/testdata/sf0.001")
       .collect().map(r => r.getLong(0) -> r).toMap
     cc.keySet shouldBe otsu.keySet
     cc.foreach { case (id, r) =>
@@ -2085,7 +2085,7 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     out(3L).getLong(5) shouldBe 2000L
     // gate corpus: 8x8 word-soup rasters carry real entropy, bounded
     // by log2(64) = 6 bits
-    val gate = Multimodal.histEntropyGate(spark, "/root/testdata/sf0.001")
+    val gate = SparkEntry.queries("m39_hist_entropy")(spark, "/root/testdata/sf0.001")
       .collect()
     gate should not be empty
     gate.foreach { r =>
@@ -2122,7 +2122,7 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     (r3.getInt(1), r3.getInt(2), r3.getLong(3)) shouldBe ((9, 9, 0L))
     // gate corpus: classes partition 64 pixels, and the word-soup
     // rasters genuinely split three ways somewhere
-    val gate = Multimodal.otsu2Gate(spark, "/root/testdata/sf0.001").collect()
+    val gate = SparkEntry.queries("m40_otsu2")(spark, "/root/testdata/sf0.001").collect()
     gate should not be empty
     gate.foreach { r =>
       r.getLong(4) + r.getLong(5) + r.getLong(6) shouldBe 64L
@@ -2179,7 +2179,7 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     r2.getInt(2) shouldBe 8
     r2.getBoolean(6) shouldBe false
     // corpus laws: distinct never exceeds runs, runs never exceed px
-    val gate = Multimodal.rleSignalGate(spark, "/root/testdata/sf0.001")
+    val gate = SparkEntry.queries("m33_rle_signal")(spark, "/root/testdata/sf0.001")
       .collect()
     gate should not be empty
     gate.foreach { r =>
