@@ -18,6 +18,17 @@ import graft.Tables
   * marked deterministic fake kept ONLY as the fallback for payloads no
   * parser claims (format "stub", channels −1) — since r13 every m-gate
   * including m01–m04 runs over really-decoded content.
+  *
+  * Each wire primitive is declared once and shared: the byte-order
+  * reads and writes ([[ByteWriter]]), the RIFF/WAVE walk ([[walkWav]])
+  * and header writer, the GIF block walk ([[gifBlocks]]), the TIFF
+  * header and IFD0 bounds ([[tiffIfd0]]), and the PNG predictor and
+  * Adam7 grid. The m-gates share their scaffolding the same way: every
+  * payload builder reads its text prefix through [[docMedia]], the
+  * raster checksum gates share [[checksumReport]], and the gray ops
+  * share [[grayOp]]'s decode prologue and the [[pgmGate]] builder.
+  * MediaMutationSpec pins every decoder's outcome on seeded mutations
+  * of each wire format.
   */
 object Multimodal {
 
@@ -2067,13 +2078,12 @@ object Multimodal {
       bits_per_sample: Int, n_frames: Long, checksum: Long)
 
   /** REAL RIFF/WAVE header parse (public layout, dependency-free):
-    * "RIFF" + LE u32 riff size + "WAVE", then a chunk walk —
-    * [4-byte id][LE u32 size][payload, odd sizes padded to even] —
-    * for the `fmt ` chunk (PCM format 1 or IEEE-float format 3:
-    * channels LE u16, sample rate LE u32, block align LE u16, bits
-    * LE u16) and the `data` chunk (n_frames = data size / block
-    * align). Compressed/extensible formats and malformed chunk walks
-    * fall back to the stub — never throw on arbitrary payloads.
+    * the [[walkWav]] chunk walk for the `fmt ` chunk (PCM format 1 or
+    * IEEE-float format 3: channels LE u16, sample rate LE u32, block
+    * align LE u16, bits LE u16) and the `data` chunk (n_frames = data
+    * size / block align). Compressed/extensible formats and malformed
+    * chunk walks fall back to the stub — never throw on arbitrary
+    * payloads.
     *
     * Returns (sampleRate, channels, bitsPerSample, nFrames).
     */
@@ -3406,10 +3416,9 @@ object Multimodal {
     * for G.711. Float/24-bit fall to None like every other
     * undecodable payload, never throw).
     *
-    * Mirrors [[parseWavHeader]]'s chunk-walk semantics exactly — same
-    * Long walk index, same lying-fmt rejection, same odd-size padding
-    * — but additionally records the data chunk's OFFSET so the sample
-    * bytes can be read. A data chunk whose declared size overruns the
+    * Walks the chunks through [[walkWav]], the one walk
+    * [[parseWavHeader]] uses too, and reads the samples at the data
+    * chunk's offset. A data chunk whose declared size overruns the
     * payload decodes the frames actually present (header-only slices
     * are legitimate inputs, the parseWavHeader convention).
     */
