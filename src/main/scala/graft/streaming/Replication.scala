@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.osm.OsmChange
+import graft.osm.{OrcSink, OsmChange}
 
 /** Continuous replication ingestion — the reference's live Osmosis
   * pipeline (`--read-xml-change → --write-orc`,
@@ -62,10 +62,12 @@ object Replication {
 
   /** Write the initial planet generation (gen-0) and point `_CURRENT` at
     * it. Call once before [[start]]; subsequent runs resume from the
-    * checkpoint and the existing pointer.
+    * checkpoint and the existing pointer. Every generation is written
+    * by [[OrcSink.writePlanet]], so its part files carry the
+    * `osm.schema.version` footer like a batch planet write.
     */
   def initialize(planet: DataFrame, tableDir: String): Unit = {
-    planet.write.mode("overwrite").format("orc").save(s"$tableDir/gen-init")
+    OrcSink.writePlanet(planet, s"$tableDir/gen-init")
     writePointer(planet.sparkSession, tableDir, "gen-init")
   }
 
@@ -126,8 +128,7 @@ object Replication {
     if (cur == gen) return // replay of a fully committed batch: skip
     val base = spark.read.format("orc").load(s"$tableDir/$cur")
     val diff = OsmChange.read(spark, paths)
-    OsmChange.applyDiff(base, diff)
-      .write.mode("overwrite").format("orc").save(s"$tableDir/$gen")
+    OrcSink.writePlanet(OsmChange.applyDiff(base, diff), s"$tableDir/$gen")
     writePointer(spark, tableDir, gen)
     retire(spark, tableDir, keep = Set(gen, cur), keepGenerations)
   }

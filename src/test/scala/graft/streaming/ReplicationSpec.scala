@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
-import graft.osm.OsmChange
+import graft.osm.{OrcMetadata, OsmChange, OsmSchemas}
 
 /** End-to-end continuous replication (round-2 verdict "What's missing"
   * #1): tail a diff directory, fold each micro-batch into the live
@@ -53,6 +53,26 @@ class ReplicationSpec extends AnyFunSuite with Matchers with SparkSpec {
       .collect().map(_.toSeq).toSeq
   }
 
+  /** Every generation under `tableDir` has ORC part files, and each
+    * carries the schema version in its footer.
+    */
+  private def assertFootersStamped(tableDir: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val gens = new java.io.File(tableDir).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("gen-"))
+    gens should not be empty
+    gens.foreach { g =>
+      val parts = g.listFiles().filter(_.getName.endsWith(".orc"))
+      withClue(s"${g.getName}: ") { parts should not be empty }
+      parts.foreach { f =>
+        withClue(s"${g.getName}/${f.getName}: ") {
+          OrcMetadata.readValue(new org.apache.hadoop.fs.Path(f.getPath), conf,
+            OsmSchemas.SchemaVersionKey) shouldBe Some(OsmSchemas.SchemaVersion)
+        }
+      }
+    }
+  }
+
   test("streamed diffs land exactly where batch applyDiff lands") {
     val diffDir = Files.createTempDirectory("repl-diff").toString
     val tableDir = Files.createTempDirectory("repl-table").toString
@@ -63,10 +83,12 @@ class ReplicationSpec extends AnyFunSuite with Matchers with SparkSpec {
     Files.write(java.nio.file.Paths.get(f1), osc1.getBytes("UTF-8"))
     val empty = OsmChange.read(spark, f1).drop("op").where(lit(false))
     Replication.initialize(empty, tableDir)
+    assertFootersStamped(tableDir)
 
     val q = Replication.start(spark, diffDir, tableDir, ckDir)
     try {
       q.processAllAvailable()
+      assertFootersStamped(tableDir)
       val afterOne = Replication.currentTable(spark, tableDir)
       val expectOne = OsmChange.applyDiff(empty, OsmChange.read(spark, f1))
       canon(afterOne) shouldBe canon(expectOne)
@@ -76,6 +98,7 @@ class ReplicationSpec extends AnyFunSuite with Matchers with SparkSpec {
       val f2 = s"$diffDir/002.osc"
       Files.write(java.nio.file.Paths.get(f2), osc2.getBytes("UTF-8"))
       q.processAllAvailable()
+      assertFootersStamped(tableDir)
 
       val afterTwo = Replication.currentTable(spark, tableDir)
       val expectTwo = OsmChange.applyDiff(expectOne, OsmChange.read(spark, f2))
