@@ -7,12 +7,14 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.{Caches, SparkSpec}
 
-/** Planted positives for the two gated queries whose oracle compare at
-  * sf0.01 matches 0 rows against 0 rows: d02_ngram_jaccard and
-  * d07_decontaminate. Each writes a small documents table whose matches
-  * are known in advance, runs the gated builder with its default
-  * arguments, and asserts the exact rows, so a builder that emits
-  * nothing cannot pass.
+/** Planted positives for the gated queries whose oracle compare at
+  * sf0.01 is vacuous or nearly so: d02_ngram_jaccard and
+  * d07_decontaminate match 0 rows against 0 rows, d03_minhash_lsh and
+  * d05_embed_neardup 1 row against 1 row. Each case writes a small
+  * documents or embeddings table whose matches are known in advance,
+  * runs the gated builder with its default arguments, and asserts the
+  * exact rows, so a builder that emits nothing (or one pair) cannot
+  * pass.
   */
 class PlantedPositivesSpec extends AnyFunSuite with Matchers with SparkSpec {
 
@@ -25,6 +27,16 @@ class PlantedPositivesSpec extends AnyFunSuite with Matchers with SparkSpec {
     docs.map { case (id, text) => (id, text, "en", "synth", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
+    dir.getAbsolutePath
+  }
+
+  private def embeddingsDir(vecs: Seq[(Long, Seq[Float])]): String = {
+    val dir = Files.createTempDirectory("graft-planted").toFile
+    dir.deleteOnExit()
+    import spark.implicits._
+    vecs.map { case (id, v) => (id, v, 0) }
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
     dir.getAbsolutePath
   }
 
@@ -69,5 +81,51 @@ class PlantedPositivesSpec extends AnyFunSuite with Matchers with SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     Caches.releaseAll(spark)
     rows shouldBe Seq((1L, 6L), (3L, 10L))
+  }
+
+  test("d03 minHashLsh pairs exactly the planted duplicate and near-duplicate docs") {
+    // 40 distinct tokens give 38 distinct 3-shingles; changing the last
+    // token changes one of them (J = 37/39), so some band of 4 of the 16
+    // minhashes agrees; an exact copy agrees in every band
+    val base = words("kappa", 40)
+    val dir = sfDir(Seq(
+      0L -> base.mkString(" "),
+      10L -> base.mkString(" "),
+      20L -> (base.init :+ "omega").mkString(" "),
+      30L -> words("lambda", 40).mkString(" "),
+      40L -> words("mu", 40).mkString(" "),
+      // outside the doc_id % 10 sample
+      15L -> base.mkString(" ")))
+    val rows = Dedup.minHashLsh(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    Caches.releaseAll(spark)
+    rows shouldBe Seq((0L, 10L), (0L, 20L), (10L, 20L))
+  }
+
+  test("d05 embeddingNearDup reports exactly the planted pairs at cos >= 0.2") {
+    def vec(nonZero: (Int, Float)*): Seq[Float] = {
+      val v = Array.fill(64)(0f)
+      nonZero.foreach { case (i, x) => v(i) = x }
+      v.toSeq
+    }
+    val a = vec(0 -> 3f, 1 -> 4f)
+    val dir = embeddingsDir(Seq(
+      0L -> a,
+      50L -> vec(0 -> 4f, 1 -> 3f), // cos 24/25 with a
+      100L -> a, // an exact copy
+      150L -> vec(2 -> 1f),
+      200L -> vec(2 -> 1f, 3 -> 5f), // cos 1/sqrt(26) < 0.2 with 150
+      250L -> vec(2 -> 1f, 3 -> 4f), // cos 1/sqrt(17) with 150
+      // outside the vec_id % 50 == 0, vec_id < 50 * 256 sample
+      25L -> a,
+      12800L -> a))
+    val rows = Dedup.embeddingNearDup(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    Caches.releaseAll(spark)
+    def cos(dot: Double, n1: Double, n2: Double): Double =
+      BigDecimal(dot / math.sqrt(n1 * n2)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    rows shouldBe Seq(
+      (0L, 50L, 0.96), (0L, 100L, 1.0), (50L, 100L, 0.96),
+      (150L, 250L, cos(1, 1, 17)), (200L, 250L, cos(21, 26, 17)))
   }
 }
