@@ -654,28 +654,6 @@ object Multimodal {
     } else None
   }
 
-  /** REAL TIFF 6.0 baseline pixel decode (uncompressed strips) — the
-    * pixel-level completion of [[parseExifIfd0]]'s metadata walk, and
-    * the one raster decode that must handle BOTH byte orders AND
-    * offset-stored value arrays from the same wire format: a tag
-    * whose values exceed the 4-byte value field (3-sample
-    * BitsPerSample, multi-strip StripOffsets/StripByteCounts) stores
-    * an OFFSET to the array instead — the indirection layer the
-    * inline-only EXIF gate never touches.
-    *
-    * Decoded slice: Compression=1 (none), 8 bits per sample,
-    * PhotometricInterpretation 1 (BlackIsZero gray, 1 sample) or 2
-    * (RGB, 3 samples), chunky planar config, strip-organized (tiled
-    * TIFFs, WhiteIsZero, palette-color and every compressed variant
-    * return None — the caller falls back to header-only metadata).
-    * Strict throughout: entry tags must ascend (TIFF 6.0 p.15), every
-    * strip's byte count must equal rows-in-strip · width · samples,
-    * offsets must land inside the buffer, and the assembled pixel
-    * total must be exactly w·h·spp — a lying directory cannot decode.
-    *
-    * Scale shape: row-at-a-time inside `mapPartitions` like the other
-    * raster decodes; MaxDim and the w·h·ch product bound allocations.
-    */
   /** A TIFF file's IFD0 (TIFF 6.0 §2): the byte order from the II/MM
     * mark, bounds-checked reads in that order (−1 past either end of the
     * buffer), and the directory's offset and entry count. [[tiffIfd0]]
@@ -712,6 +690,28 @@ object Multimodal {
     Some(t)
   }
 
+  /** REAL TIFF 6.0 baseline pixel decode (uncompressed strips) — the
+    * pixel-level completion of [[parseExifIfd0]]'s metadata walk, and
+    * the one raster decode that must handle BOTH byte orders AND
+    * offset-stored value arrays from the same wire format: a tag
+    * whose values exceed the 4-byte value field (3-sample
+    * BitsPerSample, multi-strip StripOffsets/StripByteCounts) stores
+    * an OFFSET to the array instead — the indirection layer the
+    * inline-only EXIF gate never touches.
+    *
+    * Decoded slice: Compression=1 (none), 8 bits per sample,
+    * PhotometricInterpretation 1 (BlackIsZero gray, 1 sample) or 2
+    * (RGB, 3 samples), chunky planar config, strip-organized (tiled
+    * TIFFs, WhiteIsZero, palette-color and every compressed variant
+    * return None — the caller falls back to header-only metadata).
+    * Strict throughout: entry tags must ascend (TIFF 6.0 p.15), every
+    * strip's byte count must equal rows-in-strip · width · samples,
+    * offsets must land inside the buffer, and the assembled pixel
+    * total must be exactly w·h·spp — a lying directory cannot decode.
+    *
+    * Scale shape: row-at-a-time inside `mapPartitions` like the other
+    * raster decodes; MaxDim and the w·h·ch product bound allocations.
+    */
   private def decodeTiffPixels(c: Array[Byte]): Option[RasterImage] = {
     // the next-IFD link must fit after the entries
     val t = tiffIfd0(c, tail = 4).getOrElse(return None)
@@ -837,30 +837,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** REAL PNG pixel decode — dependency-free beyond the JDK: DEFLATE
-    * ships in `java.util.zip.Inflater`, so the only PNG-specific work
-    * is the chunk walk, the IDAT concatenation, and the five row
-    * filters the spec defines (None/Sub/Up/Average/Paeth with the
-    * exact integer predictor arithmetic of PNG §9 — unsigned bytes,
-    * Average truncates (a+b)/2, Paeth breaks ties a-then-b-then-c).
-    *
-    * Decoded slice: 8-bit depth, color types 0 (gray, 1 ch), 2 (RGB,
-    * 3 ch), 3 (indexed via PLTE), 6 (RGBA, 4 ch), progressive AND
-    * Adam7-interlaced (each of the seven passes is its own sub-image
-    * — own scanline widths, own filter bytes, predictors confined to
-    * the pass per PNG §8.2; empty passes are wholly absent from the
-    * stream; decoded pixels scatter to (x0+px·dx, y0+py·dy)).
-    * Out-of-slice images (16-bit, gray+alpha) and malformed streams —
-    * bad chunk CRC, truncated IDAT, inflated size ≠ Σ passes, a
-    * filter byte outside 0..4 — return None (the caller falls back to
-    * header-only metadata; never throws on arbitrary payloads). Chunk
-    * CRCs are verified with `java.util.zip.CRC32` (type + data, per
-    * PNG §5.3) so a corrupted stream cannot silently decode.
-    *
-    * Scale shape: called row-at-a-time inside `mapPartitions` — one
-    * image's buffers live at once; the MaxDim and w·h·ch bounds cap
-    * the allocation a lying header can demand.
-    */
   /** The PNG file signature (PNG §5.2). */
   private val PngSig: Array[Byte] =
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
@@ -895,6 +871,30 @@ object Multimodal {
       if (pa <= pb && pa <= pc) a else if (pb <= pc) b else cc
   }
 
+  /** REAL PNG pixel decode — dependency-free beyond the JDK: DEFLATE
+    * ships in `java.util.zip.Inflater`, so the only PNG-specific work
+    * is the chunk walk, the IDAT concatenation, and the five row
+    * filters the spec defines (None/Sub/Up/Average/Paeth with the
+    * exact integer predictor arithmetic of PNG §9 — unsigned bytes,
+    * Average truncates (a+b)/2, Paeth breaks ties a-then-b-then-c).
+    *
+    * Decoded slice: 8-bit depth, color types 0 (gray, 1 ch), 2 (RGB,
+    * 3 ch), 3 (indexed via PLTE), 6 (RGBA, 4 ch), progressive AND
+    * Adam7-interlaced (each of the seven passes is its own sub-image
+    * — own scanline widths, own filter bytes, predictors confined to
+    * the pass per PNG §8.2; empty passes are wholly absent from the
+    * stream; decoded pixels scatter to (x0+px·dx, y0+py·dy)).
+    * Out-of-slice images (16-bit, gray+alpha) and malformed streams —
+    * bad chunk CRC, truncated IDAT, inflated size ≠ Σ passes, a
+    * filter byte outside 0..4 — return None (the caller falls back to
+    * header-only metadata; never throws on arbitrary payloads). Chunk
+    * CRCs are verified with `java.util.zip.CRC32` (type + data, per
+    * PNG §5.3) so a corrupted stream cannot silently decode.
+    *
+    * Scale shape: called row-at-a-time inside `mapPartitions` — one
+    * image's buffers live at once; the MaxDim and w·h·ch bounds cap
+    * the allocation a lying header can demand.
+    */
   private def decodePngPixels(c: Array[Byte]): Option[RasterImage] = {
     if (c.length < 8 + 25) return None // sig + IHDR chunk + room for IEND
     if (!c.startsWith(PngSig)) return None
@@ -1733,23 +1733,22 @@ object Multimodal {
         while (!defl.finished()) buf.write(tmp, 0, defl.deflate(tmp))
         buf.toByteArray
       } finally defl.end()
-    val out = new java.io.ByteArrayOutputStream()
+    val out = new ByteWriter(little = false)
     out.write(PngSig)
-    def be(v: Int): Array[Byte] = bytesOf(v, 4, little = false)
     def chunk(tpe: String, data: Array[Byte]): Unit = {
-      out.write(be(data.length))
+      out.u32(data.length)
       val tb = tpe.getBytes("US-ASCII")
       out.write(tb)
       out.write(data)
       val crc = new java.util.zip.CRC32
       crc.update(tb); crc.update(data)
-      out.write(be(crc.getValue.toInt))
+      out.u32(crc.getValue)
     }
     val colorType = palette match {
       case Some(_) => 3
       case None => channels match { case 1 => 0; case 3 => 2; case _ => 6 }
     }
-    chunk("IHDR", be(width) ++ be(height) ++
+    chunk("IHDR", bytesOf(width, 4, little = false) ++ bytesOf(height, 4, little = false) ++
       Array((8 * byteDepth).toByte, colorType.toByte, 0.toByte, 0.toByte,
         (if (adam7) 1 else 0).toByte))
     palette.foreach(p => chunk("PLTE", p))
