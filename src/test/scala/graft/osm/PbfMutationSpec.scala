@@ -9,6 +9,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.read.PartitionReader
+import org.apache.spark.sql.sources._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -29,9 +31,12 @@ class PbfMutationSpec extends AnyFunSuite with Matchers with SparkSpec {
   private lazy val golden = Files.readAllBytes(Paths.get(PbfTestData.writeSample(dir)))
   private lazy val split = Files.readAllBytes(Paths.get(SplitPbf.write(dir)))
 
-  /** Row count and an order-free sum of the rows' content hashes. */
-  private def digest(readers: Seq[PartitionReader[InternalRow]]): (Long, Long) = {
-    val unsafe = UnsafeProjection.create(format.schema)
+  /** Row count and an order-free sum of the rows' content hashes; the
+    * rows hold the columns of `schema`.
+    */
+  private def digest(readers: Seq[PartitionReader[InternalRow]],
+      schema: StructType = format.schema): (Long, Long) = {
+    val unsafe = UnsafeProjection.create(schema)
     var n, h = 0L
     readers.foreach { r =>
       try while (r.next()) { n += 1; h += unsafe(r.get()).hashCode() }
@@ -52,8 +57,9 @@ class PbfMutationSpec extends AnyFunSuite with Matchers with SparkSpec {
       Array.empty, conf)))
   }
 
-  private def wholeRead(path: String, length: Long): (Long, Long) =
-    digest(Seq(format.reader(OsmFileRange(path, 0, length), format.schema, Array.empty, conf)))
+  private def wholeRead(path: String, length: Long, required: StructType = format.schema,
+      pushed: Array[Filter] = Array.empty): (Long, Long) =
+    digest(Seq(format.reader(OsmFileRange(path, 0, length), required, pushed, conf)), required)
 
   private def attempt[A](f: => A): Either[Throwable, A] =
     try Right(f) catch { case e: Exception => Left(e) }
@@ -157,5 +163,42 @@ class PbfMutationSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("mutated split file reads exactly or fails naming file and offset") {
     val (exact, failed) = fuzz("split", split, inputs = 30, seed = 37)
     failed should be > 20
+  }
+
+  /** The one-partition reads whose outcomes are pinned: the full schema,
+    * two pruned schemas and two pushed filters.
+    */
+  private val pinnedReads: Seq[(String, StructType, Array[Filter])] = {
+    def cols(names: String*) = StructType(names.map(format.schema(_)))
+    def dec(s: String) = new java.math.BigDecimal(s)
+    Seq(
+      ("full", format.schema, Array.empty[Filter]),
+      ("id,type,tags", cols("id", "type", "tags"), Array.empty[Filter]),
+      ("id,members", cols("id", "members"), Array.empty[Filter]),
+      ("type = way", format.schema, Array[Filter](EqualTo("type", "way"))),
+      ("lat/lon range", format.schema, Array[Filter](GreaterThanOrEqual("lat", dec("40")),
+        LessThan("lat", dec("51.6")), GreaterThan("lon", dec("-120")),
+        LessThanOrEqual("lon", dec("0.5")))))
+  }
+
+  test("pinned decode outcomes for full, pruned and pushed-filter reads") {
+    val pinned = Map(
+      ("golden", "full") -> (7L, -2070139667L),
+      ("golden", "id,type,tags") -> (7L, 1432987334L),
+      ("golden", "id,members") -> (7L, -4387534097L),
+      ("golden", "type = way") -> (1L, 1713531853L),
+      ("golden", "lat/lon range") -> (3L, -3711825674L),
+      ("split", "full") -> (82200L, 368932472329L),
+      ("split", "id,type,tags") -> (82200L, 111155394921L),
+      ("split", "id,members") -> (82200L, 411189579140L),
+      ("split", "type = way") -> (2000L, 44348260046L),
+      ("split", "lat/lon range") -> (1696L, -34177009779L))
+    val pinDir = Files.createTempDirectory("pbfpin")
+    val got = (for {
+      (file, bytes) <- Seq("golden" -> golden, "split" -> split)
+      path = Files.write(pinDir.resolve(s"$file.osm.pbf"), bytes).toString
+      (read, required, pushed) <- pinnedReads
+    } yield (file, read) -> wholeRead(path, bytes.length, required, pushed)).toMap
+    withClue(got.toSeq.sorted.mkString("\n", "\n", "\n")) { got shouldBe pinned }
   }
 }
