@@ -2,8 +2,6 @@ package graft.osm.pbf
 
 import org.apache.spark.sql.sources._
 
-import graft.osm.pbf.PbfDecode.{OsmEntity, OsmNode, OsmRelation, OsmWay}
-
 /** Source-level filter pushdown for the PBF reader (SURVEY §4.3 item 1).
   *
   * Two effects, both exact-superset-safe (Spark re-evaluates every
@@ -12,8 +10,8 @@ import graft.osm.pbf.PbfDecode.{OsmEntity, OsmNode, OsmRelation, OsmWay}
   *  - a `type` equality/IN filter skips decoding entire primitive
   *    groups of the excluded kinds (dense-node blocks are the bulk of a
   *    planet file — a ways-only scan never touches them);
-  *  - lat/lon range filters drop nodes outside the bbox before row
-  *    materialization, with bounds widened by 100 nanodegrees to cover
+  *  - lat/lon range filters drop nodes outside the bbox on their raw
+  *    nanodegrees, before any tag is written, with bounds widened by 100 nanodegrees to cover
   *    the decimal(·,7) rounding step; non-node rows are dropped too
   *    (their NULL coordinates can never satisfy a range predicate).
   */
@@ -32,19 +30,15 @@ object OsmPbfFilters {
     case _ => false
   }
 
-  /** Compiled predicate evaluated during decode. */
+  /** Compiled predicate evaluated during decode: the kinds to decode, and
+    * the box, in nanodegrees, a node must lie in.
+    */
   final case class Compiled(
       keepNodes: Boolean, keepWays: Boolean, keepRelations: Boolean,
       latMin: Long, latMax: Long, lonMin: Long, lonMax: Long) {
 
-    def keep(e: OsmEntity): Boolean = e match {
-      case n: OsmNode =>
-        keepNodes &&
-          n.latNano >= latMin && n.latNano <= latMax &&
-          n.lonNano >= lonMin && n.lonNano <= lonMax
-      case _: OsmWay => keepWays
-      case _: OsmRelation => keepRelations
-    }
+    def keepNode(latNano: Long, lonNano: Long): Boolean =
+      latNano >= latMin && latNano <= latMax && lonNano >= lonMin && lonNano <= lonMax
   }
 
   val KeepAll: Compiled = Compiled(

@@ -5,6 +5,13 @@ import java.util.zip.Inflater
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.types.{Decimal, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.osm.OsmSchemas
 import graft.osm.pbf.Proto.Reader
 
 /** OSM PBF decoding: fileformat (BlobHeader/Blob) + osmformat
@@ -18,34 +25,6 @@ import graft.osm.pbf.Proto.Reader
   * Blob framing anyway for split planning, so we decode natively.
   */
 object PbfDecode {
-
-  /** Entity metadata (osmformat Info / DenseInfo). */
-  final case class OsmInfo(
-      version: Long,
-      timestampMs: Option[Long],
-      changeset: Option[Long],
-      uid: Option[Long],
-      user: Option[String],
-      visible: Boolean)
-
-  val NoInfo: OsmInfo = OsmInfo(-1L, None, None, None, None, visible = true)
-
-  sealed trait OsmEntity {
-    def id: Long
-    def tags: Array[(String, String)]
-    def info: OsmInfo
-  }
-  /** latNano/lonNano are exact integer nanodegrees — decimal conversion
-    * never passes through a double (SURVEY §7.4 decimal rule).
-    */
-  final case class OsmNode(id: Long, tags: Array[(String, String)],
-      latNano: Long, lonNano: Long, info: OsmInfo) extends OsmEntity
-  final case class OsmWay(id: Long, tags: Array[(String, String)],
-      refs: Array[Long], info: OsmInfo) extends OsmEntity
-  /** memberTypes: 0=node 1=way 2=relation (osmformat enum). */
-  final case class OsmRelation(id: Long, tags: Array[(String, String)],
-      memberTypes: Array[Int], memberRefs: Array[Long],
-      memberRoles: Array[String], info: OsmInfo) extends OsmEntity
 
   /** One blob's framing within the file (for split planning). */
   final case class BlobSpan(blobType: String, headerStart: Long, dataStart: Long,
@@ -375,248 +354,349 @@ object PbfDecode {
 
   // ---- osmformat ---------------------------------------------------
 
-  private final class BlockCtx(
-      val strings: Array[String],
-      val granularity: Long,
-      val latOffset: Long,
-      val lonOffset: Long,
-      val dateGranularity: Long)
+  private val TypeNode = UTF8String.fromString("node")
+  private val TypeWay = UTF8String.fromString("way")
+  private val TypeRelation = UTF8String.fromString("relation")
+  /** Relation member types by their osmformat enum value. */
+  private val MemberTypes = Array(TypeNode, TypeWay, TypeRelation)
+  private val EmptyArray = new GenericArrayData(Array.empty[Any])
+  private val EmptyMap = new ArrayBasedMapData(EmptyArray, EmptyArray)
 
-  /** stringtable: repeated bytes s = 1; index 0 is the empty string. */
-  private def parseStringTable(r: Reader): Array[String] = {
-    val out = ArrayBuffer.empty[String]
+  /** nanodegrees → Decimal(p,7): unscaled = round-half-up(nano / 100),
+    * in pure long arithmetic (no BigDecimal in the per-node path).
+    */
+  private def coord(nano: Long, precision: Int): Decimal = {
+    val unscaled =
+      if (nano >= 0) (nano + 50L) / 100L
+      else -((-nano + 50L) / 100L)
+    Decimal(unscaled, precision, 7)
+  }
+
+  /** stringtable: repeated bytes s = 1; index 0 is the empty string.
+    * Each string is a UTF8String over the block's own bytes, its length
+    * checked against them.
+    */
+  private def stringTable(r: Reader): Array[UTF8String] = {
+    val out = ArrayBuffer.empty[UTF8String]
     while (r.hasMore) {
       val tag = r.readTag()
-      if ((tag >> 3) == 1) out += r.readString() else r.skip(tag & 7)
+      if ((tag >> 3) == 1) {
+        val s = r.readSlice()
+        if (s.end < s.pos || s.end > s.buf.length) throw new IndexOutOfBoundsException(
+          s"string of ${s.end - s.pos} bytes at ${s.pos} overruns the ${s.buf.length}-byte block")
+        out += UTF8String.fromBytes(s.buf, s.pos, s.end - s.pos)
+      } else r.skip(tag & 7)
     }
     out.toArray
-  }
-
-  /** Info: version(1), timestamp(2), changeset(3), uid(4), user_sid(5),
-    * visible(6).
-    */
-  private def parseInfo(r: Reader, ctx: BlockCtx): OsmInfo = {
-    var version = -1L
-    var ts: Option[Long] = None
-    var cs: Option[Long] = None
-    var uid: Option[Long] = None
-    var user: Option[String] = None
-    var visible = true
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => version = r.readVarint()
-        case 2 => ts = Some(r.readVarint() * ctx.dateGranularity)
-        case 3 => cs = Some(r.readVarint())
-        case 4 => uid = Some(r.readVarint())
-        case 5 => user = Some(ctx.strings(r.readVarint().toInt))
-        case 6 => visible = r.readVarint() != 0
-        case _ => r.skip(tag & 7)
-      }
-    }
-    OsmInfo(version, ts, cs, uid, user, visible)
-  }
-
-  private def tagsFrom(keys: Array[Long], vals: Array[Long],
-      ctx: BlockCtx): Array[(String, String)] = {
-    val out = new Array[(String, String)](keys.length)
-    var i = 0
-    while (i < keys.length) {
-      out(i) = (ctx.strings(keys(i).toInt), ctx.strings(vals(i).toInt))
-      i += 1
-    }
-    out
-  }
-
-  /** Node: id(1 sint64), keys(2), vals(3), info(4), lat(8 sint64),
-    * lon(9 sint64).
-    */
-  private def parseNode(r: Reader, ctx: BlockCtx): OsmNode = {
-    var id = 0L; var lat = 0L; var lon = 0L
-    var keys = Array.emptyLongArray; var vals = Array.emptyLongArray
-    var info = NoInfo
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => id = Proto.zigzag(r.readVarint())
-        case 2 => keys = r.readPackedVarints()
-        case 3 => vals = r.readPackedVarints()
-        case 4 => info = parseInfo(r.readSlice(), ctx)
-        case 8 => lat = Proto.zigzag(r.readVarint())
-        case 9 => lon = Proto.zigzag(r.readVarint())
-        case _ => r.skip(tag & 7)
-      }
-    }
-    OsmNode(id, tagsFrom(keys, vals, ctx),
-      ctx.latOffset + ctx.granularity * lat,
-      ctx.lonOffset + ctx.granularity * lon, info)
-  }
-
-  /** DenseNodes: id(1 packed delta-sint64), denseinfo(5),
-    * lat(8)/lon(9) packed delta-sint64, keys_vals(10, 0-terminated runs).
-    * DenseInfo: version(1), timestamp(2 delta), changeset(3 delta),
-    * uid(4 delta), user_sid(5 delta), visible(6).
-    */
-  private def parseDense(r: Reader, ctx: BlockCtx): Iterator[OsmNode] = {
-    var ids = Array.emptyLongArray
-    var lats = Array.emptyLongArray
-    var lons = Array.emptyLongArray
-    var keysVals = Array.emptyLongArray
-    var versions = Array.emptyLongArray
-    var timestamps = Array.emptyLongArray
-    var changesets = Array.emptyLongArray
-    var uids = Array.emptyLongArray
-    var userSids = Array.emptyLongArray
-    var visibles = Array.emptyLongArray
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => ids = r.readPackedDeltaZigzag()
-        case 5 =>
-          val di = r.readSlice()
-          while (di.hasMore) {
-            val t2 = di.readTag()
-            (t2 >> 3) match {
-              case 1 => versions = di.readPackedVarints()
-              case 2 => timestamps = di.readPackedDeltaZigzag()
-              case 3 => changesets = di.readPackedDeltaZigzag()
-              case 4 => uids = di.readPackedDeltaZigzag()
-              case 5 => userSids = di.readPackedDeltaZigzag()
-              case 6 => visibles = di.readPackedVarints()
-              case _ => di.skip(t2 & 7)
-            }
-          }
-        case 8 => lats = r.readPackedDeltaZigzag()
-        case 9 => lons = r.readPackedDeltaZigzag()
-        case 10 => keysVals = r.readPackedVarints()
-        case _ => r.skip(tag & 7)
-      }
-    }
-    var kv = 0
-    val hasInfo = versions.nonEmpty
-    val noTags = Array.empty[(String, String)]
-    (0 until ids.length).iterator.map { i =>
-      var tags = noTags
-      if (kv < keysVals.length && keysVals(kv) != 0L) {
-        val buf = ArrayBuffer.empty[(String, String)]
-        while (kv < keysVals.length && keysVals(kv) != 0L) {
-          buf += ((ctx.strings(keysVals(kv).toInt), ctx.strings(keysVals(kv + 1).toInt)))
-          kv += 2
-        }
-        tags = buf.toArray
-      }
-      if (kv < keysVals.length) kv += 1 // consume the 0 separator
-      val info =
-        if (!hasInfo) NoInfo
-        else OsmInfo(
-          versions(i),
-          if (timestamps.nonEmpty) Some(timestamps(i) * ctx.dateGranularity) else None,
-          if (changesets.nonEmpty) Some(changesets(i)) else None,
-          if (uids.nonEmpty) Some(uids(i)) else None,
-          if (userSids.nonEmpty) Some(ctx.strings(userSids(i).toInt)) else None,
-          if (visibles.nonEmpty) visibles(i) != 0 else true)
-      OsmNode(ids(i), tags,
-        ctx.latOffset + ctx.granularity * lats(i),
-        ctx.lonOffset + ctx.granularity * lons(i), info)
-    }
-  }
-
-  /** Way: id(1 int64), keys(2), vals(3), info(4), refs(8 packed
-    * delta-sint64).
-    */
-  private def parseWay(r: Reader, ctx: BlockCtx): OsmWay = {
-    var id = 0L
-    var keys = Array.emptyLongArray; var vals = Array.emptyLongArray
-    var refs = Array.emptyLongArray
-    var info = NoInfo
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => id = r.readVarint()
-        case 2 => keys = r.readPackedVarints()
-        case 3 => vals = r.readPackedVarints()
-        case 4 => info = parseInfo(r.readSlice(), ctx)
-        case 8 => refs = r.readPackedDeltaZigzag()
-        case _ => r.skip(tag & 7)
-      }
-    }
-    OsmWay(id, tagsFrom(keys, vals, ctx), refs, info)
-  }
-
-  /** Relation: id(1 int64), keys(2), vals(3), info(4), roles_sid(8),
-    * memids(9 packed delta-sint64), types(10 packed enum).
-    */
-  private def parseRelation(r: Reader, ctx: BlockCtx): OsmRelation = {
-    var id = 0L
-    var keys = Array.emptyLongArray; var vals = Array.emptyLongArray
-    var roleSids = Array.emptyLongArray
-    var memids = Array.emptyLongArray
-    var types = Array.emptyLongArray
-    var info = NoInfo
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => id = r.readVarint()
-        case 2 => keys = r.readPackedVarints()
-        case 3 => vals = r.readPackedVarints()
-        case 4 => info = parseInfo(r.readSlice(), ctx)
-        case 8 => roleSids = r.readPackedVarints()
-        case 9 => memids = r.readPackedDeltaZigzag()
-        case 10 => types = r.readPackedVarints()
-        case _ => r.skip(tag & 7)
-      }
-    }
-    OsmRelation(id, tagsFrom(keys, vals, ctx), types.map(_.toInt),
-      memids, roleSids.map(s => ctx.strings(s.toInt)), info)
   }
 
   /** PrimitiveBlock: stringtable(1), primitivegroup(2), granularity(17),
     * date_granularity(18), lat_offset(19), lon_offset(20).
     * PrimitiveGroup: nodes(1), dense(2), ways(3), relations(4).
+    *
+    * The block's entities in file order as rows of `required`'s planet
+    * columns. Every entity is written into one reused row, which the
+    * iterator returns each time: a caller that keeps a row copies it.
+    * Pruned columns are never written. `pred`'s kind flags skip the
+    * excluded kinds' group messages unparsed (a type-filtered scan skips
+    * the dense-node bulk of a planet file), and its box drops a node on
+    * its raw nanodegrees before its tags are written. Every string index
+    * is checked, whether or not its column is written.
     */
-  def decodePrimitiveBlock(blockBytes: Array[Byte]): Iterator[OsmEntity] =
-    decodePrimitiveBlock(blockBytes, keepNodes = true, keepWays = true,
-      keepRelations = true)
+  def decodePrimitiveBlock(blockBytes: Array[Byte], required: StructType = OsmSchemas.Planet,
+      pred: OsmPbfFilters.Compiled = OsmPbfFilters.KeepAll): Iterator[InternalRow] =
+    new BlockRows(blockBytes, required, pred)
 
-  /** Variant with kind skipping: excluded kinds' group messages are
-    * never parsed (a type-filtered scan skips the dense-node bulk of a
-    * planet file entirely).
-    */
-  def decodePrimitiveBlock(blockBytes: Array[Byte], keepNodes: Boolean,
-      keepWays: Boolean, keepRelations: Boolean): Iterator[OsmEntity] = {
-    val r = Proto.reader(blockBytes)
-    var strings = Array.empty[String]
-    var granularity = 100L
-    var dateGranularity = 1000L
-    var latOffset = 0L
-    var lonOffset = 0L
-    val groups = ArrayBuffer.empty[Reader]
-    while (r.hasMore) {
-      val tag = r.readTag()
-      (tag >> 3) match {
-        case 1 => strings = parseStringTable(r.readSlice())
-        case 2 => groups += r.readSlice()
-        case 17 => granularity = r.readVarint()
-        case 18 => dateGranularity = r.readVarint()
-        case 19 => latOffset = r.readVarint()
-        case 20 => lonOffset = r.readVarint()
-        case _ => r.skip(tag & 7)
-      }
-    }
-    val ctx = new BlockCtx(strings, granularity, latOffset, lonOffset, dateGranularity)
-    groups.iterator.flatMap { g =>
-      val out = ArrayBuffer.empty[Iterator[OsmEntity]]
-      while (g.hasMore) {
-        val tag = g.readTag()
+  private final class BlockRows(blockBytes: Array[Byte], required: StructType,
+      pred: OsmPbfFilters.Compiled) extends Iterator[InternalRow] {
+    private var strings = Array.empty[UTF8String]
+    private var granularity = 100L
+    private var dateGranularity = 1000L
+    private var latOffset = 0L
+    private var lonOffset = 0L
+    private val groups = ArrayBuffer.empty[Reader]
+    locally {
+      val r = Proto.reader(blockBytes)
+      while (r.hasMore) {
+        val tag = r.readTag()
         (tag >> 3) match {
-          case 1 if keepNodes => out += Iterator.single(parseNode(g.readSlice(), ctx))
-          case 2 if keepNodes => out += parseDense(g.readSlice(), ctx)
-          case 3 if keepWays => out += Iterator.single(parseWay(g.readSlice(), ctx))
-          case 4 if keepRelations => out += Iterator.single(parseRelation(g.readSlice(), ctx))
-          case _ => g.skip(tag & 7)
+          case 1 => strings = stringTable(r.readSlice())
+          case 2 => groups += r.readSlice()
+          case 17 => granularity = r.readVarint()
+          case 18 => dateGranularity = r.readVarint()
+          case 19 => latOffset = r.readVarint()
+          case 20 => lonOffset = r.readVarint()
+          case _ => r.skip(tag & 7)
         }
       }
-      out.iterator.flatten
+    }
+
+    private val row = new SpecificInternalRow(required.fields.map(_.dataType).toSeq)
+    private def ordinal(name: String): Int = required.fieldNames.indexOf(name)
+    private val (idOrd, typeOrd, tagsOrd) = (ordinal("id"), ordinal("type"), ordinal("tags"))
+    private val (latOrd, lonOrd) = (ordinal("lat"), ordinal("lon"))
+    private val (ndsOrd, membersOrd) = (ordinal("nds"), ordinal("members"))
+    private val (changesetOrd, timestampOrd, uidOrd) =
+      (ordinal("changeset"), ordinal("timestamp"), ordinal("uid"))
+    private val (userOrd, versionOrd, visibleOrd) =
+      (ordinal("user"), ordinal("version"), ordinal("visible"))
+
+    private def set(ord: Int, v: Any): Unit = if (ord >= 0) row.update(ord, v)
+    private def setLong(ord: Int, v: Long): Unit = if (ord >= 0) row.setLong(ord, v)
+    private def setBoolean(ord: Int, v: Boolean): Unit = if (ord >= 0) row.setBoolean(ord, v)
+    private def str(sid: Long): UTF8String = strings(sid.toInt)
+
+    /** `a(i) * scale` into column `ord`, NULL when the block carries no `a`. */
+    private def setOptLong(ord: Int, a: Array[Long], i: Int, scale: Long): Unit =
+      if (a.isEmpty) set(ord, null) else setLong(ord, a(i) * scale)
+
+    /** id and type; a way or relation also gets its NULL coordinates. */
+    private def writeHead(id: Long, typ: UTF8String): Unit = {
+      setLong(idOrd, id)
+      set(typeOrd, typ)
+      if (typ != TypeNode) {
+        set(latOrd, null)
+        set(lonOrd, null)
+      }
+    }
+
+    /** Info: version(1), timestamp(2), changeset(3), uid(4), user_sid(5),
+      * visible(6). `r` null writes the defaults of an entity without one:
+      * version -1, NULL timestamp, changeset, uid and user, visible.
+      */
+    private def writeInfo(r: Reader): Unit = {
+      setLong(versionOrd, -1L)
+      set(timestampOrd, null)
+      set(changesetOrd, null)
+      set(uidOrd, null)
+      set(userOrd, null)
+      setBoolean(visibleOrd, true)
+      if (r != null) while (r.hasMore) {
+        val tag = r.readTag()
+        (tag >> 3) match {
+          case 1 => setLong(versionOrd, r.readVarint())
+          case 2 => setLong(timestampOrd, r.readVarint() * dateGranularity * 1000L)
+          case 3 => setLong(changesetOrd, r.readVarint())
+          case 4 => setLong(uidOrd, r.readVarint())
+          case 5 => set(userOrd, str(r.readVarint()))
+          case 6 => setBoolean(visibleOrd, r.readVarint() != 0)
+          case _ => r.skip(tag & 7)
+        }
+      }
+    }
+
+    /** The `n` tags str(ks(k + step·j)) -> str(vs(v + step·j)), into the
+      * tags column when `write`.
+      */
+    private def writeTags(ks: Array[Long], k: Int, vs: Array[Long], v: Int, step: Int, n: Int,
+        write: Boolean): Unit = {
+      val w = write && tagsOrd >= 0
+      val keys = if (w && n > 0) new Array[Any](n) else null
+      val vals = if (w && n > 0) new Array[Any](n) else null
+      var j = 0
+      while (j < n) {
+        val key = str(ks(k + step * j))
+        val value = str(vs(v + step * j))
+        if (keys != null) { keys(j) = key; vals(j) = value }
+        j += 1
+      }
+      if (w) row.update(tagsOrd,
+        if (n == 0) EmptyMap
+        else new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(vals)))
+    }
+
+    /** The columns of a node at these nanodegrees but its tags and Info;
+      * false, writing nothing, when `pred` drops it.
+      */
+    private def writeNode(id: Long, latNano: Long, lonNano: Long): Boolean = {
+      val kept = pred.keepNode(latNano, lonNano)
+      if (kept) {
+        writeHead(id, TypeNode)
+        if (latOrd >= 0) row.update(latOrd, coord(latNano, 9))
+        if (lonOrd >= 0) row.update(lonOrd, coord(lonNano, 10))
+        set(ndsOrd, EmptyArray)
+        set(membersOrd, EmptyArray)
+      }
+      kept
+    }
+
+    /** Node: id(1 sint64), keys(2), vals(3), info(4), lat(8 sint64),
+      * lon(9 sint64). Whether `pred` keeps it.
+      */
+    private def node(r: Reader): Boolean = {
+      var id, lat, lon = 0L
+      var keys, vals = Array.emptyLongArray
+      writeInfo(null)
+      while (r.hasMore) {
+        val tag = r.readTag()
+        (tag >> 3) match {
+          case 1 => id = Proto.zigzag(r.readVarint())
+          case 2 => keys = r.readPackedVarints()
+          case 3 => vals = r.readPackedVarints()
+          case 4 => writeInfo(r.readSlice())
+          case 8 => lat = Proto.zigzag(r.readVarint())
+          case 9 => lon = Proto.zigzag(r.readVarint())
+          case _ => r.skip(tag & 7)
+        }
+      }
+      val kept = writeNode(id, latOffset + granularity * lat, lonOffset + granularity * lon)
+      writeTags(keys, 0, vals, 0, 1, keys.length, kept)
+      kept
+    }
+
+    /** DenseNodes: id(1 packed delta-sint64), denseinfo(5),
+      * lat(8)/lon(9) packed delta-sint64, keys_vals(10, 0-terminated runs).
+      * DenseInfo: version(1), timestamp(2 delta), changeset(3 delta),
+      * uid(4 delta), user_sid(5 delta), visible(6).
+      */
+    private final class Dense(r: Reader) {
+      private var ids, lats, lons, keysVals = Array.emptyLongArray
+      private var versions, timestamps, changesets, uids, userSids, visibles =
+        Array.emptyLongArray
+      while (r.hasMore) {
+        val tag = r.readTag()
+        (tag >> 3) match {
+          case 1 => ids = r.readPackedDeltaZigzag()
+          case 5 =>
+            val di = r.readSlice()
+            while (di.hasMore) {
+              val t2 = di.readTag()
+              (t2 >> 3) match {
+                case 1 => versions = di.readPackedVarints()
+                case 2 => timestamps = di.readPackedDeltaZigzag()
+                case 3 => changesets = di.readPackedDeltaZigzag()
+                case 4 => uids = di.readPackedDeltaZigzag()
+                case 5 => userSids = di.readPackedDeltaZigzag()
+                case 6 => visibles = di.readPackedVarints()
+                case _ => di.skip(t2 & 7)
+              }
+            }
+          case 8 => lats = r.readPackedDeltaZigzag()
+          case 9 => lons = r.readPackedDeltaZigzag()
+          case 10 => keysVals = r.readPackedVarints()
+          case _ => r.skip(tag & 7)
+        }
+      }
+      private var i = 0
+      private var kv = 0
+
+      def hasNext: Boolean = i < ids.length
+
+      /** Decode node `i`; whether `pred` keeps it. */
+      def next(): Boolean = {
+        val kept = writeNode(ids(i),
+          latOffset + granularity * lats(i), lonOffset + granularity * lons(i))
+        val from = kv
+        while (kv < keysVals.length && keysVals(kv) != 0L) kv += 2
+        writeTags(keysVals, from, keysVals, from + 1, 2, (kv - from) / 2, kept)
+        if (kv < keysVals.length) kv += 1 // consume the 0 separator
+        if (versions.isEmpty) writeInfo(null)
+        else {
+          setLong(versionOrd, versions(i))
+          setOptLong(timestampOrd, timestamps, i, dateGranularity * 1000L)
+          setOptLong(changesetOrd, changesets, i, 1L)
+          setOptLong(uidOrd, uids, i, 1L)
+          set(userOrd, if (userSids.isEmpty) null else str(userSids(i)))
+          setBoolean(visibleOrd, visibles.isEmpty || visibles(i) != 0)
+        }
+        i += 1
+        kept
+      }
+    }
+
+    /** Way: id(1 int64), keys(2), vals(3), info(4), refs(8 packed
+      * delta-sint64).
+      */
+    private def way(r: Reader): Unit = {
+      var id = 0L
+      var keys, vals, refs = Array.emptyLongArray
+      writeInfo(null)
+      while (r.hasMore) {
+        val tag = r.readTag()
+        (tag >> 3) match {
+          case 1 => id = r.readVarint()
+          case 2 => keys = r.readPackedVarints()
+          case 3 => vals = r.readPackedVarints()
+          case 4 => writeInfo(r.readSlice())
+          case 8 => refs = r.readPackedDeltaZigzag()
+          case _ => r.skip(tag & 7)
+        }
+      }
+      writeHead(id, TypeWay)
+      writeTags(keys, 0, vals, 0, 1, keys.length, write = true)
+      if (ndsOrd >= 0) row.update(ndsOrd,
+        new GenericArrayData(refs.map(ref => new GenericInternalRow(Array[Any](ref)): Any)))
+      set(membersOrd, EmptyArray)
+    }
+
+    /** Relation: id(1 int64), keys(2), vals(3), info(4), roles_sid(8),
+      * memids(9 packed delta-sint64), types(10 packed enum).
+      */
+    private def relation(r: Reader): Unit = {
+      var id = 0L
+      var keys, vals, roleSids, memids, types = Array.emptyLongArray
+      writeInfo(null)
+      while (r.hasMore) {
+        val tag = r.readTag()
+        (tag >> 3) match {
+          case 1 => id = r.readVarint()
+          case 2 => keys = r.readPackedVarints()
+          case 3 => vals = r.readPackedVarints()
+          case 4 => writeInfo(r.readSlice())
+          case 8 => roleSids = r.readPackedVarints()
+          case 9 => memids = r.readPackedDeltaZigzag()
+          case 10 => types = r.readPackedVarints()
+          case _ => r.skip(tag & 7)
+        }
+      }
+      writeHead(id, TypeRelation)
+      writeTags(keys, 0, vals, 0, 1, keys.length, write = true)
+      set(ndsOrd, EmptyArray)
+      roleSids.foreach(str(_))
+      if (membersOrd >= 0) row.update(membersOrd, new GenericArrayData(Array.tabulate[Any](
+        memids.length) { j =>
+        val t = types(j).toInt
+        if (t < 0 || t > 2) throw new IllegalArgumentException(
+          s"unsupported relation member type: $t (relation $id)")
+        new GenericInternalRow(Array[Any](MemberTypes(t), memids(j), str(roleSids(j))))
+      }))
+    }
+
+    private var groupIndex = 0
+    private var group: Reader = null
+    private var dense: Dense = null
+    private var ready = false
+
+    /** Decode the next dense node or group message in file order, or move
+      * to the next group; false at the end of the block.
+      */
+    private def step(): Boolean = {
+      if (dense != null && dense.hasNext) ready = dense.next()
+      else if (group != null && group.hasMore) {
+        val tag = group.readTag()
+        (tag >> 3) match {
+          case 1 if pred.keepNodes => ready = node(group.readSlice())
+          case 2 if pred.keepNodes => dense = new Dense(group.readSlice())
+          case 3 if pred.keepWays => way(group.readSlice()); ready = true
+          case 4 if pred.keepRelations => relation(group.readSlice()); ready = true
+          case _ => group.skip(tag & 7)
+        }
+      } else if (groupIndex < groups.length) {
+        group = groups(groupIndex)
+        groupIndex += 1
+      } else return false
+      true
+    }
+
+    override def hasNext: Boolean = {
+      while (!ready && step()) {}
+      ready
+    }
+
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("end of the primitive block")
+      ready = false
+      row
     }
   }
 }

@@ -72,20 +72,27 @@ object Proto {
       case other => throw new IllegalArgumentException(s"unsupported wire type $other")
     }
 
+    /** The varints are counted before their array is allocated: one per
+      * byte with the high bit clear, plus one for a last varint that runs
+      * past the slice's end, which is read as the loop to the end reads it.
+      */
     def readPackedVarints(): Array[Long] = {
       val s = readSlice()
-      val out = new scala.collection.mutable.ArrayBuilder.ofLong
-      out.sizeHint(64)
-      while (s.hasMore) out += s.readVarint()
-      out.result()
+      var n = 0
+      var i = s.pos
+      while (i < s.end) { if (buf(i) >= 0) n += 1; i += 1 }
+      if (s.end > s.pos && buf(s.end - 1) < 0) n += 1
+      val out = new Array[Long](n)
+      i = 0
+      while (i < n) { out(i) = s.readVarint(); i += 1 }
+      out
     }
 
     def readPackedZigzag(): Array[Long] = {
-      val s = readSlice()
-      val out = new scala.collection.mutable.ArrayBuilder.ofLong
-      out.sizeHint(64)
-      while (s.hasMore) out += zigzag(s.readVarint())
-      out.result()
+      val a = readPackedVarints()
+      var i = 0
+      while (i < a.length) { a(i) = zigzag(a(i)); i += 1 }
+      a
     }
 
     /** packed zigzag with running-delta decoding (DenseNodes / refs). */

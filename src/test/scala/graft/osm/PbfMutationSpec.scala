@@ -115,10 +115,12 @@ class PbfMutationSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   /** Fuzz `inputs` mutations of `base`; the counts of exact and of
-    * failed reads. Each read may allocate at most 64 MiB more than the
-    * one-partition read of `base` itself.
+    * failed reads, and the bytes per entity that the one-partition read
+    * of `base` itself allocated. Each read may allocate at most 64 MiB
+    * more than that read.
     */
-  private def fuzz(name: String, base: Array[Byte], inputs: Int, seed: Long): (Int, Int) = {
+  private def fuzz(name: String, base: Array[Byte], inputs: Int,
+      seed: Long): (Int, Int, Long) = {
     val rnd = new scala.util.Random(seed)
     val fuzzDir = Files.createTempDirectory("pbffuzz-" + name)
     val in = new DataInputStream(new ByteArrayInputStream(base))
@@ -126,7 +128,7 @@ class PbfMutationSpec extends AnyFunSuite with Matchers with SparkSpec {
     val intact = Files.write(fuzzDir.resolve(s"$name.osm.pbf"), base).toString
     wholeRead(intact, base.length) // compiles the digest's projection off the clock
     val (intactRows, intactAllocated) = onThread(wholeRead(intact, base.length))
-    intactRows.map(_._1) should be(Symbol("right"))
+    val entities = intactRows.fold(e => throw e, _._1)
     val budget = intactAllocated + (64L << 20)
     var exact, failed = 0
     for (i <- 0 until inputs) {
@@ -151,18 +153,24 @@ class PbfMutationSpec extends AnyFunSuite with Matchers with SparkSpec {
         allocated should be < budget
       }
     }
-    (exact, failed)
+    (exact, failed, intactAllocated / entities)
   }
 
   test("mutated golden sample reads exactly or fails naming file and offset") {
-    val (exact, failed) = fuzz("golden", golden, inputs = 150, seed = 31)
+    val (exact, failed, _) = fuzz("golden", golden, inputs = 150, seed = 31)
     exact should be > 0
     failed should be > 100
   }
 
+  /** Bytes the intact one-partition `SplitPbf` read may allocate per
+    * entity, digest projection included (measured: about 590).
+    */
+  private val MaxBytesPerEntity = 720L
+
   test("mutated split file reads exactly or fails naming file and offset") {
-    val (exact, failed) = fuzz("split", split, inputs = 30, seed = 37)
+    val (_, failed, bytesPerEntity) = fuzz("split", split, inputs = 30, seed = 37)
     failed should be > 20
+    bytesPerEntity should be <= MaxBytesPerEntity
   }
 
   /** The one-partition reads whose outcomes are pinned: the full schema,

@@ -378,13 +378,15 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
   /** `f` fails with an IllegalArgumentException naming `path` and
     * `offset`, allocating no more than a few MiB on the way.
     */
-  private def failsNaming(clue: String, path: String, offset: Long)(f: => Any): Unit =
+  private def failsNaming(clue: String, path: String, offset: Long)(
+      f: => Any): IllegalArgumentException =
     withClue(s"$clue: ") {
       var ex: IllegalArgumentException = null
       val allocated = allocatedBy { ex = intercept[IllegalArgumentException](f) }
       ex.getMessage should include(path)
       ex.getMessage should include(s"byte offset $offset")
       allocated should be < (4L << 20)
+      ex
     }
 
   private def scan(path: String, options: (String, String)*) = {
@@ -445,6 +447,29 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
     }
   }
 
+  /** The sample with `blob` framed after it as one more OSMData blob,
+    * read one partition per blob: the partitions before it drain, and
+    * its own fails naming the file and its offset.
+    */
+  private def appendedBlobFails(name: String, blob: Array[Byte]): IllegalArgumentException = {
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(sampleBytes)
+    val offset = out.size()
+    val header = new PbfTestData.W().str(1, "OSMData").vint(3, blob.length).toArray
+    out.write(ByteBuffer.allocate(4).putInt(header.length).array)
+    out.write(header)
+    out.write(blob)
+    val f = Files.createTempDirectory("pbfblock").resolve("bad.osm.pbf")
+    Files.write(f, out.toByteArray)
+    val batch = scan(f.toString, "maxPartitionBytes" -> "1")
+    val factory = batch.createReaderFactory()
+    val parts = batch.planInputPartitions()
+    parts.init.foreach(p => drain(factory.createReader(p)))
+    failsNaming(name, f.toString, offset) {
+      drain(factory.createReader(parts.last))
+    }
+  }
+
   test("a corrupt OSMData block fails naming file and blob offset") {
     val block = PbfTestData.primitiveBlock()
     def raw(data: Array[Byte]) = new PbfTestData.W().bytes(1, data).toArray
@@ -468,24 +493,22 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
           new PbfTestData.W().vint(2, block.length).bytes(3, zlib).toArray,
         // zlib_data declaring 256 MiB inside a 10-byte Blob
         "Blob field overrunning the blob" ->
-          (new PbfTestData.W().tag(3, 2).varint(256L << 20).toArray ++ new Array[Byte](4)))) {
-      val out = new java.io.ByteArrayOutputStream()
-      out.write(sampleBytes)
-      val offset = out.size()
-      val header = new PbfTestData.W().str(1, "OSMData").vint(3, blob.length).toArray
-      out.write(ByteBuffer.allocate(4).putInt(header.length).array)
-      out.write(header)
-      out.write(blob)
-      val f = Files.createTempDirectory("pbfblock").resolve("bad.osm.pbf")
-      Files.write(f, out.toByteArray)
-      val batch = scan(f.toString, "maxPartitionBytes" -> "1")
-      val factory = batch.createReaderFactory()
-      val parts = batch.planInputPartitions()
-      parts.init.foreach(p => drain(factory.createReader(p)))
-      failsNaming(name, f.toString, offset) {
-        drain(factory.createReader(parts.last))
-      }
-    }
+          (new PbfTestData.W().tag(3, 2).varint(256L << 20).toArray ++ new Array[Byte](4))))
+      appendedBlobFails(name, blob)
+  }
+
+  test("a relation member type outside node/way/relation fails naming file and blob offset") {
+    val block = new PbfTestData.W()
+      .msg(1) { st => st.str(1, ""); st.str(1, "outer") }
+      .msg(2)(_.msg(4) { rel =>
+        rel.vint(1, 30L)
+        rel.packed(8, Seq(1L))
+        rel.packedDeltaZig(9, Seq(10L))
+        rel.packed(10, Seq(3L))
+      })
+      .toArray
+    val ex = appendedBlobFails("member type 3", new PbfTestData.W().bytes(1, block).toArray)
+    ex.getMessage should include("unsupported relation member type: 3 (relation 30)")
   }
 
   private lazy val splitPbf = SplitPbf.write(Files.createTempDirectory("pbfsplit"))

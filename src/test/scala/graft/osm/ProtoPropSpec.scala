@@ -65,15 +65,24 @@ class ProtoPropSpec extends AnyFunSuite with Matchers {
 
   test("entity invariants on the golden fixture block") {
     import graft.osm.pbf.PbfDecode
-    val entities = PbfDecode.decodePrimitiveBlock(PbfTestData.primitiveBlock()).toSeq
-    entities.length shouldBe 6
+    val schema = OsmSchemas.Planet
+    val rows = PbfDecode.decodePrimitiveBlock(PbfTestData.primitiveBlock()).map(_.copy()).toSeq
+    rows.length shouldBe 6
+    def col(name: String) = schema.fieldIndex(name)
     // union-encoding invariants (SURVEY §1.1)
-    entities.foreach {
-      case n: PbfDecode.OsmNode => n.latNano should (be >= -90000000000L and be <= 90000000000L)
-      case w: PbfDecode.OsmWay => w.refs should not be empty
-      case r: PbfDecode.OsmRelation =>
-        r.memberTypes.length shouldBe r.memberRefs.length
-        r.memberTypes.length shouldBe r.memberRoles.length
+    rows.foreach { r =>
+      r.getUTF8String(col("type")).toString match {
+        case "node" =>
+          val lat = r.getDecimal(col("lat"), 9, 7).toJavaBigDecimal.movePointRight(9).longValueExact
+          lat should (be >= -90000000000L and be <= 90000000000L)
+        case "way" => r.getArray(col("nds")).numElements() should be > 0
+        case "relation" =>
+          val members = r.getArray(col("members"))
+          (0 until members.numElements()).foreach { i =>
+            val m = members.getStruct(i, 3)
+            (0 until 3).foreach(f => m.isNullAt(f) shouldBe false)
+          }
+      }
     }
   }
 }
