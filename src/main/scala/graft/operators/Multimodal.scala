@@ -368,9 +368,12 @@ object Multimodal {
     val h = beU32(c, 8)
     val ch = c(12) & 0xff
     val cs = c(13) & 0xff
+    // each op byte yields at most 62 pixels (QOI_OP_RUN): a size the
+    // bytes between header and end marker cannot fill ends before the
+    // allocation
     if (w < 1 || w > MaxDim || h < 1 || h > MaxDim ||
         (ch != 3 && ch != 4) || cs > 1 ||
-        w * h * ch > Int.MaxValue / 2) return None
+        w * h * ch > Int.MaxValue / 2 || w * h > 62L * (c.length - 22)) return None
     val n = (w * h).toInt
     val out = new Array[Byte](n * ch)
     val index = new Array[Int](64) // packed 0xRRGGBBAA; zero-filled per spec
@@ -625,6 +628,8 @@ object Multimodal {
           maxv < 1 || maxv > 255 || // one byte per sample in this slice
           w * h * channels > Int.MaxValue / 2) return None
       val n = (w * h * channels).toInt
+      // every sample takes at least one of the bytes left, in either form
+      if (n > c.length - pos) return None
       val out = new Array[Byte](n)
       if (ascii) {
         var i = 0
@@ -2207,9 +2212,10 @@ object Multimodal {
     *    (audio-only tkhds legitimately carry 0×0).
     *
     * The walk is strict: a box overrunning its scope, a trailing
-    * partial header, an unknown version, or a zero timescale is
-    * malformed → None (caller falls to the stub — never throws on
-    * arbitrary payloads). Fragmented-MP4 movies whose duration lives
+    * partial header, an empty `mvhd`, an unknown version, or a zero
+    * timescale is malformed → None (caller falls to the stub — never
+    * throws on arbitrary payloads); an empty or short `tkhd` gives its
+    * track no dims. Fragmented-MP4 movies whose duration lives
     * in `mvex`/`mehd` parse with duration 0 (the mvhd value) — the
     * honest header-only answer.
     */
@@ -2254,7 +2260,7 @@ object Multimodal {
       kids <- walk(mb, me)
       (_, hb, he) <- kids.find(_._1 == "mvhd")
       traks = kids.filter(_._1 == "trak")
-      if traks.nonEmpty
+      if traks.nonEmpty && he > hb
       ver = c(hb.toInt) & 0xff
       tsDur <-
         if (ver == 0 && he - hb >= 20)
@@ -2266,7 +2272,8 @@ object Multimodal {
       if ts >= 1 && ts <= Int.MaxValue && dur >= 0
     } yield {
       val dims = traks.iterator.flatMap { case (_, tb, te) =>
-        walk(tb, te).iterator.flatMap(_.find(_._1 == "tkhd")).flatMap {
+        walk(tb, te).iterator.flatMap(_.find(_._1 == "tkhd"))
+          .filter { case (_, kb, ke) => ke > kb }.flatMap {
           case (_, kb, ke) =>
             val tv = c(kb.toInt) & 0xff
             val layout =

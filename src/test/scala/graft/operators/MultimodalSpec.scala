@@ -772,6 +772,20 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     Multimodal.parseMp4Header(Array.emptyByteArray) shouldBe None
   }
 
+
+  test("parseMp4Header reads no byte past an empty trailing mvhd or tkhd") {
+    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ beBytes(0, 4))
+    // ftyp, then a moov holding an empty trak and, last, an empty mvhd
+    val emptyMvhd = ftyp ++ box("moov",
+      box("trak", Array.emptyByteArray) ++ box("mvhd", Array.emptyByteArray))
+    emptyMvhd.length shouldBe 40
+    Multimodal.parseMp4Header(emptyMvhd) shouldBe None
+    // an empty tkhd, last in the file, gives its track no dims
+    val emptyTkhd = ftyp ++ box("moov", box("mvhd", mvhdBytes(0, 600, 1200)) ++
+      box("trak", box("tkhd", Array.emptyByteArray)))
+    Multimodal.parseMp4Header(emptyTkhd) shouldBe
+      Some(Multimodal.Mp4Meta("isom", 600, 1200L, 1, 0, 0))
+  }
   test("decodeVideo: MP4 parses for real, other payloads carry -1 sentinels") {
     import spark.implicits._
     val rows = Seq(
@@ -1775,6 +1789,31 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkSpec {
     Multimodal.decodeQoiPixels(short) shouldBe None
   }
 
+
+  /** `f`'s result and the bytes the current thread allocated running it. */
+  private def allocating[A](f: => A): (A, Long) = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val t = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(t)
+    val r = f
+    (r, mx.getThreadAllocatedBytes(t) - before)
+  }
+
+  test("QOI and binary PGM headers declaring more pixels than their bytes hold allocate nothing") {
+    // 26 bytes: a 16384x8192 RGBA header, four 62-pixel runs, the end marker
+    val qoi = "qoif".getBytes("US-ASCII") ++ Array[Byte](0, 0, 0x40, 0, 0, 0, 0x20, 0, 4, 0) ++
+      Array.fill(4)((0xc0 | 61).toByte) ++ Array[Byte](0, 0, 0, 0, 0, 0, 0, 1)
+    qoi.length shouldBe 26
+    val pgm = "P5 16384 16384 255\n".getBytes("US-ASCII") ++ new Array[Byte](64)
+    pgm.length shouldBe 83
+    for ((name, bytes) <- Seq("qoi" -> qoi, "pgm" -> pgm)) withClue(s"$name: ") {
+      Multimodal.decodeRasterPixels(bytes) // loads the classes off the clock
+      val (img, allocated) = allocating(Multimodal.decodeRasterPixels(bytes))
+      img shouldBe None
+      allocated should be < (1L << 20)
+    }
+  }
   test("m27: all eight EXIF orientations pin hand-computed goldens on " +
       "a 2x3 image, and the group laws hold") {
     // 2 wide x 3 tall, gray: pixels row-major 0..5
