@@ -94,7 +94,7 @@ object Bench {
       .mkString("{", ",", "}")
     val failedNames = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"failed_queries":$failedNames,"queries":$qs,"medians":$meds,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"failed_queries":$failedNames,"queries":$qs,"medians":$meds,"sf":"$sfDir","cpus":$cpus}"""
     // The driver captures only a bounded stdout TAIL (BENCH_r12
     // "parsed": null once the 285-query map outgrew it). The full
     // per-query line therefore goes ONLY to the archive file; stdout's
@@ -128,6 +128,6 @@ object Bench {
     // prefixing it or appending a [success] trailer after it)
     spark.stop()
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"n":${results.size},"per_query":$perQuery,"sf":"$sfDir","full":"$outPath"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":${failed.size},"n":${results.size},"per_query":$perQuery,"sf":"$sfDir","cpus":$cpus,"full":"$outPath"}""")
   }
 }
