@@ -16,6 +16,9 @@ import graft.osm.pbf.Proto.Reader
 
 /** OSM PBF decoding: fileformat (BlobHeader/Blob) + osmformat
   * (PrimitiveBlock with string table, dense nodes, ways, relations).
+  * A PrimitiveBlock decodes straight into rows of the planet schema,
+  * one row reused for every entity of the block; there is no
+  * intermediate entity model.
   *
   * Field numbers and semantics follow the public spec
   * (wiki.openstreetmap.org/wiki/PBF_Format). The reference reaches the
