@@ -38,8 +38,17 @@ object Proto {
     /** returns (fieldNumber << 3 | wireType) */
     def readTag(): Int = readVarint().toInt
 
-    def readSlice(): Reader = {
+    /** A length prefix. A negative one is refused: it would move the
+      * cursor back, and a loop could then re-read the same bytes forever.
+      */
+    private def readLength(): Int = {
       val n = readVarint().toInt
+      if (n < 0) throw new IndexOutOfBoundsException(s"negative field length $n")
+      n
+    }
+
+    def readSlice(): Reader = {
+      val n = readLength()
       val r = new Reader(buf, pos, pos + n)
       pos += n
       r
@@ -67,7 +76,7 @@ object Proto {
     def skip(wireType: Int): Unit = wireType match {
       case WireVarint => readVarint()
       case WireFixed64 => pos += 8
-      case WireLen => val n = readVarint().toInt; pos += n
+      case WireLen => val n = readLength(); pos += n
       case WireFixed32 => pos += 4
       case other => throw new IllegalArgumentException(s"unsupported wire type $other")
     }

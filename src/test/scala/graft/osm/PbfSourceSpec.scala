@@ -485,10 +485,17 @@ class PbfSourceSpec extends AnyFunSuite with Matchers with SparkSpec {
       .msg(1)(_.str(1, ""))
       .msg(2)(_.msg(1) { n => n.sint(1, 6L); n.sint(8, 1000000000L); n.sint(9, 0L) })
       .toArray
+    // an unknown group field whose length varint reads as -6 as an Int:
+    // skipping it would move the cursor back onto its own tag
+    val negativeLength = new PbfTestData.W()
+      .msg(1)(_.str(1, ""))
+      .msg(2)(_.tag(7, 2).varint(0xfffffffaL))
+      .toArray
     for ((name, blob) <- Seq(
         "truncated block" -> raw(block.take(block.length / 2)),
         "string index out of range" -> raw(badIndex),
         "latitude outside decimal(9,7)" -> raw(badLat),
+        "negative field length" -> raw(negativeLength),
         "bit-flipped zlib payload" ->
           new PbfTestData.W().vint(2, block.length).bytes(3, zlib).toArray,
         // zlib_data declaring 256 MiB inside a 10-byte Blob
