@@ -368,9 +368,9 @@ object Multimodal {
     val h = beU32(c, 8)
     val ch = c(12) & 0xff
     val cs = c(13) & 0xff
-    // each op byte yields at most 62 pixels (QOI_OP_RUN): a size the
-    // bytes between header and end marker cannot fill ends before the
-    // allocation
+    // each op byte yields at most 62 pixels (QOI_OP_RUN): a size that the
+    // op bytes between header and end marker cannot fill returns None
+    // before the output is allocated
     if (w < 1 || w > MaxDim || h < 1 || h > MaxDim ||
         (ch != 3 && ch != 4) || cs > 1 ||
         w * h * ch > Int.MaxValue / 2 || w * h > 62L * (c.length - 22)) return None

@@ -11,9 +11,10 @@ import org.apache.spark.sql.sources._
   *    groups of the excluded kinds (dense-node blocks are the bulk of a
   *    planet file — a ways-only scan never touches them);
   *  - lat/lon range filters drop nodes outside the bbox on their raw
-  *    nanodegrees, before any tag is written, with bounds widened by 100 nanodegrees to cover
-  *    the decimal(·,7) rounding step; non-node rows are dropped too
-  *    (their NULL coordinates can never satisfy a range predicate).
+  *    nanodegrees, before any tag is written, with bounds widened by
+  *    100 nanodegrees to cover the decimal(·,7) rounding step; non-node
+  *    rows are dropped too (their NULL coordinates can never satisfy a
+  *    range predicate).
   */
 object OsmPbfFilters {
 
